@@ -90,3 +90,35 @@ def test_tableau_export(spark, tmp_path):
     csvs = list((tmp_path / "tableau").glob("*.csv"))
     assert len(csvs) == 1
     assert csvs[0].read_bytes().startswith(b"\xef\xbb\xbf")  # utf-8-sig BOM
+
+
+def test_weather_all_null_hourly_column(spark):
+    """An hourly column null in every hour (Open-Meteo reports missing
+    precipitation this way) loads as a null double column."""
+    weather = weather_to_df(
+        spark,
+        {
+            "time": ["2025-12-10 07:00:00", "2025-12-10 08:00:00"],
+            "temperature_2m": [20.5, 21.0],
+            "precipitation": [None, None],
+        },
+    )
+    assert dict(weather.dtypes) == {"record_time": "timestamp", "temperature": "double", "rain": "double"}
+    rows = weather.orderBy("record_time").collect()
+    assert [r["rain"] for r in rows] == [None, None]
+    assert rows[0]["record_time"] == datetime.datetime(2025, 12, 10, 7, 0, 0)
+
+
+def test_weather_mixed_int_and_float_numbers(spark):
+    """JSON numbers mixing ``20`` and ``20.5`` in one hourly column load
+    as doubles."""
+    weather = weather_to_df(
+        spark,
+        {
+            "time": ["2025-12-10 07:00:00", "2025-12-10 08:00:00"],
+            "temperature_2m": [20, 20.5],
+            "precipitation": [0, 1.5],
+        },
+    )
+    rows = weather.orderBy("record_time").collect()
+    assert [(r["temperature"], r["rain"]) for r in rows] == [(20.0, 0.0), (20.5, 1.5)]

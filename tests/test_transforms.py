@@ -132,3 +132,120 @@ def test_stream_reader_tolerates_directory_layout(spark, tmp_path):
     finally:
         q.stop()
     assert got == 500
+
+
+# --------------------------------------------------------------------------
+# local_frame: the one driver-local DataFrame primitive
+# --------------------------------------------------------------------------
+
+
+def test_local_frame_rejects_string_in_int_field(spark):
+    with pytest.raises(TypeError):
+        snapshot_to_df(spark, [dict(FULL_RECORD, Quantity="30")])
+
+
+def test_local_frame_rejects_float_in_int_field(spark):
+    with pytest.raises(TypeError):
+        snapshot_to_df(spark, [dict(FULL_RECORD, Quantity=30.5)])
+
+
+def test_local_frame_rejects_none_in_non_nullable_field(spark):
+    with pytest.raises(ValueError):
+        snapshot_to_df(spark, [FULL_RECORD, dict(FULL_RECORD, sno=None)])
+
+
+def test_local_frame_absent_key_is_null(spark):
+    from youbike_etl_pipeline_spark.schemas import RAW_STATION_SNAPSHOT
+    from youbike_etl_pipeline_spark.sources.readers import read_json_records
+
+    rec = {k: v for k, v in FULL_RECORD.items() if k != "sarea"}
+    row = read_json_records(spark, [rec], RAW_STATION_SNAPSHOT).collect()[0]
+    assert row["sarea"] is None and row["sna"] == FULL_RECORD["sna"]
+
+
+def test_local_frame_accepts_int_in_double_field(spark):
+    row = snapshot_to_df(spark, [dict(FULL_RECORD, latitude=25)]).collect()[0]
+    assert row["latitude"] == 25.0 and isinstance(row["latitude"], float)
+
+
+def test_local_frame_empty_rows_keep_schema(spark):
+    from youbike_etl_pipeline_spark.schemas import RAW_STATION_SNAPSHOT
+    from youbike_etl_pipeline_spark.sources.readers import local_frame
+
+    df = local_frame(spark, [], RAW_STATION_SNAPSHOT)
+    assert df.schema == RAW_STATION_SNAPSHOT
+    assert df.count() == 0
+    assert local_frame(spark, [], "a int, b string").columns == ["a", "b"]
+
+
+def test_local_frame_rejects_row_width_mismatch(spark):
+    from youbike_etl_pipeline_spark.sources.readers import local_frame
+
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, "x"), (2,)], "a int, b string")
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1, "x", 3)], "a int, b string")
+
+
+def test_local_frame_naive_datetime_matches_python_list_path(spark):
+    """Sessions pin UTC: a naive datetime is a UTC wall clock on both the
+    Arrow path and the Python-list path it replaced."""
+    from youbike_etl_pipeline_spark.sources.readers import local_frame
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    rows = [(datetime.datetime(2025, 12, 10, 7, 0, 0, 123456), 1), (None, 2)]
+    ddl = "ts timestamp, n int"
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    epoch = got.select(F.col("ts").cast("double").alias("e")).collect()[0]["e"]
+    assert epoch == datetime.datetime(
+        2025, 12, 10, 7, 0, 0, 123456, tzinfo=datetime.timezone.utc
+    ).timestamp()
+
+
+def test_driver_local_frames_plan_as_local_table_scan(spark):
+    """Snapshot, weather and union-find frames are JVM local relations:
+    their executed plans scan a LocalTableScan, never a PythonRDD."""
+    from pyspark.sql import types as T
+
+    from youbike_etl_pipeline_spark.operators.dedup import _union_find_components
+    from youbike_etl_pipeline_spark.pipelines.youbike import weather_to_df
+
+    frames = [
+        snapshot_to_df(spark, [FULL_RECORD]),
+        weather_to_df(
+            spark,
+            {"time": ["2025-12-10 07:00:00"], "temperature_2m": [20.0], "precipitation": [0.0]},
+        ),
+        _union_find_components([(1, 2), (2, 3), (5, 5)], spark, T.LongType()),
+    ]
+    for df in frames:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every driver-local frame in the package goes through ``local_frame``:
+    ``createDataFrame(`` appears nowhere else under the package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "youbike_etl_pipeline_spark"
+    readers = pkg / "sources" / "readers.py"
+    fn = next(
+        n
+        for n in ast.parse(readers.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if "createDataFrame(" not in line:
+                continue
+            if path == readers and fn.lineno <= lineno <= fn.end_lineno:
+                continue
+            offenders.append(f"{path.relative_to(pkg)}:{lineno}")
+    assert not offenders, offenders

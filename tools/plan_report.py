@@ -47,7 +47,7 @@ def _side_max_rows(node) -> int | None:
     cur = node
     for _ in range(8):
         try:
-            # literal frames (createDataFrame of a fixed list): LocalRelation
+            # literal frames (local_frame of a fixed list): LocalRelation
             # does NOT override logical maxRows, but the physical scan holds
             # its rows — a 3-row fold/ctx-len frame is a static bound
             if cur.nodeName() == "LocalTableScan":
@@ -136,6 +136,12 @@ def main() -> None:
         f"Generated by `tools/plan_report.py` at `{sf_dir}`. Columns: join",
         "strategies in the plan, shuffle count (`Exchange hashpartitioning`),",
         "whether parquet pushdown is active, and red flags.",
+        "",
+        "Driver-local inputs (rows built on the driver: literal lookup tables,",
+        "collected streaming partials, union-find components) go through",
+        "`sources.readers.local_frame` and plan as `LocalTableScan`, a JVM",
+        "local relation with row-count statistics, never as a PythonRDD",
+        "(`Scan ExistingRDD`).",
         "",
         "| query | joins | shuffles | pushdown | flags |",
         "|---|---|---|---|---|",

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import local_frame
+
 
 def segment_init(word_col: str = "w") -> "F.Column":
     """Doubled-separator character segmentation: 'cat' -> '|c||a||t|'.
@@ -145,8 +147,8 @@ def bpe_train_merges(
     finally:
         for c in cached:
             c.unpersist()
-    return spark.createDataFrame(
-        rows, "it int, sym_a string, sym_b string, pair_cnt bigint, vocab_tokens bigint"
+    return local_frame(
+        spark, rows, "it int, sym_a string, sym_b string, pair_cnt bigint, vocab_tokens bigint"
     )
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.readers import local_frame
 from .text import shingle_hashes, tokens, word_shingles_from_tokens
 
 
@@ -1081,7 +1082,7 @@ def _union_find_components(edges: list[tuple], spark, id_type) -> DataFrame:
     schema = T.StructType(
         [T.StructField("node", id_type), T.StructField("component", id_type)]
     )
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, rows, schema)
 
 
 def connected_components(

@@ -32,8 +32,9 @@ from ..functions.scalar import (
 )
 from ..operators.joins import fact_dim_join, hour_bucket_join
 from ..operators.windows import lag_features
-from ..schemas import WEATHER_HOURLY
+from ..schemas import WEATHER_RAW_HOURLY
 from ..sources.http import snapshot_to_df
+from ..sources.readers import local_frame
 from ..sources.writers import append_dedup, upsert_insert_if_absent, write_csv
 
 
@@ -54,16 +55,13 @@ def ingest_snapshot(
     (``etl_job.py:128-132``).
     """
     raw = snapshot_to_df(spark, records)
-    info = (
-        raw.select(
-            F.col("sno").cast("string").alias("station_no"),
-            F.col("sna").alias("name_tw"),
-            F.col("sarea").alias("district"),
-            F.col("latitude").cast("decimal(10,7)").alias("lat"),
-            F.col("longitude").cast("decimal(10,7)").alias("lng"),
-            F.col("Quantity").alias("total_spaces"),
-        )
-        .dropDuplicates(["station_no"])
+    info = raw.select(
+        F.col("sno").cast("string").alias("station_no"),
+        F.col("sna").alias("name_tw"),
+        F.col("sarea").alias("district"),
+        F.col("latitude").cast("decimal(10,7)").alias("lat"),
+        F.col("longitude").cast("decimal(10,7)").alias("lng"),
+        F.col("Quantity").alias("total_spaces"),
     )
     status = raw.select(
         F.col("sno").cast("string").alias("station_no"),
@@ -71,11 +69,7 @@ def ingest_snapshot(
         F.col("available_return_bikes").alias("spaces_available"),
         to_utc_from_tz(F.to_timestamp("srcUpdateTime")).alias("record_time"),
     )
-    new_info = (
-        upsert_insert_if_absent(info, existing_info, "station_no")
-        if existing_info is not None
-        else info
-    )
+    new_info = upsert_insert_if_absent(info, existing_info, "station_no")
     new_status = append_dedup(status, existing_status, ["station_no", "record_time"])
     return new_info, new_status
 
@@ -83,22 +77,23 @@ def ingest_snapshot(
 def weather_to_df(spark: SparkSession, hourly: dict[str, list]) -> DataFrame:
     """Weather ETL (reference ``02_weather_etl``): Open-Meteo-style
     dict-of-lists {time, temperature_2m, precipitation} → typed hourly
-    series with the engine's column names."""
-    rows = [
-        {"record_time": t, "temperature": temp, "rain": rain}
-        for t, temp, rain in zip(
+    series with the engine's column names.
+
+    The payload is read in the declared :data:`WEATHER_RAW_HOURLY` schema,
+    not inferred, so an hourly column that is null in every hour and JSON
+    numbers mixing ``20`` and ``20.5`` both load."""
+    rows = list(
+        zip(
             hourly.get("time", []),
             hourly.get("temperature_2m", []),
             hourly.get("precipitation", []),
         )
-    ]
+    )
     if not rows:
         raise ValueError("empty weather payload")
-    df = spark.createDataFrame(rows)
+    df = local_frame(spark, rows, WEATHER_RAW_HOURLY)
     return df.select(
-        F.to_timestamp("record_time").alias("record_time"),
-        F.col("temperature").cast("double"),
-        F.col("rain").cast("double"),
+        F.to_timestamp("record_time").alias("record_time"), "temperature", "rain"
     )
 
 

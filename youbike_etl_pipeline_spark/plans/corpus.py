@@ -34,7 +34,7 @@ from ..operators import joins as oj
 from ..operators import relational as rel
 from ..operators import skew as osk
 from ..operators import windows as ow
-from ..sources.readers import read_events, read_parquet_table
+from ..sources.readers import local_frame, read_events, read_parquet_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -2472,9 +2472,10 @@ def ml2_regression_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice ~ l_quantity + l_discount + l_returnflag",
         ],
     )
-    return li.sparkSession.createDataFrame(
+    return local_frame(
+        spark,
         [(r["formula"], float(round(r["r2"], 6)), r["n"]) for r in results],
-        schema="formula string, r2 double, n long",
+        "formula string, r2 double, n long",
     )
 
 
@@ -2661,9 +2662,10 @@ def m8_kmeans_hour_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         profile, "user_id", [str(h) for h in range(24)], k=4, seed=42
     )
     sizes = assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-    labels = ev.sparkSession.createDataFrame(
+    labels = local_frame(
+        spark,
         [(s["cluster"], s["peak_hour"], label_cluster_by_peak(s["peak_hour"])) for s in summaries],
-        schema="cluster int, peak_hour int, label string",
+        "cluster int, peak_hour int, label string",
     )
     return sizes.join(labels, "cluster")
 
@@ -2740,8 +2742,8 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = orders.union(rich).distinct().count()
     i = orders.intersect(rich).count()
     x = orders.exceptAll(rich.distinct()).distinct().count()
-    return spark.createDataFrame(
-        [("union", u), ("intersect", i), ("except", x)], "op string, n long"
+    return local_frame(
+        spark, [("union", u), ("intersect", i), ("except", x)], "op string, n long"
     )
 
 
@@ -3341,7 +3343,8 @@ def dq_check_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j8_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("micro", 0.0, 50.0), ("small", 50.0, 150.0), ("mid", 150.0, 300.0), ("large", 300.0, 1000.0)],
         "band string, lo double, hi double",
     )
@@ -3750,9 +3753,7 @@ def st9_streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink: list = []
     neardup_gate_foreach_batch(stream, index, sink, threshold=0.5)
     rows = [r for _, batch_rows in sink for r in batch_rows]
-    out = spark.createDataFrame(
-        rows, schema="doc_id long, lang string, is_dup boolean"
-    )
+    out = local_frame(spark, rows, "doc_id long, lang string, is_dup boolean")
     return out.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_checked"),
         F.sum(F.when(F.col("is_dup"), 1).otherwise(0)).alias("n_dups"),
@@ -4110,7 +4111,7 @@ def j9_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("doc_id") % 7 != 0, F.col("lang")).alias("k"),
     )
     b = docs.groupBy(F.col("lang").alias("k")).agg(F.count(F.lit(1)).alias("n_lang")).unionByName(
-        spark.createDataFrame([(None, -1)], "k string, n_lang long")
+        local_frame(spark, [(None, -1)], "k string, n_lang long")
     )
     joined = a.join(b, a["k"].eqNullSafe(b["k"]), "inner")
     return joined.groupBy(a["k"], "n_lang").agg(F.count(F.lit(1)).alias("n"))
@@ -4712,9 +4713,7 @@ def st6_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink: list = []
     upsert_foreach_batch(stream, existing, ["event_id"], sink)
     rows = [r for _, batch in sink for r in batch]
-    upserted = spark.createDataFrame(
-        rows, schema="event_id long, event_type string, value double"
-    )
+    upserted = local_frame(spark, rows, "event_id long, event_type string, value double")
     return upserted.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         agg.decimal_sum(F.col("value")).alias("total_value"),
@@ -9594,7 +9593,7 @@ def st10_streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink: list = []
     drift_partials_foreach_batch(stream, sink)
     rows = [r for _, batch in sink for r in batch]
-    partials = spark.createDataFrame(rows, schema="d long, cnt long, sxi long")
+    partials = local_frame(spark, rows, "d long, cnt long, sxi long")
     m1 = partials.groupBy("d").agg(
         (
             F.sum("sxi").cast("double") / F.lit(1000000.0) / F.sum("cnt")
@@ -12596,9 +12595,7 @@ def st11_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink: list = []
     hll_partials_foreach_batch(stream, sink)
     rows = [r for _, batch in sink for r in batch]
-    partials = spark.createDataFrame(
-        rows, schema="event_type string, reg long, maxrho int"
-    )
+    partials = local_frame(spark, rows, "event_type string, reg long, maxrho int")
     regs = partials.groupBy("event_type", "reg").agg(
         F.max("maxrho").alias("maxrho")
     )
@@ -12893,7 +12890,7 @@ def g4_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select("s", "t").unionAll(
         pairs.select(F.col("t").alias("s"), F.col("s").alias("t"))
     ).localCheckpoint()
-    frontier = spark.createDataFrame([(0, 0)], "item int, dist int")
+    frontier = local_frame(spark, [(0, 0)], "item int, dist int")
     layers = [frontier]
     for hop in (1, 2, 3):
         frontier = (
@@ -14079,7 +14076,7 @@ def s10_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("relevance", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 CORPUS["s10_mmr_diversified_topk"].oracle = _s10_oracle_sql()
@@ -14689,7 +14686,7 @@ def st12_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink: list = []
     countmin_partials_foreach_batch(stream, sink)
     rows = [r for _, batch in sink for r in batch]
-    partials = spark.createDataFrame(rows, schema="j int, bucket long, cnt long")
+    partials = local_frame(spark, rows, "j int, bucket long, cnt long")
     sketch = partials.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
     ev = _t(spark, sf_dir, "events")
     item = F.try_variant_get(F.try_parse_json("props"), "$.k", "int")
@@ -14947,7 +14944,7 @@ def e8_power_iteration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("energy_share_lb", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def _floor6(x: float) -> float:

@@ -72,6 +72,16 @@ STATION_STATUS = T.StructType(
     ]
 )
 
+#: Raw hourly weather payload, one row per hour of the Open-Meteo-style
+#: dict-of-lists (``time`` string, ``temperature_2m``, ``precipitation``).
+WEATHER_RAW_HOURLY = T.StructType(
+    [
+        T.StructField("record_time", T.StringType(), True),
+        T.StructField("temperature", T.DoubleType(), True),
+        T.StructField("rain", T.DoubleType(), True),
+    ]
+)
+
 #: Hourly weather series (reference ``notebooks/02_weather_etl.ipynb:L199-L206``).
 WEATHER_HOURLY = T.StructType(
     [

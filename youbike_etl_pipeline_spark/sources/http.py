@@ -3,9 +3,11 @@
 Fetching a city-API JSON snapshot is inherently a driver-side action (one
 small payload per 10-minute tick), so the retry loop stays plain Python —
 exactly the reference's shape (3 attempts, linear backoff ``2.0 * attempt``,
-``raise_for_status``; ``etl_job.py:64-80``). The distributed part starts at
-``createDataFrame``: the payload becomes a schema-validated DataFrame that the
-rest of the engine treats like any other source.
+``raise_for_status``; ``etl_job.py:64-80``). The payload then becomes a
+schema-validated DataFrame via :func:`.readers.local_frame`: one Arrow table
+handed to the JVM as a local relation (``LocalTableScan``), so later actions
+on the snapshot run in the JVM without Python workers, and the rest of the
+engine treats it like any other source.
 
 ``requests`` is gated behind an import-try: the engine works without it (tests
 inject payloads directly via :func:`snapshot_to_df`).

@@ -57,18 +57,67 @@ def normalize_event_ts(dtype: T.DataType, col: str = "ts") -> F.Column:
     return F.col(col).cast("timestamp")
 
 
+def local_frame(spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str) -> DataFrame:
+    """Driver-local rows → DataFrame, planned as a JVM ``LocalTableScan``.
+
+    ``rows`` are positional tuples (``Row`` objects qualify) and ``schema``
+    is a ``StructType`` or a DDL string. The rows become one Arrow table in
+    the schema's Arrow types, handed to the JVM as a local relation: actions
+    on the frame never start a Python worker, unlike a Python-list
+    ``createDataFrame``, whose PythonRDD re-pickles the rows through Python
+    workers on every action.
+
+    Type contract (checked on the driver, before any job):
+
+    - ``None`` in a non-nullable top-level field raises ``ValueError``;
+    - a value of the wrong Python type (``"30"`` for an int, ``1`` for a
+      string, a float for an integral field) raises ``TypeError``;
+    - an int is accepted for a floating-point field (JSON numbers);
+    - an integer out of the field's range raises ``ValueError``;
+    - a naive ``datetime`` in a ``TimestampType`` field is a UTC wall clock,
+      the engine's pinned session time zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    try:
+        columns = list(zip(*rows, strict=True)) or [()] * len(schema.fields)
+    except ValueError as exc:
+        raise ValueError(f"rows of unequal length for schema {schema.simpleString()}") from exc
+    if len(columns) != len(schema.fields):
+        raise ValueError(f"rows have {len(columns)} values, schema {schema.simpleString()} has {len(schema.fields)}")
+    arrays = []
+    for values, field, arrow_field in zip(columns, schema.fields, arrow_schema):
+        if pa.types.is_integer(arrow_field.type) and any(isinstance(v, float) for v in values):
+            raise TypeError(f"field {field.name}: {field.dataType.simpleString()} can not accept a float")
+        try:
+            arr = pa.array(values, type=arrow_field.type)
+        except pa.ArrowTypeError as exc:
+            raise TypeError(f"field {field.name}: {exc}") from exc
+        except pa.ArrowInvalid as exc:
+            err = TypeError if str(exc).startswith("Could not convert") else ValueError
+            raise err(f"field {field.name}: {exc}") from exc
+        if not field.nullable and arr.null_count:
+            raise ValueError(f"field {field.name}: this field is not nullable, but got None")
+        arrays.append(arr)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
+
+
 def read_json_records(spark: SparkSession, records: list[dict], schema: T.StructType) -> DataFrame:
     """JSON list-of-dicts → DataFrame with declared schema (S2).
 
     The reference flattens the API payload with ``pd.DataFrame(raw_data)``
-    (``etl_job.py:88``); here the driver-side payload becomes a distributed
-    frame via ``createDataFrame`` with an explicit schema — missing keys
+    (``etl_job.py:88``); here the driver-side payload becomes a local
+    relation via :func:`local_frame` with an explicit schema — missing keys
     surface as nulls and are caught by the required-column validator.
     """
     if not records:
         raise ValueError("empty extract: no records returned from source")
-    rows = [{f.name: rec.get(f.name) for f in schema.fields} for rec in records]
-    return spark.createDataFrame(rows, schema=schema)
+    names = schema.names
+    return local_frame(spark, [tuple(rec.get(n) for n in names) for rec in records], schema)
 
 
 #: Encoding/separator candidates the reference cycles through

@@ -169,25 +169,30 @@ def append_dedup(new_rows: DataFrame, existing: DataFrame | None, keys: list[str
     (``sql/init_schema.sql:17``; ``etl_job.py:128-132``): dedup within the
     batch, then anti-join against already-loaded keys. Re-running the same
     batch is a no-op — same idempotence without a transactional store.
+    The loaded side is not deduplicated: duplicate keys there cannot change
+    an anti-join, and a dedup would aggregate the whole growing table on
+    every load.
     """
     batch = new_rows.dropDuplicates(keys)
     if existing is None:
         return batch
-    existing_keys = existing.select(*keys).dropDuplicates(keys)
-    return batch.join(existing_keys, on=keys, how="left_anti")
+    return batch.join(existing.select(*keys), on=keys, how="left_anti")
 
 
-def upsert_insert_if_absent(incoming: DataFrame, existing_keys: DataFrame, key: str) -> DataFrame:
-    """Insert-if-absent dimension upsert (S9): rows of ``incoming`` whose
-    ``key`` is not present in ``existing_keys``.
+def upsert_insert_if_absent(incoming: DataFrame, existing_keys: DataFrame | None, key: str) -> DataFrame:
+    """Insert-if-absent dimension upsert (S9): rows of ``incoming``, one per
+    ``key``, whose ``key`` is not present in ``existing_keys`` (all of them
+    when there is no existing table yet).
 
     Reference: ``df_info[~station_no.isin(existing)]`` (``etl_job.py:121-126``).
     The existing-keys side is typically tiny (dimension PKs) → broadcast, so
-    the anti-join is shuffle-free on the big side.
+    the anti-join is shuffle-free on the big side; like
+    :func:`append_dedup`, it is not deduplicated.
     """
-    return incoming.dropDuplicates([key]).join(
-        F.broadcast(existing_keys.select(key).distinct()), on=key, how="left_anti"
-    )
+    batch = incoming.dropDuplicates([key])
+    if existing_keys is None:
+        return batch
+    return batch.join(F.broadcast(existing_keys.select(key)), on=key, how="left_anti")
 
 
 def write_jdbc(
