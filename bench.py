@@ -233,11 +233,12 @@ def main() -> None:
 
     runs: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(repeats):
-        # clear session-shared materializations (t2/t10's checkpointed pair
-        # graph) so every repeat pays the true cost once, like a fresh
+        # clear session-shared materializations (t2/t10's pair graph, the
+        # covis edges) so every repeat pays the true cost once, like a fresh
         # session would — otherwise later repeats read a warm cache and the
-        # median under-reports steady-state work. The round-12 helper also
-        # unpersists the evicted checkpoint blocks (round-11 advice item 2).
+        # median under-reports steady-state work. The clear also unpersists
+        # every checkpoint the previous repeat materialized, so executor
+        # storage does not grow across repeats.
         from youbike_etl_pipeline_spark.plans import corpus as _corpus
 
         _corpus.clear_pair_graph_cache()

@@ -1,0 +1,84 @@
+"""The one materialization primitive (``operators.skew.materialize``), its
+release, and the argument checks that must run before it."""
+
+from __future__ import annotations
+
+import pytest
+
+from youbike_etl_pipeline_spark.operators.skew import (
+    _persistent_rdd_ids,
+    materialize,
+)
+
+
+def test_local_checkpoint_only_inside_materialize():
+    """Every eager checkpoint in the package goes through ``materialize``:
+    ``localCheckpoint(`` appears nowhere else under the package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "youbike_etl_pipeline_spark"
+    skew = pkg / "operators" / "skew.py"
+    fn = next(
+        n
+        for n in ast.parse(skew.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "materialize"
+    )
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if "localCheckpoint(" not in line:
+                continue
+            if path == skew and fn.lineno <= lineno <= fn.end_lineno:
+                continue
+            offenders.append(f"{path.relative_to(pkg)}:{lineno}")
+    assert not offenders, offenders
+
+
+def test_materialize_passes_streaming_frames_through(spark):
+    stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    assert materialize(stream) is stream
+
+
+def test_clear_releases_every_checkpoint_of_the_run(spark, sf_small):
+    """t2, t10 and t7 materialize shared and private checkpoints; one
+    ``clear_pair_graph_cache()`` unpersists all of them. Scoped to the ids
+    these queries created: other tests share the session."""
+    from youbike_etl_pipeline_spark.plans import corpus
+
+    sc = spark.sparkContext
+    corpus.clear_pair_graph_cache()
+    before = _persistent_rdd_ids(sc)
+    got = {
+        name: sorted(corpus.CORPUS[name].fn(spark, sf_small).collect())
+        for name in ("t2_ngram_jaccard_pairs", "t10_dedup_clusters", "t7_minhash_lsh_dedup")
+    }
+    new = _persistent_rdd_ids(sc) - before
+    assert new, "the queries materialized nothing"
+    corpus.clear_pair_graph_cache()
+    assert not corpus._PAIR_GRAPH_CACHE
+    assert not (_persistent_rdd_ids(sc) & new)
+    cached = {i.id() for i in sc._jsc.sc().getRDDStorageInfo() if i.numCachedPartitions()}
+    assert not (cached & new)
+    # the next run rebuilds from parquet rather than reading a released block
+    t2 = corpus.CORPUS["t2_ngram_jaccard_pairs"].fn(spark, sf_small).collect()
+    assert sorted(t2) == got["t2_ngram_jaccard_pairs"]
+
+
+@pytest.mark.parametrize(
+    "call",
+    ["minhash_lsh_dedup_portable", "sketch_accuracy_audit", "portable_lsh_index"],
+)
+def test_bad_bands_fail_before_any_spark_job(spark, call):
+    from youbike_etl_pipeline_spark.operators import dedup
+
+    docs = spark.range(20).selectExpr("id AS doc_id", "concat('a b c d ', id) AS text")
+    sc = spark.sparkContext
+    group = f"bad-bands-{call}"
+    sc.setJobGroup(group, call)
+    try:
+        with pytest.raises(ValueError, match="evenly divide"):
+            getattr(dedup, call)(docs, num_hashes=32, bands=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -101,3 +101,19 @@ def test_parquet_row_count_file_and_dir(spark, sf_small, tmp_path):
     out = str(tmp_path / "li_dir.parquet")
     df.repartition(3).write.mode("overwrite").parquet(out)
     assert parquet_row_count(out) == n
+
+
+def test_widen_gate_fires_on_a_cluster_narrower_than_min_tasks(spark, tmp_path):
+    """The ``min_tasks`` gate compares the work (rows / rows_per_task), not
+    the cluster width: with target 2 < min_tasks a heavy single-file scan
+    still widens to the 2 available tasks."""
+    from youbike_etl_pipeline_spark.operators.skew import widen_narrow_scan
+
+    out = str(tmp_path / "one_file.parquet")
+    spark.range(64).coalesce(1).write.parquet(out)
+    one_file = spark.read.parquet(out)
+    assert len(one_file.inputFiles()) == 1
+    widened = widen_narrow_scan(one_file, target=2, rows_per_task=1)
+    assert widened.rdd.getNumPartitions() == 2
+    # too little work for min_tasks tasks: left alone
+    assert widen_narrow_scan(one_file, target=2, rows_per_task=32) is one_file

@@ -64,7 +64,7 @@ PROBES = {
 def timed(spark, name, fn, d, budget):
     from youbike_etl_pipeline_spark.plans import corpus as _corpus
 
-    _corpus._PAIR_GRAPH_CACHE.clear()
+    _corpus.clear_pair_graph_cache()
     group = f"r7probe-{name}"
     result: dict = {}
 

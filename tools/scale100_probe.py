@@ -294,7 +294,7 @@ def main() -> None:
     def run(name: str, d: str) -> float:
         from youbike_etl_pipeline_spark.plans import corpus as _corpus
 
-        _corpus._PAIR_GRAPH_CACHE.clear()
+        _corpus.clear_pair_graph_cache()
         fn = EXTRA[name] if name in EXTRA else CORPUS[name].fn
         t0 = time.perf_counter()
         fn(spark, d).write.mode("overwrite").format("noop").save()

@@ -58,7 +58,7 @@ def timed_run(spark, name: str, d: str, budget: float) -> dict:
     """
     from youbike_etl_pipeline_spark.plans import corpus as _corpus
 
-    _corpus._PAIR_GRAPH_CACHE.clear()
+    _corpus.clear_pair_graph_cache()
     group = f"sweep-{name}"
     result: dict = {}
 

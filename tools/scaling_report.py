@@ -191,7 +191,7 @@ def main() -> None:
                 # warm checkpoint and reports cache latency, not plan work
                 from youbike_etl_pipeline_spark.plans import corpus as _corpus
 
-                _corpus._PAIR_GRAPH_CACHE.clear()
+                _corpus.clear_pair_graph_cache()
                 t0 = time.perf_counter()
                 CORPUS[name].fn(spark, d).write.mode("overwrite").format("noop").save()
                 best = min(best, time.perf_counter() - t0)

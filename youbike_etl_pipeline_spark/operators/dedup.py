@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import local_frame
+from .skew import materialize
 from .text import shingle_hashes, tokens, word_shingles_from_tokens
 
 
@@ -118,10 +119,8 @@ def _exact_collapse(
     reps = groups.groupBy("__ch").agg(
         F.min("__member").alias("__rep"), F.count(F.lit(1)).alias("__gsize")
     )
-    mapping = (
-        groups.join(reps, "__ch")
-        .select("__member", "__rep", "__gsize")
-        .localCheckpoint(eager=True)
+    mapping = materialize(
+        groups.join(reps, "__ch").select("__member", "__rep", "__gsize")
     )
     rep_docs = df.join(
         mapping.filter(F.col("__member") == F.col("__rep")).select(
@@ -307,7 +306,7 @@ def ngram_jaccard_pairs(
         idx = idx.join(keep.select("shingle"), "shingle").select(id_col, "shingle")
     # the index feeds three subtrees (sizes + both self-join sides);
     # materialize it once instead of re-running tokenize+shingle per use
-    idx = idx.localCheckpoint(eager=True)
+    idx = materialize(idx)
     sizes = idx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
     a = idx.toDF("id_a", "shingle")
     b = idx.toDF("id_b", "shingle")
@@ -379,7 +378,7 @@ def prefix_filter_jaccard_pairs(
     mapping = None
     if exact_dedup_first:
         df, mapping = _exact_collapse(df, text_col, id_col)
-    idx = shingle_index(df, text_col, id_col, k, widen=widen).localCheckpoint(eager=True)
+    idx = materialize(shingle_index(df, text_col, id_col, k, widen=widen))
     dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     w_doc = Window.partitionBy(id_col).orderBy("__df", "shingle")
     ranked = (
@@ -407,13 +406,12 @@ def prefix_filter_jaccard_pairs(
     # Keep (rank, size) on the prefix rows — the PPJoin-style candidate
     # filters below need them — and MATERIALIZE the pruned prefix frame:
     # it feeds both self-join sides, and without the checkpoint the whole
-    # ranked subtree (idx ⋈ dfreq + two windows) compiles and executes
-    # twice (r12 profile: two full Window chains in the executed plan).
-    prefix = ranked.filter(
-        F.col("__rn") <= F.col("__n") - ceil_tau_n + 1
-    ).select(id_col, "shingle", "__rn", "__n")
-    if not prefix.isStreaming:
-        prefix = prefix.localCheckpoint(eager=True)
+    # ranked subtree (idx ⋈ dfreq + two windows) executes twice.
+    prefix = materialize(
+        ranked.filter(F.col("__rn") <= F.col("__n") - ceil_tau_n + 1).select(
+            id_col, "shingle", "__rn", "__n"
+        )
+    )
     pa_ = prefix.toDF("id_a", "shingle", "__rn_a", "__n_a")
     pb_ = prefix.toDF("id_b", "shingle", "__rn_b", "__n_b")
     # Lossless candidate pruning (Bayardo WWW'07 / PPJoin, both implied by
@@ -627,7 +625,7 @@ def minhash_lsh_dedup(
     mapping = None
     if exact_dedup_first:
         df, mapping = _exact_collapse(df, text_col, id_col)
-    idx = shingle_hash_index(df, text_col, id_col, k, widen=widen).localCheckpoint(eager=True)
+    idx = materialize(shingle_hash_index(df, text_col, id_col, k, widen=widen))
     sigs = minhash_signatures(df, text_col, id_col, k, num_hashes, index=idx)
     cands = minhash_lsh_candidates(sigs, id_col, bands)
     sizes = idx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
@@ -703,21 +701,28 @@ def portable_shingle_base(t: Column) -> Column:
     return le32.bitwiseAND(F.lit(0x3FFFFFFF))
 
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """Entry check of the portable banding: ``bands`` must evenly divide
+    ``num_hashes`` with >= 1 row per band. Runs before any Spark job, so a
+    bad argument never pays for a materialization first."""
+    if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
+        raise ValueError(
+            f"bands ({bands}) must evenly divide num_hashes ({num_hashes}) "
+            "with >= 1 row per band — an empty or ragged band silently "
+            "degrades the candidate join (empty band keys collide "
+            "universally: an n² cross product)"
+        )
+
+
 def _banded_from_signature(
     sig: DataFrame, id_col: str, num_hashes: int, bands: int
 ) -> DataFrame:
     """(id, band_idx, band_key) rows from a signature frame carrying the
     ``h0..h{num_hashes-1}`` min columns — the banding step shared by
     :func:`portable_lsh_index`, :func:`minhash_lsh_dedup_portable` and
-    :func:`sketch_accuracy_audit`. Callers validate divisibility."""
+    :func:`sketch_accuracy_audit`, which all run :func:`_check_bands` at
+    entry."""
     rows_per_band = num_hashes // bands
-    if rows_per_band < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"banding: bands ({bands}) must evenly divide num_hashes "
-            f"({num_hashes}) with >= 1 row per band — an empty or ragged "
-            "band silently degrades the candidate join (empty band keys "
-            "collide universally: an n² cross product)"
-        )
     return sig.select(
         F.col(id_col),
         F.posexplode(
@@ -754,20 +759,13 @@ def portable_lsh_index(
     streaming near-dup gate (cross-set match against a static corpus).
     All three are per-document properties, so an index built per micro-
     batch equals the batch-global computation for those documents."""
-    rows_per_band = num_hashes // bands
-    if rows_per_band < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"portable_lsh_index: bands ({bands}) must evenly divide "
-            f"num_hashes ({num_hashes}) with >= 1 row per band — an empty "
-            "or ragged band silently degrades the candidate join (empty "
-            "band keys collide universally: an n² cross product)"
-        )
+    _check_bands(num_hashes, bands)
     idx = shingle_index(df, text_col, id_col, k, widen=widen)
     hidx = idx.select(
         F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
     ).distinct()
     if checkpoint:
-        hidx = hidx.localCheckpoint(eager=True)
+        hidx = materialize(hidx)
     mins = [
         F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
         for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
@@ -801,6 +799,7 @@ def minhash_lsh_dedup_portable(
     copies through the linear content-hash collapse first (answer-
     identical; see :func:`minhash_lsh_dedup` — the t7-at-100× fix made
     code)."""
+    _check_bands(num_hashes, bands)
     mapping = None
     if exact_dedup_first:
         df, mapping = _exact_collapse(df, text_col, id_col)
@@ -823,8 +822,7 @@ def minhash_lsh_dedup_portable(
         F.count(F.lit(1)).alias("n_sh"),
         F.collect_list("sh").alias("shs"),
     )
-    if not feat.isStreaming:
-        feat = feat.localCheckpoint(eager=True)
+    feat = materialize(feat)
     banded = _banded_from_signature(feat, id_col, num_hashes, bands)
     a = banded.toDF("id_a", "band_idx", "band_key")
     b = banded.toDF("id_b", "band_idx", "band_key")
@@ -1109,12 +1107,11 @@ def connected_components(
     # src/dst union below reads `pairs` twice, and the loop (or union-find
     # collect) reads the edges repeatedly — without checkpoints the whole
     # upstream shingle-index self-join re-runs per reference
-    pairs = pairs.select(id_a, id_b).localCheckpoint(eager=True)
-    edges = (
+    pairs = materialize(pairs.select(id_a, id_b))
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n_edges = edges.count()
     dt = edges.schema["src"].dataType
@@ -1176,7 +1173,7 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        updated = jumped.localCheckpoint(eager=True)
+        updated = materialize(jumped)
         changed = (
             updated.alias("u")
             .join(labels.alias("l"), "node")
@@ -1244,6 +1241,7 @@ def sketch_accuracy_audit(
     about estimator error). Default OFF: the graded corpus query (t38)
     audits the raw candidate distribution, byte-identical to its oracle.
     """
+    _check_bands(num_hashes, bands)
     if exact_dedup_first:
         df, _ = _exact_collapse(df, text_col, id_col)
     # Round-12 restructure (guide §2.4 fewer passes / §2.3 aggregate before
@@ -1274,8 +1272,7 @@ def sketch_accuracy_audit(
         F.count(F.lit(1)).alias("n_sh"),
         F.collect_list("sh").alias("shs"),
     )
-    if not feat.isStreaming:
-        feat = feat.localCheckpoint(eager=True)
+    feat = materialize(feat)
     banded = _banded_from_signature(feat, id_col, num_hashes, bands)
     cand = (
         banded.toDF("id_a", "band_idx", "band_key")
@@ -1408,10 +1405,10 @@ def levenshtein_blocked_pairs(
         reps = base.groupBy("__prefix", "__blk").agg(
             F.min(id_col).alias("__rep")
         )
-        mapping = (
-            base.join(reps, ["__prefix", "__blk"])
-            .select(F.col(id_col).alias("__member"), "__rep")
-            .localCheckpoint(eager=True)
+        mapping = materialize(
+            base.join(reps, ["__prefix", "__blk"]).select(
+                F.col(id_col).alias("__member"), "__rep"
+            )
         )
         base = base.join(
             mapping.filter(F.col("__member") == F.col("__rep")).select(

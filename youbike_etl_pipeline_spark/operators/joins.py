@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import haversine_m
+from .skew import materialize, quantile_buckets
 
 
 def fact_dim_join(
@@ -516,21 +517,7 @@ def numeric_nn_join(
     )
     null_left = left.filter(F.col(left_val).isNull())
     left = left.filter(F.col(left_val).isNotNull())
-    if n_buckets is None:
-        n_buckets = int(left.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    # driver-side scalar list: ≤ n_buckets−1 cut points from a GK sketch,
-    # not a data collect. Materialize rvals first — the quantile sketch is
-    # its own action, and without the checkpoint the right-side aggregate
-    # executes once for the sketch and again inside the join query.
-    if not rvals.isStreaming:
-        rvals = rvals.localCheckpoint(eager=True)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bnds = sorted(set(rvals.stat.approxQuantile("__v", probs, 0.001))) if probs else []
-    if bnds:
-        bnd_arr = F.array(*[F.lit(float(b)) for b in bnds])
-        bucket = F.size(F.filter(bnd_arr, lambda b: b <= F.col("__v")))
-    else:
-        bucket = F.lit(0)
+    rvals, bucket, n_cuts = quantile_buckets(rvals, "__v", n_buckets)
     l_tagged = left.select(
         F.col(left_val).alias("__v"),
         F.lit(1).alias("__is_left"),
@@ -551,7 +538,7 @@ def numeric_nn_join(
                 F.array_distinct(
                     F.filter(
                         F.array(F.col("__b0") - 1, F.col("__b0"), F.col("__b0") + 1),
-                        lambda b: (b >= 0) & (b <= len(bnds)),
+                        lambda b: (b >= 0) & (b <= n_cuts),
                     )
                 )
             ),
@@ -643,13 +630,9 @@ def interval_overlap_pairs(
     # the WHOLE upstream subtree (for j11: scan → sessionize window chain →
     # min/max aggregate) compiles and EXECUTES twice — exchange reuse only
     # de-duplicates the exchange node itself, not the window/aggregate work
-    # above it (r11 plan dump: two full Window+HashAggregate chains, two
-    # scans). The interval frame is tiny relative to its inputs (one row
-    # per session), so an eager localCheckpoint pays one materialization to
-    # halve the heavy lineage (guide §3.3: materialize intermediates feeding
-    # self-joins).
-    if not intervals.isStreaming:
-        intervals = intervals.localCheckpoint(eager=True)
+    # above it. The interval frame is tiny relative to its inputs (one row
+    # per session), so one materialization halves the heavy lineage.
+    intervals = materialize(intervals)
     bucketed = intervals.select(
         key,
         interval_id,

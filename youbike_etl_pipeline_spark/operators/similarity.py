@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity, dot_product
+from .skew import auto_sample_mod, cheap_row_count, materialize
 
 
 def _query_lit(query_vec: list[float]) -> Column:
@@ -370,11 +371,7 @@ def lsh_near_dup_pairs(
         )
         groups = nz.select(F.col(id_col).alias("__member"), key.alias("__ch"))
         reps = groups.groupBy("__ch").agg(F.min("__member").alias("__rep"))
-        mapping = (
-            groups.join(reps, "__ch")
-            .select("__member", "__rep")
-            .localCheckpoint(eager=True)
-        )
+        mapping = materialize(groups.join(reps, "__ch").select("__member", "__rep"))
         nz = nz.join(
             mapping.filter(F.col("__member") == F.col("__rep")).select(
                 F.col("__member").alias(id_col)
@@ -388,11 +385,9 @@ def lsh_near_dup_pairs(
     )
     # both self-join sides reference `bucketed`; without materialization the
     # collapse semi-join AND the bits×dim hyperplane bucket expression
-    # compile and execute twice (same duplicated-subtree shape the r12 j11
-    # profile caught — guide §3.3). The frame is one row per vector, so the
+    # compile and execute twice. The frame is one row per vector, so the
     # checkpoint is tiny relative to the work it halves.
-    if not bucketed.isStreaming:
-        bucketed = bucketed.localCheckpoint(eager=True)
+    bucketed = materialize(bucketed)
     a = bucketed.toDF("id_a", "vec_a", "bucket")
     b = bucketed.toDF("id_b", "vec_b", "bucket")
     pairs = (
@@ -591,12 +586,9 @@ def knn_label_consistency(
             .agg(F.min(id_col).alias(id_col))
             .select(id_col)
         )
-        nz = nz.join(reps, id_col, "left_semi")
-        if not nz.isStreaming:
-            # q and n below both reference nz — materialize so the
-            # collapse groupBy + semi-join executes once, not per side
-            # (guide §3.3; the r12 j11/s6 profiles caught this shape)
-            nz = nz.localCheckpoint(eager=True)
+        # q and n below both reference nz — materialize so the collapse
+        # groupBy + semi-join executes once, not per side
+        nz = materialize(nz.join(reps, id_col, "left_semi"))
     q = nz.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qvec"),
@@ -707,7 +699,6 @@ def jl_projection_audit(
     explicit int to pin the budget by hand (the graded e6b twin, M=4).
     """
     from ..operators.dedup import md5_token_hash64
-    from ..operators.skew import auto_sample_mod, cheap_row_count
 
     planes = _hyperplanes(dim, n_planes, seed=seed)
     base = df

@@ -126,19 +126,15 @@ def widen_narrow_scan(
     a cluster), so the decision adapts to the session instead of baking in
     a local constant.
 
-    Cost gate (round-12, VERDICT item 2 — the r11 version widened
-    unconditionally and regressed ~21 sub-second queries by a fixed
-    shuffle + 32-way scheduling tax): ``rows_per_task`` is the caller's
-    statement of how many rows amortize ONE task of the downstream work
-    (≈ 0.1 s of per-row cost — measured per codec family, see
-    ``multimodal._WIDEN_RPT``). The wanted width is then
-    ``ceil(rows / rows_per_task)`` with ``rows`` read from the parquet
-    FOOTERS of the scan's input files (no Spark job; the same cardinality
-    source as :func:`parquet_row_count`). When that comes out under
-    ``min_tasks`` the whole downstream map is comparable to the shuffle's
-    fixed cost and the input is left alone. Callers that cannot state a
-    per-row cost (``rows_per_task=None``) keep the r11 behaviour: widen a
-    narrow scan all the way to ``target``.
+    Cost gate: ``rows_per_task`` is the caller's statement of how many rows
+    amortize ONE task of the downstream work (≈ 0.1 s of per-row cost —
+    measured per codec family, see ``multimodal._WIDEN_RPT``). With ``rows``
+    read from the parquet FOOTERS of the scan's input files (no Spark job),
+    ``ceil(rows / rows_per_task)`` under ``min_tasks`` means the downstream
+    map is comparable to the shuffle's fixed cost and the input is left
+    alone; otherwise that count, clamped to ``target``, is the wanted width.
+    Callers that cannot state a per-row cost (``rows_per_task=None``) widen
+    a narrow scan all the way to ``target``.
     """
     if df.isStreaming:
         # no static width to inspect (and .rdd/.inputFiles are illegal on a
@@ -153,48 +149,123 @@ def widen_narrow_scan(
     # so a post-shuffle/joined frame reports the static shuffle-partition
     # count (e.g. 32) while at runtime AQE coalesces it back down to the
     # handful of scan partitions (a broadcast join preserves the probe
-    # side's partitioning) — the r11 profile caught exactly that: a
-    # collapse-then-tokenize pipeline claimed 32 partitions and ran on 3.
-    # File count is AQE-immune and errs toward widening only on few-file
-    # inputs, which is precisely the pathology this guards.
+    # side's partitioning). File count is AQE-immune and errs toward
+    # widening only on few-file inputs, the pathology this guards.
     files = df.inputFiles()
     width = len(files) if files else df.rdd.getNumPartitions()
     rows = None
-    if files:
-        local = [
-            f[len("file://"):] if f.startswith("file://") else f for f in files
-        ]
-        if all(f.endswith(".parquet") for f in local):
-            try:
-                import pyarrow.parquet as _pq
-
-                metas = [_pq.ParquetFile(f).metadata for f in local]
-                rows = sum(m.num_rows for m in metas)
-                # a single LARGE file is still split by Spark into
-                # byte-range scan partitions (row-group aligned), so the
-                # true scan width is at least total_bytes /
-                # maxPartitionBytes — without this a one-file multi-GB
-                # input would be "width 1" and pay a pointless full
-                # shuffle (round-11 advice item 3)
-                total_bytes = sum(
-                    _os.path.getsize(f) for f in local
-                )
-                max_split = _byte_conf(
-                    spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
-                )
-                width = max(width, -(-total_bytes // max_split))
-            except OSError:
-                # remote scheme / unreadable footer: fall back to the
-                # conservative widen-by-file-count decision
-                rows = None
+    if files and all(f.endswith(".parquet") for f in files):
+        try:
+            rows = _footer_rows(files)
+            # a single LARGE file is still split into byte-range scan
+            # partitions (row-group aligned): the true width is at least
+            # total_bytes / maxPartitionBytes, not 1
+            total_bytes = sum(
+                _os.path.getsize(f.removeprefix("file://")) for f in files
+            )
+            max_split = _byte_conf(
+                spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
+            )
+            width = max(width, -(-total_bytes // max_split))
+        except OSError:
+            # remote scheme / unreadable footer: fall back to the
+            # conservative widen-by-file-count decision
+            rows = None
     wanted = tgt
     if rows_per_task is not None and rows is not None:
-        wanted = min(tgt, -(-rows // rows_per_task))
+        # gate on the work before clamping to the cluster width, so a
+        # cluster narrower than ``min_tasks`` still widens heavy inputs
+        wanted = -(-rows // rows_per_task)
         if wanted < min_tasks:
             return df
+        wanted = min(tgt, wanted)
     if width >= wanted:
         return df
     return df.repartition(wanted)
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Total rows from the parquet FOOTERS of ``files`` (paths or
+    ``file://`` URIs): no data pages, no Spark job. A remote scheme (s3://,
+    hdfs://) or an unreadable footer raises ``OSError``."""
+    import pyarrow.parquet as _pq
+
+    return sum(
+        _pq.ParquetFile(f.removeprefix("file://")).metadata.num_rows for f in files
+    )
+
+
+#: applicationId → ids of the RDDs backing the live checkpoints made by
+#: :func:`materialize` (RDD ids restart in a new context in the same JVM).
+#: Plain ints pin nothing: the ContextCleaner still reclaims the checkpoints
+#: of sessions that never call :func:`release_materialized`.
+_MATERIALIZED: dict[str, set[int]] = {}
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    keys = sc._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(k) for k in keys.split(",") if k}
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Execute ``df`` once and return a frame reading the result, so a
+    subtree referenced more than once (self-join sides, an
+    ``approxQuantile`` action plus the query, a loop's next round) runs
+    once. The package's one materialization policy: streaming frames pass
+    through unchanged, every other frame becomes an eager
+    ``localCheckpoint`` in executor storage.
+
+    The backing RDD id is recorded for :func:`release_materialized`; ids
+    no longer persisted (reclaimed by the ContextCleaner) are dropped, so
+    the record never outgrows the live checkpoints."""
+    if df.isStreaming:
+        return df
+    out = df.localCheckpoint(eager=True)
+    sc = df.sparkSession.sparkContext
+    live = _persistent_rdd_ids(sc)
+    ids = {i for i in _MATERIALIZED.pop(sc.applicationId, ()) if i in live}
+    ids.add(out._jdf.queryExecution().analyzed().rdd().id())
+    _MATERIALIZED.clear()  # ids of a stopped context name nothing
+    _MATERIALIZED[sc.applicationId] = ids
+    return out
+
+
+def release_materialized(spark) -> None:
+    """Unpersist, blocking, every still-live checkpoint :func:`materialize`
+    made in ``spark``'s context.
+
+    A between-queries call: executing a frame derived from a released
+    checkpoint raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` — a typed
+    error, never a wrong answer."""
+    sc = spark.sparkContext
+    live = sc._jsc.getPersistentRDDs()
+    for i in _MATERIALIZED.pop(sc.applicationId, ()):
+        rdd = live.get(i)
+        if rdd is not None:
+            rdd.unpersist(True)
+
+
+def quantile_buckets(
+    df: DataFrame, col: str, n_buckets: int | None = None
+) -> tuple[DataFrame, Column, int]:
+    """Range buckets on numeric ``col`` for parallel windows over an
+    ordered domain: ``(materialized df, bucket Column, cut count)``. The
+    cuts are the deduped approximate ``1/n_buckets``-quantiles of ``col``
+    (error 0.001; each an actual value); a value's bucket is the number of
+    cuts ``≤`` it. ``n_buckets`` defaults to
+    ``spark.sql.shuffle.partitions``. ``df`` is materialized first because
+    ``approxQuantile`` is its own action: otherwise the subtree runs once
+    for the sketch and again in the query. The Column names ``col``, so it
+    buckets any frame carrying that column."""
+    if n_buckets is None:
+        n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    df = materialize(df)
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    cuts = sorted(set(df.stat.approxQuantile(col, probs, 0.001))) if probs else []
+    if not cuts:
+        return df, F.lit(0), 0
+    cut_arr = F.array(*[F.lit(float(c)) for c in cuts])
+    return df, F.size(F.filter(cut_arr, lambda c: c <= F.col(col))), len(cuts)
 
 
 def parquet_row_count(path: str) -> int:
@@ -204,9 +275,6 @@ def parquet_row_count(path: str) -> int:
     :func:`repartition_for_rows` when the input is a table scan (a real
     deployment would read the same number from catalog statistics)."""
     import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
 
     if _os.path.isdir(path):
         files = [
@@ -215,8 +283,8 @@ def parquet_row_count(path: str) -> int:
             for f in _glob.glob(_os.path.join(path, pat))
             if not _os.path.basename(f).startswith(("_", "."))
         ]
-        return sum(_pq.ParquetFile(f).metadata.num_rows for f in sorted(set(files)))
-    return _pq.ParquetFile(path).metadata.num_rows
+        return _footer_rows(sorted(set(files)))
+    return _footer_rows([path])
 
 
 def cheap_row_count(df: DataFrame) -> int:
@@ -246,20 +314,12 @@ def cheap_row_count(df: DataFrame) -> int:
     except Exception:  # pragma: no cover - connect/remote sessions
         row_preserving = False
     if row_preserving:
-        files = [
-            f[len("file://"):] if f.startswith("file://") else f
-            for f in df.inputFiles()
-        ]
+        files = df.inputFiles()
         if files and all(f.endswith(".parquet") for f in files):
-            import pyarrow.parquet as _pq
-
             try:
-                # pyarrow opens local paths; a remote filesystem scheme
-                # (s3://, hdfs://, abfs://) raises here and falls back to
-                # the exact count job (round-7 review finding)
-                return sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
+                return _footer_rows(files)
             except OSError:
-                pass
+                pass  # remote filesystem: the exact count job below
     return df.count()
 
 

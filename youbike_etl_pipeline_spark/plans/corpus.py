@@ -1622,83 +1622,78 @@ def t2_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_pairs_shared(spark, sf_dir)
 
 
-#: (applicationId, sf_dir) → checkpointed t2 pair graph. t10 re-derives the
-#: exact same pairs before clustering; sharing the materialized graph saves
-#: the whole shingle-index self-join on the second use (t10 alone was 15%
-#: of headline bench wall-time, its first ~4 s literally re-running t2).
-#: Keyed by applicationId so a dead session's DataFrame is never reused.
+#: (applicationId, sf_dir, name) → session-shared materialized frames, one
+#: entry per reused subtree (see :func:`_shared`). Keyed by applicationId so
+#: a dead session's DataFrame is never reused.
 _PAIR_GRAPH_CACHE: dict[tuple, object] = {}
 
 
 def clear_pair_graph_cache() -> None:
-    """Evict every session-shared checkpointed frame AND release its
-    executor storage. ``dict.clear()`` alone drops the Python references
-    but the eagerly-checkpointed RDD blocks stay pinned in block-manager
-    memory until the JVM-side Datasets become unreachable and the
-    ContextCleaner notices (round-11 advice item 2) — with the default
-    30-minute periodic GC, repeated bench loops / multiple sf_dir keys
-    accumulate dead blocks in the meantime. There is no public handle to
-    the checkpoint's backing RDD (``df.rdd`` derives a NEW RDD; unpersist
-    on it is a no-op), so the release path is the cleaner's: drop the
-    py4j proxies, then force a JVM GC so the cleaner unpersists the
-    now-unreachable checkpoint RDDs immediately."""
-    import gc
+    """Evict every session-shared frame and release the executor storage of
+    every checkpoint :func:`operators.skew.materialize` made in the active
+    session (:func:`operators.skew.release_materialized`).
 
+    Call it between queries: a frame built before the call and executed
+    after it fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, a typed
+    error, never a wrong answer."""
     _PAIR_GRAPH_CACHE.clear()
-    gc.collect()  # release py4j proxies → JVM-side Datasets unreachable
     spark = SparkSession.getActiveSession()
     if spark is not None:
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass  # session mid-shutdown; blocks die with it anyway
+        osk.release_materialized(spark)
+
+
+def _shared(spark: SparkSession, sf_dir: str, name: str, build: Callable[[], object]):
+    """``build()``'s materialized result, built once per (session, sf_dir,
+    name) and then shared by every query that derives from the same
+    subtree. This is subtree sharing WITHIN a session, not cross-run
+    memoization: bench.py clears the cache between repeats so every repeat
+    pays the full cost from parquet exactly once."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _PAIR_GRAPH_CACHE:
+        _PAIR_GRAPH_CACHE[key] = build()
+    return _PAIR_GRAPH_CACHE[key]
 
 
 def _covis_shared(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """``(ui, co)``: the distinct (user, item) frame parsed from event props
-    and its co-visitation pair counts — checkpointed once per (session, sf).
+    and its co-visitation pair counts, shared per (session, sf).
 
     NINE graph/recommender queries (g1–g7, r1, r2) derive their edge list
     from this exact subtree with only the count threshold differing; before
     sharing, each re-parsed the JSON props, re-distincted, and re-ran the
-    ui self-join (the single most expensive stage in every one of them).
-    Same cache contract as the t2/t10 pair graph above: keyed by
-    applicationId so a dead session's frame is never reused, and bench.py
-    clears the cache between repeats so every repeat pays the full cost
-    from parquet exactly once — this is subtree sharing WITHIN a session,
-    not cross-run memoization."""
-    key = (spark.sparkContext.applicationId, sf_dir, "covis")
-    if key not in _PAIR_GRAPH_CACHE:
+    ui self-join (the single most expensive stage in every one of them)."""
+
+    def build():
         ev = _t(spark, sf_dir, "events")
         item = F.try_variant_get(F.try_parse_json("props"), "$.k", "int")
-        ui = (
+        ui = osk.materialize(
             ev.select("user_id", item.alias("item"))
             .filter(F.col("item").isNotNull())
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        co = (
+        co = osk.materialize(
             ui.toDF("user_id", "i")
             .join(ui.toDF("user_id", "j"), "user_id")
             .filter(F.col("i") < F.col("j"))
             .groupBy("i", "j")
             .agg(F.count(F.lit(1)).alias("c"))
-            .localCheckpoint(eager=True)
         )
-        _PAIR_GRAPH_CACHE[key] = (ui, co)
-    return _PAIR_GRAPH_CACHE[key]
+        return ui, co
+
+    return _shared(spark, sf_dir, "covis", build)
 
 
 def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The t2 pair graph, shared per (session, sf): t10 re-derives the exact
+    same pairs before clustering, so sharing saves the whole shingle-index
+    self-join on the second use."""
     from ..operators.dedup import ngram_jaccard_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIR_GRAPH_CACHE:
-        pairs = ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"), k=3, threshold=0.5, max_doc_freq=100
-        )
-        _PAIR_GRAPH_CACHE[key] = pairs.localCheckpoint(eager=True)
-    return _PAIR_GRAPH_CACHE[key]
+    def build():
+        docs = _t(spark, sf_dir, "documents")
+        return osk.materialize(ngram_jaccard_pairs(docs, k=3, threshold=0.5, max_doc_freq=100))
+
+    return _shared(spark, sf_dir, "ngram_pairs", build)
 
 
 # empty tokens are filtered to mirror Spark-side tokens() exactly: on
@@ -6963,17 +6958,14 @@ def w17_regular_grid_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.date_trunc("hour", F.col("ts")).alias("h")
     ).agg(F.sum(dec).alias("s"))
     # hourly feeds BOTH the bounds subtree (materialized below for the size
-    # estimate) and the scaffold join's right side — checkpoint it once so
-    # the events scan + decimal aggregate executes a single time (r12: the
-    # bounds checkpoint alone still re-ran hourly inside the main query)
-    hourly = hourly.localCheckpoint(eager=True)
-    # Per-user bounds are one row per user — localCheckpoint the small
-    # frame so the scaffold explode AND the size estimate below read it
-    # without recomputing the hourly aggregate a third time.
-    bounds = (
-        hourly.groupBy("user_id")
-        .agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-        .localCheckpoint(eager=False)
+    # estimate) and the scaffold join's right side — materialize it once so
+    # the events scan + decimal aggregate executes a single time
+    hourly = osk.materialize(hourly)
+    # Per-user bounds are one row per user — materialize the small frame so
+    # the scaffold explode AND the size estimate below read it without
+    # recomputing the hourly aggregate a third time.
+    bounds = osk.materialize(
+        hourly.groupBy("user_id").agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
     )
     scaffold = bounds.select(
         "user_id",
@@ -9206,7 +9198,7 @@ def g1_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node count) re-counted — both are loop constants. n becomes a driver
     # scalar (one count job over the checkpointed frame, constant-size
     # result) spliced in as a literal, arithmetic unchanged.
-    edges = edges.join(deg, "src").localCheckpoint(eager=True)
+    edges = osk.materialize(edges.join(deg, "src"))
     nodes = edges.select(F.col("src").alias("item")).distinct()
     n = float(nodes.count())
     pr = nodes.select(
@@ -10356,12 +10348,12 @@ def er1_blocked_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w21_weekly_trend_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     # the daily frame feeds both the seasonal aggregation and the final
-    # join; localCheckpoint the (|days| x |types|)-bounded frame so the
-    # raw events scan + records->days aggregation run once (w16 pattern)
-    daily = (
-        ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.sum(F.floor(F.col("value") * 1000000).cast("long")).alias("vi"))
-        .localCheckpoint(eager=False)
+    # join; materialize the (|days| x |types|)-bounded frame so the raw
+    # events scan + records->days aggregation run once (w16 pattern)
+    daily = osk.materialize(
+        ev.groupBy("event_type", F.col("ts").cast("date").alias("day")).agg(
+            F.sum(F.floor(F.col("value") * 1000000).cast("long")).alias("vi")
+        )
     )
     w7 = Window.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     tr = daily.select(
@@ -12887,9 +12879,11 @@ def r2_item_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def g4_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, co = _covis_shared(spark, sf_dir)
     pairs = co.toDF("s", "t", "n_co").filter(F.col("n_co") >= 2)
-    edges = pairs.select("s", "t").unionAll(
-        pairs.select(F.col("t").alias("s"), F.col("s").alias("t"))
-    ).localCheckpoint()
+    edges = osk.materialize(
+        pairs.select("s", "t").unionAll(
+            pairs.select(F.col("t").alias("s"), F.col("s").alias("t"))
+        )
+    )
     frontier = local_frame(spark, [(0, 0)], "item int, dist int")
     layers = [frontier]
     for hop in (1, 2, 3):
@@ -14146,9 +14140,11 @@ def g7_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _, co_all = _covis_shared(spark, sf_dir)
     co = co_all.filter(F.col("c") >= 30).select("i", "j")
-    ed = co.select(F.col("i").alias("src"), F.col("j").alias("dst")).unionAll(
-        co.select(F.col("j").alias("src"), F.col("i").alias("dst"))
-    ).localCheckpoint()
+    ed = osk.materialize(
+        co.select(F.col("i").alias("src"), F.col("j").alias("dst")).unionAll(
+            co.select(F.col("j").alias("src"), F.col("i").alias("dst"))
+        )
+    )
     w1 = ed.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("p1")
     )
@@ -14321,7 +14317,7 @@ def m30_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import md5_token_hash64
 
     ev = _t(spark, sf_dir, "events")
-    base = (
+    base = osk.materialize(
         ev.filter(
             F.col("value").isNotNull() & F.col("event_type").isin("click", "view")
         )
@@ -14333,7 +14329,6 @@ def m30_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("seed"),
         )
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
     )
     obs_row = base.agg(
         (
@@ -15126,11 +15121,11 @@ def w26_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    d = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("dy")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a")
-    ).localCheckpoint()
+    d = osk.materialize(
+        ev.groupBy("event_type", F.col("ts").cast("date").alias("dy")).agg(
+            F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a")
+        )
+    )
     ks = spark.range(1, 11).select(F.col("id").cast("int").alias("k"))
     x = d.toDF("event_type", "dy", "ax").crossJoin(F.broadcast(ks))
     y = d.toDF("event_type", "dy2", "ay")
@@ -15162,9 +15157,8 @@ def w26_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
     vx, vy = n * sxx - sx * sx, n * syy - sy * sy
-    r = (
-        lagged.filter((vx > 0) & (vy > 0))
-        .select(
+    r = osk.materialize(
+        lagged.filter((vx > 0) & (vy > 0)).select(
             "event_type",
             "k",
             F.floor(
@@ -15175,7 +15169,6 @@ def w26_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("r_q"),
         )
-        .localCheckpoint()
     )
     rk = F.row_number().over(
         Window.partitionBy("event_type").orderBy(F.col("r_q").desc(), F.col("k"))
@@ -15446,11 +15439,10 @@ def er2_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("k"), F.lower(F.trim("p_name")).alias("nm")
     )
-    canon = (
+    canon = osk.materialize(
         p.groupBy("nm")
         .agg(F.min("k").alias("canon_key"), F.count(F.lit(1)).alias("n_rec"))
         .withColumn("blk", F.regexp_extract("nm", r"(\S+)$", 1))
-        .localCheckpoint()
     )
     a = canon.select(
         F.col("nm").alias("na"), F.col("canon_key").alias("id_a"), "blk"
@@ -15637,7 +15629,7 @@ def mm9_channel_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     media = attach_ppm_payloads(docs)
-    hist = image_channel_histogram(media).localCheckpoint()
+    hist = osk.materialize(image_channel_histogram(media))
     per_chan = 16 * 12
     term = F.floor(
         1000000.0 * F.col("cnt") / F.lit(per_chan)
@@ -16226,7 +16218,7 @@ def j13_interpolation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m32_g_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     base = ev.select("event_type", (F.col("user_id") % 5).alias("cohort"))
-    base = base.localCheckpoint()
+    base = osk.materialize(base)
     n = base.count()
     o = base.groupBy("event_type", "cohort").agg(
         F.count(F.lit(1)).cast("long").alias("obs")

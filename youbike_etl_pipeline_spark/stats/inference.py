@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregations import decimal_pow_sum, decimal_sum
+from ..operators.skew import auto_sample_mod, cheap_row_count, quantile_buckets
 
 try:  # pragma: no cover - optional, driver-side p-values only
     from scipy import stats as _scipy_stats
@@ -315,25 +316,8 @@ def ks_two_sample(
     per_value = df.groupBy(F.col(value_col).alias("v")).agg(
         F.sum(in_a).alias("ca"), F.sum(1 - in_a).alias("cb")
     )
-    # approxQuantile is its own ACTION: without materialization it executes
-    # the whole per-value aggregation subtree once for the boundary sketch
-    # and the main query executes it again (r12 profile: a full extra
-    # scan+aggregate pass per query in this family). The distinct-value
-    # frame is the small side, so one eager checkpoint feeds both.
-    if not per_value.isStreaming:
-        per_value = per_value.localCheckpoint(eager=True)
-    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bnds = (
-        sorted(set(per_value.stat.approxQuantile("v", probs, 0.001))) if probs else []
-    )
-    if bnds:
-        bnd_arr = F.array(*[F.lit(float(b)) for b in bnds])
-        bucketed = per_value.withColumn(
-            "__b", F.size(F.filter(bnd_arr, lambda b: b <= F.col("v")))
-        )
-    else:
-        bucketed = per_value.withColumn("__b", F.lit(0))
+    per_value, bucket, _ = quantile_buckets(per_value, "v")
+    bucketed = per_value.withColumn("__b", bucket)
     w_intra = (
         Window.partitionBy("__b").orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -390,25 +374,8 @@ def mann_whitney_u(
     per_value = filtered.groupBy(F.col(value_col).alias("v")).agg(
         F.sum(in_a).alias("ca"), F.sum(1 - in_a).alias("cb")
     )
-    # approxQuantile is its own ACTION: without materialization it executes
-    # the whole per-value aggregation subtree once for the boundary sketch
-    # and the main query executes it again (r12 profile: a full extra
-    # scan+aggregate pass per query in this family). The distinct-value
-    # frame is the small side, so one eager checkpoint feeds both.
-    if not per_value.isStreaming:
-        per_value = per_value.localCheckpoint(eager=True)
-    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bnds = (
-        sorted(set(per_value.stat.approxQuantile("v", probs, 0.001))) if probs else []
-    )
-    if bnds:
-        bnd_arr = F.array(*[F.lit(float(b)) for b in bnds])
-        bucketed = per_value.withColumn(
-            "__b", F.size(F.filter(bnd_arr, lambda b: b <= F.col("v")))
-        )
-    else:
-        bucketed = per_value.withColumn("__b", F.lit(0))
+    per_value, bucket, _ = quantile_buckets(per_value, "v")
+    bucketed = per_value.withColumn("__b", bucket)
     w_intra = (
         Window.partitionBy("__b")
         .orderBy("v")
@@ -484,25 +451,8 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
         F.col(value_col).alias("v"), F.col(group_col).alias("g")
     ).agg(F.count(F.lit(1)).alias("c"))
     per_value = per_vg.groupBy("v").agg(F.sum("c").alias("t"))
-    # approxQuantile is its own ACTION: without materialization it executes
-    # the whole per-value aggregation subtree once for the boundary sketch
-    # and the main query executes it again (r12 profile: a full extra
-    # scan+aggregate pass per query in this family). The distinct-value
-    # frame is the small side, so one eager checkpoint feeds both.
-    if not per_value.isStreaming:
-        per_value = per_value.localCheckpoint(eager=True)
-    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bnds = (
-        sorted(set(per_value.stat.approxQuantile("v", probs, 0.001))) if probs else []
-    )
-    if bnds:
-        bnd_arr = F.array(*[F.lit(float(b)) for b in bnds])
-        bucketed = per_value.withColumn(
-            "__b", F.size(F.filter(bnd_arr, lambda b: b <= F.col("v")))
-        )
-    else:
-        bucketed = per_value.withColumn("__b", F.lit(0))
+    per_value, bucket, _ = quantile_buckets(per_value, "v")
+    bucketed = per_value.withColumn("__b", bucket)
     w_intra = (
         Window.partitionBy("__b")
         .orderBy("v")
@@ -632,7 +582,6 @@ def kendall_tau_b(
     Columns: ``n_units`` (entities paired), ``conc``, ``disc``, ``tau_b``.
     """
     from ..operators.dedup import md5_token_hash64
-    from ..operators.skew import auto_sample_mod, cheap_row_count
 
     u = df.select(F.col(id_col).alias("__id"), F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
     if isinstance(hash_sample_mod, str):

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregations import decimal_sum
+from ..operators.skew import materialize
 
 
 class IncrementalRollup:
@@ -67,7 +68,8 @@ class IncrementalRollup:
             ).alias("max"),
         )
         # break the growing lineage chain: the state is one row per key
-        self.state = merged.localCheckpoint(eager=True)
+        # (held in executor storage: a release between merges loses it)
+        self.state = materialize(merged)
 
     def finalize(self) -> DataFrame:
         if self.state is None:
