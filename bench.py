@@ -231,7 +231,11 @@ def main() -> None:
     # Warmup: run the flagship once to pay JVM/codegen/IO-cache startup.
     CORPUS[names[0]].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
 
+    # classes Janino compiled: a rep that recompiles is paying codegen, not
+    # execution, and shows here without a profiler
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     runs: dict[str, list[float]] = {n: [] for n in names}
+    compiles: dict[str, list[int]] = {n: [] for n in names}
     for _ in range(repeats):
         # clear session-shared materializations (t2/t10's pair graph, the
         # covis edges) so every repeat pays the true cost once, like a fresh
@@ -243,9 +247,11 @@ def main() -> None:
 
         _corpus.clear_pair_graph_cache()
         for name in names:
+            c0 = codegen.getCount()
             t0 = time.perf_counter()
             CORPUS[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             runs[name].append(round(time.perf_counter() - t0, 3))
+            compiles[name].append(codegen.getCount() - c0)
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -255,17 +261,16 @@ def main() -> None:
     timings = {n: median(ts) for n, ts in runs.items()}
     timings_min = {n: min(ts) for n, ts in runs.items()}
     total = round(sum(timings.values()), 3)
-    # Round-12 measurement-capture fix (VERDICT item 3, explicitly noted in
-    # OPTIMIZATION_r12.md): the per-query `runs` arrays (155 queries × 3)
-    # grew the contract line past the driver's tail buffer and truncated
-    # r10's capture mid-JSON, killing round-over-round comparison. They now
-    # land in the BENCH_RUNS.json sidecar next to this script; the printed
-    # ONE-LINE contract keeps every historical key ("queries", "value",
-    # "queries_min", "total_min", "repeats", "sf") with unchanged meaning
-    # and methodology — only the bulky raw-runs key moved out.
+    # The per-query reps live in the BENCH_RUNS.json sidecar, so the printed
+    # contract stays one short line. Written to a temp file and renamed, so
+    # a crash never leaves half a file.
     sidecar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_RUNS.json")
-    with open(sidecar, "w") as f:
-        json.dump({"repeats": repeats, "sf": float(sf), "runs": runs}, f)
+    tmp = f"{sidecar}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(
+            {"repeats": repeats, "sf": float(sf), "runs": runs, "codegen_compiles": compiles}, f
+        )
+    os.replace(tmp, sidecar)
     print(
         json.dumps(
             {

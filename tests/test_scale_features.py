@@ -117,3 +117,37 @@ def test_widen_gate_fires_on_a_cluster_narrower_than_min_tasks(spark, tmp_path):
     assert widened.rdd.getNumPartitions() == 2
     # too little work for min_tasks tasks: left alone
     assert widen_narrow_scan(one_file, target=2, rows_per_task=32) is one_file
+
+
+def test_widen_gate_skips_footers_when_already_wide(spark, tmp_path, monkeypatch):
+    """Without a per-row cost, a scan already as wide as the target is
+    returned before any footer is read."""
+    from youbike_etl_pipeline_spark.operators import skew
+
+    def no_footers(files):
+        raise AssertionError("footers read for an already-wide scan")
+
+    out = str(tmp_path / "three_files.parquet")
+    spark.range(30).repartition(3).write.parquet(out)
+    wide = spark.read.parquet(out)
+    assert len(wide.inputFiles()) == 3
+    monkeypatch.setattr(skew, "_footer_rows", no_footers)
+    assert skew.widen_narrow_scan(wide, target=3) is wide
+
+
+def test_widen_gate_survives_a_corrupt_footer(spark, tmp_path, monkeypatch):
+    """A footer pyarrow cannot parse falls back to widening by file count
+    instead of failing query construction."""
+    from pyarrow.lib import ArrowInvalid
+
+    from youbike_etl_pipeline_spark.operators import skew
+
+    def corrupt(files):
+        raise ArrowInvalid("Parquet magic bytes not found in footer")
+
+    out = str(tmp_path / "one_file.parquet")
+    spark.range(64).coalesce(1).write.parquet(out)
+    one_file = spark.read.parquet(out)
+    monkeypatch.setattr(skew, "_footer_rows", corrupt)
+    widened = skew.widen_narrow_scan(one_file, target=2)
+    assert widened.rdd.getNumPartitions() == 2

@@ -153,8 +153,13 @@ def widen_narrow_scan(
     # widening only on few-file inputs, the pathology this guards.
     files = df.inputFiles()
     width = len(files) if files else df.rdd.getNumPartitions()
+    if rows_per_task is None and width >= tgt:
+        # the footers could only raise the width: already wide enough
+        return df
     rows = None
     if files and all(f.endswith(".parquet") for f in files):
+        from pyarrow import ArrowInvalid
+
         try:
             rows = _footer_rows(files)
             # a single LARGE file is still split into byte-range scan
@@ -167,9 +172,9 @@ def widen_narrow_scan(
                 spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
             )
             width = max(width, -(-total_bytes // max_split))
-        except OSError:
-            # remote scheme / unreadable footer: fall back to the
-            # conservative widen-by-file-count decision
+        except (OSError, ArrowInvalid):
+            # remote scheme / unreadable or corrupt footer: fall back to
+            # the conservative widen-by-file-count decision
             rows = None
     wanted = tgt
     if rows_per_task is not None and rows is not None:
@@ -187,7 +192,8 @@ def widen_narrow_scan(
 def _footer_rows(files: list[str]) -> int:
     """Total rows from the parquet FOOTERS of ``files`` (paths or
     ``file://`` URIs): no data pages, no Spark job. A remote scheme (s3://,
-    hdfs://) or an unreadable footer raises ``OSError``."""
+    hdfs://) or an unreadable footer raises ``OSError``; a corrupt one raises
+    pyarrow's ``ArrowInvalid``."""
     import pyarrow.parquet as _pq
 
     return sum(

@@ -61,59 +61,6 @@ def register(
     return deco
 
 
-#: Queries the driver has ACTUALLY hash-verified green (union of
-#: CORRECTNESS_r01/r02/r03.json hash_match==true rows — nothing else; the
-#: round-2 advice flagged that the old R1_VERIFIED set wrongly contained the
-#: six round-1 hash FAILURES).
-DRIVER_GREEN: frozenset[str] = frozenset(
-    {
-        "a10_argmax_peak_hour", "a12_count_distinct",
-        "a13_percent_rank_cume_dist", "a15_weighted_mean", "a17_having_filter",
-        "a18_bool_aggregates", "a19_grouping_sets", "a1_tpch_q1_pricing_summary",
-        "a3_describe_block", "a5_top1_event_type_per_user",
-        "a6_pivot_user_hour_profile", "a6b_unpivot_melt", "a7_crosstab_counts",
-        "a7b_crosstab_normalized", "a8_crosstab_row_totals",
-        "a9_rollup_hierarchy", "a9b_cube_hierarchy", "cdc_merge_upsert",
-        "dq2_iqr_outliers", "dq_check_unique", "f13_minmax_scale",
-        "f1_f2_tz_normalize", "f4_haversine_distance", "f5_f6_bucket_and_label",
-        "f8_f10_string_functions", "flagship_segment_health",
-        "gold_wide_pipeline", "j1_fact_dim_revenue", "j2_hour_bucket_join",
-        "j4_anti_join_customers_without_orders", "j4b_semi_join_active_customers",
-        "j5_nearest_neighbor_join", "j6_lookup_join", "j7_asof_join",
-        "j8_range_band_join", "j9_null_safe_join", "m10_histogram_bins",
-        "m10b_group_quartiles", "m12_median_absolute_deviation",
-        "m1_group_confidence_intervals", "m2_m3_welch_ttest",
-        "m5_tukey_hsd_pairs", "m7_simple_ols", "m9_moment_stats",
-        "p10_ffill_per_series", "p11_interpolate_linear", "p12_try_cast_json",
-        "p1_p2_project_rename", "p4_dedup_by_key", "p5_distinct_pairs",
-        "p6_filter_predicates", "p9_null_fill_coalesce", "q3_shipping_priority",
-        "q5_local_supplier_volume", "s1_cosine_topk", "s2_embedding_near_dup",
-        "s3_lsh_ann_buckets", "s5_topk_per_query", "set_operations",
-        "sq_correlated_exists", "sq_scalar_subquery",
-        "st1_streaming_hourly_counts", "st2_streaming_dedup",
-        "st3_streaming_session_window", "st5_stream_stream_join",
-        "t10_dedup_clusters", "t1_exact_dedup", "t2_ngram_jaccard_pairs",
-        "t4_lang_id_confusion", "t6_quality_scores", "t9_levenshtein_pairs",
-        "w10_sliding_windows", "w11_stratified_systematic_sample",
-        "w12_time_range_frame", "w13_first_last_value", "w14_longest_streak",
-        "w1_lag_delta_per_user", "w2_sequence_windows",
-        "w4_w5_calendar_buckets", "w6_rank_within_group",
-        "w7_systematic_sample", "w8_top_k_limit", "w9_sessionization",
-        "window_frames",
-        # r3 first-greens / re-greens (CORRECTNESS_r03.json hash_match rows)
-        "a14_sorted_array_agg", "dq3_table_diff", "dq_validate_constraints",
-        "f12_clamp_round", "f_json_struct", "m11_ks_two_sample",
-        "m4_anova_oneway", "m6_chi_square_independence",
-        "mm1_multimodal_binary", "q13_customer_order_distribution",
-        "q18_large_volume_customers", "q20_supplier_part_chain", "s4_ivf_topk",
-        "skew_salted_agg", "st4_stateful_running_max", "st6_foreachbatch_upsert",
-        "t11_text_normalize", "t12_train_val_test_split", "t13_kfold_assignment",
-        "t14_word_token_count", "t15_pii_masking", "t16_contamination_check",
-        "t17_repetition_ratio", "t18_char_entropy", "t19_bigram_lm",
-        "t3_token_stats", "t5_char_fingerprint", "t8_simhash_pairs",
-    }
-)
-
 #: Queries whose Spark fn or oracle SQL changed THIS round — front-loaded so
 #: the driver re-grades exactly what changed (round-2 advice: never rotate a
 #: changed query out of the verification window). Round 4: the driver

@@ -6,6 +6,15 @@ and tz-normalization sanity — reference normalizes Asia/Taipei → UTC at inge
 ``etl_job.py:106-109``), Arrow enabled for the pandas-UDF slow path, and a
 shuffle-partition count sized to the machine instead of the 200 default.
 
+Generated code is compiled once per session: Spark keeps each whole-stage
+class in an LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries
+(default 100), and on small, driver-bound queries compiling the plan costs
+more CPU than running it. One pass of the similarity workload generates ~250
+distinct classes and the whole oracle-bearing corpus ~3.6k, so the default
+cache evicts everything between passes and every rerun recompiles.
+:data:`CODEGEN_CACHE_ENTRIES` holds the corpus working set with headroom;
+its bounded Metaspace cost is tens of MB.
+
 At cluster scale the same builder is used with ``master`` unset (picked up from
 spark-submit) — nothing here is local-mode-specific except the defaults.
 """
@@ -17,6 +26,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+#: Generated-class cache size. A static conf: it takes effect only when set
+#: before the JVM's first codegen, as building the session here does.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -36,6 +48,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
