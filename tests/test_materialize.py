@@ -35,6 +35,35 @@ def test_local_checkpoint_only_inside_materialize():
     assert not offenders, offenders
 
 
+@pytest.mark.parametrize(
+    "needle,owner",
+    [("__m_a", "_expand_collapsed_pairs"), ('.alias("__member")', "_exact_collapse")],
+)
+def test_collapse_and_expand_have_one_owner(needle, owner):
+    """The near-duplicate operators share one exact-duplicate collapse and
+    one pair expansion: their marker strings appear in the package only
+    inside the owning helper of ``operators/dedup.py``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "youbike_etl_pipeline_spark"
+    dedup = pkg / "operators" / "dedup.py"
+    fn = next(
+        n
+        for n in ast.parse(dedup.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == owner
+    )
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        for lineno, line in enumerate(path.read_text().splitlines(), 1):
+            if needle not in line:
+                continue
+            if path == dedup and fn.lineno <= lineno <= fn.end_lineno:
+                continue
+            offenders.append(f"{path.relative_to(pkg)}:{lineno}")
+    assert not offenders, offenders
+
+
 def test_materialize_passes_streaming_frames_through(spark):
     stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     assert materialize(stream) is stream

@@ -8,8 +8,8 @@ current queries() export order:
 
   position  query  latest-grade-round  status-at-that-grade
 
-so each round's window budgeting (CHANGED_THIS_ROUND + never-graded +
-REGRADE_FIRST <= ~50 slots) stops needing hand-computed set differences.
+so each round's window budgeting (CHANGED_THIS_ROUND + never-graded
+<= ~50 slots) stops needing hand-computed set differences.
 `--by-round` prints the histogram + the stalest-first tail instead.
 """
 

@@ -1,15 +1,17 @@
-"""Round-11 optimization profiler.
+"""Per-query profiler.
 
 Runs named corpus queries exactly the way bench.py does (same session
 factory, same noop sink, same env contract), but additionally:
 
-  * writes ``.explain("formatted")`` to plans/r11/<name>_<tag>.txt
-  * labels each run with setJobDescription and, with the UI enabled,
-    pulls per-job / per-stage wall-clock + shuffle metrics from the
-    REST API so the time can be attributed to operators.
+  * writes ``.explain("formatted")`` to plans/query_profile/<name>_<tag>.txt
+  * labels each run with setJobGroup and, with the UI enabled, pulls
+    per-job wall-clock from the REST API (port from the bound
+    ``sc.uiWebUrl``) so time can be attributed to operators; jobs without
+    a ``completionTime`` are skipped rather than scored 0.0, so they
+    cannot skew the "fastest rep" pick.
 
 Usage:
-  python tools/profile_r11.py [--tag before] [--reps 3] [--no-stages] q1 q2 ...
+  python tools/query_profile.py [--tag before] [--reps 3] [--no-stages] q1 q2 ...
 
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py.
 """
@@ -28,9 +30,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS  # noqa: E402
 from youbike_etl_pipeline_spark.session import get_spark  # noqa: E402
 
+UI_BASE = "http://localhost:4040"
+
 
 def rest(path: str):
-    with urllib.request.urlopen(f"http://localhost:4040/api/v1/{path}") as r:
+    with urllib.request.urlopen(f"{UI_BASE}/api/v1/{path}") as r:
         return json.loads(r.read())
 
 
@@ -43,10 +47,15 @@ def main() -> None:
     ap.add_argument("--no-plans", action="store_true")
     args = ap.parse_args()
 
+    global UI_BASE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="profile_r11", extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="query_profile", extra_conf={"spark.ui.enabled": "true"})
     sc = spark.sparkContext
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r11")
+    if sc.uiWebUrl:
+        UI_BASE = sc.uiWebUrl
+    plans_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "query_profile"
+    )
     os.makedirs(plans_dir, exist_ok=True)
 
     # warmup (pay JVM/codegen startup outside the measured loop)
@@ -65,7 +74,6 @@ def main() -> None:
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
         times = []
-        first_job = None
         for rep in range(args.reps):
             sc.setJobGroup(f"{name}/{rep}", f"{name} rep{rep}")
             t0 = time.perf_counter()
@@ -76,11 +84,16 @@ def main() -> None:
         if not args.no_stages:
             try:
                 jobs = rest(f"applications/{app_id}/jobs?status=succeeded")
-                mine = [j for j in jobs if (j.get("jobGroup") or "").startswith(name + "/")]
+                mine = [
+                    j
+                    for j in jobs
+                    if (j.get("jobGroup") or "").startswith(name + "/")
+                    and j.get("completionTime")  # skip unfinished/unparsed
+                ]
                 by_rep: dict[str, list] = {}
                 for j in mine:
                     by_rep.setdefault(j["jobGroup"], []).append(j)
-                # report the fastest rep's job breakdown
+                # report the fastest COMPLETE rep's job breakdown
                 best = min(by_rep.values(), key=lambda js: sum(_dur(j) for j in js), default=[])
                 rec["jobs"] = [
                     {
@@ -96,7 +109,7 @@ def main() -> None:
                 rec["jobs_err"] = str(ex)[:120]
         out[name] = rec
         print(f"{name}: min {rec['min']}s runs {times} jobs/run {rec.get('n_jobs_per_run')}", flush=True)
-    json.dump(out, open("/tmp/profile_r11_last.json", "w"), indent=1)
+    json.dump(out, open("/tmp/query_profile_last.json", "w"), indent=1)
 
 
 def _dur(j) -> float:

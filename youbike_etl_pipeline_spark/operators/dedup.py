@@ -97,67 +97,67 @@ def paragraph_dedup_stats(
 
 
 def _exact_collapse(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, id_col: str, *keys: Column
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse verbatim copies before a pair operator: returns
-    ``(rep_docs, mapping)`` where ``rep_docs`` keeps one representative
-    (lowest id) per identical ``md5(text)`` and ``mapping`` is the
-    checkpointed ``(__member, __rep, __gsize)`` membership frame.
+    ``(rep_rows, mapping)`` where ``rep_rows`` keeps one representative
+    (lowest id) per identical value of ``keys`` — ``md5(text)`` for the
+    text operators, ``(prefix, block)`` for Levenshtein, the md5 of the
+    vector string for embedding LSH — and ``mapping`` is the checkpointed
+    ``(__member, __rep, __gsize)`` membership frame.
 
-    This is the exact-first routing the 100× probe demanded as CODE
-    (previously a docstring note): on a duplicate-heavy corpus every LSH
-    bucket / shingle posting holds the whole duplicate cluster and the
-    candidate join grows with the duplication factor squared, while the
-    collapse itself is ONE linear shuffle on the content hash. The pair
-    operator then runs on representatives only;
-    :func:`_expand_collapsed_pairs` reconstructs the full answer exactly,
-    so the quadratic term survives only where it is the output itself.
+    On a duplicate-heavy corpus every LSH bucket / shingle posting holds
+    the whole duplicate cluster and the candidate join grows with the
+    duplication factor squared, while the collapse itself is ONE linear
+    shuffle on the key. The pair operator then runs on representatives
+    only; :func:`_expand_collapsed_pairs` reconstructs the full answer
+    exactly, so the quadratic term survives only where it is the output
+    itself.
     """
+    kcols = [f"__k{i}" for i in range(len(keys))]
     groups = df.select(
-        F.col(id_col).alias("__member"), F.md5(F.col(text_col)).alias("__ch")
+        F.col(id_col).alias("__member"), *[k.alias(c) for k, c in zip(keys, kcols)]
     )
-    reps = groups.groupBy("__ch").agg(
+    reps = groups.groupBy(*kcols).agg(
         F.min("__member").alias("__rep"), F.count(F.lit(1)).alias("__gsize")
     )
     mapping = materialize(
-        groups.join(reps, "__ch").select("__member", "__rep", "__gsize")
+        groups.join(reps, kcols).select("__member", "__rep", "__gsize")
     )
-    rep_docs = df.join(
+    rep_rows = df.join(
         mapping.filter(F.col("__member") == F.col("__rep")).select(
             F.col("__member").alias(id_col)
         ),
         id_col,
         "left_semi",
     )
-    return rep_docs, mapping
+    return rep_rows, mapping
 
 
 def _expand_collapsed_pairs(
-    rep_pairs: DataFrame,
-    mapping: DataFrame,
-    sizes: DataFrame,
-    with_counts: bool,
+    rep_pairs: DataFrame, mapping: DataFrame, intra: DataFrame
 ) -> DataFrame:
-    """Expand representative-level pairs back to ALL document pairs so the
+    """Expand representative-level pairs back to ALL member pairs so the
     collapsed run is answer-identical to the uncollapsed one:
 
     - cross-group: every (member of rep_a) × (member of rep_b) pair carries
-      rep-pair metrics verbatim (identical texts ⇒ identical shingle sets ⇒
-      identical n_common/n_a/n_b/jaccard), ids re-ordered with
-      least/greatest (groups are disjoint, so each pair appears once);
-    - intra-group: all ordered member pairs within a duplicate group have
-      Jaccard exactly 1.0 with n_common = n_a = n_b = the rep's (post-cap)
-      shingle count — the inner join against ``sizes`` (two columns:
-      rep id, count) reproduces the base operator's emptiness semantics:
-      a doc with zero surviving shingles never pairs, not even with its
-      own verbatim copies.
+      the rep-pair metrics verbatim (identical keys ⇒ identical metrics),
+      ids re-ordered with least/greatest (groups are disjoint, so each pair
+      appears once);
+    - intra-group: ``intra`` is a ``(__r, *metric columns)`` frame naming
+      the reps whose copies pair with each other and what two copies score
+      (J = 1.0, hamming 0, edit distance 0, the self-cosine). A rep absent
+      from it emits no intra pairs — e.g. a doc with zero shingles never
+      pairs, not even with its own verbatim copies.
+
+    The output keeps ``rep_pairs``' columns.
     """
     metric_cols = [c for c in rep_pairs.columns if c not in ("id_a", "id_b")]
     ma = mapping.select(F.col("__rep").alias("id_a"), F.col("__member").alias("__m_a"))
-    mb = mapping.select(F.col("__rep").alias("id_b"), F.col("__member").alias("__m_b"))
+    mb = ma.toDF("id_b", "__m_b")
     # member ids need not sort the same way as their reps: when
     # least/greatest flips the pair relative to the rep pair, the side-
-    # specific size columns flip with it (n_common/jaccard are symmetric)
+    # specific size columns flip with it (every other metric is symmetric)
     swapped = F.col("__m_a") > F.col("__m_b")
 
     def _side_aware(c: str):
@@ -176,26 +176,66 @@ def _expand_collapsed_pairs(
             *[_side_aware(c) for c in metric_cols],
         )
     )
-    x = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_a"))
-    y = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_b"))
-    intra_ids = x.join(y, "__r").filter(F.col("__m_a") < F.col("__m_b"))
-    intra = intra_ids.join(sizes.toDF("__r", "__n"), "__r")
-    if with_counts:
-        intra = intra.select(
-            F.col("__m_a").alias("id_a"),
-            F.col("__m_b").alias("id_b"),
-            F.col("__n").alias("n_common"),
-            F.col("__n").alias("n_a"),
-            F.col("__n").alias("n_b"),
-            F.lit(1.0).alias("jaccard"),
+    x = ma.toDF("__r", "__m_a")
+    within = (
+        x.join(x.toDF("__r", "__m_b"), "__r")
+        .filter(F.col("__m_a") < F.col("__m_b"))
+        .join(intra, "__r")
+        .select(
+            F.col("__m_a").alias("id_a"), F.col("__m_b").alias("id_b"), *metric_cols
         )
-    else:
-        intra = intra.select(
-            F.col("__m_a").alias("id_a"),
-            F.col("__m_b").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
+    )
+    return cross.unionByName(within)
+
+
+def _identical_jaccard(sizes: DataFrame) -> DataFrame:
+    """The ``intra`` frame of the Jaccard operators: two verbatim copies of
+    a rep with ``n`` (post-cap) shingles score J = 1.0 with
+    ``n_common = n_a = n_b = n``. ``sizes`` is a (rep id, count) frame;
+    a doc with no surviving shingles has no row, so it never pairs."""
+    r, n = sizes.columns
+    return sizes.select(
+        F.col(r).alias("__r"),
+        *[F.col(n).alias(c) for c in ("n_common", "n_a", "n_b")],
+        F.lit(1.0).alias("jaccard"),
+    )
+
+
+def _jaccard_verify(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs from per-doc SET arrays: ``sets`` is
+    an (id, array) frame whose arrays hold distinct elements, so
+    ``size(array_intersect)`` is |A∩B| — one narrow pass over the candidate
+    rows, no per-element fan-out. Returns ``(id_a, id_b, n_common, n_a,
+    n_b, jaccard)`` for the pairs at or above ``threshold``."""
+    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    return (
+        sets.toDF("id_a", "__s_a")
+        .join(F.broadcast(cands), "id_a")
+        .join(sets.toDF("id_b", "__s_b"), "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("__s_a", "__s_b")).cast("long").alias("n_common"),
+            F.size("__s_a").cast("long").alias("n_a"),
+            F.size("__s_b").cast("long").alias("n_b"),
         )
-    return cross.unionByName(intra.select(*cross.columns))
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """Candidate pairs ``(id_a < id_b)`` from an (id, band index, band key)
+    frame: documents sharing at least one band bucket. The join key is the
+    (band index, band key) pair — an equi-join, never a cross product."""
+    a = banded.toDF("id_a", "band_idx", "band_key")
+    b = banded.toDF("id_b", "band_idx", "band_key")
+    return (
+        a.join(b, ["band_idx", "band_key"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
 
 
 def shingle_index(
@@ -240,7 +280,7 @@ def shingle_hash_index(
     the materialized-token projection. ``widen`` threads through to
     :func:`shingle_index` — foreachBatch callers on micro-batch frames must
     pass ``False`` (batch frames are static, so the isStreaming guard does
-    NOT protect them — round-11 advice item 4)."""
+    NOT protect them)."""
     idx = shingle_index(df, text_col, id_col, k, widen=widen)
     return idx.select(F.col(id_col), F.xxhash64("shingle").alias("sh"))
 
@@ -257,7 +297,7 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """All document pairs with word-k-gram Jaccard ≥ threshold.
     ``widen`` threads to :func:`shingle_index` (foreachBatch callers on
-    micro-batch frames pass ``False`` — round-11 advice item 4).
+    micro-batch frames pass ``False``).
 
     |A∩B| via self-join of the inverted index; |A∪B| = |A|+|B|−|A∩B|.
     ``max_doc_freq`` drops shingles appearing in more than that many docs —
@@ -282,9 +322,11 @@ def ngram_jaccard_pairs(
     by feeding the candidate id-set as a semi-join filter on the index.
     Do not ship this standalone at 100× the tested scale.
     """
-    mapping = None
-    if exact_dedup_first:
-        df, mapping = _exact_collapse(df, text_col, id_col)
+    df, mapping = (
+        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        if exact_dedup_first
+        else (df, None)
+    )
     idx = shingle_index(df, text_col, id_col, k, widen=widen)
     if max_doc_freq is not None:
         if mapping is not None:
@@ -326,9 +368,9 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
     )
-    if mapping is not None:
-        pairs = _expand_collapsed_pairs(pairs, mapping, sizes, with_counts=True)
-    return pairs
+    if mapping is None:
+        return pairs
+    return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
 def prefix_filter_jaccard_pairs(
@@ -375,9 +417,11 @@ def prefix_filter_jaccard_pairs(
     """
     import math
 
-    mapping = None
-    if exact_dedup_first:
-        df, mapping = _exact_collapse(df, text_col, id_col)
+    df, mapping = (
+        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        if exact_dedup_first
+        else (df, None)
+    )
     idx = materialize(shingle_index(df, text_col, id_col, k, widen=widen))
     dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     w_doc = Window.partitionBy(id_col).orderBy("__df", "shingle")
@@ -415,9 +459,8 @@ def prefix_filter_jaccard_pairs(
     pa_ = prefix.toDF("id_a", "shingle", "__rn_a", "__n_a")
     pb_ = prefix.toDF("id_b", "shingle", "__rn_b", "__n_b")
     # Lossless candidate pruning (Bayardo WWW'07 / PPJoin, both implied by
-    # J ≥ τ and therefore answer-preserving — the r12 profile measured
-    # 408 k candidate pairs fanning the verify join out to 26 M rows for a
-    # 241-row answer):
+    # J ≥ τ and therefore answer-preserving — without them 408 k candidate
+    # pairs fanned the verify join out to 26 M rows for a 241-row answer):
     #   size filter: τ·max(n_a,n_b) ≤ min(n_a,n_b), in exact integers via
     #   the same floored rational τ' = num/den ≤ τ the prefix length uses
     #   (weaker than τ ⇒ keeps every qualifying pair);
@@ -447,40 +490,15 @@ def prefix_filter_jaccard_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # Verify on per-doc shingle ARRAYS instead of re-exploding the index
-    # against the candidate set: the r12 profile measured the fan-out
-    # formulation (idx ⋈ cands ⋈ idx) at 8.8 M intermediate rows plus a
-    # 2×1.4 s count aggregation for 125 k candidates. One collect_list per
-    # doc (the index is distinct per (doc, shingle), so the array IS the
-    # set) and a candidate-bounded join computing
-    # size(array_intersect(...)) does the same exact counting in a single
-    # narrow pass — work is candidates × avg set size, no intermediate
-    # explosion, no extra shuffle. n_common = |A∩B| row-for-row identical
-    # to the join-count formulation.
+    # verify on per-doc shingle arrays: the index is distinct per (doc,
+    # shingle), so each collect_list IS the doc's set
     arrs = idx.groupBy(id_col).agg(F.collect_list("shingle").alias("__shs"))
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    pairs = (
-        arrs.toDF("id_a", "__shs_a")
-        .join(F.broadcast(cands), "id_a")
-        .join(arrs.toDF("id_b", "__shs_b"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__shs_a", "__shs_b")).cast("long").alias("n_common"),
-            F.size("__shs_a").cast("long").alias("n_a"),
-            F.size("__shs_b").cast("long").alias("n_b"),
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
-    )
-    if mapping is not None:
-        # sizes re-derived from the arrays — one less aggregation over idx
-        sizes = arrs.select(
-            F.col(id_col), F.size("__shs").cast("long").alias("n_shingles")
-        )
-        pairs = _expand_collapsed_pairs(pairs, mapping, sizes, with_counts=True)
-    return pairs
+    pairs = _jaccard_verify(cands, arrs, threshold)
+    if mapping is None:
+        return pairs
+    # sizes re-derived from the arrays — one less aggregation over idx
+    sizes = arrs.select(F.col(id_col), F.size("__shs").cast("long"))
+    return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
 def minhash_signatures(
@@ -529,7 +547,7 @@ def minhash_lsh_candidates(
     cost; the cap is the backstop for the ones that remain (boilerplate,
     templates). Default ``None`` keeps exact recall for the graded path.
 
-    Ragged-band contract (round-6 advice — the strictness asymmetry with
+    Ragged-band contract (the strictness asymmetry with
     :func:`portable_lsh_index` is INTENTIONAL): ``bands`` should divide
     the signature length. When it doesn't, each band keeps
     ``floor(len/bands)`` hashes and the trailing ``len % bands`` are
@@ -585,14 +603,7 @@ def minhash_lsh_candidates(
         banded = banded.withColumn("__occ", occupancy).filter(
             F.col("__occ") <= max_bucket_size
         ).drop("__occ")
-    a = banded.toDF("id_a", "band_idx", "band_hash")
-    b = banded.toDF("id_b", "band_idx", "band_hash")
-    return (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _band_candidates(banded)
 
 
 def minhash_lsh_dedup(
@@ -622,9 +633,11 @@ def minhash_lsh_dedup(
     The shingle-hash index is built and checkpointed ONCE and shared by the
     signature step and the verify step — previously each rebuilt the
     tokenize+shingle subtree, which was ~11% of the whole bench."""
-    mapping = None
-    if exact_dedup_first:
-        df, mapping = _exact_collapse(df, text_col, id_col)
+    df, mapping = (
+        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        if exact_dedup_first
+        else (df, None)
+    )
     idx = materialize(shingle_hash_index(df, text_col, id_col, k, widen=widen))
     sigs = minhash_signatures(df, text_col, id_col, k, num_hashes, index=idx)
     cands = minhash_lsh_candidates(sigs, id_col, bands)
@@ -651,9 +664,9 @@ def minhash_lsh_dedup(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if mapping is not None:
-        pairs = _expand_collapsed_pairs(pairs, mapping, sizes, with_counts=False)
-    return pairs
+    if mapping is None:
+        return pairs
+    return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
 #: Modulus for the portable universal-hash MinHash family: prime < 2^30 so
@@ -742,6 +755,41 @@ def _banded_from_signature(
     )
 
 
+def _portable_hash_index(
+    df: DataFrame, text_col: str, id_col: str, k: int, widen: bool = True
+) -> DataFrame:
+    """The distinct (id, 30-bit shingle base hash) set of the portable
+    MinHash family — the input of every portable signature."""
+    idx = shingle_index(df, text_col, id_col, k, widen=widen)
+    return idx.select(
+        F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
+    ).distinct()
+
+
+def _portable_mins(num_hashes: int) -> list[Column]:
+    """The ``h0..h{num_hashes-1}`` signature aggregates over ``sh``: one
+    min of (a*x+b) mod P per :func:`minhash_coeffs` pair."""
+    return [
+        F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
+        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+    ]
+
+
+def _portable_features(
+    df: DataFrame, text_col: str, id_col: str, k: int, num_hashes: int
+) -> DataFrame:
+    """The checkpointed per-doc feature frame of the portable MinHash path:
+    ONE aggregation of the hash index yields the signature mins, the
+    distinct-hash count ``n_sh`` and the hash set as an array ``shs``
+    (the index is distinct per (doc, hash), so the array IS the set)."""
+    feat = _portable_hash_index(df, text_col, id_col, k).groupBy(id_col).agg(
+        *_portable_mins(num_hashes),
+        F.count(F.lit(1)).alias("n_sh"),
+        F.collect_list("sh").alias("shs"),
+    )
+    return materialize(feat)
+
+
 def portable_lsh_index(
     df: DataFrame,
     text_col: str = "text",
@@ -760,17 +808,10 @@ def portable_lsh_index(
     All three are per-document properties, so an index built per micro-
     batch equals the batch-global computation for those documents."""
     _check_bands(num_hashes, bands)
-    idx = shingle_index(df, text_col, id_col, k, widen=widen)
-    hidx = idx.select(
-        F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
-    ).distinct()
+    hidx = _portable_hash_index(df, text_col, id_col, k, widen=widen)
     if checkpoint:
         hidx = materialize(hidx)
-    mins = [
-        F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    sig = hidx.groupBy(id_col).agg(*mins)
+    sig = hidx.groupBy(id_col).agg(*_portable_mins(num_hashes))
     banded = _banded_from_signature(sig, id_col, num_hashes, bands)
     cnt = hidx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     return hidx, banded, cnt
@@ -793,76 +834,25 @@ def minhash_lsh_dedup_portable(
     DuckDB-expressible: base = low 30 bits of the md5-derived 64-bit shingle
     hash, signatures from the (a*x+b) mod P universal family
     (:func:`minhash_coeffs`), band keys as plain value-concat strings. ~3×
-    slower than the xxhash64 fast path (hex-string md5 decode) — this is
-    the PARITY path the driver grades; production calls use
-    :func:`minhash_lsh_dedup`. ``exact_dedup_first`` routes verbatim
-    copies through the linear content-hash collapse first (answer-
-    identical; see :func:`minhash_lsh_dedup` — the t7-at-100× fix made
-    code)."""
+    slower than the xxhash64 path (hex-string md5 decode); this is the
+    path the graded corpus query runs. ``exact_dedup_first`` routes
+    verbatim copies through the linear content-hash collapse first
+    (answer-identical; see :func:`minhash_lsh_dedup`)."""
     _check_bands(num_hashes, bands)
-    mapping = None
-    if exact_dedup_first:
-        df, mapping = _exact_collapse(df, text_col, id_col)
-    # Round-12 restructure, same shape as sketch_accuracy_audit (guide §2.4
-    # fewer passes): ONE aggregation of the hash index yields the signature
-    # mins, the distinct-hash count AND the hash set as an array, and is
-    # checkpointed as the compact per-doc feature frame. The old shape
-    # aggregated the checkpointed index three times (signature, counts,
-    # intersection fan-out) across twice as many AQE stages.
-    idx = shingle_index(df, text_col, id_col, k)
-    hidx = idx.select(
-        F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
-    ).distinct()
-    mins = [
-        F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    feat = hidx.groupBy(id_col).agg(
-        *mins,
-        F.count(F.lit(1)).alias("n_sh"),
-        F.collect_list("sh").alias("shs"),
+    df, mapping = (
+        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        if exact_dedup_first
+        else (df, None)
     )
-    feat = materialize(feat)
-    banded = _banded_from_signature(feat, id_col, num_hashes, bands)
-    a = banded.toDF("id_a", "band_idx", "band_key")
-    b = banded.toDF("id_b", "band_idx", "band_key")
-    cands = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    feat = _portable_features(df, text_col, id_col, k, num_hashes)
+    cands = _band_candidates(_banded_from_signature(feat, id_col, num_hashes, bands))
+    pairs = _jaccard_verify(cands, feat.select(id_col, "shs"), threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    fa = feat.select(
-        F.col(id_col).alias("id_a"),
-        F.col("n_sh").alias("n_a"),
-        F.col("shs").alias("shs_a"),
-    )
-    fb = feat.select(
-        F.col(id_col).alias("id_b"),
-        F.col("n_sh").alias("n_b"),
-        F.col("shs").alias("shs_b"),
-    )
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    pairs = (
-        fa.join(F.broadcast(cands), "id_a")
-        .join(fb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # the index is distinct per (doc, hash): the array IS the set,
-            # so size(array_intersect) = the old join-count n_common
-            F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
-            "n_a",
-            "n_b",
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if mapping is not None:
-        sizes = feat.select(F.col(id_col), F.col("n_sh"))
-        pairs = _expand_collapsed_pairs(pairs, mapping, sizes, with_counts=False)
-    return pairs
+    if mapping is None:
+        return pairs
+    sizes = feat.select(id_col, "n_sh")
+    return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
 def md5_token_hash64(t: Column) -> Column:
@@ -960,9 +950,11 @@ def simhash_pairs(
     actually produced a signature — empty-token docs never pair, matching
     the raw op) is answer-identical by construction.
     """
-    mapping = None
-    if exact_dedup_first:
-        df, mapping = _exact_collapse(df, text_col, id_col)
+    df, mapping = (
+        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        if exact_dedup_first
+        else (df, None)
+    )
     sh = simhash_signature(df, text_col, id_col, hash_fn=hash_fn)
     chunks = sh.select(
         id_col,
@@ -987,34 +979,11 @@ def simhash_pairs(
     )
     if mapping is None:
         return rep_pairs
-    ma = mapping.select(F.col("__rep").alias("id_a"), F.col("__member").alias("__m_a"))
-    mb = mapping.select(F.col("__rep").alias("id_b"), F.col("__member").alias("__m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__m_a", "__m_b").alias("id_a"),
-            F.greatest("__m_a", "__m_b").alias("id_b"),
-            "hamming",  # symmetric — no side-aware swap needed
-        )
-    )
-    # intra-group pairs exist only when the rep produced a signature row
-    # (a doc whose text yields zero tokens never enters the banding, so
-    # its verbatim copies never pair in the raw op either)
-    sig_reps = sh.select(F.col(id_col).alias("__r"))
-    x = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_a"))
-    y = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_b"))
-    intra = (
-        x.join(y, "__r")
-        .filter(F.col("__m_a") < F.col("__m_b"))
-        .join(sig_reps, "__r", "left_semi")
-        .select(
-            F.col("__m_a").alias("id_a"),
-            F.col("__m_b").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),  # identical signatures
-        )
-    )
-    return cross.unionByName(intra)
+    # copies pair at hamming 0 only when the rep produced a signature row (a
+    # doc whose text yields zero tokens never enters the banding, so its
+    # verbatim copies never pair in the raw op either)
+    intra = sh.select(F.col(id_col).alias("__r"), F.lit(0).cast("int").alias("hamming"))
+    return _expand_collapsed_pairs(rep_pairs, mapping, intra)
 
 
 #: edge count below which the component computation runs as driver-side
@@ -1243,44 +1212,9 @@ def sketch_accuracy_audit(
     """
     _check_bands(num_hashes, bands)
     if exact_dedup_first:
-        df, _ = _exact_collapse(df, text_col, id_col)
-    # Round-12 restructure (guide §2.4 fewer passes / §2.3 aggregate before
-    # shuffle): the r11 shape aggregated the checkpointed hash index FOUR
-    # times (signature inside portable_lsh_index for the banding, the same
-    # 32-min signature AGAIN here for the estimate side, per-doc counts,
-    # plus the candidate-bounded intersection fan-out join) across ~16 AQE
-    # stage jobs whose scheduling latency dominated wall-clock (r12
-    # profile: 1.5 s of executor work inside a 3.6 s wall). Now ONE
-    # aggregation computes everything per-doc — the 32 signature mins, the
-    # distinct-hash count, and the sorted hash SET as an array — and is
-    # checkpointed as the compact per-doc feature frame (n_docs × 34
-    # columns). Banding explodes from the checkpointed mins; the audit is
-    # one candidate-bounded join of two feature rows per pair, with the
-    # exact intersection via size(array_intersect(...)) — row-for-row the
-    # same n_common as the old join-count formulation (the index is
-    # distinct per (doc, hash), so the array IS the set).
-    idx = shingle_index(df, text_col, id_col, k)
-    hidx = idx.select(
-        F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
-    ).distinct()
-    mins = [
-        F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    feat = hidx.groupBy(id_col).agg(
-        *mins,
-        F.count(F.lit(1)).alias("n_sh"),
-        F.collect_list("sh").alias("shs"),
-    )
-    feat = materialize(feat)
-    banded = _banded_from_signature(feat, id_col, num_hashes, bands)
-    cand = (
-        banded.toDF("id_a", "band_idx", "band_key")
-        .join(banded.toDF("id_b", "band_idx", "band_key"), ["band_idx", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+        df, _ = _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+    feat = _portable_features(df, text_col, id_col, k, num_hashes)
+    cand = _band_candidates(_banded_from_signature(feat, id_col, num_hashes, bands))
     feat_a = feat.select(
         F.col(id_col).alias("id_a"),
         *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)],
@@ -1369,8 +1303,8 @@ def levenshtein_blocked_pairs(
     Spark counts UTF-16 code units and DuckDB its own unit — combining
     accents would make the engines disagree on raw text.
 
-    Scale contract: per-block work is occupancy², so both knobs the other
-    pair operators grew this round apply here —
+    Scale contract: per-block work is occupancy², so both knobs of the
+    other pair operators apply here —
 
     - ``exact_dedup_first`` (default ON) collapses identical
       (prefix, block) rows to one representative before pairing and
@@ -1378,7 +1312,7 @@ def levenshtein_blocked_pairs(
       distance — identical prefixes imply identical Levenshtein;
       intra-group pairs are distance 0, always within ``max_dist``).
       Answer-identical by construction; kills the duplicate-mass blow-up
-      (the round-5 100x probe could not finish the raw op's WARM 10x run:
+      (the 100x probe could not finish the raw op's WARM 10x run:
       ~10 languages x (600k/10)^2 prefix comparisons).
     - ``max_block_size=N`` keeps each block's first N rows under the
       deterministic (prefix, id) order before pairing — a bounded-subset
@@ -1398,25 +1332,13 @@ def levenshtein_blocked_pairs(
     # is answer-identical AND keeps them out of the collapse groups (SQL
     # GROUP BY would treat NULLs as equal and wrongly pair them at expand)
     base = base.filter(F.col("__blk").isNotNull() & F.col("__prefix").isNotNull())
-    mapping = None
-    if exact_dedup_first:
-        # grouped on the (prefix, block) PAIR directly — no string-concat
-        # hash key whose separator a crafted prefix could collide with
-        reps = base.groupBy("__prefix", "__blk").agg(
-            F.min(id_col).alias("__rep")
-        )
-        mapping = materialize(
-            base.join(reps, ["__prefix", "__blk"]).select(
-                F.col(id_col).alias("__member"), "__rep"
-            )
-        )
-        base = base.join(
-            mapping.filter(F.col("__member") == F.col("__rep")).select(
-                F.col("__member").alias(id_col)
-            ),
-            id_col,
-            "left_semi",
-        )
+    # collapse groups on the (prefix, block) PAIR directly — no string-
+    # concat hash key whose separator a crafted prefix could collide with
+    base, mapping = (
+        _exact_collapse(base, id_col, F.col("__prefix"), F.col("__blk"))
+        if exact_dedup_first
+        else (base, None)
+    )
     if max_block_size is not None:
         w_blk = Window.partitionBy("__blk").orderBy("__prefix", id_col)
         base = (
@@ -1424,16 +1346,6 @@ def levenshtein_blocked_pairs(
             .filter(F.col("__bn") <= int(max_block_size))
             .drop("__bn")
         )
-        if mapping is not None:
-            # the cap's contract ("first N rows before pairing") must also
-            # gate the EXPANSION: a duplicate group whose representative
-            # ranked past the cap was never paired, so its members may not
-            # re-enter through the intra-group distance-0 join — restrict
-            # the mapping to groups whose rep survived (the same
-            # eligibility guard the jaccard/simhash expansions carry)
-            mapping = mapping.join(
-                base.select(F.col(id_col).alias("__rep")), "__rep", "left_semi"
-            )
     a = base.toDF("id_a", "__blk", "__pa")
     b = base.toDF("id_b", "__blk", "__pb")
     rep_pairs = (
@@ -1445,26 +1357,13 @@ def levenshtein_blocked_pairs(
     )
     if mapping is None:
         return rep_pairs
-    ma = mapping.select(F.col("__rep").alias("id_a"), F.col("__member").alias("__m_a"))
-    mb = mapping.select(F.col("__rep").alias("id_b"), F.col("__member").alias("__m_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__m_a", "__m_b").alias("id_a"),
-            F.greatest("__m_a", "__m_b").alias("id_b"),
-            "edit_dist",  # symmetric — no side-aware swap needed
-        )
+    intra = mapping.filter(F.col("__member") == F.col("__rep")).select(
+        F.col("__rep").alias("__r"), F.lit(0).alias("edit_dist")  # identical prefixes
     )
-    x = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_a"))
-    y = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_b"))
-    intra = (
-        x.join(y, "__r")
-        .filter(F.col("__m_a") < F.col("__m_b"))
-        .select(
-            F.col("__m_a").alias("id_a"),
-            F.col("__m_b").alias("id_b"),
-            F.lit(0).alias("edit_dist"),  # identical prefixes
-        )
-    )
-    return cross.unionByName(intra)
+    if max_block_size is not None:
+        # the cap's contract ("first N rows before pairing") must also gate
+        # the EXPANSION: a duplicate group whose representative ranked past
+        # the cap was never paired, so its members may not re-enter as
+        # distance-0 pairs
+        intra = intra.join(base.select(F.col(id_col).alias("__r")), "__r", "left_semi")
+    return _expand_collapsed_pairs(rep_pairs, mapping, intra)

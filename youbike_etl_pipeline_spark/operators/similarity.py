@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity, dot_product
+from .dedup import _exact_collapse, _expand_collapsed_pairs
 from .skew import auto_sample_mod, cheap_row_count, materialize
 
 
@@ -364,21 +365,10 @@ def lsh_near_dup_pairs(
     heavy corpus stops paying occupancy² inside its hot buckets — the s6
     SemDeDup routing made code rather than a SCALING.md note."""
     nz = df.filter(_nonzero_norm(F.col(vec_col)))
-    mapping = None
-    if exact_dedup_first:
-        key = F.md5(
-            F.concat_ws(",", F.transform(F.col(vec_col), lambda x: x.cast("string")))
-        )
-        groups = nz.select(F.col(id_col).alias("__member"), key.alias("__ch"))
-        reps = groups.groupBy("__ch").agg(F.min("__member").alias("__rep"))
-        mapping = materialize(groups.join(reps, "__ch").select("__member", "__rep"))
-        nz = nz.join(
-            mapping.filter(F.col("__member") == F.col("__rep")).select(
-                F.col("__member").alias(id_col)
-            ),
-            id_col,
-            "left_semi",
-        )
+    key = F.md5(
+        F.concat_ws(",", F.transform(F.col(vec_col), lambda x: x.cast("string")))
+    )
+    nz, mapping = _exact_collapse(nz, id_col, key) if exact_dedup_first else (nz, None)
     planes = _hyperplanes(dim, bits, seed)
     bucketed = nz.select(
         F.col(id_col), F.col(vec_col), lsh_bucket(F.col(vec_col), planes).alias("bucket")
@@ -399,36 +389,13 @@ def lsh_near_dup_pairs(
     )
     if mapping is None:
         return pairs
-    # cross-group expansion: cosine is symmetric, so least/greatest
-    # reordering needs no side fix-up (unlike the jaccard size columns)
-    ma = mapping.select(F.col("__rep").alias("id_a"), F.col("__member").alias("__m_a"))
-    mb = mapping.select(F.col("__rep").alias("id_b"), F.col("__member").alias("__m_b"))
-    cross = (
-        pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("__m_a", "__m_b").alias("id_a"),
-            F.greatest("__m_a", "__m_b").alias("id_b"),
-            "cosine",
-        )
-    )
-    # intra-group pairs: self-cosine via the SAME expression (sqrt(n)·sqrt(n)
+    # copies pair at the self-cosine of the SAME expression (sqrt(n)·sqrt(n)
     # rounding), threshold-filtered like any other pair
     selfs = nz.select(
         F.col(id_col).alias("__r"),
         cosine_similarity(F.col(vec_col), F.col(vec_col)).alias("cosine"),
     ).filter(F.col("cosine") >= threshold)
-    x = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_a"))
-    y = mapping.select(F.col("__rep").alias("__r"), F.col("__member").alias("__m_b"))
-    intra = (
-        x.join(y, "__r")
-        .filter(F.col("__m_a") < F.col("__m_b"))
-        .join(selfs, "__r")
-        .select(
-            F.col("__m_a").alias("id_a"), F.col("__m_b").alias("id_b"), "cosine"
-        )
-    )
-    return cross.unionByName(intra)
+    return _expand_collapsed_pairs(pairs, mapping, selfs)
 
 
 def ivf_topk(

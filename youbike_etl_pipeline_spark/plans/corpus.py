@@ -61,69 +61,19 @@ def register(
     return deco
 
 
-#: Queries whose Spark fn or oracle SQL changed THIS round — front-loaded so
-#: the driver re-grades exactly what changed (round-2 advice: never rotate a
-#: changed query out of the verification window). Round 4: the driver
-#: regenerated /root/testdata with events.ts as timestamp[us] (was
-#: TIMESTAMP(NANOS)); the streaming reader and two window queries hardcoded
-#: the nanos assumption and silently regressed (judge-verified red on current
-#: data despite green r2 grades). Both readers now branch on the footer dtype
-#: and normalize ts to session-tz TIMESTAMP (sources/readers.py::
-#: normalize_event_ts), so every events-backed query below is "fn changed"
-#: through its input contract.
+#: Queries whose Spark fn or oracle SQL this change rewrites — exported first
+#: so the correctness gate re-grades them (and tests/test_parity_changed_sf01.py
+#: checks them at sf0.01).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # Round 11: EMPTY — t50/t51 (the round-10 broadcast-route
-    # refinement) graded green in CORRECTNESS_r10.json and rotate
-    # normally. The round-11 code changes to existing operators are
-    # all grade-preserving on graded fixtures: byte_bpe_token_stats
-    # gained a pretoken_re parameter whose DEFAULT path is
-    # byte-identical (t53 unchanged — same regex literal, same plan);
-    # the round-11 advisor items (t53 description text; the
-    # decode_transfer/honor_charset coupling documented+fixed for the
-    # honor_charset=False corner no graded query uses; the
-    # paragraph_dedup_stats broadcast-default docstring; the CDX
-    # header-window guard for blocks WITHOUT a CRLFCRLF separator —
-    # every graded fixture has one) change no graded row, pinned by
-    # the existing fixture tests plus the full driver sim at close.
-    #
-    # The four round-11 additions (t55 GPT-2 pretokenization, t56 BPE
-    # merge training, mm41 sitemap discovery, mm42 WARC revisit) are
-    # never-graded and enter through tier 1; the remaining ~46 slots
-    # execute the verdict's staleness rotation — the entire 28-query
-    # r4 tier, then the stalest r5 rows — after which the oldest
-    # grade in the ledger is r5.
-)
-
-#: Graded-green queries whose last driver grade PREDATES the latest
-#: testdata regeneration (graded r4; /root/testdata regenerated
-#: 2026-08-15 13:43) — the r4 streaming regression hid in exactly this
-#: gap, so these re-grade ahead of the ordinary staleness rotation
-#: (round-6 verdict item 3). Drop entries once CORRECTNESS_r07 grades
-#: them on post-regen data.
-REGRADE_FIRST: tuple[str, ...] = (
-    # Round 9: emptied — w12 re-graded green in r8 on post-regen data;
-    # no remaining grade predates a testdata regeneration except through
-    # the ordinary staleness rotation (the r1/r2 tier tops that rotation
-    # and fits entirely inside the r9 window).
-)
-
-#: Queries ADDED mid-round-7, after the grading window was already full
-#: (3 changed + 44 never-graded + 4 regen-canary re-grades = 51 ≈ the
-#: driver's observed ~50/round capacity). Ranking them in the ordinary
-#: never-graded tier would push the judge-mandated regen re-grades out of
-#: the window, so they rank BEHIND those and grade in the round-8 window
-#: instead. Remove entries once graded (they would then rotate normally).
-#: Round 8: emptied — the seven round-7 codec queries now grade through
-#: the ordinary tiers (mm16/mm19 via CHANGED_THIS_ROUND after the advisor
-#: conformance fixes; mm13/mm14/mm15/mm17/mm18 via the never-graded tier,
-#: which they top as the only never-graded queries left in the corpus).
-NEW_PAST_WINDOW: tuple[str, ...] = (
-    # Round 10: empty. The nine round-10 additions (mm34, t53, mm35,
-    # t54, mm36, mm37, st15, mm38, mm39) grade through the ordinary never-graded
-    # tier behind the two CHANGED re-grades (t50/t51); the verdict's
-    # staleness rotation fills the rest — the
-    # entire 28-query r3 tier plus the stalest r4 rows through
-    # position ~50, after which the oldest grade in the ledger is r4.
+    "t2_ngram_jaccard_pairs",
+    "t7_minhash_lsh_dedup",
+    "t8_simhash_pairs",
+    "t9_levenshtein_pairs",
+    "s6_semantic_dedup",
+    "st9_streaming_neardup_gate",
+    "t38_sketch_accuracy_audit",
+    "t38b_sketch_audit_dedup_first",
+    "t49_prefix_filter_jaccard",
 )
 
 
@@ -153,11 +103,7 @@ def _export_order() -> list[str]:
     1. changed-this-round (oracle or fn edited — MUST be re-graded),
     2. never-GRADED queries (no driver row in any CORRECTNESS artifact),
        oracle-bearing before rows-only, registration order,
-    3. REGRADE_FIRST — graded greens whose grade predates a testdata
-       regeneration (the r4 streaming-regression class),
-    3b. NEW_PAST_WINDOW — queries added after this round's window filled;
-       they grade next round rather than evicting the tier-3 re-grades,
-    4. everything else — graded greens AND graded rows-only — STALEST grade
+    3. everything else — graded greens AND graded rows-only — STALEST grade
        first (then registration order): the tail of the window re-checks
        prior grades for regressions, and rotating by grade age means every
        query cycles back through within a few rounds instead of the same
@@ -168,26 +114,14 @@ def _export_order() -> list[str]:
     names = list(CORPUS)
     pos = {n: i for i, n in enumerate(names)}
     changed = {n: i for i, n in enumerate(CHANGED_THIS_ROUND)}
-    regrade = {n: i for i, n in enumerate(REGRADE_FIRST)}
     last = _last_graded_round()
-    # Judge-named queries bumped to the FRONT of the never-graded tier:
-    # registration order alone would leave a late-registered query outside
-    # the driver's 50-query window for several rounds running.
-    priority = {n: i for i, n in enumerate(("t48_incremental_dedup_ledger",))}
-
-    deferred = {n: i for i, n in enumerate(NEW_PAST_WINDOW)}
 
     def rank(n: str) -> tuple:
         if n in changed:
             return (0, changed[n], 0)
-        if n in deferred:
-            return (3, 1, deferred[n])
         if n not in last:
-            tier = 1 if CORPUS[n].oracle is not None else 2
-            return (tier, priority.get(n, len(priority)), pos[n])
-        if n in regrade:
-            return (3, 0, regrade[n])
-        return (4, last[n], pos[n])
+            return (1 if CORPUS[n].oracle is not None else 2, 0, pos[n])
+        return (3, last[n], pos[n])
 
     return sorted(names, key=rank)
 
@@ -1791,12 +1725,15 @@ def t6_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
-    """Generated SQL mirror of the portable MinHash+LSH pipeline (same
-    generated-constant technique as t8/s3): md5-derived 30-bit shingle base
-    hashes, 32 universal-hash mins with the exact Python-side (a,b)
-    constants, value-concat band keys, banded candidate join, exact Jaccard
-    verify on the same base-hash sets."""
+def _portable_minhash_ctes(
+    num_hashes: int, bands: int, docs_src: str = "documents"
+) -> str:
+    """The shared head of the portable-MinHash oracles: the ``WITH shing,
+    hidx, sig, banded`` CTEs — md5-derived 30-bit shingle base hashes over
+    ``docs_src``, the universal-hash mins with the exact Python-side (a,b)
+    constants (:func:`..operators.dedup.minhash_coeffs`) and value-concat
+    band keys. Each oracle appends its own CTEs and final SELECT after the
+    trailing comma."""
     from ..operators.dedup import MINHASH_P, minhash_coeffs
 
     rows_per_band = num_hashes // bands
@@ -1817,7 +1754,7 @@ def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5
         SELECT doc_id, words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS s
         FROM (SELECT doc_id,
                      list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS words
-              FROM documents),
+              FROM {docs_src}),
              LATERAL (SELECT unnest(generate_series(1, len(words)-2)) AS i)
       )
     ),
@@ -1832,7 +1769,16 @@ def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5
     ),
     banded AS (
       {band_rows}
-    ),
+    ),"""
+
+
+def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
+    """Generated SQL mirror of the portable MinHash+LSH pipeline (same
+    generated-constant technique as t8/s3): md5-derived 30-bit shingle base
+    hashes, 32 universal-hash mins with the exact Python-side (a,b)
+    constants, value-concat band keys, banded candidate join, exact Jaccard
+    verify on the same base-hash sets."""
+    return _portable_minhash_ctes(num_hashes, bands) + f"""
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
@@ -3603,42 +3549,7 @@ def _st9_gate_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) 
     doc_id%3<>0, no a<b), reduced to per-lang checked/duplicate counts
     over the stream subset. Equality holds regardless of micro-batch
     splits because signatures/bands/counts are per-document properties."""
-    from ..operators.dedup import MINHASH_P, minhash_coeffs
-
-    rows_per_band = num_hashes // bands
-    coeffs = minhash_coeffs(num_hashes)
-    min_exprs = ",\n        ".join(
-        f"MIN(({a} * sh + {b}) % {MINHASH_P}) AS h{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    band_rows = "\n      UNION ALL ".join(
-        "SELECT doc_id, {bi} AS band_idx, concat_ws(',', {cols}) AS band_key FROM sig".format(
-            bi=bi,
-            cols=", ".join(f"h{bi * rows_per_band + j}" for j in range(rows_per_band)),
-        )
-        for bi in range(bands)
-    )
-    return f"""
-    WITH shing AS (
-      SELECT DISTINCT doc_id, s FROM (
-        SELECT doc_id, words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS words
-              FROM documents),
-             LATERAL (SELECT unnest(generate_series(1, len(words)-2)) AS i)
-      )
-    ),
-    hidx AS (
-      SELECT DISTINCT doc_id, CAST(md5_number_lower(s) & 1073741823 AS BIGINT) AS sh
-      FROM shing
-    ),
-    sig AS (
-      SELECT doc_id,
-        {min_exprs}
-      FROM hidx GROUP BY doc_id
-    ),
-    banded AS (
-      {band_rows}
-    ),
+    return _portable_minhash_ctes(num_hashes, bands) + f"""
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
@@ -9578,8 +9489,6 @@ def _t38_sketch_audit_sql(
     routing: the audit runs on one representative (lowest doc_id) per
     verbatim md5(text) group — the representative-level candidate
     distribution, NOT the raw one (see sketch_accuracy_audit's docstring)."""
-    from ..operators.dedup import MINHASH_P, minhash_coeffs
-
     docs_src = (
         """(SELECT d.doc_id, d.text FROM documents d
           JOIN (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)) r
@@ -9588,43 +9497,10 @@ def _t38_sketch_audit_sql(
         else "documents"
     )
 
-    rows_per_band = num_hashes // bands
-    coeffs = minhash_coeffs(num_hashes)
-    min_exprs = ",\n        ".join(
-        f"MIN(({a} * sh + {b}) % {MINHASH_P}) AS h{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    band_rows = "\n      UNION ALL ".join(
-        "SELECT doc_id, {bi} AS band_idx, concat_ws(',', {cols}) AS band_key FROM sig".format(
-            bi=bi,
-            cols=", ".join(f"h{bi * rows_per_band + j}" for j in range(rows_per_band)),
-        )
-        for bi in range(bands)
-    )
     match_sum = " + ".join(
         f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
     )
-    return f"""
-    WITH shing AS (
-      SELECT DISTINCT doc_id, s FROM (
-        SELECT doc_id, words[i] || ' ' || words[i+1] || ' ' || words[i+2] AS s
-        FROM (SELECT doc_id,
-                     list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '') AS words
-              FROM {docs_src}),
-             LATERAL (SELECT unnest(generate_series(1, len(words)-2)) AS i)
-      )
-    ),
-    hidx AS (
-      SELECT DISTINCT doc_id, CAST(md5_number_lower(s) & 1073741823 AS BIGINT) AS sh
-      FROM shing
-    ),
-    sig AS (
-      SELECT doc_id,
-        {min_exprs}
-      FROM hidx GROUP BY doc_id
-    ),
-    banded AS (
-      {band_rows}
-    ),
+    return _portable_minhash_ctes(num_hashes, bands, docs_src) + f"""
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
