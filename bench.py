@@ -234,8 +234,13 @@ def main() -> None:
     # classes Janino compiled: a rep that recompiles is paying codegen, not
     # execution, and shows here without a profiler
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    # milliseconds the JVM's JIT compilers (C1/C2) spent, summed over their
+    # threads: Catalyst and generated code keep the JIT busy well after
+    # warm-up, and that CPU shows in no Spark task metric
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     runs: dict[str, list[float]] = {n: [] for n in names}
     compiles: dict[str, list[int]] = {n: [] for n in names}
+    jit_ms: dict[str, list[int]] = {n: [] for n in names}
     for _ in range(repeats):
         # clear session-shared materializations (t2/t10's pair graph, the
         # covis edges) so every repeat pays the true cost once, like a fresh
@@ -247,11 +252,12 @@ def main() -> None:
 
         _corpus.clear_pair_graph_cache()
         for name in names:
-            c0 = codegen.getCount()
+            c0, j0 = codegen.getCount(), jit.getTotalCompilationTime()
             t0 = time.perf_counter()
             CORPUS[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             runs[name].append(round(time.perf_counter() - t0, 3))
             compiles[name].append(codegen.getCount() - c0)
+            jit_ms[name].append(jit.getTotalCompilationTime() - j0)
 
     def median(xs: list[float]) -> float:
         s = sorted(xs)
@@ -268,7 +274,14 @@ def main() -> None:
     tmp = f"{sidecar}.{os.getpid()}.tmp"
     with open(tmp, "w") as f:
         json.dump(
-            {"repeats": repeats, "sf": float(sf), "runs": runs, "codegen_compiles": compiles}, f
+            {
+                "repeats": repeats,
+                "sf": float(sf),
+                "runs": runs,
+                "codegen_compiles": compiles,
+                "jit_compile_ms": jit_ms,
+            },
+            f,
         )
     os.replace(tmp, sidecar)
     print(

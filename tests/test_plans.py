@@ -719,3 +719,32 @@ def test_bpe_vocab_broadcast_no_skewed_word_shuffle(spark, sf_small, name):
     assert _re.search(
         r"HashAggregate\(keys=\[w#\d+\], functions=\[\]\)", txt
     ), name
+
+
+def executed_plans(spark, run) -> list[str]:
+    """Physical plans of every SQL execution ``run()`` starts, eager ones
+    inside query construction included (read from the SQL status store)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        seq = store.executionsList()  # a Scala Seq
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = {e.executionId() for e in executions()}
+    run()
+    return [e.physicalPlanDescription() for e in executions() if e.executionId() not in before]
+
+
+@pytest.mark.parametrize("name", ["m25_poisson_bootstrap_ci", "m30_randomization_test"])
+def test_replicate_statistics_have_no_row_multiplier(spark, sf_small, name):
+    """m25/m30 draw 200 replicates per row in one fused Arrow pass
+    (``stats.resample``): no execution may cross-join the rows with a
+    200-row range, the 200x intermediate the fusion removes."""
+    plans = executed_plans(spark, lambda: CORPUS[name].fn(spark, sf_small).collect())
+    for p in plans:
+        assert "BroadcastNestedLoopJoin" not in p, name
+        assert "CartesianProduct" not in p, name
+        assert "Range (0, 200" not in p, name
+    assert any("MapInArrow" in p for p in plans), name

@@ -141,7 +141,10 @@ def main() -> None:
         "collected streaming partials, union-find components) go through",
         "`sources.readers.local_frame` and plan as `LocalTableScan`, a JVM",
         "local relation with row-count statistics, never as a PythonRDD",
-        "(`Scan ExistingRDD`).",
+        "(`Scan ExistingRDD`). The replicate statistics m25 and m30 run their one",
+        "fused `MapInArrow` pass (`stats.resample`) while the query is built and",
+        "return their few result rows this way, so their rows here show the",
+        "`LocalTableScan` alone; `tests/test_plans.py` checks the pass itself.",
         "",
         "| query | joins | shuffles | pushdown | flags |",
         "|---|---|---|---|---|",

@@ -61,10 +61,12 @@ def register(
     return deco
 
 
-#: Queries whose Spark fn or oracle SQL this change rewrites — exported first
-#: so the correctness gate re-grades them (and tests/test_parity_changed_sf01.py
-#: checks them at sf0.01).
+#: Queries whose Spark fn or oracle SQL recent changes rewrote, newest first —
+#: exported first so the correctness gate re-grades them (and
+#: tests/test_parity_changed_sf01.py checks them at sf0.01).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "m25_poisson_bootstrap_ci",
+    "m30_randomization_test",
     "t2_ngram_jaccard_pairs",
     "t7_minhash_lsh_dedup",
     "t8_simhash_pairs",
@@ -12116,9 +12118,9 @@ def w24_robust_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 8 — the Poisson bootstrap (the resampling scheme that
-# actually works distributed: per-row hash-derived Poisson(1) weights, no
-# sampling pass) and an embedding-norm outlier audit.
+# The Poisson bootstrap (the resampling scheme that actually works
+# distributed: per-row hash-derived Poisson(1) weights, no sampling pass)
+# and an embedding-norm outlier audit.
 # ===========================================================================
 
 #: Poisson(1) inverse-CDF thresholds on the 2^-20 uniform grid; identical
@@ -12138,13 +12140,6 @@ def _pois_sql(u: str) -> str:
         f"WHEN {u} < {thr!r} THEN {k}" for thr, k in _POIS_CDF
     )
     return f"(CASE {branches} ELSE 6 END)"
-
-
-def _pois_spark(u) -> "F.Column":
-    expr = F.lit(6)
-    for thr, k in reversed(_POIS_CDF):
-        expr = F.when(u < F.lit(thr), F.lit(k)).otherwise(expr)
-    return expr
 
 
 @register(
@@ -12207,104 +12202,50 @@ def _pois_spark(u) -> "F.Column":
     "200 replicates; replicate means are exact decimal sums over "
     "hash-weighted values; the CI takes ORDER STATISTICS (5th / 196th "
     "of 200) rather than interpolated quantiles so no interpolation "
-    "formula can diverge. Shape: one fan-out join against a 200-row "
-    "literal, one (type, replicate) hash aggregation — embarrassingly "
-    "parallel, no resampling pass, the exact scheme production systems "
-    "use for CIs over massive aggregations. M1's normal-theory CI is "
-    "the parametric twin; this one is distribution-free.",
+    "formula can diverge. Shape: one fused Arrow pass "
+    "(stats.resample) adds every replicate's sums per partition, so the "
+    "200x row multiplier and its aggregation shuffle never exist — "
+    "embarrassingly parallel, no resampling pass, the exact scheme "
+    "production systems use for CIs over massive aggregations. M1's "
+    "normal-theory CI is the parametric twin; this one is "
+    "distribution-free.",
 )
 def m25_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import md5_token_hash64
+    from ..stats.resample import lehmer_replicate_sums, unscaled6
 
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    reps = spark.range(200).select(F.col("id").cast("int").alias("r"))
-    # The 200x replicate fan-out multiplies whatever partitioning the scan
-    # produced; a small input (one file under maxPartitionBytes = one
-    # partition) would otherwise push all n x 200 weighted rows through a
-    # single core. Spread the seed frame across the cluster FIRST so the
-    # fan-out and the (type, r) partial aggregation parallelize — at 100 TB
-    # the scan is already wide and the round-robin is a cheap no-op-shaped
-    # safeguard, at bench scale it is the difference between 1 and 32 cores
-    # (measured 47 s -> ~4 s at sf0.1 on local[32]).
-    # Pre-quantize the SIX possible weighted terms per input row (w is the
-    # Poisson(1) multiplicity, always in 0..6): cast(w·value AS
-    # decimal(27,6)) goes through Double.toString + BigDecimal — by far the
-    # most expensive per-row op in this query (r12 isolation: the 200×
-    # fan-out aggregation ran 2.8 s with the per-fan-out-row cast vs 1.1 s
-    # without) — so evaluate it 6×|events| times BEFORE the fan-out instead
-    # of |events|×200 times after (guide §2.3: move expensive per-row work
-    # below the multiplier). k·value here is the identical double product
-    # the old expression produced for w=k, so every replicate's decimal sum
-    # is bit-for-bit unchanged.
-    seeded = ev.select(
+    # outcome k is the Poisson(1) weight w and adds cast(k·value AS
+    # decimal(27,6)), the oracle's CAST(w * value AS DECIMAL(27,6)); w = 0
+    # adds the exact zero
+    reps = lehmer_replicate_sums(
+        ev,
         "event_type",
-        "value",
-        md5_token_hash64(F.col("event_id").cast("string"))
-        .bitwiseAND(F.lit(2147483647))
-        .alias("seed"),
-        F.array(
-            *[
-                (F.col("value") * F.lit(float(k))).cast("decimal(27,6)")
-                for k in range(1, 7)
-            ]
-        ).alias("__qterms"),
-    ).repartition(spark.sparkContext.defaultParallelism)
-    u = (
-        (
-            (F.col("seed") + F.col("r").cast("long") * F.lit(1013904223))
-            % F.lit(2147483647)
+        md5_token_hash64(F.col("event_id").cast("string")).bitwiseAND(F.lit(2147483647)),
+        [F.lit(0), *[unscaled6(F.col("value") * F.lit(float(k))) for k in range(1, 7)]],
+        [thr for thr, _ in _POIS_CDF],
+    )
+    rows = []
+    # a NULL event_type never matches the oracle's equi-join of pt and ci
+    for event_type in sorted(k for k in reps if k is not None):
+        s = reps[event_type]
+        # (mean_r, r) for every replicate with SUM(w) > 0; the decimal sum
+        # becomes a double first (correctly rounded, as Spark's cast)
+        means = sorted(
+            (sum(sm) / 10**6 / sw, r)
+            for r, (cnt, sm) in enumerate(zip(s.counts, s.sums))
+            if (sw := sum(w * c for w, c in enumerate(cnt))) > 0
         )
-        * F.lit(48271)
-        % F.lit(2147483647)
-    ) / F.lit(2147483647.0)
-    weighted = (
-        seeded.crossJoin(F.broadcast(reps))
-        .select("event_type", "r", "__qterms", _pois_spark(u).alias("w"))
-    )
-    # element_at picks the pre-cast decimal term for w ∈ 1..6; w = 0
-    # contributes the exact decimal zero — identical to
-    # cast(0·value AS decimal(27,6))
-    qterm = F.when(F.col("w") == 0, F.lit("0").cast("decimal(27,6)")).otherwise(
-        F.element_at("__qterms", F.col("w"))
-    )
-    rep_means = (
-        weighted.groupBy("event_type", "r")
-        .agg(
-            F.sum(qterm).cast("double").alias("sw_val"),
-            F.sum("w").alias("sw"),
-        )
-        .filter(F.col("sw") > 0)
-        .select(
-            "event_type", "r", (F.col("sw_val") / F.col("sw")).alias("mean_r")
-        )
-    )
-    w_rank = Window.partitionBy("event_type").orderBy("mean_r", "r")
-    ranked = rep_means.select(
-        "event_type",
-        "mean_r",
-        F.row_number().over(w_rank).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("event_type")).alias("n_reps"),
-    )
-    ci = ranked.groupBy("event_type").agg(
-        F.max(F.when(F.col("rn") == 5, F.col("mean_r"))).alias("lo"),
-        F.max(F.when(F.col("rn") == 196, F.col("mean_r"))).alias("hi"),
-        F.max("n_reps").cast("long").alias("n_reps"),
-    )
-    pt = ev.groupBy("event_type").agg(
-        F.count("value").cast("long").alias("n_rows"),
-        q6(agg.decimal_avg(F.col("value"))).alias("point_mean"),
-    )
-    return (
-        pt.join(ci, "event_type")
-        .select(
-            "event_type",
-            "n_rows",
-            "n_reps",
-            "point_mean",
-            q6(F.col("lo")).alias("ci_lo"),
-            q6(F.col("hi")).alias("ci_hi"),
-        )
-        .orderBy("event_type")
+        if not means:
+            continue
+        lo = _floor6(means[4][0]) if len(means) >= 5 else None
+        hi = _floor6(means[195][0]) if len(means) >= 196 else None
+        point_mean = _floor6(s.totals[1] / 10**6 / s.n)
+        rows.append((event_type, s.n, len(means), point_mean, lo, hi))
+    return local_frame(
+        spark,
+        rows,
+        "event_type string, n_rows long, n_reps long, point_mean double, ci_lo double, ci_hi double",
     )
 
 
@@ -14132,18 +14073,17 @@ def j12_followup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of replicates at least as extreme as observed. Distribution-free "
     "where m2's Welch t assumes normal-ish tails, and fully "
     "reproducible: the oracle regenerates every relabeling "
-    "bit-for-bit. Same scale shape as m25: one wide fan-out against a "
-    "200-row literal, one (replicate) aggregation, repartitioned ahead "
-    "of the multiplier.",
+    "bit-for-bit. Same shape as m25: one observed-statistics "
+    "aggregation, then the fused replicate pass (stats.resample) with "
+    "no 200x row multiplier.",
 )
 def m30_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import md5_token_hash64
+    from ..stats.resample import lehmer_replicate_sums, unscaled6
 
-    ev = _t(spark, sf_dir, "events")
-    base = osk.materialize(
-        ev.filter(
-            F.col("value").isNotNull() & F.col("event_type").isin("click", "view")
-        )
+    base = (
+        _t(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull() & F.col("event_type").isin("click", "view"))
         .select(
             "value",
             F.when(F.col("event_type") == "click", 1).otherwise(0).alias("is_a"),
@@ -14151,7 +14091,6 @@ def m30_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .bitwiseAND(F.lit(2147483647))
             .alias("seed"),
         )
-        .repartition(spark.sparkContext.defaultParallelism)
     )
     obs_row = base.agg(
         (
@@ -14164,47 +14103,33 @@ def m30_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.sum("is_a")).cast("long").alias("n_b"),
         (F.sum("is_a") * 1.0 / F.count(F.lit(1))).alias("frac_a"),
     ).collect()[0]
-    reps = spark.range(200).select(F.col("id").cast("int").alias("r"))
-    u = (
-        (
-            (F.col("seed") + F.col("r").cast("long") * F.lit(1013904223))
-            % F.lit(2147483647)
-        )
-        * F.lit(48271)
-        % F.lit(2147483647)
-    ) / F.lit(2147483647.0)
-    relabeled = base.crossJoin(F.broadcast(reps)).select(
-        "value",
-        "r",
-        F.when(u < F.lit(obs_row.frac_a), 1).otherwise(0).alias("ra"),
-    )
-    rep_diffs = (
-        relabeled.groupBy("r")
-        .agg(
-            agg.decimal_sum(F.when(F.col("ra") == 1, F.col("value"))).alias("sa"),
-            F.count(F.when(F.col("ra") == 1, F.lit(1))).alias("na"),
-            agg.decimal_sum(F.when(F.col("ra") == 0, F.col("value"))).alias("sb"),
-            F.count(F.when(F.col("ra") == 0, F.lit(1))).alias("nb"),
-        )
-        .filter((F.col("na") > 0) & (F.col("nb") > 0))
-        .select(
-            (F.col("sa") / F.col("na") - F.col("sb") / F.col("nb")).alias("diff_r")
-        )
-    )
-    stats = rep_diffs.agg(
-        F.sum(
-            F.when(F.abs(F.col("diff_r")) >= F.abs(F.lit(obs_row.diff_obs)), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_extreme"),
-        F.count(F.lit(1)).cast("long").alias("n_reps"),
-    )
-    return stats.select(
-        F.lit(obs_row.n_a).cast("long").alias("n_a"),
-        F.lit(obs_row.n_b).cast("long").alias("n_b"),
-        q6(F.lit(obs_row.diff_obs)).alias("diff_obs"),
-        F.col("n_extreme"),
-        q6((1.0 + F.col("n_extreme")) / (1.0 + F.col("n_reps"))).alias("p_value"),
+    diff_obs, frac_a = obs_row.diff_obs, obs_row.frac_a
+    # (diff_r) per replicate that relabels rows into both groups; with
+    # frac_a outside (0, 1) every replicate puts all rows in one group
+    diffs = []
+    if frac_a is not None and 0.0 < frac_a < 1.0:
+        # outcome 0 (u < frac_a) relabels a row into group a, outcome 1
+        # into group b; either way the row adds its value
+        vq = unscaled6(F.col("value"))
+        s = lehmer_replicate_sums(base, None, "seed", [vq, vq], [frac_a])[None]
+        diffs = [
+            sa / 10**6 / na - sb / 10**6 / nb
+            for (na, nb), (sa, sb) in zip(s.counts, s.sums)
+            if na > 0 and nb > 0
+        ]
+    n_extreme = sum(1 for d in diffs if diff_obs is not None and abs(d) >= abs(diff_obs))
+    return local_frame(
+        spark,
+        [
+            (
+                obs_row.n_a,
+                obs_row.n_b,
+                None if diff_obs is None else _floor6(diff_obs),
+                n_extreme,
+                _floor6((1.0 + n_extreme) / (1.0 + len(diffs))),
+            )
+        ],
+        "n_a long, n_b long, diff_obs double, n_extreme long, p_value double",
     )
 
 

@@ -61,9 +61,10 @@ def get_spark(
         # core for every downstream explode/self-join until the first
         # shuffle). 4 MB keeps bench-scale scans wide without producing
         # absurd task counts; on a real cluster this is the same knob you'd
-        # tune per-workload, and CPU-heavy fan-out operators additionally
-        # repartition explicitly (see m25) because no static split size is
-        # right for a 200x row multiplier.
+        # tune per-workload, and CPU-heavy per-row operators additionally
+        # widen narrow scans through ``operators.skew.widen_narrow_scan``,
+        # gated on their per-row cost, because no static split size is
+        # right for every per-row cost.
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
         .config("spark.sql.files.openCostInBytes", "262144")
         .config("spark.ui.enabled", "false")
