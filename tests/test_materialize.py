@@ -64,6 +64,68 @@ def test_collapse_and_expand_have_one_owner(needle, owner):
     assert not offenders, offenders
 
 
+def test_map_in_pandas_only_inside_map_rows():
+    """Every Python row stage of the multimodal family goes through the one
+    row-map primitive: ``.mapInPandas(`` and the Arrow batch loop appear in
+    ``operators/multimodal.py`` only inside ``_map_rows``."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "youbike_etl_pipeline_spark"
+    mm = pkg / "operators" / "multimodal.py"
+    fn = next(
+        n
+        for n in ast.parse(mm.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "_map_rows"
+    )
+    offenders = [
+        f"multimodal.py:{lineno}"
+        for lineno, line in enumerate(mm.read_text().splitlines(), 1)
+        if (".mapInPandas(" in line or "in batches:" in line or "def fn(batches" in line)
+        and not fn.lineno <= lineno <= fn.end_lineno
+    ]
+    assert not offenders, offenders
+
+
+def test_map_rows_exact_values_fan_out_and_empty_partitions(spark):
+    """``_map_rows``: int64 past 2^53 survives exactly, ``None`` is NULL in
+    nullable long/bool/struct fields, one input row maps to 0, 1 or 2
+    output rows, and empty partitions (and an empty input) keep the
+    declared schema."""
+    from pyspark.sql import types as T
+
+    from youbike_etl_pipeline_spark.operators.multimodal import _map_rows
+
+    big = 2**53 + 1  # odd values past 2^53 are not representable as float64
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("j", T.LongType(), True),
+            T.StructField("flag", T.BooleanType(), True),
+            T.StructField("meta", T.StructType([T.StructField("a", T.StringType(), True)]), True),
+        ]
+    )
+
+    def row(k: int, n: int) -> "list[tuple]":
+        full = (k, 2 * k + 1, True, {"a": str(k)})
+        empty = (k, None, None, None)
+        return [full, empty][:n]
+
+    # 3 rows over 5 partitions: at least two partitions are empty, and
+    # n = 0 / 1 / 2 drops, maps and fans out
+    src = spark.range(0, 3, 1, 5).selectExpr(f"id + {big} AS k", "CAST(id AS INT) AS n")
+    out = _map_rows(src, ["k", "n"], schema, row)
+    assert out.schema == schema
+    got = sorted(out.collect(), key=lambda r: (r.k, r.j is not None))
+    assert [(r[0], r[1], r[2], None if r[3] is None else r[3].a) for r in got] == [
+        (big + 1, 2 * big + 3, True, str(big + 1)),
+        (big + 2, None, None, None),
+        (big + 2, 2 * big + 5, True, str(big + 2)),
+    ]
+    empty = _map_rows(src.where("n < 0"), ["k", "n"], schema, row)
+    assert empty.schema == schema and empty.collect() == []
+
+
 def test_materialize_passes_streaming_frames_through(spark):
     stream = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     assert materialize(stream) is stream

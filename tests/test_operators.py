@@ -748,6 +748,36 @@ def test_resize_images_round_trip(spark):
         assert row.media_meta.width == 7 and row.media_meta.height == 5
 
 
+def test_resize_images_malformed_payload_degrades_unless_strict(spark):
+    """A truncated PNG/BMP/JPEG payload makes decode_image raise
+    ValueError; non-strict resize degrades that row to a NULL payload (the
+    same gate as decode_image_features) while good rows still resize, and
+    strict mode raises."""
+    from youbike_etl_pipeline_spark.operators.multimodal import (
+        encode_bmp,
+        encode_jpeg_lossless,
+        encode_png,
+        encode_ppm,
+        md5_pixels,
+        resize_images,
+    )
+
+    img = md5_pixels(3, 16, 12)
+    rows = [
+        (1, bytearray(encode_png(img)[:40])),
+        (2, bytearray(encode_bmp(img)[:40])),
+        (3, bytearray(encode_jpeg_lossless(img)[:40])),
+        (4, bytearray(encode_ppm(img))),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, payload binary")
+    got = {r.doc_id: r for r in resize_images(df, out_width=4, out_height=3).collect()}
+    assert sorted(got) == [1, 2, 3, 4]
+    assert all(got[i].payload is None and got[i].media_meta is None for i in (1, 2, 3))
+    assert got[4].payload is not None and got[4].media_meta.width == 4
+    with pytest.raises(Exception, match="ValueError"):
+        resize_images(df, out_width=4, out_height=3, strict=True).collect()
+
+
 def test_ahash64_perturbation_robust_and_contrast_sensitive():
     """A one-byte perturbation must not change the perceptual hash of a
     structured image, while inverting the image must flip every brightness

@@ -19,15 +19,19 @@ pipeline plumbing stays testable end-to-end. The JVM route
 zero Python in the loop; these numpy decoders serve the
 binary-payload-column regime (payloads already in a table).
 
-Scale posture: decode runs in ``mapInPandas`` (Arrow-batched, one pass,
-no shuffle); per-item fan-out (frame sampling) uses the same iterator to
-yield more rows than it consumes.
+Scale posture: every Python stage here — fixture encode, decode,
+feature extraction — is one call of the row-map primitive
+:func:`_map_rows`: ``mapInPandas`` over Arrow batches, one pass, no
+shuffle, a per-row function returning zero, one or several output rows
+(drop, map, fan-out). The sites state only what differs: input columns,
+output schema, the row function, and whether the input is widened first.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -65,7 +69,7 @@ FRAME_SCHEMA = T.StructType(
 
 #: rows that amortize ONE task of the downstream Python work (~0.1 s of
 #: measured per-row attach+decode cost), per payload family. Measured from
-#: the r10 (unwidened) vs r11 (fully-widened) bench deltas at sf0.1: heavy
+#: unwidened vs fully-widened bench deltas at sf0.1: heavy
 #: codecs (PNG inflate+unfilter, JPEG Huffman+IDCT, VP8L, FLAC, MJPEG) won
 #: 2.4–4.9× from widening and keep small values (widen early and fully);
 #: cheap string/container work (WARC parse, URL canonicalize, charset
@@ -76,8 +80,8 @@ FRAME_SCHEMA = T.StructType(
 #: widens them too. The constants are per-row-cost statements
 #: (scale-independent), not tuned partition counts.
 _WIDEN_RPT = {
-    # images (mm10/13/14/16/18/21/23/25 single-core r10 cost over the 5 k
-    # footer rows: 0.95/0.47/0.68/0.25/0.16/0.14/0.23/0.12 ms per row)
+    # images (mm10/13/14/16/18/21/23/25 unwidened single-core cost over
+    # the 5 k footer rows: 0.95/0.47/0.68/0.25/0.16/0.14/0.23/0.12 ms per row)
     "png": 128,
     "jpegl": 256,
     "webpl": 160,
@@ -124,14 +128,81 @@ def _widen(df: DataFrame, family: str) -> DataFrame:
     groups wide).
 
     ``family`` keys :data:`_WIDEN_RPT`, the measured per-row-cost table
-    that decides how wide the shuffle is worth going (round-12 cost gate —
-    see skew.widen_narrow_scan for the decision rule; the r11 version
-    widened every family to full parallelism and taxed the cheap crawl
-    pipelines a fixed ~0.25 s at bench scale).
+    that decides how wide the shuffle is worth going (see
+    skew.widen_narrow_scan for the decision rule; widening every family
+    to full parallelism taxes the cheap crawl pipelines a fixed ~0.25 s
+    at bench scale).
     """
     from .skew import widen_narrow_scan
 
     return widen_narrow_scan(df, rows_per_task=_WIDEN_RPT[family])
+
+
+def _map_rows(
+    df: DataFrame,
+    in_cols: "list[str]",
+    schema: T.StructType,
+    row_fn: "Callable[..., Iterable[tuple]]",
+    widen: str | None = None,
+) -> DataFrame:
+    """The module's one Python row stage: ``mapInPandas`` over
+    ``df.select(*in_cols)``, widened first by :func:`_widen` when
+    ``widen`` names a :data:`_WIDEN_RPT` family. Each input row reaches
+    ``row_fn`` as plain Python values, one argument per input column;
+    ``row_fn`` returns the row's output as tuples in ``schema`` field
+    order — none drops the row, one maps it, several fan it out. The
+    output frame is built from object columns, so Arrow converts the
+    Python values themselves: int64 past 2^53 stays exact and ``None``
+    is NULL in every nullable field type."""
+    src = df.select(*in_cols)
+    if widen is not None:
+        src = _widen(src, widen)
+    names = schema.fieldNames()
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for row in zip(*(pdf[c].tolist() for c in in_cols))
+                for out in row_fn(*row)
+            ]
+            cols = list(zip(*rows, strict=True)) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    n: pd.Series(c, dtype=object)
+                    for n, c in zip(names, cols, strict=True)
+                }
+            )
+
+    return src.mapInPandas(fn, schema=schema)
+
+
+def _payload_schema(id_col: str, media_meta: bool = True) -> T.StructType:
+    """The attach_* fixture contract: ``(id_col, payload[, media_meta])``."""
+    fields = [
+        T.StructField(id_col, T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+    if media_meta:
+        fields.append(T.StructField("media_meta", MEDIA_META, True))
+    return T.StructType(fields)
+
+
+def _media_meta(
+    media_type: str,
+    fmt: str,
+    width: int | None = None,
+    height: int | None = None,
+    duration_ms: int | None = None,
+) -> dict:
+    """One :data:`MEDIA_META` value."""
+    return {
+        "media_type": media_type,
+        "format": fmt,
+        "width": width,
+        "height": height,
+        "duration_ms": duration_ms,
+    }
 
 
 def attach_media_columns(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -222,9 +293,9 @@ def _bmp_rle8_decode(data: bytes, w: int, h: int) -> "np.ndarray":
             x += take
             i += v + (v & 1)
     if not eob:
-        # round-9 advisor: a stream exhausted before the end-of-bitmap
-        # escape previously decoded silently (all-palette[0] under a
-        # past-EOF data_offset) while the raw paths raise for the same
+        # a stream exhausted before the end-of-bitmap escape would
+        # otherwise decode silently (all-palette[0] under a past-EOF
+        # data_offset) while the raw paths raise for the same
         # corruption — match their truncation contract
         raise ValueError("truncated BMP RLE8 stream (no end-of-bitmap escape)")
     return idx[::-1]  # bottom-up
@@ -265,7 +336,7 @@ def decode_bmp(payload: bytes) -> "np.ndarray":
         if top_down:
             raise ValueError("top-down RLE8 BMP is not legal")
         if w * h > (1 << 26):
-            # allocation-bomb guard (round-8 review): unlike the raw
+            # allocation-bomb guard: unlike the raw
             # paths, RLE's output size comes from header fields alone —
             # a tiny file claiming huge dims would allocate unbounded
             raise ValueError(f"RLE8 BMP dimensions {w}x{h} exceed the decoder bound")
@@ -452,7 +523,7 @@ def encode_png(
     no codec lib. Defaults produce the 8-bit truecolor non-interlaced
     stream this fixture family always wrote (byte-identical); ``ctype``
     /``depth``/``interlace`` unlock the rest of the spec matrix the
-    round-8 decoder handles: palette (3, depths 1/2/4/8, PLTE built from
+    decoder handles: palette (3, depths 1/2/4/8, PLTE built from
     the distinct colors), grayscale (0) and gray+alpha (4 — requires
     R==G==B; sub-byte gray requires exact (2^d-1)-level values so the
     round trip is lossless), RGBA (6 — a deterministic alpha ramp
@@ -785,7 +856,7 @@ def decode_png(payload: bytes) -> "np.ndarray":
         if interlace
         else [(0, 0, 1, 1, w, h)]
     )
-    # Bounded inflate (round-6 advice): IHDR is parsed first, so the exact
+    # Bounded inflate: IHDR is parsed first, so the exact
     # scanline byte count is known — cap the DEFLATE output there instead
     # of letting a bomb-ratio IDAT (tiny input, huge expansion) allocate
     # unbounded memory on an executor before the size check runs. Any
@@ -905,8 +976,8 @@ class _BitReader:
         """Skip to just past the next RST marker and clear the bit buffer.
         A truncated stream (scan runs off the end before finding a marker)
         raises ``ValueError`` like every other malformed-payload path —
-        not ``IndexError`` (round-6 advice: direct callers outside the
-        non-strict feature path deserve the idiomatic error)."""
+        not ``IndexError`` (direct callers outside the non-strict
+        feature path deserve the idiomatic error)."""
         self.buf = self.nbits = 0
         while self.pos + 1 < len(self.data):
             if self.data[self.pos] == 0xFF and 0xD0 <= self.data[self.pos + 1] <= 0xD7:
@@ -961,7 +1032,7 @@ def decode_jpeg(payload: bytes) -> "np.ndarray":
     hierarchical JPEGs raise ``NotImplementedError`` (a real codec gate,
     stated honestly).
 
-    Cost note (round-6 advice): the per-bit Python Huffman decode is fine
+    Cost note: the per-bit Python Huffman decode is fine
     for the graded thumbnail fixtures but would bottleneck a real
     binary-column corpus of large images — for those, read through the
     zero-Python JVM source ``sources.readers.read_images`` (ImageIO does
@@ -1584,19 +1655,31 @@ def decode_image(payload: bytes, fmt: str | None = None) -> "np.ndarray":
     raise ValueError("unrecognized image payload")
 
 
+#: what :func:`decode_image` raises on a malformed payload — truncated
+#: PNG/BMP/JPEG streams, a corrupt JPEG naming an undefined DQT/DHT id, a
+#: broken DEFLATE stream. Every non-strict image stage degrades these
+#: instead of failing the job.
+_MALFORMED_IMAGE = (ValueError, IndexError, KeyError, struct.error, zlib.error)
+
+
+def _md5_bytes(key: "int | str", n: int) -> bytes:
+    """The first ``n`` bytes of the concatenated md5("{key}:{block}")
+    digests — the fixture byte stream every oracle re-derives in SQL."""
+    import hashlib
+
+    return b"".join(
+        hashlib.md5(f"{key}:{b}".encode()).digest() for b in range((n + 15) // 16)
+    )[:n]
+
+
 def md5_pixels(doc_id: int, width: int, height: int) -> "np.ndarray":
     """Deterministic (H, W, 3) uint8 pixels for a row id: the byte stream is
     the concatenation of md5("{doc_id}:{block}") digests — chosen over a
     numpy RNG because the exact same bytes are reconstructible in ANSI SQL
     (md5 hex + digit arithmetic), which lets the driver's DuckDB oracle
     verify the full encode→decode→feature pipeline (mm2)."""
-    import hashlib
-
-    n = width * height * 3
-    buf = b"".join(
-        hashlib.md5(f"{doc_id}:{b}".encode()).digest() for b in range((n + 15) // 16)
-    )
-    return np.frombuffer(buf[:n], dtype=np.uint8).reshape(height, width, 3).copy()
+    buf = _md5_bytes(doc_id, width * height * 3)
+    return np.frombuffer(buf, dtype=np.uint8).reshape(height, width, 3).copy()
 
 
 def attach_ppm_payloads(
@@ -1612,13 +1695,6 @@ def attach_ppm_payloads(
     scanline filter exercised). This is the test-fixture source for the
     real decode path — production replaces it with a ``binaryFile`` read
     from object storage."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
     # lossless JPEG varies the T.81 predictor with the row id so all seven
     # predictors appear in the graded corpus, not just one; lossless WebP
     # rotates through the VP8L feature combinations (plain / LZ77 /
@@ -1642,7 +1718,7 @@ def attach_ppm_payloads(
             dict(use_palette=True),
         )
         # did // 20 because mm14 feeds multiples of 20 — did % 8 would
-        # collapse to two combos (gcd trap; found in the round-7 review)
+        # collapse to two combos (gcd trap)
         return encode_webp_lossless(img, **combos[(did // 20) % len(combos)])
 
     def _gif(img: "np.ndarray", did: int) -> bytes:
@@ -1671,7 +1747,7 @@ def attach_ppm_payloads(
     def _tiffx(img: "np.ndarray", did: int) -> bytes:
         from .tiff import encode_tiff
 
-        # round-8 extended-TIFF matrix: tiles / 16-bit / planar-2 (incl.
+        # extended-TIFF matrix: tiles / 16-bit / planar-2 (incl.
         # the predictor-2@16-bit stream ImageIO itself rejects), indexed
         # by did // 25 because mm23 feeds multiples of 25 (gcd trap)
         combos = (
@@ -1689,7 +1765,7 @@ def attach_ppm_payloads(
         return encode_tiff(img, **combos[(did // 25) % len(combos)])
 
     def _pngv(img: "np.ndarray", did: int) -> bytes:
-        # rotate the round-8 PNG spec matrix (every variant preserves the
+        # rotate the PNG spec matrix (every variant preserves the
         # RGB pixels, so the md5-pixel oracle applies unchanged); indexed
         # by did // 25 because mm21 feeds multiples of 25 (gcd trap)
         combos = (
@@ -1728,25 +1804,14 @@ def attach_ppm_payloads(
         "tiff": _tiff,
         "tiffx": _tiffx,
     }[fmt]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                img = md5_pixels(int(did), width, height)
-                payloads.append(bytearray(encoder(img, int(did))))
-                metas.append(
-                    {
-                        "media_type": "image",
-                        "format": fmt,
-                        "width": width,
-                        "height": height,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads, "media_meta": metas})
-
-    return _widen(df.select(id_col), fmt).mapInPandas(fn, schema=out_schema)
+    meta = _media_meta("image", fmt, width, height)
+    return _map_rows(
+        df,
+        [id_col],
+        _payload_schema(id_col),
+        lambda did: [(did, encoder(md5_pixels(did, width, height), did), meta)],
+        widen=fmt,
+    )
 
 
 def attach_ppm_payloads_neardup(
@@ -1763,26 +1828,17 @@ def attach_ppm_payloads_neardup(
     perceptually identical. Every step is re-derivable in ANSI SQL, which
     lets the aHash oracle verify the whole perceptual pipeline bit-exactly.
     Production replaces this with a ``binaryFile`` scan."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-        ]
-    )
     n = width * height * 3
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                flat = md5_pixels(did % group_mod, width, height).reshape(-1)
-                idx = (did * 7) % n
-                flat[idx] = (int(flat[idx]) + (did // group_mod) % 7) % 256
-                payloads.append(bytearray(encode_ppm(flat.reshape(height, width, 3))))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
+    def row(did: int) -> "list[tuple]":
+        flat = md5_pixels(did % group_mod, width, height).reshape(-1)
+        idx = (did * 7) % n
+        flat[idx] = (int(flat[idx]) + (did // group_mod) % 7) % 256
+        return [(did, encode_ppm(flat.reshape(height, width, 3)))]
 
-    return _widen(df.select(id_col), "ppm").mapInPandas(fn, schema=out_schema)
+    return _map_rows(
+        df, [id_col], _payload_schema(id_col, media_meta=False), row, widen="ppm"
+    )
 
 
 #: (doc_id, hash_hi, hash_lo) — the 64-bit perceptual hash split into two
@@ -1823,26 +1879,15 @@ def image_ahash(
     for an equi-join/group-by bucket step. Partition-local, Arrow-batched,
     no shuffle; undecodable payloads degrade to NULL hashes."""
 
-    def one(payload: bytes) -> tuple[int | None, int | None]:
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
         if payload is None:
-            return None, None
+            return [(did, None, None)]
         try:
-            return ahash64(decode_image(payload), grid)
-        except (NotImplementedError, ValueError, IndexError, struct.error):
-            return None, None
+            return [(did, *ahash64(decode_image(payload), grid))]
+        except (NotImplementedError, *_MALFORMED_IMAGE):
+            return [(did, None, None)]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = pdf[payload_col].map(one)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "hash_hi": hashes.map(lambda t: t[0]),
-                    "hash_lo": hashes.map(lambda t: t[1]),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=AHASH_SCHEMA)
+    return _map_rows(df, [id_col, payload_col], AHASH_SCHEMA, row)
 
 
 def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
@@ -1876,8 +1921,6 @@ def decode_image_features(
     may kill the job in non-strict mode.
     """
 
-    import zlib
-
     def one(payload: bytes) -> list[float] | None:
         if payload is None:
             return None
@@ -1890,9 +1933,7 @@ def decode_image_features(
             if strict:
                 raise
             return _fake_feature(payload, dim)
-        except (ValueError, IndexError, KeyError, struct.error, zlib.error):
-            # KeyError: a corrupt JPEG referencing an undefined DQT/DHT id —
-            # every malformed-payload class must degrade, not kill the job
+        except _MALFORMED_IMAGE:
             if strict:
                 raise NotImplementedError(
                     "compressed/unknown image decode requires a codec library "
@@ -1900,17 +1941,12 @@ def decode_image_features(
                 ) from None
             return _fake_feature(payload, dim)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf[payload_col].map(lambda b: 0 if b is None else len(b)).astype("int64"),
-                    "feature": pdf[payload_col].map(one),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=IMAGE_FEATURES)
+    return _map_rows(
+        df,
+        [id_col, payload_col],
+        IMAGE_FEATURES,
+        lambda did, p: [(did, 0 if p is None else len(p), one(p))],
+    )
 
 
 def resize_nearest(img: "np.ndarray", out_width: int, out_height: int) -> "np.ndarray":
@@ -1934,49 +1970,24 @@ def resize_images(
     """Image resize via ``mapInPandas``: decode (PPM/BMP, pure numpy),
     nearest-neighbor resample, re-encode as PPM. Payload→payload — the
     batch-preprocessing step of a vision-training pipeline. Compressed
-    inputs follow the same codec gate as :func:`decode_image_features`
-    (``strict=True`` raises, otherwise the row degrades to NULL payload).
+    inputs and malformed payloads follow the same codec gate as
+    :func:`decode_image_features` (``strict=True`` raises, otherwise the
+    row degrades to NULL payload).
     Partition-local fan-out: no shuffle, Arrow-batched."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("image", "ppm", out_width, out_height)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for p in pdf[payload_col]:
-                if p is None:
-                    payloads.append(None)
-                    metas.append(None)
-                    continue
-                try:
-                    img = decode_image(bytes(p))
-                except NotImplementedError:
-                    if strict:
-                        raise
-                    payloads.append(None)
-                    metas.append(None)
-                    continue
-                out = resize_nearest(img, out_width, out_height)
-                payloads.append(bytearray(encode_ppm(out)))
-                metas.append(
-                    {
-                        "media_type": "image",
-                        "format": "ppm",
-                        "width": out_width,
-                        "height": out_height,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    def row(did: int, p: bytes | None) -> "list[tuple]":
+        if p is None:
+            return [(did, None, None)]
+        try:
+            img = decode_image(p)
+        except (NotImplementedError, *_MALFORMED_IMAGE):
+            if strict:
+                raise
+            return [(did, None, None)]
+        return [(did, encode_ppm(resize_nearest(img, out_width, out_height)), meta)]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col, payload_col], _payload_schema(id_col), row)
 
 
 def image_channel_sums(
@@ -1986,33 +1997,21 @@ def image_channel_sums(
     verification-friendly feature block (no float accumulation at all, so
     any engine that can reconstruct the bytes agrees bit-for-bit)."""
     out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("c0_sum", T.LongType(), True),
-            T.StructField("c1_sum", T.LongType(), True),
-            T.StructField("c2_sum", T.LongType(), True),
-            T.StructField("n_pix", T.LongType(), True),
+        [T.StructField(id_col, T.LongType(), False)]
+        + [
+            T.StructField(c, T.LongType(), True)
+            for c in ("c0_sum", "c1_sum", "c2_sum", "n_pix")
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    rows.append((int(did), None, None, None, None))
-                    continue
-                img = decode_image(bytes(p)).astype(np.int64)
-                s = img.sum(axis=(0, 1))
-                rows.append(
-                    (int(did), int(s[0]), int(s[1]), int(s[2]),
-                     int(img.shape[0] * img.shape[1]))
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "c0_sum", "c1_sum", "c2_sum", "n_pix"]
-            )
+    def row(did: int, p: bytes | None) -> "list[tuple]":
+        if p is None:
+            return [(did, None, None, None, None)]
+        img = decode_image(p).astype(np.int64)
+        s = img.sum(axis=(0, 1))
+        return [(did, int(s[0]), int(s[1]), int(s[2]), img.shape[0] * img.shape[1])]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col, payload_col], out_schema, row)
 
 
 def sample_frames(
@@ -2027,36 +2026,38 @@ def sample_frames(
     with keyframe extraction; the iterator contract (rows out ≠ rows in) is
     the part that matters for the distributed plan."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_bytes = [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                for j in range(min(max_frames, max(1, len(payload) // every_n_bytes))):
-                    out_ids.append(did)
-                    out_idx.append(j)
-                    out_bytes.append(bytes(payload[j * every_n_bytes : (j + 1) * every_n_bytes]))
-            yield pd.DataFrame({"doc_id": out_ids, "frame_idx": out_idx, "frame_bytes": out_bytes})
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        n = min(max_frames, max(1, len(payload) // every_n_bytes))
+        return [
+            (did, j, payload[j * every_n_bytes : (j + 1) * every_n_bytes])
+            for j in range(n)
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=FRAME_SCHEMA)
+    return _map_rows(df, [id_col, payload_col], FRAME_SCHEMA, row)
+
+
+def _riff_wave(fmt: bytes, data: bytes) -> bytes:
+    """RIFF/WAVE file from a complete ``fmt `` chunk and the sample bytes."""
+    return (
+        b"RIFF" + struct.pack("<I", 4 + len(fmt) + 8 + len(data)) + b"WAVE"
+        + fmt + b"data" + struct.pack("<I", len(data)) + data
+    )
 
 
 def encode_wav(samples: "np.ndarray", rate: int = 16000) -> bytes:
     """16-bit PCM RIFF/WAVE encoder — (n,) mono or (n_frames, channels)
     multichannel int16 samples (row-major == frame-interleaved, the WAV
     layout) — the audio twin of :func:`encode_ppm`; pure struct/numpy,
-    no codec lib. Mono output is byte-identical to the historical
-    encoder (fixture stability)."""
+    no codec lib. Mono output is byte-identical to the mono-only
+    encoder's (fixture stability)."""
     samples = np.asarray(samples)
     ch = 1 if samples.ndim == 1 else samples.shape[1]
-    data = samples.astype("<i2").tobytes()
-    n = len(data)
-    hdr = b"RIFF" + struct.pack("<I", 36 + n) + b"WAVE"
     fmt = b"fmt " + struct.pack(
         "<IHHIIHH", 16, 1, ch, rate, rate * 2 * ch, 2 * ch, 16
     )
-    return hdr + fmt + b"data" + struct.pack("<I", n) + data
+    return _riff_wave(fmt, samples.astype("<i2").tobytes())
 
 
 def encode_wav_float(
@@ -2073,18 +2074,14 @@ def encode_wav_float(
     if bits not in (32, 64):
         raise ValueError("float WAV must be 32- or 64-bit")
     data = samples.astype("<f4" if bits == 32 else "<f8").tobytes()
-    n = len(data)
     block = bits // 8
-    hdr = b"RIFF"
     if extensible:
         fmt_body = struct.pack(
             "<HHIIHHHHI", 0xFFFE, 1, rate, rate * block, block, bits, 22, bits, 4
         ) + struct.pack("<H", 3) + b"\x00\x00" + _WAVE_EXT_GUID_TAIL
     else:
         fmt_body = struct.pack("<HHIIHH", 3, 1, rate, rate * block, block, bits)
-    fmt = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-    riff_len = 4 + len(fmt) + 8 + n
-    return hdr + struct.pack("<I", riff_len) + b"WAVE" + fmt + b"data" + struct.pack("<I", n) + data
+    return _riff_wave(b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body, data)
 
 
 def _g711_luts() -> tuple["np.ndarray", "np.ndarray"]:
@@ -2170,8 +2167,8 @@ _MS_ADAPT = (
 
 
 #: Computational saturation for the MS-ADPCM delta walk. The spec clamps
-#: delta's LOWER bound only (16); an upper clamp at 32767 (used through
-#: round 7) deviated from reference decoders (ffmpeg et al.) on loud
+#: delta's LOWER bound only (16); an upper clamp at 32767 would deviate
+#: from reference decoders (ffmpeg et al.) on loud
 #: streams where adaptation legally pushes delta past int16. Delta only
 #: influences decoded samples while it is below ~2**17 (|pred| ≤ 3·32767,
 #: so any larger delta saturates every nonzero nibble to ±32767), so this
@@ -2338,13 +2335,7 @@ def md5_samples(doc_id: int, n_samples: int) -> "np.ndarray":
     """Deterministic int16 PCM samples for a row id from the same md5 byte
     stream as :func:`md5_pixels` — SQL-reconstructible, so the audio decode
     pipeline is oracle-verifiable end-to-end."""
-    import hashlib
-
-    n = n_samples * 2
-    buf = b"".join(
-        hashlib.md5(f"{doc_id}:{b}".encode()).digest() for b in range((n + 15) // 16)
-    )
-    return np.frombuffer(buf[:n], dtype="<i2").copy()
+    return np.frombuffer(_md5_bytes(doc_id, n_samples * 2), dtype="<i2").copy()
 
 
 def attach_wav_payloads(
@@ -2353,31 +2344,14 @@ def attach_wav_payloads(
     """Give every row a REAL decodable audio payload (mono PCM16 WAV with
     :func:`md5_samples` content) — test-fixture source for the audio decode
     path; production replaces it with a ``binaryFile`` read."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    meta = _media_meta("audio", "wav", duration_ms=n_samples * 1000 // rate)
+    return _map_rows(
+        df,
+        [id_col],
+        _payload_schema(id_col),
+        lambda did: [(did, encode_wav(md5_samples(did, n_samples), rate), meta)],
+        widen="wav",
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                payloads.append(bytearray(encode_wav(md5_samples(int(did), n_samples), rate)))
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": "wav",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": n_samples * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads, "media_meta": metas})
-
-    return _widen(df.select(id_col), "wav").mapInPandas(fn, schema=out_schema)
 
 
 def attach_g711_payloads(
@@ -2389,45 +2363,15 @@ def attach_g711_payloads(
     A-law (6) otherwise — so one graded query exercises BOTH expansions.
     Production replaces this with a ``binaryFile`` read of telephony
     captures."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    ms = n_samples * 1000 // rate
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int) -> "list[tuple]":
+        code = 7 if did % 10 == 0 else 6
+        fmt = b"fmt " + struct.pack("<IHHIIHH", 16, code, 1, rate, rate, 1, 8)
+        meta = _media_meta("audio", "ulaw" if code == 7 else "alaw", duration_ms=ms)
+        return [(did, _riff_wave(fmt, _md5_bytes(did, n_samples)), meta)]
 
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                buf = b"".join(
-                    hashlib.md5(f"{did}:{b}".encode()).digest()
-                    for b in range((n_samples + 15) // 16)
-                )[:n_samples]
-                code = 7 if did % 10 == 0 else 6
-                hdr = b"RIFF" + struct.pack("<I", 36 + n_samples) + b"WAVE"
-                fmt = b"fmt " + struct.pack(
-                    "<IHHIIHH", 16, code, 1, rate, rate, 1, 8
-                )
-                payloads.append(
-                    bytearray(hdr + fmt + b"data" + struct.pack("<I", n_samples) + buf)
-                )
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": "ulaw" if code == 7 else "alaw",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": n_samples * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads, "media_meta": metas})
-
-    return _widen(df.select(id_col), "g711").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="g711")
 
 
 def attach_adpcm_payloads(
@@ -2438,46 +2382,18 @@ def attach_adpcm_payloads(
     starting step size is exercised across the corpus) and whose nibble
     data is the md5 byte stream — 2·n_data_bytes + 1 samples per row. The
     mm12 oracle replays the exact prediction recursion in SQL."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    fmt = b"fmt " + struct.pack(
+        "<IHHIIHH", 16, 0x11, 1, rate, rate // 2, n_data_bytes + 4, 4
     )
-    block_align = n_data_bytes + 4
+    meta = _media_meta(
+        "audio", "ima-adpcm", duration_ms=(2 * n_data_bytes + 1) * 1000 // rate
+    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int) -> "list[tuple]":
+        block = struct.pack("<hBB", 0, did % 89, 0) + _md5_bytes(did, n_data_bytes)
+        return [(did, _riff_wave(fmt, block), meta)]
 
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                buf = b"".join(
-                    hashlib.md5(f"{did}:{b}".encode()).digest()
-                    for b in range((n_data_bytes + 15) // 16)
-                )[:n_data_bytes]
-                block = struct.pack("<hBB", 0, did % 89, 0) + buf
-                hdr = b"RIFF" + struct.pack("<I", 36 + len(block)) + b"WAVE"
-                fmt = b"fmt " + struct.pack(
-                    "<IHHIIHH", 16, 0x11, 1, rate, rate // 2, block_align, 4
-                )
-                payloads.append(
-                    bytearray(hdr + fmt + b"data" + struct.pack("<I", len(block)) + block)
-                )
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": "ima-adpcm",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": (2 * n_data_bytes + 1) * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads, "media_meta": metas})
-
-    return _widen(df.select(id_col), "adpcm").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="adpcm")
 
 
 def attach_msadpcm_payloads(
@@ -2489,55 +2405,20 @@ def attach_msadpcm_payloads(
     derived from the id, with the md5 byte stream as the nibble data —
     ``2·n_data_bytes + 2`` samples per row. The mm19 oracle replays the
     exact prediction/adaptation recursion in SQL."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    fmt = b"fmt " + struct.pack(
+        "<IHHIIHH", 16, 0x02, 1, rate, rate // 2, n_data_bytes + 7, 4
     )
-    block_align = n_data_bytes + 7
+    meta = _media_meta(
+        "audio", "ms-adpcm", duration_ms=(2 * n_data_bytes + 2) * 1000 // rate
+    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int) -> "list[tuple]":
+        head = struct.pack(
+            "<Bhhh", did % 7, 16 + did % 100, (did * 29) % 1000, -((did * 13) % 1000)
+        )
+        return [(did, _riff_wave(fmt, head + _md5_bytes(did, n_data_bytes)), meta)]
 
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                buf = b"".join(
-                    hashlib.md5(f"{did}:{b}".encode()).digest()
-                    for b in range((n_data_bytes + 15) // 16)
-                )[:n_data_bytes]
-                block = (
-                    struct.pack(
-                        "<Bhhh",
-                        did % 7,
-                        16 + did % 100,
-                        (did * 29) % 1000,
-                        -((did * 13) % 1000),
-                    )
-                    + buf
-                )
-                hdr = b"RIFF" + struct.pack("<I", 36 + len(block)) + b"WAVE"
-                fmt = b"fmt " + struct.pack(
-                    "<IHHIIHH", 16, 0x02, 1, rate, rate // 2, block_align, 4
-                )
-                payloads.append(
-                    bytearray(hdr + fmt + b"data" + struct.pack("<I", len(block)) + block)
-                )
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": "ms-adpcm",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": (2 * n_data_bytes + 2) * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads, "media_meta": metas})
-
-    return _widen(df.select(id_col), "msadpcm").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="msadpcm")
 
 
 def attach_float_wav_payloads(
@@ -2551,42 +2432,15 @@ def attach_float_wav_payloads(
     shape rotates per doc: 64-bit when ``id % 20 == 10`` (else 32-bit),
     wrapped in a WAVE_FORMAT_EXTENSIBLE fmt chunk when ``id % 30 == 20``
     — all four format-3 header paths appear in the graded corpus."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    ms = n_samples * 1000 // rate
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                x = md5_samples(did, n_samples).astype(np.float64) / 32768.0
-                bits = 64 if did % 20 == 10 else 32
-                payloads.append(
-                    bytearray(
-                        encode_wav_float(
-                            x, rate, bits=bits, extensible=(did % 30 == 20)
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": f"float{bits}-wav",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": n_samples * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    def row(did: int) -> "list[tuple]":
+        x = md5_samples(did, n_samples).astype(np.float64) / 32768.0
+        bits = 64 if did % 20 == 10 else 32
+        payload = encode_wav_float(x, rate, bits=bits, extensible=(did % 30 == 20))
+        return [(did, payload, _media_meta("audio", f"float{bits}-wav", duration_ms=ms))]
 
-    return _widen(df.select(id_col), "float_wav").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="float_wav")
 
 
 def attach_stereo_wav_payloads(
@@ -2596,34 +2450,13 @@ def attach_stereo_wav_payloads(
     stream as ``n_frames`` interleaved L/R frames (sample ``2k`` is
     left, ``2k+1`` right — the WAV channel order), so the mm22 oracle
     re-derives each channel with ``si % 2`` arithmetic."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("audio", "wav-stereo", duration_ms=n_frames * 1000 // rate)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                frames = md5_samples(int(did), 2 * n_frames).reshape(n_frames, 2)
-                payloads.append(bytearray(encode_wav(frames, rate)))
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": "wav-stereo",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": n_frames * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    def row(did: int) -> "list[tuple]":
+        frames = md5_samples(did, 2 * n_frames).reshape(n_frames, 2)
+        return [(did, encode_wav(frames, rate), meta)]
 
-    return _widen(df.select(id_col), "stereo_wav").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="stereo_wav")
 
 
 #: Per-channel feature schema for multichannel audio
@@ -2649,46 +2482,22 @@ def decode_audio_channel_features(
     Shuffle-free like every decode op; the channel fan-out happens
     inside the Arrow batch."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chans, n_samp, peak, zc, rms = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                if bytes(payload[:4]) == b"fLaC":
-                    from .flac import decode_flac
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        if payload[:4] == b"fLaC":
+            from .flac import decode_flac
 
-                    _, x = decode_flac(bytes(payload))
-                else:
-                    _, x = decode_wav(bytes(payload))
-                if x.ndim == 1:
-                    x = x[:, None]
-                for c in range(x.shape[1]):
-                    xc = x[:, c].astype(np.int64)
-                    ids.append(did)
-                    chans.append(c)
-                    n_samp.append(len(xc))
-                    peak.append(int(np.abs(xc).max()) if len(xc) else 0)
-                    zc.append(
-                        int(((xc[:-1] * xc[1:]) < 0).sum()) if len(xc) > 1 else 0
-                    )
-                    rms.append(
-                        float(np.sqrt((xc * xc).sum() / len(xc))) if len(xc) else 0.0
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "channel": pd.array(chans, dtype="int32"),
-                    "n_samples": pd.array(n_samp, dtype="Int64"),
-                    "peak": pd.array(peak, dtype="Int64"),
-                    "zero_crossings": pd.array(zc, dtype="Int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                }
-            )
+            _, x = decode_flac(payload)
+        else:
+            _, x = decode_wav(payload)
+        if x.ndim == 1:
+            x = x[:, None]
+        return [
+            (did, c, *_pcm_stats(x[:, c].astype(np.int64))) for c in range(x.shape[1])
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=AUDIO_CHANNEL_FEATURES
-    )
+    return _map_rows(df, [id_col, payload_col], AUDIO_CHANNEL_FEATURES, row)
 
 
 def attach_flac_payloads(
@@ -2701,13 +2510,6 @@ def attach_flac_payloads(
     so mm3's sample-level oracle grades the full bitstream round trip."""
     from .flac import encode_flac
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
     combos = (
         dict(mode="verbatim"),
         dict(mode="fixed0"),
@@ -2719,33 +2521,13 @@ def attach_flac_payloads(
         dict(mode="fixed2", blocksize=n_samples // 2, partition_order=1),
         dict(mode="fixed1", escape_first=True),
     )
+    meta = _media_meta("audio", "flac", duration_ms=n_samples * 1000 // rate)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    bytearray(
-                        encode_flac(
-                            md5_samples(did, n_samples),
-                            rate=rate,
-                            **combos[did % len(combos)],
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "audio",
-                        "format": "flac",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": n_samples * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads, "media_meta": metas})
+    def row(did: int) -> "list[tuple]":
+        x = md5_samples(did, n_samples)
+        return [(did, encode_flac(x, rate=rate, **combos[did % len(combos)]), meta)]
 
-    return _widen(df.select(id_col), "flac").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="flac")
 
 
 AUDIO_FEATURES = T.StructType(
@@ -2772,6 +2554,21 @@ def decode_audio(payload: bytes) -> tuple[int, "np.ndarray"]:
         return rate, x.reshape(-1).astype(np.int64)
     rate, x = decode_wav(payload)
     return rate, (x.reshape(-1) if x.ndim > 1 else x)
+
+
+def _pcm_stats(x: "np.ndarray") -> tuple:
+    """(n_samples, peak, zero_crossings, rms) of one int64 or float64
+    sample vector — the audio feature block. ``peak`` keeps the vector's
+    type, so integer PCM peaks stay exact ints."""
+    n = len(x)
+    if n == 0:
+        return 0, x.dtype.type(0).item(), 0, 0.0
+    return (
+        n,
+        np.abs(x).max().item(),
+        int(((x[:-1] * x[1:]) < 0).sum()),
+        float(np.sqrt((x * x).sum() / n)),
+    )
 
 
 #: Feature schema for float-PCM audio: peak is a DOUBLE (nominal [-1, 1]
@@ -2802,49 +2599,23 @@ def decode_audio_features(
     whose float samples would otherwise be silently truncated; the int
     path raises on a float decode to keep that contract honest."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_bytes, n_samp, peak, zc, rms = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(did)
-                n_bytes.append(0 if payload is None else len(payload))
-                if payload is None:
-                    n_samp.append(None); peak.append(None); zc.append(None); rms.append(None)
-                    continue
-                _, x = decode_audio(bytes(payload))
-                if float_features:
-                    xf = x.astype(np.float64)
-                    n_samp.append(len(x))
-                    peak.append(float(np.abs(xf).max()) if len(x) else 0.0)
-                    zc.append(int(((xf[:-1] * xf[1:]) < 0).sum()) if len(x) > 1 else 0)
-                    rms.append(float(np.sqrt((xf * xf).sum() / len(x))) if len(x) else 0.0)
-                    continue
-                if np.issubdtype(x.dtype, np.floating):
-                    raise TypeError(
-                        "float-PCM audio decoded; call decode_audio_features"
-                        "(float_features=True) — int16 features would truncate"
-                    )
-                xl = x.astype(np.int64)
-                n_samp.append(len(x))
-                peak.append(int(np.abs(xl).max()) if len(x) else 0)
-                zc.append(int(((xl[:-1] * xl[1:]) < 0).sum()) if len(x) > 1 else 0)
-                rms.append(float(np.sqrt((xl * xl).sum() / len(x))) if len(x) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_bytes": pd.array(n_bytes, dtype="int64"),
-                    "n_samples": pd.array(n_samp, dtype="Int64"),
-                    "peak": pd.array(
-                        peak, dtype="float64" if float_features else "Int64"
-                    ),
-                    "zero_crossings": pd.array(zc, dtype="Int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                }
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return [(did, 0, None, None, None, None)]
+        _, x = decode_audio(payload)
+        if float_features:
+            x = x.astype(np.float64)
+        elif np.issubdtype(x.dtype, np.floating):
+            raise TypeError(
+                "float-PCM audio decoded; call decode_audio_features"
+                "(float_features=True) — int16 features would truncate"
             )
+        else:
+            x = x.astype(np.int64)
+        return [(did, len(payload), *_pcm_stats(x))]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=AUDIO_FEATURES_F if float_features else AUDIO_FEATURES
-    )
+    schema = AUDIO_FEATURES_F if float_features else AUDIO_FEATURES
+    return _map_rows(df, [id_col, payload_col], schema, row)
 
 
 def dft_quantized_basis(period: int, scale: int = 10_000) -> tuple[list[int], list[int]]:
@@ -2889,36 +2660,19 @@ def decode_audio_dft_bands(
     c8, s8 = dft_quantized_basis(n_fft // 8)
     bases = [(np.array(c4), np.array(s4)), (np.array(c8), np.array(s8))]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, n_samp, e4s, e8s = [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(did)
-                if payload is None:
-                    n_samp.append(None); e4s.append(None); e8s.append(None)
-                    continue
-                _, x = decode_wav(bytes(payload))
-                xl = x[:n_fft].astype(np.int64)
-                n_samp.append(len(xl))
-                idx = np.arange(len(xl))
-                energies = []
-                for cq, sq in bases:
-                    m = len(cq)
-                    sc = int((xl * cq[idx % m]).sum())
-                    ss = int((xl * sq[idx % m]).sum())
-                    energies.append(float(sc) * float(sc) + float(ss) * float(ss))
-                e4s.append(energies[0])
-                e8s.append(energies[1])
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": pd.array(n_samp, dtype="Int64"),
-                    "e_band4": pd.array(e4s, dtype="float64"),
-                    "e_band8": pd.array(e8s, dtype="float64"),
-                }
-            )
+    def energy(xl: "np.ndarray", cq: "np.ndarray", sq: "np.ndarray") -> float:
+        idx = np.arange(len(xl)) % len(cq)
+        sc = int((xl * cq[idx]).sum())
+        ss = int((xl * sq[idx]).sum())
+        return float(sc) * float(sc) + float(ss) * float(ss)
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=AUDIO_DFT)
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return [(did, None, None, None)]
+        xl = decode_wav(payload)[1][:n_fft].astype(np.int64)
+        return [(did, len(xl), *(energy(xl, cq, sq) for cq, sq in bases))]
+
+    return _map_rows(df, [id_col, payload_col], AUDIO_DFT, row)
 
 
 #: (doc_id, frame_idx, frame) — fixed-size synthetic video frames.
@@ -2957,31 +2711,19 @@ def attach_video_frames(
     arithmetic), so the shot-boundary oracle verifies the full
     decode→difference pipeline bit-exactly. Production replaces this with
     a keyframe decoder over a ``binaryFile`` scan."""
-    import hashlib
 
-    blocks = (frame_bytes + 15) // 16
+    def frame(did: int, f: int) -> bytes:
+        buf = _md5_bytes(f"{did}:{f // shot_len}", frame_bytes)
+        base = np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
+        return ((base + f % shot_len) % 256).astype(np.uint8).tobytes()
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                for f in range(n_frames):
-                    s = f // shot_len
-                    buf = b"".join(
-                        hashlib.md5(f"{did}:{s}:{b}".encode()).digest()
-                        for b in range(blocks)
-                    )[:frame_bytes]
-                    base = np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
-                    frame = ((base + f % shot_len) % 256).astype(np.uint8)
-                    ids.append(did)
-                    idxs.append(f)
-                    frames.append(frame.tobytes())
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    return _widen(df.select(id_col), "video").mapInPandas(fn, schema=VIDEO_FRAME_SCHEMA)
+    return _map_rows(
+        df,
+        [id_col],
+        VIDEO_FRAME_SCHEMA,
+        lambda did: [(did, f, frame(did, f)) for f in range(n_frames)],
+        widen="video",
+    )
 
 
 def encode_avi_mjpeg(
@@ -3000,7 +2742,7 @@ def encode_avi_mjpeg(
     samples split into per-frame '01wb' chunks interleaved after each
     video chunk, the standard AVI muxing shape — for
     :func:`decode_avi_audio`; audio=None output is byte-identical to the
-    pre-r8 encoder (mm15 fixture stability)."""
+    video-only encoder (mm15 fixture stability)."""
 
     def chunk(tag: bytes, body: bytes) -> bytes:
         return tag + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
@@ -3185,48 +2927,17 @@ def attach_avi_av_payloads(
     md5-pixel frames muxed with the md5 int16 sample stream as an
     interleaved PCM16 'auds' track — the mm24 fixture for the container
     demux path."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
+    meta = _media_meta("video", "avi-av", 8, 6, n_samples * 1000 // rate)
+
+    def row(did: int) -> "list[tuple]":
+        frames = [
+            encode_jpeg_lossless(md5_pixels(did * 7 + i, 8, 6), predictor=1 + (did + i) % 7)
+            for i in range(n_frames)
         ]
-    )
+        audio = md5_samples(did, n_samples)
+        return [(did, encode_avi_mjpeg(frames, 8, 6, audio=audio, audio_rate=rate), meta)]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                frames = [
-                    encode_jpeg_lossless(
-                        md5_pixels(did * 7 + i, 8, 6), predictor=1 + (did + i) % 7
-                    )
-                    for i in range(n_frames)
-                ]
-                payloads.append(
-                    bytearray(
-                        encode_avi_mjpeg(
-                            frames, 8, 6,
-                            audio=md5_samples(did, n_samples),
-                            audio_rate=rate,
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "video",
-                        "format": "avi-av",
-                        "width": 8,
-                        "height": 6,
-                        "duration_ms": n_samples * 1000 // rate,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col), "avi_av").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="avi_av")
 
 
 def decode_av_features(
@@ -3239,33 +2950,13 @@ def decode_av_features(
     multimodal training pipeline uses to align A/V streams. Shuffle-free
     like every decode op."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nf, n_samp, peak, zc, rms = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                ids.append(did)
-                nf.append(len(decode_avi_mjpeg(raw)))
-                _, x = decode_avi_audio(raw)
-                xl = x.reshape(-1).astype(np.int64)
-                n_samp.append(len(xl))
-                peak.append(int(np.abs(xl).max()) if len(xl) else 0)
-                zc.append(int(((xl[:-1] * xl[1:]) < 0).sum()) if len(xl) > 1 else 0)
-                rms.append(float(np.sqrt((xl * xl).sum() / len(xl))) if len(xl) else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_frames": pd.array(nf, dtype="Int64"),
-                    "n_samples": pd.array(n_samp, dtype="Int64"),
-                    "peak": pd.array(peak, dtype="Int64"),
-                    "zero_crossings": pd.array(zc, dtype="Int64"),
-                    "rms": pd.array(rms, dtype="float64"),
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        x = decode_avi_audio(payload)[1].reshape(-1).astype(np.int64)
+        return [(did, len(decode_avi_mjpeg(payload)), *_pcm_stats(x))]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=AV_FEATURES)
+    return _map_rows(df, [id_col, payload_col], AV_FEATURES, row)
 
 
 #: WARC-ingest reduction: record counts + response-payload identity
@@ -3292,41 +2983,14 @@ def attach_warc_payloads(
     replaces this with a ``binaryFile`` read of crawl segments."""
     from .warc import encode_warc
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    def row(did: int, text: str | None) -> "list[tuple]":
+        gz = did % 20 != 10
+        payload = encode_warc([(did, (text or "").encode("utf-8"))], per_record_gzip=gz)
+        return [(did, payload, _media_meta("archive", "warc" if gz else "warc-plain"))]
+
+    return _map_rows(
+        df, [id_col, text_col], _payload_schema(id_col), row, widen="warc"
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                body = ("" if text is None else str(text)).encode("utf-8")
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did, body)], per_record_gzip=(did % 20 != 10)
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc" if did % 20 != 10 else "warc-plain",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col, text_col), "warc").mapInPandas(fn, schema=out_schema)
 
 
 def parse_warc_features(
@@ -3338,40 +3002,22 @@ def parse_warc_features(
     payload, and reduce to counts + byte-identity features (md5 of the
     body octets, the cross-engine check). One pass, zero shuffle —
     the Common Crawl ingestion shape."""
-    from .warc import http_response_body, parse_warc, warc_type
+    import hashlib
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from .warc import first_response, http_response_body, parse_warc, warc_type
 
-        for pdf in batches:
-            ids, nr, nresp, status, blen, bmd5 = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                nr.append(len(records))
-                nresp.append(len(responses))
-                if responses:
-                    st, body = http_response_body(responses[0])
-                    status.append(st)
-                    blen.append(len(body))
-                    bmd5.append(hashlib.md5(body).hexdigest())
-                else:
-                    status.append(None); blen.append(None); bmd5.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_records": pd.array(nr, dtype="Int64"),
-                    "n_responses": pd.array(nresp, dtype="Int64"),
-                    "status": pd.array(status, dtype="Int64"),
-                    "body_bytes": pd.array(blen, dtype="Int64"),
-                    "body_md5": bmd5,
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        records = parse_warc(payload)
+        counts = (did, len(records), sum(warc_type(r) == "response" for r in records))
+        resp = first_response(records)
+        if resp is None:
+            return [(*counts, None, None, None)]
+        st, body = http_response_body(resp)
+        return [(*counts, st, len(body), hashlib.md5(body).hexdigest())]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=WARC_FEATURES)
+    return _map_rows(df, [id_col, payload_col], WARC_FEATURES, row)
 
 
 #: HTML-over-WARC extraction: title / text identity / link features
@@ -3410,7 +3056,7 @@ def attach_html_warc_payloads(
     transfer encodings — UTF-8, UTF-16 (LE + BOM), ISO-8859-1 when the
     page is Latin-1-encodable — with the charset DECLARED in the HTTP
     Content-Type header, the way real crawl payloads arrive (a large
-    fraction of the web is not UTF-8). ``transfer_rotation`` (round 10)
+    fraction of the web is not UTF-8). ``transfer_rotation``
     serves the HTTP body through one of five wire shapes — identity,
     ``Transfer-Encoding: chunked`` (with a chunk extension and a
     trailer field), ``Content-Encoding: gzip``/``deflate``, and
@@ -3436,53 +3082,23 @@ def attach_html_warc_payloads(
                 pass  # CJK/emoji pages can't be Latin-1; fall through
         return html.encode("utf-8"), "text/html; charset=utf-8"
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    meta = _media_meta("archive", "warc-html")
+
+    def row(did: int, text: str | None) -> "list[tuple]":
+        body, ctype = encode_page(did, build_fixture_html(did, text or ""))
+        payload = encode_warc(
+            [(did, body)],
+            per_record_gzip=(did % 20 != 10),
+            content_types=[ctype] if charset_rotation else None,
+            transfer_modes=(
+                [_TRANSFER_MODES[(did // 10) % 5]] if transfer_rotation else None
+            ),
+        )
+        return [(did, payload, meta)]
+
+    return _map_rows(
+        df, [id_col, text_col], _payload_schema(id_col), row, widen="html"
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                html = build_fixture_html(
-                    did, "" if text is None else str(text)
-                )
-                body, ctype = encode_page(did, html)
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did, body)],
-                            per_record_gzip=(did % 20 != 10),
-                            content_types=(
-                                [ctype] if charset_rotation else None
-                            ),
-                            transfer_modes=(
-                                [_TRANSFER_MODES[(did // 10) % 5]]
-                                if transfer_rotation
-                                else None
-                            ),
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc-html",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col, text_col), "html").mapInPandas(fn, schema=out_schema)
 
 
 def extract_html_features(
@@ -3500,7 +3116,7 @@ def extract_html_features(
     check). ``honor_charset`` decodes each payload per its HTTP
     Content-Type charset parameter (BOM fallback, UTF-8 default —
     :func:`..operators.warc.http_charset`) instead of assuming UTF-8.
-    ``decode_transfer`` (round 10) first removes ``Transfer-Encoding:
+    ``decode_transfer`` first removes ``Transfer-Encoding:
     chunked`` and ``Content-Encoding: gzip/deflate`` from the body
     (:func:`..operators.warc.http_decode_body`) — Common Crawl stores
     responses as-served, where both are everyday — BEFORE charset
@@ -3508,75 +3124,56 @@ def extract_html_features(
     pass, zero shuffle: at 100 TB each WARC file is one split, so
     extraction scales embarrassingly parallel exactly like the mm26
     payload recovery it follows."""
+    import hashlib
+
     from .html import extract_html_text
     from .warc import (
+        first_response,
         http_charset,
         http_decode_body,
         http_response_body,
         http_response_message,
         parse_warc,
-        warc_type,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            ids, titles, nlink, first, tchars, tmd5 = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                if not responses:
-                    titles.append(None); nlink.append(None); first.append(None)
-                    tchars.append(None); tmd5.append(None)
-                    continue
-                if honor_charset or decode_transfer:
-                    _, headers, body = http_response_message(responses[0])
-                    if decode_transfer:
-                        body = http_decode_body(headers, body)
-                    # the two flags stay independent (r11 advisor):
-                    # transfer decoding must not smuggle in charset
-                    # sniffing — honor_charset=False keeps strict UTF-8
-                    charset = (
-                        http_charset(headers, body)
-                        if honor_charset
-                        else "utf-8"
-                    )
-                    try:
-                        html = body.decode(charset)
-                    except (LookupError, UnicodeDecodeError) as ex:
-                        # unknown charset tokens ('charset=junk') and
-                        # undecodable bytes are everyday crawl corruption;
-                        # re-raise under the codec family's ValueError
-                        # contract instead of leaking codec internals that
-                        # would kill the Arrow batch untyped (r10 advisor)
-                        raise ValueError(
-                            f"undecodable crawl payload (doc {did}): {ex}"
-                        )
-                else:
-                    _, body = http_response_body(responses[0])
-                    html = body.decode("utf-8")
-                ex = extract_html_text(html)
-                titles.append(ex["title"])
-                nlink.append(len(ex["links"]))
-                first.append(ex["links"][0] if ex["links"] else None)
-                tchars.append(len(ex["text"]))
-                tmd5.append(hashlib.md5(ex["text"].encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "title": titles,
-                    "n_links": pd.array(nlink, dtype="Int64"),
-                    "first_link": first,
-                    "text_chars": pd.array(tchars, dtype="Int64"),
-                    "text_md5": tmd5,
-                }
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        resp = first_response(parse_warc(payload))
+        if resp is None:
+            return [(did, None, None, None, None, None)]
+        if honor_charset or decode_transfer:
+            _, headers, body = http_response_message(resp)
+            if decode_transfer:
+                body = http_decode_body(headers, body)
+            # the two flags stay independent: transfer decoding must not
+            # smuggle in charset sniffing — honor_charset=False keeps
+            # strict UTF-8
+            charset = http_charset(headers, body) if honor_charset else "utf-8"
+            try:
+                html = body.decode(charset)
+            except (LookupError, UnicodeDecodeError) as ex:
+                # unknown charset tokens ('charset=junk') and undecodable
+                # bytes are everyday crawl corruption; re-raise under the
+                # codec family's ValueError contract instead of leaking
+                # codec internals that would kill the Arrow batch untyped
+                raise ValueError(f"undecodable crawl payload (doc {did}): {ex}")
+        else:
+            html = http_response_body(resp)[1].decode("utf-8")
+        ex = extract_html_text(html)
+        links, text = ex["links"], ex["text"]
+        return [
+            (
+                did,
+                ex["title"],
+                len(links),
+                links[0] if links else None,
+                len(text),
+                hashlib.md5(text.encode("utf-8")).hexdigest(),
             )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=HTML_FEATURES)
+    return _map_rows(df, [id_col, payload_col], HTML_FEATURES, row)
 
 
 def extract_html_text_column(
@@ -3589,7 +3186,7 @@ def extract_html_text_column(
     extracted text, not raw markup. Python touches each payload once;
     everything after this is column expressions."""
     from .html import extract_html_text
-    from .warc import http_response_body, parse_warc, warc_type
+    from .warc import first_response, http_response_body, parse_warc
 
     out_schema = T.StructType(
         [
@@ -3599,26 +3196,16 @@ def extract_html_text_column(
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, titles, texts = [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                if not responses:
-                    titles.append(None)
-                    texts.append(None)
-                    continue
-                _, body = http_response_body(responses[0])
-                ex = extract_html_text(body.decode("utf-8"))
-                titles.append(ex["title"])
-                texts.append(ex["text"])
-            yield pd.DataFrame({"doc_id": ids, "title": titles, "xtext": texts})
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        resp = first_response(parse_warc(payload))
+        if resp is None:
+            return [(did, None, None)]
+        ex = extract_html_text(http_response_body(resp)[1].decode("utf-8"))
+        return [(did, ex["title"], ex["text"])]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col, payload_col], out_schema, row)
 
 
 def attach_boilerplate_warc_payloads(
@@ -3633,44 +3220,15 @@ def attach_boilerplate_warc_payloads(
     from .html import build_boilerplate_html
     from .warc import encode_warc
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    meta = _media_meta("archive", "warc-html")
+
+    def row(did: int, text: str | None) -> "list[tuple]":
+        html = build_boilerplate_html(did, text or "").encode("utf-8")
+        return [(did, encode_warc([(did, html)], per_record_gzip=(did % 20 != 10)), meta)]
+
+    return _map_rows(
+        df, [id_col, text_col], _payload_schema(id_col), row, widen="html"
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                html = build_boilerplate_html(
-                    did, "" if text is None else str(text)
-                )
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did, html.encode("utf-8"))],
-                            per_record_gzip=(did % 20 != 10),
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc-html",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col, text_col), "html").mapInPandas(fn, schema=out_schema)
 
 
 #: main-content detection output (mm35)
@@ -3695,45 +3253,22 @@ def extract_main_text_features(
     length and the block keep/drop counts. One Arrow pass, zero
     shuffle — the step a CCNet-style pipeline runs between extraction
     (mm29) and quality scoring (mm31), riding the same scan."""
+    import hashlib
+
     from .html import extract_main_text
-    from .warc import http_response_body, parse_warc, warc_type
+    from .warc import first_response, http_response_body, parse_warc
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        resp = first_response(parse_warc(payload))
+        if resp is None:
+            return [(did, None, None, None, None)]
+        r = extract_main_text(http_response_body(resp)[1].decode("utf-8"))
+        md5 = hashlib.md5(r["text"].encode("utf-8")).hexdigest()
+        return [(did, len(r["text"]), md5, r["n_blocks"], r["n_dropped"])]
 
-        for pdf in batches:
-            ids, chars, md5s, nblk, ndrp = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                if not responses:
-                    chars.append(None); md5s.append(None)
-                    nblk.append(None); ndrp.append(None)
-                    continue
-                _, body = http_response_body(responses[0])
-                r = extract_main_text(body.decode("utf-8"))
-                chars.append(len(r["text"]))
-                md5s.append(
-                    hashlib.md5(r["text"].encode("utf-8")).hexdigest()
-                )
-                nblk.append(r["n_blocks"])
-                ndrp.append(r["n_dropped"])
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "kept_chars": pd.array(chars, dtype="Int64"),
-                    "kept_md5": md5s,
-                    "n_blocks": pd.array(nblk, dtype="Int64"),
-                    "n_dropped": pd.array(ndrp, dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=MAIN_TEXT_FEATURES
-    )
+    return _map_rows(df, [id_col, payload_col], MAIN_TEXT_FEATURES, row)
 
 
 #: CDX index row (mm39)
@@ -3765,100 +3300,52 @@ def cdx_index_features(
     SQL-derivable (they depend on gzip framing), which is exactly why
     the self-audit rides inside the graded row. One Arrow pass, zero
     shuffle."""
+    import hashlib
+    import re
+
     from .warc import (
+        first_response,
         http_response_body,
         parse_warc,
         surt_key,
+        warc_header,
         warc_record_spans,
-        warc_type,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int, raw: bytes | None) -> "list[tuple]":
+        if raw is None:
+            return []
+        records = parse_warc(raw)
+        spans = warc_record_spans(raw)
+        if len(spans) != len(records):
+            return [(did, None, None, None, False)]
+        r = first_response(records)
+        if r is None:
+            return [(did, None, None, None, None)]
+        digest = hashlib.md5(http_response_body(r)[1]).hexdigest()
+        # the block's Content-Type is application/http; the indexed mime
+        # is the HTTP message's own media type — matched inside the HTTP
+        # HEADER section only (a body could legally contain the literal
+        # 'content-type:'); with no header/body separator there is no
+        # header section, so the WARC Content-Type stands in rather than
+        # matching body bytes
+        he = r["block"].find(b"\r\n\r\n")
+        head = r["block"][:he] if he >= 0 else b""
+        m = re.search(rb"(?im)^content-type:\s*([^;\r\n]+)", head)
+        mime = m.group(1).decode("latin-1").strip() if m else warc_header(r, "content-type")
+        # audited range fetch: slice → standalone parse → digest
+        off, ln = spans[records.index(r)]
+        ok = False
+        try:
+            sliced = parse_warc(raw[off : off + ln])
+            if len(sliced) == 1:
+                ok = hashlib.md5(http_response_body(sliced[0])[1]).hexdigest() == digest
+        except ValueError:
+            ok = False
+        uri = warc_header(r, "warc-target-uri")
+        return [(did, surt_key(uri), digest, mime, ok)]
 
-        for pdf in batches:
-            ids, surts, digests, mimes, oks = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                records = parse_warc(raw)
-                spans = warc_record_spans(raw)
-                ids.append(did)
-                if len(spans) != len(records):
-                    surts.append(None); digests.append(None)
-                    mimes.append(None); oks.append(False)
-                    continue
-                resp_i = next(
-                    (
-                        i
-                        for i, r in enumerate(records)
-                        if warc_type(r) == "response"
-                    ),
-                    None,
-                )
-                if resp_i is None:
-                    surts.append(None); digests.append(None)
-                    mimes.append(None); oks.append(None)
-                    continue
-                r = records[resp_i]
-                uri = next(
-                    (
-                        v
-                        for k, v in r["headers"].items()
-                        if k.lower() == "warc-target-uri"
-                    ),
-                    "",
-                )
-                _, body = http_response_body(r)
-                digest = hashlib.md5(body).hexdigest()
-                ct = next(
-                    (
-                        v
-                        for k, v in r["headers"].items()
-                        if k.lower() == "content-type"
-                    ),
-                    "",
-                )
-                # the block's Content-Type is application/http; the
-                # indexed mime is the HTTP message's own media type —
-                # matched inside the HTTP HEADER section only (a body
-                # could legally contain the literal 'content-type:')
-                import re as _re
-
-                # r11 advisor: find() == -1 (no header/body separator)
-                # previously sliced block[:-1], scanning nearly the
-                # whole BODY for the header pattern — fall back to the
-                # WARC Content-Type instead of matching body bytes
-                he = r["block"].find(b"\r\n\r\n")
-                head = r["block"][:he] if he >= 0 else b""
-                m = _re.search(rb"(?im)^content-type:\s*([^;\r\n]+)", head)
-                mime = m.group(1).decode("latin-1").strip() if m else ct
-                # audited range fetch: slice → standalone parse → digest
-                off, ln = spans[resp_i]
-                ok = False
-                try:
-                    sliced = parse_warc(raw[off : off + ln])
-                    if len(sliced) == 1:
-                        _, b2 = http_response_body(sliced[0])
-                        ok = hashlib.md5(b2).hexdigest() == digest
-                except ValueError:
-                    ok = False
-                surts.append(surt_key(uri))
-                digests.append(digest)
-                mimes.append(mime)
-                oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "surt": surts,
-                    "digest": digests,
-                    "mime": mimes,
-                    "range_fetch_ok": pd.array(oks, dtype="boolean"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=CDX_FEATURES)
+    return _map_rows(df, [id_col, payload_col], CDX_FEATURES, row)
 
 
 def attach_crawl_segment_payloads(
@@ -3873,84 +3360,28 @@ def attach_crawl_segment_payloads(
     status → extract) is evaluable from a single archive."""
     from .html import build_fixture_html
     from .robots import build_fixture_robots
-    from .warc import encode_http_response, encode_warc
+    from .warc import encode_warc, status_fixture_message
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("archive", "warc-segment")
 
-    def page_message(did: int) -> "bytes | None":
-        v = (did // 10) % 5
-        if v == 0:
-            return None  # 200 + HTML body via the default path
-        if v == 1:
-            return encode_http_response(
-                301, "Moved Permanently",
-                [("Location", f"http://example.com/doc/{did + 10}"),
-                 ("Content-Type", "text/html")],
-                b"<html><body>Moved</body></html>",
-            )
-        if v == 2:
-            return encode_http_response(
-                302, "Found",
-                [("Location", f"/doc/{did}/new"), ("Content-Type", "text/html")],
-                b"<html><body>Found elsewhere</body></html>",
-            )
-        if v == 3:
-            return encode_http_response(
-                404, "Not Found", [("Content-Type", "text/html")],
-                b"<html><body>No such page</body></html>",
-            )
-        return encode_http_response(
-            503, "Service Unavailable",
-            [("Retry-After", "120"), ("Content-Type", "text/html")],
-            b"<html><body>Try later</body></html>",
+    def row(did: int, text: str | None) -> "list[tuple]":
+        robots = build_fixture_robots(did).encode("utf-8")
+        html = build_fixture_html(did, text or "").encode("utf-8")
+        payload = encode_warc(
+            [(2 * did, robots), (2 * did + 1, html)],
+            per_record_gzip=(did % 20 != 10),
+            uris=["http://example.com/robots.txt", f"http://example.com/doc/{did}"],
+            content_types=["text/plain; charset=utf-8", "text/html; charset=utf-8"],
+            http_messages=[
+                None,
+                status_fixture_message(did, f"http://example.com/doc/{did + 10}"),
+            ],
         )
+        return [(did, payload, meta)]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                robots = build_fixture_robots(did).encode("utf-8")
-                html = build_fixture_html(
-                    did, "" if text is None else str(text)
-                ).encode("utf-8")
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(2 * did, robots), (2 * did + 1, html)],
-                            per_record_gzip=(did % 20 != 10),
-                            uris=[
-                                "http://example.com/robots.txt",
-                                f"http://example.com/doc/{did}",
-                            ],
-                            content_types=[
-                                "text/plain; charset=utf-8",
-                                "text/html; charset=utf-8",
-                            ],
-                            http_messages=[None, page_message(did)],
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc-segment",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col, text_col), "crawl").mapInPandas(fn, schema=out_schema)
+    return _map_rows(
+        df, [id_col, text_col], _payload_schema(id_col), row, widen="crawl"
+    )
 
 
 #: crawl admission decision (mm38)
@@ -3981,6 +3412,7 @@ def crawl_admission_features(
     One Arrow pass, zero shuffle: robots + status + extraction all
     ride the same scan, which is exactly how a production segment
     processor amortizes its I/O at 100 TB."""
+    import hashlib
     from urllib.parse import urlsplit
 
     from .html import extract_html_text
@@ -3989,74 +3421,42 @@ def crawl_admission_features(
         http_charset,
         http_response_message,
         parse_warc,
+        warc_header,
         warc_type,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        robots_txt = None
+        page = None
+        page_uri = ""
+        for r in parse_warc(payload):
+            if warc_type(r) != "response":
+                continue
+            uri = warc_header(r, "warc-target-uri")
+            if urlsplit(uri).path == "/robots.txt":
+                _, hdrs, body = http_response_message(r)
+                robots_txt = body.decode(http_charset(hdrs, body))
+            else:
+                page, page_uri = r, uri
+        if page is None:
+            return [(did, None, None, None, None)]
+        path = urlsplit(page_uri).path
+        allowed = (
+            robots_decision(robots_txt, agent, path)[0]
+            if robots_txt is not None
+            else True  # no robots.txt recorded → allow (RFC 9309 §2.3.1)
+        )
+        status, hdrs, body = http_response_message(page)
+        admitted = allowed and status == 200
+        md5 = None
+        if admitted:
+            text = extract_html_text(body.decode(http_charset(hdrs, body)))["text"]
+            md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
+        return [(did, allowed, status, admitted, md5)]
 
-        for pdf in batches:
-            ids, alloweds, stats, admits, md5s = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                robots_txt = None
-                page = None
-                page_uri = ""
-                for r in records:
-                    if warc_type(r) != "response":
-                        continue
-                    uri = next(
-                        (
-                            v
-                            for k, v in r["headers"].items()
-                            if k.lower() == "warc-target-uri"
-                        ),
-                        "",
-                    )
-                    if urlsplit(uri).path == "/robots.txt":
-                        _, hdrs, body = http_response_message(r)
-                        robots_txt = body.decode(http_charset(hdrs, body))
-                    else:
-                        page, page_uri = r, uri
-                ids.append(did)
-                if page is None:
-                    alloweds.append(None); stats.append(None)
-                    admits.append(None); md5s.append(None)
-                    continue
-                path = urlsplit(page_uri).path
-                allowed = (
-                    robots_decision(robots_txt, agent, path)[0]
-                    if robots_txt is not None
-                    else True  # no robots.txt recorded → allow (RFC 9309 §2.3.1)
-                )
-                status, hdrs, body = http_response_message(page)
-                admitted = allowed and status == 200
-                if admitted:
-                    html = body.decode(http_charset(hdrs, body))
-                    text = extract_html_text(html)["text"]
-                    md5s.append(
-                        hashlib.md5(text.encode("utf-8")).hexdigest()
-                    )
-                else:
-                    md5s.append(None)
-                alloweds.append(allowed)
-                stats.append(status)
-                admits.append(admitted)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "allowed": pd.array(alloweds, dtype="boolean"),
-                    "status": pd.array(stats, dtype="Int64"),
-                    "admitted": pd.array(admits, dtype="boolean"),
-                    "text_md5": md5s,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=CRAWL_ADMISSION
-    )
+    return _map_rows(df, [id_col, payload_col], CRAWL_ADMISSION, row)
 
 
 def wet_conversion_features(
@@ -4070,6 +3470,8 @@ def wet_conversion_features(
     the same expected-extraction oracle as the text that went in
     (doc_id, char length, md5). Per-record gzip rotates like every
     archive fixture. One Arrow pass, zero shuffle."""
+    import hashlib
+
     from .warc import encode_wet, parse_warc, warc_type
 
     out_schema = T.StructType(
@@ -4080,39 +3482,15 @@ def wet_conversion_features(
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def row(did: int, text: str | None) -> "list[tuple]":
+        wet = encode_wet([(did, text)], per_record_gzip=(did % 20 != 10))
+        rec = next((r for r in parse_warc(wet) if warc_type(r) == "conversion"), None)
+        if rec is None:
+            return [(did, None, None)]
+        recovered = rec["block"].decode("utf-8")
+        return [(did, len(recovered), hashlib.md5(recovered.encode("utf-8")).hexdigest())]
 
-        for pdf in batches:
-            ids, chars, md5s = [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                wet = encode_wet(
-                    [(did, None if text is None else str(text))],
-                    per_record_gzip=(did % 20 != 10),
-                )
-                recs = [
-                    r for r in parse_warc(wet) if warc_type(r) == "conversion"
-                ]
-                ids.append(did)
-                if not recs:
-                    chars.append(None)
-                    md5s.append(None)
-                    continue
-                recovered = recs[0]["block"].decode("utf-8")
-                chars.append(len(recovered))
-                md5s.append(
-                    hashlib.md5(recovered.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "text_chars": pd.array(chars, dtype="Int64"),
-                    "text_md5": md5s,
-                }
-            )
-
-    return _widen(df.select(id_col, text_col), "crawl").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col, text_col], out_schema, row, widen="crawl")
 
 
 def attach_status_warc_payloads(
@@ -4126,82 +3504,20 @@ def attach_status_warc_payloads(
     server behavior, resolved against the request URI); 404 with an
     error page body; 503 with Retry-After. The mm36 fixture for the
     crawl-frontier step (redirect resolution + politeness backoff)."""
-    from .warc import encode_http_response, encode_warc
+    from .warc import encode_warc, status_fixture_message
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("archive", "warc")
 
-    def message(did: int) -> "bytes | None":
-        v = (did // 10) % 5
-        if v == 0:
-            return None  # encode_warc's default 200 path
-        if v == 1:
-            return encode_http_response(
-                301,
-                "Moved Permanently",
-                [
-                    (
-                        "Location",
-                        f"HTTP://Example.COM:80/doc/{did}?b=2&a=1#frag",
-                    ),
-                    ("Content-Type", "text/html"),
-                ],
-                b"<html><body>Moved</body></html>",
-            )
-        if v == 2:
-            return encode_http_response(
-                302,
-                "Found",
-                [("Location", f"/doc/{did}/new"), ("Content-Type", "text/html")],
-                b"<html><body>Found elsewhere</body></html>",
-            )
-        if v == 3:
-            return encode_http_response(
-                404,
-                "Not Found",
-                [("Content-Type", "text/html")],
-                b"<html><body>No such page</body></html>",
-            )
-        return encode_http_response(
-            503,
-            "Service Unavailable",
-            [("Retry-After", "120"), ("Content-Type", "text/html")],
-            b"<html><body>Try later</body></html>",
+    def row(did: int) -> "list[tuple]":
+        location = f"HTTP://Example.COM:80/doc/{did}?b=2&a=1#frag"
+        payload = encode_warc(
+            [(did, f"page {did}".encode())],
+            per_record_gzip=(did % 20 != 10),
+            http_messages=[status_fixture_message(did, location)],
         )
+        return [(did, payload, meta)]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did, f"page {did}".encode())],
-                            per_record_gzip=(did % 20 != 10),
-                            http_messages=[message(did)],
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col), "crawl").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
 
 
 #: HTTP status / redirect-frontier features (mm36)
@@ -4231,56 +3547,28 @@ def http_status_features(
 
     from .warc import (
         canonicalize_url,
+        first_response,
         http_response_message,
         parse_warc,
-        warc_type,
+        warc_header,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, stats, locs, retries, keeps = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                if not responses:
-                    stats.append(None); locs.append(None)
-                    retries.append(None); keeps.append(None)
-                    continue
-                resp = responses[0]
-                status, headers, _ = http_response_message(resp)
-                target = next(
-                    (
-                        v
-                        for k, v in resp["headers"].items()
-                        if k.lower() == "warc-target-uri"
-                    ),
-                    "",
-                )
-                loc = headers.get("location")
-                canon = None
-                if loc and 300 <= status < 400:
-                    canon = canonicalize_url(urljoin(target, loc))
-                ra = headers.get("retry-after")
-                stats.append(status)
-                locs.append(canon)
-                retries.append(int(ra) if ra and ra.isdigit() else None)
-                keeps.append(status == 200)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "status": pd.array(stats, dtype="Int64"),
-                    "location": locs,
-                    "retry_after": pd.array(retries, dtype="Int64"),
-                    "keep": pd.array(keeps, dtype="boolean"),
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        resp = first_response(parse_warc(payload))
+        if resp is None:
+            return [(did, None, None, None, None)]
+        status, headers, _ = http_response_message(resp)
+        loc = headers.get("location")
+        canon = None
+        if loc and 300 <= status < 400:
+            canon = canonicalize_url(urljoin(warc_header(resp, "warc-target-uri"), loc))
+        ra = headers.get("retry-after")
+        retry = int(ra) if ra and ra.isdigit() else None
+        return [(did, status, canon, retry, status == 200)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=HTTP_STATUS_FEATURES
-    )
+    return _map_rows(df, [id_col, payload_col], HTTP_STATUS_FEATURES, row)
 
 
 #: crawl-URL canonicalization over WARC-Target-URI headers
@@ -4306,42 +3594,17 @@ def attach_crawl_url_payloads(
     not the payload path mm26/mm29 already grade."""
     from .warc import encode_warc, messy_fixture_url
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("archive", "warc")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did, f"crawl body {did}".encode())],
-                            per_record_gzip=(did % 20 != 10),
-                            uris=[messy_fixture_url(did)],
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    def row(did: int) -> "list[tuple]":
+        payload = encode_warc(
+            [(did, f"crawl body {did}".encode())],
+            per_record_gzip=(did % 20 != 10),
+            uris=[messy_fixture_url(did)],
+        )
+        return [(did, payload, meta)]
 
-    return _widen(df.select(id_col), "crawl").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
 
 
 def canonicalize_url_features(
@@ -4354,49 +3617,26 @@ def canonicalize_url_features(
     host-level grouping key and query-param count. One Arrow pass,
     zero shuffle; downstream host-level dedup groups on ``host`` with
     the ordinary exact-dedup machinery (t1)."""
-    from .warc import canonicalize_url, parse_warc, url_host, warc_type
+    from urllib.parse import urlsplit
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, urls, hosts, nparams, changed = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                raw = next(
-                    (
-                        v
-                        for r in responses
-                        for k, v in r["headers"].items()
-                        if k.lower() == "warc-target-uri"
-                    ),
-                    None,
-                )
-                if raw is None:
-                    urls.append(None); hosts.append(None)
-                    nparams.append(None); changed.append(None)
-                    continue
-                canon = canonicalize_url(raw)
-                from urllib.parse import urlsplit
+    from .warc import canonicalize_url, parse_warc, url_host, warc_header, warc_type
 
-                q = urlsplit(canon).query
-                urls.append(canon)
-                hosts.append(url_host(canon))
-                nparams.append(len(q.split("&")) if q else 0)
-                changed.append(canon != raw)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "url": urls,
-                    "host": hosts,
-                    "n_params": pd.array(nparams, dtype="Int64"),
-                    "changed": pd.array(changed, dtype="boolean"),
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        uris = (
+            warc_header(r, "warc-target-uri", None)
+            for r in parse_warc(payload)
+            if warc_type(r) == "response"
+        )
+        raw = next((u for u in uris if u is not None), None)
+        if raw is None:
+            return [(did, None, None, None, None)]
+        canon = canonicalize_url(raw)
+        q = urlsplit(canon).query
+        return [(did, canon, url_host(canon), len(q.split("&")) if q else 0, canon != raw)]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=URL_FEATURES)
+    return _map_rows(df, [id_col, payload_col], URL_FEATURES, row)
 
 
 #: robots.txt policy evaluation over WARC-served policy files
@@ -4421,43 +3661,18 @@ def attach_robots_warc_payloads(
     from .robots import build_fixture_robots
     from .warc import encode_warc
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("archive", "warc")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did, build_fixture_robots(did).encode())],
-                            per_record_gzip=(did % 20 != 10),
-                            uris=["http://example.com/robots.txt"],
-                            content_types=["text/plain"],
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    def row(did: int) -> "list[tuple]":
+        payload = encode_warc(
+            [(did, build_fixture_robots(did).encode())],
+            per_record_gzip=(did % 20 != 10),
+            uris=["http://example.com/robots.txt"],
+            content_types=["text/plain"],
+        )
+        return [(did, payload, meta)]
 
-    return _widen(df.select(id_col), "crawl").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
 
 
 def robots_policy_features(
@@ -4474,37 +3689,18 @@ def robots_policy_features(
     as the WARC parse, and the ``allowed`` flag is the filter the
     ingest pipeline applies before a URL enters the corpus."""
     from .robots import robots_decision
-    from .warc import http_response_body, parse_warc, warc_type
+    from .warc import first_response, http_response_body, parse_warc
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, allowed, rules, ngroups = [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                records = parse_warc(bytes(payload))
-                responses = [r for r in records if warc_type(r) == "response"]
-                ids.append(did)
-                if not responses:
-                    allowed.append(None); rules.append(None); ngroups.append(None)
-                    continue
-                _, body = http_response_body(responses[0])
-                ok, rule, ng = robots_decision(
-                    body.decode("utf-8"), agent, f"/doc/{int(did)}"
-                )
-                allowed.append(ok)
-                rules.append(rule)
-                ngroups.append(ng)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "allowed": pd.array(allowed, dtype="boolean"),
-                    "rule": rules,
-                    "n_groups": pd.array(ngroups, dtype="Int64"),
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        resp = first_response(parse_warc(payload))
+        if resp is None:
+            return [(did, None, None, None)]
+        body = http_response_body(resp)[1].decode("utf-8")
+        return [(did, *robots_decision(body, agent, f"/doc/{did}"))]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=ROBOTS_FEATURES)
+    return _map_rows(df, [id_col, payload_col], ROBOTS_FEATURES, row)
 
 
 #: WebDataset-shard reduction: per-sample image + caption features
@@ -4537,68 +3733,46 @@ def attach_webdataset_payloads(
     This is the LAION-style image/caption pairing shape; production
     replaces it with a ``binaryFile`` read of .tar shards from object
     storage."""
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
+    import io
+    import tarfile
+
+    meta = _media_meta("archive", "webdataset-tar", width, height)
+
+    def row(did: int, text: str | None) -> "list[tuple]":
+        buf = io.BytesIO()
+        with tarfile.open(fileobj=buf, mode="w") as tf:
+            key = f"{did:09d}"
+            members = {
+                f"{key}.png": encode_png(md5_pixels(did, width, height)),
+                f"{key}.txt": (text or "").encode("utf-8"),
+                f"{key}.cls": str(did % 10).encode(),
+            }
+            for name, data in members.items():
+                ti = tarfile.TarInfo(name)
+                ti.size = len(data)
+                ti.mtime = 0  # deterministic shard bytes
+                tf.addfile(ti, io.BytesIO(data))
+        return [(did, buf.getvalue(), meta)]
+
+    return _map_rows(
+        df, [id_col, text_col], _payload_schema(id_col), row, widen="webdataset"
     )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import tarfile
-
-        for pdf in batches:
-            payloads, metas = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                did = int(did)
-                buf = io.BytesIO()
-                with tarfile.open(fileobj=buf, mode="w") as tf:
-                    key = f"{did:09d}"
-                    members = {
-                        f"{key}.png": encode_png(md5_pixels(did, width, height)),
-                        f"{key}.txt": ("" if text is None else str(text)).encode(
-                            "utf-8"
-                        ),
-                        f"{key}.cls": str(did % 10).encode(),
-                    }
-                    for name, data in members.items():
-                        ti = tarfile.TarInfo(name)
-                        ti.size = len(data)
-                        ti.mtime = 0  # deterministic shard bytes
-                        tf.addfile(ti, io.BytesIO(data))
-                payloads.append(bytearray(buf.getvalue()))
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "webdataset-tar",
-                        "width": width,
-                        "height": height,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
-
-    return _widen(df.select(id_col, text_col), "webdataset").mapInPandas(fn, schema=out_schema)
 
 
 def read_webdataset_members(payload: bytes) -> "dict[str, bytes]":
     """Walk one WebDataset tar shard → {member name: bytes}. Non-file
     members (directories, links) carry no sample data and are skipped;
     malformed archives and size fields pointing past EOF raise
-    ``ValueError`` (round-9 hardening — a dir entry previously crashed
-    AttributeError and an oversized size field read short silently)."""
+    ``ValueError`` (a directory entry has no file object to read, and an
+    oversized size field would otherwise read short silently)."""
     import io
     import tarfile
 
     try:
         # close the TarFile promptly: its cyclic refs otherwise pile up
         # in the long-lived python worker and GC time grows with the
-        # live-object count (found by the 1000x probe — 55x/decade
-        # before, linear after)
+        # live-object count (superlinear in shard count without the
+        # close, linear with it)
         with tarfile.open(fileobj=io.BytesIO(payload)) as tf:
             members: dict[str, bytes] = {}
             for m in tf:
@@ -4625,45 +3799,30 @@ def parse_webdataset_features(
     the REAL PNG path, and reduce image + caption + label features in
     one pass — the multimodal-pairing ingestion shape. Zero shuffle;
     at 100 TB each shard is one input split."""
+    import hashlib
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def sample(did: int, n_members: int, mods: "dict[str, bytes]") -> tuple:
+        img = decode_png(mods["png"]) if "png" in mods else None
+        image = (
+            (None, None, None)
+            if img is None
+            else (img.shape[1], img.shape[0], int(img.astype(np.int64).sum()))
+        )
+        cap = mods.get("txt", b"")
+        label = int(mods["cls"]) if "cls" in mods else None
+        return (did, n_members, *image, len(cap), hashlib.md5(cap).hexdigest(), label)
 
-        for pdf in batches:
-            ids, nm, ws, hs, ps, cb, cm, lb = [], [], [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                members = read_webdataset_members(bytes(payload))
-                samples: dict[str, dict[str, bytes]] = {}
-                for name, data in members.items():
-                    key, _, ext = name.partition(".")
-                    samples.setdefault(key, {})[ext] = data
-                for key, mods in sorted(samples.items()):
-                    img = decode_png(mods["png"]) if "png" in mods else None
-                    cap = mods.get("txt", b"")
-                    ids.append(did)
-                    nm.append(len(members))
-                    ws.append(None if img is None else img.shape[1])
-                    hs.append(None if img is None else img.shape[0])
-                    ps.append(None if img is None else int(img.astype(np.int64).sum()))
-                    cb.append(len(cap))
-                    cm.append(hashlib.md5(cap).hexdigest())
-                    lb.append(int(mods["cls"]) if "cls" in mods else None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_members": pd.array(nm, dtype="Int64"),
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "pixel_sum": pd.array(ps, dtype="Int64"),
-                    "caption_bytes": pd.array(cb, dtype="Int64"),
-                    "caption_md5": cm,
-                    "label": pd.array(lb, dtype="Int64"),
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        members = read_webdataset_members(payload)
+        samples: dict[str, dict[str, bytes]] = {}
+        for name, data in members.items():
+            key, _, ext = name.partition(".")
+            samples.setdefault(key, {})[ext] = data
+        return [sample(did, len(members), mods) for _, mods in sorted(samples.items())]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=WDS_FEATURES)
+    return _map_rows(df, [id_col, payload_col], WDS_FEATURES, row)
 
 
 #: ViT-style patch grid: one row per (doc, patch) with per-channel means
@@ -4693,43 +3852,25 @@ def patchify_features(
     images. Means divide by the exact patch pixel count, so the oracle
     re-derives them from md5 byte arithmetic."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, pys, pxs, rm, gm, bm = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                img = decode_image(bytes(payload))
-                h, w, _ = img.shape
-                if h % patch or w % patch:
-                    raise ValueError(
-                        f"patchify needs dims divisible by {patch} (got {w}x{h})"
-                    )
-                grid = (
-                    img.astype(np.float64)
-                    .reshape(h // patch, patch, w // patch, patch, 3)
-                    .mean(axis=(1, 3))
-                )
-                for py in range(h // patch):
-                    for px in range(w // patch):
-                        ids.append(did)
-                        pys.append(py)
-                        pxs.append(px)
-                        rm.append(float(grid[py, px, 0]))
-                        gm.append(float(grid[py, px, 1]))
-                        bm.append(float(grid[py, px, 2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "patch_y": pd.array(pys, dtype="int32"),
-                    "patch_x": pd.array(pxs, dtype="int32"),
-                    "r_mean": pd.array(rm, dtype="float64"),
-                    "g_mean": pd.array(gm, dtype="float64"),
-                    "b_mean": pd.array(bm, dtype="float64"),
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        img = decode_image(payload)
+        h, w, _ = img.shape
+        if h % patch or w % patch:
+            raise ValueError(f"patchify needs dims divisible by {patch} (got {w}x{h})")
+        grid = (
+            img.astype(np.float64)
+            .reshape(h // patch, patch, w // patch, patch, 3)
+            .mean(axis=(1, 3))
+        )
+        return [
+            (did, py, px, *grid[py, px].tolist())
+            for py in range(h // patch)
+            for px in range(w // patch)
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=PATCH_FEATURES)
+    return _map_rows(df, [id_col, payload_col], PATCH_FEATURES, row)
 
 
 #: (doc_id, frame_idx, r_sum, g_sum, b_sum) — per decoded frame
@@ -4759,28 +3900,18 @@ def attach_avi_payloads(
     if n_frames > 16:
         raise ValueError("n_frames > 16 would collide the id*16+frame keys")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for did in pdf[id_col]:
-                did = int(did)
-                frames = [
-                    encode_jpeg_lossless(
-                        md5_pixels(did * 16 + f, width, height),
-                        predictor=1 + (did + f) % 7,
-                    )
-                    for f in range(n_frames)
-                ]
-                payloads.append(bytearray(encode_avi_mjpeg(frames, width, height)))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
+    def row(did: int) -> "list[tuple]":
+        frames = [
+            encode_jpeg_lossless(
+                md5_pixels(did * 16 + f, width, height), predictor=1 + (did + f) % 7
+            )
+            for f in range(n_frames)
         ]
+        return [(did, encode_avi_mjpeg(frames, width, height))]
+
+    return _map_rows(
+        df, [id_col], _payload_schema(id_col, media_meta=False), row, widen="avi"
     )
-    return _widen(df.select(id_col), "avi").mapInPandas(fn, schema=out_schema)
 
 
 def decode_video_channel_sums(
@@ -4788,30 +3919,16 @@ def decode_video_channel_sums(
 ) -> DataFrame:
     """AVI payload column → one row per decoded frame with per-channel
     pixel sums (integer math — oracle-checkable exactly). Same Arrow-
-    batched ``mapInPandas`` fan-out shape as :func:`sample_frames`."""
+    batched fan-out shape as :func:`sample_frames`."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, rs, gs, bs = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                for f_idx, frame in enumerate(decode_avi_mjpeg(bytes(payload))):
-                    sums = frame.astype(np.int64).sum(axis=(0, 1))
-                    ids.append(int(did))
-                    idxs.append(f_idx)
-                    rs.append(int(sums[0]))
-                    gs.append(int(sums[1]))
-                    bs.append(int(sums[2]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "r_sum": rs,
-                    "g_sum": gs,
-                    "b_sum": bs,
-                }
-            )
+    def row(did: int, payload: bytes) -> "list[tuple]":
+        out = []
+        for f_idx, frame in enumerate(decode_avi_mjpeg(bytes(payload))):
+            s = frame.astype(np.int64).sum(axis=(0, 1))
+            out.append((did, f_idx, int(s[0]), int(s[1]), int(s[2])))
+        return out
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=FRAME_CHANNEL_SCHEMA)
+    return _map_rows(df, [id_col, payload_col], FRAME_CHANNEL_SCHEMA, row)
 
 
 def frame_sad(frames: DataFrame) -> DataFrame:
@@ -4864,24 +3981,19 @@ def image_channel_histogram(
     )
     width = 256 // bins
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
-                if p is None:
-                    continue
-                img = decode_image(bytes(p))
-                for c in range(img.shape[2]):
-                    counts = np.bincount(
-                        (img[:, :, c].reshape(-1) // width).astype(np.int64),
-                        minlength=bins,
-                    )
-                    for b in range(bins):
-                        if counts[b]:
-                            rows.append((int(did), c, b, int(counts[b])))
-            yield pd.DataFrame(rows, columns=[id_col, "c", "bin", "cnt"])
+    def row(did: int, p: bytes | None) -> "list[tuple]":
+        if p is None:
+            return []
+        img = decode_image(p)
+        out = []
+        for c in range(img.shape[2]):
+            counts = np.bincount(
+                (img[:, :, c].reshape(-1) // width).astype(np.int64), minlength=bins
+            )
+            out.extend((did, c, b, int(counts[b])) for b in range(bins) if counts[b])
+        return out
 
-    return df.select(id_col, payload_col).mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col, payload_col], out_schema, row)
 
 
 def attach_sitemap_warc_payloads(
@@ -4902,14 +4014,6 @@ def attach_sitemap_warc_payloads(
     import zlib as _zlib
 
     from .warc import encode_http_response, encode_warc
-
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
 
     def sitemap_body(did: int) -> "tuple[bytes, list]":
         v = (did // 10) % 4
@@ -4953,49 +4057,27 @@ def attach_sitemap_warc_payloads(
             ("Content-Encoding", "gzip"),
         ]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                robots = (
-                    "User-agent: *\nDisallow: /private\n"
-                    f"Sitemap: HTTP://Example.COM:80/sm/{did}.xml\n"
-                    f"sitemap: http://example.com/sm/{did}-extra.xml\n"
-                ).encode()
-                body, extra = sitemap_body(did)
-                payloads.append(
-                    bytearray(
-                        encode_warc(
-                            [(did * 2, robots), (did * 2 + 1, body)],
-                            per_record_gzip=(did % 20 != 10),
-                            uris=[
-                                f"http://site{did}.example.com/robots.txt",
-                                f"http://example.com/sm/{did}.xml",
-                            ],
-                            http_messages=[
-                                None,
-                                encode_http_response(
-                                    200, "OK", extra, body
-                                ),
-                            ],
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    meta = _media_meta("archive", "warc")
 
-    return _widen(df.select(id_col), "crawl").mapInPandas(fn, schema=out_schema)
+    def row(did: int) -> "list[tuple]":
+        robots = (
+            "User-agent: *\nDisallow: /private\n"
+            f"Sitemap: HTTP://Example.COM:80/sm/{did}.xml\n"
+            f"sitemap: http://example.com/sm/{did}-extra.xml\n"
+        ).encode()
+        body, extra = sitemap_body(did)
+        payload = encode_warc(
+            [(did * 2, robots), (did * 2 + 1, body)],
+            per_record_gzip=(did % 20 != 10),
+            uris=[
+                f"http://site{did}.example.com/robots.txt",
+                f"http://example.com/sm/{did}.xml",
+            ],
+            http_messages=[None, encode_http_response(200, "OK", extra, body)],
+        )
+        return [(did, payload, meta)]
+
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
 
 
 #: sitemap-discovery features (mm41)
@@ -5037,69 +4119,37 @@ def sitemap_features(
         http_decode_body,
         http_response_message,
         parse_warc,
+        warc_header,
         warc_type,
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in SITEMAP_FEATURES.fields}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                robots_text, sm_body = None, None
-                for r in parse_warc(bytes(payload)):
-                    if warc_type(r) != "response":
-                        continue
-                    uri = next(
-                        (
-                            v
-                            for k, v in r["headers"].items()
-                            if k.lower() == "warc-target-uri"
-                        ),
-                        "",
-                    )
-                    _, headers, body = http_response_message(r)
-                    body = http_decode_body(headers, body)
-                    if uri.endswith("/robots.txt"):
-                        robots_text = body.decode("utf-8", "replace")
-                    else:
-                        sm_body = body
-                out["doc_id"].append(int(did))
-                sitemaps = (
-                    [canonicalize_url(u) for u in robots_sitemaps(robots_text)]
-                    if robots_text is not None
-                    else []
-                )
-                out["n_directives"].append(len(sitemaps))
-                out["first_sitemap"].append(sitemaps[0] if sitemaps else None)
-                if sm_body is None:
-                    kind, locs = None, None
-                else:
-                    kind, raw = parse_sitemap_xml(sm_body)
-                    locs = [canonicalize_url(u) for u in raw]
-                out["kind"].append(kind)
-                out["n_locs"].append(len(locs) if locs is not None else None)
-                out["first_loc"].append(locs[0] if locs else None)
-                out["locs_md5"].append(
-                    _hashlib.md5("\x1f".join(locs).encode()).hexdigest()
-                    if locs is not None
-                    else None
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "n_directives": pd.array(out["n_directives"], dtype="Int64"),
-                    "first_sitemap": out["first_sitemap"],
-                    "kind": out["kind"],
-                    "n_locs": pd.array(out["n_locs"], dtype="Int64"),
-                    "first_loc": out["first_loc"],
-                    "locs_md5": out["locs_md5"],
-                }
-            )
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        robots_text, sm_body = None, None
+        for r in parse_warc(payload):
+            if warc_type(r) != "response":
+                continue
+            _, headers, body = http_response_message(r)
+            body = http_decode_body(headers, body)
+            if warc_header(r, "warc-target-uri").endswith("/robots.txt"):
+                robots_text = body.decode("utf-8", "replace")
+            else:
+                sm_body = body
+        sitemaps = (
+            [canonicalize_url(u) for u in robots_sitemaps(robots_text)]
+            if robots_text is not None
+            else []
+        )
+        head = (did, len(sitemaps), sitemaps[0] if sitemaps else None)
+        if sm_body is None:
+            return [(*head, None, None, None, None)]
+        kind, raw = parse_sitemap_xml(sm_body)
+        locs = [canonicalize_url(u) for u in raw]
+        md5 = _hashlib.md5("\x1f".join(locs).encode()).hexdigest()
+        return [(*head, kind, len(locs), locs[0] if locs else None, md5)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=SITEMAP_FEATURES
-    )
+    return _map_rows(df, [id_col, payload_col], SITEMAP_FEATURES, row)
 
 
 def attach_revisit_warc_payloads(
@@ -5116,46 +4166,18 @@ def attach_revisit_warc_payloads(
     Archive layout rotates per-record-gzip/plain like mm36."""
     from .revisit import encode_revisit_warc
 
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), True),
-            T.StructField("media_meta", MEDIA_META, True),
-        ]
-    )
+    meta = _media_meta("archive", "warc")
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                g = did // 30
-                leader = g * 30
-                body = f"shared corpus text for group {g}".encode()
-                docs = [(leader, body, None)]
-                if did != leader:
-                    docs.append((did, body, leader))
-                payloads.append(
-                    bytearray(
-                        encode_revisit_warc(
-                            docs, per_record_gzip=(did % 20 != 10)
-                        )
-                    )
-                )
-                metas.append(
-                    {
-                        "media_type": "archive",
-                        "format": "warc",
-                        "width": None,
-                        "height": None,
-                        "duration_ms": None,
-                    }
-                )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "payload": payloads, "media_meta": metas}
-            )
+    def row(did: int) -> "list[tuple]":
+        g = did // 30
+        leader = g * 30
+        body = f"shared corpus text for group {g}".encode()
+        docs = [(leader, body, None)]
+        if did != leader:
+            docs.append((did, body, leader))
+        return [(did, encode_revisit_warc(docs, per_record_gzip=(did % 20 != 10)), meta)]
 
-    return _widen(df.select(id_col), "crawl").mapInPandas(fn, schema=out_schema)
+    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
 
 
 #: revisit-record features (mm42)
@@ -5188,55 +4210,25 @@ def revisit_features(
 
     from .revisit import resolve_revisits
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in REVISIT_FEATURES.fields}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                rows = resolve_revisits(bytes(payload))
-                mine = next(
-                    (
-                        r
-                        for r in rows
-                        if r["uri"] == f"http://example.com/doc/{int(did)}"
-                    ),
-                    None,
-                )
-                out["doc_id"].append(int(did))
-                out["n_records"].append(len(rows))
-                if mine is None:
-                    out["is_revisit"].append(None)
-                    out["refers_to_doc"].append(None)
-                    out["digest_ok"].append(None)
-                    out["resolved_md5"].append(None)
-                    continue
-                out["is_revisit"].append(mine["is_revisit"])
-                ref = mine["refers_to"]
-                out["refers_to_doc"].append(
-                    int(ref.split(":")[-1].split("-")[0], 16)
-                    if ref
-                    else None
-                )
-                out["digest_ok"].append(mine["digest_ok"])
-                out["resolved_md5"].append(
-                    _hashlib.md5(mine["payload"]).hexdigest()
-                    if mine["payload"] is not None
-                    else None
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "n_records": pd.array(out["n_records"], dtype="Int64"),
-                    "is_revisit": pd.array(out["is_revisit"], dtype="boolean"),
-                    "refers_to_doc": pd.array(
-                        out["refers_to_doc"], dtype="Int64"
-                    ),
-                    "digest_ok": pd.array(out["digest_ok"], dtype="boolean"),
-                    "resolved_md5": out["resolved_md5"],
-                }
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        rows = resolve_revisits(payload)
+        uri = f"http://example.com/doc/{did}"
+        mine = next((r for r in rows if r["uri"] == uri), None)
+        if mine is None:
+            return [(did, len(rows), None, None, None, None)]
+        ref = mine["refers_to"]
+        body = mine["payload"]
+        return [
+            (
+                did,
+                len(rows),
+                mine["is_revisit"],
+                int(ref.split(":")[-1].split("-")[0], 16) if ref else None,
+                mine["digest_ok"],
+                _hashlib.md5(body).hexdigest() if body is not None else None,
             )
+        ]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        fn, schema=REVISIT_FEATURES
-    )
+    return _map_rows(df, [id_col, payload_col], REVISIT_FEATURES, row)

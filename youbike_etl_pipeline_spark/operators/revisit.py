@@ -37,7 +37,7 @@ import base64
 import hashlib
 import zlib
 
-from .warc import parse_warc, warc_type
+from .warc import parse_warc, warc_header, warc_type
 
 __all__ = [
     "REVISIT_PROFILE",
@@ -172,17 +172,9 @@ def resolve_revisits(payload: bytes) -> "list[dict]":
     records = parse_warc(payload)
     by_id: dict[str, dict] = {}
     for r in records:
-        rid = next(
-            (v for k, v in r["headers"].items() if k.lower() == "warc-record-id"),
-            "",
-        )
+        rid = warc_header(r, "warc-record-id")
         if rid:
             by_id[rid.strip("<>")] = r
-
-    def header(r: dict, name: str) -> "str | None":
-        return next(
-            (v for k, v in r["headers"].items() if k.lower() == name), None
-        )
 
     out: list[dict] = []
     for r in records:
@@ -190,7 +182,7 @@ def resolve_revisits(payload: bytes) -> "list[dict]":
         if rtype not in ("response", "revisit"):
             continue
         row: dict = {
-            "uri": header(r, "warc-target-uri"),
+            "uri": warc_header(r, "warc-target-uri", None),
             "is_revisit": rtype == "revisit",
             "refers_to": None,
             "digest_ok": None,
@@ -199,17 +191,17 @@ def resolve_revisits(payload: bytes) -> "list[dict]":
         if rtype == "response":
             body = _http_payload(r["block"])
             row["payload"] = body
-            declared = header(r, "warc-payload-digest")
+            declared = warc_header(r, "warc-payload-digest", None)
             if declared is not None:
                 row["digest_ok"] = declared == payload_digest(body)
         else:
-            ref_id = (header(r, "warc-refers-to") or "").strip("<>")
+            ref_id = warc_header(r, "warc-refers-to").strip("<>")
             row["refers_to"] = ref_id or None
             target = by_id.get(ref_id)
             if target is not None and warc_type(target) == "response":
                 body = _http_payload(target["block"])
                 row["payload"] = body
-                declared = header(r, "warc-payload-digest")
+                declared = warc_header(r, "warc-payload-digest", None)
                 row["digest_ok"] = (
                     declared == payload_digest(body)
                     if declared is not None

@@ -125,8 +125,8 @@ def parse_warc(payload: bytes) -> list[dict]:
         if tail != b"\r\n\r\n":
             # spec: two CRLFs terminate the record; a separator TRUNCATED
             # at EOF is tolerated (the remainder must be a prefix of the
-            # CRLF pair — round-9 advisor: arbitrary 1-3 trailing bytes
-            # previously parsed silently), anything else is corruption
+            # CRLF pair — arbitrary 1-3 trailing bytes are not a
+            # separator), anything else is corruption
             if pos + 4 <= n or not b"\r\n\r\n".startswith(tail):
                 raise ValueError("WARC record separator missing")
         pos += 4
@@ -136,11 +136,20 @@ def parse_warc(payload: bytes) -> list[dict]:
     return records
 
 
+def warc_header(record: dict, name: str, default: "str | None" = "") -> "str | None":
+    """One WARC record header by case-insensitive ``name`` (the first
+    match), or ``default`` when the record does not carry it."""
+    name = name.lower()
+    return next((v for k, v in record["headers"].items() if k.lower() == name), default)
+
+
 def warc_type(record: dict) -> str:
-    for k, v in record["headers"].items():
-        if k.lower() == "warc-type":
-            return v
-    return ""
+    return warc_header(record, "warc-type")
+
+
+def first_response(records: "list[dict]") -> "dict | None":
+    """The archive's first ``response`` record, or None."""
+    return next((r for r in records if warc_type(r) == "response"), None)
 
 
 def http_response_body(record: dict) -> tuple[int, bytes]:
@@ -452,7 +461,7 @@ def canonicalize_url(url: str) -> str:
     by key (duplicate keys keep their relative order, so
     ``?z=9&y=8&z=1`` → ``?y=8&z=9&z=1``). A malformed authority (e.g.
     a non-numeric port) raises ``ValueError`` naming the URL — the
-    module's corrupt-input contract (round-10 advisor)."""
+    module's corrupt-input contract."""
     from urllib.parse import urlsplit, urlunsplit
 
     try:
@@ -659,6 +668,38 @@ def encode_http_response(
         lines.append(f"{k}: {v}".encode("latin-1"))
     lines.append(b"Content-Length: " + str(len(body)).encode())
     return b"\r\n".join(lines) + b"\r\n\r\n" + body
+
+
+def status_fixture_message(doc_id: int, location_301: str) -> "bytes | None":
+    """The crawl-status rotation ``(doc_id // 10) % 5`` as a response's
+    HTTP block: None (:func:`encode_warc`'s default 200 path), 301 to
+    ``location_301``, 302 to a root-relative Location, 404 with an error
+    page, 503 with ``Retry-After: 120``."""
+    v = (doc_id // 10) % 5
+    if v == 0:
+        return None
+    if v == 1:
+        return encode_http_response(
+            301, "Moved Permanently",
+            [("Location", location_301), ("Content-Type", "text/html")],
+            b"<html><body>Moved</body></html>",
+        )
+    if v == 2:
+        return encode_http_response(
+            302, "Found",
+            [("Location", f"/doc/{doc_id}/new"), ("Content-Type", "text/html")],
+            b"<html><body>Found elsewhere</body></html>",
+        )
+    if v == 3:
+        return encode_http_response(
+            404, "Not Found", [("Content-Type", "text/html")],
+            b"<html><body>No such page</body></html>",
+        )
+    return encode_http_response(
+        503, "Service Unavailable",
+        [("Retry-After", "120"), ("Content-Type", "text/html")],
+        b"<html><body>Try later</body></html>",
+    )
 
 
 def encode_warc(

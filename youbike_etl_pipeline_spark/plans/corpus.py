@@ -65,6 +65,51 @@ def register(
 #: exported first so the correctness gate re-grades them (and
 #: tests/test_parity_changed_sf01.py checks them at sf0.01).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "mm2_decode_features",
+    "mm3_audio_features",
+    "mm4_frame_sample",
+    "mm5_image_resize",
+    "mm6_audio_dft_bands",
+    "mm7_image_ahash_neardup",
+    "mm8_video_shot_boundary",
+    "mm9_channel_histogram",
+    "mm10_png_decode_features",
+    "mm11_g711_audio_decode",
+    "mm12_adpcm_audio_decode",
+    "mm13_jpeg_lossless_decode",
+    "mm14_webp_lossless_decode",
+    "mm15_avi_mjpeg_frames",
+    "mm16_gif_decode",
+    "mm17_flac_audio_decode",
+    "mm18_tiff_decode",
+    "mm19_msadpcm_audio_decode",
+    "mm20_float_wav_decode",
+    "mm21_png_variants_decode",
+    "mm22_stereo_wav_channels",
+    "mm23_tiff_extended_decode",
+    "mm24_avi_audio_demux",
+    "mm25_bmp_variants_decode",
+    "mm26_warc_ingest",
+    "mm27_webdataset_ingest",
+    "mm28_vit_patchify",
+    "mm29_html_text_extract",
+    "mm30_url_canonicalize",
+    "mm31_crawl_quality_pipeline",
+    "mm32_charset_transfer_decode",
+    "mm33_robots_policy",
+    "mm34_transfer_decoding",
+    "mm35_boilerplate_removal",
+    "mm36_http_status_frontier",
+    "mm37_wet_conversion_sink",
+    "mm38_crawl_admission",
+    "mm39_cdx_index",
+    "mm41_sitemap_discovery",
+    "mm42_warc_revisit_dedup",
+    "st13_streaming_media_decode",
+    "st14_streaming_crawl_extract",
+    "st15_streaming_transfer_decode",
+    "t52_extracted_lang_id",
+    "t54_paragraph_dedup",
     "m25_poisson_bootstrap_ci",
     "m30_randomization_test",
     "t2_ngram_jaccard_pairs",
