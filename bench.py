@@ -32,6 +32,8 @@ from youbike_etl_pipeline_spark.plans.corpus import CORPUS  # noqa: E402
 from youbike_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 #: Headline queries (subset of the corpus; every name must exist there).
+#: Keys only ever append, so every BENCH_HISTORY.jsonl line stays
+#: comparable with the lines before it.
 HEADLINE = [
     "flagship_segment_health",
     "a1_tpch_q1_pricing_summary",
@@ -54,14 +56,11 @@ HEADLINE = [
     "t7_minhash_lsh_dedup",
     "s1_cosine_topk",
     "s2_embedding_near_dup",
-    # round-2 additions (keys only ever append — BENCH_HISTORY.jsonl stays
-    # comparable across rounds)
     "q13_customer_order_distribution",
     "q18_large_volume_customers",
     "t10_dedup_clusters",
     "t16_contamination_check",
     "ml3_lstm_batch_inference",
-    # round-4 additions (keys only ever append)
     "t20_context_chunking",
     "t21_vocab_topk",
     "t22_tfidf_top_terms",
@@ -73,8 +72,6 @@ HEADLINE = [
     "ev1_funnel_conversion",
     "ev2_cohort_retention",
     "mm4_frame_sample",
-    # round-4b/4c additions (keys only ever append): the heaviest of the
-    # TPC-H completion six + the new training-pipeline shapes
     "q9_product_type_profit",
     "q21_suppliers_kept_waiting",
     "t27_user_event_sequences",
@@ -90,14 +87,12 @@ HEADLINE = [
     "f17_variant_extract",
     "a21_pareto_concentration",
     "m14_benford_first_digit",
-    # round-4d additions (keys only ever append)
     "t30_boilerplate_segments",
     "t31_lm_perplexity_filter",
     "t32_content_shard_assignment",
     "s6_semantic_dedup",
     "t33_bpe_pair_merge",
     "mm5_image_resize",
-    # round-4e additions (keys only ever append)
     "s7_bm25_retrieval",
     "t34_hashed_quality_classifier",
     "t35_ngram_novelty",
@@ -126,32 +121,23 @@ HEADLINE = [
     "m20_kaplan_meier",
     "st10_streaming_drift_monitor",
     "t38_sketch_accuracy_audit",
-    # round-4e final batches (keys only ever append)
     "m21_kruskal_wallis",
     "t39_zipf_law_fit",
     "mm7_image_ahash_neardup",
     "s8_rrf_hybrid_retrieval",
     "g3_degree_assortativity",
-    # round-4f additions (keys only ever append)
     "er1_blocked_record_linkage",
     "w21_weekly_trend_decomposition",
     "ev7_wilson_ctr_ranking",
     "ml4_calibration_bins",
     "m23_population_stability",
     "t40_token_budget_allocation",
-    # round-4f batches 4-8 (keys only ever append): the heavier new shapes —
-    # histogram AUC, exact-pairs kNN audit, fan-out bootstrap, HLL sketch,
-    # global-rank quantile normalization, OHLC struct aggregation
     "ml5_roc_auc",
     "e3_knn_label_consistency",
     "m25_poisson_bootstrap_ci",
     "t45_portable_hll_distinct",
     "f20_quantile_normalization",
     "w22_ohlc_bars",
-    # round-4g additions (keys only ever append): the heaviest of the new
-    # batch — pairwise rank stats, two-hop link prediction, inverted-index
-    # containment, gram-matrix power iteration, PMI pair mining, the
-    # Count-Min streaming twin, and the randomization-test fan-out
     "m28_kendall_tau",
     "g6_ra_link_prediction",
     "t46_containment_pairs",
@@ -161,19 +147,14 @@ HEADLINE = [
     "m30_randomization_test",
     "e7_silhouette_audit",
     "t49_prefix_filter_jaccard",
-    # round-6 additions (keys only ever append): the five scale routings
-    # promoted to graded corpus twins — benched so the routed paths'
-    # round-over-round cost is tracked alongside the exact paths they route
     "j11b_interval_overlap_capped",
     "m28b_kendall_tau_sampled",
     "e6b_jl_audit_sampled",
     "t38b_sketch_audit_dedup_first",
     "e3b_knn_consistency_routed",
-    # round-6 codec additions: the no-codec-lib decode family
     "mm10_png_decode_features",
     "mm11_g711_audio_decode",
     "mm12_adpcm_audio_decode",
-    # round-7 codec additions
     "mm13_jpeg_lossless_decode",
     "mm14_webp_lossless_decode",
     "mm15_avi_mjpeg_frames",
@@ -181,8 +162,6 @@ HEADLINE = [
     "mm17_flac_audio_decode",
     "mm18_tiff_decode",
     "mm19_msadpcm_audio_decode",
-    # round-8 additions: WAV family completion, PNG/TIFF/BMP spec
-    # matrices, A/V demux, and the training-data containers
     "mm20_float_wav_decode",
     "mm21_png_variants_decode",
     "mm22_stereo_wav_channels",
@@ -193,7 +172,6 @@ HEADLINE = [
     "mm27_webdataset_ingest",
     "mm28_vit_patchify",
     "st13_streaming_media_decode",
-    # round-9: crawl text extraction, BPE encoding, URL canonicalization
     "mm29_html_text_extract",
     "mm30_url_canonicalize",
     "t50_bpe_encode",
@@ -203,8 +181,6 @@ HEADLINE = [
     "st14_streaming_crawl_extract",
     "mm33_robots_policy",
     "t52_extracted_lang_id",
-    # round-10: HTTP transfer decoding, byte-level BPE, boilerplate
-    # removal, paragraph dedup
     "mm34_transfer_decoding",
     "t53_byte_bpe_encode",
     "mm35_boilerplate_removal",

@@ -98,6 +98,23 @@ def test_spark_fanout_matches_local(spark):
             assert (r["r_sum"], r["g_sum"], r["b_sum"]) == tuple(want), (did, f)
 
 
+def test_spark_fanout_skips_null_payload(spark):
+    """A NULL payload yields no frames, like every sibling decode stage,
+    instead of failing the job on ``bytes(None)``."""
+    from youbike_etl_pipeline_spark.operators.multimodal import (
+        attach_avi_payloads,
+        decode_video_channel_sums,
+    )
+
+    videos = attach_avi_payloads(spark.range(0, 3).withColumnRenamed("id", "doc_id"))
+    with_null = videos.unionByName(
+        spark.sql("SELECT CAST(9 AS BIGINT) AS doc_id, CAST(NULL AS BINARY) AS payload")
+    )
+    want = sorted(decode_video_channel_sums(videos).collect())
+    assert len(want) == 3 * 4
+    assert sorted(decode_video_channel_sums(with_null).collect()) == want
+
+
 def test_single_byte_corruption_fuzz():
     """Round-8 hardening: bit flips anywhere in the container OR the
     embedded JPEG frames must raise the documented types or decode."""

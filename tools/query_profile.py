@@ -1,17 +1,19 @@
-"""Per-query profiler.
+"""Per-query profiler: where each rep of a corpus query spent its time.
 
-Runs named corpus queries exactly the way bench.py does (same session
-factory, same noop sink, same env contract), but additionally:
-
-  * writes ``.explain("formatted")`` to plans/query_profile/<name>_<tag>.txt
-  * labels each run with setJobGroup and, with the UI enabled, pulls
-    per-job wall-clock from the REST API (port from the bound
-    ``sc.uiWebUrl``) so time can be attributed to operators; jobs without
-    a ``completionTime`` are skipped rather than scored 0.0, so they
-    cannot skew the "fastest rep" pick.
+Runs named corpus queries the way bench.py does (same session factory, same
+noop sink, same env contract) with Spark's event log on, uncompressed, in a
+temporary directory, and every rep in its own job group. After the run the
+log is read with ``perfbench/eventlog.py`` and each rep gets a breakdown:
+jobs, stages, tasks, summed executor run and CPU time, shuffle read/write
+bytes, spill, broadcast exchanges, and the driver gap (wall time no stage
+was running: planning, footer reads, driver-side Python). Unless
+``--no-plans``, each query's ``.explain("formatted")`` goes to
+plans/query_profile/<name>_<tag>.txt.
 
 Usage:
-  python tools/query_profile.py [--tag before] [--reps 3] [--no-stages] q1 q2 ...
+  python tools/query_profile.py [--tag before] [--reps 3] [--no-plans] q1 q2 ...
+
+The per-rep records go to /tmp/query_profile_last.json.
 
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py.
 """
@@ -21,21 +23,36 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+from perfbench.eventlog import GroupStats, read_events  # noqa: E402
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS  # noqa: E402
 from youbike_etl_pipeline_spark.session import get_spark  # noqa: E402
 
-UI_BASE = "http://localhost:4040"
 
-
-def rest(path: str):
-    with urllib.request.urlopen(f"{UI_BASE}/api/v1/{path}") as r:
-        return json.loads(r.read())
+def breakdown(stats: GroupStats, group: str, wall_s: float, start_ms: float, end_ms: float) -> dict:
+    """One rep's record: wall time and the Spark work of its job group."""
+    g = stats.get(group)
+    busy_s = stats.busy_ms([group], start_ms, end_ms) / 1000
+    return {
+        "wall_s": wall_s,
+        "jobs": int(g["jobs"]),
+        "stages": int(g["stages"]),
+        "tasks": int(g["tasks"]),
+        "executor_run_s": round(g["executor_run_ms"] / 1000, 3),
+        "executor_cpu_s": round(g["executor_cpu_ns"] / 1e9, 3),
+        "shuffle_read_bytes": int(g["shuffle_read_bytes"]),
+        "shuffle_write_bytes": int(g["shuffle_write_bytes"]),
+        "spill_bytes": int(g["spill_bytes"]),
+        "broadcast_exchanges": int(g["broadcast_exchanges"]),
+        "driver_gap_s": round(max(0.0, wall_s - busy_s), 3),
+    }
 
 
 def main() -> None:
@@ -43,85 +60,63 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--no-stages", action="store_true")
     ap.add_argument("--no-plans", action="store_true")
     args = ap.parse_args()
+    unknown = [n for n in args.names if n not in CORPUS]
+    if unknown:
+        ap.error(f"not in corpus: {', '.join(unknown)}")
 
-    global UI_BASE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="query_profile", extra_conf={"spark.ui.enabled": "true"})
+    log_dir = tempfile.mkdtemp(prefix="query_profile_eventlog_")
+    spark = get_spark(app_name="query_profile", extra_conf={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + log_dir,
+        # uncompressed: the zstd default needs a module this stack lacks
+        "spark.eventLog.compress": "false",
+    })
     sc = spark.sparkContext
-    if sc.uiWebUrl:
-        UI_BASE = sc.uiWebUrl
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "query_profile"
-    )
-    os.makedirs(plans_dir, exist_ok=True)
+    plans_dir = os.path.join(ROOT, "plans", "query_profile")
 
     # warmup (pay JVM/codegen startup outside the measured loop)
     CORPUS["flagship_segment_health"].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
 
-    app_id = sc.applicationId
-    out: dict[str, dict] = {}
+    reps: dict[str, list[tuple[str, float, float, float]]] = {}
     for name in args.names:
-        if name not in CORPUS:
-            print(f"!! {name}: not in corpus", flush=True)
-            continue
         fn = CORPUS[name].fn
         if not args.no_plans:
+            os.makedirs(plans_dir, exist_ok=True)
             df = fn(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
-        times = []
         for rep in range(args.reps):
-            sc.setJobGroup(f"{name}/{rep}", f"{name} rep{rep}")
-            t0 = time.perf_counter()
+            group = f"{name}/{rep}"
+            sc.setJobGroup(group, f"{name} rep{rep}")
+            start_ms, t0 = time.time() * 1000, time.perf_counter()
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times.append(round(time.perf_counter() - t0, 3))
+            wall_s = round(time.perf_counter() - t0, 3)
+            reps.setdefault(name, []).append((group, wall_s, start_ms, time.time() * 1000))
             sc.setJobGroup(None, None)
-        rec: dict = {"times": times, "min": min(times)}
-        if not args.no_stages:
-            try:
-                jobs = rest(f"applications/{app_id}/jobs?status=succeeded")
-                mine = [
-                    j
-                    for j in jobs
-                    if (j.get("jobGroup") or "").startswith(name + "/")
-                    and j.get("completionTime")  # skip unfinished/unparsed
-                ]
-                by_rep: dict[str, list] = {}
-                for j in mine:
-                    by_rep.setdefault(j["jobGroup"], []).append(j)
-                # report the fastest COMPLETE rep's job breakdown
-                best = min(by_rep.values(), key=lambda js: sum(_dur(j) for j in js), default=[])
-                rec["jobs"] = [
-                    {
-                        "desc": (j.get("description") or "")[:60],
-                        "sec": _dur(j),
-                        "stages": j.get("stageIds"),
-                        "tasks": j.get("numCompletedTasks"),
-                    }
-                    for j in sorted(best, key=lambda j: j["jobId"])
-                ]
-                rec["n_jobs_per_run"] = len(best)
-            except Exception as ex:  # pragma: no cover
-                rec["jobs_err"] = str(ex)[:120]
-        out[name] = rec
-        print(f"{name}: min {rec['min']}s runs {times} jobs/run {rec.get('n_jobs_per_run')}", flush=True)
-    json.dump(out, open("/tmp/query_profile_last.json", "w"), indent=1)
-
-
-def _dur(j) -> float:
-    from datetime import datetime
-
-    fmt = "%Y-%m-%dT%H:%M:%S.%fGMT"
+    spark.stop()  # flushes the event log
     try:
-        a = datetime.strptime(j["submissionTime"], fmt)
-        b = datetime.strptime(j["completionTime"], fmt)
-        return round((b - a).total_seconds(), 3)
-    except Exception:
-        return 0.0
+        stats = GroupStats(read_events(log_dir))
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+    out: dict[str, dict] = {}
+    for name, runs in reps.items():
+        per_rep = [breakdown(stats, *run) for run in runs]
+        out[name] = {"min": min(r["wall_s"] for r in per_rep), "reps": per_rep}
+        best = min(per_rep, key=lambda r: r["wall_s"])
+        print(
+            f"{name}: min {best['wall_s']}s over {len(per_rep)} reps; fastest rep: "
+            f"{best['jobs']} jobs, {best['stages']} stages, {best['tasks']} tasks, "
+            f"executor run {best['executor_run_s']}s cpu {best['executor_cpu_s']}s, "
+            f"driver gap {best['driver_gap_s']}s",
+            flush=True,
+        )
+    with open("/tmp/query_profile_last.json", "w") as f:
+        json.dump(out, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -3921,7 +3921,9 @@ def decode_video_channel_sums(
     pixel sums (integer math — oracle-checkable exactly). Same Arrow-
     batched fan-out shape as :func:`sample_frames`."""
 
-    def row(did: int, payload: bytes) -> "list[tuple]":
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
         out = []
         for f_idx, frame in enumerate(decode_avi_mjpeg(bytes(payload))):
             s = frame.astype(np.int64).sum(axis=(0, 1))
