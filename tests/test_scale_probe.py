@@ -81,6 +81,19 @@ def test_shifted_table_is_disjoint_copies(spark, sf_small, blown, table):
     assert tripled.exceptAll(out.select(rest)).count() == 0
 
 
+def test_each_copy_joins_its_own_part_and_supplier(spark, sf_small, blown):
+    li = _out(spark, blown, "lineitem")
+    for table, fk, key in (("part", "l_partkey", "p_partkey"),
+                           ("supplier", "l_suppkey", "s_suppkey")):
+        dim = _out(spark, blown, table)
+        joined = li.join(dim, li[fk] == dim[key])
+        assert joined.count() == li.count(), table
+        copies = joined.select(
+            (F.floor(li[fk] / sp.KEY_SHIFT) == F.floor(li["l_orderkey"] / sp.KEY_SHIFT)).alias("same")
+        ).distinct().collect()
+        assert copies == [(True,)], table
+
+
 def test_second_build_is_a_noop(spark, sf_small, blown):
     def stamp():
         return {
@@ -97,6 +110,8 @@ def test_second_build_is_a_noop(spark, sf_small, blown):
 def test_scale_factor_and_bad_scales():
     assert sp.factor("sf0.01") == pytest.approx(0.1)
     assert sp.factor("100x") == 100.0
+    assert [sp.decade(s) for s in ("sf0.1", "10x", "100x", "1000x")] == [
+        (120.0, 1), (120.0, 1), (360.0, 1), (900.0, 3)]
     for bad in ("0x", "7y", "sfx", "10", "sfnan"):
         with pytest.raises(ValueError):
             sp.factor(bad)
@@ -113,6 +128,23 @@ def test_budget_runs_out_then_next_query_runs(spark, sf_small):
     assert set(ok) == {"sec"}, ok
 
 
+def test_failed_warm_up_is_the_cell_and_runs_once(spark, sf_small, tmp_path, monkeypatch):
+    calls = []
+
+    def endless(spark, sf_dir):
+        calls.append(sf_dir)
+        return spark.range(0, 10**12, 1, 4).select(F.max("id"))
+
+    monkeypatch.setitem(sp.VARIANTS, "endless", endless)
+    monkeypatch.setattr(sp, "DECADES", ((float("inf"), 1.0, 3),))
+    scales = ["sf0.001", "sf0.01"]
+    records = sp.probe(spark, ["endless"], scales, dict.fromkeys(scales, sf_small),
+                       str(tmp_path / "probe.jsonl"))
+    assert calls == [sf_small]
+    assert records == {("endless", "sf0.001"): {
+        "query": "endless", "scale": "sf0.001", "budget": 1.0, "timeout": 1.0}}
+
+
 def test_error_is_recorded_not_raised(spark, sf_small):
     rec = sp.timed_run(spark, lambda s, d: s.read.parquet(d + "/missing.parquet"), sf_small, 60.0)
     assert rec["err"].startswith("AnalysisException"), rec
@@ -126,7 +158,7 @@ def test_rerun_skips_recorded_pairs(spark, sf_small, tmp_path):
     assert [(json.loads(x)["query"], json.loads(x)["scale"]) for x in lines] == [
         (n, "sf0.001") for n in names
     ]
-    assert all(len(json.loads(x)["runs"]) == sp.REPS for x in lines)
+    assert all(len(json.loads(x)["runs"]) == sp.decade("sf0.001")[1] for x in lines)
     again = sp.probe(spark, names, scales, {"sf0.001": sf_small}, out)
     assert open(out).read().splitlines() == lines
     assert again == records

@@ -65,10 +65,12 @@ BLOWUP_ROOT = "/tmp/spark_graft_blowup"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 #: Keys re-based per copy: copy c adds c * KEY_SHIFT, so copies are disjoint
-#: and joins, dedup and per-key state grow as they would on bigger data.
-#: A table not listed here (region, nation) is copied once.
+#: and joins, dedup and per-key state grow as they would on bigger data. A
+#: foreign key shifts with the key it joins, so copy c's lineitem rows join
+#: copy c's orders, part and supplier rows. A table not listed here (region,
+#: nation) is copied once.
 SHIFTS = {
-    "lineitem": ("l_orderkey",),
+    "lineitem": ("l_orderkey", "l_partkey", "l_suppkey"),
     "orders": ("o_orderkey", "o_custkey"),
     "customer": ("c_custkey",),
     "supplier": ("s_suppkey",),
@@ -78,16 +80,12 @@ SHIFTS = {
     "embeddings": ("vec_id",),
 }
 KEY_SHIFT = 100_000_000
-#: Timed runs per cell; the cell is their minimum. One shot can sit far off
-#: steady state from JIT, GC and shuffle-file warm-up.
-REPS = 2
-#: Budget of a query's first (and warm-up) scale, in seconds.
-FIRST_BUDGET_S = 900.0
-#: A later scale's budget is LINEAR_SLACK times the linear extrapolation of
-#: the previous scale's time, and at least MIN_BUDGET_S: a linear query fits
-#: with room to spare, a quadratic one (100x per 10x of data) runs out.
-LINEAR_SLACK = 5.0
-MIN_BUDGET_S = 120.0
+#: Per decade of data size relative to sf0.1: the largest size it covers,
+#: the wall-clock budget of each run in seconds, and the timed runs per cell
+#: (the cell is their minimum). SCALING.md's numbers were measured with these
+#: values. At 1000x a single shot sat up to 4x off steady state (shuffle-file
+#: warm-up, JIT), so that decade takes the minimum of 3.
+DECADES = ((10.0, 120.0, 1), (100.0, 360.0, 1), (float("inf"), 900.0, 3))
 
 
 # ---------------------------------------------------------------------------
@@ -184,15 +182,23 @@ def timed_run(spark, fn, sf_dir: str, budget: float) -> dict:
     return {"timeout": round(budget, 1)}
 
 
-def probe_cell(spark, fn, sf_dir: str, budget: float) -> dict:
-    """REPS budgeted runs; the minimum, or the first failure."""
+def decade(scale: str) -> tuple[float, int]:
+    """The (budget, timed runs) of ``scale``."""
+    return next((b, r) for top, b, r in DECADES if factor(scale) <= top)
+
+
+def probe_cell(spark, fn, sf_dir: str, scale: str, warm_up: bool) -> dict:
+    """An untimed warm-up run when ``warm_up`` (it pays codegen and JIT), then
+    the decade's timed runs: their minimum, or the first failure. A failed
+    warm-up is the cell, so a query that hangs or breaks runs once."""
+    budget, reps = decade(scale)
     runs = []
-    for _ in range(REPS):
+    for _ in range(reps + warm_up):
         r = timed_run(spark, fn, sf_dir, budget)
         if "sec" not in r:
-            return r
+            return {"budget": budget, **r}
         runs.append(r["sec"])
-    return {"sec": min(runs), "runs": runs}
+    return {"budget": budget, "sec": min(runs[warm_up:]), "runs": runs[warm_up:]}
 
 
 # ---------------------------------------------------------------------------
@@ -245,16 +251,10 @@ def probe(spark, names, scales, dirs: dict, out_path: str) -> dict:
                 rec = records.get((name, scale))
                 if rec is None:
                     if prev is not None and "sec" not in prev:
-                        break  # a failed smaller scale cannot fit a larger budget
-                    if not warm:  # pay codegen and JIT outside the timed runs
-                        timed_run(spark, fn, dirs[scales[0]], FIRST_BUDGET_S)
-                        warm = True
-                    budget = FIRST_BUDGET_S if prev is None else max(
-                        MIN_BUDGET_S,
-                        LINEAR_SLACK * prev["sec"] * factor(scale) / factor(prev["scale"]),
-                    )
-                    rec = {"query": name, "scale": scale, "budget": round(budget, 1),
-                           **probe_cell(spark, fn, dirs[scale], budget)}
+                        break  # a failed smaller scale fails a larger one too
+                    rec = {"query": name, "scale": scale,
+                           **probe_cell(spark, fn, dirs[scale], scale, not warm)}
+                    warm = True
                     out.write(json.dumps(rec) + "\n")
                     out.flush()
                     records[(name, scale)] = rec
