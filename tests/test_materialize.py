@@ -158,18 +158,67 @@ def test_clear_releases_every_checkpoint_of_the_run(spark, sf_small):
 
 @pytest.mark.parametrize(
     "call",
-    ["minhash_lsh_dedup_portable", "sketch_accuracy_audit", "portable_lsh_index"],
+    ["minhash_lsh_dedup_portable", "sketch_accuracy_audit", "neardup_gate_foreach_batch"],
 )
 def test_bad_bands_fail_before_any_spark_job(spark, call):
     from youbike_etl_pipeline_spark.operators import dedup
+    from youbike_etl_pipeline_spark.streaming import ingest
 
     docs = spark.range(20).selectExpr("id AS doc_id", "concat('a b c d ', id) AS text")
+    stream = (
+        spark.readStream.format("rate")
+        .load()
+        .selectExpr("value AS doc_id", "'en' AS lang", "'a b c d' AS text")
+    )
+    calls = {
+        "minhash_lsh_dedup_portable": lambda: dedup.minhash_lsh_dedup_portable(
+            docs, num_hashes=32, bands=5
+        ),
+        "sketch_accuracy_audit": lambda: dedup.sketch_accuracy_audit(
+            docs, num_hashes=32, bands=5
+        ),
+        "neardup_gate_foreach_batch": lambda: ingest.neardup_gate_foreach_batch(
+            stream, docs, [], num_hashes=32, bands=5
+        ),
+    }
     sc = spark.sparkContext
     group = f"bad-bands-{call}"
     sc.setJobGroup(group, call)
     try:
         with pytest.raises(ValueError, match="evenly divide"):
-            getattr(dedup, call)(docs, num_hashes=32, bands=5)
+            calls[call]()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert not spark.streams.active
+
+
+def test_candidate_broadcast_has_one_owner():
+    """Every candidate-pair comparison (the Jaccard verify of t7/t49/the
+    streaming gate and the sketch audit) goes through one pair-side helper:
+    ``F.broadcast(cand`` appears in exactly one function across
+    ``operators/`` and ``streaming/``, so the broadcast policy is a
+    one-function change."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "youbike_etl_pipeline_spark"
+    owners = set()
+    for sub in ("operators", "streaming"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            src = path.read_text()
+            fns = [
+                n
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for lineno, line in enumerate(src.splitlines(), 1):
+                if "F.broadcast(cand" not in line:
+                    continue
+                inner = min(
+                    (f for f in fns if f.lineno <= lineno <= f.end_lineno),
+                    key=lambda f: f.end_lineno - f.lineno,
+                    default=None,
+                )
+                owners.add(f"{sub}/{path.name}:{inner.name if inner else '<module>'}")
+    assert owners == {"operators/dedup.py:_candidate_pairs"}, sorted(owners)

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from youbike_etl_pipeline_spark.operators.dedup import (
-    minhash_lsh_dedup,
+    minhash_lsh_dedup_portable,
     ngram_jaccard_pairs,
     simhash_pairs,
 )
@@ -111,7 +111,7 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_small):
     }
     approx = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_dedup(docs, k=3, threshold=0.5).collect()
+        for r in minhash_lsh_dedup_portable(docs, k=3, threshold=0.5).collect()
     }
     # verification step makes approx ⊆ exact; banding should recover most
     assert approx.issubset(exact)
@@ -681,31 +681,6 @@ def test_lstm_batch_predict_distributed_matches_local(spark):
     assert all(v >= 0 for v in got.values())
 
 
-def test_lsh_bucket_cap_drops_duplicate_clusters(spark):
-    """max_bucket_size must drop the pathological bucket (a 50-copy exact
-    duplicate cluster) while keeping ordinary near-dup candidates — the
-    100x-probe backstop: pairs grow with occupancy^2, the cap bounds it."""
-    from youbike_etl_pipeline_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        minhash_signatures,
-    )
-
-    rows = [(i, "the same boilerplate text repeated everywhere") for i in range(50)]
-    rows += [(100, "a unique document about gardens and rivers flowing"),
-             (101, "a unique document about gardens and rivers running")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(df)
-
-    uncapped = minhash_lsh_candidates(sigs)
-    capped = minhash_lsh_candidates(sigs, max_bucket_size=10)
-
-    n_unc = uncapped.count()
-    assert n_unc >= 50 * 49 // 2  # the duplicate cluster is all-pairs
-    cap_pairs = {tuple(r) for r in capped.collect()}
-    assert (100, 101) in cap_pairs        # ordinary near-dups survive
-    assert all(a >= 100 for a, b in cap_pairs)  # the 50-cluster is gone
-
-
 def test_resize_nearest_index_math():
     """Nearest-neighbor resize is pure integer sampling: identity at equal
     dims, and exact floor(r*H/h') source indices otherwise — the same
@@ -983,7 +958,6 @@ def test_interval_overlap_pairs_cap_bounds_output(spark):
         ("ngram_jaccard_pairs", {"k": 3, "threshold": 0.5}, ("n_common", "n_a", "n_b", "jaccard")),
         ("ngram_jaccard_pairs", {"k": 3, "threshold": 0.5, "max_doc_freq": 3}, ("n_common", "n_a", "n_b", "jaccard")),
         ("prefix_filter_jaccard_pairs", {"k": 3, "threshold": 0.5}, ("n_common", "n_a", "n_b", "jaccard")),
-        ("minhash_lsh_dedup", {"k": 3, "threshold": 0.5}, ("jaccard",)),
         ("minhash_lsh_dedup_portable", {"k": 3, "threshold": 0.5}, ("jaccard",)),
     ],
 )

@@ -7,6 +7,8 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import subprocess
+import sys
 import time
 
 import pytest
@@ -148,6 +150,34 @@ def test_failed_warm_up_is_the_cell_and_runs_once(spark, sf_small, tmp_path, mon
 def test_error_is_recorded_not_raised(spark, sf_small):
     rec = sp.timed_run(spark, lambda s, d: s.read.parquet(d + "/missing.parquet"), sf_small, 60.0)
     assert rec["err"].startswith("AnalysisException"), rec
+
+    def divide_by_zero(batches):
+        for pdf in batches:
+            yield pdf.assign(id=len(pdf) // 0)
+
+    rec = sp.timed_run(
+        spark, lambda s, d: s.range(4).mapInPandas(divide_by_zero, "id long"), sf_small, 60.0
+    )
+    # the cell names what failed in the worker, not the traceback header
+    assert rec["err"].startswith("PythonException: "), rec
+    assert "ZeroDivisionError" in rec["err"] and len(rec["err"]) <= 230, rec
+
+
+def test_python_workers_find_the_package_outside_the_repo(tmp_path):
+    """Launched from another directory with no PYTHONPATH, a query that runs
+    Python on the executors still records a time: the workers import the
+    package from the repo root, not from the working directory."""
+    out = tmp_path / "probe.jsonl"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    tool = os.path.join(ROOT, "tools", "scale_probe.py")
+    done = subprocess.run(
+        [sys.executable, tool, "sf0.001", "mm2_decode_features", "--out", str(out)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]
+    (rec,) = [json.loads(line) for line in out.read_text().splitlines()]
+    assert "sec" in rec, rec
 
 
 def test_rerun_skips_recorded_pairs(spark, sf_small, tmp_path):

@@ -1,5 +1,6 @@
 """The session posture of ``session.get_spark``: the generated-code cache
-holds a workload's classes, so a steady-state rerun barely compiles."""
+holds a workload's classes, so a steady-state rerun barely compiles, and the
+default driver heap fits the host."""
 
 from __future__ import annotations
 
@@ -39,3 +40,12 @@ def test_steady_state_rerun_hits_the_codegen_cache(spark, sf_small):
     _round(spark, sf_small)
     recompiled = _compiles(spark) - before
     assert recompiled <= 32, f"second round compiled {recompiled} classes"
+
+
+def test_driver_memory_is_half_the_host_up_to_16g():
+    gib = 1 << 30
+    assert session.driver_memory(64 * gib) == "16384m"
+    assert session.driver_memory(32 * gib) == "16384m"
+    assert session.driver_memory(15 * gib) == "7680m"
+    assert session.driver_memory(15 * gib + 12345) == "7680m"
+    assert session.driver_memory(2 * gib) == "1024m"

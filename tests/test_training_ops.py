@@ -179,18 +179,20 @@ def test_round6_dedup_review_regressions(spark):
     column pair, so a label containing a comma cannot collide with another
     row's serialized form; (2) levenshtein's max_block_size gates the
     intra-group expansion — a duplicate group whose representative was
-    capped out of the block emits NO pairs; (3) portable_lsh_index rejects
-    band counts that would produce empty band keys (a universal-collision
-    n² cross product)."""
+    capped out of the block emits NO pairs; (3) the streaming near-dup
+    gate rejects band counts that would produce empty band keys (a
+    universal-collision n² cross product) before any Spark job."""
     import pyspark.sql.functions as F
     import pytest as _pt
 
     from youbike_etl_pipeline_spark.operators.dedup import (
         levenshtein_blocked_pairs,
-        portable_lsh_index,
     )
     from youbike_etl_pipeline_spark.operators.similarity import (
         knn_label_consistency,
+    )
+    from youbike_etl_pipeline_spark.streaming.ingest import (
+        neardup_gate_foreach_batch,
     )
 
     # (1) comma-injection: [0.5, 0.25]/'x' vs [0.5]/'0.25,x' must NOT
@@ -228,9 +230,21 @@ def test_round6_dedup_review_regressions(spark):
     ).collect()
     assert pairs == []  # rep 2 never paired, so (2,3) must not appear
 
-    # (3) ragged/empty bands fail loud
-    with _pt.raises(ValueError, match="evenly divide"):
-        portable_lsh_index(docs, num_hashes=32, bands=64)
+    # (3) ragged/empty bands fail loud, before any job or stream starts
+    stream = (
+        spark.readStream.format("rate")
+        .load()
+        .selectExpr("value AS doc_id", "'en' AS lang", "'aaaa' AS text")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("round6-gate-bands", "ragged bands")
+    try:
+        with _pt.raises(ValueError, match="evenly divide"):
+            neardup_gate_foreach_batch(stream, docs, [], num_hashes=32, bands=64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("round6-gate-bands")) == []
+    assert not spark.streams.active
 
 
 # ------------------------------------------------ round 10: paragraph dedup

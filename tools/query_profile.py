@@ -68,6 +68,9 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     log_dir = tempfile.mkdtemp(prefix="query_profile_eventlog_")
+    # Python workers take their path from the JVM's environment, not from
+    # this script's sys.path: give them the repo root wherever we run from
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
     spark = get_spark(app_name="query_profile", extra_conf={
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": "file://" + log_dir,

@@ -36,7 +36,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -167,7 +168,10 @@ def timed_run(spark, fn, sf_dir: str, budget: float) -> dict:
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             result["sec"] = round(time.perf_counter() - t0, 2)
         except Exception as ex:  # noqa: BLE001 — a probe records, never dies
-            result["err"] = f"{type(ex).__name__}: {str(ex)[:200]}"
+            # the last line names the failure; a Python worker's message
+            # starts with a generic header and ends with its exception
+            lines = [x.strip() for x in str(ex).splitlines() if x.strip()]
+            result["err"] = f"{type(ex).__name__}: {lines[-1][:200] if lines else ''}"
 
     worker = threading.Thread(target=target, daemon=True)
     worker.start()
@@ -398,6 +402,9 @@ def main() -> None:
     unknown += [t for t in args.tables if t not in TABLES]
     if unknown:
         ap.error(f"unknown query or table: {', '.join(unknown)}")
+    # Python workers take their path from the JVM's environment, not from
+    # this script's sys.path: give them the repo root wherever we run from
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, (ROOT, os.environ.get("PYTHONPATH"))))
     spark = get_spark(app_name="scale-probe")
     dirs = {s: scale_dir(spark, s, args.tables) for s in args.scales}
     records = probe(spark, names, args.scales, dirs, args.out)

@@ -109,16 +109,18 @@ def group_stats(
     """The reference's 6-metric aggregate-UDF ``get_stats_summary`` (A1-A4,
     §2.9) as one hash aggregation: mean/std/count + conditional rates
     (fraction below/above thresholds) + coefficient of variation
-    (``notebooks/01_youbike_analysis.ipynb:L280-L295,L310-L311``)."""
+    (``notebooks/01_youbike_analysis.ipynb:L280-L295,L310-L311``).
+    Deterministic across partitionings: the mean is :func:`decimal_avg`,
+    std and cv are rounded to 6 dp, and cv divides the unrounded std."""
     v = F.col(value_col)
-    agg = df.groupBy(group_col).agg(
-        F.avg(v).alias("mean"),
-        F.stddev_samp(v).alias("std"),
+    return df.groupBy(group_col).agg(
+        decimal_avg(v).alias("mean"),
+        F.round(F.stddev_samp(v), 6).alias("std"),
         F.count(v).alias("n"),
         F.avg(F.when(v < shortage_threshold, 1.0).otherwise(0.0)).alias("shortage_rate"),
         F.avg(F.when(v > full_threshold, 1.0).otherwise(0.0)).alias("full_rate"),
+        F.round(F.stddev_samp(v) / decimal_avg(v), 6).alias("cv"),
     )
-    return agg.withColumn("cv", F.col("std") / F.col("mean"))
 
 
 #: per-group row count above which exact ``percentile`` is swapped for

@@ -201,17 +201,29 @@ def _identical_jaccard(sizes: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_verify(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard of candidate pairs from per-doc SET arrays: ``sets`` is
-    an (id, array) frame whose arrays hold distinct elements, so
+def _candidate_pairs(cands: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
+    """The pair side of every candidate comparison: ``left ⋈ cands ⋈
+    right``, where ``cands`` is an ``(id_a, id_b)`` frame, ``left`` is keyed
+    on ``id_a`` and ``right`` on ``id_b``. The one place a candidate frame
+    is broadcast (into the join with ``left``, as the small side), so the
+    broadcast policy of every pair operator lives here."""
+    return left.join(F.broadcast(cands), "id_a").join(right, "id_b")
+
+
+def _jaccard_verify(
+    cands: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs from per-doc SET arrays: ``sets_a``
+    and ``sets_b`` are (id, array) frames for the two sides (the same frame
+    for a self-join) whose arrays hold distinct elements, so
     ``size(array_intersect)`` is |A∩B| — one narrow pass over the candidate
     rows, no per-element fan-out. Returns ``(id_a, id_b, n_common, n_a,
     n_b, jaccard)`` for the pairs at or above ``threshold``."""
     jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
     return (
-        sets.toDF("id_a", "__s_a")
-        .join(F.broadcast(cands), "id_a")
-        .join(sets.toDF("id_b", "__s_b"), "id_b")
+        _candidate_pairs(
+            cands, sets_a.toDF("id_a", "__s_a"), sets_b.toDF("id_b", "__s_b")
+        )
         .select(
             "id_a",
             "id_b",
@@ -269,22 +281,6 @@ def shingle_index(
     )
 
 
-def shingle_hash_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    widen: bool = True,
-) -> DataFrame:
-    """One row per (doc, xxhash64(shingle)) — MinHash/verify input, built on
-    the materialized-token projection. ``widen`` threads through to
-    :func:`shingle_index` — foreachBatch callers on micro-batch frames must
-    pass ``False`` (batch frames are static, so the isStreaming guard does
-    NOT protect them)."""
-    idx = shingle_index(df, text_col, id_col, k, widen=widen)
-    return idx.select(F.col(id_col), F.xxhash64("shingle").alias("sh"))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -315,12 +311,10 @@ def ngram_jaccard_pairs(
 
     **Scale routing:** exact pair enumeration is inherently superlinear in
     collision count (SCALING.md measured ~13× wall-clock at a 10× blow-up).
-    At corpus scale (100 TB) this op is the VERIFY stage, not the candidate
-    generator: run :func:`minhash_lsh_candidates` first (near-linear banded
-    equi-join) and compute exact Jaccard only on its candidate pairs —
-    e.g. ``candidates.join(ngram_jaccard_pairs(...), ["id_a","id_b"])`` or
-    by feeding the candidate id-set as a semi-join filter on the index.
-    Do not ship this standalone at 100× the tested scale.
+    At corpus scale (100 TB) run :func:`minhash_lsh_dedup_portable`
+    instead: its banded equi-join is near-linear and it verifies exact
+    Jaccard on its candidate pairs only. Do not ship this op at 100× the
+    tested scale.
     """
     df, mapping = (
         _exact_collapse(df, id_col, F.md5(F.col(text_col)))
@@ -400,7 +394,7 @@ def prefix_filter_jaccard_pairs(
     they fall outside most prefixes and never explode the self-join — the
     candidate count shrinks the way the cap shrinks it, without touching
     the result. This is the exact-join scale route when the answer must be
-    exact; MinHash-LSH (:func:`minhash_lsh_candidates`) remains the
+    exact; MinHash-LSH (:func:`minhash_lsh_dedup_portable`) remains the
     approximate route when recall <1 is acceptable.
 
     Shuffle shape: one df aggregation + one window (both keyed on the
@@ -493,179 +487,11 @@ def prefix_filter_jaccard_pairs(
     # verify on per-doc shingle arrays: the index is distinct per (doc,
     # shingle), so each collect_list IS the doc's set
     arrs = idx.groupBy(id_col).agg(F.collect_list("shingle").alias("__shs"))
-    pairs = _jaccard_verify(cands, arrs, threshold)
+    pairs = _jaccard_verify(cands, arrs, arrs, threshold)
     if mapping is None:
         return pairs
     # sizes re-derived from the arrays — one less aggregation over idx
     sizes = arrs.select(F.col(id_col), F.size("__shs").cast("long"))
-    return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 32,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash signature per document: for seed i, min over shingles of
-    xxhash64(shingle, seed=i). Computed as one explode + hash-agg of
-    ``num_hashes`` mins — a single shuffle on the doc id. Pass a prebuilt
-    (ideally checkpointed) ``shingle_hash_index`` as ``index`` to share the
-    tokenize+shingle work with a downstream verify step.
-
-    Scale routing (100x probe, SCALING.md): on a corpus with heavy EXACT
-    duplication, identical texts produce identical signatures, every LSH
-    bucket holds the whole duplicate cluster, and the candidate-pair
-    output grows with the square of the duplication factor — that is the
-    data's true answer, not a plan defect. Run :func:`exact_dedup` first
-    (flat 1.9x at the 100x blow-up) and MinHash only the survivors."""
-    exploded = index if index is not None else shingle_hash_index(df, text_col, id_col, k)
-    mins = [
-        F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    sig = exploded.groupBy(id_col).agg(*mins)
-    return sig.select(id_col, F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
-
-
-def minhash_lsh_candidates(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 8,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """LSH banding: split each signature into ``bands`` bands, hash each
-    band, bucket-join — pairs sharing ≥1 band bucket are candidates.
-    Join key is (band_idx, band_hash): equi-join, no cross product.
-
-    ``max_bucket_size`` drops buckets larger than the cap BEFORE the
-    self-join (pairs grow with occupancy²; the 100x probe measured 142x
-    wall on a corpus whose buckets held 100 exact copies of every doc).
-    A dropped bucket is almost always an exact-duplicate cluster — route
-    those through :func:`exact_dedup` first, which finds them at flat
-    cost; the cap is the backstop for the ones that remain (boilerplate,
-    templates). Default ``None`` keeps exact recall for the graded path.
-
-    Ragged-band contract (the strictness asymmetry with
-    :func:`portable_lsh_index` is INTENTIONAL): ``bands`` should divide
-    the signature length. When it doesn't, each band keeps
-    ``floor(len/bands)`` hashes and the trailing ``len % bands`` are
-    ignored; when ``bands`` exceeds the signature length the empty band
-    slices are dropped (their keys would collide universally), shrinking
-    the effective band count — both lower recall below the nominal
-    banding, never correctness. This entry point is the exploratory bulk
-    path where a config/data mismatch degrading recall beats killing a
-    long job at runtime; ``portable_lsh_index`` builds a persisted
-    artifact whose band geometry downstream readers depend on, so it
-    raises on the same condition."""
-    if bands < 1:
-        raise ValueError(f"minhash_lsh_candidates: bands must be >= 1, got {bands}")
-    n = signatures
-    sig_len_col = F.size("signature")
-    # an empty band (bands > signature length) would hash every doc to the
-    # SAME empty-slice key in every band — a silent n² cross product
-    rows_per_band = F.greatest((sig_len_col / bands).cast("int"), F.lit(1))
-    banded = n.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.when(
-                    # a band slice past the signature end is empty and its
-                    # key would collide universally — emit NULL instead
-                    # (dropped below), preserving the populated bands
-                    F.size(
-                        F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band)
-                    )
-                    > 0,
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(
-                                    F.col("signature"), b * rows_per_band + 1, rows_per_band
-                                ),
-                                lambda x: x.cast("string"),
-                            ),
-                        )
-                    ),
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
-    ).filter(F.col("band_hash").isNotNull())
-    if max_bucket_size is not None:
-        from pyspark.sql import Window as _W
-
-        occupancy = F.count(F.lit(1)).over(
-            _W.partitionBy("band_idx", "band_hash")
-        )
-        banded = banded.withColumn("__occ", occupancy).filter(
-            F.col("__occ") <= max_bucket_size
-        ).drop("__occ")
-    return _band_candidates(banded)
-
-
-def minhash_lsh_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    exact_dedup_first: bool = True,
-    widen: bool = True,
-) -> DataFrame:
-    """Near-dup pairs via MinHash LSH: banded candidates verified by exact
-    Jaccard of shingle-hash sets (semi-joined to candidates only, so the
-    verify join touches candidate pairs, not all pairs).
-
-    ``exact_dedup_first`` (default ON) collapses verbatim copies before
-    signatures and expands the answer back afterwards — answer-identical
-    (identical texts ⇒ identical signatures ⇒ identical banding, so
-    candidate-ness and verified Jaccard are unchanged pair-for-pair; intra-
-    group pairs are J=1.0 by construction and always bucket together), but
-    the bucket occupancy² blow-up the 100× probe measured (142× on a
-    corpus of 100 verbatim copies per doc) collapses to the linear content-
-    hash shuffle plus the output-sized emission.
-
-    The shingle-hash index is built and checkpointed ONCE and shared by the
-    signature step and the verify step — previously each rebuilt the
-    tokenize+shingle subtree, which was ~11% of the whole bench."""
-    df, mapping = (
-        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
-        if exact_dedup_first
-        else (df, None)
-    )
-    idx = materialize(shingle_hash_index(df, text_col, id_col, k, widen=widen))
-    sigs = minhash_signatures(df, text_col, id_col, k, num_hashes, index=idx)
-    cands = minhash_lsh_candidates(sigs, id_col, bands)
-    sizes = idx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    # candidate pairs are the small side: broadcast them ONCE into the a-side
-    # index (referencing `cands` in several joins would re-evaluate the whole
-    # signature+banding subtree per reference), then equi-join the b-side on
-    # (id_b, shingle-hash) to count intersections — candidate-local work only.
-    a = idx.toDF("id_a", "sh")
-    b = idx.toDF("id_b", "sh")
-    expanded = a.join(F.broadcast(cands), "id_a")  # (id_a, sh, id_b)
-    inter = (
-        expanded.join(b, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.toDF("id_a", "n_a")
-    sb = sizes.toDF("id_b", "n_b")
-    jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-    pairs = (
-        inter.join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if mapping is None:
-        return pairs
     return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
@@ -732,8 +558,8 @@ def _banded_from_signature(
 ) -> DataFrame:
     """(id, band_idx, band_key) rows from a signature frame carrying the
     ``h0..h{num_hashes-1}`` min columns — the banding step shared by
-    :func:`portable_lsh_index`, :func:`minhash_lsh_dedup_portable` and
-    :func:`sketch_accuracy_audit`, which all run :func:`_check_bands` at
+    :func:`minhash_lsh_dedup_portable`, :func:`sketch_accuracy_audit` and
+    the streaming near-dup gate, which all run :func:`_check_bands` at
     entry."""
     rows_per_band = num_hashes // bands
     return sig.select(
@@ -755,66 +581,35 @@ def _banded_from_signature(
     )
 
 
-def _portable_hash_index(
-    df: DataFrame, text_col: str, id_col: str, k: int, widen: bool = True
+def _portable_features(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    num_hashes: int,
+    widen: bool = True,
 ) -> DataFrame:
-    """The distinct (id, 30-bit shingle base hash) set of the portable
-    MinHash family — the input of every portable signature."""
+    """The per-doc feature frame of the portable MinHash path: ONE
+    aggregation of the distinct (id, 30-bit shingle base hash) index yields
+    the signature mins ``h0..h{num_hashes-1}`` (one min of (a*x+b) mod P
+    per :func:`minhash_coeffs` pair), the distinct-hash count ``n_sh`` and
+    the hash set as an array ``shs`` (the index is distinct per (doc,
+    hash), so the array IS the set). Every feature is a property of one
+    document, so features built per micro-batch equal the batch-global
+    ones. Batch callers wrap the frame in :func:`..skew.materialize`; the
+    streaming gate's micro-batch side is neither checkpointed nor widened."""
     idx = shingle_index(df, text_col, id_col, k, widen=widen)
-    return idx.select(
+    hidx = idx.select(
         F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
     ).distinct()
-
-
-def _portable_mins(num_hashes: int) -> list[Column]:
-    """The ``h0..h{num_hashes-1}`` signature aggregates over ``sh``: one
-    min of (a*x+b) mod P per :func:`minhash_coeffs` pair."""
-    return [
-        F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-
-
-def _portable_features(
-    df: DataFrame, text_col: str, id_col: str, k: int, num_hashes: int
-) -> DataFrame:
-    """The checkpointed per-doc feature frame of the portable MinHash path:
-    ONE aggregation of the hash index yields the signature mins, the
-    distinct-hash count ``n_sh`` and the hash set as an array ``shs``
-    (the index is distinct per (doc, hash), so the array IS the set)."""
-    feat = _portable_hash_index(df, text_col, id_col, k).groupBy(id_col).agg(
-        *_portable_mins(num_hashes),
+    return hidx.groupBy(id_col).agg(
+        *[
+            F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
+            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+        ],
         F.count(F.lit(1)).alias("n_sh"),
         F.collect_list("sh").alias("shs"),
     )
-    return materialize(feat)
-
-
-def portable_lsh_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    checkpoint: bool = True,
-    widen: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Build the three frames of the portable MinHash-LSH index for ``df``:
-    ``(hidx, banded, cnt)`` — the distinct (id, shingle-hash) set, the
-    (id, band_idx, band_key) candidates frame, and per-id shingle counts.
-    Shared by :func:`minhash_lsh_dedup_portable` (self-join dedup) and the
-    streaming near-dup gate (cross-set match against a static corpus).
-    All three are per-document properties, so an index built per micro-
-    batch equals the batch-global computation for those documents."""
-    _check_bands(num_hashes, bands)
-    hidx = _portable_hash_index(df, text_col, id_col, k, widen=widen)
-    if checkpoint:
-        hidx = materialize(hidx)
-    sig = hidx.groupBy(id_col).agg(*_portable_mins(num_hashes))
-    banded = _banded_from_signature(sig, id_col, num_hashes, bands)
-    cnt = hidx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    return hidx, banded, cnt
 
 
 def minhash_lsh_dedup_portable(
@@ -829,24 +624,30 @@ def minhash_lsh_dedup_portable(
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs on the cross-engine-verifiable hash family.
 
-    Same shape as :func:`minhash_lsh_dedup` (banded candidates → exact
-    Jaccard verify on the shared shingle-hash index) but every hash is
-    DuckDB-expressible: base = low 30 bits of the md5-derived 64-bit shingle
-    hash, signatures from the (a*x+b) mod P universal family
-    (:func:`minhash_coeffs`), band keys as plain value-concat strings. ~3×
-    slower than the xxhash64 path (hex-string md5 decode); this is the
-    path the graded corpus query runs. ``exact_dedup_first`` routes
-    verbatim copies through the linear content-hash collapse first
-    (answer-identical; see :func:`minhash_lsh_dedup`)."""
+    Banded candidates → exact Jaccard verify on the per-doc shingle-hash
+    sets, and every hash is DuckDB-expressible: base = low 30 bits of the
+    md5-derived 64-bit shingle hash, signatures from the (a*x+b) mod P
+    universal family (:func:`minhash_coeffs`), band keys as plain
+    value-concat strings.
+
+    ``exact_dedup_first`` (default ON) collapses verbatim copies before
+    the signatures and expands the answer back afterwards —
+    answer-identical (identical texts ⇒ identical signatures ⇒ identical
+    banding, so candidate-ness and verified Jaccard are unchanged
+    pair-for-pair; intra-group pairs are J=1.0 by construction and always
+    bucket together), but the bucket occupancy² blow-up the 100× probe
+    measured (142× on a corpus of 100 verbatim copies per doc) collapses
+    to the linear content-hash shuffle plus the output-sized emission."""
     _check_bands(num_hashes, bands)
     df, mapping = (
         _exact_collapse(df, id_col, F.md5(F.col(text_col)))
         if exact_dedup_first
         else (df, None)
     )
-    feat = _portable_features(df, text_col, id_col, k, num_hashes)
+    feat = materialize(_portable_features(df, text_col, id_col, k, num_hashes))
     cands = _band_candidates(_banded_from_signature(feat, id_col, num_hashes, bands))
-    pairs = _jaccard_verify(cands, feat.select(id_col, "shs"), threshold).select(
+    sets = feat.select(id_col, "shs")
+    pairs = _jaccard_verify(cands, sets, sets, threshold).select(
         "id_a", "id_b", "jaccard"
     )
     if mapping is None:
@@ -1213,7 +1014,7 @@ def sketch_accuracy_audit(
     _check_bands(num_hashes, bands)
     if exact_dedup_first:
         df, _ = _exact_collapse(df, id_col, F.md5(F.col(text_col)))
-    feat = _portable_features(df, text_col, id_col, k, num_hashes)
+    feat = materialize(_portable_features(df, text_col, id_col, k, num_hashes))
     cand = _band_candidates(_banded_from_signature(feat, id_col, num_hashes, bands))
     feat_a = feat.select(
         F.col(id_col).alias("id_a"),
@@ -1232,8 +1033,7 @@ def sketch_accuracy_audit(
         for i in range(num_hashes)
     )
     scored_wide = (
-        feat_a.join(F.broadcast(cand), "id_a")
-        .join(feat_b, "id_b")
+        _candidate_pairs(cand, feat_a, feat_b)
         .select(
             (matches * F.lit(1.0) / F.lit(num_hashes)).alias("est_j"),
             F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),

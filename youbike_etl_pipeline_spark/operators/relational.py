@@ -24,14 +24,6 @@ def project(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(*columns)
 
 
-def rename_positional(df: DataFrame, names: list[str]) -> DataFrame:
-    """Bulk positional rename (P2): ``df.columns = [...]`` equivalent
-    (reference ``etl_job.py:100,104``)."""
-    if len(names) != len(df.columns):
-        raise ValueError(f"expected {len(df.columns)} names, got {len(names)}")
-    return df.toDF(*names)
-
-
 def rename_synonyms(df: DataFrame, mapping: dict[str, str] | None = None) -> DataFrame:
     """Guarded synonym rename (P3): apply ``old → new`` only when ``old``
     exists and ``new`` is not already present, avoiding duplicate targets
@@ -67,25 +59,8 @@ def distinct_pairs(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(*columns).distinct()
 
 
-def fill_null(df: DataFrame, values: dict) -> DataFrame:
-    """Constant null fill (P9) — reference
-    ``notebooks/05_multistation_lstm.ipynb:L91``."""
-    return df.na.fill(values)
-
-
-def drop_null(df: DataFrame, subset: list[str]) -> DataFrame:
-    """Null drop (P8) — reference ``notebooks/01_youbike_analysis.ipynb:L72``."""
-    return df.na.drop(subset=subset)
-
-
 def coerce_numeric(df: DataFrame, columns: list[str], to: str = "double") -> DataFrame:
     """``pd.to_numeric(errors='coerce')`` equivalent (P12): ``try_cast`` maps
     unparseable values to null instead of failing
     (reference ``notebooks/01_youbike_analysis.ipynb:L65``)."""
     return df.withColumns({c: F.col(c).try_cast(to) for c in columns})
-
-
-def cast_keys_to_string(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Join-key string normalization (P12) — the reference's ``astype(str)``
-    discipline (``notebooks/03_data_merge.ipynb:L71-L72``)."""
-    return df.withColumns({k: F.col(k).cast("string") for k in keys})

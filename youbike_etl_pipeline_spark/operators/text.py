@@ -31,12 +31,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def word_token_count(text: Column) -> Column:
-    """BPE-ish sub-word proxy: word tokens plus punctuation splits —
-    ``\\w+|[^\\w\\s]`` occurrences."""
-    return F.size(F.regexp_extract_all(text, F.lit(r"\w+|[^\w\s]"), 0))
-
-
 def marker_count(text: Column, word: str) -> Column:
     """Occurrences of a marker word, counted by token equality.
 
@@ -572,7 +566,6 @@ def byte_bpe_token_stats(
     merges: "tuple[tuple[str, str], ...]" = BYTE_BPE_MERGES,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_vocab: bool = True,
     pretoken_re: str = BYTE_PRETOKEN_RE,
 ) -> DataFrame:
     """Per-document byte-level BPE statistics — the t50 distinct-word
@@ -580,20 +573,19 @@ def byte_bpe_token_stats(
     :data:`BYTE_PRETOKEN_RE` matches (CJK per-codepoint, otherwise
     whitespace-split, case preserved), each DISTINCT pretoken is
     byte-tokenized ONCE in an Arrow pass, token/byte counts rejoin the
-    collapsed ``(doc, pretoken) → cnt`` occurrences and aggregate.
+    occurrences and aggregate.
 
     Scale routing is inherited from :func:`bpe_token_stats` (round-9
     sweep lesson, refined round 10 after this query's own third-decade
     probe): pretoken frequency is Zipf-skewed in every language, so
-    occurrences never shuffle on the pretoken key. On the default
+    occurrences never shuffle on the pretoken key. On the
     BROADCAST route (|vocab| ≪ |corpus| by Heaps' law for segmented
     scripts and by the bounded ideograph inventory for CJK) occurrences
     never shuffle AT ALL — the join is map-side and the only exchanges
     are the map-combined vocab distinct and the map-combined per-doc
     aggregate (the probe measured the previous ``(doc, pretoken)``
     pre-collapse exchange at 14.4×/decade from its near-input-size row
-    stream; this shape removes it). ``broadcast_vocab=False`` keeps
-    collapse-first so the shuffle join sees near-unique keys.
+    stream; this shape removes it).
 
     ``pretoken_re`` swaps the pretokenization grammar: the default is
     the whitespace+CJK approximation above; pass
@@ -632,26 +624,11 @@ def byte_bpe_token_stats(
         .distinct()
         .mapInPandas(fn, "w string, n_tok bigint, n_byt bigint")
     )
-    if broadcast_vocab:
-        joined = pretoks.join(F.broadcast(vocab), "w")
-        out = joined.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_pretok"),
-            F.sum("n_tok").alias("n_tokens"),
-            F.sum("n_byt").alias("n_bytes"),
-        )
-    else:
-        wcounts = pretoks.groupBy(id_col, "w").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        out = (
-            wcounts.join(vocab, "w")
-            .groupBy(id_col)
-            .agg(
-                F.sum("cnt").alias("n_pretok"),
-                F.sum(F.col("cnt") * F.col("n_tok")).alias("n_tokens"),
-                F.sum(F.col("cnt") * F.col("n_byt")).alias("n_bytes"),
-            )
-        )
+    out = pretoks.join(F.broadcast(vocab), "w").groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_pretok"),
+        F.sum("n_tok").alias("n_tokens"),
+        F.sum("n_byt").alias("n_bytes"),
+    )
     return out.withColumn(
         "bytes_per_token",
         F.round(F.col("n_bytes") / F.col("n_tokens"), 6),
@@ -663,7 +640,6 @@ def bpe_token_stats(
     merges: "tuple[tuple[str, str], ...]" = BPE_MERGES,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_vocab: bool = True,
     carry_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """Per-document BPE token statistics via the distinct-word route:
@@ -679,18 +655,14 @@ def bpe_token_stats(
     shape; refined round 10 after t53's third-decade probe): raw word
     OCCURRENCES must never shuffle on the word — the key is Zipf-skewed
     ('the' alone is ~5% of every partition), so a shuffle join stalls
-    on the hot keys. With the default BROADCAST vocab (|vocab| ≪
+    on the hot keys. With the BROADCAST vocab (|vocab| ≪
     |corpus|, Heaps' law) occurrences never shuffle AT ALL: the join is
     map-side against the broadcast table and the only exchanges are the
     vocab distinct (map-combined to one row per distinct word per
     partition) and the final per-doc aggregate (map-combined to one row
     per doc per partition) — the round-10 probe measured the previous
     ``(doc, word)`` pre-collapse exchange carrying a near-input-size row
-    stream for no benefit on this route. ``broadcast_vocab=False`` (a
-    corpus whose vocabulary outgrows executor memory) keeps the
-    collapse-first shape: occurrences reduce to ``(doc, word) → cnt``
-    behind the map-side combine that absorbs the skew, and the shuffle
-    join then sees near-unique keys, never the raw hot stream."""
+    stream for no benefit on this route."""
     from typing import Iterator
 
     import pandas as pd
@@ -720,24 +692,10 @@ def bpe_token_stats(
     )
     # carry_cols are functionally dependent on the doc id (e.g. source),
     # so adding them to the grouping keys changes nothing but the schema
-    if broadcast_vocab:
-        joined = words.join(F.broadcast(vocab), "w")
-        out = joined.groupBy(id_col, *carry_cols).agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_tok").alias("n_tokens"),
-        )
-    else:
-        wcounts = words.groupBy(id_col, *carry_cols, "w").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        out = (
-            wcounts.join(vocab, "w")
-            .groupBy(id_col, *carry_cols)
-            .agg(
-                F.sum("cnt").alias("n_words"),
-                F.sum(F.col("cnt") * F.col("n_tok")).alias("n_tokens"),
-            )
-        )
+    out = words.join(F.broadcast(vocab), "w").groupBy(id_col, *carry_cols).agg(
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_tok").alias("n_tokens"),
+    )
     return out.withColumn(
         "tokens_per_word",
         F.round(F.col("n_tokens") / F.col("n_words"), 6),

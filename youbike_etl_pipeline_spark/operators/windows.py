@@ -11,7 +11,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -159,12 +159,6 @@ def sessionize(
         "session_id",
         F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
-
-
-def hour_bucket(ts: Column) -> Column:
-    """Hour flooring (W4) — ``date_trunc('hour', ts)``
-    (reference ``dt.floor('h')``, ``notebooks/03_data_merge.ipynb:L79``)."""
-    return F.date_trunc("hour", ts)
 
 
 def bucketed_row_number(

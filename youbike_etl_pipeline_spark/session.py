@@ -29,6 +29,15 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count
 #: Generated-class cache size. A static conf: it takes effect only when set
 #: before the JVM's first codegen, as building the session here does.
 CODEGEN_CACHE_ENTRIES = 4096
+#: Upper bound of the default driver heap.
+MAX_DRIVER_MEMORY = 16 << 30
+
+
+def driver_memory(physical_bytes: int) -> str:
+    """Default ``spark.driver.memory`` for a host with ``physical_bytes`` of
+    RAM: half of it, at most :data:`MAX_DRIVER_MEMORY`, in MiB. A heap as
+    large as the host would let the JVM grow until the host runs out."""
+    return f"{min(MAX_DRIVER_MEMORY, physical_bytes // 2) >> 20}m"
 
 
 def get_spark(
@@ -68,7 +77,9 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
         .config("spark.sql.files.openCostInBytes", "262144")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        ))
     )
     if master:
         builder = builder.config("spark.master", master)

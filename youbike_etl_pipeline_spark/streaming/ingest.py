@@ -155,7 +155,7 @@ def hll_partials_foreach_batch(
 
 def neardup_gate_foreach_batch(
     stream_docs: DataFrame,
-    static_index: "tuple[DataFrame, DataFrame, DataFrame]",
+    static_docs: DataFrame,
     sink: list,
     threshold: float = 0.5,
     k: int = 3,
@@ -163,55 +163,49 @@ def neardup_gate_foreach_batch(
     bands: int = 8,
 ) -> None:
     """Streaming near-dup ingestion gate — the filter a training pipeline
-    runs on every incoming crawl batch against the EXISTING corpus:
-    per micro-batch, build the portable MinHash-LSH frames for the batch
-    docs (signatures/bands/counts are per-document properties, so the
-    per-batch computation equals the batch-global one regardless of how
-    the stream is split), banded-equi-join them against the static corpus
-    index for candidates, verify candidates with exact Jaccard on the
-    shared shingle-hash sets, and emit (doc_id, is_dup) rows. Stateless
-    per batch (no watermark state); the static side is built once and
-    localCheckpointed. ``sink`` is the list stand-in for a Delta/JDBC
-    append, same as :func:`upsert_foreach_batch`."""
-    from ..operators.dedup import portable_lsh_index
+    runs on every incoming crawl batch against the EXISTING corpus
+    ``static_docs``: per micro-batch, build the portable MinHash features
+    of the batch docs (per-document properties, so the per-batch
+    computation equals the batch-global one regardless of how the stream
+    is split), banded-equi-join them against the static corpus's bands for
+    candidates, verify candidates with exact Jaccard on the shingle-hash
+    sets, and emit (doc_id, lang, is_dup) rows. Stateless per batch (no
+    watermark state); the static features are built and checkpointed once,
+    before the stream starts. ``sink`` is the list stand-in for a
+    Delta/JDBC append, same as :func:`upsert_foreach_batch`."""
+    from ..operators.dedup import (
+        _banded_from_signature,
+        _check_bands,
+        _jaccard_verify,
+        _portable_features,
+    )
+    from ..operators.skew import materialize
 
-    s_hidx, s_banded, s_cnt = static_index
-    s_banded = s_banded.toDF("id_b", "band_idx", "band_key")
-    s_hidx_b = s_hidx.toDF("id_b", "sh")
-    s_cnt_b = s_cnt.toDF("id_b", "n_b")
+    _check_bands(num_hashes, bands)
+    static = materialize(_portable_features(static_docs, "text", "doc_id", k, num_hashes))
+    s_banded = _banded_from_signature(static, "doc_id", num_hashes, bands).toDF(
+        "id_b", "band_idx", "band_key"
+    )
+    s_sets = static.select("doc_id", "shs")
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        b_hidx, b_banded, b_cnt = portable_lsh_index(
-            batch, k=k, num_hashes=num_hashes, bands=bands, checkpoint=False,
-            widen=False,  # micro-batches are small; a per-batch shuffle loses
-        )
+        # micro-batches are small: no widening shuffle and no checkpoint,
+        # which would be held until release and grow with the stream
+        feat = _portable_features(batch, "text", "doc_id", k, num_hashes, widen=False)
         cands = (
-            b_banded.toDF("id_a", "band_idx", "band_key")
+            _banded_from_signature(feat, "doc_id", num_hashes, bands)
+            .toDF("id_a", "band_idx", "band_key")
             .join(s_banded, ["band_idx", "band_key"])
             .select("id_a", "id_b")
             .distinct()
         )
-        inter = (
-            b_hidx.toDF("id_a", "sh")
-            .join(F.broadcast(cands), "id_a")
-            .join(s_hidx_b, ["id_b", "sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        jac = F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
         dup_ids = (
-            inter.join(F.broadcast(b_cnt.toDF("id_a", "n_a")), "id_a")
-            .join(s_cnt_b, "id_b")
-            .filter(jac >= threshold)
-            .select("id_a")
+            _jaccard_verify(cands, feat.select("doc_id", "shs"), s_sets, threshold)
+            .select(F.col("id_a").alias("doc_id"))
             .distinct()
         )
         flagged = batch.select("doc_id", "lang").join(
-            dup_ids.withColumnRenamed("id_a", "doc_id").withColumn(
-                "is_dup", F.lit(True)
-            ),
-            "doc_id",
-            "left",
+            dup_ids.withColumn("is_dup", F.lit(True)), "doc_id", "left"
         )
         sink.append((epoch_id, flagged.collect()))
 
