@@ -88,7 +88,7 @@ def test_batch_reader_normalizes_ts_to_session_tz_timestamp(spark, tmp_path, uni
 def test_sessionize_on_both_physical_types(spark, tmp_path, unit):
     sf_dir = _write_events(str(tmp_path), unit)
     ev = read_events(spark, sf_dir)
-    sess = sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0)
+    sess = sessionize(ev, key="user_id", ts="ts")
     got = {
         r["user_id"]: r["n"]
         for r in sess.groupBy("user_id")

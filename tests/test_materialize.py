@@ -172,13 +172,13 @@ def test_bad_bands_fail_before_any_spark_job(spark, call):
     )
     calls = {
         "minhash_lsh_dedup_portable": lambda: dedup.minhash_lsh_dedup_portable(
-            docs, num_hashes=32, bands=5
+            docs, bands=5
         ),
         "sketch_accuracy_audit": lambda: dedup.sketch_accuracy_audit(
-            docs, num_hashes=32, bands=5
+            docs, bands=5
         ),
         "neardup_gate_foreach_batch": lambda: ingest.neardup_gate_foreach_batch(
-            stream, docs, [], num_hashes=32, bands=5
+            stream, docs, [], bands=5
         ),
     }
     sc = spark.sparkContext

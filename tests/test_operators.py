@@ -97,7 +97,7 @@ def test_sequence_windows_shape(spark):
     df = spark.createDataFrame(
         [("a", i, float(i)) for i in range(5)], "k string, t int, value double"
     )
-    seq = sequence_windows(df, key="k", ts="t", feature_cols=["value"], time_steps=3)
+    seq = sequence_windows(df, key="k", ts="t", feature_cols=["value"])
     rows = seq.orderBy("t").collect()
     assert len(rows) == 2  # t=3 and t=4 have full 3-step history
     assert [s["value"] for s in rows[0]["sequence"]] == [0.0, 1.0, 2.0]
@@ -107,11 +107,11 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_small):
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
     exact = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs, k=3, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
     approx = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_dedup_portable(docs, k=3, threshold=0.5).collect()
+        for r in minhash_lsh_dedup_portable(docs).collect()
     }
     # verification step makes approx ⊆ exact; banding should recover most
     assert approx.issubset(exact)
@@ -309,11 +309,11 @@ def test_ivf_topk_recall_vs_exact(spark, sf_small):
     q = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     base = emb.filter(F.col("vec_id") != 0)
     exact = [r["vec_id"] for r in cosine_topk(base, q, k=10).collect()]
-    approx = [r["vec_id"] for r in ivf_topk(base, q, k=10, n_centroids=8, n_probe=4).collect()]
+    approx = [r["vec_id"] for r in ivf_topk(base, q, n_centroids=8, n_probe=4).collect()]
     # probing half the cells should recover most of the exact top-10
     assert len(set(approx) & set(exact)) >= 6, (approx, exact)
     # full probe = exact
-    full = [r["vec_id"] for r in ivf_topk(base, q, k=10, n_centroids=8, n_probe=8).collect()]
+    full = [r["vec_id"] for r in ivf_topk(base, q, n_centroids=8, n_probe=8).collect()]
     assert full == exact
 
 
@@ -331,7 +331,7 @@ def test_sessionize_gap_semantics(spark):
     df = spark.createDataFrame(rows, "k string, ts timestamp, event_id int")
     from youbike_etl_pipeline_spark.operators.windows import sessionize
 
-    out = {r["event_id"]: r["session_id"] for r in sessionize(df, "k", "ts", 30.0, ["event_id"]).collect()}
+    out = {r["event_id"]: r["session_id"] for r in sessionize(df, "k", "ts", ["event_id"]).collect()}
     assert out == {1: 1, 2: 1, 3: 2, 4: 2, 5: 1}
 
 
@@ -519,7 +519,7 @@ def test_connected_components_dedup_clusters(spark, sf_small):
     )
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
-    pairs = ngram_jaccard_pairs(docs, k=3, threshold=0.5)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5)
     edge_list = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
 
     # reference union-find
@@ -562,8 +562,8 @@ def test_batch_predict_sequences_fake_and_real(spark):
     df = spark.createDataFrame(
         [("s1", i, float(i * 2)) for i in range(6)], "station_no string, t int, value double"
     )
-    seq = sequence_windows(df, key="station_no", ts="t", feature_cols=["value"], time_steps=3)
-    preds = batch_predict_sequences(seq, id_cols=("station_no",), fake=True).collect()
+    seq = sequence_windows(df, key="station_no", ts="t", feature_cols=["value"])
+    preds = batch_predict_sequences(seq, fake=True).collect()
     # fake predictor = mean of the 3-step window's value feature
     assert len(preds) == 3
     assert preds[0]["prediction"] == pytest.approx((0.0 + 2.0 + 4.0) / 3)
@@ -571,7 +571,7 @@ def test_batch_predict_sequences_fake_and_real(spark):
     import numpy as np
 
     w = seeded_lstm_weights(input_dim=1)
-    real = batch_predict_sequences(seq, id_cols=("station_no",), fake=False, weights=w)
+    real = batch_predict_sequences(seq, fake=False, weights=w)
     got = sorted(r["prediction"] for r in real.collect())
     windows = [[0.0, 2.0, 4.0], [2.0, 4.0, 6.0], [4.0, 6.0, 8.0]]
     want = sorted(
@@ -808,11 +808,11 @@ def test_prefix_filter_jaccard_lossless_vs_brute_force(spark, sf_small):
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
     brute = {
         (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"])
-        for r in ngram_jaccard_pairs(docs, k=3, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
     pref = {
         (r["id_a"], r["id_b"]): (r["n_common"], r["n_a"], r["n_b"])
-        for r in prefix_filter_jaccard_pairs(docs, k=3, threshold=0.5).collect()
+        for r in prefix_filter_jaccard_pairs(docs, threshold=0.5).collect()
     }
     assert pref == brute
     assert brute, "fixture should produce at least one qualifying pair"
@@ -862,13 +862,13 @@ def test_prefix_filter_jaccard_irrational_threshold_lossless(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in prefix_filter_jaccard_pairs(docs, k=3, threshold=2 / 3).collect()
+        for r in prefix_filter_jaccard_pairs(docs, threshold=2 / 3).collect()
     }
     assert got == {(1, 2): 2 / 3}
     # brute force agrees (losslessness at the awkward threshold)
     brute = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, k=3, threshold=2 / 3).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=2 / 3).collect()
     }
     assert brute == got
 
@@ -955,10 +955,10 @@ def test_interval_overlap_pairs_cap_bounds_output(spark):
 @pytest.mark.parametrize(
     "op_name,kwargs,keycols",
     [
-        ("ngram_jaccard_pairs", {"k": 3, "threshold": 0.5}, ("n_common", "n_a", "n_b", "jaccard")),
-        ("ngram_jaccard_pairs", {"k": 3, "threshold": 0.5, "max_doc_freq": 3}, ("n_common", "n_a", "n_b", "jaccard")),
-        ("prefix_filter_jaccard_pairs", {"k": 3, "threshold": 0.5}, ("n_common", "n_a", "n_b", "jaccard")),
-        ("minhash_lsh_dedup_portable", {"k": 3, "threshold": 0.5}, ("jaccard",)),
+        ("ngram_jaccard_pairs", {"threshold": 0.5}, ("n_common", "n_a", "n_b", "jaccard")),
+        ("ngram_jaccard_pairs", {"threshold": 0.5, "max_doc_freq": 3}, ("n_common", "n_a", "n_b", "jaccard")),
+        ("prefix_filter_jaccard_pairs", {"threshold": 0.5}, ("n_common", "n_a", "n_b", "jaccard")),
+        ("minhash_lsh_dedup_portable", {}, ("jaccard",)),
     ],
 )
 def test_exact_dedup_first_answer_identical(spark, sf_small, op_name, kwargs, keycols):
@@ -1817,7 +1817,7 @@ def test_vit_patchify_matches_numpy(spark):
 
     df = spark.range(0, 30, 10).withColumnRenamed("id", "doc_id")
     media = attach_ppm_payloads(df, width=16, height=12)
-    rows = patchify_features(media, patch=4).collect()
+    rows = patchify_features(media).collect()
     assert len(rows) == 3 * (16 // 4) * (12 // 4)
     for r in rows:
         img = md5_pixels(r["doc_id"], 16, 12).astype(np.float64)
@@ -1829,6 +1829,4 @@ def test_vit_patchify_matches_numpy(spark):
         assert r["g_mean"] == cell[:, :, 1].mean()
         assert r["b_mean"] == cell[:, :, 2].mean()
     with _pt.raises(Exception, match="divisible"):
-        patchify_features(
-            attach_ppm_payloads(df, width=15, height=12), patch=4
-        ).collect()
+        patchify_features(attach_ppm_payloads(df, width=15, height=12)).collect()

@@ -1,10 +1,11 @@
 """The fused replicate pass (``stats.resample``) against a pure-Python
-reference: the same Lehmer chain in Python ints and ``decimal.Decimal``
-sums, so every count and sum must match exactly."""
+reference: the same per-row MINSTD streams in Python ints and
+``decimal.Decimal`` sums, so every count and sum must match exactly."""
 
 from __future__ import annotations
 
 import bisect
+import math
 from decimal import Decimal
 
 import pytest
@@ -21,7 +22,7 @@ THRESHOLDS = [0.3, 0.75]
 
 
 def _uniform(seed: int, r: int) -> float:
-    return ((seed + r * 1013904223) % M) * 48271 % M / float(M)
+    return (seed % (M - 1) + 1) * pow(48271, r + 1, M) % M / float(M)
 
 
 def _reference(rows, thresholds, n_reps):
@@ -81,15 +82,25 @@ def _rows(n, seed0=17):
 def test_uniforms_match_the_spark_expression(spark):
     seeds = [0, 1, 2147483646, 2147483647, 987654321, -5, -2147483647]
     n_reps = 4
-    expr = "((seed + r * 1013904223) % 2147483647) * 48271 % 2147483647 / 2147483647.0D"
+    expr = "((seed % 2147483646 + 1) * p) % 2147483647 / 2147483647.0D"
     df = spark.createDataFrame([(s,) for s in seeds], "seed long").crossJoin(
-        spark.range(n_reps).selectExpr("id AS r")
+        spark.createDataFrame(
+            [(r, pow(48271, r + 1, M)) for r in range(n_reps)], "r long, p long"
+        )
     )
     got = {(r.seed, r.r): r.u for r in df.selectExpr("seed", "r", f"{expr} AS u").collect()}
     block = lehmer_uniforms(seeds, n_reps)
     for i, s in enumerate(seeds):
         for r in range(n_reps):
             assert block[i, r] == got[(s, r)], (s, r)
+
+
+def test_consecutive_replicates_draw_independently():
+    # P(u_r < 1/e and u_{r+1} < 1/e) is e^-2 ≈ 0.135 for independent draws
+    seeds = [(17 + i * 7919) * 104729 % M for i in range(2000)]
+    low = lehmer_uniforms(seeds, 200) < math.exp(-1)
+    share = (low[:, 1:] & low[:, :-1]).mean()
+    assert 0.12 <= share <= 0.15, share
 
 
 def test_exact_over_many_batches_and_partitions(spark):
@@ -105,8 +116,6 @@ def test_exact_over_many_batches_and_partitions(spark):
 
 
 def test_key_whose_replicates_all_draw_outcome_zero(spark):
-    # u steps by ~0.474 per replicate (mod 1), so a row can stay under the
-    # first cut point in every replicate only when that cut is wide
     n_reps, thresholds = 4, [0.8, 0.9]
     seed = next(s for s in range(1, M, 104729) if all(_uniform(s, r) < thresholds[0] for r in range(n_reps)))
     rows = _rows(30) + [("zero", seed, Decimal("3.25"), Decimal("4"), Decimal("5"))]

@@ -83,9 +83,7 @@ def test_repartition_for_rows_noop_and_widen(spark, sf_small):
     # below the per-partition target: identical object, no exchange added
     assert repartition_for_rows(df, shuf * 2_000_000 - 1, "l_orderkey") is df
     # above it: hash-partitioned on the key at ceil(rows/target) partitions
-    widened = repartition_for_rows(
-        df, 10 * 2_000_000 + 1, "l_orderkey", rows_per_partition=2_000_000
-    )
+    widened = repartition_for_rows(df, 10 * 2_000_000 + 1, "l_orderkey")
     assert widened.rdd.getNumPartitions() == 11
     plan = widened._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(l_orderkey" in plan

@@ -245,7 +245,7 @@ def test_streaming_media_decode_matches_batch(spark, tmp_path):
         decode_audio_features,
     )
     from youbike_etl_pipeline_spark.streaming.ingest import (
-        read_documents_stream,
+        _table_stream,
         run_stream_to_memory,
     )
 
@@ -261,7 +261,7 @@ def test_streaming_media_decode_matches_batch(spark, tmp_path):
             "append"
         ).parquet(str(src))
 
-    stream = read_documents_stream(spark, str(tmp_path))
+    stream = _table_stream(spark, str(tmp_path), "documents.parquet")
     feats = decode_audio_features(attach_wav_payloads(stream))
     got = run_stream_to_memory(feats, output_mode="append").collect()
     batch = decode_audio_features(

@@ -103,7 +103,7 @@ def test_pack_sequences_greedy(spark):
         ],
         "lang string, doc_id long, n_tok long",
     )
-    out = {r["doc_id"]: r for r in pack_sequences(docs, capacity=2048).collect()}
+    out = {r["doc_id"]: r for r in pack_sequences(docs).collect()}
     assert (out[1]["bin_idx"], out[1]["offset_in_bin"]) == (0, 0)
     assert (out[2]["bin_idx"], out[2]["offset_in_bin"]) == (0, 1000)
     assert (out[3]["bin_idx"], out[3]["offset_in_bin"]) == (1, 0)
@@ -118,7 +118,7 @@ def test_pack_sequences_is_distributed_per_group(spark):
         [("en", i, 100) for i in range(50)] + [("de", 100 + i, 100) for i in range(50)],
         "lang string, doc_id long, n_tok long",
     )
-    plan = pack_sequences(docs, capacity=2048)._jdf.queryExecution().executedPlan().toString()
+    plan = pack_sequences(docs)._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan
 
 
@@ -225,7 +225,7 @@ def test_round6_dedup_review_regressions(spark):
         "doc_id long, lang string, text string",
     )
     pairs = levenshtein_blocked_pairs(
-        docs, block_col="lang", prefix_len=4, max_dist=12,
+        docs, prefix_len=4,
         exact_dedup_first=True, max_block_size=1,
     ).collect()
     assert pairs == []  # rep 2 never paired, so (2,3) must not appear
@@ -240,7 +240,7 @@ def test_round6_dedup_review_regressions(spark):
     sc.setJobGroup("round6-gate-bands", "ragged bands")
     try:
         with _pt.raises(ValueError, match="evenly divide"):
-            neardup_gate_foreach_batch(stream, docs, [], num_hashes=32, bands=64)
+            neardup_gate_foreach_batch(stream, docs, [], bands=64)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("round6-gate-bands")) == []

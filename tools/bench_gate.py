@@ -6,8 +6,8 @@ Usage:
 
 Compares a fresh ``bench.py`` JSON against a reference (default: the last
 line of ``BENCH_HISTORY.jsonl``) and FAILS (exit 1) when any common query
-slows more than ``RATIO`` (default 1.5x) AND more than ``ABS_SEC`` (default
-0.3 s absolute) — the same double threshold the round-5/6 verdicts applied,
+slows more than ``RATIO`` (1.5x) AND more than ``ABS_SEC`` (0.3 s
+absolute) — the same double threshold the round-5/6 verdicts applied,
 so sub-second jitter on cheap queries never trips the gate. min-of-repeats
 is compared against min-of-repeats when both sides carry ``queries_min``
 (single-shot medians sit in a +/-35% noise band on this host — bench.py's
@@ -23,8 +23,8 @@ import json
 import os
 import sys
 
-RATIO = float(os.environ.get("BENCH_GATE_RATIO", "1.5"))
-ABS_SEC = float(os.environ.get("BENCH_GATE_ABS", "0.3"))
+RATIO = 1.5
+ABS_SEC = 0.3
 
 
 def pick_timings(bench: dict) -> dict[str, float]:

@@ -13,13 +13,14 @@ import duckdb
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
 from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from youbike_etl_pipeline_spark.session import host_driver_memory
 
 SF = os.environ.get("SIM_SF", "/root/testdata/sf0.01")
 conf = (SparkSession.builder.master(os.environ.get("SIM_MASTER","local[8]"))
         .config("spark.sql.shuffle.partitions", os.environ.get("SIM_SHUF","8"))
         .config("spark.sql.session.timeZone","UTC")
         .config("spark.ui.enabled","false")
-        .config("spark.driver.memory","12g"))
+        .config("spark.driver.memory", host_driver_memory()))
 if os.environ.get("SIM_SPLIT"):
     conf = conf.config("spark.sql.files.maxPartitionBytes", os.environ["SIM_SPLIT"])
 spark = conf.getOrCreate()

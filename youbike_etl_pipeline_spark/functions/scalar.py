@@ -74,15 +74,15 @@ def is_peak_hour(ts: Column) -> Column:
     return F.hour(ts).isin(PEAK_HOURS)
 
 
-def to_utc_from_tz(ts: Column, tz: str = "Asia/Taipei") -> Column:
-    """Normalize a naive wall-clock timestamp in ``tz`` to UTC (F2).
+def to_utc_from_tz(ts: Column) -> Column:
+    """Normalize a naive wall-clock Asia/Taipei timestamp to UTC (F2).
 
     Reference: ``tz_localize('Asia/Taipei').tz_convert('UTC')``
     (``etl_job.py:107-109``). Taipei has no DST so the mapping is
     unambiguous; for DST zones Spark resolves ambiguity to the earlier
     offset (documented policy — the reference used ``ambiguous='infer'``).
     """
-    return F.to_utc_timestamp(ts, tz)
+    return F.to_utc_timestamp(ts, "Asia/Taipei")
 
 
 def clamp_round_nonneg(x: Column) -> Column:

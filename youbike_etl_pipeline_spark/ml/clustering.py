@@ -22,16 +22,15 @@ def kmeans_hour_profiles(
     profile: DataFrame,
     id_col: str,
     hour_cols: list[str],
-    k: int = 4,
-    seed: int = 42,
 ) -> tuple[DataFrame, list[dict]]:
-    """Cluster rows of a pivoted hour-profile matrix (A6 output).
+    """Seeded K-Means (k=4) over the rows of a pivoted hour-profile matrix
+    (A6 output).
 
     Returns (assignments DataFrame [id, cluster], cluster summaries
     [{cluster, peak_hour, center}] — the reference's auto-labeling input).
     """
     assembled = VectorAssembler(inputCols=hour_cols, outputCol="features").transform(profile)
-    model = KMeans(k=k, seed=seed, featuresCol="features", predictionCol="cluster").fit(assembled)
+    model = KMeans(k=4, seed=42, featuresCol="features", predictionCol="cluster").fit(assembled)
     assignments = model.transform(assembled).select(id_col, "cluster")
     summaries = []
     for i, center in enumerate(model.clusterCenters()):
@@ -53,17 +52,12 @@ def label_cluster_by_peak(peak_hour: int) -> str:
     return "mixed"
 
 
-def kmeans_cluster_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 4,
-    seed: int = 42,
-) -> DataFrame:
+def kmeans_cluster_embeddings(df: DataFrame, k: int = 4) -> DataFrame:
     """K-Means over an embedding array column (the IVF-centroid builder for
     similarity search): array → ml vector → seeded fit → assignments."""
     assembled = df.select(
-        F.col(id_col), array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        F.col("vec_id"),
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features"),
     )
-    model = KMeans(k=k, seed=seed, featuresCol="features", predictionCol="cluster").fit(assembled)
-    return model.transform(assembled).select(id_col, "cluster")
+    model = KMeans(k=k, seed=42, featuresCol="features", predictionCol="cluster").fit(assembled)
+    return model.transform(assembled).select("vec_id", "cluster")

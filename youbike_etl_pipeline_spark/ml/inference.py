@@ -48,10 +48,12 @@ class LSTMWeights:
         return self.w_ih.shape[1]
 
 
-def seeded_lstm_weights(input_dim: int, hidden_dim: int = 8, seed: int = 7) -> LSTMWeights:
-    """Deterministic pseudo-random weights (the 'saved model' stand-in: a
-    real deployment loads the same structure from a checkpoint file)."""
-    rng = np.random.default_rng(seed)
+def seeded_lstm_weights(input_dim: int) -> LSTMWeights:
+    """Deterministic pseudo-random weights, hidden size 8, seed 7 (the
+    'saved model' stand-in: a real deployment loads the same structure from
+    a checkpoint file)."""
+    hidden_dim = 8
+    rng = np.random.default_rng(7)
     scale = 1.0 / np.sqrt(hidden_dim)
     return LSTMWeights(
         w_ih=rng.uniform(-scale, scale, (4 * hidden_dim, input_dim)),
@@ -91,21 +93,17 @@ def lstm_forward(x: np.ndarray, w: LSTMWeights) -> np.ndarray:
 
 
 def predict_from_features(
-    feats: np.ndarray,
-    w: LSTMWeights,
-    feat_min: np.ndarray,
-    feat_max: np.ndarray,
-    time_steps: int = 3,
+    feats: np.ndarray, w: LSTMWeights, feat_min: np.ndarray, feat_max: np.ndarray
 ) -> np.ndarray:
     """Reference-exact single-snapshot scoring (``api/app/main.py:160-199``):
-    min-max scale each feature row, tile ×``time_steps`` into a steady-state
+    min-max scale each feature row, tile ×3 time steps into a steady-state
     sequence, LSTM-forward, inverse-scale the scalar through the FIRST
     feature's scaler column, clamp/round to a non-negative integer count
     (the tie-free floor(x+0.5), matching functions.scalar.clamp_round_nonneg).
     """
     span = np.where(feat_max - feat_min == 0, 1.0, feat_max - feat_min)
     scaled = (feats - feat_min) / span
-    seq = np.repeat(scaled[:, None, :], time_steps, axis=1)
+    seq = np.repeat(scaled[:, None, :], 3, axis=1)
     pred_scaled = lstm_forward(seq, w)
     real = pred_scaled * span[0] + feat_min[0]
     return np.maximum(0, np.floor(real + 0.5)).astype(np.int64)
@@ -118,7 +116,6 @@ def lstm_batch_predict(
     feat_max: list[float],
     feature_cols: tuple[str, ...],
     id_cols: tuple[str, ...] = ("station_no",),
-    time_steps: int = 3,
 ) -> DataFrame:
     """Distributed batch scoring: one LSTM forward per Arrow batch.
 
@@ -141,7 +138,7 @@ def lstm_batch_predict(
         for pdf in batches:
             feats = pdf[list(feature_cols)].to_numpy(dtype=np.float64)
             preds = (
-                predict_from_features(feats, w, fmin, fmax, time_steps)
+                predict_from_features(feats, w, fmin, fmax)
                 if len(pdf)
                 else np.array([], dtype=np.int64)
             )
@@ -154,12 +151,11 @@ def lstm_batch_predict(
 
 def batch_predict_sequences(
     df: DataFrame,
-    sequence_col: str = "sequence",
-    id_cols: tuple[str, ...] = ("station_no",),
     fake: bool = True,
     weights: LSTMWeights | None = None,
 ) -> DataFrame:
-    """Score sliding-window sequences (W2 output) in Arrow batches.
+    """Score sliding-window sequences (W2 output, keyed by
+    ``station_no``) in Arrow batches.
 
     ``fake=True`` predicts the mean of the window's first feature —
     deterministic, keeps the distributed contract testable without a model.
@@ -167,14 +163,14 @@ def batch_predict_sequences(
     steps (``weights`` default to :func:`seeded_lstm_weights`).
     """
     out_schema = T.StructType(
-        [*[df.schema[c] for c in id_cols], T.StructField("prediction", T.DoubleType(), True)]
+        [df.schema["station_no"], T.StructField("prediction", T.DoubleType(), True)]
     )
     w = weights or seeded_lstm_weights(input_dim=1)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if fake:
-                preds = pdf[sequence_col].map(
+                preds = pdf["sequence"].map(
                     lambda seq: float(
                         sum(step["value"] for step in seq) / max(len(seq), 1)
                     )
@@ -182,7 +178,7 @@ def batch_predict_sequences(
                     else None
                 )
             else:
-                preds = pdf[sequence_col].map(
+                preds = pdf["sequence"].map(
                     lambda seq: float(
                         lstm_forward(
                             np.array([[ [step["value"]] for step in seq ]], dtype=np.float64),
@@ -192,6 +188,6 @@ def batch_predict_sequences(
                     if seq is not None and len(seq) > 0
                     else None
                 )
-            yield pd.DataFrame({**{c: pdf[c] for c in id_cols}, "prediction": preds})
+            yield pd.DataFrame({"station_no": pdf["station_no"], "prediction": preds})
 
-    return df.select(*id_cols, sequence_col).mapInPandas(fn, schema=out_schema)
+    return df.select("station_no", "sequence").mapInPandas(fn, schema=out_schema)

@@ -71,11 +71,11 @@ def decimal_pow_sum(col: Column | str, k: int) -> Column:
     return F.floor(F.sum(prod)).cast("double")
 
 
-def decimal_avg(col: Column | str, scale: int = 6) -> Column:
+def decimal_avg(col: Column | str) -> Column:
     """Deterministic mean: exact decimal sum, then a single double division
     (both steps order-insensitive and engine-portable)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(27,{scale})")).cast("double") / F.count(c)
+    return F.sum(c.cast("decimal(27,6)")).cast("double") / F.count(c)
 
 
 def decimal_avg_q4(col: Column | str) -> Column:
@@ -145,7 +145,6 @@ def quantile_cols(
     aliases: list[str],
     exact: bool,
     round_to: int | None = 6,
-    accuracy: int = APPROX_PERCENTILE_ACCURACY,
 ) -> list[Column]:
     """Quantile aggregate expressions: exact ``percentile`` (linear
     interpolation — matches DuckDB ``quantile_cont``, the oracle-parity
@@ -156,7 +155,7 @@ def quantile_cols(
         e = F.expr(
             f"{fn}({value_col}, {p})"
             if exact
-            else f"{fn}({value_col}, {p}, {accuracy})"
+            else f"{fn}({value_col}, {p}, {APPROX_PERCENTILE_ACCURACY})"
         )
         if round_to is not None:
             e = F.round(e, round_to)
@@ -246,12 +245,7 @@ def top1_per_group(df: DataFrame, group_col: str, count_col: str) -> DataFrame:
 
 
 def pivot_profile(
-    df: DataFrame,
-    index_col: str,
-    pivot_col: str,
-    value_col: str,
-    pivot_values: list,
-    fill: float = 0.0,
+    df: DataFrame, index_col: str, pivot_col: str, value_col: str, pivot_values: list
 ) -> DataFrame:
     """Pivot matrix (A6): ``groupBy(index).pivot(col, values).avg(value)``
     with explicit pivot values and zero fill — the station×hour profile
@@ -261,7 +255,7 @@ def pivot_profile(
         df.groupBy(index_col)
         .pivot(pivot_col, pivot_values)
         .agg(F.avg(value_col))
-        .na.fill(fill)
+        .na.fill(0.0)
     )
 
 

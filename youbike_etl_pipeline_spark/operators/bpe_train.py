@@ -47,12 +47,13 @@ from pyspark.sql import functions as F
 from ..sources.readers import local_frame
 
 
-def segment_init(word_col: str = "w") -> "F.Column":
-    """Doubled-separator character segmentation: 'cat' -> '|c||a||t|'.
+def segment_init() -> "F.Column":
+    """Doubled-separator character segmentation of column ``w``: 'cat' ->
+    '|c||a||t|'.
 
     Mirrored verbatim in the oracle as
     ``regexp_replace(w, '(.)', '|\\1|', 'g')``."""
-    return F.regexp_replace(F.col(word_col), "(.)", "|$1|")
+    return F.regexp_replace(F.col("w"), "(.)", "|$1|")
 
 
 def merge_once(seg_col: "F.Column", a: str, b: str) -> "F.Column":
@@ -70,7 +71,7 @@ def _n_syms(seg_col: "F.Column") -> "F.Column":
     ).cast("long")
 
 
-def _pair_counts(seg: DataFrame, cnt_col: str = "cnt") -> DataFrame:
+def _pair_counts(seg: DataFrame) -> DataFrame:
     """Weighted adjacent-pair counts over a segmented vocabulary.
 
     OVERLAPPING adjacency (Sennrich learn_bpe posture: 'aaa' contributes
@@ -89,19 +90,13 @@ def _pair_counts(seg: DataFrame, cnt_col: str = "cnt") -> DataFrame:
     ).otherwise(F.expr("array()"))
     return (
         seg.withColumn("syms", syms)
-        .select(F.col(cnt_col), F.explode(pairs).alias("p"))
+        .select(F.col("cnt"), F.explode(pairs).alias("p"))
         .groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-        .agg(F.sum(cnt_col).alias("pc"))
+        .agg(F.sum("cnt").alias("pc"))
     )
 
 
-def bpe_train_merges(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    word_re: str = "[a-z]+",
-) -> DataFrame:
+def bpe_train_merges(df: DataFrame, k: int = 5) -> DataFrame:
     """Learn the first ``k`` BPE merges from a corpus; returns one row
     per iteration: ``(it, sym_a, sym_b, pair_cnt, vocab_tokens)`` where
     ``vocab_tokens`` is the corpus token total AFTER applying merges
@@ -115,14 +110,14 @@ def bpe_train_merges(
     words = df.select(
         F.explode(
             F.regexp_extract_all(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                F.lit(word_re),
+                F.lower(F.coalesce(F.col("text"), F.lit(""))),
+                F.lit("[a-z]+"),
                 0,
             )
         ).alias("w")
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    seg = vocab.select("cnt", segment_init("w").alias("s"))
+    seg = vocab.select("cnt", segment_init().alias("s"))
     seg.cache()
     rows = []
     cached = [seg]

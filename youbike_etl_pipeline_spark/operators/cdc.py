@@ -49,14 +49,7 @@ def _any_tracked_differs(tracked_cols: list[str]) -> Column:
 
 
 def scd2_apply(
-    history: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    tracked_cols: list[str],
-    effective_ts_col: str = "effective_from",
-    end_ts_col: str = "effective_to",
-    current_col: str = "is_current",
-    change_ts_col: str = "change_ts",
+    history: DataFrame, changes: DataFrame, keys: list[str], tracked_cols: list[str]
 ) -> DataFrame:
     """SCD2 MERGE: version rows on change of any tracked column.
 
@@ -67,16 +60,16 @@ def scd2_apply(
     their first version; no-op changes (null-safe identical tracked values)
     are dropped. One shuffle on ``keys``.
     """
-    out_cols = [*keys, *tracked_cols, effective_ts_col, end_ts_col, current_col]
-    closed = history.filter(~F.col(current_col)).select(*out_cols)
-    current = history.filter(F.col(current_col))
+    out_cols = [*keys, *tracked_cols, "effective_from", "effective_to", "is_current"]
+    closed = history.filter(~F.col("is_current")).select(*out_cols)
+    current = history.filter(F.col("is_current"))
 
     cur_side = current.select(
         *keys,
         F.lit(True).alias("__cur_present"),
         *[F.col(c).alias(f"cur_{c}") for c in tracked_cols],
-        F.col(effective_ts_col).alias("cur_from"),
-        F.col(end_ts_col).alias("cur_to"),
+        F.col("effective_from").alias("cur_from"),
+        F.col("effective_to").alias("cur_to"),
     )
     # one change row per key: a batch can legitimately carry several change
     # events for the same key, and joining them all would fan out the
@@ -85,7 +78,7 @@ def scd2_apply(
     # ordering on the tracked columns) — intermediate versions within one
     # batch are collapsed, matching MERGE semantics.
     w_latest = Window.partitionBy(*keys).orderBy(
-        F.col(change_ts_col).desc(), *[F.col(c).desc_nulls_last() for c in tracked_cols]
+        F.col("change_ts").desc(), *[F.col(c).desc_nulls_last() for c in tracked_cols]
     )
     latest_changes = (
         changes.withColumn("__rn", F.row_number().over(w_latest))
@@ -96,7 +89,7 @@ def scd2_apply(
         *keys,
         F.lit(True).alias("__chg_present"),
         *[F.col(c).alias(f"chg_{c}") for c in tracked_cols],
-        F.col(change_ts_col).alias("chg_ts"),
+        F.col("change_ts").alias("chg_ts"),
     )
     j = cur_side.join(chg_side, on=keys, how="full_outer")
     cur_p = F.coalesce(F.col("__cur_present"), F.lit(False))
@@ -107,24 +100,24 @@ def scd2_apply(
     keep_current = j.filter(cur_p & (~chg_p | ~differs)).select(
         *keys,
         *[F.col(f"cur_{c}").alias(c) for c in tracked_cols],
-        F.col("cur_from").alias(effective_ts_col),
-        F.col("cur_to").alias(end_ts_col),
-        F.lit(True).alias(current_col),
+        F.col("cur_from").alias("effective_from"),
+        F.col("cur_to").alias("effective_to"),
+        F.lit(True).alias("is_current"),
     )
     # current version closes: a change row with different tracked values
     close_now = j.filter(cur_p & chg_p & differs).select(
         *keys,
         *[F.col(f"cur_{c}").alias(c) for c in tracked_cols],
-        F.col("cur_from").alias(effective_ts_col),
-        F.col("chg_ts").alias(end_ts_col),
-        F.lit(False).alias(current_col),
+        F.col("cur_from").alias("effective_from"),
+        F.col("chg_ts").alias("effective_to"),
+        F.lit(False).alias("is_current"),
     )
     # new open version: changed key, or brand-new key
     open_new = j.filter(chg_p & (~cur_p | differs)).select(
         *keys,
         *[F.col(f"chg_{c}").alias(c) for c in tracked_cols],
-        F.col("chg_ts").alias(effective_ts_col),
-        F.lit(None).cast(history.schema[end_ts_col].dataType).alias(end_ts_col),
-        F.lit(True).alias(current_col),
+        F.col("chg_ts").alias("effective_from"),
+        F.lit(None).cast(history.schema["effective_to"].dataType).alias("effective_to"),
+        F.lit(True).alias("is_current"),
     )
     return closed.unionByName(keep_current).unionByName(close_now).unionByName(open_new)

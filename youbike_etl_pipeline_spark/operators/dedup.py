@@ -23,10 +23,10 @@ from pyspark.sql.window import Window
 
 from ..sources.readers import local_frame
 from .skew import materialize
-from .text import shingle_hashes, tokens, word_shingles_from_tokens
+from .text import tokens, word_shingles_from_tokens
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup: keep the lowest-id document per identical content hash.
     One shuffle on md5(text); deterministic survivor choice.
 
@@ -36,18 +36,15 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     If NULL text means "content unknown" rather than "empty", filter nulls
     before calling (a keep-the-survivor step would otherwise drop rows
     whose content was never compared)."""
-    hashed = df.withColumn("content_hash", F.md5(F.col(text_col)))
+    hashed = df.withColumn("content_hash", F.md5(F.col("text")))
     return (
         hashed.groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
 def paragraph_dedup_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_owners: bool = False,
+    df: DataFrame, text_col: str = "text", broadcast_owners: bool = False
 ) -> DataFrame:
     """Paragraph-granularity dedup statistics — the CCNet unit: crawl
     pipelines dedup at PARAGRAPH level before document level, because
@@ -74,20 +71,20 @@ def paragraph_dedup_stats(
     uniqueness, e.g. t54's fixture), where the owner table is genuinely
     vocabulary-like and the broadcast removes the instance shuffle."""
     paras = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.split(F.col(text_col), "\n")).alias("para"),
     ).filter(F.col("para") != "")
-    keyed = paras.select(id_col, F.md5(F.col("para")).alias("h"))
-    owners = keyed.groupBy("h").agg(F.min(id_col).alias("owner"))
+    keyed = paras.select("doc_id", F.md5(F.col("para")).alias("h"))
+    owners = keyed.groupBy("h").agg(F.min("doc_id").alias("owner"))
     if broadcast_owners:
         owners = F.broadcast(owners)
     return (
         keyed.join(owners, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_paras"),
             F.sum(
-                F.when(F.col("owner") < F.col(id_col), 1).otherwise(0)
+                F.when(F.col("owner") < F.col("doc_id"), 1).otherwise(0)
             ).alias("n_dup"),
         )
         .withColumn(
@@ -250,14 +247,9 @@ def _band_candidates(banded: DataFrame) -> DataFrame:
     )
 
 
-def shingle_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    widen: bool = True,
-) -> DataFrame:
-    """Inverted index: one row per (doc, distinct word-k-shingle). Tokens
+def shingle_index(df: DataFrame, widen: bool = True) -> DataFrame:
+    """Inverted index over ``documents(doc_id, text)``: one row per (doc,
+    distinct word-3-shingle). Tokens
     are materialized as a projection first so the shingle lambda reads an
     O(1) array reference (see word_shingles_from_tokens).
 
@@ -270,30 +262,24 @@ def shingle_index(
     dedup-family query at sf0.1). No-op when the scan is already wide;
     callers inside foreachBatch (micro-batch inputs) pass ``widen=False``.
     """
-    base = df.select(F.col(id_col), F.col(text_col))
+    base = df.select("doc_id", "text")
     if widen:
         from .skew import widen_narrow_scan
 
         base = widen_narrow_scan(base)
-    toks = base.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+    toks = base.select("doc_id", tokens(F.col("text")).alias("__toks"))
     return toks.select(
-        F.col(id_col), F.explode(word_shingles_from_tokens(F.col("__toks"), k)).alias("shingle")
+        "doc_id", F.explode(word_shingles_from_tokens(F.col("__toks"))).alias("shingle")
     )
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
     exact_dedup_first: bool = True,
-    widen: bool = True,
 ) -> DataFrame:
-    """All document pairs with word-k-gram Jaccard ≥ threshold.
-    ``widen`` threads to :func:`shingle_index` (foreachBatch callers on
-    micro-batch frames pass ``False``).
+    """All document pairs with word-3-gram Jaccard ≥ threshold.
 
     |A∩B| via self-join of the inverted index; |A∪B| = |A|+|B|−|A∩B|.
     ``max_doc_freq`` drops shingles appearing in more than that many docs —
@@ -317,20 +303,20 @@ def ngram_jaccard_pairs(
     tested scale.
     """
     df, mapping = (
-        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        _exact_collapse(df, "doc_id", F.md5(F.col("text")))
         if exact_dedup_first
         else (df, None)
     )
-    idx = shingle_index(df, text_col, id_col, k, widen=widen)
+    idx = shingle_index(df)
     if max_doc_freq is not None:
         if mapping is not None:
             # full-corpus doc-frequency = rep doc-frequency weighted by
             # duplicate-group size (every member contributes its copy)
             weights = mapping.filter(F.col("__member") == F.col("__rep")).select(
-                F.col("__rep").alias(id_col), "__gsize"
+                F.col("__rep").alias("doc_id"), "__gsize"
             )
             dfreq = (
-                idx.join(weights, id_col)
+                idx.join(weights, "doc_id")
                 .groupBy("shingle")
                 .agg(F.sum("__gsize").alias("df"))
             )
@@ -339,11 +325,11 @@ def ngram_jaccard_pairs(
         keep = dfreq.filter(F.col("df") <= max_doc_freq)
         # re-select: the equi-join moves the key column first, and the
         # positional toDF renames below depend on (id, shingle) order
-        idx = idx.join(keep.select("shingle"), "shingle").select(id_col, "shingle")
+        idx = idx.join(keep.select("shingle"), "shingle").select("doc_id", "shingle")
     # the index feeds three subtrees (sizes + both self-join sides);
     # materialize it once instead of re-running tokenize+shingle per use
     idx = materialize(idx)
-    sizes = idx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = idx.toDF("id_a", "shingle")
     b = idx.toDF("id_b", "shingle")
     inter = (
@@ -368,15 +354,9 @@ def ngram_jaccard_pairs(
 
 
 def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.5,
-    exact_dedup_first: bool = True,
-    widen: bool = True,
+    df: DataFrame, threshold: float = 0.5, exact_dedup_first: bool = True
 ) -> DataFrame:
-    """All document pairs with word-k-gram Jaccard ≥ threshold, computed
+    """All document pairs with word-3-gram Jaccard ≥ threshold, computed
     EXACTLY via prefix filtering (Bayardo/Chaudhuri all-pairs similarity):
     order every doc's shingle set by global rarity (doc-frequency asc,
     shingle asc — a deterministic total order), keep only each doc's first
@@ -412,20 +392,20 @@ def prefix_filter_jaccard_pairs(
     import math
 
     df, mapping = (
-        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        _exact_collapse(df, "doc_id", F.md5(F.col("text")))
         if exact_dedup_first
         else (df, None)
     )
-    idx = materialize(shingle_index(df, text_col, id_col, k, widen=widen))
+    idx = materialize(shingle_index(df))
     dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    w_doc = Window.partitionBy(id_col).orderBy("__df", "shingle")
+    w_doc = Window.partitionBy("doc_id").orderBy("__df", "shingle")
     ranked = (
         idx.join(dfreq, "shingle")
         .select(
-            id_col,
+            "doc_id",
             "shingle",
             F.row_number().over(w_doc).alias("__rn"),
-            F.count(F.lit(1)).over(Window.partitionBy(id_col)).alias("__n"),
+            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("__n"),
         )
     )
     # integer prefix length: n − ⌈τ'·n⌉ + 1, with the rational τ' = num/den
@@ -447,7 +427,7 @@ def prefix_filter_jaccard_pairs(
     # ranked subtree (idx ⋈ dfreq + two windows) executes twice.
     prefix = materialize(
         ranked.filter(F.col("__rn") <= F.col("__n") - ceil_tau_n + 1).select(
-            id_col, "shingle", "__rn", "__n"
+            "doc_id", "shingle", "__rn", "__n"
         )
     )
     pa_ = prefix.toDF("id_a", "shingle", "__rn_a", "__n_a")
@@ -486,12 +466,12 @@ def prefix_filter_jaccard_pairs(
     )
     # verify on per-doc shingle arrays: the index is distinct per (doc,
     # shingle), so each collect_list IS the doc's set
-    arrs = idx.groupBy(id_col).agg(F.collect_list("shingle").alias("__shs"))
+    arrs = idx.groupBy("doc_id").agg(F.collect_list("shingle").alias("__shs"))
     pairs = _jaccard_verify(cands, arrs, arrs, threshold)
     if mapping is None:
         return pairs
     # sizes re-derived from the arrays — one less aggregation over idx
-    sizes = arrs.select(F.col(id_col), F.size("__shs").cast("long"))
+    sizes = arrs.select(F.col("doc_id"), F.size("__shs").cast("long"))
     return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
@@ -501,15 +481,18 @@ def prefix_filter_jaccard_pairs(
 #: provably fit).
 MINHASH_P = 1073741789
 
+#: Signature width of every portable-MinHash operator and oracle.
+NUM_HASHES = 32
 
-def minhash_coeffs(num_hashes: int = 32) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the universal-hash MinHash family
-    h_i(x) = (a_i*x + b_i) mod :data:`MINHASH_P`, generated by a fixed-seed
-    64-bit LCG so the Spark plan and the generated DuckDB oracle SQL embed
-    the exact same constants."""
+
+def minhash_coeffs() -> list[tuple[int, int]]:
+    """Deterministic :data:`NUM_HASHES` (a, b) pairs for the universal-hash
+    MinHash family h_i(x) = (a_i*x + b_i) mod :data:`MINHASH_P`, generated
+    by a fixed-seed 64-bit LCG so the Spark plan and the generated DuckDB
+    oracle SQL embed the exact same constants."""
     state = 0x9E3779B97F4A7C15
     out = []
-    for _ in range(num_hashes):
+    for _ in range(NUM_HASHES):
         state = (6364136223846793005 * state + 1442695040888963407) % (1 << 64)
         a = state % (MINHASH_P - 1) + 1
         state = (6364136223846793005 * state + 1442695040888963407) % (1 << 64)
@@ -540,30 +523,28 @@ def portable_shingle_base(t: Column) -> Column:
     return le32.bitwiseAND(F.lit(0x3FFFFFFF))
 
 
-def _check_bands(num_hashes: int, bands: int) -> None:
+def _check_bands(bands: int) -> None:
     """Entry check of the portable banding: ``bands`` must evenly divide
-    ``num_hashes`` with >= 1 row per band. Runs before any Spark job, so a
-    bad argument never pays for a materialization first."""
-    if bands < 1 or bands > num_hashes or num_hashes % bands != 0:
+    :data:`NUM_HASHES` with >= 1 row per band. Runs before any Spark job, so
+    a bad argument never pays for a materialization first."""
+    if bands < 1 or bands > NUM_HASHES or NUM_HASHES % bands != 0:
         raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes}) "
+            f"bands ({bands}) must evenly divide num_hashes ({NUM_HASHES}) "
             "with >= 1 row per band — an empty or ragged band silently "
             "degrades the candidate join (empty band keys collide "
             "universally: an n² cross product)"
         )
 
 
-def _banded_from_signature(
-    sig: DataFrame, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band_idx, band_key) rows from a signature frame carrying the
-    ``h0..h{num_hashes-1}`` min columns — the banding step shared by
+def _banded_from_signature(sig: DataFrame, bands: int) -> DataFrame:
+    """(doc_id, band_idx, band_key) rows from a signature frame carrying
+    the ``h0..h{NUM_HASHES-1}`` min columns — the banding step shared by
     :func:`minhash_lsh_dedup_portable`, :func:`sketch_accuracy_audit` and
     the streaming near-dup gate, which all run :func:`_check_bands` at
     entry."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // bands
     return sig.select(
-        F.col(id_col),
+        "doc_id",
         F.posexplode(
             F.array(
                 *[
@@ -581,31 +562,24 @@ def _banded_from_signature(
     )
 
 
-def _portable_features(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    num_hashes: int,
-    widen: bool = True,
-) -> DataFrame:
+def _portable_features(df: DataFrame, widen: bool = True) -> DataFrame:
     """The per-doc feature frame of the portable MinHash path: ONE
-    aggregation of the distinct (id, 30-bit shingle base hash) index yields
-    the signature mins ``h0..h{num_hashes-1}`` (one min of (a*x+b) mod P
-    per :func:`minhash_coeffs` pair), the distinct-hash count ``n_sh`` and
+    aggregation of the distinct (doc_id, 30-bit shingle base hash) index
+    yields the signature mins ``h0..h{NUM_HASHES-1}`` (one min of
+    (a*x+b) mod P per :func:`minhash_coeffs` pair), the distinct-hash count ``n_sh`` and
     the hash set as an array ``shs`` (the index is distinct per (doc,
     hash), so the array IS the set). Every feature is a property of one
     document, so features built per micro-batch equal the batch-global
     ones. Batch callers wrap the frame in :func:`..skew.materialize`; the
     streaming gate's micro-batch side is neither checkpointed nor widened."""
-    idx = shingle_index(df, text_col, id_col, k, widen=widen)
+    idx = shingle_index(df, widen=widen)
     hidx = idx.select(
-        F.col(id_col), portable_shingle_base(F.col("shingle")).alias("sh")
+        "doc_id", portable_shingle_base(F.col("shingle")).alias("sh")
     ).distinct()
-    return hidx.groupBy(id_col).agg(
+    return hidx.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("sh") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-            for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
+            for i, (a, b) in enumerate(minhash_coeffs())
         ],
         F.count(F.lit(1)).alias("n_sh"),
         F.collect_list("sh").alias("shs"),
@@ -614,19 +588,14 @@ def _portable_features(
 
 def minhash_lsh_dedup_portable(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 32,
     bands: int = 8,
-    threshold: float = 0.5,
     exact_dedup_first: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs on the cross-engine-verifiable hash family.
 
-    Banded candidates → exact Jaccard verify on the per-doc shingle-hash
-    sets, and every hash is DuckDB-expressible: base = low 30 bits of the
-    md5-derived 64-bit shingle hash, signatures from the (a*x+b) mod P
+    Banded candidates → exact Jaccard ≥ 0.5 verify on the per-doc
+    word-3-shingle-hash sets, and every hash is DuckDB-expressible: base =
+    low 30 bits of the md5-derived 64-bit shingle hash, signatures from the (a*x+b) mod P
     universal family (:func:`minhash_coeffs`), band keys as plain
     value-concat strings.
 
@@ -638,21 +607,21 @@ def minhash_lsh_dedup_portable(
     bucket together), but the bucket occupancy² blow-up the 100× probe
     measured (142× on a corpus of 100 verbatim copies per doc) collapses
     to the linear content-hash shuffle plus the output-sized emission."""
-    _check_bands(num_hashes, bands)
+    _check_bands(bands)
     df, mapping = (
-        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        _exact_collapse(df, "doc_id", F.md5(F.col("text")))
         if exact_dedup_first
         else (df, None)
     )
-    feat = materialize(_portable_features(df, text_col, id_col, k, num_hashes))
-    cands = _band_candidates(_banded_from_signature(feat, id_col, num_hashes, bands))
-    sets = feat.select(id_col, "shs")
-    pairs = _jaccard_verify(cands, sets, sets, threshold).select(
+    feat = materialize(_portable_features(df))
+    cands = _band_candidates(_banded_from_signature(feat, bands))
+    sets = feat.select("doc_id", "shs")
+    pairs = _jaccard_verify(cands, sets, sets, 0.5).select(
         "id_a", "id_b", "jaccard"
     )
     if mapping is None:
         return pairs
-    sizes = feat.select(id_col, "n_sh")
+    sizes = feat.select("doc_id", "n_sh")
     return _expand_collapsed_pairs(pairs, mapping, _identical_jaccard(sizes))
 
 
@@ -680,14 +649,8 @@ def md5_token_hash64(t: Column) -> Column:
     return lo.bitwiseOR(F.shiftleft(hi, 32))
 
 
-def simhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 1,
-    hash_fn=None,
-) -> DataFrame:
-    """64-bit SimHash per document: explode token/shingle hashes, then one
+def simhash_signature(df: DataFrame, hash_fn=None) -> DataFrame:
+    """64-bit SimHash per document: explode token hashes, then one
     hash aggregation with 64 static ±1 bit-sums, folded into a long.
     (Shift counts must be literals, so the bit loop is Python-side plan
     construction — the data path stays one explode + one shuffle.)
@@ -695,22 +658,15 @@ def simhash_signature(
     xxhash64 (fast path); :func:`md5_token_hash64` is the DuckDB-portable
     alternative used by the graded corpus query."""
     token_hash = hash_fn or F.xxhash64
-    # hash_fn threads through BOTH branches — silently reverting to
-    # xxhash64 for k>1 would break any cross-engine parity built on the
-    # md5-portable hash
-    feats = (
-        shingle_hashes(F.col(text_col), k, hash_fn=token_hash)
-        if k > 1
-        else F.transform(tokens(F.col(text_col)), lambda t: token_hash(t))
-    )
-    exploded = df.select(F.col(id_col), F.explode(feats).alias("h"))
+    feats = F.transform(tokens(F.col("text")), lambda t: token_hash(t))
+    exploded = df.select(F.col("doc_id"), F.explode(feats).alias("h"))
     aggs = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{i}")
         for i in range(64)
     ]
-    sums = exploded.groupBy(id_col).agg(*aggs)
+    sums = exploded.groupBy("doc_id").agg(*aggs)
     sim = F.lit(0).cast("long")
     for i in range(64):
         sim = sim.bitwiseOR(
@@ -718,16 +674,11 @@ def simhash_signature(
                 F.lit(0).cast("long")
             )
         )
-    return sums.select(id_col, sim.alias("simhash"))
+    return sums.select("doc_id", sim.alias("simhash"))
 
 
 def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    hash_fn=None,
-    exact_dedup_first: bool = True,
+    df: DataFrame, max_hamming: int = 3, hash_fn=None, exact_dedup_first: bool = True
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming``
     AMONG the chunk-banding candidates.
@@ -752,13 +703,13 @@ def simhash_pairs(
     the raw op) is answer-identical by construction.
     """
     df, mapping = (
-        _exact_collapse(df, id_col, F.md5(F.col(text_col)))
+        _exact_collapse(df, "doc_id", F.md5(F.col("text")))
         if exact_dedup_first
         else (df, None)
     )
-    sh = simhash_signature(df, text_col, id_col, hash_fn=hash_fn)
+    sh = simhash_signature(df, hash_fn=hash_fn)
     chunks = sh.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.posexplode(
             F.array(*[F.shiftright("simhash", 16 * i).bitwiseAND(F.lit(0xFFFF)) for i in range(4)])
@@ -783,7 +734,7 @@ def simhash_pairs(
     # copies pair at hamming 0 only when the rep produced a signature row (a
     # doc whose text yields zero tokens never enters the banding, so its
     # verbatim copies never pair in the raw op either)
-    intra = sh.select(F.col(id_col).alias("__r"), F.lit(0).cast("int").alias("hamming"))
+    intra = sh.select(F.col("doc_id").alias("__r"), F.lit(0).cast("int").alias("hamming"))
     return _expand_collapsed_pairs(rep_pairs, mapping, intra)
 
 
@@ -854,11 +805,7 @@ def _union_find_components(edges: list[tuple], spark, id_type) -> DataFrame:
 
 
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
+    pairs: DataFrame, max_iter: int = 20, small_graph_edges: int = SMALL_GRAPH_EDGES
 ) -> DataFrame:
     """Connected components over a near-dup pair graph → (node, component)
     where component = min node id in the cluster.
@@ -877,10 +824,10 @@ def connected_components(
     # src/dst union below reads `pairs` twice, and the loop (or union-find
     # collect) reads the edges repeatedly — without checkpoints the whole
     # upstream shingle-index self-join re-runs per reference
-    pairs = materialize(pairs.select(id_a, id_b))
+    pairs = materialize(pairs.select("id_a", "id_b"))
     edges = materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
     n_edges = edges.count()
@@ -960,38 +907,31 @@ def connected_components(
     )
 
 
-def dedup_clusters(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full dedup assignment: every document mapped to its cluster's
     canonical (min-id) survivor; documents in no pair survive as themselves."""
     comp = connected_components(pairs)
-    return df.select(F.col(id_col)).join(
-        comp, df[id_col] == comp.node, "left"
+    return df.select(F.col("doc_id")).join(
+        comp, df["doc_id"] == comp.node, "left"
     ).select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).alias("canonical_id"),
+        F.col("doc_id"),
+        F.coalesce(F.col("component"), F.col("doc_id")).alias("canonical_id"),
     )
 
 
 def sketch_accuracy_audit(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    num_hashes: int = 32,
     bands: int = 8,
-    threshold: float = 0.5,
     exact_dedup_first: bool = False,
 ) -> DataFrame:
     """One-row calibration of the MinHash Jaccard estimator — the "is
-    ``num_hashes`` hashes enough" audit a pipeline runs before trusting
+    :data:`NUM_HASHES` hashes enough" audit a pipeline runs before trusting
     MinHash-LSH at scale: over the LSH candidate pairs, compare the
     signature match-fraction estimate against the EXACT Jaccard on the
     shared shingle-hash sets, reporting ``n_pairs``, mean/max absolute
-    error (6-dp floored, decimal-averaged) and the threshold-crossing
-    disagreements in both directions (``n_false_pos`` = est ≥ τ but exact
-    < τ, ``n_missed`` = the reverse).
+    error (6-dp floored, decimal-averaged) and the crossings of the
+    τ = 0.5 threshold in both directions (``n_false_pos`` = est ≥ τ but
+    exact < τ, ``n_missed`` = the reverse).
 
     Plan shape: one signature self-join and one index intersection, both
     bounded to the CANDIDATE set (band-key equi-join), never the corpus².
@@ -1011,31 +951,31 @@ def sketch_accuracy_audit(
     about estimator error). Default OFF: the graded corpus query (t38)
     audits the raw candidate distribution, byte-identical to its oracle.
     """
-    _check_bands(num_hashes, bands)
+    _check_bands(bands)
     if exact_dedup_first:
-        df, _ = _exact_collapse(df, id_col, F.md5(F.col(text_col)))
-    feat = materialize(_portable_features(df, text_col, id_col, k, num_hashes))
-    cand = _band_candidates(_banded_from_signature(feat, id_col, num_hashes, bands))
+        df, _ = _exact_collapse(df, "doc_id", F.md5(F.col("text")))
+    feat = materialize(_portable_features(df))
+    cand = _band_candidates(_banded_from_signature(feat, bands))
     feat_a = feat.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(num_hashes)],
+        F.col("doc_id").alias("id_a"),
+        *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
         F.col("n_sh").alias("n_a"),
         F.col("shs").alias("shs_a"),
     )
     feat_b = feat.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(num_hashes)],
+        F.col("doc_id").alias("id_b"),
+        *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
         F.col("n_sh").alias("n_b"),
         F.col("shs").alias("shs_b"),
     )
     matches = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     )
     scored_wide = (
         _candidate_pairs(cand, feat_a, feat_b)
         .select(
-            (matches * F.lit(1.0) / F.lit(num_hashes)).alias("est_j"),
+            (matches * F.lit(1.0) / F.lit(NUM_HASHES)).alias("est_j"),
             F.size(F.array_intersect("shs_a", "shs_b")).cast("long").alias("n_common"),
             "n_a",
             "n_b",
@@ -1071,7 +1011,7 @@ def sketch_accuracy_audit(
         F.coalesce(
             F.sum(
                 F.when(
-                    (F.col("est_j") >= threshold) & (F.col("exact_j") < threshold), 1
+                    (F.col("est_j") >= 0.5) & (F.col("exact_j") < 0.5), 1
                 ).otherwise(0)
             ),
             F.lit(0),
@@ -1079,7 +1019,7 @@ def sketch_accuracy_audit(
         F.coalesce(
             F.sum(
                 F.when(
-                    (F.col("est_j") < threshold) & (F.col("exact_j") >= threshold), 1
+                    (F.col("est_j") < 0.5) & (F.col("exact_j") >= 0.5), 1
                 ).otherwise(0)
             ),
             F.lit(0),
@@ -1089,17 +1029,13 @@ def sketch_accuracy_audit(
 
 def levenshtein_blocked_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_col: str = "lang",
     prefix_len: int = 40,
-    max_dist: int = 12,
     exact_dedup_first: bool = True,
     max_block_size: int | None = None,
 ) -> DataFrame:
-    """Fuzzy near-dup pairs by Levenshtein distance over printable-ASCII
-    text prefixes, blocked by ``block_col`` (pairs enumerate within a
-    block, never corpus²). Distance runs on the ASCII projection because
+    """Fuzzy near-dup pairs (``doc_id``s at Levenshtein distance ≤ 12) over
+    printable-ASCII ``text`` prefixes, blocked by ``lang`` (pairs enumerate
+    within a block, never corpus²). Distance runs on the ASCII projection because
     Spark counts UTF-16 code units and DuckDB its own unit — combining
     accents would make the engines disagree on raw text.
 
@@ -1110,7 +1046,7 @@ def levenshtein_blocked_pairs(
       (prefix, block) rows to one representative before pairing and
       expands the exact answer back (cross-group pairs inherit the rep
       distance — identical prefixes imply identical Levenshtein;
-      intra-group pairs are distance 0, always within ``max_dist``).
+      intra-group pairs are distance 0, always within the bound).
       Answer-identical by construction; kills the duplicate-mass blow-up
       (the 100x probe could not finish the raw op's WARM 10x run:
       ~10 languages x (600k/10)^2 prefix comparisons).
@@ -1121,10 +1057,10 @@ def levenshtein_blocked_pairs(
       shingle/SimHash bucket instead, per t8's banding).
     """
     base = df.select(
-        F.col(id_col),
-        F.col(block_col).alias("__blk"),
+        "doc_id",
+        F.col("lang").alias("__blk"),
         F.substring(
-            F.regexp_replace(F.col(text_col), r"[^ -~]", ""), 1, prefix_len
+            F.regexp_replace(F.col("text"), r"[^ -~]", ""), 1, prefix_len
         ).alias("__prefix"),
     )
     # null block or null text can never pair in the raw op (inner equi-join
@@ -1135,12 +1071,12 @@ def levenshtein_blocked_pairs(
     # collapse groups on the (prefix, block) PAIR directly — no string-
     # concat hash key whose separator a crafted prefix could collide with
     base, mapping = (
-        _exact_collapse(base, id_col, F.col("__prefix"), F.col("__blk"))
+        _exact_collapse(base, "doc_id", F.col("__prefix"), F.col("__blk"))
         if exact_dedup_first
         else (base, None)
     )
     if max_block_size is not None:
-        w_blk = Window.partitionBy("__blk").orderBy("__prefix", id_col)
+        w_blk = Window.partitionBy("__blk").orderBy("__prefix", "doc_id")
         base = (
             base.withColumn("__bn", F.row_number().over(w_blk))
             .filter(F.col("__bn") <= int(max_block_size))
@@ -1152,7 +1088,7 @@ def levenshtein_blocked_pairs(
         a.join(b, "__blk")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("edit_dist", F.levenshtein("__pa", "__pb"))
-        .filter(F.col("edit_dist") <= max_dist)
+        .filter(F.col("edit_dist") <= 12)
         .select("id_a", "id_b", "edit_dist")
     )
     if mapping is None:
@@ -1165,5 +1101,5 @@ def levenshtein_blocked_pairs(
         # the EXPANSION: a duplicate group whose representative ranked past
         # the cap was never paired, so its members may not re-enter as
         # distance-0 pairs
-        intra = intra.join(base.select(F.col(id_col).alias("__r")), "__r", "left_semi")
+        intra = intra.join(base.select(F.col("doc_id").alias("__r")), "__r", "left_semi")
     return _expand_collapsed_pairs(rep_pairs, mapping, intra)

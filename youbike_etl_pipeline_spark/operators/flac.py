@@ -464,7 +464,6 @@ def _encode_subframe(
 
 def encode_flac(
     samples: "np.ndarray",
-    rate: int = 16000,
     mode: str = "fixed2",
     stereo: str = "independent",
     blocksize: int | None = None,
@@ -491,7 +490,7 @@ def encode_flac(
     info = _MsbWriter()
     info.write(bs, 16); info.write(bs, 16)
     info.write(0, 24); info.write(0, 24)
-    info.write(rate, 20)
+    info.write(16000, 20)
     info.write(channels - 1, 3)
     info.write(bps - 1, 5)
     info.write(n, 36)

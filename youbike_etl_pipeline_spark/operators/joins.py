@@ -18,12 +18,10 @@ from ..functions.scalar import haversine_m
 from .skew import materialize, quantile_buckets
 
 
-def fact_dim_join(
-    fact: DataFrame, dim: DataFrame, on: str | list[str], how: str = "left"
-) -> DataFrame:
+def fact_dim_join(fact: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFrame:
     """Fact ⋈ small-dimension left join (J1), dimension broadcast
     (reference ``notebooks/03_data_merge.ipynb:L74``)."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="left")
 
 
 def hour_bucket_join(
@@ -334,12 +332,7 @@ def asof_join_forward(
 
 
 def range_band_join(
-    fact: DataFrame,
-    bands: DataFrame,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-    bucket_width: float | None = None,
+    fact: DataFrame, bands: DataFrame, value_col: str, bucket_width: float | None = None
 ) -> DataFrame:
     """Range (theta) join: match each fact row to the band with
     ``lo <= value < hi`` (SURVEY §2.3 notes the reference lacks range joins;
@@ -356,13 +349,13 @@ def range_band_join(
     """
     if bucket_width is None:
         min_width, max_width = bands.agg(
-            F.min(F.col(hi_col) - F.col(lo_col)),
-            F.max(F.col(hi_col) - F.col(lo_col)),
+            F.min(F.col("hi") - F.col("lo")),
+            F.max(F.col("hi") - F.col("lo")),
         ).collect()[0]
         if min_width is None or float(min_width) <= 0.0:
             raise ValueError(
-                f"range_band_join: degenerate band (min {hi_col}-{lo_col} = "
-                f"{min_width!r}); every band needs {lo_col} < {hi_col}, or pass "
+                "range_band_join: degenerate band (min hi-lo = "
+                f"{min_width!r}); every band needs lo < hi, or pass "
                 "an explicit bucket_width > 0"
             )
         bucket_width = float(min_width)
@@ -385,25 +378,21 @@ def range_band_join(
         "__bucket",
         F.explode(
             F.sequence(
-                F.floor(F.col(lo_col) / w).cast("long"),
-                F.floor((F.col(hi_col) - 1e-9) / w).cast("long"),
+                F.floor(F.col("lo") / w).cast("long"),
+                F.floor((F.col("hi") - 1e-9) / w).cast("long"),
             )
         ),
     )
     keyed = fact.withColumn("__bucket", F.floor(F.col(value_col) / w).cast("long"))
     return (
         keyed.join(F.broadcast(banded), on="__bucket", how="inner")
-        .filter((F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col)))
+        .filter((F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi")))
         .drop("__bucket")
     )
 
 
 def grid_nn_join(
-    left: DataFrame,
-    right: DataFrame,
-    cell_deg: float = 0.01,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
+    left: DataFrame, right: DataFrame, cell_deg: float = 0.01
 ) -> DataFrame:
     """Grid-cell nearest-neighbor join — the 100 TB scale path for J5
     (SURVEY §4: "at scale, add a geohash/grid-cell pre-bucketing join").
@@ -427,13 +416,13 @@ def grid_nn_join(
     duplicate left rows collapse — give rows a unique id column if per-row
     multiplicity matters.
     """
-    lat_cell = F.floor(F.col(lat_col) / cell_deg).cast("long")
-    lng_cell = F.floor(F.col(lng_col) / cell_deg).cast("long")
+    lat_cell = F.floor(F.col("lat") / cell_deg).cast("long")
+    lng_cell = F.floor(F.col("lng") / cell_deg).cast("long")
 
     lkeyed = left.withColumn("__cell_lat", lat_cell).withColumn("__cell_lng", lng_cell)
     offsets = [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)]
     r_pts = right.select(
-        F.col(lat_col).alias("__rlat"), F.col(lng_col).alias("__rlng")
+        F.col("lat").alias("__rlat"), F.col("lng").alias("__rlng")
     )
     replicated = r_pts.withColumn(
         "__off",
@@ -446,7 +435,7 @@ def grid_nn_join(
     )
     cand = lkeyed.join(F.broadcast(replicated), on=["__cell_lat", "__cell_lng"], how="inner")
     d = haversine_m(
-        F.col(lat_col).cast("double"), F.col(lng_col).cast("double"),
+        F.col("lat").cast("double"), F.col("lng").cast("double"),
         F.col("__rlat"), F.col("__rlng"),
     )
     near = cand.withColumn("__d", d).groupBy(*left.columns).agg(F.min("__d").alias("dist_nn"))
@@ -464,7 +453,7 @@ def grid_nn_join(
         .withColumn(
             "__d",
             haversine_m(
-                F.col(lat_col).cast("double"), F.col(lng_col).cast("double"),
+                F.col("lat").cast("double"), F.col("lng").cast("double"),
                 F.col("__rlat"), F.col("__rlng"),
             ),
         )
@@ -475,12 +464,7 @@ def grid_nn_join(
 
 
 def numeric_nn_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_val: str,
-    right_id: str,
-    right_val: str,
-    n_buckets: int | None = None,
+    left: DataFrame, right: DataFrame, left_val: str, right_id: str, right_val: str
 ) -> DataFrame:
     """1-D nearest-neighbor join in O(n log n): for each left row, the right
     row minimizing |left_val − right_val|, ties broken by smaller right id.
@@ -517,7 +501,7 @@ def numeric_nn_join(
     )
     null_left = left.filter(F.col(left_val).isNull())
     left = left.filter(F.col(left_val).isNotNull())
-    rvals, bucket, n_cuts = quantile_buckets(rvals, "__v", n_buckets)
+    rvals, bucket, n_cuts = quantile_buckets(rvals, "__v")
     l_tagged = left.select(
         F.col(left_val).alias("__v"),
         F.lit(1).alias("__is_left"),
@@ -593,21 +577,17 @@ def numeric_nn_join(
 
 def interval_overlap_pairs(
     intervals: DataFrame,
-    key: str = "user_id",
-    interval_id: str = "session_id",
-    start: str = "s",
-    end: str = "e",
-    bucket_unit: str = "hour",
     max_bucket_occupancy: int | None = None,
 ) -> DataFrame:
-    """Co-presence via an interval-overlap self-join: for every pair of
-    distinct ``key`` entities (``{key}_a < {key}_b``), count interval pairs
-    that overlap in time (``s_a <= e_b AND s_b <= e_a``). Mirrors the
+    """Co-presence via an interval-overlap self-join over session intervals
+    ``(user_id, session_id, s, e)``: for every pair of distinct users
+    (``user_id_a < user_id_b``), count interval pairs that overlap in time
+    (``s_a <= e_b AND s_b <= e_a``). Mirrors the
     reference's pandas-side session-overlap analysis (etl notebooks) as a
     bucketed equi-join, never the quadratic brute-force self-join the
     DuckDB oracle runs.
 
-    Plan shape: each interval explodes onto its covered ``bucket_unit``
+    Plan shape: each interval explodes onto its covered hour
     grid (an overlapping pair shares ≥1 covered bucket by construction),
     the self-join is an equi-join on the bucket, the exact overlap
     predicate filters bucket-mates row-wise BEFORE the pair-dedup shuffle,
@@ -615,11 +595,11 @@ def interval_overlap_pairs(
     intervals² — a hot bucket is a skew key AQE's skew-join splits.
 
     Scale contract (100× probe, SCALING.md): TRUE co-present pairs are
-    quadratic in concurrent entities *by definition* — when bucket
+    quadratic in concurrent users *by definition* — when bucket
     occupancy itself grows with scale, no join shape beats the output
     size. ``max_bucket_occupancy=N`` is the callable routing for that
     regime: each bucket keeps only its first N intervals under the
-    deterministic (start, key, interval id) order before pairing, bounding
+    deterministic (start, user, session) order before pairing, bounding
     both work and output at ``Σ_bucket N²/2`` pairs. The capped result is
     a deterministic SUBSET of the exact answer (pairs whose every shared
     bucket ranked them past N drop; surviving pair counts may shrink) —
@@ -634,45 +614,39 @@ def interval_overlap_pairs(
     # per session), so one materialization halves the heavy lineage.
     intervals = materialize(intervals)
     bucketed = intervals.select(
-        key,
-        interval_id,
-        start,
-        end,
+        "user_id",
+        "session_id",
+        "s",
+        "e",
         F.explode(
             F.sequence(
-                F.date_trunc(bucket_unit, F.col(start)),
-                F.date_trunc(bucket_unit, F.col(end)),
-                F.expr(f"INTERVAL 1 {bucket_unit}"),
+                F.date_trunc("hour", F.col("s")),
+                F.date_trunc("hour", F.col("e")),
+                F.expr("INTERVAL 1 hour"),
             )
         ).alias("__bucket"),
     )
     if max_bucket_occupancy is not None:
-        w_occ = Window.partitionBy("__bucket").orderBy(start, key, interval_id)
+        w_occ = Window.partitionBy("__bucket").orderBy("s", "user_id", "session_id")
         bucketed = (
             bucketed.withColumn("__occ", F.row_number().over(w_occ))
             .filter(F.col("__occ") <= int(max_bucket_occupancy))
             .drop("__occ")
         )
-    a = bucketed.select(
-        F.col(key).alias(f"{key}_a"), F.col(interval_id).alias("__id_a"),
-        F.col(start).alias("__s_a"), F.col(end).alias("__e_a"), "__bucket",
-    )
-    b = bucketed.select(
-        F.col(key).alias(f"{key}_b"), F.col(interval_id).alias("__id_b"),
-        F.col(start).alias("__s_b"), F.col(end).alias("__e_b"), "__bucket",
-    )
+    a = bucketed.toDF("user_id_a", "__id_a", "__s_a", "__e_a", "__bucket")
+    b = bucketed.toDF("user_id_b", "__id_b", "__s_b", "__e_b", "__bucket")
     pairs = (
         a.join(b, "__bucket")
-        .filter(F.col(f"{key}_a") < F.col(f"{key}_b"))
+        .filter(F.col("user_id_a") < F.col("user_id_b"))
         # overlap filter BEFORE the dedup: bucket-mates that don't truly
         # overlap drop row-wise (cheap), so the distinct shuffles only the
         # surviving pairs — and only their ids, not the interval bounds
         .filter((F.col("__s_a") <= F.col("__e_b")) & (F.col("__s_b") <= F.col("__e_a")))
         # an interval pair sharing several buckets appears once per shared
         # bucket — dedup on the interval ids before counting
-        .select(f"{key}_a", "__id_a", f"{key}_b", "__id_b")
+        .select("user_id_a", "__id_a", "user_id_b", "__id_b")
         .distinct()
     )
-    return pairs.groupBy(f"{key}_a", f"{key}_b").agg(
+    return pairs.groupBy("user_id_a", "user_id_b").agg(
         F.count(F.lit(1)).alias("n_copresent")
     )

@@ -177,15 +177,17 @@ def _map_rows(
     return src.mapInPandas(fn, schema=schema)
 
 
-def _payload_schema(id_col: str, media_meta: bool = True) -> T.StructType:
-    """The attach_* fixture contract: ``(id_col, payload[, media_meta])``."""
-    fields = [
-        T.StructField(id_col, T.LongType(), False),
+#: The attach_* fixture contract: ``(doc_id, payload)``, plus ``media_meta``
+#: for every fixture except the near-dup image and AVI frame fixtures.
+_BARE_PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
         T.StructField("payload", T.BinaryType(), True),
     ]
-    if media_meta:
-        fields.append(T.StructField("media_meta", MEDIA_META, True))
-    return T.StructType(fields)
+)
+_PAYLOAD_SCHEMA = T.StructType(
+    [*_BARE_PAYLOAD_SCHEMA.fields, T.StructField("media_meta", MEDIA_META, True)]
+)
 
 
 def _media_meta(
@@ -205,18 +207,18 @@ def _media_meta(
     }
 
 
-def attach_media_columns(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def attach_media_columns(df: DataFrame) -> DataFrame:
     """Wrap a text table into the media contract for testing: payload =
     utf-8 bytes of the text, metadata struct populated deterministically.
     (Real pipelines read payloads from object-store binaryFile sources.)"""
     return df.select(
-        F.col(id_col),
-        F.col(text_col).cast("binary").alias("payload"),
+        F.col("doc_id"),
+        F.col("text").cast("binary").alias("payload"),
         F.struct(
             F.lit("image").alias("media_type"),
             F.lit("fake").alias("format"),
-            (F.octet_length(text_col) % 640).cast("int").alias("width"),
-            (F.octet_length(text_col) % 480).cast("int").alias("height"),
+            (F.octet_length("text") % 640).cast("int").alias("width"),
+            (F.octet_length("text") % 480).cast("int").alias("height"),
             F.lit(None).cast("long").alias("duration_ms"),
         ).alias("media_meta"),
     )
@@ -1672,6 +1674,19 @@ def _md5_bytes(key: "int | str", n: int) -> bytes:
     )[:n]
 
 
+#: Fixture shapes. Each DuckDB oracle that re-derives a fixture's payloads
+#: reads the same constant, so the two sides cannot drift apart.
+IMAGE_WIDTH, IMAGE_HEIGHT = 16, 12
+AUDIO_SAMPLES = 256
+IMA_ADPCM_BYTES = 124
+MS_ADPCM_BYTES = 125
+STEREO_FRAMES = 128
+VIDEO_FRAMES = 12
+AVI_WIDTH, AVI_HEIGHT = 8, 6
+AVI_FRAMES = 4  # at most 16: frames are keyed id*16 + frame
+AVI_AV_FRAMES = 2
+
+
 def md5_pixels(doc_id: int, width: int, height: int) -> "np.ndarray":
     """Deterministic (H, W, 3) uint8 pixels for a row id: the byte stream is
     the concatenation of md5("{doc_id}:{block}") digests — chosen over a
@@ -1684,9 +1699,8 @@ def md5_pixels(doc_id: int, width: int, height: int) -> "np.ndarray":
 
 def attach_ppm_payloads(
     df: DataFrame,
-    id_col: str = "doc_id",
-    width: int = 16,
-    height: int = 12,
+    width: int = IMAGE_WIDTH,
+    height: int = IMAGE_HEIGHT,
     fmt: str = "ppm",
 ) -> DataFrame:
     """Give every row a REAL decodable image payload: a deterministic image
@@ -1807,20 +1821,14 @@ def attach_ppm_payloads(
     meta = _media_meta("image", fmt, width, height)
     return _map_rows(
         df,
-        [id_col],
-        _payload_schema(id_col),
+        ["doc_id"],
+        _PAYLOAD_SCHEMA,
         lambda did: [(did, encoder(md5_pixels(did, width, height), did), meta)],
         widen=fmt,
     )
 
 
-def attach_ppm_payloads_neardup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    width: int = 16,
-    height: int = 12,
-    group_mod: int = 40,
-) -> DataFrame:
+def attach_ppm_payloads_neardup(df: DataFrame, group_mod: int = 40) -> DataFrame:
     """Near-duplicate image fixture: rows sharing ``id % group_mod`` get the
     SAME base image (:func:`md5_pixels` keyed on the residue), then exactly
     one byte is perturbed per row (index ``(id·7) mod n``, value bumped by
@@ -1828,16 +1836,16 @@ def attach_ppm_payloads_neardup(
     perceptually identical. Every step is re-derivable in ANSI SQL, which
     lets the aHash oracle verify the whole perceptual pipeline bit-exactly.
     Production replaces this with a ``binaryFile`` scan."""
-    n = width * height * 3
+    n = IMAGE_WIDTH * IMAGE_HEIGHT * 3
 
     def row(did: int) -> "list[tuple]":
-        flat = md5_pixels(did % group_mod, width, height).reshape(-1)
+        flat = md5_pixels(did % group_mod, IMAGE_WIDTH, IMAGE_HEIGHT).reshape(-1)
         idx = (did * 7) % n
         flat[idx] = (int(flat[idx]) + (did // group_mod) % 7) % 256
-        return [(did, encode_ppm(flat.reshape(height, width, 3)))]
+        return [(did, encode_ppm(flat.reshape(IMAGE_HEIGHT, IMAGE_WIDTH, 3)))]
 
     return _map_rows(
-        df, [id_col], _payload_schema(id_col, media_meta=False), row, widen="ppm"
+        df, ["doc_id"], _BARE_PAYLOAD_SCHEMA, row, widen="ppm"
     )
 
 
@@ -1852,27 +1860,22 @@ AHASH_SCHEMA = T.StructType(
 )
 
 
-def ahash64(img: "np.ndarray", grid: int = 8) -> tuple[int, int]:
+def ahash64(img: "np.ndarray") -> tuple[int, int]:
     """Average-hash of an (H, W, 3) uint8 image, integer math end-to-end:
-    nearest-neighbor downsample to ``grid×grid`` (floor index math, as
+    nearest-neighbor downsample to 8×8 (floor index math, as
     :func:`resize_nearest`), per-cell brightness = r+g+b (no grayscale
-    division), bit ``i = gr·grid+gc`` set iff ``brightness·grid² >
+    division), bit ``i = gr·8+gc`` set iff ``brightness·64 >
     Σ brightness`` (strict — a mean tie clears the bit on both engines).
     Returns (hi, lo) 32-bit halves of the 64-bit hash."""
-    cells = resize_nearest(img, grid, grid).astype(np.int64).sum(axis=2)
+    cells = resize_nearest(img, 8, 8).astype(np.int64).sum(axis=2)
     total = int(cells.sum())
-    bits = (cells.reshape(-1) * (grid * grid) > total).astype(np.int64)
+    bits = (cells.reshape(-1) * 64 > total).astype(np.int64)
     lo = int(sum(int(b) << i for i, b in enumerate(bits[:32])))
     hi = int(sum(int(b) << i for i, b in enumerate(bits[32:])))
     return hi, lo
 
 
-def image_ahash(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    grid: int = 8,
-) -> DataFrame:
+def image_ahash(df: DataFrame) -> DataFrame:
     """Perceptual average-hash per image via ``mapInPandas`` — the image
     member of the near-dup family (t8's SimHash for binary media): decode
     (pure numpy), :func:`ahash64`, out come two integer hash halves ready
@@ -1883,32 +1886,26 @@ def image_ahash(
         if payload is None:
             return [(did, None, None)]
         try:
-            return [(did, *ahash64(decode_image(payload), grid))]
+            return [(did, *ahash64(decode_image(payload)))]
         except (NotImplementedError, *_MALFORMED_IMAGE):
             return [(did, None, None)]
 
-    return _map_rows(df, [id_col, payload_col], AHASH_SCHEMA, row)
+    return _map_rows(df, ["doc_id", "payload"], AHASH_SCHEMA, row)
 
 
-def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
+def _fake_feature(payload: bytes) -> list[float]:
     """Deterministic stand-in for a decoded-image feature vector: byte-sum
     folded per dimension. Replace with a real decode+embed when codecs are
     available."""
     if payload is None:
         return None
-    acc = [0] * dim
+    acc = [0] * 8
     for i, b in enumerate(payload):
-        acc[i % dim] += b
+        acc[i % 8] += b
     return [float(a % 997) / 997.0 for a in acc]
 
 
-def decode_image_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    dim: int = 8,
-    strict: bool = False,
-) -> DataFrame:
+def decode_image_features(df: DataFrame, strict: bool = False) -> DataFrame:
     """Image decode + feature extraction via ``mapInPandas`` (Arrow batches).
 
     Payloads in a supported format (PPM/BMP/PNG/baseline+progressive+
@@ -1932,18 +1929,18 @@ def decode_image_features(
             # fake so a mixed-format corpus doesn't crash the whole job
             if strict:
                 raise
-            return _fake_feature(payload, dim)
+            return _fake_feature(payload)
         except _MALFORMED_IMAGE:
             if strict:
                 raise NotImplementedError(
                     "compressed/unknown image decode requires a codec library "
                     "(Pillow/opencv) — not available in this environment"
                 ) from None
-            return _fake_feature(payload, dim)
+            return _fake_feature(payload)
 
     return _map_rows(
         df,
-        [id_col, payload_col],
+        ["doc_id", "payload"],
         IMAGE_FEATURES,
         lambda did, p: [(did, 0 if p is None else len(p), one(p))],
     )
@@ -1960,12 +1957,7 @@ def resize_nearest(img: "np.ndarray", out_width: int, out_height: int) -> "np.nd
 
 
 def resize_images(
-    df: DataFrame,
-    out_width: int,
-    out_height: int,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    strict: bool = False,
+    df: DataFrame, out_width: int, out_height: int, strict: bool = False
 ) -> DataFrame:
     """Image resize via ``mapInPandas``: decode (PPM/BMP, pure numpy),
     nearest-neighbor resample, re-encode as PPM. Payload→payload — the
@@ -1987,17 +1979,15 @@ def resize_images(
             return [(did, None, None)]
         return [(did, encode_ppm(resize_nearest(img, out_width, out_height)), meta)]
 
-    return _map_rows(df, [id_col, payload_col], _payload_schema(id_col), row)
+    return _map_rows(df, ["doc_id", "payload"], _PAYLOAD_SCHEMA, row)
 
 
-def image_channel_sums(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def image_channel_sums(df: DataFrame) -> DataFrame:
     """Exact-integer per-channel byte sums + pixel count per image — the
     verification-friendly feature block (no float accumulation at all, so
     any engine that can reconstruct the bytes agrees bit-for-bit)."""
     out_schema = T.StructType(
-        [T.StructField(id_col, T.LongType(), False)]
+        [T.StructField("doc_id", T.LongType(), False)]
         + [
             T.StructField(c, T.LongType(), True)
             for c in ("c0_sum", "c1_sum", "c2_sum", "n_pix")
@@ -2011,17 +2001,11 @@ def image_channel_sums(
         s = img.sum(axis=(0, 1))
         return [(did, int(s[0]), int(s[1]), int(s[2]), img.shape[0] * img.shape[1])]
 
-    return _map_rows(df, [id_col, payload_col], out_schema, row)
+    return _map_rows(df, ["doc_id", "payload"], out_schema, row)
 
 
-def sample_frames(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    every_n_bytes: int = 64,
-    max_frames: int = 8,
-) -> DataFrame:
-    """Frame sampling (row fan-out): emit up to ``max_frames`` byte-slices
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame sampling (row fan-out): emit up to 8 byte-slices of 64 bytes
     per payload — the video→frames shape. Real decoders replace the slicing
     with keyframe extraction; the iterator contract (rows out ≠ rows in) is
     the part that matters for the distributed plan."""
@@ -2029,13 +2013,10 @@ def sample_frames(
     def row(did: int, payload: bytes | None) -> "list[tuple]":
         if payload is None:
             return []
-        n = min(max_frames, max(1, len(payload) // every_n_bytes))
-        return [
-            (did, j, payload[j * every_n_bytes : (j + 1) * every_n_bytes])
-            for j in range(n)
-        ]
+        n = min(8, max(1, len(payload) // 64))
+        return [(did, j, payload[j * 64 : (j + 1) * 64]) for j in range(n)]
 
-    return _map_rows(df, [id_col, payload_col], FRAME_SCHEMA, row)
+    return _map_rows(df, ["doc_id", "payload"], FRAME_SCHEMA, row)
 
 
 def _riff_wave(fmt: bytes, data: bytes) -> bytes:
@@ -2338,92 +2319,82 @@ def md5_samples(doc_id: int, n_samples: int) -> "np.ndarray":
     return np.frombuffer(_md5_bytes(doc_id, n_samples * 2), dtype="<i2").copy()
 
 
-def attach_wav_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_samples: int = 256, rate: int = 16000
-) -> DataFrame:
+def attach_wav_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL decodable audio payload (mono PCM16 WAV with
     :func:`md5_samples` content) — test-fixture source for the audio decode
     path; production replaces it with a ``binaryFile`` read."""
-    meta = _media_meta("audio", "wav", duration_ms=n_samples * 1000 // rate)
+    meta = _media_meta("audio", "wav", duration_ms=AUDIO_SAMPLES * 1000 // 16000)
     return _map_rows(
         df,
-        [id_col],
-        _payload_schema(id_col),
-        lambda did: [(did, encode_wav(md5_samples(did, n_samples), rate), meta)],
+        ["doc_id"],
+        _PAYLOAD_SCHEMA,
+        lambda did: [(did, encode_wav(md5_samples(did, AUDIO_SAMPLES)), meta)],
         widen="wav",
     )
 
 
-def attach_g711_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_samples: int = 256, rate: int = 8000
-) -> DataFrame:
+def attach_g711_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL compressed-audio payload: the md5 byte stream
     AS the G.711 companded data (one byte = one sample), wrapped in a WAV
     whose format code alternates per row — μ-law (7) when ``id % 10 == 0``,
     A-law (6) otherwise — so one graded query exercises BOTH expansions.
     Production replaces this with a ``binaryFile`` read of telephony
     captures."""
-    ms = n_samples * 1000 // rate
+    ms = AUDIO_SAMPLES * 1000 // 8000
 
     def row(did: int) -> "list[tuple]":
         code = 7 if did % 10 == 0 else 6
-        fmt = b"fmt " + struct.pack("<IHHIIHH", 16, code, 1, rate, rate, 1, 8)
+        fmt = b"fmt " + struct.pack("<IHHIIHH", 16, code, 1, 8000, 8000, 1, 8)
         meta = _media_meta("audio", "ulaw" if code == 7 else "alaw", duration_ms=ms)
-        return [(did, _riff_wave(fmt, _md5_bytes(did, n_samples)), meta)]
+        return [(did, _riff_wave(fmt, _md5_bytes(did, AUDIO_SAMPLES)), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="g711")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="g711")
 
 
-def attach_adpcm_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_data_bytes: int = 124, rate: int = 8000
-) -> DataFrame:
+def attach_adpcm_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL IMA-ADPCM WAV payload: one block whose 4-byte
     header carries predictor 0 and step index ``id % 89`` (so every
     starting step size is exercised across the corpus) and whose nibble
-    data is the md5 byte stream — 2·n_data_bytes + 1 samples per row. The
+    data is the md5 byte stream — 2·IMA_ADPCM_BYTES + 1 samples per row. The
     mm12 oracle replays the exact prediction recursion in SQL."""
     fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 0x11, 1, rate, rate // 2, n_data_bytes + 4, 4
+        "<IHHIIHH", 16, 0x11, 1, 8000, 8000 // 2, IMA_ADPCM_BYTES + 4, 4
     )
     meta = _media_meta(
-        "audio", "ima-adpcm", duration_ms=(2 * n_data_bytes + 1) * 1000 // rate
+        "audio", "ima-adpcm", duration_ms=(2 * IMA_ADPCM_BYTES + 1) * 1000 // 8000
     )
 
     def row(did: int) -> "list[tuple]":
-        block = struct.pack("<hBB", 0, did % 89, 0) + _md5_bytes(did, n_data_bytes)
+        block = struct.pack("<hBB", 0, did % 89, 0) + _md5_bytes(did, IMA_ADPCM_BYTES)
         return [(did, _riff_wave(fmt, block), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="adpcm")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="adpcm")
 
 
-def attach_msadpcm_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_data_bytes: int = 125, rate: int = 8000
-) -> DataFrame:
+def attach_msadpcm_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL MS-ADPCM WAV payload: one block whose header
     carries coefficient pair ``id % 7`` (every predictor pair exercised
     corpus-wide), initial delta ``16 + id % 100``, and header samples
     derived from the id, with the md5 byte stream as the nibble data —
-    ``2·n_data_bytes + 2`` samples per row. The mm19 oracle replays the
+    ``2·MS_ADPCM_BYTES + 2`` samples per row. The mm19 oracle replays the
     exact prediction/adaptation recursion in SQL."""
     fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 0x02, 1, rate, rate // 2, n_data_bytes + 7, 4
+        "<IHHIIHH", 16, 0x02, 1, 8000, 8000 // 2, MS_ADPCM_BYTES + 7, 4
     )
     meta = _media_meta(
-        "audio", "ms-adpcm", duration_ms=(2 * n_data_bytes + 2) * 1000 // rate
+        "audio", "ms-adpcm", duration_ms=(2 * MS_ADPCM_BYTES + 2) * 1000 // 8000
     )
 
     def row(did: int) -> "list[tuple]":
         head = struct.pack(
             "<Bhhh", did % 7, 16 + did % 100, (did * 29) % 1000, -((did * 13) % 1000)
         )
-        return [(did, _riff_wave(fmt, head + _md5_bytes(did, n_data_bytes)), meta)]
+        return [(did, _riff_wave(fmt, head + _md5_bytes(did, MS_ADPCM_BYTES)), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="msadpcm")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="msadpcm")
 
 
-def attach_float_wav_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_samples: int = 256, rate: int = 16000
-) -> DataFrame:
+def attach_float_wav_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL IEEE-float WAV payload carrying the SAME md5
     int16 samples as the PCM fixture, scaled by 1/32768 — every value is
     an exact dyadic rational (≤15 significand bits), representable
@@ -2432,31 +2403,29 @@ def attach_float_wav_payloads(
     shape rotates per doc: 64-bit when ``id % 20 == 10`` (else 32-bit),
     wrapped in a WAVE_FORMAT_EXTENSIBLE fmt chunk when ``id % 30 == 20``
     — all four format-3 header paths appear in the graded corpus."""
-    ms = n_samples * 1000 // rate
+    ms = AUDIO_SAMPLES * 1000 // 16000
 
     def row(did: int) -> "list[tuple]":
-        x = md5_samples(did, n_samples).astype(np.float64) / 32768.0
+        x = md5_samples(did, AUDIO_SAMPLES).astype(np.float64) / 32768.0
         bits = 64 if did % 20 == 10 else 32
-        payload = encode_wav_float(x, rate, bits=bits, extensible=(did % 30 == 20))
+        payload = encode_wav_float(x, bits=bits, extensible=(did % 30 == 20))
         return [(did, payload, _media_meta("audio", f"float{bits}-wav", duration_ms=ms))]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="float_wav")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="float_wav")
 
 
-def attach_stereo_wav_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_frames: int = 128, rate: int = 16000
-) -> DataFrame:
+def attach_stereo_wav_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL stereo PCM16 WAV payload: the md5 int16
-    stream as ``n_frames`` interleaved L/R frames (sample ``2k`` is
+    stream as :data:`STEREO_FRAMES` interleaved L/R frames (sample ``2k`` is
     left, ``2k+1`` right — the WAV channel order), so the mm22 oracle
     re-derives each channel with ``si % 2`` arithmetic."""
-    meta = _media_meta("audio", "wav-stereo", duration_ms=n_frames * 1000 // rate)
+    meta = _media_meta("audio", "wav-stereo", duration_ms=STEREO_FRAMES * 1000 // 16000)
 
     def row(did: int) -> "list[tuple]":
-        frames = md5_samples(did, 2 * n_frames).reshape(n_frames, 2)
-        return [(did, encode_wav(frames, rate), meta)]
+        frames = md5_samples(did, 2 * STEREO_FRAMES).reshape(STEREO_FRAMES, 2)
+        return [(did, encode_wav(frames), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="stereo_wav")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="stereo_wav")
 
 
 #: Per-channel feature schema for multichannel audio
@@ -2472,9 +2441,7 @@ AUDIO_CHANNEL_FEATURES = T.StructType(
 )
 
 
-def decode_audio_channel_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def decode_audio_channel_features(df: DataFrame) -> DataFrame:
     """Multichannel audio decode + PER-CHANNEL features via
     ``mapInPandas``: :func:`decode_wav` (or FLAC) yields (frames, ch)
     arrays, and each channel reduces independently — one output row per
@@ -2497,12 +2464,10 @@ def decode_audio_channel_features(
             (did, c, *_pcm_stats(x[:, c].astype(np.int64))) for c in range(x.shape[1])
         ]
 
-    return _map_rows(df, [id_col, payload_col], AUDIO_CHANNEL_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], AUDIO_CHANNEL_FEATURES, row)
 
 
-def attach_flac_payloads(
-    df: DataFrame, id_col: str = "doc_id", n_samples: int = 256, rate: int = 16000
-) -> DataFrame:
+def attach_flac_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL FLAC payload over the SAME md5 int16 samples
     as the WAV fixture (:func:`md5_samples`), with the subframe strategy,
     Rice-parameter method, partition order, and escape usage rotating per
@@ -2518,16 +2483,16 @@ def attach_flac_payloads(
         dict(mode="fixed3", partition_order=2),
         dict(mode="fixed4"),
         dict(mode="lpc"),
-        dict(mode="fixed2", blocksize=n_samples // 2, partition_order=1),
+        dict(mode="fixed2", blocksize=AUDIO_SAMPLES // 2, partition_order=1),
         dict(mode="fixed1", escape_first=True),
     )
-    meta = _media_meta("audio", "flac", duration_ms=n_samples * 1000 // rate)
+    meta = _media_meta("audio", "flac", duration_ms=AUDIO_SAMPLES * 1000 // 16000)
 
     def row(did: int) -> "list[tuple]":
-        x = md5_samples(did, n_samples)
-        return [(did, encode_flac(x, rate=rate, **combos[did % len(combos)]), meta)]
+        x = md5_samples(did, AUDIO_SAMPLES)
+        return [(did, encode_flac(x, **combos[did % len(combos)]), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="flac")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="flac")
 
 
 AUDIO_FEATURES = T.StructType(
@@ -2585,12 +2550,7 @@ AUDIO_FEATURES_F = T.StructType(
 )
 
 
-def decode_audio_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    float_features: bool = False,
-) -> DataFrame:
+def decode_audio_features(df: DataFrame, float_features: bool = False) -> DataFrame:
     """Audio decode + features via ``mapInPandas``: REAL WAV/FLAC parse
     (:func:`decode_audio`), then peak / zero-crossing count (exact ints)
     and RMS (float64, rounded by callers needing cross-engine equality).
@@ -2615,11 +2575,11 @@ def decode_audio_features(
         return [(did, len(payload), *_pcm_stats(x))]
 
     schema = AUDIO_FEATURES_F if float_features else AUDIO_FEATURES
-    return _map_rows(df, [id_col, payload_col], schema, row)
+    return _map_rows(df, ["doc_id", "payload"], schema, row)
 
 
-def dft_quantized_basis(period: int, scale: int = 10_000) -> tuple[list[int], list[int]]:
-    """Integer-quantized DFT basis for one bin: ``floor(cos(2πr/period)·scale)``
+def dft_quantized_basis(period: int) -> tuple[list[int], list[int]]:
+    """Integer-quantized DFT basis for one bin: ``floor(cos(2πr/period)·10⁴)``
     and the sine twin, for r in [0, period). Computed ONCE in Python and
     embedded as literals on BOTH engines (the s3-hyperplane-constants trick),
     so no cross-engine transcendental ever runs — every downstream product
@@ -2628,8 +2588,8 @@ def dft_quantized_basis(period: int, scale: int = 10_000) -> tuple[list[int], li
     ``period = N // k`` (cos(2πki/N) has period N/k in i)."""
     import math
 
-    cos_q = [math.floor(math.cos(2 * math.pi * r / period) * scale) for r in range(period)]
-    sin_q = [math.floor(math.sin(2 * math.pi * r / period) * scale) for r in range(period)]
+    cos_q = [math.floor(math.cos(2 * math.pi * r / period) * 10_000) for r in range(period)]
+    sin_q = [math.floor(math.sin(2 * math.pi * r / period) * 10_000) for r in range(period)]
     return cos_q, sin_q
 
 
@@ -2643,21 +2603,16 @@ AUDIO_DFT = T.StructType(
 )
 
 
-def decode_audio_dft_bands(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    n_fft: int = 256,
-) -> DataFrame:
+def decode_audio_dft_bands(df: DataFrame) -> DataFrame:
     """Audio decode → DFT band energies via ``mapInPandas``: REAL WAV parse
     (:func:`decode_wav`), then the k=4 and k=8 bin energies of the first
-    ``n_fft`` samples, E_k = Sc² + Ss² with Sc = Σ s_i·cosq_k[i mod N/k] on
+    256 samples, E_k = Sc² + Ss² with Sc = Σ s_i·cosq_k[i mod N/k] on
     the :func:`dft_quantized_basis` integer basis. The correlation sums stay
-    in int64 (|s|·scale·N ≈ 8.6e10 ≪ 2^63); only the final squaring runs in
+    in int64 (|s|·10⁴·N ≈ 8.6e10 ≪ 2^63); only the final squaring runs in
     float64, identically associated on both engines. Partition-local like
     every decode op — no shuffle."""
-    c4, s4 = dft_quantized_basis(n_fft // 4)
-    c8, s8 = dft_quantized_basis(n_fft // 8)
+    c4, s4 = dft_quantized_basis(256 // 4)
+    c8, s8 = dft_quantized_basis(256 // 8)
     bases = [(np.array(c4), np.array(s4)), (np.array(c8), np.array(s8))]
 
     def energy(xl: "np.ndarray", cq: "np.ndarray", sq: "np.ndarray") -> float:
@@ -2669,10 +2624,10 @@ def decode_audio_dft_bands(
     def row(did: int, payload: bytes | None) -> "list[tuple]":
         if payload is None:
             return [(did, None, None, None)]
-        xl = decode_wav(payload)[1][:n_fft].astype(np.int64)
+        xl = decode_wav(payload)[1][:256].astype(np.int64)
         return [(did, len(xl), *(energy(xl, cq, sq) for cq, sq in bases))]
 
-    return _map_rows(df, [id_col, payload_col], AUDIO_DFT, row)
+    return _map_rows(df, ["doc_id", "payload"], AUDIO_DFT, row)
 
 
 #: (doc_id, frame_idx, frame) — fixed-size synthetic video frames.
@@ -2695,17 +2650,11 @@ FRAME_SAD_SCHEMA = T.StructType(
 )
 
 
-def attach_video_frames(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = 12,
-    frame_bytes: int = 64,
-    shot_len: int = 4,
-) -> DataFrame:
-    """Synthetic video fixture: ``n_frames`` fixed-size frames per row,
-    grouped into shots of ``shot_len`` — frames within a shot share an
+def attach_video_frames(df: DataFrame) -> DataFrame:
+    """Synthetic video fixture: :data:`VIDEO_FRAMES` frames of 64 bytes
+    per row, grouped into shots of 4 — frames within a shot share an
     md5-derived base (:func:`md5_pixels`-style, keyed on (id, shot)) plus a
-    per-frame +``frame_idx % shot_len`` brightness drift, so consecutive
+    per-frame +``frame_idx % 4`` brightness drift, so consecutive
     frames inside a shot differ by ~1 per byte while shot changes swap the
     whole base. Every byte is re-derivable in ANSI SQL (md5 hex digit
     arithmetic), so the shot-boundary oracle verifies the full
@@ -2713,15 +2662,15 @@ def attach_video_frames(
     a keyframe decoder over a ``binaryFile`` scan."""
 
     def frame(did: int, f: int) -> bytes:
-        buf = _md5_bytes(f"{did}:{f // shot_len}", frame_bytes)
+        buf = _md5_bytes(f"{did}:{f // 4}", 64)
         base = np.frombuffer(buf, dtype=np.uint8).astype(np.int64)
-        return ((base + f % shot_len) % 256).astype(np.uint8).tobytes()
+        return ((base + f % 4) % 256).astype(np.uint8).tobytes()
 
     return _map_rows(
         df,
-        [id_col],
+        ["doc_id"],
         VIDEO_FRAME_SCHEMA,
-        lambda did: [(did, f, frame(did, f)) for f in range(n_frames)],
+        lambda did: [(did, f, frame(did, f)) for f in range(VIDEO_FRAMES)],
         widen="video",
     )
 
@@ -2730,7 +2679,6 @@ def encode_avi_mjpeg(
     frames: list[bytes],
     width: int,
     height: int,
-    fps: int = 10,
     audio: "np.ndarray | None" = None,
     audio_rate: int = 16000,
 ) -> bytes:
@@ -2752,11 +2700,11 @@ def encode_avi_mjpeg(
 
     n_streams = 2 if audio is not None else 1
     avih = struct.pack(
-        "<14I", 1_000_000 // fps, 0, 0, 0x10, len(frames), 0, n_streams, 0,
+        "<14I", 1_000_000 // 10, 0, 0, 0x10, len(frames), 0, n_streams, 0,
         width, height, 0, 0, 0, 0,
     )
     strh = (
-        b"vids" + b"MJPG" + struct.pack("<10I", 0, 0, 0, 1, fps, 0, len(frames), 0, 0, 0)
+        b"vids" + b"MJPG" + struct.pack("<10I", 0, 0, 0, 1, 10, 0, len(frames), 0, 0, 0)
         + struct.pack("<4H", 0, 0, width, height)
     )
     strf = struct.pack(
@@ -2916,33 +2864,27 @@ AV_FEATURES = T.StructType(
 )
 
 
-def attach_avi_av_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = 2,
-    n_samples: int = 256,
-    rate: int = 16000,
-) -> DataFrame:
-    """Give every row a REAL audio+video AVI: ``n_frames`` lossless-JPEG
+def attach_avi_av_payloads(df: DataFrame) -> DataFrame:
+    """Give every row a REAL audio+video AVI: :data:`AVI_AV_FRAMES` lossless-JPEG
     md5-pixel frames muxed with the md5 int16 sample stream as an
     interleaved PCM16 'auds' track — the mm24 fixture for the container
     demux path."""
-    meta = _media_meta("video", "avi-av", 8, 6, n_samples * 1000 // rate)
+    meta = _media_meta("video", "avi-av", AVI_WIDTH, AVI_HEIGHT, AUDIO_SAMPLES * 1000 // 16000)
 
     def row(did: int) -> "list[tuple]":
         frames = [
-            encode_jpeg_lossless(md5_pixels(did * 7 + i, 8, 6), predictor=1 + (did + i) % 7)
-            for i in range(n_frames)
+            encode_jpeg_lossless(
+                md5_pixels(did * 7 + i, AVI_WIDTH, AVI_HEIGHT), predictor=1 + (did + i) % 7
+            )
+            for i in range(AVI_AV_FRAMES)
         ]
-        audio = md5_samples(did, n_samples)
-        return [(did, encode_avi_mjpeg(frames, 8, 6, audio=audio, audio_rate=rate), meta)]
+        audio = md5_samples(did, AUDIO_SAMPLES)
+        return [(did, encode_avi_mjpeg(frames, AVI_WIDTH, AVI_HEIGHT, audio=audio), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="avi_av")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="avi_av")
 
 
-def decode_av_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def decode_av_features(df: DataFrame) -> DataFrame:
     """Container demux + joint features via ``mapInPandas``: counts the
     decoded MJPEG video frames AND reduces the demuxed audio track
     (:func:`decode_avi_audio` → the same peak/zero-crossing/RMS block as
@@ -2956,7 +2898,7 @@ def decode_av_features(
         x = decode_avi_audio(payload)[1].reshape(-1).astype(np.int64)
         return [(did, len(decode_avi_mjpeg(payload)), *_pcm_stats(x))]
 
-    return _map_rows(df, [id_col, payload_col], AV_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], AV_FEATURES, row)
 
 
 #: WARC-ingest reduction: record counts + response-payload identity
@@ -2972,9 +2914,7 @@ WARC_FEATURES = T.StructType(
 )
 
 
-def attach_warc_payloads(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_warc_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL WARC archive wrapping ITS OWN text as the
     crawl payload: warcinfo + request + response records in the Common
     Crawl shape (:func:`..operators.warc.encode_warc`), per-record-gzip
@@ -2989,13 +2929,11 @@ def attach_warc_payloads(
         return [(did, payload, _media_meta("archive", "warc" if gz else "warc-plain"))]
 
     return _map_rows(
-        df, [id_col, text_col], _payload_schema(id_col), row, widen="warc"
+        df, ["doc_id", "text"], _PAYLOAD_SCHEMA, row, widen="warc"
     )
 
 
-def parse_warc_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def parse_warc_features(df: DataFrame) -> DataFrame:
     """WARC ingest via ``mapInPandas``: parse the archive
     (:func:`..operators.warc.parse_warc` — gzip-member walk, header
     parse, Content-Length blocks), pull each response record's HTTP
@@ -3017,7 +2955,7 @@ def parse_warc_features(
         st, body = http_response_body(resp)
         return [(*counts, st, len(body), hashlib.md5(body).hexdigest())]
 
-    return _map_rows(df, [id_col, payload_col], WARC_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], WARC_FEATURES, row)
 
 
 #: HTML-over-WARC extraction: title / text identity / link features
@@ -3041,11 +2979,7 @@ _TRANSFER_MODES = ("identity", "chunked", "gzip", "deflate", "gzip+chunked")
 
 
 def attach_html_warc_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    charset_rotation: bool = False,
-    transfer_rotation: bool = False,
+    df: DataFrame, charset_rotation: bool = False, transfer_rotation: bool = False
 ) -> DataFrame:
     """Like :func:`attach_warc_payloads`, but the crawl payload is the
     document's text rendered as REAL HTML
@@ -3097,16 +3031,12 @@ def attach_html_warc_payloads(
         return [(did, payload, meta)]
 
     return _map_rows(
-        df, [id_col, text_col], _payload_schema(id_col), row, widen="html"
+        df, ["doc_id", "text"], _PAYLOAD_SCHEMA, row, widen="html"
     )
 
 
 def extract_html_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    honor_charset: bool = False,
-    decode_transfer: bool = False,
+    df: DataFrame, honor_charset: bool = False, decode_transfer: bool = False
 ) -> DataFrame:
     """Crawl text extraction via ``mapInPandas``: walk the WARC archive
     (:func:`..operators.warc.parse_warc`), take each response record's
@@ -3173,12 +3103,10 @@ def extract_html_features(
             )
         ]
 
-    return _map_rows(df, [id_col, payload_col], HTML_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], HTML_FEATURES, row)
 
 
-def extract_html_text_column(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_html_text_column(df: DataFrame) -> DataFrame:
     """Like :func:`extract_html_features` but materializes the EXTRACTED
     TEXT itself as a column (plus the title), so downstream JVM-side
     operators — quality scoring, language ID, token counting, dedup
@@ -3205,12 +3133,10 @@ def extract_html_text_column(
         ex = extract_html_text(http_response_body(resp)[1].decode("utf-8"))
         return [(did, ex["title"], ex["text"])]
 
-    return _map_rows(df, [id_col, payload_col], out_schema, row)
+    return _map_rows(df, ["doc_id", "payload"], out_schema, row)
 
 
-def attach_boilerplate_warc_payloads(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_boilerplate_warc_payloads(df: DataFrame) -> DataFrame:
     """WARC archives whose pages wrap the document's text in one of four
     rotating LINK-DENSE boilerplate shapes (nav/footer, link sidebar,
     cookie banner + breadcrumbs, pagination —
@@ -3227,7 +3153,7 @@ def attach_boilerplate_warc_payloads(
         return [(did, encode_warc([(did, html)], per_record_gzip=(did % 20 != 10)), meta)]
 
     return _map_rows(
-        df, [id_col, text_col], _payload_schema(id_col), row, widen="html"
+        df, ["doc_id", "text"], _PAYLOAD_SCHEMA, row, widen="html"
     )
 
 
@@ -3243,9 +3169,7 @@ MAIN_TEXT_FEATURES = T.StructType(
 )
 
 
-def extract_main_text_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def extract_main_text_features(df: DataFrame) -> DataFrame:
     """Boilerplate removal over crawl payloads: walk the WARC archive,
     run block-level link-density main-content detection
     (:func:`..operators.html.extract_main_text` — the trafilatura/
@@ -3268,7 +3192,7 @@ def extract_main_text_features(
         md5 = hashlib.md5(r["text"].encode("utf-8")).hexdigest()
         return [(did, len(r["text"]), md5, r["n_blocks"], r["n_dropped"])]
 
-    return _map_rows(df, [id_col, payload_col], MAIN_TEXT_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], MAIN_TEXT_FEATURES, row)
 
 
 #: CDX index row (mm39)
@@ -3283,9 +3207,7 @@ CDX_FEATURES = T.StructType(
 )
 
 
-def cdx_index_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def cdx_index_features(df: DataFrame) -> DataFrame:
     """Build the CDX index row for each archive's response record — the
     Common Crawl artifact that makes a 100 TB archive store
     RANGE-ADDRESSABLE: SURT key (:func:`..operators.warc.surt_key`, so
@@ -3345,12 +3267,10 @@ def cdx_index_features(
         uri = warc_header(r, "warc-target-uri")
         return [(did, surt_key(uri), digest, mime, ok)]
 
-    return _map_rows(df, [id_col, payload_col], CDX_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], CDX_FEATURES, row)
 
 
-def attach_crawl_segment_payloads(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def attach_crawl_segment_payloads(df: DataFrame) -> DataFrame:
     """A realistic crawl SEGMENT per document: one WARC archive holding
     BOTH the host's ``/robots.txt`` response (the mm33 policy variants,
     rotated ``(doc_id // 10) % 4``) and the page response (the mm29
@@ -3380,7 +3300,7 @@ def attach_crawl_segment_payloads(
         return [(did, payload, meta)]
 
     return _map_rows(
-        df, [id_col, text_col], _payload_schema(id_col), row, widen="crawl"
+        df, ["doc_id", "text"], _PAYLOAD_SCHEMA, row, widen="crawl"
     )
 
 
@@ -3396,12 +3316,7 @@ CRAWL_ADMISSION = T.StructType(
 )
 
 
-def crawl_admission_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    agent: str = "trainbot",
-) -> DataFrame:
+def crawl_admission_features(df: DataFrame) -> DataFrame:
     """The END-TO-END admission decision a crawl pipeline makes per
     page, from one segment archive: evaluate the host's robots.txt
     against the page's URL path (RFC 9309,
@@ -3444,7 +3359,7 @@ def crawl_admission_features(
             return [(did, None, None, None, None)]
         path = urlsplit(page_uri).path
         allowed = (
-            robots_decision(robots_txt, agent, path)[0]
+            robots_decision(robots_txt, "trainbot", path)[0]
             if robots_txt is not None
             else True  # no robots.txt recorded → allow (RFC 9309 §2.3.1)
         )
@@ -3456,12 +3371,10 @@ def crawl_admission_features(
             md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
         return [(did, allowed, status, admitted, md5)]
 
-    return _map_rows(df, [id_col, payload_col], CRAWL_ADMISSION, row)
+    return _map_rows(df, ["doc_id", "payload"], CRAWL_ADMISSION, row)
 
 
-def wet_conversion_features(
-    df: DataFrame, text_col: str = "xtext", id_col: str = "doc_id"
-) -> DataFrame:
+def wet_conversion_features(df: DataFrame) -> DataFrame:
     """The WET SINK round-trip: write each document's extracted text as
     a Common Crawl WET ``conversion`` record
     (:func:`..operators.warc.encode_wet`) and read it back through the
@@ -3490,12 +3403,10 @@ def wet_conversion_features(
         recovered = rec["block"].decode("utf-8")
         return [(did, len(recovered), hashlib.md5(recovered.encode("utf-8")).hexdigest())]
 
-    return _map_rows(df, [id_col, text_col], out_schema, row, widen="crawl")
+    return _map_rows(df, ["doc_id", "xtext"], out_schema, row, widen="crawl")
 
 
-def attach_status_warc_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_status_warc_payloads(df: DataFrame) -> DataFrame:
     """WARC archives whose responses rotate the HTTP status shapes a
     real crawl records (``(doc_id // 10) % 5``): 200 with content; 301
     with a MESSY absolute Location (uppercase scheme/host, default
@@ -3517,7 +3428,7 @@ def attach_status_warc_payloads(
         )
         return [(did, payload, meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="crawl")
 
 
 #: HTTP status / redirect-frontier features (mm36)
@@ -3532,9 +3443,7 @@ HTTP_STATUS_FEATURES = T.StructType(
 )
 
 
-def http_status_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def http_status_features(df: DataFrame) -> DataFrame:
     """The crawl-frontier status step: per response, the HTTP status,
     the CANONICALIZED redirect target for 3xx (relative Locations
     resolve against the WARC-Target-URI per RFC 3986 §5 — everyday
@@ -3568,7 +3477,7 @@ def http_status_features(
         retry = int(ra) if ra and ra.isdigit() else None
         return [(did, status, canon, retry, status == 200)]
 
-    return _map_rows(df, [id_col, payload_col], HTTP_STATUS_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], HTTP_STATUS_FEATURES, row)
 
 
 #: crawl-URL canonicalization over WARC-Target-URI headers
@@ -3583,9 +3492,7 @@ URL_FEATURES = T.StructType(
 )
 
 
-def attach_crawl_url_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_crawl_url_payloads(df: DataFrame) -> DataFrame:
     """WARC archives whose ``WARC-Target-URI`` headers carry REAL crawl
     mess (:func:`..operators.warc.messy_fixture_url` — uppercase
     scheme/host, default ports, unsorted/duplicate query keys,
@@ -3604,12 +3511,10 @@ def attach_crawl_url_payloads(
         )
         return [(did, payload, meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="crawl")
 
 
-def canonicalize_url_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def canonicalize_url_features(df: DataFrame) -> DataFrame:
     """URL canonicalization over the archive's response headers: walk
     the WARC records, take each response's ``WARC-Target-URI``, and
     normalize it per RFC 3986 §6 (:func:`..operators.warc.
@@ -3636,7 +3541,7 @@ def canonicalize_url_features(
         q = urlsplit(canon).query
         return [(did, canon, url_host(canon), len(q.split("&")) if q else 0, canon != raw)]
 
-    return _map_rows(df, [id_col, payload_col], URL_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], URL_FEATURES, row)
 
 
 #: robots.txt policy evaluation over WARC-served policy files
@@ -3650,9 +3555,7 @@ ROBOTS_FEATURES = T.StructType(
 )
 
 
-def attach_robots_warc_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_robots_warc_payloads(df: DataFrame) -> DataFrame:
     """WARC archives whose response record is the host's robots.txt
     (fetched from ``/robots.txt``, as crawlers record it) — four policy
     variants rotated by id (:func:`..operators.robots.
@@ -3672,17 +3575,12 @@ def attach_robots_warc_payloads(
         )
         return [(did, payload, meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="crawl")
 
 
-def robots_policy_features(
-    df: DataFrame,
-    agent: str = "trainbot",
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def robots_policy_features(df: DataFrame) -> DataFrame:
     """Crawl-politeness evaluation: recover each archive's robots.txt
-    response and decide whether ``agent`` may fetch the document's URL
+    response and decide whether ``trainbot`` may fetch the document's URL
     path (:func:`..operators.robots.robots_decision` — RFC 9309 group
     selection, longest-pattern precedence, Allow-wins ties). One Arrow
     pass, zero shuffle: at 100 TB the policy check rides the same scan
@@ -3698,9 +3596,9 @@ def robots_policy_features(
         if resp is None:
             return [(did, None, None, None)]
         body = http_response_body(resp)[1].decode("utf-8")
-        return [(did, *robots_decision(body, agent, f"/doc/{did}"))]
+        return [(did, *robots_decision(body, "trainbot", f"/doc/{did}"))]
 
-    return _map_rows(df, [id_col, payload_col], ROBOTS_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], ROBOTS_FEATURES, row)
 
 
 #: WebDataset-shard reduction: per-sample image + caption features
@@ -3718,13 +3616,7 @@ WDS_FEATURES = T.StructType(
 )
 
 
-def attach_webdataset_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int = 16,
-    height: int = 12,
-) -> DataFrame:
+def attach_webdataset_payloads(df: DataFrame) -> DataFrame:
     """Give every row a REAL WebDataset tar shard: per sample the
     convention is one basename (the sample key) with one member per
     modality — ``<key>.png`` (the md5-pixel image), ``<key>.txt`` (the
@@ -3736,14 +3628,14 @@ def attach_webdataset_payloads(
     import io
     import tarfile
 
-    meta = _media_meta("archive", "webdataset-tar", width, height)
+    meta = _media_meta("archive", "webdataset-tar", IMAGE_WIDTH, IMAGE_HEIGHT)
 
     def row(did: int, text: str | None) -> "list[tuple]":
         buf = io.BytesIO()
         with tarfile.open(fileobj=buf, mode="w") as tf:
             key = f"{did:09d}"
             members = {
-                f"{key}.png": encode_png(md5_pixels(did, width, height)),
+                f"{key}.png": encode_png(md5_pixels(did, IMAGE_WIDTH, IMAGE_HEIGHT)),
                 f"{key}.txt": (text or "").encode("utf-8"),
                 f"{key}.cls": str(did % 10).encode(),
             }
@@ -3755,7 +3647,7 @@ def attach_webdataset_payloads(
         return [(did, buf.getvalue(), meta)]
 
     return _map_rows(
-        df, [id_col, text_col], _payload_schema(id_col), row, widen="webdataset"
+        df, ["doc_id", "text"], _PAYLOAD_SCHEMA, row, widen="webdataset"
     )
 
 
@@ -3790,9 +3682,7 @@ def read_webdataset_members(payload: bytes) -> "dict[str, bytes]":
         raise ValueError(f"malformed WebDataset shard: {ex}")
 
 
-def parse_webdataset_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def parse_webdataset_features(df: DataFrame) -> DataFrame:
     """WebDataset-shard ingest via ``mapInPandas``: read the tar members
     (stdlib ``tarfile`` over the in-memory bytes), group by the sample
     key (basename before the first dot), decode the image member through
@@ -3822,7 +3712,7 @@ def parse_webdataset_features(
             samples.setdefault(key, {})[ext] = data
         return [sample(did, len(members), mods) for _, mods in sorted(samples.items())]
 
-    return _map_rows(df, [id_col, payload_col], WDS_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], WDS_FEATURES, row)
 
 
 #: ViT-style patch grid: one row per (doc, patch) with per-channel means
@@ -3838,14 +3728,9 @@ PATCH_FEATURES = T.StructType(
 )
 
 
-def patchify_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    patch: int = 4,
-) -> DataFrame:
+def patchify_features(df: DataFrame) -> DataFrame:
     """ViT preprocessing shape: decode each image and split it into a
-    non-overlapping ``patch``×``patch`` grid (dimensions must divide —
+    non-overlapping 4×4 grid (dimensions must divide —
     the resize op upstream owns padding policy), emitting one row per
     patch with per-channel means. Rows-out > rows-in through the Arrow
     iterator, zero shuffle — patch tokenization parallelizes with the
@@ -3857,20 +3742,16 @@ def patchify_features(
             return []
         img = decode_image(payload)
         h, w, _ = img.shape
-        if h % patch or w % patch:
-            raise ValueError(f"patchify needs dims divisible by {patch} (got {w}x{h})")
-        grid = (
-            img.astype(np.float64)
-            .reshape(h // patch, patch, w // patch, patch, 3)
-            .mean(axis=(1, 3))
-        )
+        if h % 4 or w % 4:
+            raise ValueError(f"patchify needs dims divisible by 4 (got {w}x{h})")
+        grid = img.astype(np.float64).reshape(h // 4, 4, w // 4, 4, 3).mean(axis=(1, 3))
         return [
             (did, py, px, *grid[py, px].tolist())
-            for py in range(h // patch)
-            for px in range(w // patch)
+            for py in range(h // 4)
+            for px in range(w // 4)
         ]
 
-    return _map_rows(df, [id_col, payload_col], PATCH_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], PATCH_FEATURES, row)
 
 
 #: (doc_id, frame_idx, r_sum, g_sum, b_sum) — per decoded frame
@@ -3885,38 +3766,27 @@ FRAME_CHANNEL_SCHEMA = T.StructType(
 )
 
 
-def attach_avi_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = 4,
-    width: int = 8,
-    height: int = 6,
-) -> DataFrame:
-    """Give every row a REAL compressed-video payload: ``n_frames``
+def attach_avi_payloads(df: DataFrame) -> DataFrame:
+    """Give every row a REAL compressed-video payload: :data:`AVI_FRAMES`
     md5-pixel frames (keyed ``id*16 + frame`` so the driver's DuckDB
     oracle re-derives every byte) coded as lossless JPEG (bit-exact, so
     the container round trip has zero latitude; the T.81 predictor
     rotates per frame) inside a RIFF/AVI MJPEG container."""
-    if n_frames > 16:
-        raise ValueError("n_frames > 16 would collide the id*16+frame keys")
-
     def row(did: int) -> "list[tuple]":
         frames = [
             encode_jpeg_lossless(
-                md5_pixels(did * 16 + f, width, height), predictor=1 + (did + f) % 7
+                md5_pixels(did * 16 + f, AVI_WIDTH, AVI_HEIGHT), predictor=1 + (did + f) % 7
             )
-            for f in range(n_frames)
+            for f in range(AVI_FRAMES)
         ]
-        return [(did, encode_avi_mjpeg(frames, width, height))]
+        return [(did, encode_avi_mjpeg(frames, AVI_WIDTH, AVI_HEIGHT))]
 
     return _map_rows(
-        df, [id_col], _payload_schema(id_col, media_meta=False), row, widen="avi"
+        df, ["doc_id"], _BARE_PAYLOAD_SCHEMA, row, widen="avi"
     )
 
 
-def decode_video_channel_sums(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def decode_video_channel_sums(df: DataFrame) -> DataFrame:
     """AVI payload column → one row per decoded frame with per-channel
     pixel sums (integer math — oracle-checkable exactly). Same Arrow-
     batched fan-out shape as :func:`sample_frames`."""
@@ -3930,7 +3800,7 @@ def decode_video_channel_sums(
             out.append((did, f_idx, int(s[0]), int(s[1]), int(s[2])))
         return out
 
-    return _map_rows(df, [id_col, payload_col], FRAME_CHANNEL_SCHEMA, row)
+    return _map_rows(df, ["doc_id", "payload"], FRAME_CHANNEL_SCHEMA, row)
 
 
 def frame_sad(frames: DataFrame) -> DataFrame:
@@ -3961,27 +3831,21 @@ def frame_sad(frames: DataFrame) -> DataFrame:
     return frames.groupBy("doc_id").applyInPandas(fn, schema=FRAME_SAD_SCHEMA)
 
 
-def image_channel_histogram(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    bins: int = 16,
-) -> DataFrame:
+def image_channel_histogram(df: DataFrame) -> DataFrame:
     """Per-channel intensity histogram rows — (id, channel, bin, cnt) with
-    ``bin = byte // (256 // bins)``. The decode runs in Arrow-batched
+    ``bin = byte // 16``. The decode runs in Arrow-batched
     mapInPandas (numpy bincount per channel); everything downstream of the
     histogram (entropy, contrast, exposure screens) stays in exact integer
     Spark SQL, so any engine that can reconstruct the bytes agrees
-    bit-for-bit. Row fan-out is a fixed ``3 * bins`` per image."""
+    bit-for-bit. Row fan-out is at most 48 rows (3 channels × 16 bins) per image."""
     out_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType(), False),
+            T.StructField("doc_id", T.LongType(), False),
             T.StructField("c", T.IntegerType(), True),
             T.StructField("bin", T.IntegerType(), True),
             T.StructField("cnt", T.LongType(), True),
         ]
     )
-    width = 256 // bins
 
     def row(did: int, p: bytes | None) -> "list[tuple]":
         if p is None:
@@ -3990,17 +3854,15 @@ def image_channel_histogram(
         out = []
         for c in range(img.shape[2]):
             counts = np.bincount(
-                (img[:, :, c].reshape(-1) // width).astype(np.int64), minlength=bins
+                (img[:, :, c].reshape(-1) // 16).astype(np.int64), minlength=16
             )
-            out.extend((did, c, b, int(counts[b])) for b in range(bins) if counts[b])
+            out.extend((did, c, b, int(counts[b])) for b in range(16) if counts[b])
         return out
 
-    return _map_rows(df, [id_col, payload_col], out_schema, row)
+    return _map_rows(df, ["doc_id", "payload"], out_schema, row)
 
 
-def attach_sitemap_warc_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_sitemap_warc_payloads(df: DataFrame) -> DataFrame:
     """WARC archives for the sitemap-discovery step (mm41): each holds
     a robots.txt response advertising two ``Sitemap:`` directives (the
     first MESSY — uppercase scheme/host, default port — so extraction
@@ -4026,32 +3888,32 @@ def attach_sitemap_warc_payloads(
                 f"<url><loc>HTTP://Example.COM:80/doc/{did}?b=2&amp;a=1#frag</loc></url>"
                 f"<url><loc>\n  http://example.com/a/../doc/{did}/x\n </loc></url>"
                 f"<url><loc>http://example.com/doc/%7Euser/{did}</loc></url>"
-                f"</urlset>"
+                "</urlset>"
             ).encode()
             return xml, [("Content-Type", "application/xml")]
         if v == 1:
             xml = (
                 f"<sitemapindex {ns}>"
                 f"<sitemap><loc>http://example.com/sm/{did}-1.xml</loc>"
-                f"<lastmod>2024-01-01</lastmod></sitemap>"
+                "<lastmod>2024-01-01</lastmod></sitemap>"
                 f"<sitemap><loc>http://example.com/sm/{did}-2.xml</loc></sitemap>"
-                f"</sitemapindex>"
+                "</sitemapindex>"
             ).encode()
             return xml, [("Content-Type", "application/xml")]
         if v == 2:
             xml = (
                 f"<urlset {ns}>"
                 f"<url><loc>http://example.com/doc/{did}/a</loc>"
-                f"<lastmod>2024-02-02</lastmod><changefreq>daily</changefreq>"
-                f"<priority>0.8</priority></url>"
+                "<lastmod>2024-02-02</lastmod><changefreq>daily</changefreq>"
+                "<priority>0.8</priority></url>"
                 f"<url><loc>http://example.com/doc/{did}/b</loc></url>"
-                f"</urlset>"
+                "</urlset>"
             ).encode()
             return xml, [("Content-Type", "application/xml")]
         xml = (
             f"<urlset {ns}><url>"
             f"<loc>http://example.com/doc/{did}?x=%7E&amp;y=2</loc>"
-            f"</url></urlset>"
+            "</url></urlset>"
         ).encode()
         co = _zlib.compressobj(6, _zlib.DEFLATED, 31)
         return co.compress(xml) + co.flush(), [
@@ -4079,7 +3941,7 @@ def attach_sitemap_warc_payloads(
         )
         return [(did, payload, meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="crawl")
 
 
 #: sitemap-discovery features (mm41)
@@ -4096,9 +3958,7 @@ SITEMAP_FEATURES = T.StructType(
 )
 
 
-def sitemap_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def sitemap_features(df: DataFrame) -> DataFrame:
     """Sitemap discovery (mm41): per archive, extract the robots.txt
     ``Sitemap:`` directives (:func:`..operators.sitemap.robots_sitemaps`
     — the robots record is identified by its ``/robots.txt`` target
@@ -4151,12 +4011,10 @@ def sitemap_features(
         md5 = _hashlib.md5("\x1f".join(locs).encode()).hexdigest()
         return [(*head, kind, len(locs), locs[0] if locs else None, md5)]
 
-    return _map_rows(df, [id_col, payload_col], SITEMAP_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], SITEMAP_FEATURES, row)
 
 
-def attach_revisit_warc_payloads(
-    df: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def attach_revisit_warc_payloads(df: DataFrame) -> DataFrame:
     """WARC archives exercising revisit records (mm42): docs form
     3-member duplicate groups ``g = doc_id // 30`` (members g*30,
     g*30+10, g*30+20 under the mm-family ``doc_id % 10 = 0`` filter)
@@ -4179,7 +4037,7 @@ def attach_revisit_warc_payloads(
             docs.append((did, body, leader))
         return [(did, encode_revisit_warc(docs, per_record_gzip=(did % 20 != 10)), meta)]
 
-    return _map_rows(df, [id_col], _payload_schema(id_col), row, widen="crawl")
+    return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="crawl")
 
 
 #: revisit-record features (mm42)
@@ -4195,9 +4053,7 @@ REVISIT_FEATURES = T.StructType(
 )
 
 
-def revisit_features(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
+def revisit_features(df: DataFrame) -> DataFrame:
     """Consume-side of WARC revisit dedup (mm42): resolve each
     archive's revisit records against the responses it holds
     (:func:`..operators.revisit.resolve_revisits`), locate THIS doc's
@@ -4233,4 +4089,4 @@ def revisit_features(
             )
         ]
 
-    return _map_rows(df, [id_col, payload_col], REVISIT_FEATURES, row)
+    return _map_rows(df, ["doc_id", "payload"], REVISIT_FEATURES, row)

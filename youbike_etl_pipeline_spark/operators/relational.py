@@ -24,13 +24,12 @@ def project(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(*columns)
 
 
-def rename_synonyms(df: DataFrame, mapping: dict[str, str] | None = None) -> DataFrame:
+def rename_synonyms(df: DataFrame) -> DataFrame:
     """Guarded synonym rename (P3): apply ``old → new`` only when ``old``
     exists and ``new`` is not already present, avoiding duplicate targets
     (reference ``notebooks/03_data_merge.ipynb:L56-L63``)."""
-    mapping = mapping or STATION_KEY_SYNONYMS
     out = df
-    for old, new in mapping.items():
+    for old, new in STATION_KEY_SYNONYMS.items():
         if old in out.columns and new not in out.columns:
             out = out.withColumnRenamed(old, new)
     return out
@@ -59,8 +58,8 @@ def distinct_pairs(df: DataFrame, columns: list[str]) -> DataFrame:
     return df.select(*columns).distinct()
 
 
-def coerce_numeric(df: DataFrame, columns: list[str], to: str = "double") -> DataFrame:
+def coerce_numeric(df: DataFrame, columns: list[str]) -> DataFrame:
     """``pd.to_numeric(errors='coerce')`` equivalent (P12): ``try_cast`` maps
     unparseable values to null instead of failing
     (reference ``notebooks/01_youbike_analysis.ipynb:L65``)."""
-    return df.withColumns({c: F.col(c).try_cast(to) for c in columns})
+    return df.withColumns({c: F.col(c).try_cast("double") for c in columns})

@@ -84,9 +84,7 @@ def _rid(doc_id: int) -> str:
 
 
 def encode_revisit_warc(
-    docs: "list[tuple[int, bytes, int | None]]",
-    per_record_gzip: bool = True,
-    date: str = "2024-01-01T00:00:00Z",
+    docs: "list[tuple[int, bytes, int | None]]", per_record_gzip: bool = True
 ) -> bytes:
     """(doc_id, body, refers_to_doc) triples → a WARC/1.0 archive where
     ``refers_to_doc is None`` emits a FULL response record (HTTP 200
@@ -102,7 +100,7 @@ def encode_revisit_warc(
         {"Content-Type": "application/warc-fields"},
         b"software: youbike-etl-pipeline-spark (revisit)\r\n",
         "00000000-0000-0000-0000-000000000000",
-        date,
+        "2024-01-01T00:00:00Z",
     )
     out.extend(_gz(info) if per_record_gzip else info)
     for doc_id, body, ref in docs:
@@ -122,7 +120,7 @@ def encode_revisit_warc(
                 },
                 http_head + body,
                 _rid(doc_id),
-                date,
+                "2024-01-01T00:00:00Z",
             )
         else:
             rec = _record(
@@ -134,13 +132,13 @@ def encode_revisit_warc(
                     "WARC-Refers-To-Target-URI": (
                         f"http://example.com/doc/{ref}"
                     ),
-                    "WARC-Refers-To-Date": date,
+                    "WARC-Refers-To-Date": "2024-01-01T00:00:00Z",
                     "WARC-Payload-Digest": digest,
                     "Content-Type": "application/http; msgtype=response",
                 },
                 http_head,  # headers as served; payload elided
                 _rid(doc_id)[:-1] + "3",
-                date,
+                "2024-01-01T00:00:00Z",
             )
         out.extend(_gz(rec) if per_record_gzip else rec)
     return bytes(out)

@@ -39,50 +39,36 @@ def _nonzero_norm(vec: Column) -> Column:
     return dot_product(vec, vec) > 0
 
 
-def cosine_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
     """Exact top-k by cosine similarity to a constant query vector.
     Ties broken by id ascending; executed as scan → per-partition top-k →
     driver-merged limit (no global sort)."""
-    scored = df.filter(_nonzero_norm(F.col(vec_col))).select(
-        F.col(id_col),
-        cosine_similarity(F.col(vec_col), _query_lit(query_vec)).alias("cosine"),
+    scored = df.filter(_nonzero_norm(F.col("embedding"))).select(
+        F.col("vec_id"),
+        cosine_similarity(F.col("embedding"), _query_lit(query_vec)).alias("cosine"),
     )
     if not any(float(x) * float(x) > 0 for x in query_vec):
         return scored.limit(0)  # zero query: cosine undefined for every row
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
-def cosine_topk_per_query(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def cosine_topk_per_query(df: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Batch variant: top-k per query row. Queries broadcast (they are the
     small side); ranking via per-query window."""
     from pyspark.sql import Window
 
-    crossed = df.filter(_nonzero_norm(F.col(vec_col))).crossJoin(
+    crossed = df.filter(_nonzero_norm(F.col("embedding"))).crossJoin(
         F.broadcast(
-            queries.filter(_nonzero_norm(F.col(query_vec_col))).select(
-                F.col(query_id_col), F.col(query_vec_col).alias("__qvec")
+            queries.filter(_nonzero_norm(F.col("embedding"))).select(
+                F.col("query_id"), F.col("embedding").alias("__qvec")
             )
         )
-    ).withColumn("cosine", cosine_similarity(F.col(vec_col), F.col("__qvec")))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    ).withColumn("cosine", cosine_similarity(F.col("embedding"), F.col("__qvec")))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         crossed.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rn").alias("rank"))
+        .select("query_id", "vec_id", "cosine", F.col("__rn").alias("rank"))
     )
 
 
@@ -117,8 +103,6 @@ def blas_fits(
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     method: str = "auto",
     max_broadcast_rows: int = MAX_BROADCAST_ROWS,
 ) -> DataFrame:
@@ -152,7 +136,7 @@ def embedding_near_dup_pairs(
     from pyspark.sql import types as _T
 
     integral_id = isinstance(
-        df.schema[id_col].dataType,
+        df.schema["vec_id"].dataType,
         (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType),
     )
     if method == "auto":
@@ -166,7 +150,7 @@ def embedding_near_dup_pairs(
                 method = "expr"
             else:
                 n = df.count()
-                first = df.select(F.size(vec_col).alias("d")).first()
+                first = df.select(F.size("embedding").alias("d")).first()
                 dim = int(first["d"]) if first is not None else 0
                 method = (
                     "blas" if blas_fits(n, dim, max_broadcast_rows) else "blocked"
@@ -176,15 +160,15 @@ def embedding_near_dup_pairs(
     if method in ("blas", "blocked") and not integral_id:
         raise TypeError(
             f"embedding_near_dup_pairs(method={method!r}) requires an "
-            f"integral {id_col!r} (ids ride int64 numpy arrays); use "
+            "integral 'vec_id' (ids ride int64 numpy arrays); use "
             "method='expr' for non-integral ids"
         )
-    df = df.filter(_nonzero_norm(F.col(vec_col)))
+    df = df.filter(_nonzero_norm(F.col("embedding")))
     if method == "blocked":
-        return _near_dup_pairs_blocked(df, threshold, vec_col, id_col)
+        return _near_dup_pairs_blocked(df, threshold)
     if method == "blas":
-        return _near_dup_pairs_blas(df, threshold, vec_col, id_col)
-    normed = df.select(F.col(id_col), normalize(F.col(vec_col)).alias("nvec"))
+        return _near_dup_pairs_blas(df, threshold)
+    normed = df.select(F.col("vec_id"), normalize(F.col("embedding")).alias("nvec"))
     a = normed.toDF("id_a", "vec_a")
     b = normed.toDF("id_b", "vec_b")
     pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
@@ -195,16 +179,14 @@ def embedding_near_dup_pairs(
     )
 
 
-def _near_dup_pairs_blas(
-    df: DataFrame, threshold: float, vec_col: str, id_col: str
-) -> DataFrame:
+def _near_dup_pairs_blas(df: DataFrame, threshold: float) -> DataFrame:
     """Arrow-batched blocked matmul: right matrix broadcast (must fit an
     executor, like any broadcast-join side), left side streamed — each batch
     is one ``A_norm @ B_norm.T`` with numpy/BLAS."""
     import numpy as np
     import pandas as pd
 
-    rows = df.select(id_col, vec_col).collect()
+    rows = df.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -215,8 +197,8 @@ def _near_dup_pairs_blas(
     def fn(batches):
         b_ids, b_mat = bc.value
         for pdf in batches:
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a_mat = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            a_mat = np.array([list(v) for v in pdf["embedding"]], dtype=np.float64)
             a_norms = np.linalg.norm(a_mat, axis=1, keepdims=True)
             a_norms[a_norms == 0] = 1.0
             sims = (a_mat / a_norms) @ b_mat.T
@@ -230,18 +212,12 @@ def _near_dup_pairs_blas(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select("vec_id", "embedding").mapInPandas(
         fn, schema="id_a long, id_b long, cosine double"
     )
 
 
-def _near_dup_pairs_blocked(
-    df: DataFrame,
-    threshold: float,
-    vec_col: str,
-    id_col: str,
-    n_blocks: int | None = None,
-) -> DataFrame:
+def _near_dup_pairs_blocked(df: DataFrame, threshold: float) -> DataFrame:
     """Distributed exact all-pairs: triangle block join, no driver collect.
 
     Rows hash into ``B`` blocks; each row is shipped to every block-pair it
@@ -254,9 +230,8 @@ def _near_dup_pairs_blocked(
     import numpy as np
     import pandas as pd
 
-    if n_blocks is None:
-        shuf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-        n_blocks = max(2, int(shuf**0.5))
+    shuf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_blocks = max(2, int(shuf**0.5))
     b = F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks))
     pairs_of = F.array(
         *[
@@ -267,7 +242,7 @@ def _near_dup_pairs_blocked(
         ]
     )
     exploded = (
-        df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"))
+        df.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__vec"))
         .withColumn("__own", b)
         .withColumn("__bp", F.explode(F.array_distinct(pairs_of)))
         .select("__id", "__vec", "__own", "__bp.bi", "__bp.bj")
@@ -346,9 +321,6 @@ def lsh_near_dup_pairs(
     dim: int,
     threshold: float = 0.9,
     bits: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     exact_dedup_first: bool = True,
 ) -> DataFrame:
     """Scale path for near-dup pairs: bucket by random-hyperplane LSH,
@@ -364,14 +336,16 @@ def lsh_near_dup_pairs(
     bit-for-bit, including the ``>= threshold`` edge), while a duplicate-
     heavy corpus stops paying occupancy² inside its hot buckets — the s6
     SemDeDup routing made code rather than a SCALING.md note."""
-    nz = df.filter(_nonzero_norm(F.col(vec_col)))
+    nz = df.filter(_nonzero_norm(F.col("embedding")))
     key = F.md5(
-        F.concat_ws(",", F.transform(F.col(vec_col), lambda x: x.cast("string")))
+        F.concat_ws(",", F.transform(F.col("embedding"), lambda x: x.cast("string")))
     )
-    nz, mapping = _exact_collapse(nz, id_col, key) if exact_dedup_first else (nz, None)
-    planes = _hyperplanes(dim, bits, seed)
+    nz, mapping = _exact_collapse(nz, "vec_id", key) if exact_dedup_first else (nz, None)
+    planes = _hyperplanes(dim, bits)
     bucketed = nz.select(
-        F.col(id_col), F.col(vec_col), lsh_bucket(F.col(vec_col), planes).alias("bucket")
+        F.col("vec_id"),
+        F.col("embedding"),
+        lsh_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     # both self-join sides reference `bucketed`; without materialization the
     # collapse semi-join AND the bits×dim hyperplane bucket expression
@@ -392,8 +366,8 @@ def lsh_near_dup_pairs(
     # copies pair at the self-cosine of the SAME expression (sqrt(n)·sqrt(n)
     # rounding), threshold-filtered like any other pair
     selfs = nz.select(
-        F.col(id_col).alias("__r"),
-        cosine_similarity(F.col(vec_col), F.col(vec_col)).alias("cosine"),
+        F.col("vec_id").alias("__r"),
+        cosine_similarity(F.col("embedding"), F.col("embedding")).alias("cosine"),
     ).filter(F.col("cosine") >= threshold)
     return _expand_collapsed_pairs(pairs, mapping, selfs)
 
@@ -401,14 +375,10 @@ def lsh_near_dup_pairs(
 def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
-    k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVF-style approximate top-k: partition vectors into KMeans cells
+    """IVF-style approximate top-10: partition vectors into KMeans cells
     (the inverted file), then scan only the ``n_probe`` cells whose
     centroids are most similar to the query.
 
@@ -420,20 +390,20 @@ def ivf_topk(
     """
     from ..ml.clustering import kmeans_cluster_embeddings
 
-    df = df.filter(_nonzero_norm(F.col(vec_col)))
+    df = df.filter(_nonzero_norm(F.col("embedding")))
     if not any(float(x) * float(x) > 0 for x in query_vec):
         return df.select(
-            F.col(id_col), F.lit(None).cast("double").alias("cosine")
+            F.col("vec_id"), F.lit(None).cast("double").alias("cosine")
         ).limit(0)
-    assignments = kmeans_cluster_embeddings(df, vec_col, id_col, k=n_centroids, seed=seed)
-    tagged = df.join(assignments, id_col)
+    assignments = kmeans_cluster_embeddings(df, k=n_centroids)
+    tagged = df.join(assignments, "vec_id")
     # centroid similarity to the query, computed on the tiny centroid set
     centroids = (
         tagged.groupBy("cluster")
         .agg(
             F.transform(
                 F.aggregate(
-                    F.collect_list(F.col(vec_col).cast("array<double>")),
+                    F.collect_list(F.col("embedding").cast("array<double>")),
                     F.array(*[F.lit(0.0) for _ in range(len(query_vec))]),
                     lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
                 ),
@@ -450,16 +420,12 @@ def ivf_topk(
     )
     candidates = tagged.join(F.broadcast(probe), "cluster")
     scored = candidates.select(
-        F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("cosine")
+        F.col("vec_id"), cosine_similarity(F.col("embedding"), q).alias("cosine")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(10)
 
 
-def quantize_int8(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of an embedding column — the standard
     storage/serving compression for ANN indexes (4x smaller than float32,
     SIMD-friendly dot products).
@@ -472,7 +438,7 @@ def quantize_int8(
     ``scale``, the quantized array, and exact-integer quality checksums
     (sum and sum-of-abs of codes) so a DuckDB oracle can verify the whole
     quantization bit-for-bit."""
-    x = F.col(vec_col)
+    x = F.col("embedding")
     absmax = F.array_max(F.transform(x, lambda v: F.abs(v.cast("double"))))
     scale = (absmax / F.lit(127.0)).alias("scale")
     q = F.when(absmax > 0, F.transform(
@@ -483,7 +449,7 @@ def quantize_int8(
         ),
     )).otherwise(F.transform(x, lambda v: F.lit(0)))
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         scale,
         q.alias("q"),
         F.aggregate(q, F.lit(0).cast("long"), lambda a, v: a + v).alias("q_sum"),
@@ -494,12 +460,8 @@ def quantize_int8(
 def knn_label_consistency(
     df: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
     ann_bits: int | None = None,
     dim: int | None = None,
-    seed: int = 42,
     exact_dedup_first: bool = False,
 ) -> DataFrame:
     """Cleanlab-style kNN label-consistency audit: for each vector, its
@@ -540,7 +502,7 @@ def knn_label_consistency(
     """
     from pyspark.sql import Window
 
-    nz = df.filter(_nonzero_norm(F.col(vec_col)))
+    nz = df.filter(_nonzero_norm(F.col("embedding")))
     if exact_dedup_first:
         # group on the (vector, label) COLUMN PAIR, not a string-concat
         # hash key: concat_ws(',') would let a label containing a comma
@@ -549,22 +511,22 @@ def knn_label_consistency(
         # collapse documents avoiding. Spark groups array columns by
         # value, which is exactly the oracle's GROUP BY embedding, label.
         reps = (
-            nz.groupBy(F.col(vec_col), F.col(label_col))
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
+            nz.groupBy(F.col("embedding"), F.col("label"))
+            .agg(F.min("vec_id").alias("vec_id"))
+            .select("vec_id")
         )
         # q and n below both reference nz — materialize so the collapse
         # groupBy + semi-join executes once, not per side
-        nz = materialize(nz.join(reps, id_col, "left_semi"))
+        nz = materialize(nz.join(reps, "vec_id", "left_semi"))
     q = nz.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.col(label_col).alias("qlabel"),
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qvec"),
+        F.col("label").alias("qlabel"),
     )
     n = nz.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("nvec"),
-        F.col(label_col).alias("nlabel"),
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").alias("nvec"),
+        F.col("label").alias("nlabel"),
     )
     if ann_bits is None:
         # The broadcast crossJoin multiplies each probe row by the whole
@@ -576,7 +538,7 @@ def knn_label_consistency(
     else:
         if dim is None:
             raise ValueError("ann_bits requires dim (hyperplane width)")
-        planes = _hyperplanes(dim, ann_bits, seed)
+        planes = _hyperplanes(dim, ann_bits)
         qb = q.withColumn("__bucket", lsh_bucket(F.col("qvec"), planes))
         nb = n.withColumn("__bucket", lsh_bucket(F.col("nvec"), planes))
         crossed = qb.join(nb, "__bucket").filter(F.col("qid") != F.col("nid"))
@@ -626,20 +588,13 @@ def knn_label_consistency(
 
 def jl_projection_audit(
     df: DataFrame,
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 7,
-    a_mod: int = 29,
-    b_mod: int = 31,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     hash_sample_mod: int | None | str = "auto",
     pair_budget: int = 20_000_000,
 ) -> DataFrame:
     """Johnson-Lindenstrauss distortion audit: project pair-difference
-    vectors onto ``n_planes`` seeded random directions and report the
+    vectors onto 8 seeded random directions and report the
     distribution of ``||P(a-b)||² / ||a-b||²`` over a deterministic pair
-    sample (ids ≡ 0 mod ``a_mod`` crossed with ids ≡ 0 mod ``b_mod``) —
+    sample (ids ≡ 0 mod 29 crossed with ids ≡ 0 mod 31) —
     the acceptance check before an embedding pipeline swaps full vectors
     for a cheap projection (dedup pre-filters, drift monitors).
 
@@ -657,9 +612,9 @@ def jl_projection_audit(
     Default ``"auto"`` (round-6 verdict: the knob must self-size) derives M
     from a cheap row count (parquet footers when ``df`` is a bare scan —
     zero Spark jobs — else one linear count; ``skew.cheap_row_count``) so
-    the sampled pair estimate ``n²/(a_mod·b_mod·M²)`` stays inside
+    the sampled pair estimate ``n²/(29·31·M²)`` stays inside
     ``pair_budget`` at ANY corpus scale (``skew.auto_sample_mod`` with
-    pair_fraction ``1/(a_mod·b_mod)``); realized pair work is flat in
+    pair_fraction ``1/(29·31)``); realized pair work is flat in
     ``[budget/4, budget]``. At the defaults anything under ~134k ids gets
     M=1 — the EXACT path, filter skipped, plan byte-identical to ``None``.
     Pass ``None`` to force exact at any size (the graded e6 contract) or an
@@ -667,7 +622,7 @@ def jl_projection_audit(
     """
     from ..operators.dedup import md5_token_hash64
 
-    planes = _hyperplanes(dim, n_planes, seed=seed)
+    planes = _hyperplanes(64, 8, seed=7)
     base = df
     if isinstance(hash_sample_mod, str):
         if hash_sample_mod != "auto":
@@ -678,7 +633,7 @@ def jl_projection_audit(
         hash_sample_mod = auto_sample_mod(
             cheap_row_count(base),
             pair_budget,
-            pair_fraction=1.0 / (a_mod * b_mod),
+            pair_fraction=1.0 / (29 * 31),
         )
     if hash_sample_mod is not None and int(hash_sample_mod) <= 1:
         # mod 1 keeps every row (pmod(h, 1) == 0 identically) — skip the
@@ -687,18 +642,18 @@ def jl_projection_audit(
     if hash_sample_mod is not None:
         base = base.filter(
             F.pmod(
-                md5_token_hash64(F.col(id_col).cast("string")).bitwiseAND(
+                md5_token_hash64(F.col("vec_id").cast("string")).bitwiseAND(
                     F.lit(2147483647)
                 ),
                 F.lit(int(hash_sample_mod)),
             )
             == 0
         )
-    a = base.filter(F.col(id_col) % a_mod == 0).select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
+    a = base.filter(F.col("vec_id") % 29 == 0).select(
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
     )
-    b = base.filter(F.col(id_col) % b_mod == 0).select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+    b = base.filter(F.col("vec_id") % 31 == 0).select(
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
     )
     pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
     dvec = F.zip_with(

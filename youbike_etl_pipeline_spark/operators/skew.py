@@ -39,10 +39,10 @@ def _byte_conf(spark, key: str, default: int) -> int:
         return default
 
 
-def with_salt(df: DataFrame, n_salts: int = 16, salt_col: str = "__salt") -> DataFrame:
+def with_salt(df: DataFrame, n_salts: int = 16) -> DataFrame:
     """Uniform random salt in [0, n_salts) — used to split a hot key's rows
     across ``n_salts`` reducers."""
-    return df.withColumn(salt_col, (F.rand(seed=42) * n_salts).cast("int"))
+    return df.withColumn("__salt", (F.rand(seed=42) * n_salts).cast("int"))
 
 
 def salted_group_agg(
@@ -101,10 +101,7 @@ def salted_join(
 
 
 def widen_narrow_scan(
-    df: DataFrame,
-    target: int | None = None,
-    rows_per_task: int | None = None,
-    min_tasks: int = 4,
+    df: DataFrame, target: int | None = None, rows_per_task: int | None = None
 ) -> DataFrame:
     """Round-robin repartition immediately after a NARROW scan, before
     expensive per-row work (tokenize + per-shingle md5, codec decode, …).
@@ -130,7 +127,7 @@ def widen_narrow_scan(
     amortize ONE task of the downstream work (≈ 0.1 s of per-row cost —
     measured per codec family, see ``multimodal._WIDEN_RPT``). With ``rows``
     read from the parquet FOOTERS of the scan's input files (no Spark job),
-    ``ceil(rows / rows_per_task)`` under ``min_tasks`` means the downstream
+    ``ceil(rows / rows_per_task)`` under 4 means the downstream
     map is comparable to the shuffle's fixed cost and the input is left
     alone; otherwise that count, clamped to ``target``, is the wanted width.
     Callers that cannot state a per-row cost (``rows_per_task=None``) widen
@@ -179,9 +176,9 @@ def widen_narrow_scan(
     wanted = tgt
     if rows_per_task is not None and rows is not None:
         # gate on the work before clamping to the cluster width, so a
-        # cluster narrower than ``min_tasks`` still widens heavy inputs
+        # cluster narrower than 4 tasks still widens heavy inputs
         wanted = -(-rows // rows_per_task)
-        if wanted < min_tasks:
+        if wanted < 4:
             return df
         wanted = min(tgt, wanted)
     if width >= wanted:
@@ -251,20 +248,17 @@ def release_materialized(spark) -> None:
             rdd.unpersist(True)
 
 
-def quantile_buckets(
-    df: DataFrame, col: str, n_buckets: int | None = None
-) -> tuple[DataFrame, Column, int]:
+def quantile_buckets(df: DataFrame, col: str) -> tuple[DataFrame, Column, int]:
     """Range buckets on numeric ``col`` for parallel windows over an
     ordered domain: ``(materialized df, bucket Column, cut count)``. The
     cuts are the deduped approximate ``1/n_buckets``-quantiles of ``col``
     (error 0.001; each an actual value); a value's bucket is the number of
-    cuts ``≤`` it. ``n_buckets`` defaults to
-    ``spark.sql.shuffle.partitions``. ``df`` is materialized first because
-    ``approxQuantile`` is its own action: otherwise the subtree runs once
-    for the sketch and again in the query. The Column names ``col``, so it
+    cuts ``≤`` it. ``n_buckets`` is ``spark.sql.shuffle.partitions``.
+    ``df`` is materialized first because ``approxQuantile`` is its own
+    action: otherwise the subtree runs once for the sketch and again in
+    the query. The Column names ``col``, so it
     buckets any frame carrying that column."""
-    if n_buckets is None:
-        n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     df = materialize(df)
     probs = [i / n_buckets for i in range(1, n_buckets)]
     cuts = sorted(set(df.stat.approxQuantile(col, probs, 0.001))) if probs else []
@@ -360,12 +354,7 @@ def auto_sample_mod(
     return int(math.ceil(n_rows / target))
 
 
-def repartition_for_rows(
-    df: DataFrame,
-    est_rows: int,
-    *cols: str,
-    rows_per_partition: int = 2_000_000,
-) -> DataFrame:
+def repartition_for_rows(df: DataFrame, est_rows: int, *cols: str) -> DataFrame:
     """Size shuffle partitioning to an estimated ROW COUNT — the spill
     guard for plans whose intermediate dwarfs what the session's fixed
     ``spark.sql.shuffle.partitions`` was tuned for (AQE coalesces small
@@ -375,7 +364,7 @@ def repartition_for_rows(
     No-op (returns ``df`` unchanged, identical plan) when the estimate
     fits the session default — graded small-scale plans are untouched.
     When it kicks in, the result is hash-partitioned on ``cols`` with
-    ``ceil(est_rows / rows_per_partition)`` partitions; a following
+    ``ceil(est_rows / 2_000_000)`` partitions; a following
     sort-merge join on those keys reuses the partitioning and pulls its
     other side to the same count, so the widened layout propagates
     through the join instead of adding an extra exchange.
@@ -386,7 +375,7 @@ def repartition_for_rows(
     """
     spark = df.sparkSession
     shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_part = max(shuf, int(est_rows) // int(rows_per_partition) + 1)
+    n_part = max(shuf, int(est_rows) // 2_000_000 + 1)
     if n_part <= shuf:
         return df
     return df.repartition(n_part, *[F.col(c) for c in cols]) if cols else df.repartition(n_part)

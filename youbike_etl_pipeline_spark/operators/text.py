@@ -46,17 +46,16 @@ def marker_count(text: Column, word: str) -> Column:
     return F.size(F.filter(toks, lambda t: t == word))
 
 
-def lang_id(text: Column, markers: dict[str, list[str]] | None = None) -> Column:
+def lang_id(text: Column) -> Column:
     """Heuristic language ID: score = total marker-word hits per language,
     arg-max with deterministic tie-break (language code ascending); 'und'
     when no marker hits. CJK characters short-circuit to 'zh'."""
-    markers = markers or LANG_MARKERS
     # null-safe: a NULL text must land in 'und' through the normal path —
     # without this, every marker score is NULL and the arg-max fold's
     # three-valued logic diverges from the SQL mirror's CASE chain
     text = F.coalesce(text, F.lit(""))
     scores: list[tuple[str, Column]] = []
-    for lang, words in sorted(markers.items()):
+    for lang, words in sorted(LANG_MARKERS.items()):
         score = None
         for w in words:
             c = marker_count(text, w)
@@ -104,7 +103,7 @@ def quality_score(text: Column) -> Column:
     return (length_term + punct_term + stop_term) / 3.0
 
 
-def char_fingerprint(text: Column, modulus: int = 1_000_000_007) -> Column:
+def char_fingerprint(text: Column) -> Column:
     """Position-weighted character fingerprint: Σ (pos+1)·ascii(char) mod m,
     over the printable-ASCII projection of the text.
 
@@ -114,16 +113,15 @@ def char_fingerprint(text: Column, modulus: int = 1_000_000_007) -> Column:
     clusters, so combining accents or CJK shift every later position. The
     ASCII projection makes the character sequence, and therefore the
     fingerprint, engine- and seed-independent. A SQL-portable
-    simplification of a polynomial rolling hash (the full-strength
-    per-shingle variant is :func:`shingle_hashes`, built on xxhash64)."""
+    simplification of a polynomial rolling hash."""
     clean = F.regexp_replace(text, "[^ -~]", "")
     chars = F.split(clean, "")
     weighted = F.transform(chars, lambda ch, i: (i + 1) * F.ascii(ch))
-    return F.aggregate(weighted, F.lit(0).cast("long"), lambda acc, x: acc + x) % modulus
+    return F.aggregate(weighted, F.lit(0).cast("long"), lambda acc, x: acc + x) % 1_000_000_007
 
 
-def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
-    """Distinct word k-grams from an already-materialized token array.
+def word_shingles_from_tokens(toks: Column) -> Column:
+    """Distinct word 3-grams from an already-materialized token array.
 
     ``toks`` MUST be a plain column reference (``F.col``) to a projected
     token array, not an inline ``tokens(text)`` expression: sub-expressions
@@ -131,6 +129,7 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     lambda invocation (no CSE inside interpreted lambdas), which turns the
     shingle build O(n²·tokenize) — measured 3-5× slower end-to-end. With a
     reference, each ``element_at`` is an O(1) read of the row's array."""
+    k = 3
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
     grams = F.transform(
@@ -138,22 +137,6 @@ def word_shingles_from_tokens(toks: Column, k: int = 3) -> Column:
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)]),
     )
     return F.array_distinct(F.when(n >= k, grams).otherwise(F.array()))
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-grams as an array column (dedup/minhash input).
-    Convenience form; hot paths should project ``tokens(text)`` to a column
-    first and call :func:`word_shingles_from_tokens` (see its warning)."""
-    return word_shingles_from_tokens(tokens(text), k)
-
-
-def shingle_hashes(text: Column, k: int = 3, hash_fn=None) -> Column:
-    """64-bit hashes of the distinct word k-shingles — the rolling-hash
-    fingerprint set used by MinHash. ``hash_fn`` maps a shingle Column to
-    a 64-bit hash Column (default xxhash64; pass the md5-portable hash for
-    cross-engine parity paths)."""
-    token_hash = hash_fn or F.xxhash64
-    return F.transform(word_shingles(text, k), lambda s: token_hash(s))
 
 
 def normalize_text(text: Column) -> Column:
@@ -165,13 +148,7 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.lower(squashed))
 
 
-def chunk_spans(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 512,
-    stride: int = 448,
-) -> DataFrame:
+def chunk_spans(df: DataFrame, window: int = 512, stride: int = 448) -> DataFrame:
     """Sliding context-window chunking: one output row per (doc, chunk),
     with token-index bounds ``[start_tok, end_tok)`` — the standard
     pretraining tokenize→window step (stride < window ⇒ overlap).
@@ -184,7 +161,7 @@ def chunk_spans(
     n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
         F.ceil(F.greatest(n - window, F.lit(0)) / F.lit(stride)).cast("int") + 1
     )
-    toks_df = df.select(F.col(id_col), token_count(F.col(text_col)).alias("__n_tok"))
+    toks_df = df.select(F.col("doc_id"), token_count(F.col("text")).alias("__n_tok"))
     # guard the sequence: Spark's sequence(1, 0) yields a DESCENDING [1, 0],
     # not an empty array, so 0-chunk (empty) docs must short-circuit
     starts = F.when(
@@ -192,40 +169,30 @@ def chunk_spans(
         F.transform(F.sequence(F.lit(1), n_chunks), lambda i: (i - 1) * stride),
     ).otherwise(F.array().cast("array<int>"))
     return toks_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_tokens"),
         F.posexplode(starts).alias("chunk_idx", "start_tok"),
     ).withColumn("end_tok", F.least(F.col("start_tok") + window, F.col("n_tokens")))
 
 
-def vocab_topk(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 50,
-) -> DataFrame:
+def vocab_topk(df: DataFrame, k: int = 50) -> DataFrame:
     """Corpus vocabulary: top-k whitespace tokens by total frequency with
     document frequency — the vocabulary-building / OOV-analysis primitive.
     One explode + one hash aggregation on the token (classic word-count;
     map-side partial aggregation keeps the shuffle at |vocab|, not
     |tokens|); top-k via ``TakeOrderedAndProject``. Deterministic order:
     count desc, token asc."""
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
     counts = tok.groupBy("tok").agg(
         F.count(F.lit(1)).alias("tf"),
-        F.countDistinct(id_col).alias("df"),
+        F.countDistinct("doc_id").alias("df"),
     )
     return counts.orderBy(F.col("tf").desc(), F.col("tok").asc()).limit(k)
 
 
-def zipf_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_n: int = 200,
-) -> DataFrame:
+def zipf_fit(df: DataFrame) -> DataFrame:
     """Zipf's-law fit over the corpus vocabulary: OLS of ln(frequency) on
-    ln(rank) for the top-``top_n`` tokens — the "does this corpus have a
+    ln(rank) for the top-200 tokens — the "does this corpus have a
     natural frequency distribution" diagnostic (a machine-generated or
     template-heavy corpus shows a flattened slope / poor R², which makes
     this a standard pre-training corpus-health check alongside quality
@@ -234,15 +201,15 @@ def zipf_fit(
     Shape: the word count is one explode + one hash aggregation (shuffle
     bounded at |vocab| by map-side combine), top-n via
     ``TakeOrderedAndProject``; the rank window and the OLS sufficient sums
-    then run over the ``top_n``-row frame only (m14's accepted
+    then run over the 200-row frame only (m14's accepted
     single-partition-on-a-tiny-frame pattern). Both LN transforms are 6-dp
     floor-quantized into integers, so every sufficient sum is exact and
     the slope/intercept/R² formulas apply once to identical integers on
     both engines.
     """
-    tok = df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+    tok = df.select(F.explode(tokens(F.col("text"))).alias("tok"))
     counts = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
-    topn = counts.orderBy(F.col("tf").desc(), F.col("tok").asc()).limit(top_n)
+    topn = counts.orderBy(F.col("tf").desc(), F.col("tok").asc()).limit(200)
     w = Window.orderBy(F.col("tf").desc(), F.col("tok").asc())
     pts = topn.select(
         F.floor(F.ln(F.row_number().over(w)) * 1000000).cast("long").alias("xi"),
@@ -274,20 +241,16 @@ def zipf_fit(
     )
 
 
-def tfidf_top_term(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_term(df: DataFrame) -> DataFrame:
     """Per-document top TF-IDF term: tf(t,d) · ln((N+1)/(df(t)+1)), ties
     broken by term asc. Two hash aggregations (token stats, then argmax per
     doc) and one broadcast of the scalar N — no quadratic blowup; df(t) is
     corpus-global so the token aggregation is the only big shuffle. Scores
     rounded to 6 (ln's last-ulp is engine-dependent)."""
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
-    tf = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
+    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.select(F.countDistinct(id_col)).collect()[0][0]
+    n_docs = df.select(F.countDistinct("doc_id")).collect()[0][0]
     scored = tf.join(dfreq, "tok").withColumn(
         "score",
         F.round(
@@ -296,27 +259,21 @@ def tfidf_top_term(
     )
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("tok").asc())
+    w = W.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("tok").asc())
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select(id_col, F.col("tok").alias("top_term"), "score")
+        .select("doc_id", F.col("tok").alias("top_term"), "score")
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    capacity: int = 2048,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    len_col: str = "n_tok",
-) -> DataFrame:
-    """Greedy sequence packing: within each group, walk docs in ``id_col``
-    order and append each to the current bin unless it would overflow
-    ``capacity``, in which case a new bin starts — the standard pretraining
-    batch-packing step (maximize tokens per fixed-size context, preserve
-    document order). Docs longer than ``capacity`` occupy a bin alone,
-    truncated to ``capacity`` tokens.
+def pack_sequences(df: DataFrame) -> DataFrame:
+    """Greedy sequence packing: within each ``lang`` group, walk docs in ``doc_id``
+    order and append each to the current bin unless it would overflow the
+    2048-token capacity, in which case a new bin starts — the standard
+    pretraining batch-packing step (maximize tokens per fixed-size context,
+    preserve document order). Docs longer than the capacity occupy a bin
+    alone, truncated to 2048 tokens.
 
     The scan order makes this inherently sequential PER GROUP, so it runs
     as ``applyInPandas`` (one shuffle on the group key, then a linear
@@ -329,18 +286,18 @@ def pack_sequences(
     import pandas as pd
 
     out_schema = (
-        f"{group_col} string, {id_col} long, used_tok long, "
+        "lang string, doc_id long, used_tok long, "
         "bin_idx long, offset_in_bin long"
     )
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(id_col)
+        pdf = pdf.sort_values("doc_id")
         bins, offsets, used = [], [], []
         bin_idx, fill = 0, 0
         first = True
-        for n in pdf[len_col]:
-            u = min(int(n), capacity)
-            if not first and fill + u > capacity:
+        for n in pdf["n_tok"]:
+            u = min(int(n), 2048)
+            if not first and fill + u > 2048:
                 bin_idx += 1
                 fill = 0
             first = False
@@ -350,8 +307,8 @@ def pack_sequences(
             fill += u
         return pd.DataFrame(
             {
-                group_col: pdf[group_col],
-                id_col: pdf[id_col],
+                "lang": pdf["lang"],
+                "doc_id": pdf["doc_id"],
                 "used_tok": used,
                 "bin_idx": bins,
                 "offset_in_bin": offsets,
@@ -359,49 +316,43 @@ def pack_sequences(
         )
 
     return (
-        df.select(group_col, id_col, F.col(len_col))
-        .groupBy(group_col)
+        df.select("lang", "doc_id", F.col("n_tok"))
+        .groupBy("lang")
         .applyInPandas(pack, schema=out_schema)
     )
 
 
-def mixture_resample(
-    df: DataFrame,
-    weights: dict[str, tuple[int, int]],
-    group_col: str = "lang",
-    id_col: str = "doc_id",
-    resolution: int = 10000,
-) -> DataFrame:
-    """Deterministic domain-mixture resampling: downsample each group so the
+def mixture_resample(df: DataFrame, weights: dict[str, tuple[int, int]]) -> DataFrame:
+    """Deterministic domain-mixture resampling: downsample each ``lang`` group so the
     kept corpus approaches the target mixture ``weights`` (rational
     ``num/den`` shares per group) — the data-mixing step in front of
     pretraining.
 
     Per group, the acceptance threshold is
-    ``min(resolution, floor(resolution·num·N_total / (den·N_group)))`` and
+    ``min(10⁴, floor(10⁴·num·N_total / (den·N_group)))`` and
     a doc is kept when its Lehmer hash bucket (``(id mod 2³¹)·48271 mod
-    (2³¹−1) mod resolution`` — the same portable splitter as the
+    (2³¹−1) mod 10⁴`` — the same portable splitter as the
     train/val/test op) falls below it. All-integer arithmetic end-to-end,
     so the selection is reproducible across engines, runs, and partitions
     — no RNG, no sampleBy. Groups under-represented vs their target keep
-    everything (threshold caps at ``resolution``); a group absent from
+    everything (threshold caps at 10⁴); a group absent from
     ``weights`` is dropped. Two scans collapsed by a broadcast of the tiny
     per-group count table."""
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__n_grp"))
+    counts = df.groupBy("lang").agg(F.count(F.lit(1)).alias("__n_grp"))
     total = df.count()
     wmap = F.create_map(
         *[F.lit(x) for kv in weights.items() for x in (kv[0], kv[1][0] * 1_000_000 + kv[1][1])]
     )
-    packed = wmap[F.col(group_col)]
+    packed = wmap[F.col("lang")]
     num = (packed / 1_000_000).cast("long")
     den = (packed % 1_000_000).cast("long")
     thresh = F.least(
-        F.lit(resolution).cast("long"),
-        F.expr(f"CAST({resolution} AS BIGINT) * __num * {total} div (__den * __n_grp)"),
+        F.lit(10000).cast("long"),
+        F.expr(f"CAST(10000 AS BIGINT) * __num * {total} div (__den * __n_grp)"),
     )
-    bucket = (F.col(id_col) % F.lit(2**31)) * 48271 % F.lit(2**31 - 1) % resolution
+    bucket = (F.col("doc_id") % F.lit(2**31)) * 48271 % F.lit(2**31 - 1) % 10000
     return (
-        df.join(F.broadcast(counts), group_col)
+        df.join(F.broadcast(counts), "lang")
         .withColumn("__num", num)
         .withColumn("__den", den)
         .filter(F.col("__num").isNotNull())
@@ -548,25 +499,19 @@ BYTE_BPE_MERGES: tuple[tuple[str, str], ...] = (
 BYTE_PRETOKEN_RE = "[一-鿿]|[^\\s一-鿿]+"
 
 
-def byte_bpe_apply(
-    word: str, merges: "tuple[tuple[str, str], ...]" = BYTE_BPE_MERGES
-) -> list[str]:
+def byte_bpe_apply(word: str) -> list[str]:
     """GPT-2-style byte-level BPE over one pretoken: the word's UTF-8
     octets (as two-hex-digit symbols) run the same lowest-rank-first
     merge loop as :func:`bpe_apply`. Every Unicode string tokenizes —
     nothing falls outside the base alphabet of 256 octets, the property
     that made byte-level the production default."""
     return bpe_apply_symbols(
-        ["%02X" % b for b in word.encode("utf-8")], merges
+        ["%02X" % b for b in word.encode("utf-8")], BYTE_BPE_MERGES
     )
 
 
 def byte_bpe_token_stats(
-    df: DataFrame,
-    merges: "tuple[tuple[str, str], ...]" = BYTE_BPE_MERGES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    pretoken_re: str = BYTE_PRETOKEN_RE,
+    df: DataFrame, text_col: str = "text", pretoken_re: str = BYTE_PRETOKEN_RE
 ) -> DataFrame:
     """Per-document byte-level BPE statistics — the t50 distinct-word
     collapse-first route generalized past ``[a-z]+``: pretokens are
@@ -599,7 +544,7 @@ def byte_bpe_token_stats(
     import pandas as pd
 
     pretoks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.regexp_extract_all(F.col(text_col), F.lit(pretoken_re), 0)
         ).alias("w"),
@@ -607,7 +552,7 @@ def byte_bpe_token_stats(
 
     def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         for pdf in batches:
-            toks = [byte_bpe_apply(w, merges) for w in pdf["w"]]
+            toks = [byte_bpe_apply(w) for w in pdf["w"]]
             yield pd.DataFrame(
                 {
                     "w": pdf["w"],
@@ -624,7 +569,7 @@ def byte_bpe_token_stats(
         .distinct()
         .mapInPandas(fn, "w string, n_tok bigint, n_byt bigint")
     )
-    out = pretoks.join(F.broadcast(vocab), "w").groupBy(id_col).agg(
+    out = pretoks.join(F.broadcast(vocab), "w").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_pretok"),
         F.sum("n_tok").alias("n_tokens"),
         F.sum("n_byt").alias("n_bytes"),
@@ -635,13 +580,7 @@ def byte_bpe_token_stats(
     )
 
 
-def bpe_token_stats(
-    df: DataFrame,
-    merges: "tuple[tuple[str, str], ...]" = BPE_MERGES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    carry_cols: "tuple[str, ...]" = (),
-) -> DataFrame:
+def bpe_token_stats(df: DataFrame, carry_cols: "tuple[str, ...]" = ()) -> DataFrame:
     """Per-document BPE token statistics via the distinct-word route:
     words are the ``[a-z]+`` runs of the lowercased text (JVM-side
     regexp, codegen); each DISTINCT word is tokenized ONCE in an
@@ -668,10 +607,10 @@ def bpe_token_stats(
     import pandas as pd
 
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in carry_cols],
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z]+"), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
         ).alias("w"),
     )
 
@@ -681,7 +620,7 @@ def bpe_token_stats(
                 {
                     "w": pdf["w"],
                     "n_tok": pd.array(
-                        [len(bpe_apply(w, merges)) for w in pdf["w"]],
+                        [len(bpe_apply(w)) for w in pdf["w"]],
                         dtype="Int64",
                     ),
                 }
@@ -692,7 +631,7 @@ def bpe_token_stats(
     )
     # carry_cols are functionally dependent on the doc id (e.g. source),
     # so adding them to the grouping keys changes nothing but the schema
-    out = words.join(F.broadcast(vocab), "w").groupBy(id_col, *carry_cols).agg(
+    out = words.join(F.broadcast(vocab), "w").groupBy("doc_id", *carry_cols).agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum("n_tok").alias("n_tokens"),
     )

@@ -37,30 +37,33 @@ import zlib
 _MAX_ARCHIVE_BYTES = 4 << 30
 
 
+def _inflate_capped(out: bytearray, d, data: bytes, max_bytes: int, label: str) -> None:
+    """Append ``data`` decompressed through ``d`` to ``out``, refusing to
+    let ``out`` grow past ``max_bytes`` (decompression-bomb guard — the
+    overflow is detected incrementally, never materialized). ``label``
+    names the input in the ``ValueError``; ``zlib.error`` propagates."""
+    out.extend(d.decompress(data, max(1, max_bytes - len(out))))
+    while d.unconsumed_tail:
+        if len(out) >= max_bytes:
+            raise ValueError(f"{label} expands past {max_bytes} bytes")
+        out.extend(d.decompress(d.unconsumed_tail, max(1, max_bytes - len(out))))
+    out.extend(d.flush())
+    if len(out) > max_bytes:
+        raise ValueError(f"{label} expands past {max_bytes} bytes")
+
+
 def _gunzip_members(payload: bytes, max_bytes: int = _MAX_ARCHIVE_BYTES) -> bytes:
     """Decompress a concatenation of gzip members (the Common Crawl
     per-record layout) into one plain buffer, refusing archives that
-    expand past ``max_bytes`` (decompression-bomb guard — the overflow
-    is detected incrementally, never materialized)."""
+    expand past ``max_bytes`` (:func:`_inflate_capped`)."""
     out = bytearray()
     rest = payload
     while rest:
         d = zlib.decompressobj(wbits=47)  # gzip or zlib header
         try:
-            out.extend(d.decompress(rest, max(1, max_bytes - len(out))))
-            while d.unconsumed_tail:
-                if len(out) >= max_bytes:
-                    raise ValueError(
-                        f"WARC archive expands past {max_bytes} bytes"
-                    )
-                out.extend(
-                    d.decompress(d.unconsumed_tail, max(1, max_bytes - len(out)))
-                )
-            out.extend(d.flush())
+            _inflate_capped(out, d, rest, max_bytes, "WARC archive")
         except zlib.error as ex:
             raise ValueError(f"WARC gzip member corrupt: {ex}")
-        if len(out) > max_bytes:
-            raise ValueError(f"WARC archive expands past {max_bytes} bytes")
         if not d.eof:
             raise ValueError("truncated WARC gzip member")
         if d.unused_data == rest:
@@ -249,7 +252,7 @@ def inflate_http_body(
     on the wire, but a notorious population of servers sends RAW
     deflate — both are accepted (zlib first, raw retry), matching what
     every production crawl client does. Decompression is bomb-capped
-    incrementally like :func:`_gunzip_members`; truncated streams and
+    (:func:`_inflate_capped`); truncated streams and
     trailing garbage raise ``ValueError``."""
     if coding in ("gzip", "x-gzip"):
         attempts: tuple[int, ...] = (31,)
@@ -262,23 +265,10 @@ def inflate_http_body(
         d = zlib.decompressobj(wbits=wbits)
         out = bytearray()
         try:
-            out.extend(d.decompress(body, max(1, max_bytes - len(out))))
-            while d.unconsumed_tail:
-                if len(out) >= max_bytes:
-                    raise ValueError(
-                        f"HTTP body expands past {max_bytes} bytes"
-                    )
-                out.extend(
-                    d.decompress(
-                        d.unconsumed_tail, max(1, max_bytes - len(out))
-                    )
-                )
-            out.extend(d.flush())
+            _inflate_capped(out, d, body, max_bytes, "HTTP body")
         except zlib.error as ex:
             last_error = ex
             continue
-        if len(out) > max_bytes:
-            raise ValueError(f"HTTP body expands past {max_bytes} bytes")
         if not d.eof:
             raise ValueError(f"truncated {coding} HTTP body")
         if d.unused_data:
@@ -287,9 +277,7 @@ def inflate_http_body(
     raise ValueError(f"corrupt {coding} HTTP body: {last_error}")
 
 
-def http_decode_body(
-    headers: dict, body: bytes, max_bytes: int = _MAX_HTTP_BODY_BYTES
-) -> bytes:
+def http_decode_body(headers: dict, body: bytes) -> bytes:
     """Undo ``Transfer-Encoding`` then ``Content-Encoding`` (RFC 7230
     §3.3.1: transfer codings are applied by the sender LAST, so the
     receiver removes them first; within each header the codings are
@@ -312,14 +300,14 @@ def http_decode_body(
         if coding == "chunked":
             body = dechunk_http_body(body)
         elif coding in ("gzip", "x-gzip", "deflate"):
-            body = inflate_http_body(body, coding, max_bytes)
+            body = inflate_http_body(body, coding)
         else:
             raise ValueError(f"unsupported HTTP transfer-coding {coding!r}")
     for coding in reversed(codings("content-encoding")):
         if coding == "identity":
             continue
         if coding in ("gzip", "x-gzip", "deflate"):
-            body = inflate_http_body(body, coding, max_bytes)
+            body = inflate_http_body(body, coding)
         else:
             raise ValueError(f"unsupported HTTP content-coding {coding!r}")
     return body
@@ -378,7 +366,7 @@ def encode_http_payload(
     raise ValueError(f"unknown HTTP payload mode {mode!r}")
 
 
-def http_charset(headers: dict, body: bytes, default: str = "utf-8") -> str:
+def http_charset(headers: dict, body: bytes) -> str:
     """Charset resolution the way crawl pipelines actually do it:
     the Content-Type ``charset=`` parameter wins, then a Unicode BOM,
     then the default. Returns a Python codec name."""
@@ -391,7 +379,7 @@ def http_charset(headers: dict, body: bytes, default: str = "utf-8") -> str:
         return "utf-8-sig"
     if body[:2] in (b"\xff\xfe", b"\xfe\xff"):
         return "utf-16"
-    return default
+    return "utf-8"
 
 
 def _remove_dot_segments(path: str) -> str:
@@ -596,12 +584,7 @@ def messy_fixture_url(doc_id: int) -> str:
     return f"HTTPS://example.com/a/../doc/./{doc_id}"
 
 
-def encode_wet(
-    docs: "list[tuple[int, str]]",
-    per_record_gzip: bool = True,
-    date: str = "2024-01-01T00:00:00Z",
-    uris: "list[str] | None" = None,
-) -> bytes:
+def encode_wet(docs: "list[tuple[int, str]]", per_record_gzip: bool = True) -> bytes:
     """(doc_id, extracted text) pairs → a WET file: the Common Crawl
     EXTRACTED-TEXT companion format — a WARC/1.0 archive of
     ``conversion`` records (ISO 28500 §6.8) whose blocks are the plain
@@ -616,7 +599,7 @@ def encode_wet(
             b"WARC/1.0",
             b"WARC-Type: conversion",
             b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">",
-            b"WARC-Date: " + date.encode(),
+            b"WARC-Date: 2024-01-01T00:00:00Z",
         ]
         for k, v in extra.items():
             head.append(f"{k}: {v}".encode())
@@ -630,17 +613,16 @@ def encode_wet(
     info = (
         b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
         b"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-00000000000e>\r\n"
-        b"WARC-Date: " + date.encode() + b"\r\n"
+        b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
         b"Content-Type: application/warc-fields\r\n"
         b"Content-Length: 44\r\n\r\n"
         b"software: youbike-etl-pipeline-spark (wet)\r\n\r\n\r\n"
     )
     out = bytearray(gz(info) if per_record_gzip else info)
-    for i, (doc_id, text) in enumerate(docs):
-        uri = uris[i] if uris is not None else f"http://example.com/doc/{doc_id}"
+    for doc_id, text in docs:
         rec = record(
             {
-                "WARC-Target-URI": uri,
+                "WARC-Target-URI": f"http://example.com/doc/{doc_id}",
                 "WARC-Refers-To": (
                     f"<urn:uuid:{doc_id:08x}-0000-0000-0000-000000000002>"
                 ),
@@ -705,7 +687,6 @@ def status_fixture_message(doc_id: int, location_301: str) -> "bytes | None":
 def encode_warc(
     docs: "list[tuple[int, bytes]]",
     per_record_gzip: bool = True,
-    date: str = "2024-01-01T00:00:00Z",
     uris: "list[str] | None" = None,
     content_types: "list[str] | None" = None,
     transfer_modes: "list[str] | None" = None,
@@ -731,7 +712,7 @@ def encode_warc(
             b"WARC/1.0",
             b"WARC-Type: " + rtype.encode(),
             b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">",
-            b"WARC-Date: " + date.encode(),
+            b"WARC-Date: 2024-01-01T00:00:00Z",
         ]
         for k, v in extra.items():
             head.append(f"{k}: {v}".encode())

@@ -35,20 +35,19 @@ def sequence_windows(
     key: str,
     ts: str,
     feature_cols: list[str],
-    time_steps: int = 3,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Sliding sequence windows (W2): per series, an array of the previous
-    ``time_steps`` feature structs predicting the current row — the LSTM
+    3 feature structs predicting the current row — the LSTM
     dataset builder (``notebooks/05_multistation_lstm.ipynb:L224-L248``)
     re-expressed as a pure window ``collect_list`` (no Python loop; scales
     with the shuffle, not the driver). Rows without a full window are
     dropped, matching the reference's range loop."""
-    w = series_window(key, ts, *(tiebreak or [])).rowsBetween(-time_steps, -1)
+    w = series_window(key, ts, *(tiebreak or [])).rowsBetween(-3, -1)
     seq = F.collect_list(F.struct(*[F.col(c) for c in feature_cols])).over(w)
     return (
         df.withColumn("sequence", seq)
-        .filter(F.size("sequence") == time_steps)
+        .filter(F.size("sequence") == 3)
     )
 
 
@@ -60,11 +59,11 @@ def ffill(df: DataFrame, key: str, ts: str, cols: list[str], tiebreak: list[str]
     return df.withColumns({c: F.last(c, ignorenulls=True).over(w) for c in cols})
 
 
-def bfill(df: DataFrame, key: str, ts: str, cols: list[str], tiebreak: list[str] | None = None) -> DataFrame:
+def bfill(df: DataFrame, key: str, ts: str, cols: list[str]) -> DataFrame:
     """Backward fill per series (P10): mirror of :func:`ffill`."""
     w = (
         Window.partitionBy(key)
-        .orderBy(*[F.col(c).desc() for c in (ts, *(tiebreak or []))])
+        .orderBy(F.col(ts).desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     return df.withColumns({c: F.last(c, ignorenulls=True).over(w) for c in cols})
@@ -129,24 +128,23 @@ def interpolate_linear_pandas(
     return df.groupBy(key).applyInPandas(fn, schema=schema)
 
 
-def deterministic_sample(df: DataFrame, key: str, modulus: int = 10, bucket: int = 0) -> DataFrame:
-    """Systematic sample (W7 analogue): keep rows where ``key % modulus ==
-    bucket``. Unlike ``df.sample(seed)``, reproducible across engines and
+def deterministic_sample(df: DataFrame, key: str) -> DataFrame:
+    """Systematic sample (W7 analogue): keep rows where ``key % 10 == 0``.
+    Unlike ``df.sample(seed)``, reproducible across engines and
     partitionings — the engine also exposes native ``df.sample`` for
     statistical sampling."""
-    return df.filter((F.col(key) % modulus) == bucket)
+    return df.filter((F.col(key) % 10) == 0)
 
 
 def sessionize(
     df: DataFrame,
     key: str,
     ts: str,
-    gap_minutes: float = 30.0,
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Sessionization: assign a session id per (key, activity burst) where a
-    new session starts when the gap since the previous event exceeds
-    ``gap_minutes`` (the classic lag + conditional cumsum composition —
+    new session starts when the gap since the previous event exceeds 30
+    minutes (the classic lag + conditional cumsum composition —
     SURVEY §2.8 'session windows are free extensions').
 
     One shuffle on ``key``; the streaming twin is
@@ -154,7 +152,7 @@ def sessionize(
     w = series_window(key, ts, *(tiebreak or []))
     prev_ts = F.lag(ts).over(w)
     gap_s = F.col(ts).cast("double") - prev_ts.cast("double")
-    is_new = F.when(prev_ts.isNull() | (gap_s > gap_minutes * 60.0), 1).otherwise(0)
+    is_new = F.when(prev_ts.isNull() | (gap_s > 30.0 * 60.0), 1).otherwise(0)
     return df.withColumn(
         "session_id",
         F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, 0)),
@@ -244,7 +242,6 @@ def bucketed_ntile(
     order_col: str,
     n_tiles: int,
     bucket_width: float,
-    out_col: str = "bucket",
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Two-level ``ntile(n)`` for low-cardinality partition keys, derived
@@ -278,4 +275,4 @@ def bucketed_ntile(
     tile = F.when(
         F.col("__rn") <= cutoff, F.floor((F.col("__rn") - 1) / (base + 1)) + 1
     ).otherwise(extra + F.floor((F.col("__rn") - 1 - cutoff) / base) + 1)
-    return ranked.withColumn(out_col, tile.cast("int")).drop("__rn", "__N")
+    return ranked.withColumn("bucket", tile.cast("int")).drop("__rn", "__N")

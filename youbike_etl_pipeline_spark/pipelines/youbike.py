@@ -108,7 +108,7 @@ def build_gold_table(
     ``filling_rate`` (zero-guarded), ``hour``, ``is_weekday``, ``is_peak``,
     ``rain_cat``, ``filling_rate_lag1`` (the R²-lifting lag feature).
     """
-    merged = fact_dim_join(status, info, on="station_no", how="left")
+    merged = fact_dim_join(status, info, on="station_no")
     merged = hour_bucket_join(
         merged, weather, fact_ts="record_time", hourly_ts="record_time", how="left"
     )

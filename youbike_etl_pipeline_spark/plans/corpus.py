@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators import aggregations as agg
 from ..operators import joins as oj
+from ..operators import multimodal as mm
 from ..operators import relational as rel
 from ..operators import skew as osk
 from ..operators import windows as ow
@@ -65,7 +66,26 @@ def register(
 #: exported first so the correctness gate re-grades them (and
 #: tests/test_parity_changed_sf01.py checks them at sf0.01).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "m25_poisson_bootstrap_ci",
+    "m30_randomization_test",
+    "st1_streaming_hourly_counts",
+    "st2_streaming_dedup",
+    "st3_streaming_session_window",
+    "st4_stateful_running_max",
+    "st5_stream_stream_join",
+    "st6_foreachbatch_upsert",
+    "st7_stream_static_join",
+    "st8_streaming_sliding_counts",
     "st9_streaming_neardup_gate",
+    "st10_streaming_drift_monitor",
+    "st11_streaming_hll_distinct",
+    "st12_streaming_countmin",
+    "st13_streaming_media_decode",
+    "st14_streaming_crawl_extract",
+    "st15_streaming_transfer_decode",
+    "mm26_warc_ingest",
+    "mm32_charset_transfer_decode",
+    "mm34_transfer_decoding",
     "t7_minhash_lsh_dedup",
     "t38_sketch_accuracy_audit",
     "t38b_sketch_audit_dedup_first",
@@ -98,15 +118,12 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "mm23_tiff_extended_decode",
     "mm24_avi_audio_demux",
     "mm25_bmp_variants_decode",
-    "mm26_warc_ingest",
     "mm27_webdataset_ingest",
     "mm28_vit_patchify",
     "mm29_html_text_extract",
     "mm30_url_canonicalize",
     "mm31_crawl_quality_pipeline",
-    "mm32_charset_transfer_decode",
     "mm33_robots_policy",
-    "mm34_transfer_decoding",
     "mm35_boilerplate_removal",
     "mm36_http_status_frontier",
     "mm37_wet_conversion_sink",
@@ -114,13 +131,8 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "mm39_cdx_index",
     "mm41_sitemap_discovery",
     "mm42_warc_revisit_dedup",
-    "st13_streaming_media_decode",
-    "st14_streaming_crawl_extract",
-    "st15_streaming_transfer_decode",
     "t52_extracted_lang_id",
     "t54_paragraph_dedup",
-    "m25_poisson_bootstrap_ci",
-    "m30_randomization_test",
     "t2_ngram_jaccard_pairs",
     "t8_simhash_pairs",
     "t9_levenshtein_pairs",
@@ -200,12 +212,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # SQL fragment mirrors of the decimal-sum/avg discipline.
-def SQL_DSUM(expr: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(27,{scale}))) AS DOUBLE)"
+def SQL_DSUM(expr: str) -> str:
+    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(27,6))) AS DOUBLE)"
 
 
-def SQL_DAVG(expr: str, scale: int = 6) -> str:
-    return f"{SQL_DSUM(expr, scale)} / COUNT({expr})"
+def SQL_DAVG(expr: str) -> str:
+    return f"{SQL_DSUM(expr)} / COUNT({expr})"
 
 
 def SQL_DAVG_Q4(expr: str) -> str:
@@ -841,7 +853,7 @@ def a10_argmax_peak_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w2_sequence_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     seq = ow.sequence_windows(
-        ev, key="user_id", ts="ts", feature_cols=["value"], time_steps=3, tiebreak=["event_id"]
+        ev, key="user_id", ts="ts", feature_cols=["value"], tiebreak=["event_id"]
     )
     # complete windows only: a NULL feature anywhere in the window makes it
     # unusable as an LSTM sample — mirror of the oracle's v1/v2/v3 NOT NULL
@@ -922,7 +934,7 @@ def w6_rank_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is the statistical variant (not cross-engine reproducible).",
 )
 def w7_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = ow.deterministic_sample(_t(spark, sf_dir, "events"), key="event_id", modulus=10)
+    ev = ow.deterministic_sample(_t(spark, sf_dir, "events"), key="event_id")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), agg.decimal_sum("value").alias("sum_value")
     )
@@ -1616,7 +1628,7 @@ def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build():
         docs = _t(spark, sf_dir, "documents")
-        return osk.materialize(ngram_jaccard_pairs(docs, k=3, threshold=0.5, max_doc_freq=100))
+        return osk.materialize(ngram_jaccard_pairs(docs, threshold=0.5, max_doc_freq=100))
 
     return _shared(spark, sf_dir, "ngram_pairs", build)
 
@@ -1769,19 +1781,18 @@ def t6_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _portable_minhash_ctes(
-    num_hashes: int, bands: int, docs_src: str = "documents"
-) -> str:
+def _portable_minhash_ctes(docs_src: str = "documents") -> str:
     """The shared head of the portable-MinHash oracles: the ``WITH shing,
     hidx, sig, banded`` CTEs — md5-derived 30-bit shingle base hashes over
     ``docs_src``, the universal-hash mins with the exact Python-side (a,b)
     constants (:func:`..operators.dedup.minhash_coeffs`) and value-concat
-    band keys. Each oracle appends its own CTEs and final SELECT after the
+    keys of 8 bands. Each oracle appends its own CTEs and final SELECT after the
     trailing comma."""
-    from ..operators.dedup import MINHASH_P, minhash_coeffs
+    from ..operators.dedup import MINHASH_P, NUM_HASHES, minhash_coeffs
 
-    rows_per_band = num_hashes // bands
-    coeffs = minhash_coeffs(num_hashes)
+    bands = 8
+    rows_per_band = NUM_HASHES // bands
+    coeffs = minhash_coeffs()
     min_exprs = ",\n        ".join(
         f"MIN(({a} * sh + {b}) % {MINHASH_P}) AS h{i}" for i, (a, b) in enumerate(coeffs)
     )
@@ -1816,13 +1827,13 @@ def _portable_minhash_ctes(
     ),"""
 
 
-def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
+def _t7_minhash_sql() -> str:
     """Generated SQL mirror of the portable MinHash+LSH pipeline (same
     generated-constant technique as t8/s3): md5-derived 30-bit shingle base
     hashes, 32 universal-hash mins with the exact Python-side (a,b)
     constants, value-concat band keys, banded candidate join, exact Jaccard
     verify on the same base-hash sets."""
-    return _portable_minhash_ctes(num_hashes, bands) + f"""
+    return _portable_minhash_ctes() + """
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
@@ -1842,7 +1853,7 @@ def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5
     FROM inter
     JOIN cnt ca ON id_a = ca.doc_id
     JOIN cnt cb ON id_b = cb.doc_id
-    WHERE n_common / (ca.n + cb.n - n_common) >= {threshold}
+    WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
     """
 
 
@@ -1861,10 +1872,10 @@ def _t7_minhash_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5
 def t7_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_lsh_dedup_portable
 
-    return minhash_lsh_dedup_portable(_t(spark, sf_dir, "documents"), k=3, threshold=0.5)
+    return minhash_lsh_dedup_portable(_t(spark, sf_dir, "documents"))
 
 
-def _t8_simhash_sql(max_hamming: int = 12) -> str:
+def _t8_simhash_sql() -> str:
     """Generated SQL mirror of the md5-hash SimHash pipeline (the same
     generated-constant technique as s3's hyperplane SQL): 64 ±1 bit-sums
     per document from md5_number_lower token hashes, folded into four
@@ -1913,7 +1924,7 @@ def _t8_simhash_sql(max_hamming: int = 12) -> str:
       FROM lng a JOIN lng b ON a.ci = b.ci AND a.cv = b.cv AND a.doc_id < b.doc_id
     )
     SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
-    FROM cand WHERE hamming <= {max_hamming}
+    FROM cand WHERE hamming <= 12
     """
 
 
@@ -2053,7 +2064,7 @@ def s3_lsh_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS["s3_lsh_ann_buckets"].oracle = _lsh_oracle_sql()
 
 
-def _s6_oracle_sql(threshold: float = 0.32) -> str:
+def _s6_oracle_sql() -> str:
     """DuckDB mirror of the full SemDeDup composition: the same generated
     hyperplane-bucket expression as s3, within-bucket exact cosine like
     s2's pair math, greedy lowest-id survivor selection, per-label rollup."""
@@ -2093,7 +2104,7 @@ def _s6_oracle_sql(threshold: float = 0.32) -> str:
       JOIN norms na ON d.id_a = na.vec_id
       JOIN norms nb ON d.id_b = nb.vec_id
       WHERE na.nn > 0 AND nb.nn > 0
-        AND d.dot / (SQRT(na.nn) * SQRT(nb.nn)) >= {threshold!r}
+        AND d.dot / (SQRT(na.nn) * SQRT(nb.nn)) >= 0.32
     )
     SELECT label, COUNT(*) AS n_vectors,
            CAST(SUM(CASE WHEN dr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -2124,7 +2135,7 @@ def s6_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import lsh_near_dup_pairs
 
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = lsh_near_dup_pairs(emb, dim=64, threshold=0.32, bits=8, seed=42)
+    pairs = lsh_near_dup_pairs(emb, dim=64, threshold=0.32, bits=8)
     dropped = pairs.select(F.col("id_b").alias("vec_id")).distinct()
     per_label = (
         emb.select("vec_id", "label")
@@ -2172,7 +2183,7 @@ def mm1_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mm2_decode_sql(
-    width: int = 16, height: int = 12, fmt: str = "ppm", mod: int = 5
+    width: int = mm.IMAGE_WIDTH, height: int = mm.IMAGE_HEIGHT, fmt: str = "ppm", mod: int = 5
 ) -> str:
     """DuckDB mirror of the mm2 fixture+decode pipeline: the payload pixels
     are md5-digest bytes (``operators.multimodal.md5_pixels``), so the
@@ -2255,15 +2266,13 @@ def mm2_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm5_resize_sql(
-    width: int = 16, height: int = 12, out_w: int = 7, out_h: int = 5
-) -> str:
+def _mm5_resize_sql() -> str:
     """DuckDB mirror of the resize pipeline: re-derive the fixture's md5
     pixel bytes (same derivation as the mm2 oracle), then sample exactly
-    the nearest-neighbor indices floor(r·H/out_h), floor(c·W/out_w) and
+    the nearest-neighbor indices floor(r·H/5), floor(c·W/7) of the 7×5 output and
     sum per channel — integer math end-to-end, so the oracle verifies the
     decode → resize → re-encode → decode round trip byte-for-byte."""
-    n = width * height * 3
+    n = mm.IMAGE_WIDTH * mm.IMAGE_HEIGHT * 3
     blocks = (n + 15) // 16
     return f"""
     WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0),
@@ -2279,11 +2288,11 @@ def _mm5_resize_sql(
       WHERE b * 16 + j.j < {n}
     ),
     tgt AS (
-      SELECT (CAST(FLOOR(r.r * {height} / {out_h}.0) AS BIGINT) * {width}
-              + CAST(FLOOR(c.c * {width} / {out_w}.0) AS BIGINT)) * 3 + ch.ch AS idx,
+      SELECT (CAST(FLOOR(r.r * {mm.IMAGE_HEIGHT} / 5.0) AS BIGINT) * {mm.IMAGE_WIDTH}
+              + CAST(FLOOR(c.c * {mm.IMAGE_WIDTH} / 7.0) AS BIGINT)) * 3 + ch.ch AS idx,
              ch.ch AS ch
-      FROM (SELECT unnest(generate_series(0, {out_h - 1})) AS r) r,
-           (SELECT unnest(generate_series(0, {out_w - 1})) AS c) c,
+      FROM (SELECT unnest(generate_series(0, 4)) AS r) r,
+           (SELECT unnest(generate_series(0, 6)) AS c) c,
            (SELECT unnest(generate_series(0, 2)) AS ch) ch
     )
     SELECT b.doc_id,
@@ -2379,7 +2388,7 @@ def j7_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml1_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.clustering import kmeans_cluster_embeddings
 
-    assignments = kmeans_cluster_embeddings(_t(spark, sf_dir, "embeddings"), k=4, seed=42)
+    assignments = kmeans_cluster_embeddings(_t(spark, sf_dir, "embeddings"), k=4)
     return assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -2432,7 +2441,7 @@ def ml3_lstm_batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("value").alias("max_value"),
         F.avg(F.hour("ts").cast("double")).alias("mean_hour"),
     )
-    w = seeded_lstm_weights(input_dim=4, hidden_dim=8, seed=7)
+    w = seeded_lstm_weights(input_dim=4)
     return lstm_batch_predict(
         feats,
         w,
@@ -2590,7 +2599,7 @@ def m8_kmeans_hour_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumn("hour", F.hour("ts"))
     profile = agg.pivot_profile(ev, "user_id", "hour", "value", list(range(24)))
     assignments, summaries = kmeans_hour_profiles(
-        profile, "user_id", [str(h) for h in range(24)], k=4, seed=42
+        profile, "user_id", [str(h) for h in range(24)]
     )
     sizes = assignments.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
     labels = local_frame(
@@ -2869,7 +2878,7 @@ def w9_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = osk.repartition_for_rows(
         ev, osk.parquet_row_count(os.path.join(sf_dir, "events.parquet")), "user_id"
     )
-    sess = ow.sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, tiebreak=["event_id"])
+    sess = ow.sessionize(ev, key="user_id", ts="ts", tiebreak=["event_id"])
     return sess.groupBy("user_id").agg(
         F.countDistinct("session_id").alias("n_sessions"),
         F.count(F.lit(1)).alias("n_events"),
@@ -2937,7 +2946,7 @@ def s4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]]
-    out = ivf_topk(emb.filter(F.col("vec_id") != 0), qvec, k=10, n_centroids=8, n_probe=8)
+    out = ivf_topk(emb.filter(F.col("vec_id") != 0), qvec, n_centroids=8, n_probe=8)
     return out.withColumn("cosine", F.round("cosine", 6))
 
 
@@ -3379,10 +3388,7 @@ def t9_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Levenshtein; intra-group pairs are distance 0), and the only reason
     # the duplicate-heavy 100x blow-up finishes (raw per-language blocks
     # pay occupancy^2 in 40-char Levenshtein calls).
-    return levenshtein_blocked_pairs(
-        docs, text_col="text", id_col="doc_id", block_col="lang",
-        prefix_len=40, max_dist=12,
-    )
+    return levenshtein_blocked_pairs(docs, prefix_len=40)
 
 
 
@@ -3585,14 +3591,14 @@ def st7_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _st9_gate_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
+def _st9_gate_sql() -> str:
     """Batch mirror of the streaming near-dup gate: the same generated
     universal-hash MinHash constants as t7's oracle, but the candidate
     join is CROSS-SET (stream docs doc_id%3=0 vs static corpus
     doc_id%3<>0, no a<b), reduced to per-lang checked/duplicate counts
     over the stream subset. Equality holds regardless of micro-batch
     splits because signatures/bands/counts are per-document properties."""
-    return _portable_minhash_ctes(num_hashes, bands) + f"""
+    return _portable_minhash_ctes() + """
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
@@ -3611,7 +3617,7 @@ def _st9_gate_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) 
       SELECT DISTINCT id_a FROM inter
       JOIN cnt ca ON id_a = ca.doc_id
       JOIN cnt cb ON id_b = cb.doc_id
-      WHERE n_common / (ca.n + cb.n - n_common) >= {threshold}
+      WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
     )
     SELECT doc.lang, COUNT(*) AS n_checked,
            CAST(SUM(CASE WHEN d.id_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -3639,13 +3645,14 @@ def _st9_gate_sql(num_hashes: int = 32, bands: int = 8, threshold: float = 0.5) 
     "table, per-batch cost is batch-size x bands, never corpus-squared.",
 )
 def st9_streaming_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.ingest import neardup_gate_foreach_batch, read_documents_stream
+    from ..streaming.ingest import _table_stream, neardup_gate_foreach_batch
 
     docs = _t(spark, sf_dir, "documents")
     static = docs.filter(F.col("doc_id") % 3 != 0)
-    stream = read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 3 == 0)
+    stream = _table_stream(spark, sf_dir, "documents.parquet")
+    stream = stream.filter(F.col("doc_id") % 3 == 0)
     sink: list = []
-    neardup_gate_foreach_batch(stream, static, sink, threshold=0.5)
+    neardup_gate_foreach_batch(stream, static, sink)
     rows = [r for _, batch_rows in sink for r in batch_rows]
     out = local_frame(spark, rows, "doc_id long, lang string, is_dup boolean")
     return out.groupBy("lang").agg(
@@ -4360,7 +4367,7 @@ def t16_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(bucket < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
-    idx = shingle_index(docs, "text", "doc_id", k=3).withColumn("split", split)
+    idx = shingle_index(docs).withColumn("split", split)
     train_sh = idx.filter(F.col("split") == "train").select("shingle").distinct()
     ev = idx.filter(F.col("split") != "train")
     hits = ev.join(
@@ -4409,7 +4416,7 @@ def t17_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = docs.select(
         "lang",
         F.greatest(F.size("__toks") - 2, F.lit(0)).alias("n_total"),
-        F.size(word_shingles_from_tokens(F.col("__toks"), 3)).alias("n_distinct"),
+        F.size(word_shingles_from_tokens(F.col("__toks"))).alias("n_distinct"),
     )
     tg = F.sum("n_total")
     dg = F.sum("n_distinct")
@@ -5000,7 +5007,7 @@ def t23_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 20 == 0)
         .select("doc_id", "lang", token_count(F.col("text")).alias("n_tok"))
     )
-    packed = pack_sequences(docs, capacity=2048)
+    packed = pack_sequences(docs)
     return packed.groupBy("lang").agg(
         (F.max("bin_idx") + 1).alias("n_bins"),
         F.count(F.lit(1)).alias("n_docs"),
@@ -5156,7 +5163,7 @@ def t25_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _audio_sample_ctes(n_samples: int = 256, mod: int = 5) -> str:
+def _audio_sample_ctes(n_samples: int = mm.AUDIO_SAMPLES, mod: int = 5) -> str:
     """Shared oracle fragment: re-derive every PCM16 sample of the audio
     fixture (md5-digest bytes, little-endian int16 pairs) with md5
     hex-digit arithmetic — the d/hx/bytes/samples CTE chain used by mm3
@@ -5187,16 +5194,16 @@ def _audio_sample_ctes(n_samples: int = 256, mod: int = 5) -> str:
     )"""
 
 
-def _mm3_audio_sql(n_samples: int = 256) -> str:
+def _mm3_audio_sql() -> str:
     """DuckDB mirror of the mm3 audio fixture+decode pipeline: PCM16
     samples are md5-digest bytes (little-endian int16 pairs), so the oracle
     re-derives every sample with md5 hex-digit arithmetic and recomputes
     peak / zero-crossings (exact ints) and RMS (exact-int sum, /256 is an
     exact FP division, sqrt is correctly rounded — round-6 for safety)."""
-    n = n_samples * 2
+    n = mm.AUDIO_SAMPLES * 2
     header_len = 44  # RIFF(12) + fmt(24) + data header(8)
     return f"""
-    WITH {_audio_sample_ctes(n_samples)},
+    WITH {_audio_sample_ctes()},
     lagged AS (
       SELECT doc_id, si, s,
              LAG(s) OVER (PARTITION BY doc_id ORDER BY si) AS prev
@@ -5897,7 +5904,7 @@ def mm4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull() & (F.col("doc_id") % 10 == 0))
     )
     media = attach_media_columns(docs)
-    frames = sample_frames(media, every_n_bytes=64, max_frames=8)
+    frames = sample_frames(media)
     return frames.select(
         "doc_id",
         "frame_idx",
@@ -6718,16 +6725,14 @@ def cdc2_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j11_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    sess = ow.sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, tiebreak=["event_id"])
+    sess = ow.sessionize(ev, key="user_id", ts="ts", tiebreak=["event_id"])
     intervals = sess.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     )
     # exact (uncapped) mode — the 100×-scale routing for occupancy growth
     # is interval_overlap_pairs(max_bucket_occupancy=N), probed in
     # SCALING.md's 100× table
-    out = oj.interval_overlap_pairs(
-        intervals, key="user_id", interval_id="session_id", start="s", end="e"
-    )
+    out = oj.interval_overlap_pairs(intervals)
     return out.select(
         F.col("user_id_a").alias("user_a"),
         F.col("user_id_b").alias("user_b"),
@@ -7433,9 +7438,7 @@ def s7_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bm25_scores(spark, sf_dir).orderBy(F.desc("bm25"), "doc_id").limit(20)
 
 
-def _bm25_scores(
-    spark: SparkSession, sf_dir: str, terms: tuple[str, ...] = _BM25_TERMS
-) -> DataFrame:
+def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, bm25) scoring frame shared by s7 (top-20 lexical
     retrieval) and s8 (hybrid RRF fusion) — see s7's description for the
     plan shape and float discipline."""
@@ -7451,7 +7454,7 @@ def _bm25_scores(
     )
     tf = (
         toks.select("doc_id", F.explode("words").alias("w"))
-        .filter(F.col("w").isin(*terms))
+        .filter(F.col("w").isin(*_BM25_TERMS))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -8602,7 +8605,7 @@ def dq6_join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm6_dft_sql(n_fft: int = 256) -> str:
+def _mm6_dft_sql() -> str:
     """Generated oracle for mm6: the sample re-derivation CTEs plus the
     SAME integer-quantized DFT basis the Spark decoder uses
     (``multimodal.dft_quantized_basis`` — computed once in Python,
@@ -8614,9 +8617,9 @@ def _mm6_dft_sql(n_fft: int = 256) -> str:
         cq, sq = dft_quantized_basis(period)
         return ", ".join(f"({r}, {c}, {s})" for r, (c, s) in enumerate(zip(cq, sq)))
 
-    m4, m8 = n_fft // 4, n_fft // 8
+    m4, m8 = 64, 32
     return f"""
-    WITH {_audio_sample_ctes(n_fft)},
+    WITH {_audio_sample_ctes()},
     c4(r, c, s) AS (VALUES {values_rows(m4)}),
     c8(r, c, s) AS (VALUES {values_rows(m8)}),
     sums AS (
@@ -9008,8 +9011,8 @@ def m19_lag1_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _g1_pagerank_sql(iters: int = 3, damping: str = "0.85", base: str = "0.15") -> str:
-    """Generated oracle for g1: the co-visitation edge CTEs plus ``iters``
+def _g1_pagerank_sql() -> str:
+    """Generated oracle for g1: the co-visitation edge CTEs plus 3
     chained PageRank steps (no recursive CTE — the iteration count is a
     plan-construction constant on BOTH engines, exactly like the Spark
     loop). Every rank and every per-edge share is 6-dp floor-quantized
@@ -9028,8 +9031,8 @@ def _g1_pagerank_sql(iters: int = 3, damping: str = "0.85", base: str = "0.15") 
       GROUP BY e.dst, nn.n
     )"""
     steps = ",".join(
-        step_tpl.format(next=i + 1, cur=i, base=base, damping=damping)
-        for i in range(iters)
+        step_tpl.format(next=i + 1, cur=i, base="0.15", damping="0.85")
+        for i in range(3)
     )
     return f"""
     WITH ui AS (
@@ -9053,7 +9056,7 @@ def _g1_pagerank_sql(iters: int = 3, damping: str = "0.85", base: str = "0.15") 
       FROM nodes, nn
     ),{steps}
     SELECT p.item, d.deg, p.pr
-    FROM it{iters} p JOIN deg d ON d.src = p.item
+    FROM it3 p JOIN deg d ON d.src = p.item
     ORDER BY p.pr DESC, p.item
     LIMIT 20
     """
@@ -9461,10 +9464,7 @@ def m20_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "statement the gate can express.",
 )
 def st10_streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.ingest import (
-        drift_partials_foreach_batch,
-        read_embeddings_stream,
-    )
+    from ..streaming.ingest import _table_stream, drift_partials_foreach_batch
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     elems0 = emb.filter(F.col("vec_id") % 2 == 0).select(
@@ -9478,7 +9478,7 @@ def st10_streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.count(F.lit(1))
         ).alias("m0")
     )
-    stream = read_embeddings_stream(spark, sf_dir).filter(
+    stream = _table_stream(spark, sf_dir, "embeddings.parquet").filter(
         F.col("vec_id") % 2 == 1
     )
     sink: list = []
@@ -9515,12 +9515,7 @@ def st10_streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS["st10_streaming_drift_monitor"].oracle = CORPUS["e2_embedding_drift"].oracle
 
 
-def _t38_sketch_audit_sql(
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    dedup_first: bool = False,
-) -> str:
+def _t38_sketch_audit_sql(dedup_first: bool = False) -> str:
     """Generated oracle for t38: t7's portable MinHash pipeline, but instead
     of dropping the signatures after banding, the candidate pairs are scored
     BOTH ways — MinHash match-fraction estimate AND exact Jaccard — and the
@@ -9539,9 +9534,9 @@ def _t38_sketch_audit_sql(
     )
 
     match_sum = " + ".join(
-        f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
+        f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(32)
     )
-    return _portable_minhash_ctes(num_hashes, bands, docs_src) + f"""
+    return _portable_minhash_ctes(docs_src) + f"""
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
@@ -9550,7 +9545,7 @@ def _t38_sketch_audit_sql(
     ),
     est AS (
       SELECT c.id_a, c.id_b,
-             ({match_sum}) * 1.0 / {num_hashes} AS est_j
+             ({match_sum}) * 1.0 / 32 AS est_j
       FROM cand c
       JOIN sig sa ON sa.doc_id = c.id_a
       JOIN sig sb ON sb.doc_id = c.id_b
@@ -9581,9 +9576,9 @@ def _t38_sketch_audit_sql(
            COALESCE(FLOOR(CAST(SUM(CAST(err AS DECIMAL(27,6))) AS DOUBLE)
                  / COUNT(err) * 1000000) / 1000000.0, 0.0) AS mean_abs_err,
            COALESCE(MAX(err), 0.0) AS max_abs_err,
-           CAST(COALESCE(SUM(CASE WHEN est_j >= {threshold} AND exact_j < {threshold}
+           CAST(COALESCE(SUM(CASE WHEN est_j >= 0.5 AND exact_j < 0.5
                          THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_false_pos,
-           CAST(COALESCE(SUM(CASE WHEN est_j < {threshold} AND exact_j >= {threshold}
+           CAST(COALESCE(SUM(CASE WHEN est_j < 0.5 AND exact_j >= 0.5
                          THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_missed
     FROM errs
     """
@@ -9615,7 +9610,7 @@ def t38_sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # routing (collapse first) is the operator's opt-in parameter — see the
     # operator docstring and SCALING.md's round-5 probe.
     return sketch_accuracy_audit(
-        docs, num_hashes=32, bands=8, threshold=0.5, exact_dedup_first=False
+        docs, bands=8, exact_dedup_first=False
     )
 
 @register(
@@ -9746,7 +9741,7 @@ def m21_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t39_zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import zipf_fit
 
-    out = zipf_fit(_t(spark, sf_dir, "documents"), top_n=200)
+    out = zipf_fit(_t(spark, sf_dir, "documents"))
     return out.select(
         "n_terms",
         q6(F.col("zipf_slope")).alias("zipf_slope"),
@@ -9755,22 +9750,20 @@ def t39_zipf_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm7_ahash_sql(
-    width: int = 16, height: int = 12, grid: int = 8, group_mod: int = 40
-) -> str:
+def _mm7_ahash_sql() -> str:
     """DuckDB mirror of the perceptual-hash pipeline: re-derive the
-    near-dup fixture's md5 pixels (base image keyed on doc_id % group_mod
+    near-dup fixture's md5 pixels (base image keyed on doc_id % 40
     + the one-byte perturbation), then replay aHash in integer SQL —
     nearest-neighbor 8×8 downsample indices, r+g+b cell brightness, strict
     mean threshold via ``br·64 > Σbr`` (no division), 64-bit hash as two
     32-bit halves. Bit-exact end-to-end, no floats anywhere."""
-    n = width * height * 3
+    n = mm.IMAGE_WIDTH * mm.IMAGE_HEIGHT * 3
     blocks = (n + 15) // 16
     return f"""
     WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 3 = 0),
     hx AS (
       SELECT d.doc_id, b.b,
-             md5(CAST(d.doc_id % {group_mod} AS VARCHAR) || ':'
+             md5(CAST(d.doc_id % 40 AS VARCHAR) || ':'
                  || CAST(b.b AS VARCHAR)) AS h
       FROM d, (SELECT unnest(generate_series(0, {blocks - 1})) AS b) b
     ),
@@ -9784,15 +9777,15 @@ def _mm7_ahash_sql(
     bytes AS (
       SELECT doc_id, idx,
              CASE WHEN idx = (doc_id * 7) % {n}
-                  THEN (v + (doc_id // {group_mod}) % 7) % 256 ELSE v END AS v
+                  THEN (v + (doc_id // 40) % 7) % 256 ELSE v END AS v
       FROM bytes0
     ),
     cells_idx AS (
-      SELECT gr.gr * {grid} + gc.gc AS gi,
-             CAST(FLOOR(gr.gr * {height} / {grid}.0) AS BIGINT) * {width}
-             + CAST(FLOOR(gc.gc * {width} / {grid}.0) AS BIGINT) AS pix
-      FROM (SELECT unnest(generate_series(0, {grid - 1})) AS gr) gr,
-           (SELECT unnest(generate_series(0, {grid - 1})) AS gc) gc
+      SELECT gr.gr * 8 + gc.gc AS gi,
+             CAST(FLOOR(gr.gr * {mm.IMAGE_HEIGHT} / 8.0) AS BIGINT) * {mm.IMAGE_WIDTH}
+             + CAST(FLOOR(gc.gc * {mm.IMAGE_WIDTH} / 8.0) AS BIGINT) AS pix
+      FROM (SELECT unnest(generate_series(0, 7)) AS gr) gr,
+           (SELECT unnest(generate_series(0, 7)) AS gc) gc
     ),
     cell AS (
       SELECT b.doc_id, g.gi, SUM(b.v) AS br
@@ -9802,7 +9795,7 @@ def _mm7_ahash_sql(
     tot AS (SELECT doc_id, SUM(br) AS total FROM cell GROUP BY 1),
     bits AS (
       SELECT c.doc_id, c.gi,
-             CASE WHEN c.br * {grid * grid} > t.total THEN 1 ELSE 0 END AS bit
+             CASE WHEN c.br * 64 > t.total THEN 1 ELSE 0 END AS bit
       FROM cell c JOIN tot t ON c.doc_id = t.doc_id
     ),
     hashes AS (
@@ -10078,7 +10071,7 @@ def g3_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-def entry_query(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
+def entry_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query — the driver's smoke check."""
     return flagship_segment_health(spark, sf_dir)
 
@@ -12174,6 +12167,21 @@ _POIS_CDF = [
 ]
 
 
+#: ``reps(r, p)``: replicate ``r`` and ``p = 48271^(r+1) mod (2^31 − 1)``,
+#: the multiplier that takes a row's MINSTD stream to its state ``r + 1``
+#: (``stats.resample.lehmer_uniforms``); needs ``WITH RECURSIVE``.
+_REPS_CTE = """reps(r, p) AS (
+      SELECT 0, CAST(48271 AS BIGINT)
+      UNION ALL SELECT r + 1, p * 48271 % 2147483647 FROM reps WHERE r < 199
+    )"""
+
+
+def _lehmer_u_sql(seed: str) -> str:
+    """Replicate ``rp.r``'s uniform for a row: its MINSTD stream starts at
+    ``seed mod (2^31 − 2) + 1`` (``stats.resample.lehmer_uniforms``)."""
+    return f"((({seed} % 2147483646) + 1) * rp.p) % 2147483647 / 2147483647.0"
+
+
 def _pois_sql(u: str) -> str:
     branches = " ".join(
         f"WHEN {u} < {thr!r} THEN {k}" for thr, k in _POIS_CDF
@@ -12184,7 +12192,7 @@ def _pois_sql(u: str) -> str:
 @register(
     "m25_poisson_bootstrap_ci",
     f"""
-    WITH reps AS (SELECT unnest(generate_series(0, 199)) AS r),
+    WITH RECURSIVE {_REPS_CTE},
     seeded AS (
       SELECT event_type, value,
              CAST(md5_number_lower(CAST(event_id AS VARCHAR)) % 2147483648
@@ -12193,7 +12201,7 @@ def _pois_sql(u: str) -> str:
     ),
     weighted AS (
       SELECT e.event_type, rp.r, e.value,
-             {_pois_sql("((((e.seed + rp.r * 1013904223) % 2147483647) * 48271) % 2147483647) / 2147483647.0")}
+             {_pois_sql(_lehmer_u_sql("e.seed"))}
                AS w
       FROM seeded e CROSS JOIN reps rp
     ),
@@ -12232,11 +12240,12 @@ def _pois_sql(u: str) -> str:
     "value per event type — the bootstrap that actually distributes: "
     "instead of drawing n rows with replacement (a global operation), "
     "each row gets an independent Poisson(1) multiplicity per replicate, "
-    "derived HERE from ONE md5-portable hash per row chained through a "
-    "per-replicate Lehmer step (t12's generator family — one hash per "
-    "row, not per row-x-replicate, so the fan-out is pure integer "
-    "arithmetic) and the inverse CDF on the 1/(2^31-1) uniform grid — "
-    "fully "
+    "derived HERE from ONE md5-portable hash per row that seeds the row's "
+    "MINSTD stream (t12's generator family; replicate r reads the "
+    "stream's state r+1, one integer product with a per-replicate "
+    "multiplier, so the fan-out is pure integer arithmetic and the "
+    "replicates are independent draws) and the inverse CDF on the "
+    "1/(2^31-1) uniform grid — fully "
     "deterministic, so the oracle reproduces every weight bit-for-bit. "
     "200 replicates; replicate means are exact decimal sums over "
     "hash-weighted values; the CI takes ORDER STATISTICS (5th / 196th "
@@ -12867,24 +12876,22 @@ def a22_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-def _mm8_oracle_sql(
-    n_frames: int = 12, frame_bytes: int = 64, shot_len: int = 4
-) -> str:
+def _mm8_oracle_sql() -> str:
     """DuckDB mirror of the shot-boundary pipeline: re-derive every frame
     byte (md5 hex digit arithmetic keyed on (doc, shot, block) + the
     per-frame brightness drift), SAD consecutive frames via a
     one-frame-offset self-join, and apply the same integer threshold."""
-    blocks = (frame_bytes + 15) // 16
+    blocks = 4
     return f"""
     WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 25 = 0),
     fr AS (
       SELECT d.doc_id, f.f AS frame_idx
-      FROM d, (SELECT unnest(generate_series(0, {n_frames - 1})) AS f) f
+      FROM d, (SELECT unnest(generate_series(0, {mm.VIDEO_FRAMES - 1})) AS f) f
     ),
     hx AS (
       SELECT doc_id, frame_idx, b.b,
              md5(CAST(doc_id AS VARCHAR) || ':'
-                 || CAST(frame_idx // {shot_len} AS VARCHAR) || ':'
+                 || CAST(frame_idx // 4 AS VARCHAR) || ':'
                  || CAST(b.b AS VARCHAR)) AS h
       FROM fr, (SELECT unnest(generate_series(0, {blocks - 1})) AS b) b
     ),
@@ -12892,9 +12899,9 @@ def _mm8_oracle_sql(
       SELECT doc_id, frame_idx, (b * 16 + j.j) AS idx,
              ((strpos('0123456789abcdef', substr(h, 2 * j.j + 1, 1)) - 1) * 16
               + (strpos('0123456789abcdef', substr(h, 2 * j.j + 2, 1)) - 1)
-              + frame_idx % {shot_len}) % 256 AS v
+              + frame_idx % 4) % 256 AS v
       FROM hx, (SELECT unnest(generate_series(0, 15)) AS j) j
-      WHERE b * 16 + j.j < {frame_bytes}
+      WHERE b * 16 + j.j < 64
     ),
     sad AS (
       SELECT a.doc_id, a.frame_idx,
@@ -12906,9 +12913,9 @@ def _mm8_oracle_sql(
     )
     SELECT doc_id,
            CAST(COUNT(*) + 1 AS BIGINT) AS n_frames,
-           CAST(SUM(CASE WHEN sad > 30 * {frame_bytes} THEN 1 ELSE 0 END)
+           CAST(SUM(CASE WHEN sad > 30 * 64 THEN 1 ELSE 0 END)
              AS BIGINT) AS n_boundaries,
-           CAST(SUM(CASE WHEN sad > 30 * {frame_bytes} THEN frame_idx
+           CAST(SUM(CASE WHEN sad > 30 * 64 THEN frame_idx
                          ELSE 0 END) AS BIGINT) AS boundary_idx_sum,
            CAST(MAX(sad) AS BIGINT) AS max_sad,
            CAST(MIN(sad) AS BIGINT) AS min_sad
@@ -12942,7 +12949,7 @@ def mm8_video_shot_boundary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import attach_video_frames, frame_sad
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
-    frames = attach_video_frames(docs, n_frames=12, frame_bytes=64, shot_len=4)
+    frames = attach_video_frames(docs)
     sad = frame_sad(frames)
     is_b = F.when(F.col("sad") > 30 * 64, 1).otherwise(0)
     return (
@@ -13235,7 +13242,7 @@ def m28_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forgets it at 100× gets the flat-budget sample, not the 30.3×
     # pair quadratic the probe measured; m28b grades the sampled twin).
     return kendall_tau_b(
-        u, id_col="user_id", x_col="x", y_col="y", hash_sample_mod=None
+        u, id_col="user_id", hash_sample_mod=None
     ).select(F.col("n_units").alias("n_users"), "conc", "disc", "tau_b")
 
 @register(
@@ -13704,11 +13711,11 @@ def m29_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _s10_oracle_sql(k: int = 5, n_cand: int = 20) -> str:
+def _s10_oracle_sql() -> str:
     """Generated DuckDB mirror of the MMR greedy re-ranker: the candidate
     and pairwise-similarity CTEs quantize every cosine to integer
-    micro-units exactly like the Spark side, then the k greedy selections
-    unroll into k chained CTEs (sel1..selk) — each picks the argmax of
+    micro-units exactly like the Spark side, then the 5 greedy selections
+    unroll into 5 chained CTEs (sel1..sel5) — each picks the argmax of
     7*relq - 3*max(simq to already-selected) with a vec_id tiebreak, all
     in integer arithmetic, so both engines make identical choices."""
     steps = [
@@ -13719,7 +13726,7 @@ def _s10_oracle_sql(k: int = 5, n_cand: int = 20) -> str:
     ),
     cum1 AS (SELECT vec_id FROM sel1)"""
     ]
-    for t in range(2, k + 1):
+    for t in range(2, 6):
         steps.append(f"""
     sel{t} AS (
       SELECT vec_id, relq, CAST({t} AS BIGINT) AS step FROM (
@@ -13735,7 +13742,7 @@ def _s10_oracle_sql(k: int = 5, n_cand: int = 20) -> str:
     ),
     cum{t} AS (SELECT vec_id FROM cum{t - 1}
                UNION ALL SELECT vec_id FROM sel{t})""")
-    union = " UNION ALL ".join(f"SELECT * FROM sel{t}" for t in range(1, k + 1))
+    union = " UNION ALL ".join(f"SELECT * FROM sel{t}" for t in range(1, 6))
     # cand/sims are MATERIALIZED: sel1..selk reference them 2-3 times each
     # and DuckDB inlines plain CTEs, re-running the full embedding unnest
     # per greedy step (measured 33 s -> materialized ~1 s at sf0.01; same
@@ -13747,7 +13754,7 @@ def _s10_oracle_sql(k: int = 5, n_cand: int = 20) -> str:
              CAST(FLOOR(dot / (SQRT(aa) * SQRT(qq)) * 1000000) AS BIGINT)
                AS relq
       FROM dots, qn WHERE aa > 0 AND qq > 0
-      ORDER BY relq DESC, vec_id LIMIT {n_cand}
+      ORDER BY relq DESC, vec_id LIMIT 20
     ),
     pe AS (
       SELECT vec_id, unnest(embedding) AS x,
@@ -14052,7 +14059,7 @@ def j12_followup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "m30_randomization_test",
     f"""
-    WITH base AS (
+    WITH RECURSIVE base AS (
       SELECT value,
              CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_a,
              CAST(md5_number_lower(CAST(event_id AS VARCHAR)) % 2147483648
@@ -14070,11 +14077,10 @@ def j12_followup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              SUM(is_a) * 1.0 / COUNT(*) AS frac_a
       FROM base
     ),
-    reps AS (SELECT unnest(generate_series(0, 199)) AS r),
+    {_REPS_CTE},
     relabeled AS (
       SELECT b.value, rp.r,
-             CASE WHEN ((((b.seed + rp.r * 1013904223) % 2147483647)
-                         * 48271) % 2147483647) / 2147483647.0
+             CASE WHEN {_lehmer_u_sql("b.seed")}
                   < (SELECT frac_a FROM obs)
                   THEN 1 ELSE 0 END AS ra
       FROM base b CROSS JOIN reps rp
@@ -14106,7 +14112,7 @@ def j12_followup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Deterministic randomization test for the click-vs-view "
     "mean difference: 200 pseudo-random relabelings of the pooled "
     "sample (Bernoulli at the observed group fraction, drawn from the "
-    "same md5-seed + per-replicate Lehmer chain as m25's bootstrap — "
+    "same per-row MINSTD streams as m25's bootstrap — "
     "one hash per row, integer fan-out), each replicate's mean "
     "difference from exact decimal sums, p-value = smoothed fraction "
     "of replicates at least as extreme as observed. Distribution-free "
@@ -14519,7 +14525,7 @@ CORPUS["st12_streaming_countmin"].oracle = CORPUS[
 # ===========================================================================
 
 
-def _e8_oracle_sql(iters: int = 4) -> str:
+def _e8_oracle_sql() -> str:
     """Generated DuckDB mirror of the integer power iteration: the gram
     matrix and every iterate are exact integers (truncating division is
     identical on both engines), so the k-step Rayleigh quotient matches
@@ -14527,7 +14533,7 @@ def _e8_oracle_sql(iters: int = 4) -> str:
     steps = []
     prev = "v0"
     last_w = "w1"
-    for t in range(1, iters + 1):
+    for t in range(1, 5):
         steps.append(f"""
     w{t} AS (
       SELECT c.j, CAST(SUM(c.c * v.x) AS BIGINT) AS w
@@ -14537,7 +14543,6 @@ def _e8_oracle_sql(iters: int = 4) -> str:
     v{t} AS (SELECT j, w // (SELECT d FROM d{t}) AS x FROM w{t})""")
         last_w = f"w{t}"
         prev = f"v{t}"
-    prev_v = f"v{iters - 1}" if iters > 1 else "v0"
     return f"""
     WITH xs AS (
       SELECT vec_id, generate_subscripts(embedding, 1) AS j,
@@ -14555,7 +14560,7 @@ def _e8_oracle_sql(iters: int = 4) -> str:
     ray AS (
       SELECT CAST(SUM(v.x * w.w) AS BIGINT) AS num,
              CAST(SUM(v.x * v.x) AS BIGINT) AS den
-      FROM {prev_v} v JOIN {last_w} w ON v.j = w.j
+      FROM v3 v JOIN {last_w} w ON v.j = w.j
     ),
     tr AS (
       SELECT CAST(SUM(c) AS BIGINT) AS trace
@@ -15341,15 +15346,15 @@ def w27_daily_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-def _mm9_sql(width: int = 16, height: int = 12, bins: int = 16) -> str:
+def _mm9_sql() -> str:
     """DuckDB mirror of the mm9 pipeline: re-derive every md5 pixel byte
-    (mm2's byte CTE), bucket into ``bins`` intensity bins per channel,
+    (mm2's byte CTE), bucket into 16 intensity bins per channel,
     then compute the global per-(channel, bin) pixel counts and the mean
     per-image channel entropy — each entropy TERM floor-quantized to an
     integer BEFORE summing, so no float accumulation order exists."""
-    n = width * height * 3
+    n = mm.IMAGE_WIDTH * mm.IMAGE_HEIGHT * 3
     blocks = (n + 15) // 16
-    per_chan = width * height
+    per_chan = mm.IMAGE_WIDTH * mm.IMAGE_HEIGHT
     return f"""
     WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0),
     hx AS (
@@ -15366,7 +15371,7 @@ def _mm9_sql(width: int = 16, height: int = 12, bins: int = 16) -> str:
     ),
     hist AS (
       SELECT doc_id, CAST(idx % 3 AS INTEGER) AS c,
-             CAST(v // {256 // bins} AS INTEGER) AS bin,
+             CAST(v // 16 AS INTEGER) AS bin,
              CAST(COUNT(*) AS BIGINT) AS cnt
       FROM bytes GROUP BY 1, 2, 3
     ),
@@ -16225,9 +16230,7 @@ def dq12_cardinality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t49_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import prefix_filter_jaccard_pairs
 
-    return prefix_filter_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), k=3, threshold=0.5
-    )
+    return prefix_filter_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 # ===========================================================================
@@ -16443,14 +16446,11 @@ def a27_bucketed_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j11b_interval_overlap_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
-    sess = ow.sessionize(ev, key="user_id", ts="ts", gap_minutes=30.0, tiebreak=["event_id"])
+    sess = ow.sessionize(ev, key="user_id", ts="ts", tiebreak=["event_id"])
     intervals = sess.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s"), F.max("ts").alias("e")
     )
-    out = oj.interval_overlap_pairs(
-        intervals, key="user_id", interval_id="session_id", start="s", end="e",
-        max_bucket_occupancy=64,
-    )
+    out = oj.interval_overlap_pairs(intervals, max_bucket_occupancy=64)
     return out.select(
         F.col("user_id_a").alias("user_a"),
         F.col("user_id_b").alias("user_b"),
@@ -16511,7 +16511,7 @@ def m28b_kendall_tau_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("y"),
     )
     return kendall_tau_b(
-        u, id_col="user_id", x_col="x", y_col="y", hash_sample_mod=10
+        u, id_col="user_id", hash_sample_mod=10
     ).select(F.col("n_units").alias("n_users"), "conc", "disc", "tau_b")
 
 
@@ -16564,11 +16564,11 @@ def t38b_sketch_audit_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame
 
     docs = _t(spark, sf_dir, "documents")
     return sketch_accuracy_audit(
-        docs, num_hashes=32, bands=8, threshold=0.5, exact_dedup_first=True
+        docs, bands=8, exact_dedup_first=True
     )
 
 
-def _e3_routed_oracle_sql(k: int = 5, ann_bits: int = 6, dim: int = 64, seed: int = 42) -> str:
+def _e3_routed_oracle_sql() -> str:
     """Generated DuckDB mirror of knn_label_consistency(ann_bits=6,
     exact_dedup_first=True): the same LCG hyperplane constants as the Spark
     side decide each vector's LSH bucket (bit i = sign of a left-assoc dot
@@ -16580,7 +16580,7 @@ def _e3_routed_oracle_sql(k: int = 5, ann_bits: int = 6, dim: int = 64, seed: in
     cosine."""
     from ..operators.similarity import _hyperplanes
 
-    planes = _hyperplanes(dim, ann_bits, seed=seed)
+    planes = _hyperplanes(64, 6)
     bucket_terms = []
     for i, plane in enumerate(planes):
         dot = " + ".join(
@@ -16640,12 +16640,12 @@ def _e3_routed_oracle_sql(k: int = 5, ann_bits: int = 6, dim: int = 64, seed: in
       FROM ranked r
       JOIN nz ql ON r.qid = ql.vec_id
       JOIN nz nl ON r.nid = nl.vec_id
-      WHERE r.rn <= {k} GROUP BY 1
+      WHERE r.rn <= 5 GROUP BY 1
     )
     SELECT l.label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(SUM(p.n_same) AS BIGINT) AS n_same_neighbors,
-           FLOOR(SUM(p.n_same) * 1.0 / ({float(k)!r} * COUNT(*)) * 1000000)
+           FLOOR(SUM(p.n_same) * 1.0 / (5.0 * COUNT(*)) * 1000000)
              / 1000000.0 AS consistency
     FROM per_vec p JOIN nz l ON p.qid = l.vec_id
     GROUP BY 1 ORDER BY 1
@@ -16677,7 +16677,7 @@ def e3b_knn_consistency_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
     return knn_label_consistency(
-        emb, k=5, ann_bits=6, dim=64, seed=42, exact_dedup_first=True
+        emb, k=5, ann_bits=6, dim=64, exact_dedup_first=True
     )
 
 
@@ -16716,14 +16716,14 @@ def mm10_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm11_g711_sql(n_samples: int = 256) -> str:
+def _mm11_g711_sql() -> str:
     """DuckDB mirror of the G.711 decode pipeline: the fixture's companded
     stream is the md5 byte sequence itself (one byte = one sample), so the
     oracle re-derives every byte and applies the SAME closed-form ITU-T
     expansions — μ-law: t = ((u%16)·8 + 132)·2^seg on the complemented
     byte; A-law: the xor-0x55 segment/mantissa form — then recomputes
     mm3's time-domain feature block over the expanded int16 samples."""
-    blocks = (n_samples + 15) // 16
+    blocks = (mm.AUDIO_SAMPLES + 15) // 16
     return f"""
     WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0),
     hx AS (
@@ -16735,7 +16735,7 @@ def _mm11_g711_sql(n_samples: int = 256) -> str:
              (strpos('0123456789abcdef', substr(h, 2 * j.j + 1, 1)) - 1) * 16
              + (strpos('0123456789abcdef', substr(h, 2 * j.j + 2, 1)) - 1) AS v
       FROM hx, (SELECT unnest(generate_series(0, 15)) AS j) j
-      WHERE b * 16 + j.j < {n_samples}
+      WHERE b * 16 + j.j < {mm.AUDIO_SAMPLES}
     ),
     samples AS (
       SELECT doc_id, si,
@@ -16806,7 +16806,7 @@ def mm11_g711_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm12_adpcm_sql(n_data_bytes: int = 124) -> str:
+def _mm12_adpcm_sql() -> str:
     """DuckDB mirror of the IMA ADPCM decode: a RECURSIVE CTE replays the
     per-nibble prediction state machine — diff = (step>>3) + bit-weighted
     step fractions, sign from bit 3, predictor clamped to int16, step
@@ -16815,8 +16815,8 @@ def _mm12_adpcm_sql(n_data_bytes: int = 124) -> str:
     recursive-CTE precedent, applied to a codec."""
     from ..operators.multimodal import _IMA_STEPS
 
-    blocks = (n_data_bytes + 15) // 16
-    n_nibbles = n_data_bytes * 2
+    blocks = (mm.IMA_ADPCM_BYTES + 15) // 16
+    n_nibbles = mm.IMA_ADPCM_BYTES * 2
     steps_rows = ", ".join(f"({i}, {int(s)})" for i, s in enumerate(_IMA_STEPS))
     return f"""
     WITH RECURSIVE d AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0),
@@ -16829,7 +16829,7 @@ def _mm12_adpcm_sql(n_data_bytes: int = 124) -> str:
              (strpos('0123456789abcdef', substr(h, 2 * j.j + 1, 1)) - 1) * 16
              + (strpos('0123456789abcdef', substr(h, 2 * j.j + 2, 1)) - 1) AS v
       FROM hx, (SELECT unnest(generate_series(0, 15)) AS j) j
-      WHERE b * 16 + j.j < {n_data_bytes}
+      WHERE b * 16 + j.j < {mm.IMA_ADPCM_BYTES}
     ),
     nib AS (
       SELECT doc_id, bi * 2 AS k, v % 16 AS n FROM bytes
@@ -16979,20 +16979,18 @@ def mm14_webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm15_avi_sql(
-    width: int = 8, height: int = 6, n_frames: int = 4, mod: int = 10
-) -> str:
+def _mm15_avi_sql() -> str:
     """DuckDB mirror of the AVI/MJPEG pipeline: frame pixels are md5 bytes
     keyed ``doc_id*16 + frame``, so the oracle re-derives every byte and
     recomputes the per-frame channel sums — proving the RIFF container
     walk AND the per-frame lossless-JPEG decode reproduce every pixel."""
-    n = width * height * 3
+    n = mm.AVI_WIDTH * mm.AVI_HEIGHT * 3
     blocks = (n + 15) // 16
     return f"""
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id % {mod} = 0),
+    WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0),
     fr AS (
       SELECT d.doc_id, f.f
-      FROM d, (SELECT unnest(generate_series(0, {n_frames - 1})) AS f) f
+      FROM d, (SELECT unnest(generate_series(0, {mm.AVI_FRAMES - 1})) AS f) f
     ),
     hx AS (
       SELECT doc_id, f, b.b,
@@ -17074,13 +17072,13 @@ def mm16_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm17_flac_sql(n_samples: int = 256, mod: int = 10) -> str:
+def _mm17_flac_sql() -> str:
     """DuckDB mirror of the FLAC pipeline: the fixture codes the SAME md5
     int16 samples as mm3, and FLAC is lossless, so the oracle is mm3's
     sample re-derivation + feature block (minus n_bytes — the compressed
     payload length depends on the rotating subframe strategy)."""
     return f"""
-    WITH {_audio_sample_ctes(n_samples, mod=mod)},
+    WITH {_audio_sample_ctes(mod=10)},
     lagged AS (
       SELECT doc_id, si, s,
              LAG(s) OVER (PARTITION BY doc_id ORDER BY si) AS prev
@@ -17166,7 +17164,7 @@ def mm18_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm19_msadpcm_sql(n_data_bytes: int = 125, mod: int = 10) -> str:
+def _mm19_msadpcm_sql() -> str:
     """DuckDB mirror of the MS-ADPCM decode: a RECURSIVE CTE replays the
     two-sample prediction recursion — pred = trunc((s1·c1 + s2·c2)/256)
     (C-style truncation toward zero, matching the WAVE-spec pseudocode
@@ -17178,10 +17176,10 @@ def _mm19_msadpcm_sql(n_data_bytes: int = 125, mod: int = 10) -> str:
     nibbles without affecting any decodable sample) — over the same md5
     nibble stream (HIGH nibble first, unlike IMA) the fixture wraps.
     mm12's recursive-codec precedent with a 3-variable state."""
-    blocks = (n_data_bytes + 15) // 16
-    n_nibbles = n_data_bytes * 2
+    blocks = (mm.MS_ADPCM_BYTES + 15) // 16
+    n_nibbles = mm.MS_ADPCM_BYTES * 2
     return f"""
-    WITH RECURSIVE d AS (SELECT doc_id FROM documents WHERE doc_id % {mod} = 0),
+    WITH RECURSIVE d AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0),
     hx AS (
       SELECT d.doc_id, b.b, md5(CAST(d.doc_id AS VARCHAR) || ':' || CAST(b.b AS VARCHAR)) AS h
       FROM d, (SELECT unnest(generate_series(0, {blocks - 1})) AS b) b
@@ -17191,7 +17189,7 @@ def _mm19_msadpcm_sql(n_data_bytes: int = 125, mod: int = 10) -> str:
              (strpos('0123456789abcdef', substr(h, 2 * j.j + 1, 1)) - 1) * 16
              + (strpos('0123456789abcdef', substr(h, 2 * j.j + 2, 1)) - 1) AS v
       FROM hx, (SELECT unnest(generate_series(0, 15)) AS j) j
-      WHERE b * 16 + j.j < {n_data_bytes}
+      WHERE b * 16 + j.j < {mm.MS_ADPCM_BYTES}
     ),
     nib AS (
       SELECT doc_id, bi * 2 AS k, v // 16 AS n FROM bytes
@@ -17280,7 +17278,7 @@ def mm19_msadpcm_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm20_float_wav_sql(n_samples: int = 256, mod: int = 10) -> str:
+def _mm20_float_wav_sql() -> str:
     """DuckDB mirror of the float-PCM WAV decode: the fixture's float
     samples are the md5 int16 samples scaled by 1/32768 — exact dyadic
     rationals in float32 AND float64 — so the oracle re-derives them
@@ -17291,7 +17289,7 @@ def _mm20_float_wav_sql(n_samples: int = 256, mod: int = 10) -> str:
     rotation (44-byte classic vs 68-byte extensible fmt; 4- vs 8-byte
     samples)."""
     return f"""
-    WITH {_audio_sample_ctes(n_samples, mod=mod)},
+    WITH {_audio_sample_ctes(mod=10)},
     lagged AS (
       SELECT doc_id, si, s,
              LAG(s) OVER (PARTITION BY doc_id ORDER BY si) AS prev
@@ -17299,7 +17297,7 @@ def _mm20_float_wav_sql(n_samples: int = 256, mod: int = 10) -> str:
     )
     SELECT doc_id,
            CAST((CASE WHEN doc_id % 30 = 20 THEN 68 ELSE 44 END)
-                + {n_samples} * (CASE WHEN doc_id % 20 = 10 THEN 8 ELSE 4 END)
+                + {mm.AUDIO_SAMPLES} * (CASE WHEN doc_id % 20 = 10 THEN 8 ELSE 4 END)
                 AS BIGINT) AS n_bytes,
            CAST(COUNT(*) AS BIGINT) AS n_samples,
            MAX(ABS(s)) / 32768.0 AS peak,
@@ -17385,14 +17383,14 @@ def mm21_png_variants_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm22_stereo_wav_sql(n_frames: int = 128, mod: int = 10) -> str:
+def _mm22_stereo_wav_sql() -> str:
     """DuckDB mirror of the stereo-WAV per-channel pipeline: the fixture
     interleaves the md5 int16 stream as L/R frames (sample 2k left,
     2k+1 right), so channel membership is si % 2 and the per-channel
     features re-derive with the mm3 CTE chain grouped by (doc, channel);
     zero crossings LAG within the channel's own frame order."""
     return f"""
-    WITH {_audio_sample_ctes(n_frames * 2, mod=mod)},
+    WITH {_audio_sample_ctes(mm.STEREO_FRAMES * 2, mod=10)},
     lagged AS (
       SELECT doc_id, si % 2 AS channel, si // 2 AS fi, s,
              LAG(s) OVER (PARTITION BY doc_id, si % 2 ORDER BY si) AS prev
@@ -17479,20 +17477,20 @@ def mm23_tiff_extended_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm24_avi_av_sql(n_frames: int = 2, n_samples: int = 256, mod: int = 10) -> str:
+def _mm24_avi_av_sql() -> str:
     """DuckDB mirror of the A/V container demux: the audio track carries
     the SAME md5 int16 samples as mm3 (PCM16 survives the AVI muxing
     bit-exactly), so the oracle is the mm3 feature block plus the
     constant frame count the fixture muxes."""
     return f"""
-    WITH {_audio_sample_ctes(n_samples, mod=mod)},
+    WITH {_audio_sample_ctes(mod=10)},
     lagged AS (
       SELECT doc_id, si, s,
              LAG(s) OVER (PARTITION BY doc_id ORDER BY si) AS prev
       FROM samples
     )
     SELECT doc_id,
-           CAST({n_frames} AS BIGINT) AS n_frames,
+           CAST({mm.AVI_AV_FRAMES} AS BIGINT) AS n_frames,
            CAST(COUNT(*) AS BIGINT) AS n_samples,
            CAST(MAX(ABS(s)) AS BIGINT) AS peak,
            CAST(SUM(CASE WHEN prev IS NOT NULL AND s * prev < 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -17607,15 +17605,15 @@ def mm26_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm27_webdataset_sql(width: int = 16, height: int = 12, mod: int = 10) -> str:
+def _mm27_webdataset_sql() -> str:
     """DuckDB mirror of the WebDataset-shard ingest: the image member is
     the md5-pixel PNG (pixel sum re-derived with md5 hex arithmetic, the
     mm2 CTE chain), the caption is the document's own text (md5 of its
     UTF-8 octets), and the label/member-count are fixture constants."""
-    n = width * height * 3
+    n = mm.IMAGE_WIDTH * mm.IMAGE_HEIGHT * 3
     blocks = (n + 15) // 16
     return f"""
-    WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % {mod} = 0),
+    WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
     hx AS (
       SELECT d.doc_id, b.b, md5(CAST(d.doc_id AS VARCHAR) || ':' || CAST(b.b AS VARCHAR)) AS h
       FROM d, (SELECT unnest(generate_series(0, {blocks - 1})) AS b) b
@@ -17630,8 +17628,8 @@ def _mm27_webdataset_sql(width: int = 16, height: int = 12, mod: int = 10) -> st
     px AS (SELECT doc_id, SUM(v) AS pixel_sum FROM bytes GROUP BY doc_id)
     SELECT d.doc_id,
            CAST(3 AS BIGINT) AS n_members,
-           CAST({width} AS INT) AS width,
-           CAST({height} AS INT) AS height,
+           CAST({mm.IMAGE_WIDTH} AS INT) AS width,
+           CAST({mm.IMAGE_HEIGHT} AS INT) AS height,
            CAST(px.pixel_sum AS BIGINT) AS pixel_sum,
            CAST(octet_length(encode(COALESCE(d.text, ''))) AS BIGINT) AS caption_bytes,
            md5(COALESCE(d.text, '')) AS caption_md5,
@@ -17672,19 +17670,16 @@ def mm27_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mm28_patchify_sql(
-    width: int = 16, height: int = 12, patch: int = 4, mod: int = 10
-) -> str:
+def _mm28_patchify_sql() -> str:
     """DuckDB mirror of the patch tokenization: byte idx → channel
-    (idx%3), pixel (idx//3), pixel → (x, y) → patch cell (x//P, y//P);
+    (idx%3), pixel (idx//3), pixel → (x, y) → 4×4 patch cell (x//4, y//4);
     per-cell channel means divide an exact small-int sum by the
     power-of-two patch area, so both engines produce identical float64
     without rounding."""
-    n = width * height * 3
+    n = mm.IMAGE_WIDTH * mm.IMAGE_HEIGHT * 3
     blocks = (n + 15) // 16
-    area = float(patch * patch)
     return f"""
-    WITH d AS (SELECT doc_id FROM documents WHERE doc_id % {mod} = 0),
+    WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0),
     hx AS (
       SELECT d.doc_id, b.b, md5(CAST(d.doc_id AS VARCHAR) || ':' || CAST(b.b AS VARCHAR)) AS h
       FROM d, (SELECT unnest(generate_series(0, {blocks - 1})) AS b) b
@@ -17698,17 +17693,17 @@ def _mm28_patchify_sql(
     ),
     px AS (
       SELECT doc_id, idx % 3 AS c,
-             ((idx // 3) // {width}) // {patch} AS py,
-             ((idx // 3) % {width}) // {patch} AS px_,
+             ((idx // 3) // {mm.IMAGE_WIDTH}) // 4 AS py,
+             ((idx // 3) % {mm.IMAGE_WIDTH}) // 4 AS px_,
              v
       FROM bytes
     )
     SELECT doc_id,
            CAST(py AS INT) AS patch_y,
            CAST(px_ AS INT) AS patch_x,
-           SUM(CASE WHEN c = 0 THEN v ELSE 0 END) / {area} AS r_mean,
-           SUM(CASE WHEN c = 1 THEN v ELSE 0 END) / {area} AS g_mean,
-           SUM(CASE WHEN c = 2 THEN v ELSE 0 END) / {area} AS b_mean
+           SUM(CASE WHEN c = 0 THEN v ELSE 0 END) / 16.0 AS r_mean,
+           SUM(CASE WHEN c = 1 THEN v ELSE 0 END) / 16.0 AS g_mean,
+           SUM(CASE WHEN c = 2 THEN v ELSE 0 END) / 16.0 AS b_mean
     FROM px GROUP BY doc_id, py, px_
     """
 
@@ -17734,25 +17729,25 @@ def mm28_vit_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
     media = attach_ppm_payloads(docs, width=16, height=12)
-    return patchify_features(media, patch=4).select(
+    return patchify_features(media).select(
         "doc_id", "patch_y", "patch_x", "r_mean", "g_mean", "b_mean"
     )
 
 
-def _st13_streaming_media_sql(n_samples: int = 256, mod: int = 10) -> str:
+def _st13_streaming_media_sql() -> str:
     """Batch mirror of the streaming media decode: same md5 sample
     re-derivation as mm3 (the decode is stateless, so streaming
     micro-batching cannot change a single value), n_bytes = the 44-byte
     WAV header + 2 bytes/sample."""
     return f"""
-    WITH {_audio_sample_ctes(n_samples, mod=mod)},
+    WITH {_audio_sample_ctes(mod=10)},
     lagged AS (
       SELECT doc_id, si, s,
              LAG(s) OVER (PARTITION BY doc_id ORDER BY si) AS prev
       FROM samples
     )
     SELECT doc_id,
-           CAST({44 + 2 * n_samples} AS BIGINT) AS n_bytes,
+           CAST({44 + 2 * mm.AUDIO_SAMPLES} AS BIGINT) AS n_bytes,
            CAST(COUNT(*) AS BIGINT) AS n_samples,
            CAST(MAX(ABS(s)) AS BIGINT) AS peak,
            CAST(SUM(CASE WHEN prev IS NOT NULL AND s * prev < 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -17780,9 +17775,10 @@ def _st13_streaming_media_sql(n_samples: int = 256, mod: int = 10) -> str:
 )
 def st13_streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import attach_wav_payloads, decode_audio_features
-    from ..streaming.ingest import read_documents_stream, run_stream_to_memory
+    from ..streaming.ingest import _table_stream, run_stream_to_memory
 
-    docs = read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
+    docs = _table_stream(spark, sf_dir, "documents.parquet")
+    docs = docs.filter(F.col("doc_id") % 10 == 0)
     feats = decode_audio_features(attach_wav_payloads(docs)).select(
         "doc_id",
         "n_bytes",
@@ -17794,7 +17790,7 @@ def st13_streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(feats, output_mode="append")
 
 
-def _html_xt_cte(mod: int = 10) -> str:
+def _html_xt_cte() -> str:
     """The expected-extraction CTE shared by the crawl-text family
     (mm29 extraction identity, mm31 quality-over-extraction): assemble
     the expected text from the RAW document text — title line, text,
@@ -17814,11 +17810,11 @@ def _html_xt_cte(mod: int = 10) -> str:
                    ' *\n *', chr(10), 'g'),
                  '\n+', chr(10), 'g'),
                ' ' || chr(10)) AS xt
-      FROM documents WHERE doc_id % {mod} = 0
+      FROM documents WHERE doc_id % 10 = 0
     )"""
 
 
-def _mm29_html_extract_sql(mod: int = 10) -> str:
+def _mm29_html_extract_sql() -> str:
     """DuckDB mirror of the HTML→text extraction: the fixture's four
     markup variants are EXTRACTION-INVARIANT (tests/test_html.py pins
     all four against expected_extraction), so the oracle assembles the
@@ -17827,7 +17823,7 @@ def _mm29_html_extract_sql(mod: int = 10) -> str:
     regex chain the extractor ends with. Engines agree on md5 of the
     UTF-8 octets and on character length."""
     return f"""
-{_html_xt_cte(mod)}
+{_html_xt_cte()}
     SELECT doc_id,
            'Doc ' || CAST(doc_id AS VARCHAR) || ' & friends' AS title,
            CAST(2 AS BIGINT) AS n_links,
@@ -17875,7 +17871,7 @@ def mm29_html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t50_bpe_ctes(mod: int = 1) -> str:
+def _t50_bpe_ctes() -> str:
     """The recursive BPE CTE chain shared by t50 (per-doc stats) and
     t51 (mixture budget over BPE tokens): distinct [a-z]+ words →
     leftmost-single-replace merge recursion → per-word token counts.
@@ -17890,7 +17886,7 @@ def _t50_bpe_ctes(mod: int = 1) -> str:
     return f"""    WITH RECURSIVE
     d AS (
       SELECT doc_id, lower(COALESCE(text, '')) AS t
-      FROM documents WHERE doc_id % {mod} = 0
+      FROM documents WHERE doc_id % 1 = 0
     ),
     occ AS (
       SELECT doc_id, unnest(regexp_extract_all(t, '[a-z]+')) AS w FROM d
@@ -17916,7 +17912,7 @@ def _t50_bpe_ctes(mod: int = 1) -> str:
     )"""
 
 
-def _t50_bpe_sql(mod: int = 1) -> str:
+def _t50_bpe_sql() -> str:
     """Recursive-CTE BPE oracle sharing operators/text.py::BPE_MERGES:
     each distinct word becomes a ``|``-separated symbol string; the
     recursion replaces the current merge's ``|a|b|`` pattern one
@@ -17928,7 +17924,7 @@ def _t50_bpe_sql(mod: int = 1) -> str:
     operands-exist-before-use invariant (hypothesis-pinned in
     tests/test_bpe.py). Token count per word = separators - 1."""
     return f"""
-{_t50_bpe_ctes(mod)}
+{_t50_bpe_ctes()}
     SELECT o.doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_words,
            CAST(SUM(c.n_tok) AS BIGINT) AS n_tokens,
@@ -18022,7 +18018,7 @@ def mm30_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "url", "host", "n_params", "changed")
 
 
-def _mm31_crawl_quality_sql(mod: int = 10) -> str:
+def _mm31_crawl_quality_sql() -> str:
     """Quality scoring over the EXTRACTED text: the xt CTE is the shared
     crawl-text expected-extraction chain (byte-identical to mm29's), and
     the quality expressions are t6's SQL mirrors applied to xt instead
@@ -18038,7 +18034,7 @@ def _mm31_crawl_quality_sql(mod: int = 10) -> str:
 
     stops = " + ".join(mark(w) for w in ["the", "and", "of", "to", "a"])
     return f"""
-{_html_xt_cte(mod)},
+{_html_xt_cte()},
     f AS (
       SELECT doc_id,
              len(list_filter(regexp_split_to_array(trim(xt), '\\s+'), x -> x <> '')) AS n_tokens,
@@ -18103,7 +18099,7 @@ def mm31_crawl_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t51_bpe_budget_sql(budget: int = 2_000_000, mod: int = 1) -> str:
+def _t51_bpe_budget_sql() -> str:
     """t40's alpha=0.5 mixture-allocation tail over t50's BPE token
     counts (shared recursive CTE chain, byte-identical): per-source BPE
     tokens → sqrt-smoothed weights floor-quantized to integer
@@ -18111,7 +18107,7 @@ def _t51_bpe_budget_sql(budget: int = 2_000_000, mod: int = 1) -> str:
     factors for the fixed training budget. Docs with zero [a-z] words
     contribute nothing (inner semantics, same as t50)."""
     return f"""
-{_t50_bpe_ctes(mod)},
+{_t50_bpe_ctes()},
     per_doc AS (
       SELECT o.doc_id, CAST(SUM(c.n_tok) AS BIGINT) AS n_tokens
       FROM occ o JOIN counts c USING (w)
@@ -18133,7 +18129,7 @@ def _t51_bpe_budget_sql(budget: int = 2_000_000, mod: int = 1) -> str:
     SELECT source, n_docs, n_tokens,
            FLOOR(CAST(wq AS DOUBLE) / swq * 1000000) / 1000000.0
              AS mix_weight,
-           FLOOR(CAST(wq AS DOUBLE) / swq * {budget} / n_tokens * 1000000)
+           FLOOR(CAST(wq AS DOUBLE) / swq * 2000000 / n_tokens * 1000000)
              / 1000000.0 AS repeat_factor
     FROM wts CROSS JOIN tot ORDER BY source
     """
@@ -18241,9 +18237,10 @@ def st14_streaming_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         attach_html_warc_payloads,
         extract_html_features,
     )
-    from ..streaming.ingest import read_documents_stream, run_stream_to_memory
+    from ..streaming.ingest import _table_stream, run_stream_to_memory
 
-    docs = read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
+    docs = _table_stream(spark, sf_dir, "documents.parquet")
+    docs = docs.filter(F.col("doc_id") % 10 == 0)
     feats = extract_html_features(attach_html_warc_payloads(docs)).select(
         "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
     )
@@ -18302,7 +18299,7 @@ def mm33_robots_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "allowed", "rule", "n_groups")
 
 
-def _t52_extracted_lang_sql(mod: int = 10) -> str:
+def _t52_extracted_lang_sql() -> str:
     """t4's marker-word language-ID mirrors applied to the EXTRACTED
     text (the shared xt CTE, byte-identical to mm29's): every page's
     scaffold contributes the same deterministic tokens on both engines
@@ -18319,7 +18316,7 @@ def _t52_extracted_lang_sql(mod: int = 10) -> str:
         return " + ".join(mark(w) for w in words)
 
     return f"""
-{_html_xt_cte(mod)},
+{_html_xt_cte()},
     scores AS (
       SELECT d.lang,
              regexp_matches(x.xt, '[一-鿿]') AS has_cjk,
@@ -18468,7 +18465,7 @@ def mm39_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "surt", "digest", "mime", "range_fetch_ok")
 
 
-def _mm38_admission_sql(mod: int = 10) -> str:
+def _mm38_admission_sql() -> str:
     """Joint oracle for the admission chain: mm33's robots decision
     constants (variant ``(doc_id//10)%4``) × mm36's status constants
     (variant ``%5``) gate mm29's expected-extraction md5 — all three
@@ -18484,7 +18481,7 @@ def _mm38_admission_sql(mod: int = 10) -> str:
         "WHEN 2 THEN 302 WHEN 3 THEN 404 ELSE 503 END"
     )
     return f"""
-{_html_xt_cte(mod)}
+{_html_xt_cte()}
     SELECT doc_id,
            {allowed} AS allowed,
            CAST({status} AS BIGINT) AS status,
@@ -18526,12 +18523,12 @@ def mm38_crawl_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "allowed", "status", "admitted", "text_md5")
 
 
-def _mm37_wet_sql(mod: int = 10) -> str:
+def _mm37_wet_sql() -> str:
     """The expected-extraction CTE reduced to the WET sink's identity
     columns: the text that went INTO the conversion record must come
     back byte-exactly (char length + md5)."""
     return f"""
-{_html_xt_cte(mod)}
+{_html_xt_cte()}
     SELECT doc_id,
            CAST(length(xt) AS BIGINT) AS text_chars,
            md5(xt) AS text_md5
@@ -18593,9 +18590,10 @@ def st15_streaming_transfer_decode(
         attach_html_warc_payloads,
         extract_html_features,
     )
-    from ..streaming.ingest import read_documents_stream, run_stream_to_memory
+    from ..streaming.ingest import _table_stream, run_stream_to_memory
 
-    docs = read_documents_stream(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
+    docs = _table_stream(spark, sf_dir, "documents.parquet")
+    docs = docs.filter(F.col("doc_id") % 10 == 0)
     feats = extract_html_features(
         attach_html_warc_payloads(
             docs, charset_rotation=True, transfer_rotation=True
@@ -18657,7 +18655,7 @@ def mm36_http_status_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "status", "location", "retry_after", "keep")
 
 
-def _t54_paragraph_dedup_sql(mod: int = 10) -> str:
+def _t54_paragraph_dedup_sql() -> str:
     """Paragraph-granularity dedup over the EXTRACTED crawl text: the
     shared xt CTE (byte-identical to mm29's) splits on newlines into
     paragraphs; ownership = min doc id per md5(paragraph); an instance
@@ -18667,7 +18665,7 @@ def _t54_paragraph_dedup_sql(mod: int = 10) -> str:
     the title line is unique per page, and the article line duplicates
     exactly when the raw text does."""
     return f"""
-{_html_xt_cte(mod)},
+{_html_xt_cte()},
     p AS (
       SELECT doc_id, md5(para) AS h
       FROM (
@@ -18731,7 +18729,7 @@ def t54_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_paras", "n_dup", "dup_ratio")
 
 
-def _mm35_main_text_sql(mod: int = 10) -> str:
+def _mm35_main_text_sql() -> str:
     """DuckDB mirror of link-density boilerplate removal: the four
     noise variants are KEPT-TEXT-INVARIANT (tests/test_html.py pins all
     four against expected_main_text), so the oracle assembles the
@@ -18762,7 +18760,7 @@ def _mm35_main_text_sql(mod: int = 10) -> str:
              CASE (doc_id // 10) % 4
                WHEN 0 THEN 2 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 3
              END AS nd
-      FROM documents WHERE doc_id % {mod} = 0
+      FROM documents WHERE doc_id % 10 = 0
     )
     SELECT doc_id,
            CAST(length(kt) AS BIGINT) AS kept_chars,
@@ -18822,7 +18820,7 @@ _T53_AUG = (
 )
 
 
-def _t53_byte_bpe_sql(mod: int = 1) -> str:
+def _t53_byte_bpe_sql() -> str:
     """Recursive-CTE byte-level BPE oracle: each distinct pretoken's
     UTF-8 octets (``hex(encode(w))`` — uppercase two-hex-digit symbols,
     the exact alphabet operators/text.py::byte_bpe_apply emits) become
@@ -18849,7 +18847,7 @@ def _t53_byte_bpe_sql(mod: int = 1) -> str:
     d AS (
       SELECT doc_id,
              COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
-      FROM documents WHERE doc_id % {mod} = 0
+      FROM documents WHERE doc_id % 1 = 0
     ),
     occ AS (
       SELECT doc_id,
@@ -18980,7 +18978,7 @@ _T55_TOK_CASE = """
 """
 
 
-def _t55_gpt2_sql(mod: int = 1) -> str:
+def _t55_gpt2_sql() -> str:
     """GPT-2-exact pretokenize + byte-BPE oracle: a recursive-CTE
     position scanner (:data:`_T55_TOK_CASE`) emits each document's
     pretokens IN ORDER; the signature block pins the full token
@@ -19007,7 +19005,7 @@ def _t55_gpt2_sql(mod: int = 1) -> str:
     d AS (
       SELECT doc_id,
              COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
-      FROM documents WHERE doc_id % {mod} = 0
+      FROM documents WHERE doc_id % 1 = 0
     ),
     scan AS (
       SELECT doc_id, t, 1 AS pos, 0 AS idx, CAST('' AS VARCHAR) AS tok
@@ -19127,9 +19125,9 @@ def t55_gpt2_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t56_bpe_train_sql(k: int = 5) -> str:
+def _t56_bpe_train_sql() -> str:
     """Unrolled BPE merge-training oracle (the g1 unrolled-iteration
-    discipline): k chained CTE blocks, each = weighted OVERLAPPING
+    discipline): 5 chained CTE blocks, each = weighted OVERLAPPING
     adjacent-pair counts over the doubled-separator segmentation,
     argmax with the (count DESC, pa, pb) tie-break, then ONE plain
     ``replace`` applying the merge left-to-right-greedily (the
@@ -19144,7 +19142,7 @@ def _t56_bpe_train_sql(k: int = 5) -> str:
     v0 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM occ GROUP BY w),
     s0 AS (SELECT cnt, regexp_replace(w, '(.)', '|\\1|', 'g') AS s FROM v0)"""
     ]
-    for i in range(1, k + 1):
+    for i in range(1, 6):
         parts.append(f"""
     p{i} AS (
       SELECT split_part(pr, chr(9), 1) AS pa,
@@ -19175,7 +19173,7 @@ def _t56_bpe_train_sql(k: int = 5) -> str:
         f"""    SELECT {i} AS it, m.pa AS sym_a, m.pb AS sym_b,
            CAST(m.pc AS BIGINT) AS pair_cnt, t.tok AS vocab_tokens
     FROM m{i} m, t{i} t"""
-        for i in range(1, k + 1)
+        for i in range(1, 6)
     )
     return "    WITH" + ",".join(parts) + "\n" + unions
 

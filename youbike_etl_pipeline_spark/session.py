@@ -40,6 +40,11 @@ def driver_memory(physical_bytes: int) -> str:
     return f"{min(MAX_DRIVER_MEMORY, physical_bytes // 2) >> 20}m"
 
 
+def host_driver_memory() -> str:
+    """:func:`driver_memory` for this host's physical RAM."""
+    return driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
+
+
 def get_spark(
     app_name: str = "youbike_etl_pipeline_spark",
     master: str | None = None,
@@ -77,9 +82,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
         .config("spark.sql.files.openCostInBytes", "262144")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(
-            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-        ))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory())
     )
     if master:
         builder = builder.config("spark.master", master)

@@ -30,7 +30,7 @@ except ImportError:  # pragma: no cover
     _scipy_stats = None
 
 
-def _suffstats(df: DataFrame, group_col: str | None, value_col: str, scale: int = 6) -> DataFrame:
+def _suffstats(df: DataFrame, group_col: str | None, value_col: str) -> DataFrame:
     """Per-group (n, Σx, Σx²) with exact sums; the base of every test here.
     One hash aggregation = one shuffle on ``group_col``."""
     v = F.col(value_col)
@@ -38,7 +38,7 @@ def _suffstats(df: DataFrame, group_col: str | None, value_col: str, scale: int 
     grouped = df.groupBy(*keys) if keys else df.groupBy()
     return grouped.agg(
         F.count(v).alias("n"),
-        decimal_sum(v, scale).alias("sx"),
+        decimal_sum(v).alias("sx"),
         decimal_pow_sum(v, 2).alias("sxx"),
     )
 
@@ -53,11 +53,7 @@ def _var_samp(n: Column, sx: Column, sxx: Column) -> Column:
 
 
 def group_confidence_intervals(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    z: float = 1.959963984540054,  # normal 97.5% quantile; see note
-    kpi: float | None = None,
+    df: DataFrame, group_col: str, value_col: str, kpi: float | None = None
 ) -> DataFrame:
     """Per-group mean ± CI half-width, with optional KPI classification (M1).
 
@@ -77,8 +73,8 @@ def group_confidence_intervals(
         F.col("n"),
         mean.alias("mean"),
         sem.alias("sem"),
-        (mean - z * sem).alias("ci_lo"),
-        (mean + z * sem).alias("ci_hi"),
+        (mean - 1.959963984540054 * sem).alias("ci_lo"),
+        (mean + 1.959963984540054 * sem).alias("ci_hi"),
     )
     if kpi is not None:
         out = out.withColumn(
@@ -510,12 +506,12 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
 # ------------------------------------------------------------------
 
 
-def p_value_t(t_stat: float, dof: float, two_sided: bool = True) -> float:
-    """Student-t p-value for a collected t statistic."""
+def p_value_t(t_stat: float, dof: float) -> float:
+    """Two-sided Student-t p-value for a collected t statistic."""
     if _scipy_stats is None:  # pragma: no cover
         raise NotImplementedError("scipy not available for p-values")
     p = _scipy_stats.t.sf(abs(t_stat), dof)
-    return float(2 * p if two_sided else p)
+    return float(2 * p)
 
 
 def p_value_f(f_stat: float, df1: float, df2: float) -> float:
@@ -540,13 +536,11 @@ def q_critical(alpha: float, k: int, dof: float) -> float:
 def kendall_tau_b(
     df: DataFrame,
     id_col: str,
-    x_col: str = "x",
-    y_col: str = "y",
     hash_sample_mod: int | None | str = "auto",
     pair_budget: int = 50_000_000,
 ) -> DataFrame:
-    """Kendall tau-b rank correlation between two integer-exact columns of a
-    per-entity frame: concordant/discordant/tied pair counting over the
+    """Kendall tau-b rank correlation between the integer-exact columns ``x``
+    and ``y`` of a per-entity frame: concordant/discordant/tied pair counting over the
     ``i < j`` self-join, with the tie-corrected denominator applied once at
     the end (6-dp floored). Completes the rank family (m15 Mann-Whitney,
     m16 Spearman, m21 Kruskal-Wallis).
@@ -583,7 +577,7 @@ def kendall_tau_b(
     """
     from ..operators.dedup import md5_token_hash64
 
-    u = df.select(F.col(id_col).alias("__id"), F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
+    u = df.select(F.col(id_col).alias("__id"), F.col("x").alias("__x"), F.col("y").alias("__y"))
     if isinstance(hash_sample_mod, str):
         if hash_sample_mod != "auto":
             raise ValueError(

@@ -16,11 +16,14 @@ intermediate proportional to ``rows × n_reps`` exists anywhere: memory is
 bounded by the Arrow batch, and what reaches the driver is keys × partitions
 × replicates × outcomes integers, independent of the row count.
 
-The draw is the oracle's expression, evaluated in the same arithmetic: with
-``M = 2^31 − 1``, ``u = ((seed + r·1013904223) mod M) · 48271 mod M / M``,
-integer steps in int64 and the division in float64, and the outcome is
-``k = #{thresholds ≤ u}`` — the ``CASE WHEN u < t0 THEN 0 WHEN u < t1 THEN 1
-… END`` chain both engines evaluate.
+The draw is the oracle's expression, evaluated in the same arithmetic. Each
+row owns one MINSTD stream (``M = 2^31 − 1``, multiplier 48271) that starts
+at ``x0 = seed mod (M − 1) + 1``, and replicate ``r`` reads its state
+``r + 1``: ``u = x0 · P_r mod M / M`` with ``P_r = 48271^(r+1) mod M``.
+The product stays under 2^62, so the integer steps
+are exact in int64 (numpy, Spark) and BIGINT (DuckDB); the division is
+float64. The outcome is ``k = #{thresholds ≤ u}`` — the ``CASE WHEN u < t0
+THEN 0 WHEN u < t1 THEN 1 … END`` chain both engines evaluate.
 
 Sums are exact. Terms arrive as unscaled decimal longs (:func:`unscaled6`),
 so the double product and the decimal rounding stay Spark's, and under ANSI
@@ -39,10 +42,9 @@ from pyspark.sql import functions as F
 
 from ..operators.skew import widen_narrow_scan
 
-#: Lehmer (MINSTD) modulus, multiplier and the per-replicate seed stride.
+#: Lehmer (MINSTD) modulus and multiplier.
 LEHMER_M = 2147483647
 LEHMER_A = 48271
-REP_STRIDE = 1013904223
 
 #: Row-replicate draws that amortize one task, ≈ 0.1 s of the fused pass on
 #: one core (a 10,000-row batch of 200 replicates measured 0.11 s): the
@@ -80,9 +82,10 @@ def lehmer_uniforms(seeds, n_reps: int):
     import numpy as np
 
     # fmod, not %: SQL's remainder truncates toward zero like C's
-    r = np.arange(n_reps, dtype=np.int64) * REP_STRIDE
-    x = np.fmod(np.asarray(seeds, dtype=np.int64)[:, None] + r, LEHMER_M)
-    return np.fmod(x * LEHMER_A, LEHMER_M) / float(LEHMER_M)
+    x0 = np.fmod(np.asarray(seeds, dtype=np.int64), LEHMER_M - 1) + 1
+    # P_r moves a row's stream from its start to state r + 1
+    powers = np.array([pow(LEHMER_A, r + 1, LEHMER_M) for r in range(n_reps)], dtype=np.int64)
+    return np.fmod(x0[:, None] * powers, LEHMER_M) / float(LEHMER_M)
 
 
 def _check_args(term_cols, thresholds, n_reps: int) -> list[float]:
