@@ -7,10 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from youbike_etl_pipeline_spark.operators.bpe_train import (
-    bpe_train_merges,
-    learned_merges,
-)
+from youbike_etl_pipeline_spark.operators.bpe_train import bpe_train_merges
 from youbike_etl_pipeline_spark.operators.text import bpe_apply_symbols
 
 try:
@@ -121,7 +118,7 @@ def test_learned_table_reproduces_segmentation(spark, trained):
     merges never re-enable earlier merges (fused symbols are new), so
     rank-order replay equals the training order."""
     df, rows = trained
-    merges = learned_merges(rows)
+    merges = tuple((r["sym_a"], r["sym_b"]) for r in sorted(rows, key=lambda r: r["it"]))
     assert len(merges) == 5
     words = set()
     for r in df.select("text").collect():

@@ -23,7 +23,6 @@ from youbike_etl_pipeline_spark.operators.windows import (
     bfill,
     ffill,
     interpolate_linear,
-    interpolate_linear_pandas,
     sequence_windows,
 )
 
@@ -49,14 +48,6 @@ def test_interpolate_matches_pandas(spark):
         .tolist()
     )
     assert got == pytest.approx(expected)
-    # applyInPandas fallback agrees
-    got2 = (
-        interpolate_linear_pandas(df, key="k", ts="t", cols=["v"])
-        .orderBy("k", "t")
-        .toPandas()["v"]
-        .tolist()
-    )
-    assert got2 == pytest.approx(expected)
 
 
 def test_ffill_bfill_match_pandas(spark):
@@ -286,22 +277,6 @@ def test_multimodal_strict_stub_raises(spark, sf_small):
     )
 
 
-def test_minmax_roundtrip(spark):
-    from youbike_etl_pipeline_spark.ml.features import (
-        minmax_fit,
-        minmax_inverse,
-        minmax_transform,
-    )
-
-    df = spark.createDataFrame([(1.0,), (3.0,), (5.0,)], "x double")
-    bounds = minmax_fit(df, ["x"])
-    assert bounds == {"x": (1.0, 5.0)}
-    scaled = minmax_transform(df, bounds)
-    assert [r["x"] for r in scaled.orderBy("x").collect()] == [0.0, 0.5, 1.0]
-    back = minmax_inverse(scaled, bounds)
-    assert [r["x"] for r in back.orderBy("x").collect()] == [1.0, 3.0, 5.0]
-
-
 def test_ivf_topk_recall_vs_exact(spark, sf_small):
     from youbike_etl_pipeline_spark.operators.similarity import cosine_topk, ivf_topk
 
@@ -362,17 +337,6 @@ def test_range_band_join_rejects_degenerate_bands(spark):
         range_band_join(fact, zero_width, value_col="value")
     with pytest.raises(ValueError, match="bucket_width"):
         range_band_join(fact, zero_width, value_col="value", bucket_width=0.0)
-
-
-def test_salted_join_rejects_right_and_full(spark):
-    from youbike_etl_pipeline_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([(1, "x")], "k int, v string")
-    small = spark.createDataFrame([(1, "d")], "k int, d string")
-    with pytest.raises(ValueError, match="unsupported"):
-        salted_join(big, small, on="k", how="right")
-    with pytest.raises(ValueError, match="unsupported"):
-        salted_join(big, small, on="k", how="full")
 
 
 def test_range_band_join_matches_inequality_join(spark, sf_small):
@@ -549,36 +513,6 @@ def test_connected_components_dedup_clusters(spark, sf_small):
     for doc, canon in got.items():
         assert canon == expected.get(doc, doc)
     assert edge_list  # the fixture really has near-dup pairs
-
-
-def test_batch_predict_sequences_fake_and_real(spark):
-    from youbike_etl_pipeline_spark.ml.inference import (
-        batch_predict_sequences,
-        lstm_forward,
-        seeded_lstm_weights,
-    )
-    from youbike_etl_pipeline_spark.operators.windows import sequence_windows
-
-    df = spark.createDataFrame(
-        [("s1", i, float(i * 2)) for i in range(6)], "station_no string, t int, value double"
-    )
-    seq = sequence_windows(df, key="station_no", ts="t", feature_cols=["value"])
-    preds = batch_predict_sequences(seq, fake=True).collect()
-    # fake predictor = mean of the 3-step window's value feature
-    assert len(preds) == 3
-    assert preds[0]["prediction"] == pytest.approx((0.0 + 2.0 + 4.0) / 3)
-    # real mode: the distributed numpy LSTM must match a local forward pass
-    import numpy as np
-
-    w = seeded_lstm_weights(input_dim=1)
-    real = batch_predict_sequences(seq, fake=False, weights=w)
-    got = sorted(r["prediction"] for r in real.collect())
-    windows = [[0.0, 2.0, 4.0], [2.0, 4.0, 6.0], [4.0, 6.0, 8.0]]
-    want = sorted(
-        float(lstm_forward(np.array(win, dtype=np.float64).reshape(1, 3, 1), w)[0])
-        for win in windows
-    )
-    assert got == pytest.approx(want, abs=0.0)  # bit-identical, same math
 
 
 def test_lstm_forward_zero_weights_analytic():

@@ -9,7 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from youbike_etl_pipeline_spark.operators.skew import salted_group_agg, salted_join
+from youbike_etl_pipeline_spark.operators.skew import salted_group_agg
 from youbike_etl_pipeline_spark.sources.readers import read_events
 from youbike_etl_pipeline_spark.operators.windows import interpolate_linear
 
@@ -29,24 +29,6 @@ def test_salted_group_agg_matches_plain(spark, sf_small):
         ).collect()
     }
     assert plain == salted
-
-
-def test_salted_join_matches_plain(spark, sf_small):
-    orders = spark.read.parquet(f"{sf_small}/orders.parquet")
-    nation_of = spark.read.parquet(f"{sf_small}/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_nationkey"
-    )
-    plain = (
-        orders.join(nation_of, "o_custkey")
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    salted = (
-        salted_join(orders, nation_of, on="o_custkey", n_salts=8)
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 @settings(max_examples=12, deadline=None)

@@ -103,81 +103,6 @@ def test_foreach_batch_upsert_two_epochs(spark, sf_small, tmp_path):
     assert all(inserted[u] == 1 for u in only_first)
 
 
-# --- transformWithState (Spark 4 arbitrary-state API) ------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-def test_transform_with_state_processor_fold_logic():
-    """The MinMaxCountProcessor's fold is testable without the TWS runtime:
-    drive handleInputRows directly with a fake ValueState across three
-    'micro-batches' and check the state converges to the batch aggregate."""
-    import pandas as pd
-
-    from youbike_etl_pipeline_spark.streaming.stateful import MinMaxCountProcessor
-
-    proc = MinMaxCountProcessor()
-    proc._state = _FakeValueState()
-
-    batches = [
-        pd.DataFrame({"value": [5.0, 3.0]}),
-        pd.DataFrame({"value": [9.0, None]}),   # nulls don't count
-        pd.DataFrame({"value": []}),            # empty batch is a no-op
-        pd.DataFrame({"value": [1.0]}),
-    ]
-    out = None
-    for b in batches:
-        out = list(proc.handleInputRows((7,), iter([b]), None))[-1]
-    assert proc._state.get() == (1.0, 9.0, 4)
-    assert out.iloc[0].tolist() == [7, 1.0, 9.0, 4]
-
-
-def test_transform_with_state_stream_or_honest_gate(spark, sf_small):
-    """With protobuf present the TWS stream must equal the batch aggregate;
-    without it the operator must fail loudly with the documented message
-    (never crash an opaque worker)."""
-    import pytest as _pytest
-
-    from youbike_etl_pipeline_spark.streaming.stateful import (
-        _tws_available,
-        running_minmax_stats_stream,
-    )
-
-    if not _tws_available():
-        from youbike_etl_pipeline_spark.streaming.ingest import read_events_stream
-        from youbike_etl_pipeline_spark.streaming.stateful import running_minmax_stats
-
-        with _pytest.raises(NotImplementedError, match="protobuf"):
-            running_minmax_stats(read_events_stream(spark, sf_small))
-        return
-
-    from pyspark.sql import functions as F
-
-    got = running_minmax_stats_stream(spark, sf_small)
-    want = (
-        spark.read.parquet(f"{sf_small}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.count("value").alias("n"),
-        )
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_streaming_drift_partials_split_invariant(spark, sf_small, tmp_path):
     """st10's core claim: the per-dim drift partials merge EXACTLY across
     any micro-batch split. Stream the 'new' embeddings half as three files

@@ -66,7 +66,7 @@ def test_append_dedup_idempotent(spark):
 def test_upsert_insert_if_absent(spark):
     incoming = spark.createDataFrame([("s1", "x"), ("s2", "y"), ("s2", "y2")], "station_no string, name string")
     existing = spark.createDataFrame([("s1",)], "station_no string")
-    new = upsert_insert_if_absent(incoming, existing, "station_no")
+    new = upsert_insert_if_absent(incoming, existing, ["station_no"])
     rows = new.collect()
     assert len(rows) == 1 and rows[0]["station_no"] == "s2"
 
@@ -78,14 +78,6 @@ def test_rename_synonyms_guarded(spark):
     out = rename_synonyms(df)
     # first synonym wins; second is left alone to avoid duplicate targets
     assert out.columns == ["station_no", "StationUID", "v"]
-
-
-def test_coerce_numeric_invalid_to_null(spark):
-    from youbike_etl_pipeline_spark.operators.relational import coerce_numeric
-
-    df = spark.createDataFrame([("1.5",), ("oops",), (None,)], "x string")
-    vals = [r["x"] for r in coerce_numeric(df, ["x"]).collect()]
-    assert vals == [1.5, None, None]
 
 
 def test_dedup_by_key_deterministic_survivor(spark):

@@ -1,17 +1,12 @@
-"""ML layer: seeded K-Means profile clustering, linear-regression model
-evolution, MinMax scaling and sequence feature prep (SURVEY §2.7 M7/M8/F13,
-§2.5 W2), plus the torch batch-inference stub (M11)."""
+"""ML layer: seeded K-Means profile clustering, RFormula linear-regression
+R² fits (SURVEY §2.7 M7/M8), and numpy-LSTM batch inference over
+``mapInPandas`` (M11, ``ml.inference``)."""
 
 from .clustering import kmeans_cluster_embeddings, kmeans_hour_profiles
-from .features import minmax_fit, minmax_inverse, minmax_transform
-from .regression import linear_r2, model_evolution
+from .regression import linear_r2
 
 __all__ = [
     "kmeans_cluster_embeddings",
     "kmeans_hour_profiles",
-    "minmax_fit",
-    "minmax_inverse",
-    "minmax_transform",
     "linear_r2",
-    "model_evolution",
 ]

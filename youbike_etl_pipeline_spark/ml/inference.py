@@ -147,47 +147,3 @@ def lstm_batch_predict(
             )
 
     return df.select(*id_cols, *feature_cols).mapInPandas(fn, schema=out_schema)
-
-
-def batch_predict_sequences(
-    df: DataFrame,
-    fake: bool = True,
-    weights: LSTMWeights | None = None,
-) -> DataFrame:
-    """Score sliding-window sequences (W2 output, keyed by
-    ``station_no``) in Arrow batches.
-
-    ``fake=True`` predicts the mean of the window's first feature —
-    deterministic, keeps the distributed contract testable without a model.
-    ``fake=False`` runs the real numpy LSTM over each sequence's value
-    steps (``weights`` default to :func:`seeded_lstm_weights`).
-    """
-    out_schema = T.StructType(
-        [df.schema["station_no"], T.StructField("prediction", T.DoubleType(), True)]
-    )
-    w = weights or seeded_lstm_weights(input_dim=1)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if fake:
-                preds = pdf["sequence"].map(
-                    lambda seq: float(
-                        sum(step["value"] for step in seq) / max(len(seq), 1)
-                    )
-                    if seq is not None and len(seq) > 0
-                    else None
-                )
-            else:
-                preds = pdf["sequence"].map(
-                    lambda seq: float(
-                        lstm_forward(
-                            np.array([[ [step["value"]] for step in seq ]], dtype=np.float64),
-                            w,
-                        )[0]
-                    )
-                    if seq is not None and len(seq) > 0
-                    else None
-                )
-            yield pd.DataFrame({"station_no": pdf["station_no"], "prediction": preds})
-
-    return df.select("station_no", "sequence").mapInPandas(fn, schema=out_schema)

@@ -27,9 +27,3 @@ def linear_r2(df: DataFrame, formula: str) -> dict:
         "intercept": float(model.intercept),
         "coefficients": [float(c) for c in model.coefficients],
     }
-
-
-def model_evolution(df: DataFrame, formulas: list[str]) -> list[dict]:
-    """The M1→M2→M3 comparison: fit each formula on the same frame, return
-    the R² ladder (the reference's 0.02→0.92 story)."""
-    return [linear_r2(df, f) for f in formulas]

@@ -145,12 +145,3 @@ def bpe_train_merges(df: DataFrame, k: int = 5) -> DataFrame:
     return local_frame(
         spark, rows, "it int, sym_a string, sym_b string, pair_cnt bigint, vocab_tokens bigint"
     )
-
-
-def learned_merges(result_rows) -> "tuple[tuple[str, str], ...]":
-    """Collect a `bpe_train_merges` result into the merge-table shape
-    `bpe_apply_symbols` consumes (ordered by iteration)."""
-    return tuple(
-        (r["sym_a"], r["sym_b"])
-        for r in sorted(result_rows, key=lambda r: r["it"])
-    )

@@ -18,12 +18,6 @@ from ..functions.scalar import haversine_m
 from .skew import materialize, quantile_buckets
 
 
-def fact_dim_join(fact: DataFrame, dim: DataFrame, on: str | list[str]) -> DataFrame:
-    """Fact ⋈ small-dimension left join (J1), dimension broadcast
-    (reference ``notebooks/03_data_merge.ipynb:L74``)."""
-    return fact.join(F.broadcast(dim), on=on, how="left")
-
-
 def hour_bucket_join(
     fact: DataFrame,
     hourly: DataFrame,
@@ -41,20 +35,6 @@ def hour_bucket_join(
     keyed = fact.withColumn("__hour_key", F.date_trunc("hour", F.col(fact_ts)))
     rhs = hourly.withColumnRenamed(hourly_ts, "__hour_key")
     return keyed.join(F.broadcast(rhs), on="__hour_key", how=how).drop("__hour_key")
-
-
-def anti_join_new_rows(incoming: DataFrame, existing: DataFrame, on: str | list[str]) -> DataFrame:
-    """Anti join (J4/S9): incoming rows whose key does not exist yet
-    (reference ``etl_job.py:121-122``)."""
-    on_cols = [on] if isinstance(on, str) else on
-    return incoming.join(F.broadcast(existing.select(*on_cols).distinct()), on=on_cols, how="left_anti")
-
-
-def semi_join_existing(df: DataFrame, other: DataFrame, on: str | list[str]) -> DataFrame:
-    """Semi join — EXISTS counterpart of J4 (free in Spark; SURVEY §2.3 notes
-    the reference only uses anti)."""
-    on_cols = [on] if isinstance(on, str) else on
-    return df.join(other.select(*on_cols).distinct(), on=on_cols, how="left_semi")
 
 
 def lookup_join(df: DataFrame, mapping: dict, key: str, value_name: str) -> DataFrame:
@@ -129,6 +109,47 @@ def nearest_mrt_distance(stations: DataFrame, mrt: DataFrame) -> DataFrame:
     )
 
 
+def _asof_union(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    left_ts: str,
+    right_ts: str,
+    right_values: list[str],
+    left_side: int,
+) -> DataFrame:
+    """The as-of joins' one input frame: both sides as (``__k``, ``__ts``,
+    ``__side``, ``__lrow``, ``__rv_*``) rows, unioned. Left rows carry
+    their whole row in the ``__lrow`` struct and null right values; right
+    rows carry a null ``__lrow``. ``__side`` is ``left_side`` for left
+    rows and ``1 - left_side`` for right rows, so it orders timestamp ties
+    for the direction of the carry."""
+    l_tagged = left.select(
+        F.col(on).alias("__k"),
+        F.col(left_ts).alias("__ts"),
+        F.lit(left_side).alias("__side"),
+        F.struct(*left.columns).alias("__lrow"),
+        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__rv_{c}") for c in right_values],
+    )
+    r_tagged = right.select(
+        F.col(on).alias("__k"),
+        F.col(right_ts).alias("__ts"),
+        F.lit(1 - left_side).alias("__side"),
+        F.lit(None).cast(l_tagged.schema["__lrow"].dataType).alias("__lrow"),
+        *[F.col(c).alias(f"__rv_{c}") for c in right_values],
+    )
+    return l_tagged.unionByName(r_tagged)
+
+
+def _asof_unpack(carried: DataFrame, lcols: list[str], right_values: list[str]) -> DataFrame:
+    """The left row's columns out of ``__lrow``, then each carried
+    ``__c_*`` value under its right column's name."""
+    return carried.select(
+        *[F.col(f"__lrow.{c}").alias(c) for c in lcols],
+        *[F.col(f"__c_{c}").alias(c) for c in right_values],
+    )
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -167,22 +188,7 @@ def asof_join(
     meaning. Same nondeterminism class as the unbucketed op when two
     right rows tie exactly on (key, ts): one of them wins.
     """
-    lcols = [c for c in left.columns]
-    l_tagged = left.select(
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.struct(*lcols).alias("__lrow"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__rv_{c}") for c in right_values],
-    )
-    r_tagged = right.select(
-        F.col(on).alias("__k"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.lit(None).cast(l_tagged.schema["__lrow"].dataType).alias("__lrow"),
-        *[F.col(c).alias(f"__rv_{c}") for c in right_values],
-    )
-    unioned = l_tagged.unionByName(r_tagged)
+    unioned = _asof_union(left, right, on, left_ts, right_ts, right_values, 1)
     if bucket_seconds is None:
         w = (
             Window.partitionBy("__k")
@@ -198,10 +204,7 @@ def asof_join(
                 for c in right_values
             ],
         ).filter(F.col("__side") == 1)
-        return carried.select(
-            *[F.col(f"__lrow.{c}").alias(c) for c in lcols],
-            *[F.col(f"__c_{c}").alias(c) for c in right_values],
-        )
+        return _asof_unpack(carried, left.columns, right_values)
     # bucketed path: local carry within (key, bucket), then a small
     # (keys × buckets) frame carries each bucket's last right value across
     # bucket boundaries — global carry = coalesce(local, carry-in)
@@ -265,10 +268,7 @@ def asof_join(
             ],
         )
     )
-    return carried.select(
-        *[F.col(f"__lrow.{c}").alias(c) for c in lcols],
-        *[F.col(f"__c_{c}").alias(c) for c in right_values],
-    )
+    return _asof_unpack(carried, left.columns, right_values)
 
 
 def asof_join_forward(
@@ -294,22 +294,7 @@ def asof_join_forward(
     a partition key is coarse. Right rows sort before left rows on
     timestamp ties in the reversed order, so an equal-timestamp right row
     is inside the left row's frame (inclusive semantics preserved)."""
-    lcols = [c for c in left.columns]
-    l_tagged = left.select(
-        F.col(on).alias("__k"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.struct(*lcols).alias("__lrow"),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__rv_{c}") for c in right_values],
-    )
-    r_tagged = right.select(
-        F.col(on).alias("__k"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast(l_tagged.schema["__lrow"].dataType).alias("__lrow"),
-        *[F.col(c).alias(f"__rv_{c}") for c in right_values],
-    )
-    unioned = l_tagged.unionByName(r_tagged)
+    unioned = _asof_union(left, right, on, left_ts, right_ts, right_values, 0)
     w = (
         Window.partitionBy("__k")
         # desc_nulls_first mirrors the backward join's nulls-first group:
@@ -325,10 +310,7 @@ def asof_join_forward(
         "__lrow",
         *[F.last(f"__rv_{c}", ignorenulls=True).over(w).alias(f"__c_{c}") for c in right_values],
     ).filter(F.col("__side") == 0)
-    return carried.select(
-        *[F.col(f"__lrow.{c}").alias(c) for c in lcols],
-        *[F.col(f"__c_{c}").alias(c) for c in right_values],
-    )
+    return _asof_unpack(carried, left.columns, right_values)
 
 
 def range_band_join(

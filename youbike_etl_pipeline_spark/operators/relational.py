@@ -19,11 +19,6 @@ STATION_KEY_SYNONYMS = {
 }
 
 
-def project(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Column projection (P1) — reference ``etl_job.py:99,103``."""
-    return df.select(*columns)
-
-
 def rename_synonyms(df: DataFrame) -> DataFrame:
     """Guarded synonym rename (P3): apply ``old → new`` only when ``old``
     exists and ``new`` is not already present, avoiding duplicate targets
@@ -50,16 +45,3 @@ def dedup_by_key(df: DataFrame, keys: list[str], order_by: list[str] | None = No
     return (
         df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
-
-
-def distinct_pairs(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Distinct projection (P5) — reference
-    ``notebooks/01_youbike_analysis.ipynb:L684``."""
-    return df.select(*columns).distinct()
-
-
-def coerce_numeric(df: DataFrame, columns: list[str]) -> DataFrame:
-    """``pd.to_numeric(errors='coerce')`` equivalent (P12): ``try_cast`` maps
-    unparseable values to null instead of failing
-    (reference ``notebooks/01_youbike_analysis.ipynb:L65``)."""
-    return df.withColumns({c: F.col(c).try_cast("double") for c in columns})

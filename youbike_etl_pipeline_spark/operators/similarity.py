@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity, dot_product
 from .dedup import _exact_collapse, _expand_collapsed_pairs
-from .skew import auto_sample_mod, cheap_row_count, materialize
+from .skew import hash_sample, materialize
 
 
 def _query_lit(query_vec: list[float]) -> Column:
@@ -609,7 +609,7 @@ def jl_projection_audit(
     Spark's signed long and DuckDB's UBIGINT) — deterministic,
     engine-portable, pair work ÷ M².
 
-    Default ``"auto"`` (round-6 verdict: the knob must self-size) derives M
+    Default ``"auto"`` (``skew.hash_sample``, which owns the routing) derives M
     from a cheap row count (parquet footers when ``df`` is a bare scan —
     zero Spark jobs — else one linear count; ``skew.cheap_row_count``) so
     the sampled pair estimate ``n²/(29·31·M²)`` stays inside
@@ -620,35 +620,10 @@ def jl_projection_audit(
     Pass ``None`` to force exact at any size (the graded e6 contract) or an
     explicit int to pin the budget by hand (the graded e6b twin, M=4).
     """
-    from ..operators.dedup import md5_token_hash64
-
     planes = _hyperplanes(64, 8, seed=7)
-    base = df
-    if isinstance(hash_sample_mod, str):
-        if hash_sample_mod != "auto":
-            raise ValueError(
-                f"jl_projection_audit: hash_sample_mod={hash_sample_mod!r} "
-                "— expected an int, None (exact), or 'auto'"
-            )
-        hash_sample_mod = auto_sample_mod(
-            cheap_row_count(base),
-            pair_budget,
-            pair_fraction=1.0 / (29 * 31),
-        )
-    if hash_sample_mod is not None and int(hash_sample_mod) <= 1:
-        # mod 1 keeps every row (pmod(h, 1) == 0 identically) — skip the
-        # filter so the auto path's small-input plan matches exact/None
-        hash_sample_mod = None
-    if hash_sample_mod is not None:
-        base = base.filter(
-            F.pmod(
-                md5_token_hash64(F.col("vec_id").cast("string")).bitwiseAND(
-                    F.lit(2147483647)
-                ),
-                F.lit(int(hash_sample_mod)),
-            )
-            == 0
-        )
+    base = hash_sample(
+        df, "vec_id", hash_sample_mod, pair_budget, 1.0 / (29 * 31), "jl_projection_audit"
+    )
     a = base.filter(F.col("vec_id") % 29 == 0).select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
     )

@@ -1,14 +1,12 @@
 """Skew mitigation for hot keys (SURVEY §4; 100 TB posture).
 
 AQE's skew-join handling (`spark.sql.adaptive.skewJoin.enabled`, on in the
-session factory) covers sort-merge joins at runtime. These helpers cover the
-cases AQE does not: skewed *aggregations* (one key dominating a groupBy) and
-skewed *broadcast-side* joins where the hot key must be spread manually.
+session factory) splits skewed sort-merge join partitions at runtime. The
+salted aggregation covers what AQE does not: one key dominating a groupBy.
 
 Salting pattern: append a salt in [0, n) to the hot key, aggregate partially
 per (key, salt) — map-side combine already shrinks each salt bucket — then
-re-aggregate per key. For joins, the small side is exploded ×n so every
-salted fact row still finds its match.
+re-aggregate per key.
 """
 
 from __future__ import annotations
@@ -17,26 +15,6 @@ import os as _os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_BYTE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _byte_conf(spark, key: str, default: int) -> int:
-    """Parse a Spark byte-size conf value ("128m", "1g", "134217728",
-    "128mb") into bytes, defaulting on absence or parse failure."""
-    try:
-        raw = str(spark.conf.get(key, str(default))).strip().lower()
-    except Exception:
-        return default
-    raw = raw.removesuffix("b")
-    mult = 1
-    if raw and raw[-1] in _BYTE_SUFFIX:
-        mult = _BYTE_SUFFIX[raw[-1]]
-        raw = raw[:-1]
-    try:
-        return int(raw) * mult
-    except ValueError:
-        return default
 
 
 def with_salt(df: DataFrame, n_salts: int = 16) -> DataFrame:
@@ -69,35 +47,6 @@ def salted_group_agg(
         *[recombine[fn](out).alias(out) for out, (_, fn) in aggs.items()]
     )
     return stage2
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-proof equi-join: salt the big side, explode the small side ×
-    ``n_salts`` so each salted partition finds its match, join on
-    (key, salt), drop the salt. Use when one key dominates ``big`` and the
-    join cannot broadcast (otherwise prefer ``F.broadcast``/AQE).
-
-    Only ``inner``/``left``/``left_semi``/``left_anti`` are supported: the
-    small side is replicated ×``n_salts``, so right/full joins would emit
-    ``n_salts`` copies of every unmatched small-side row."""
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join: how={how!r} unsupported — the exploded small side "
-            "duplicates unmatched rows under right/full semantics; use "
-            "inner/left/left_semi/left_anti"
-        )
-    big_salted = with_salt(big, n_salts)
-    small_exploded = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    joined = big_salted.join(small_exploded, on=[on, "__salt"], how=how)
-    return joined.drop("__salt")
 
 
 def widen_narrow_scan(
@@ -165,9 +114,7 @@ def widen_narrow_scan(
             total_bytes = sum(
                 _os.path.getsize(f.removeprefix("file://")) for f in files
             )
-            max_split = _byte_conf(
-                spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
-            )
+            max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
             width = max(width, -(-total_bytes // max_split))
         except (OSError, ArrowInvalid):
             # remote scheme / unreadable or corrupt footer: fall back to
@@ -297,8 +244,8 @@ def cheap_row_count(df: DataFrame) -> int:
     to ``df.count()``: one exact linear job.
 
     This is the sizing input for budget-guarded defaults (the
-    ``hash_sample_mod="auto"`` routing in ``stats.inference.kendall_tau_b``
-    and ``operators.similarity.jl_projection_audit``): the count decides a
+    ``hash_sample_mod="auto"`` routing of :func:`hash_sample`, which
+    ``kendall_tau_b`` and ``jl_projection_audit`` use): the count decides a
     sampling modulus, so it must be cheap on the common scan case but is
     allowed to cost a linear pass when the input is already derived."""
     try:
@@ -339,9 +286,9 @@ def auto_sample_mod(
     ``(target/2, target]`` for any ``n_rows > target`` — the realized pair
     work is flat in ``[budget/4, budget]`` across ANY scale-up, which is
     the contract ``tests/test_auto_budget.py`` pins across six decades.
-    Round-6 verdict item: this turns the hand-tuned ``hash_sample_mod``
-    knob into a self-sizing default so a user who forgets it at 100× gets
-    the flat-budget estimate, not the exact path's pair quadratic."""
+    This makes ``hash_sample_mod`` a self-sizing default, so a caller who
+    leaves it unset at 100× gets the flat-budget estimate, not the exact
+    path's pair quadratic."""
     import math
 
     if pair_budget <= 0:
@@ -352,6 +299,40 @@ def auto_sample_mod(
     if n_rows <= target:
         return 1
     return int(math.ceil(n_rows / target))
+
+
+def hash_sample(
+    df: DataFrame,
+    id_col: str,
+    mod: int | None | str,
+    pair_budget: int,
+    pair_fraction: float,
+    caller: str,
+) -> DataFrame:
+    """The ``hash_sample_mod`` routing of the pair operators: keep the rows
+    whose md5-derived hash of ``id_col`` has LOW 31 BITS ≡ 0 (mod M), a
+    deterministic 1/M entity sample that shrinks pair work by M². The
+    31-bit mask keeps the predicate identical across Spark's signed long
+    and DuckDB's UBIGINT (signed pmod diverges on negative hashes).
+
+    ``mod`` is an int M, ``None`` (exact), or ``"auto"``: M from
+    :func:`auto_sample_mod` over :func:`cheap_row_count` of ``df``. Any
+    other string raises ``ValueError`` naming ``caller`` before any job.
+    M ≤ 1 keeps every row, so the filter is skipped and the plan is the
+    exact one."""
+    if isinstance(mod, str):
+        if mod != "auto":
+            raise ValueError(
+                f"{caller}: hash_sample_mod={mod!r} — "
+                "expected an int, None (exact), or 'auto'"
+            )
+        mod = auto_sample_mod(cheap_row_count(df), pair_budget, pair_fraction)
+    if mod is None or int(mod) <= 1:
+        return df
+    from .dedup import md5_token_hash64
+
+    h = md5_token_hash64(F.col(id_col).cast("string")).bitwiseAND(F.lit(2147483647))
+    return df.filter(F.pmod(h, F.lit(int(mod))) == 0)
 
 
 def repartition_for_rows(df: DataFrame, est_rows: int, *cols: str) -> DataFrame:
@@ -369,9 +350,9 @@ def repartition_for_rows(df: DataFrame, est_rows: int, *cols: str) -> DataFrame:
     other side to the same count, so the widened layout propagates
     through the join instead of adding an extra exchange.
 
-    First applied as w17's scaffold fix (16.7× → 7.5× at the 100× probe);
-    generalized here for the q21-class fact-fact joins the probe caught
-    spilling their three sort-merge passes at 32 partitions.
+    w17's scaffold (16.7× → 7.5× at the 100× probe) and the q21-class
+    fact-fact joins, whose three sort-merge passes spilled at 32
+    partitions, size their shuffles with it.
     """
     spark = df.sparkSession
     shuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))

@@ -8,9 +8,6 @@ timestamps collide.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -108,32 +105,6 @@ def interpolate_linear(
         )
         out = out.withColumn(c, filled).drop("__pv", "__pp", "__nv", "__np")
     return out.drop("__pos")
-
-
-def interpolate_linear_pandas(
-    df: DataFrame, key: str, ts: str, cols: list[str]
-) -> DataFrame:
-    """``applyInPandas`` fallback for P11 — byte-exact pandas
-    ``interpolate('linear').ffill().bfill()`` semantics per series, for
-    parity testing the window formulation (grouped-map, Arrow-batched)."""
-    schema = df.schema
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # stable sort: the default quicksort permutes timestamp ties
-        # run-to-run, breaking the module's determinism invariant
-        pdf = pdf.sort_values(ts, kind="mergesort")
-        pdf[cols] = pdf[cols].interpolate("linear").ffill().bfill()
-        return pdf
-
-    return df.groupBy(key).applyInPandas(fn, schema=schema)
-
-
-def deterministic_sample(df: DataFrame, key: str) -> DataFrame:
-    """Systematic sample (W7 analogue): keep rows where ``key % 10 == 0``.
-    Unlike ``df.sample(seed)``, reproducible across engines and
-    partitionings — the engine also exposes native ``df.sample`` for
-    statistical sampling."""
-    return df.filter((F.col(key) % 10) == 0)
 
 
 def sessionize(

@@ -22,7 +22,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-__all__ = ["canonical_frame", "frames_equal", "diff_frames"]
+__all__ = ["canonical_frame", "diff_frames"]
 
 
 class UnhashableCellError(TypeError):
@@ -58,11 +58,6 @@ def spark_to_pandas(rows, columns) -> pd.DataFrame:
     """Build the Spark-side frame the way the driver does: from collected
     rows (NOT toPandas — Arrow would pick different dtypes for null ints)."""
     return pd.DataFrame([tuple(r) for r in rows], columns=list(columns))
-
-
-def frames_equal(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> bool:
-    a, b = canonical_frame(spark_pd), canonical_frame(duck_pd)
-    return list(a.columns) == list(b.columns) and a.equals(b)
 
 
 def diff_frames(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> str | None:

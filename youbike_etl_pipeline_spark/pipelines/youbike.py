@@ -30,7 +30,7 @@ from ..functions.scalar import (
     rain_category,
     to_utc_from_tz,
 )
-from ..operators.joins import fact_dim_join, hour_bucket_join
+from ..operators.joins import hour_bucket_join
 from ..operators.windows import lag_features
 from ..schemas import WEATHER_RAW_HOURLY
 from ..sources.http import snapshot_to_df
@@ -69,7 +69,7 @@ def ingest_snapshot(
         F.col("available_return_bikes").alias("spaces_available"),
         to_utc_from_tz(F.to_timestamp("srcUpdateTime")).alias("record_time"),
     )
-    new_info = upsert_insert_if_absent(info, existing_info, "station_no")
+    new_info = upsert_insert_if_absent(info, existing_info, ["station_no"])
     new_status = append_dedup(status, existing_status, ["station_no", "record_time"])
     return new_info, new_status
 
@@ -108,7 +108,7 @@ def build_gold_table(
     ``filling_rate`` (zero-guarded), ``hour``, ``is_weekday``, ``is_peak``,
     ``rain_cat``, ``filling_rate_lag1`` (the R²-lifting lag feature).
     """
-    merged = fact_dim_join(status, info, on="station_no")
+    merged = status.join(F.broadcast(info), on="station_no", how="left")
     merged = hour_bucket_join(
         merged, weather, fact_ts="record_time", hourly_ts="record_time", how="left"
     )

@@ -238,7 +238,7 @@ def SQL_Q6(expr: str) -> str:
 
 
 #: Spark mirror of :func:`SQL_Q6` — the one shared floor-quantizer
-#: (hoisted to the operators layer, round-5 advice).
+#: (hoisted to the operators layer).
 q6 = agg.floor_quantize6
 
 
@@ -298,7 +298,7 @@ def flagship_segment_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p1_p2_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 97 == 0)
-    return rel.project(li, ["l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"]).toDF(
+    return li.select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag").toDF(
         "order_key", "line_no", "qty", "flag"
     )
 
@@ -329,7 +329,7 @@ def p4_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Distinct pair projection.",
 )
 def p5_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rel.distinct_pairs(_t(spark, sf_dir, "customer"), ["c_mktsegment", "c_nationkey"])
+    return _t(spark, sf_dir, "customer").select("c_mktsegment", "c_nationkey").distinct()
 
 
 @register(
@@ -477,8 +477,8 @@ def j2_hour_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j4_anti_join_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
-    new = oj.anti_join_new_rows(
-        cust.withColumnRenamed("c_custkey", "o_custkey"), orders, on="o_custkey"
+    new = cust.withColumnRenamed("c_custkey", "o_custkey").join(
+        F.broadcast(orders.select("o_custkey").distinct()), on=["o_custkey"], how="left_anti"
     )
     return new.select(F.col("o_custkey").alias("c_custkey"), "c_nationkey")
 
@@ -496,7 +496,7 @@ def j4_anti_join_customers_without_orders(spark: SparkSession, sf_dir: str) -> D
 def j4b_semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").withColumnRenamed("c_custkey", "o_custkey")
     orders = _t(spark, sf_dir, "orders")
-    active = oj.semi_join_existing(cust, orders, on="o_custkey")
+    active = cust.join(orders.select("o_custkey").distinct(), on=["o_custkey"], how="left_semi")
     return active.groupBy("c_nationkey").agg(F.count(F.lit(1)).alias("n_active"))
 
 
@@ -934,7 +934,7 @@ def w6_rank_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is the statistical variant (not cross-engine reproducible).",
 )
 def w7_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = ow.deterministic_sample(_t(spark, sf_dir, "events"), key="event_id")
+    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), agg.decimal_sum("value").alias("sum_value")
     )
@@ -1033,7 +1033,7 @@ def p10_ffill_per_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey_rows="P11",
     description="Groupwise linear interpolation + ffill + bfill — the window "
-    "bracketing formulation (applyInPandas fallback in operators.windows).",
+    "bracketing formulation, four window passes and no Python on the data path.",
 )
 def p11_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -1306,8 +1306,8 @@ def m2_m3_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="One-way ANOVA F + eta-squared, closed-form SSB/SSW from "
     "re-aggregated exact per-group sums; derived doubles floor-quantized "
     "(ss_* to integers, f_stat/eta_sq to 6 dp) so engine-level ulp noise "
-    "cannot flip the driver hash (round-1 lesson: data is reseeded per "
-    "round, so outputs must be robust to any seed).",
+    "cannot flip the driver hash (the data is reseeded, so outputs must be "
+    "robust to any seed).",
 )
 def m4_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..stats.inference import anova_oneway
@@ -1863,7 +1863,7 @@ def _t7_minhash_sql() -> str:
     survey_rows="ext:dedup-minhash-lsh",
     description="MinHash(32) + LSH(8 bands) candidate generation with exact "
     "Jaccard verify — the scale path for t2 (recall checked in tests). "
-    "Oracle upgrade (round-4, judge item 6): the graded query runs the "
+    "The graded query runs the "
     "portable hash family (md5-derived 30-bit base + (a*x+b) mod P "
     "universal mins, bit-identical to the generated DuckDB SQL), so "
     "signatures, banding, candidates AND the Jaccard verify are all "
@@ -1933,7 +1933,7 @@ def _t8_simhash_sql() -> str:
     _t8_simhash_sql(),
     survey_rows="ext:dedup-simhash",
     description="SimHash64 near-dup pairs (Hamming <= 12) via 16-bit chunk "
-    "banding + popcount verify. Oracle upgrade (round-3, judge item 8): the "
+    "banding + popcount verify. The "
     "graded query uses the md5-derived portable token hash (bit-identical "
     "to DuckDB md5_number_lower — see operators.dedup.md5_token_hash64), "
     "so the full pipeline (64 ±1 bit-sums → signature → chunk banding → "
@@ -2248,8 +2248,8 @@ def _mm2_decode_sql(
     description="REAL image decode in Arrow-batched mapInPandas: "
     "deterministic PPM payloads attached per doc, parsed with the pure-"
     "numpy P6 decoder (no codec lib), per-channel mean/std features out. "
-    "Compressed formats stay codec-gated (NotImplementedError). Oracle "
-    "upgrade (round-4, judge item 6): the fixture generator is md5-byte "
+    "Compressed formats stay codec-gated (NotImplementedError). The "
+    "fixture generator is md5-byte "
     "based, so DuckDB re-derives every pixel and the feature math "
     "analytically — full encode/decode/feature parity, not rows-only.",
 )
@@ -2400,18 +2400,18 @@ def ml1_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two formulas (the reference's M1->M3 comparison shape).",
 )
 def ml2_regression_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..ml.regression import model_evolution
+    from ..ml.regression import linear_r2
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_extendedprice", "l_quantity", "l_discount", "l_returnflag"
     )
-    results = model_evolution(
-        li,
-        [
+    results = [
+        linear_r2(li, f)
+        for f in (
             "l_extendedprice ~ l_discount",
             "l_extendedprice ~ l_quantity + l_discount + l_returnflag",
-        ],
-    )
+        )
+    ]
     return local_frame(
         spark,
         [(r["formula"], float(round(r["r2"], 6)), r["n"]) for r in results],
@@ -2935,8 +2935,8 @@ def st3_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey_rows="ext:similarity-ivf",
     description="IVF top-k: KMeans cells + n_probe nearest cells scanned "
-    "(partition-pruned at scale). Oracle upgrade (round-3, judge item 8): "
-    "graded at FULL probe (n_probe == n_centroids), where IVF must equal "
+    "(partition-pruned at scale). Graded at FULL probe (n_probe == "
+    "n_centroids), where IVF must equal "
     "the exact brute-force top-k — the whole cell/centroid/probe machinery "
     "runs and the hash proves it lossless; the pruned-probe path is "
     "recall-tested vs exact in tests/test_similarity.py.",
@@ -2989,7 +2989,6 @@ def s4_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def gold_wide_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.scalar import shortage_label
-    from ..operators.joins import fact_dim_join
 
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
@@ -3080,8 +3079,8 @@ def m7_simple_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey_rows="§2.8 custom stateful (applyInPandasWithState)",
     description="Custom stateful streaming operator: per-user running max & "
-    "count maintained in explicit GroupState across micro-batches. Oracle "
-    "upgrade (round-3): the FINAL state after the finite stream drains must "
+    "count maintained in explicit GroupState across micro-batches. The "
+    "FINAL state after the finite stream drains must "
     "equal the batch aggregate — max/count are order-insensitive folds, so "
     "the equality is exact and the stateful machinery (state store, update "
     "mode, per-key refresh) is what the hash actually proves.",
@@ -3090,15 +3089,6 @@ def st4_stateful_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_user_stats_stream
 
     return running_user_stats_stream(spark, sf_dir)
-
-
-# NB: a transformWithState twin of st4 exists (streaming/stateful.py::
-# running_minmax_stats_stream, the Spark-4 arbitrary-state API with named
-# ValueState variables) but is NOT registered as a corpus query: the TWS
-# Python runner needs `protobuf` (pyspark.sql.streaming.proto), which this
-# container lacks and cannot install. The processor's fold logic is
-# unit-tested directly; the streaming integration test skips without the
-# dependency (tests/test_streaming_recovery.py::test_transform_with_state*).
 
 
 # ===========================================================================
@@ -4813,7 +4803,7 @@ def t19_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4 training-pipeline extensions: chunking, vocab, TF-IDF,
+# Training-pipeline extensions: chunking, vocab, TF-IDF,
 # embedding quantization, sequence packing
 # ===========================================================================
 
@@ -5136,7 +5126,7 @@ def t24_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:canonical selection (best-quality survivor per dedup cluster)",
     description="Quality-aware canonical selection: per near-dup cluster "
     "(t10's components, pair graph shared and checkpointed once per "
-    "session), keep the best-quality member (round-6 quality, doc_id "
+    "session), keep the best-quality member (quality score, doc_id "
     "tie-break) and report kept/removed per language — the 'which copy "
     "survives dedup' policy step. One window over the cluster id on top "
     "of the shared graph; oracle recomputes the exact closure + quality "
@@ -5199,7 +5189,7 @@ def _mm3_audio_sql() -> str:
     samples are md5-digest bytes (little-endian int16 pairs), so the oracle
     re-derives every sample with md5 hex-digit arithmetic and recomputes
     peak / zero-crossings (exact ints) and RMS (exact-int sum, /256 is an
-    exact FP division, sqrt is correctly rounded — round-6 for safety)."""
+    exact FP division, sqrt is correctly rounded)."""
     n = mm.AUDIO_SAMPLES * 2
     header_len = 44  # RIFF(12) + fmt(24) + data header(8)
     return f"""
@@ -5549,7 +5539,7 @@ def m13_pearson_sufficient_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# TPC-H round-out (round 4): Q4/Q6/Q8/Q10/Q14/Q15/Q22 shapes adapted to the
+# TPC-H round-out: Q4/Q6/Q8/Q10/Q14/Q15/Q22 shapes adapted to the
 # testdata's column subset (no partsupp / commitdate / receiptdate / phone —
 # the adaptations substitute semantically-equivalent predicates and keep the
 # plan shape the original exercises).
@@ -6025,7 +6015,7 @@ def ev2_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# TPC-H completion (round 4b): Q2/Q9/Q11/Q12/Q16/Q21 shapes — the last six
+# TPC-H completion: Q2/Q9/Q11/Q12/Q16/Q21 shapes — the last six
 # of the 22. The testdata has no partsupp table and no commit/receipt dates,
 # so the partsupp-driven predicates are re-derived from lineitem (unit price
 # = l_extendedprice / l_quantity as the supply-cost proxy; supplier-per-part
@@ -6330,7 +6320,7 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Training-pipeline extensions (round 4c): sequence construction, negative
+# Training-pipeline extensions: sequence construction, negative
 # sampling, and group-relative quality filtering — the remaining data-prep
 # shapes a large-scale training pipeline runs that the corpus didn't yet
 # cover. All three are bounded-output aggregations (no unbounded collect).
@@ -7039,7 +7029,7 @@ def m14_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4d training-pipeline extensions: corpus-level boilerplate-segment
+# Training-pipeline extensions: corpus-level boilerplate-segment
 # detection, trained-LM perplexity filtering, content-addressed sharding
 # ===========================================================================
 
@@ -7299,7 +7289,7 @@ def t33_bpe_pair_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import widen_narrow_scan
 
     docs = _t(spark, sf_dir, "documents")
-    # widen before the word→char-pair double explode: the r12 profile
+    # widen before the word→char-pair double explode: a profile
     # measured the whole 949 k-pair build + partial aggregate on ONE real
     # task (1.2 s single-task aggregation build) — per-footer-row cost
     # ≈ 0.28 ms, so rows_per_task=512 sizes ~0.15 s tasks (guide §2.5)
@@ -7371,7 +7361,7 @@ def t32_content_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4e training-pipeline extensions: lexical retrieval (BM25),
+# Training-pipeline extensions: lexical retrieval (BM25),
 # hashed-feature quality classifier, n-gram novelty, time-decay features
 # ===========================================================================
 
@@ -8102,7 +8092,7 @@ def ev5_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one routing probe + ONE aggregation for all nine thresholds instead
     # of three group_quantiles calls (3 probe counts + 3 agg passes + 2
-    # crossJoins — r11 profile: 30 jobs for a 1.4 s query): per-column
+    # crossJoins — 30 jobs for a 1.4 s query): per-column
     # percentiles are independent aggregates, so computing them in a single
     # agg over the same frame is answer-identical.
     exact = agg.route_exact_percentile(rfm, [], agg.EXACT_PERCENTILE_MAX_GROUP_ROWS)
@@ -9608,7 +9598,7 @@ def t38_sketch_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact_dedup_first=False: the graded audit measures the RAW candidate
     # distribution, byte-identical to the oracle; the duplicate-heavy-corpus
     # routing (collapse first) is the operator's opt-in parameter — see the
-    # operator docstring and SCALING.md's round-5 probe.
+    # operator docstring and SCALING.md's 100× probe.
     return sketch_accuracy_audit(
         docs, bands=8, exact_dedup_first=False
     )
@@ -10699,7 +10689,7 @@ def t40_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 4 — model/retrieval evaluation + corpus-health metrics:
+# Model/retrieval evaluation + corpus-health metrics:
 # rank-based ROC AUC (the Mann-Whitney identity, computed on a score
 # HISTOGRAM so no global row-level sort is needed), Jensen-Shannon
 # distribution drift, Chao1 vocabulary-richness estimation, and OHLC bars
@@ -11028,7 +11018,7 @@ def w22_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 5 — ANN index evaluation (recall@k of the LSH candidate
+# ANN index evaluation (recall@k of the LSH candidate
 # set vs exact top-k), exponentially-weighted smoothing, a declarative
 # column-profiling DQ report, and Gopher-style document quality rules.
 # ===========================================================================
@@ -11384,8 +11374,8 @@ def t42_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ratios guarded INSIDE a when: ANSI mode (Spark 4 default) raises
     # DIVIDE_BY_ZERO even when the zero branch is masked by a sibling `&`
     # conjunct (no short-circuit in codegen) — a whitespace-only doc has
-    # n_words = 0 and crashed the whole query (round-7 reseed-fixture find;
-    # /root/testdata happened to contain no zero-token non-null doc).
+    # n_words = 0 and crashed the whole query (a reseeded fixture found it;
+    # the shipped testdata had no zero-token non-null doc).
     # CaseWhen branches ARE lazily evaluated, so the guarded form never
     # divides; the NULL ratio then fails the outer when() to 0 exactly
     # like the oracle's CASE.
@@ -11421,7 +11411,7 @@ def t42_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 6 — embedding-space and split health: kNN label-consistency
+# Embedding-space and split health: kNN label-consistency
 # (Cleanlab-style noisy-label audit), Fisher-style class separation,
 # context-length truncation audit, rolling-origin backtest folds.
 # ===========================================================================
@@ -11498,8 +11488,8 @@ def e3_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
     # ann_bits=None: the graded audit is the EXACT all-pairs search on the
     # vec_id%5 sample (the oracle needs the same pairs). Because the sample
-    # is PROPORTIONAL, the exact path is quadratic at scale (the round-5
-    # 100x probe aborted it); the operator's ann_bits parameter is the
+    # is PROPORTIONAL, the exact path is quadratic at scale (the 100x
+    # probe aborted it); the operator's ann_bits parameter is the
     # callable LSH-candidate routing for that regime.
     return knn_label_consistency(emb, k=5, ann_bits=None)
 
@@ -11808,7 +11798,7 @@ def t44_rolling_origin_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 7 — a fully ORACLE-BACKED HyperLogLog (the portable-hash
+# A fully ORACLE-BACKED HyperLogLog (the portable-hash
 # trick upgrades the sketch family from rows-only to bit-exact), quantile
 # normalization across sources, and robust (MAD) anomaly detection.
 # ===========================================================================
@@ -12009,7 +11999,7 @@ def f20_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count inside the join condition, which mixes both sides' columns:
     # Catalyst cannot extract equi-keys from that and falls back to
     # BroadcastNestedLoopJoin — O(|pos|·|glob|) predicate evaluations,
-    # the round-5 100× probe's third find (it never finished; the
+    # the 100× probe's third find (it never finished; the
     # equi-join version is linear).
     n_g_row = ds.agg(F.count(F.lit(1)).alias("n_g"))
     mapped = (
@@ -12131,7 +12121,7 @@ def w24_robust_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
             # degenerate all-identical-totals group): a NULL double here
             # surfaces as pandas None on the Spark side but NaN through
             # DuckDB's .df(), which the driver's strict cell compare
-            # flags — round-7 reseed-fixture find
+            # flags — a reseeded fixture found it
             q6(
                 F.coalesce(
                     F.max(
@@ -12369,7 +12359,7 @@ def e5_dimension_collapse_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 9 — streaming mergeable HLL (t45's foreachBatch twin),
+# Streaming mergeable HLL (t45's foreachBatch twin),
 # Theil-Sen robust trend, and the per-item recommendation table.
 # ===========================================================================
 
@@ -12631,7 +12621,7 @@ def r2_item_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 10 — bounded BFS reachability over the co-visitation
+# Bounded BFS reachability over the co-visitation
 # graph, a Johnson-Lindenstrauss projection distortion audit, and
 # equi-depth histograms.
 # ===========================================================================
@@ -12805,8 +12795,8 @@ def _e6_oracle_sql(sample_mod: int | None = None) -> str:
 )
 def e6_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # graded exact path of operators/similarity.py::jl_projection_audit,
-    # pinned explicitly now that the operator default is "auto" (round-7:
-    # the budget knob self-sizes from the parquet footer count — the
+    # pinned explicitly because the operator default is "auto" (the
+    # budget knob self-sizes from the parquet footer count — the
     # full-corpus 100× sweep measured this exact path's proportional pair
     # sample at 25×; e6b grades the sampled twin)
     from ..operators.similarity import jl_projection_audit
@@ -12871,7 +12861,7 @@ def a22_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4f batch 11 — video shot-boundary detection (the multimodal
+# Video shot-boundary detection (the multimodal
 # sequential-scan shape: decode frames, difference consecutive pairs).
 # ===========================================================================
 
@@ -12971,7 +12961,7 @@ CORPUS["mm8_video_shot_boundary"].oracle = _mm8_oracle_sql()
 
 
 # ===========================================================================
-# Round-4f batch 12 — ingestion-order inversion audit, two-sample Q-Q
+# Ingestion-order inversion audit, two-sample Q-Q
 # comparison table, and modularity of a fixed graph partition.
 # ===========================================================================
 
@@ -13180,7 +13170,7 @@ def g5_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch: rank-family completion (Kendall tau-b), link prediction
+# Rank-family completion (Kendall tau-b), link prediction
 # (resource-allocation index), first-path funnel mining, an oracle-backed
 # Count-Min frequency sketch, and a seasonal-naive forecast backtest.
 # ===========================================================================
@@ -13237,8 +13227,8 @@ def m28_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("y"),
     )
     # hash_sample_mod=None: graded exact pairing over every user, pinned
-    # explicitly now that the operator default is "auto" (round-7: the
-    # budget knob self-sizes from a cheap entity count — a user who
+    # explicitly because the operator default is "auto" (the budget
+    # knob self-sizes from a cheap entity count — a user who
     # forgets it at 100× gets the flat-budget sample, not the 30.3×
     # pair quadratic the probe measured; m28b grades the sampled twin).
     return kendall_tau_b(
@@ -13553,7 +13543,7 @@ def w25_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 2: silhouette cluster-quality audit (integer-exact),
+# Silhouette cluster-quality audit (integer-exact),
 # Gini activity concentration, and MMR-diversified retrieval (the greedy
 # re-ranker behind diverse training-data selection).
 # ===========================================================================
@@ -13887,7 +13877,7 @@ CORPUS["s10_mmr_diversified_topk"].oracle = _s10_oracle_sql()
 
 
 # ===========================================================================
-# Round-4g batch 3: truncated Katz centrality (walk-count joins), temporal
+# Truncated Katz centrality (walk-count joins), temporal
 # follow-up anti-join, deterministic randomization test, freshness audit.
 # ===========================================================================
 
@@ -14223,7 +14213,7 @@ def dq10_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 4: decile lift/gains table, directional containment
+# Decile lift/gains table, directional containment
 # near-dup pairs, and the Count-Min streaming twin.
 # ===========================================================================
 
@@ -14520,7 +14510,7 @@ CORPUS["st12_streaming_countmin"].oracle = CORPUS[
 
 
 # ===========================================================================
-# Round-4g batch 5: spectral-concentration audit via integer power
+# Spectral-concentration audit via integer power
 # iteration (matrix iteration as joins), and PMI word co-occurrence.
 # ===========================================================================
 
@@ -14630,8 +14620,8 @@ def e8_power_iteration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 la = la.combine_chunks()
             lengths = la.value_lengths().to_numpy(zero_copy_only=False)
             # the fast reshape path needs RECTANGULAR, non-null rows; a
-            # ragged batch would crash the reshape and (round-11 advice
-            # item 1) ELEMENT-level nulls pass a list-level null_count
+            # ragged batch would crash the reshape and ELEMENT-level
+            # nulls pass a list-level null_count
             # check, turn into NaN, and astype(int64) is then platform-
             # defined garbage — both fall back to the per-row path
             rect = (
@@ -14847,7 +14837,7 @@ def t47_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 6: dominant-period detection (lag-sweep autocorrelation),
+# Dominant-period detection (lag-sweep autocorrelation),
 # transition dwell-time table, sessionized bounce rate.
 # ===========================================================================
 
@@ -14923,7 +14913,7 @@ def w26_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     y = d.toDF("event_type", "dy2", "ay")
     # sufficient statistics in DECIMAL(38,0): the daily micro-unit totals
     # grow with the data, so ax*ay products overflow int64 past ~3e9
-    # micro-units (the round-5 100× probe aborted here with
+    # micro-units (the 100× probe aborted here with
     # ARITHMETIC_OVERFLOW). DECIMAL keeps every statistic exact (~1e38
     # headroom); the oracle mirrors with HUGEINT, and both engines convert
     # the same exact integers to nearest-double only at the final
@@ -15156,7 +15146,7 @@ def a25_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 7: golden-record entity clusters (er1's pairs closed into
+# Golden-record entity clusters (er1's pairs closed into
 # components), day-over-day movers board.
 # ===========================================================================
 
@@ -15341,7 +15331,7 @@ def w27_daily_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 8: image channel histogram + entropy (multimodal decode
+# Image channel histogram + entropy (multimodal decode
 # feature the exposure/contrast screens run on).
 # ===========================================================================
 
@@ -15445,7 +15435,7 @@ CORPUS["mm9_channel_histogram"].oracle = _mm9_sql()
 
 
 # ===========================================================================
-# Round-4g batch 9: interval-union coverage (overlap merge), runs test.
+# Interval-union coverage (overlap merge), runs test.
 # ===========================================================================
 
 
@@ -15625,7 +15615,7 @@ def m31_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 10: time-weighted average (step-function integral),
+# Time-weighted average (step-function integral),
 # id-sequence gap audit.
 # ===========================================================================
 
@@ -15957,7 +15947,7 @@ def j13_interpolation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 12: G-test of independence, Simpson diversity index.
+# G-test of independence, Simpson diversity index.
 # ===========================================================================
 
 
@@ -16179,7 +16169,7 @@ def dq12_cardinality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-4g batch 8: exact similarity self-join via prefix filtering — the
+# Exact similarity self-join via prefix filtering — the
 # lossless candidate-pruning route for exact Jaccard at scale (contrast:
 # t2's doc-freq cap changes the answer; t7's MinHash trades recall).
 # ===========================================================================
@@ -16234,8 +16224,8 @@ def t49_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-5 batch — the low-cardinality-window scale routings as GRADED
-# queries. The full-corpus 100x sweep (SCALING.md) showed that windows
+# The low-cardinality-window scale routings as GRADED queries. The
+# full-corpus 100x sweep (SCALING.md) showed that windows
 # partitioned by a 2-5-value column cap parallelism at the key count; the
 # routings (asof_join's bucket_seconds, windows.bucketed_row_number /
 # bucketed_ntile) are answer-identical two-level decompositions, so they
@@ -16374,8 +16364,8 @@ def a27_bucketed_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-6 routing twins — the five scale routings the round-5 probes verified
-# by wall-clock but never graded: each now runs as its own corpus query with
+# Routing twins — five scale routings the 100× probes verified by wall-clock,
+# each run as its own corpus query with
 # a DuckDB oracle that mirrors the routing's deterministic contract exactly
 # (the j14/w28/a27 standard: driver hash-compare = machine-checked proof).
 # j11b/m28b/e6b reproduce the cap/sample predicate in SQL; t38b/e3b rerun the
@@ -16697,7 +16687,7 @@ CORPUS["e3b_knn_consistency_routed"].oracle = _e3_routed_oracle_sql()
     "mm2. The graded output is encoding-independent (dims + the "
     "per-channel mean/std feature block), so the md5-arithmetic oracle "
     "proves the DEFLATE+unfilter round trip reproduces every pixel — "
-    "closing the round-5 'compressed-format decode' gap for PNG; JPEG's "
+    "closing the 'compressed-format decode' gap for PNG; JPEG's "
     "DCT pipeline stays honestly codec-gated.",
 )
 def mm10_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16788,7 +16778,7 @@ def _mm11_g711_sql() -> str:
     "The oracle re-derives every companded byte AND applies the same "
     "bit-arithmetic expansion in SQL — a machine-checked proof that the "
     "μ-law complement/bias/shift and A-law xor/segment forms are "
-    "implemented exactly, closing the round-5 'non-PCM audio' gap for "
+    "implemented exactly, closing the 'non-PCM audio' gap for "
     "telephony formats; float/ADPCM stay honestly gated.",
 )
 def mm11_g711_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -17027,7 +17017,7 @@ def _mm15_avi_sql() -> str:
     "Arrow-batched mapInPandas fan-out as mm4 (one input row -> "
     "n_frames output rows). Lossless frames have zero rounding "
     "latitude, so the oracle's per-frame channel sums prove container "
-    "framing + entropy decode end-to-end — narrowing the round-6 "
+    "framing + entropy decode end-to-end — narrowing the "
     "'compressed video containers' gate to inter-frame codecs "
     "(H.26x/VP9), which stay honestly gated.",
 )
@@ -17315,7 +17305,7 @@ def _mm20_float_wav_sql() -> str:
     "32/64-bit) + WAVE_FORMAT_EXTENSIBLE header unwrap, previously "
     "codec-gated; exact-dyadic fixture keeps the oracle in integer "
     "arithmetic",
-    description="REAL float-PCM WAV decode (round-7 verdict item 3): "
+    description="REAL float-PCM WAV decode: "
     "the fixture writes the md5 int16 samples scaled by 1/32768 as "
     "format-3 WAV — exact dyadic float32/float64 values, bit "
     "reinterpretation with no entropy coding — rotating 32-/64-bit "
@@ -17354,7 +17344,7 @@ def mm20_float_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(palette/16-bit/Adam7/RGBA), previously gated to 8-bit "
     "non-interlaced; mm2's md5-pixel oracle verifies the pixels "
     "bit-exactly",
-    description="REAL full-matrix PNG decode (round 8): the md5-pixel "
+    description="REAL full-matrix PNG decode: the md5-pixel "
     "fixture rotates the PNG spec grid per doc — 8/16-bit truecolor, "
     "PLTE palette, RGBA with a deterministic alpha ramp (alpha dropped "
     "on decode, pixels intact), each plain and Adam7-interlaced "
@@ -17412,7 +17402,7 @@ def _mm22_stereo_wav_sql() -> str:
     _mm22_stereo_wav_sql(),
     survey_rows="ext:multimodal-audio — multichannel WAV decode "
     "(previously mono-gated) with per-channel feature reduction",
-    description="REAL stereo-WAV decode (round 8): decode_wav now "
+    description="REAL stereo-WAV decode: decode_wav now "
     "accepts any channel count for the interleaved sample formats "
     "(PCM16 / float / G.711), returning (frames, channels) in FLAC's "
     "convention — ADPCM stays honestly mono-gated because its blocks "
@@ -17447,7 +17437,7 @@ def mm22_stereo_wav_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:multimodal-decode — tiled / 16-bit / planar-2 TIFF "
     "(previously gated); mm2's md5-pixel oracle verifies the pixels "
     "bit-exactly",
-    description="REAL extended-TIFF decode (round 8): the md5-pixel "
+    description="REAL extended-TIFF decode: the md5-pixel "
     "fixture rotates the TIFF 6.0 extension matrix per doc — tiled "
     "layouts (square and odd edge-padded tiles), 16-bit samples in "
     "either byte order (x257 scale, high-byte inverse), planar "
@@ -17506,7 +17496,7 @@ def _mm24_avi_av_sql() -> str:
     survey_rows="ext:multimodal-video — A/V container demux: the AVI "
     "audio track ('auds' strl + interleaved '01wb' chunks) decodes "
     "through the WAV dispatch",
-    description="REAL A/V container demux (round 8): the fixture muxes "
+    description="REAL A/V container demux: the fixture muxes "
     "lossless-JPEG video frames AND a PCM16 audio track into one AVI "
     "(multimodal.py::encode_avi_mjpeg audio extension — per-frame "
     "interleaved '01wb' chunks, the standard muxing shape); "
@@ -17540,7 +17530,7 @@ def mm24_avi_audio_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:multimodal-decode — BMP variant matrix (32-bit, "
     "palette, RLE8, top-down), previously 24-bit-only; mm2's md5-pixel "
     "oracle verifies the pixels bit-exactly",
-    description="REAL BMP variant decode (round 8): decode_bmp grew "
+    description="REAL BMP variant decode: decode_bmp grew "
     "from uncompressed-24-bit-only to the common BITMAPINFOHEADER "
     "matrix — 32-bit BGRA (alpha dropped), 1/4/8-bit palette with the "
     "BGRX color table, Microsoft RLE8 (encoded/absolute runs, "
@@ -17582,7 +17572,7 @@ def mm25_bmp_variants_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:training-data ingestion — WARC (ISO 28500 / Common "
     "Crawl) archive parse: gzip-member walk, record headers, HTTP "
     "response payload extraction",
-    description="REAL WARC ingestion (round 8): the fixture wraps each "
+    description="REAL WARC ingestion: the fixture wraps each "
     "document's own text as a Common Crawl-shaped archive (warcinfo + "
     "request + response records, per-record gzip members — every "
     "id%20==10 doc stays plain so both layouts grade; operators/"
@@ -17644,7 +17634,7 @@ def _mm27_webdataset_sql() -> str:
     survey_rows="ext:training-data ingestion — WebDataset tar shards "
     "(the LAION image/caption pairing format): stdlib-tarfile member "
     "walk, sample-key grouping, per-modality decode",
-    description="REAL WebDataset ingestion (round 8): the fixture "
+    description="REAL WebDataset ingestion: the fixture "
     "writes each doc as a tar shard in the WebDataset convention — one "
     "sample key with .png (md5-pixel image through the REAL PNG "
     "encoder), .txt (the document's own text as the caption) and .cls "
@@ -17714,7 +17704,7 @@ def _mm28_patchify_sql() -> str:
     survey_rows="ext:multimodal-preprocessing — ViT patch tokenization "
     "(non-overlapping grid, per-patch channel means), the standard "
     "vision-transformer input shape",
-    description="REAL patch tokenization (round 8): decode each image "
+    description="REAL patch tokenization: decode each image "
     "and split it into the non-overlapping 4x4 ViT grid, one output row "
     "per patch with per-channel means (multimodal.py::"
     "patchify_features — rows-out > rows-in through the Arrow iterator, "
@@ -17762,7 +17752,7 @@ def _st13_streaming_media_sql() -> str:
     _st13_streaming_media_sql(),
     survey_rows="§2.8 streaming × ext:multimodal — stateless media "
     "decode inside Structured Streaming micro-batches",
-    description="Streaming multimodal ingest (round 8): the documents "
+    description="Streaming multimodal ingest: the documents "
     "stream (parquet file source) flows through the SAME Arrow-batched "
     "mapInPandas attach/decode operators the batch corpus grades "
     "(attach_wav_payloads → decode_audio_features) — stateless "
@@ -17841,7 +17831,7 @@ def _mm29_html_extract_sql() -> str:
     "extraction (tag stripping, script/style/comment removal, "
     "block-level text assembly, title + link extraction), the step "
     "every Common Crawl pipeline runs after mm26's payload recovery",
-    description="REAL crawl text extraction (round 9): the fixture "
+    description="REAL crawl text extraction: the fixture "
     "renders each document's own text as HTML in four "
     "extraction-invariant markup variants (lowercase, "
     "uppercase+attributes+self-closing-BR, headless with fake close "
@@ -17886,7 +17876,7 @@ def _t50_bpe_ctes() -> str:
     return f"""    WITH RECURSIVE
     d AS (
       SELECT doc_id, lower(COALESCE(text, '')) AS t
-      FROM documents WHERE doc_id % 1 = 0
+      FROM documents
     ),
     occ AS (
       SELECT doc_id, unnest(regexp_extract_all(t, '[a-z]+')) AS w FROM d
@@ -17940,7 +17930,7 @@ def _t50_bpe_sql() -> str:
     survey_rows="ext:text-analysis — BPE merge application (tokenize "
     "with a learned merge table), completing the tokenizer story t33's "
     "merge statistics start",
-    description="REAL BPE encoding (round 9): apply the static "
+    description="REAL BPE encoding: apply the static "
     "rank-ordered merge table (operators/text.py::BPE_MERGES — each "
     "merge's operands exist before use, the invariant real BPE "
     "training guarantees) to every [a-z]+ word with the standard "
@@ -17948,7 +17938,7 @@ def _t50_bpe_sql() -> str:
     "route: the vocabulary is orders smaller than the corpus (Heaps' "
     "law), so the Arrow-batched Python tokenizer runs |vocab| times — "
     "the dedup family's collapse-first routing applied to "
-    "tokenization. Scale shape (round-9 sweep catch, 28.5×/decade on "
+    "tokenization. Scale shape (a sweep caught 28.5×/decade on "
     "the naive plan): word occurrences NEVER shuffle on the "
     "Zipf-skewed word key — they collapse to (doc, word)→cnt behind a "
     "map-side combine, then join the tokenized vocab BROADCAST "
@@ -17994,7 +17984,7 @@ def t50_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:training-data ingestion — URL canonicalization "
     "(RFC 3986 §6) + host-level grouping key over WARC-Target-URI "
     "headers, the CCNet-style crawl dedup key",
-    description="REAL crawl-URL canonicalization (round 9): the "
+    description="REAL crawl-URL canonicalization: the "
     "fixture's WARC response headers carry messy URIs (uppercase "
     "scheme/host, default ports, unsorted and duplicate query keys, "
     "fragments, dot segments — warc.py::messy_fixture_url, five "
@@ -18066,7 +18056,7 @@ def _mm31_crawl_quality_sql() -> str:
     survey_rows="ext:training-data ingestion — the chained CCNet shape: "
     "WARC parse → HTML→text extraction → quality scoring/filter "
     "decision on the EXTRACTED text",
-    description="The full crawl-filtering chain (round 9): documents "
+    description="The full crawl-filtering chain: documents "
     "render through the HTML fixture into WARC archives (mm29's "
     "container), extract_html_text_column materializes the extracted "
     "text as a COLUMN in one Arrow pass, and t6's quality machinery "
@@ -18141,8 +18131,8 @@ def _t51_bpe_budget_sql() -> str:
     survey_rows="ext:training mixture allocation × ext:BPE — the "
     "tokenizer feeds the data-mixing table end-to-end (t50's real BPE "
     "counts replace t40's whitespace proxy)",
-    description="Mixture budget over REAL tokenizer output (round 9, "
-    "closing the t50→t44-family loop the judge asked for): per-source "
+    description="Mixture budget over REAL tokenizer output (closing "
+    "the t50→t44-family loop): per-source "
     "BPE token totals (t50's distinct-word pipeline with the source "
     "column threaded through the same grouping keys — functionally "
     "dependent on doc_id, so zero extra shuffle) drive t40's "
@@ -18189,7 +18179,7 @@ def t51_bpe_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:training-data ingestion — header-driven charset "
     "decode of crawl payloads (Content-Type charset parameter, BOM "
     "fallback): a large fraction of the real web is not UTF-8",
-    description="Charset-honoring crawl extraction (round 9): the same "
+    description="Charset-honoring crawl extraction: the same "
     "pages as mm29, but SERVED in rotating transfer encodings — UTF-8, "
     "UTF-16 (LE + BOM), ISO-8859-1 where the page is Latin-1-encodable "
     "— with the charset declared in the HTTP Content-Type header "
@@ -18223,7 +18213,7 @@ def mm32_charset_transfer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="§2.8 streaming × ext:training-data ingestion — crawl "
     "HTML→text extraction inside Structured Streaming micro-batches "
     "(the incremental-crawl production shape)",
-    description="Streaming crawl extraction (round 9, the st13 pattern "
+    description="Streaming crawl extraction (the st13 pattern "
     "applied to the text pipeline): the documents stream flows through "
     "the SAME attach→parse→extract operators mm29 grades — stateless "
     "transforms are legal in streams, so the extraction pipeline "
@@ -18273,7 +18263,7 @@ def st14_streaming_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:training-data ingestion — robots.txt policy "
     "evaluation (RFC 9309), the crawl-politeness gate applied before a "
     "URL enters the corpus",
-    description="REAL robots.txt evaluation (round 9): each archive "
+    description="REAL robots.txt evaluation: each archive "
     "carries the host's robots.txt as its response record (fetched "
     "from /robots.txt, as crawlers record it); operators/robots.py "
     "parses groups (consecutive User-agent lines, comments, unknown "
@@ -18344,7 +18334,7 @@ def _t52_extracted_lang_sql() -> str:
     survey_rows="ext:lang-id × ext:training-data ingestion — language "
     "identification over EXTRACTED crawl text (the CCNet routing step "
     "that decides which language pipeline a page enters)",
-    description="Chained extract→classify (round 9): the WARC→HTML→"
+    description="Chained extract→classify: the WARC→HTML→"
     "text pipeline's output column feeds t4's marker-word language ID "
     "(text.py::lang_id, JVM column expressions — CJK short-circuit, "
     "marker-count arg-max with ascending-code tie-break), producing "
@@ -18379,7 +18369,7 @@ def t52_extracted_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of crawl payloads (Transfer-Encoding: chunked dechunking, "
     "Content-Encoding: gzip/deflate inflation): Common Crawl stores "
     "responses as-served, where both are everyday",
-    description="Full as-served crawl decode chain (round 10): the "
+    description="Full as-served crawl decode chain: the "
     "same pages as mm29, but the HTTP body is SERVED through five "
     "rotating wire shapes — identity, chunked (uneven chunk sizes, a "
     "chunk extension, a trailer field), gzip, zlib-wrapped deflate, "
@@ -18439,7 +18429,7 @@ def mm34_transfer_decoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(SURT keys + range-addressable record offsets), the Common Crawl "
     "artifact that makes a 100 TB archive store fetchable per-record "
     "without scanning",
-    description="CDX index emission (round 10, completing the Common "
+    description="CDX index emission (completing the Common "
     "Crawl artifact triple: WARC read+write, WET write, CDX index): "
     "per response record, the SURT key (host labels reversed "
     "comma-joined over the CANONICALIZED URL — one host's pages sort "
@@ -18499,7 +18489,7 @@ def _mm38_admission_sql() -> str:
     "admission decision (robots.txt policy × HTTP status → extraction) "
     "from a single crawl segment archive, the composition every "
     "segment processor runs",
-    description="Chained crawl admission (round 10): each archive is a "
+    description="Chained crawl admission: each archive is a "
     "realistic SEGMENT carrying both the host's /robots.txt response "
     "(mm33's four policy variants) and the page response (mm29's four "
     "markup variants, SERVED through mm36's five status shapes). The "
@@ -18543,7 +18533,7 @@ def _mm37_wet_sql() -> str:
     "sink (the Common Crawl extracted-text companion format, ISO 28500 "
     "conversion records): the output format a production extraction "
     "pipeline writes",
-    description="WET sink round-trip (round 10): the WARC→HTML→text "
+    description="WET sink round-trip: the WARC→HTML→text "
     "chain's extracted column is WRITTEN as Common Crawl WET "
     "conversion records (warc.py::encode_wet — WARC-Refers-To naming "
     "the source response id, text/plain UTF-8 blocks, per-record gzip "
@@ -18575,7 +18565,7 @@ def mm37_wet_conversion_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     "FULL as-served decode chain (chunked/gzip/deflate transfer "
     "decoding + charset resolution + extraction) inside Structured "
     "Streaming micro-batches",
-    description="Streaming twin of mm34 (round 10, the st14 pattern): "
+    description="Streaming twin of mm34 (the st14 pattern): "
     "the documents stream flows through attach(charset+transfer "
     "rotation) → extract(decode_transfer, honor_charset) — stateless "
     "transforms, append-mode, no watermark. Run to completion, the "
@@ -18632,7 +18622,7 @@ def st15_streaming_transfer_decode(
     "redirect-frontier resolution (3xx Location canonicalization, "
     "Retry-After backoff, 200-only corpus admission), the step between "
     "fetch and extraction in every crawler",
-    description="Crawl-frontier status step (round 10): responses "
+    description="Crawl-frontier status step: responses "
     "rotate five real status shapes — 200 content; 301 with a MESSY "
     "absolute Location (uppercase scheme/host, default port, unsorted "
     "query, fragment); 302 with a root-RELATIVE Location resolved "
@@ -18691,7 +18681,7 @@ def _t54_paragraph_dedup_sql() -> str:
     "paragraph-granularity dedup over extracted crawl text (the CCNet "
     "unit: boilerplate lines repeat host-wide, article text does not), "
     "closing the extract→dedup loop",
-    description="Chained extract→paragraph-dedup (round 10): the "
+    description="Chained extract→paragraph-dedup: the "
     "WARC→HTML→text pipeline's output column splits into newline "
     "paragraphs; each instance is a duplicate when a lower-id document "
     "owns the same md5 (deterministic first-owner survivorship, the t1 "
@@ -18705,8 +18695,8 @@ def _t54_paragraph_dedup_sql() -> str:
     "via the EXPLICIT broadcast_owners=True routing (this fixture is "
     "the boilerplate-dominated shape where the owner table is "
     "vocabulary-like; the module DEFAULT is the scale-safe shuffle "
-    "join, because article-heavy corpora have near-unique paragraphs "
-    "— round-11 advisor). The oracle chains "
+    "join, because article-heavy corpora have near-unique paragraphs). "
+    "The oracle chains "
     "mm29's expected-extraction CTE into the same split/own/join "
     "shape.",
 )
@@ -18723,7 +18713,7 @@ def t54_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # routing (this fixture's paragraphs are host-repeated lines, the
     # vocabulary-like shape); the MODULE default is the scale-safe
     # shuffle join because article-heavy corpora have near-unique
-    # paragraphs (round-11 advisor). The graded plan is unchanged.
+    # paragraphs. The graded plan is unchanged.
     return paragraph_dedup_stats(
         xt, text_col="xtext", broadcast_owners=True
     ).select("doc_id", "n_paras", "n_dup", "dup_ratio")
@@ -18778,7 +18768,7 @@ def _mm35_main_text_sql() -> str:
     "main-content detection (block-level link-density scoring, the "
     "trafilatura/jusText family), the step a CCNet pipeline runs "
     "between extraction and quality scoring",
-    description="Main-content detection (round 10): each page wraps "
+    description="Main-content detection: each page wraps "
     "the document's text in one of four rotating LINK-DENSE noise "
     "shapes — nav+footer, a four-item link sidebar (every <li> its own "
     "block), cookie banner + breadcrumbs, nav+pagination+footer — "
@@ -18847,7 +18837,7 @@ def _t53_byte_bpe_sql() -> str:
     d AS (
       SELECT doc_id,
              COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
-      FROM documents WHERE doc_id % 1 = 0
+      FROM documents
     ),
     occ AS (
       SELECT doc_id,
@@ -18893,7 +18883,7 @@ def _t53_byte_bpe_sql() -> str:
     "posture: the 256-octet base alphabet tokenizes EVERY Unicode "
     "string), generalizing t50 past [a-z]+ so non-Latin text actually "
     "tokenizes",
-    description="Byte-level BPE (round 10): pretokens are CJK "
+    description="Byte-level BPE: pretokens are CJK "
     "codepoints or whitespace-delimited runs (case preserved — "
     "BYTE_PRETOKEN_RE, identical Java/RE2 regex), their UTF-8 octets "
     "run the lowest-rank-first merge loop over a byte merge table "
@@ -18903,7 +18893,7 @@ def _t53_byte_bpe_sql() -> str:
     "cannot express. The fixture augments each document with a "
     "constant language-tagged multilingual suffix (the synthetic "
     "corpus is pure ASCII) expressed identically in both engines. "
-    "Routing is t50's skew-safe shape verbatim (round-10 refinement): "
+    "Routing is t50's skew-safe shape verbatim: "
     "occurrences NEVER shuffle — the distinct vocabulary "
     "byte-tokenizes ONCE in an Arrow pass and joins back map-side "
     "against the broadcast table, the only exchanges being the "
@@ -18928,7 +18918,7 @@ def t53_byte_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------- round 11
+# ---------------------------------------------------------------------------
 
 #: t55 fixture augmentation (same discipline as _T53_AUG: one CONSTANT
 #: suffix per language, expressible identically in both engines) —
@@ -19005,7 +18995,7 @@ def _t55_gpt2_sql() -> str:
     d AS (
       SELECT doc_id,
              COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
-      FROM documents WHERE doc_id % 1 = 0
+      FROM documents
     ),
     scan AS (
       SELECT doc_id, t, 1 AS pos, 0 AS idx, CAST('' AS VARCHAR) AS tok
@@ -19069,9 +19059,9 @@ def _t55_gpt2_sql() -> str:
     survey_rows="ext:text-analysis — GPT-2-EXACT byte-BPE "
     "pretokenization (contraction suffixes, leading-space attachment, "
     "the \\s+(?!\\S) trailing-whitespace lookahead, full-Unicode "
-    "letter/number classes), closing the round-10 verdict's tokenizer "
+    "letter/number classes), closing the tokenizer "
     "north-star gap past t53's whitespace+CJK approximation",
-    description="GPT-2-exact pretokenization (round 11): the engine "
+    description="GPT-2-exact pretokenization: the engine "
     "runs the famous pattern verbatim as a JVM regexp under (?U) "
     "(java.util.regex has the lookahead RE2 lacks); pretokens feed "
     "byte_bpe_token_stats(pretoken_re=GPT2_PRETOKEN_RE) on the t53 "
@@ -19184,8 +19174,8 @@ def _t56_bpe_train_sql() -> str:
     survey_rows="ext:text-analysis — BPE merge-table TRAINING (the "
     "full Sennrich learn loop t33's single iteration starts: count "
     "pairs -> take best -> re-segment -> repeat), closing the "
-    "round-10 verdict's apply-side-only gap",
-    description="BPE merge training (round 11): k=5 learn iterations "
+    "apply-side-only gap",
+    description="BPE merge training: k=5 learn iterations "
     "over the distinct-word vocabulary with occurrence weights "
     "(collapse-first — the Python-free loop runs on vocab-sized data, "
     "Heaps-bounded at 100 TB). Each iteration is one map-combined "
@@ -19249,9 +19239,8 @@ def t56_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:training-data ingestion — sitemap discovery "
     "(robots.txt Sitemap directives + urlset/sitemapindex XML "
     "parsing + canonicalized frontier URLs), completing the "
-    "fetch-side frontier beside mm36's redirects (round-10 verdict "
-    "item 5)",
-    description="Sitemap discovery (round 11): archives carry a "
+    "fetch-side frontier beside mm36's redirects",
+    description="Sitemap discovery: archives carry a "
     "robots.txt advertising two Sitemap directives (the first messy — "
     "uppercase scheme/host, default port) plus the sitemap document "
     "itself, rotating the protocol's real shapes: entity-escaped / "
@@ -19301,8 +19290,8 @@ def mm41_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="ext:training-data ingestion — WARC revisit records "
     "(ISO 28500 §6.7.2 identical-payload-digest profile): write-side "
     "dedup-by-reference and read-side payload reconstruction, the "
-    "Common Crawl archive dedup mechanism (round-10 verdict item 6)",
-    description="WARC revisit round trip (round 11): docs form "
+    "Common Crawl archive dedup mechanism",
+    description="WARC revisit round trip: docs form "
     "3-member duplicate groups sharing one payload; each archive "
     "stores the group leader's FULL response (with its sha1-base32 "
     "payload digest) and — for non-leaders — a revisit record "

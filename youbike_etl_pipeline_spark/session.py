@@ -79,7 +79,7 @@ def get_spark(
         # widen narrow scans through ``operators.skew.widen_narrow_scan``,
         # gated on their per-row cost, because no static split size is
         # right for every per-row cost.
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+        .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "262144")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_memory())

@@ -1,10 +1,9 @@
 """Sources & sinks — schema-first readers and idempotent writers."""
 
-from .readers import load_tables, local_frame, read_csv_tolerant, read_json_records, read_parquet_table
+from .readers import local_frame, read_csv_tolerant, read_json_records, read_parquet_table
 from .writers import append_dedup, upsert_insert_if_absent, write_csv, write_parquet
 
 __all__ = [
-    "load_tables",
     "local_frame",
     "read_csv_tolerant",
     "read_json_records",

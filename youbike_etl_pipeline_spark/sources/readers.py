@@ -25,11 +25,6 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str]) -> dict[str, DataFrame]:
-    """Load several testdata tables at once: ``t = load_tables(...); t['lineitem']``."""
-    return {n: read_events(spark, sf_dir) if n == "events" else read_parquet_table(spark, sf_dir, n) for n in names}
-
-
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``events`` stream table, robust to the file's physical ``ts`` type.
 

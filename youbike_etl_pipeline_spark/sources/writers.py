@@ -179,20 +179,23 @@ def append_dedup(new_rows: DataFrame, existing: DataFrame | None, keys: list[str
     return batch.join(existing.select(*keys), on=keys, how="left_anti")
 
 
-def upsert_insert_if_absent(incoming: DataFrame, existing_keys: DataFrame | None, key: str) -> DataFrame:
+def upsert_insert_if_absent(
+    incoming: DataFrame, existing_keys: DataFrame | None, keys: list[str]
+) -> DataFrame:
     """Insert-if-absent dimension upsert (S9): rows of ``incoming``, one per
-    ``key``, whose ``key`` is not present in ``existing_keys`` (all of them
-    when there is no existing table yet).
+    ``keys``, whose ``keys`` are not present in ``existing_keys`` (all of
+    them when there is no existing table yet).
 
     Reference: ``df_info[~station_no.isin(existing)]`` (``etl_job.py:121-126``).
     The existing-keys side is typically tiny (dimension PKs) → broadcast, so
     the anti-join is shuffle-free on the big side; like
-    :func:`append_dedup`, it is not deduplicated.
+    :func:`append_dedup`, it is not deduplicated. The batch pipeline and
+    the streaming ``foreachBatch`` upsert both run this one function.
     """
-    batch = incoming.dropDuplicates([key])
+    batch = incoming.dropDuplicates(keys)
     if existing_keys is None:
         return batch
-    return batch.join(F.broadcast(existing_keys.select(key)), on=key, how="left_anti")
+    return batch.join(F.broadcast(existing_keys.select(*keys)), on=keys, how="left_anti")
 
 
 def write_jdbc(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregations import decimal_pow_sum, decimal_sum
-from ..operators.skew import auto_sample_mod, cheap_row_count, quantile_buckets
+from ..operators.skew import hash_sample, quantile_buckets
 
 try:  # pragma: no cover - optional, driver-side p-values only
     from scipy import stats as _scipy_stats
@@ -548,7 +548,7 @@ def kendall_tau_b(
     The pair step is quadratic in the AGGREGATED frame by definition (the
     M5 Tukey size discipline: the raw scan is linear, the self-join runs on
     entities, not rows). When the entity frame itself is wide — the
-    round-5 100× probe measured 30.3×/241 s at ~150k entities, after fixing
+    100× probe measured 30.3×/241 s at ~150k entities, after fixing
     the tie-product long overflow this function inherited —
     ``hash_sample_mod=M`` is the callable routing: keep entities whose
     md5-derived hash's LOW 31 BITS ≡ 0 (mod M) BEFORE pairing (the 31-bit
@@ -560,7 +560,7 @@ def kendall_tau_b(
     the estimate's variance shrinks as the sample grows, the standard
     subsampled-Kendall estimator).
 
-    Default ``"auto"`` (round-6 verdict: the knob must self-size) derives M
+    Default ``"auto"`` (``skew.hash_sample``, which owns the routing) derives M
     from a cheap entity count (parquet footers when the frame is a bare
     scan, one linear count job otherwise — ``skew.cheap_row_count``) so the
     pair step stays inside ``pair_budget`` pairs at ANY input scale:
@@ -575,32 +575,8 @@ def kendall_tau_b(
 
     Columns: ``n_units`` (entities paired), ``conc``, ``disc``, ``tau_b``.
     """
-    from ..operators.dedup import md5_token_hash64
-
     u = df.select(F.col(id_col).alias("__id"), F.col("x").alias("__x"), F.col("y").alias("__y"))
-    if isinstance(hash_sample_mod, str):
-        if hash_sample_mod != "auto":
-            raise ValueError(
-                f"kendall_tau_b: hash_sample_mod={hash_sample_mod!r} — "
-                "expected an int, None (exact), or 'auto'"
-            )
-        hash_sample_mod = auto_sample_mod(
-            cheap_row_count(u), pair_budget, pair_fraction=0.5
-        )
-    if hash_sample_mod is not None and int(hash_sample_mod) <= 1:
-        # mod 1 keeps every row (pmod(h, 1) == 0 identically) — skip the
-        # filter so the auto path's small-input plan matches exact/None
-        hash_sample_mod = None
-    if hash_sample_mod is not None:
-        u = u.filter(
-            F.pmod(
-                md5_token_hash64(F.col("__id").cast("string")).bitwiseAND(
-                    F.lit(2147483647)
-                ),
-                F.lit(int(hash_sample_mod)),
-            )
-            == 0
-        )
+    u = hash_sample(u, "__id", hash_sample_mod, pair_budget, 0.5, "kendall_tau_b")
     a = u.toDF("ua", "xa", "ya")
     b = u.toDF("ub", "xb", "yb")
 

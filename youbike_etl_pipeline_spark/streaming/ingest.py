@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..sources.writers import upsert_insert_if_absent
+
 
 def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Stream one table out of a multi-table directory.
@@ -235,15 +237,12 @@ def upsert_foreach_batch(
     sink: list,
 ) -> None:
     """foreachBatch anti-join upsert (S9 streaming twin): per micro-batch,
-    dedup within the batch, anti-join against existing keys, append the
-    remainder to ``sink`` (a list stand-in for the JDBC/Delta writer)."""
+    the batch pipeline's :func:`upsert_insert_if_absent` against the
+    existing keys, with the remainder appended to ``sink`` (a list stand-in
+    for the JDBC/Delta writer)."""
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        new_rows = (
-            batch.dropDuplicates(key_cols)
-            .join(F.broadcast(existing_keys.select(*key_cols).distinct()), key_cols, "left_anti")
-        )
-        sink.append((epoch_id, new_rows.collect()))
+        sink.append((epoch_id, upsert_insert_if_absent(batch, existing_keys, key_cols).collect()))
 
     _drain(stream.writeStream.foreachBatch(handle).outputMode("append"))
 

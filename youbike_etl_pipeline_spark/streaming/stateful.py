@@ -72,99 +72,3 @@ def running_user_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4.x arbitrary-state API) — the successor to
-# applyInPandasWithState above: named state VARIABLES (ValueState/ListState/
-# MapState) instead of one state tuple, plus timers and TTL. Same per-key
-# recovery guarantees; richer state surface for session machines / sketches.
-# ---------------------------------------------------------------------------
-
-def _tws_available() -> bool:
-    """transformWithState's Python runner speaks protobuf to the JVM state
-    server; without the `protobuf` package the TWS driver worker crashes
-    before user code runs. Gate on the actual import the runner performs."""
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-try:  # pragma: no cover - the API exists from Spark 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class MinMaxCountProcessor(StatefulProcessor):
-        """Per-user running (min, max, n) in a single ValueState variable."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("mm", "mn double, mx double, n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                mn, mx, n = self._state.get()
-            else:
-                mn, mx, n = float("inf"), float("-inf"), 0
-            for pdf in rows:
-                if len(pdf):
-                    vals = pdf["value"].dropna()
-                    if len(vals):
-                        mn = min(mn, float(vals.min()))
-                        mx = max(mx, float(vals.max()))
-                        n += int(len(vals))
-            self._state.update((mn, mx, n))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "min_value": [mn], "max_value": [mx], "n": [n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-def running_minmax_stats(events: DataFrame) -> DataFrame:
-    """Attach the transformWithState operator to a streaming events frame."""
-    if not HAS_TRANSFORM_WITH_STATE:  # pragma: no cover
-        raise NotImplementedError("transformWithState requires Spark >= 4.0")
-    if not _tws_available():
-        raise NotImplementedError(
-            "transformWithState needs the `protobuf` package for its Python "
-            "state-server protocol (pyspark.sql.streaming.proto); install "
-            "protobuf or use running_user_stats (applyInPandasWithState)"
-        )
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=MinMaxCountProcessor(),
-            outputStructType="user_id bigint, min_value double, max_value double, n bigint",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def running_minmax_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the transformWithState operator over the finite events source to
-    completion and keep the final state row per user."""
-    from .ingest import read_events_stream, run_stream_to_memory
-
-    events = read_events_stream(spark, sf_dir)
-    out = run_stream_to_memory(running_minmax_stats(events), output_mode="update")
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
-    return (
-        out.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
