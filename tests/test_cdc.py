@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from youbike_etl_pipeline_spark.operators.cdc import apply_deletes, merge_upsert, scd2_apply
 
 

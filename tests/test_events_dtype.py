@@ -164,8 +164,9 @@ def test_documents_embeddings_schema_canary(sf_small):
         f"SCHEMA DRIFT: embeddings.embedding is {etype} — similarity corpus "
         "assumes list<floating>; update functions/arrays.py casts if this moved"
     )
-    # s3's generated hyperplane SQL embeds 64 per-dimension constants — a
-    # regenerated table with a different dim breaks it silently (NULL dots)
+    # the generated hyperplane-bucket SQL (s3, s6, s9) embeds 64
+    # per-dimension constants — a regenerated table with a different dim
+    # breaks it silently (NULL dots)
     import duckdb
 
     dims = duckdb.connect().execute(
@@ -174,7 +175,8 @@ def test_documents_embeddings_schema_canary(sf_small):
     ).fetchall()
     assert dims == [(64,)], (
         f"SCHEMA DRIFT: embedding dims {dims} != 64 — regenerate the "
-        "hyperplane constants in plans/corpus.py::_lsh_oracle_sql (s3) and "
+        "hyperplanes in plans/corpus.py::_lsh_planes (the s3/s6/s9 "
+        "bucket SQL of _lsh_bucket_sql) and the other "
         "operators/similarity.py::_hyperplanes callers"
     )
 

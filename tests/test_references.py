@@ -16,6 +16,10 @@ names reach every definition of that name, which over-approximates.
 
 Definitions left unreached on purpose are listed in ``ALLOWED`` by reason;
 an entry that something does reach, or that no longer exists, fails too.
+
+The same holds one level down: each SQL fragment the corpus oracles share
+has one owner in ``plans/corpus.py``, and no file imports a name it never
+uses (no linter is installed to catch those).
 """
 
 from __future__ import annotations
@@ -23,6 +27,8 @@ from __future__ import annotations
 import ast
 from collections import defaultdict
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "youbike_etl_pipeline_spark"
@@ -185,3 +191,125 @@ def test_the_scan_sees_every_way_a_definition_is_reached(tmp_path):
         "m.py:user",
         "q.py:register",
     }
+
+
+@pytest.mark.parametrize(
+    "needle,owner",
+    [
+        ("strpos('0123456789abcdef'", "_md5_bytes_ctes"),
+        ("s * prev < 0", "_pcm_features_sql"),
+        ("regexp_split_to_array(trim(text)", "_SQL_WORDS"),
+        ("words[i+2]", "_shingle_cte"),
+        ("_hyperplanes(64, 8, seed=42)", "_lsh_planes"),
+        ("json_extract(props, '$.k') AS INT) AS item", "_SQL_ITEM"),
+    ],
+)
+def test_each_oracle_fragment_has_one_owner(needle, owner):
+    """Each SQL restatement of a fixture format or a shared definition (the
+    md5 fixture bytes, the PCM feature block, the word tokens, the
+    word-3-gram shingle, the LSH hyperplanes, the event item id) is written
+    once in
+    ``plans/corpus.py``: its marker appears only inside the owning builder,
+    and the oracles call the builder."""
+    corpus = PKG / "plans" / "corpus.py"
+    text = corpus.read_text()
+    node = next(
+        n
+        for n in ast.parse(text).body
+        if getattr(n, "name", None) == owner
+        or any(getattr(t, "id", None) == owner for t in getattr(n, "targets", []))
+    )
+    lines = [i for i, line in enumerate(text.splitlines(), 1) if needle in line]
+    inside = [i for i in lines if node.lineno <= i <= node.end_lineno]
+    assert inside, f"{needle!r} is not in {owner}"
+    outside = sorted(set(lines) - set(inside))
+    assert not outside, f"{needle!r} outside {owner}: corpus.py lines {outside}"
+
+
+#: Where an import nothing uses is dead weight: the package, the tools,
+#: the tests and the bench driver.
+IMPORTERS = [PKG, ROOT / "tools", ROOT / "tests", ROOT / "bench.py"]
+
+
+def unused_imports(path: Path) -> list[str]:
+    """``name`` of every import in ``path`` that the file never reads.
+    Names in string annotations and in ``__all__`` count as read, and so
+    does an import inside a ``try`` that catches ``ImportError`` (an
+    availability probe). Scope is the whole file: a name imported in one
+    function and read in another counts as read."""
+    tree = ast.parse(path.read_text())
+    probes = {
+        id(n)
+        for t in ast.walk(tree)
+        if isinstance(t, ast.Try)
+        and any(
+            getattr(h.type, "id", None) in ("ImportError", "ModuleNotFoundError")
+            for h in t.handlers
+        )
+        for s in t.body
+        for n in ast.walk(s)
+    }
+    imported, read = {}, set()
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.Import, ast.ImportFrom)) and id(n) not in probes:
+            if getattr(n, "module", None) == "__future__":
+                continue
+            for a in n.names:
+                imported[a.asname or a.name.split(".")[0]] = n.lineno
+        elif isinstance(n, ast.Name):
+            read.add(n.id)
+        elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.AnnAssign)):
+            args = [] if isinstance(n, ast.AnnAssign) else [
+                *n.args.posonlyargs, *n.args.args, *n.args.kwonlyargs,
+                n.args.vararg, n.args.kwarg,
+            ]
+            anns = [n.annotation if isinstance(n, ast.AnnAssign) else n.returns]
+            anns += [a.annotation for a in args if a is not None]
+            for ann in filter(None, anns):
+                for c in ast.walk(ann):
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                        read |= {
+                            m.id
+                            for m in ast.walk(ast.parse(c.value, mode="eval"))
+                            if isinstance(m, ast.Name)
+                        }
+        elif isinstance(n, ast.Assign) and any(
+            getattr(t, "id", None) == "__all__" for t in n.targets
+        ):
+            read |= {c.value for c in ast.walk(n.value) if isinstance(c, ast.Constant)}
+    return [f"{name} (line {ln})" for name, ln in sorted(imported.items()) if name not in read]
+
+
+def test_no_unused_imports():
+    found = [
+        f"{path.relative_to(ROOT).as_posix()}: {u}"
+        for root in IMPORTERS
+        for path in _py_files(root)
+        for u in unused_imports(path)
+    ]
+    assert found == [], "imported but never used:\n" + "\n".join(found)
+
+
+def test_the_import_scan_counts_every_kind_of_use(tmp_path):
+    f = tmp_path / "m.py"
+    f.write_text(
+        "from __future__ import annotations\n"
+        "import os, os.path as osp\n"
+        "import json\n"
+        "from typing import Any, Iterable\n"
+        "from collections import OrderedDict as OD\n"
+        "from dataclasses import field\n"
+        "__all__ = ['OD']\n"
+        "try:\n"
+        "    import numpy\n"
+        "except ImportError:\n"
+        "    numpy = None\n"
+        "def f(x: 'Iterable[Any]') -> None:\n"
+        "    return os.getcwd()\n"
+        "def g():\n"
+        "    import re\n"
+        "    '''json is only named here'''\n"
+    )
+    assert unused_imports(f) == [
+        "field (line 6)", "json (line 3)", "osp (line 2)", "re (line 15)",
+    ]

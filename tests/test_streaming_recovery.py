@@ -4,8 +4,6 @@ newly arrived files are."""
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from youbike_etl_pipeline_spark.sources.readers import read_events

@@ -41,7 +41,7 @@ oracle unrolls k iterations as plain chained CTEs with the identical
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.readers import local_frame
