@@ -13,12 +13,11 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from youbike_etl_pipeline_spark.parity import duck_views, oracle_diff
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS
 
 ADV_DOCS = [
@@ -86,15 +85,6 @@ def adv_dir(tmp_path_factory):
     return str(d)
 
 
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in ("documents", "events"):
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
-
 ADV_QUERIES = [
     "f12_clamp_round",
     "f1_f2_tz_normalize",
@@ -154,11 +144,5 @@ ADV_QUERIES = [
 @pytest.mark.parametrize("name", ADV_QUERIES)
 def test_adversarial_parity(spark, adv_dir, name):
     spec = CORPUS[name]
-    sdf = spec.fn(spark, adv_dir)
-    spark_pd = spark_to_pandas(sdf.collect(), sdf.columns)
-
-    con = _duck(adv_dir)
-    duck_pd = con.execute(spec.oracle).df()
-
-    diff = diff_frames(spark_pd, duck_pd)
+    diff = oracle_diff(spec.fn(spark, adv_dir), spec.oracle, duck_views(adv_dir))
     assert diff is None, f"{name}: {diff}"

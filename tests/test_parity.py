@@ -12,24 +12,10 @@ Queries without an oracle get a rows-run smoke check.
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import pytest
 
-from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from youbike_etl_pipeline_spark.parity import duck_views, oracle_diff
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS
-from youbike_etl_pipeline_spark.schemas import TESTDATA_TABLES
-
-
-def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    return con
-
 
 ORACLE_SPECS = [s for s in CORPUS.values() if s.oracle is not None]
 ROWS_ONLY_SPECS = [s for s in CORPUS.values() if s.oracle is None]
@@ -37,17 +23,7 @@ ROWS_ONLY_SPECS = [s for s in CORPUS.values() if s.oracle is None]
 
 @pytest.mark.parametrize("spec", ORACLE_SPECS, ids=[s.name for s in ORACLE_SPECS])
 def test_oracle_parity(spark, spec, sf_small):
-    spark_df = spec.fn(spark, sf_small)
-    spark_pd = spark_to_pandas(spark_df.collect(), spark_df.columns)
-
-    con = _duck(sf_small)
-    duck_pd = con.execute(spec.oracle).df()
-
-    assert sorted(spark_pd.columns) == sorted(duck_pd.columns), (
-        f"{spec.name}: column mismatch spark={sorted(spark_pd.columns)} "
-        f"duck={sorted(duck_pd.columns)}"
-    )
-    diff = diff_frames(spark_pd, duck_pd)
+    diff = oracle_diff(spec.fn(spark, sf_small), spec.oracle, duck_views(sf_small))
     assert diff is None, f"{spec.name}: {diff}"
 
 
@@ -62,6 +38,6 @@ def test_j4_graded_answer_is_not_empty(sf_small):
     """An anti join that dropped every row would still hash-match an empty
     oracle answer; j4's key filter leaves customers without an urgent
     order, so the graded answer has rows to compare."""
-    con = _duck(sf_small)
+    con = duck_views(sf_small)
     rows = con.execute(CORPUS["j4_anti_join_customers_without_orders"].oracle).fetchall()
     assert len(rows) > 0

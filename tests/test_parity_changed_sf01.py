@@ -15,8 +15,7 @@ import os
 
 import pytest
 
-from tests.test_parity import _duck
-from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from youbike_etl_pipeline_spark.parity import duck_views, oracle_diff
 from youbike_etl_pipeline_spark.plans.corpus import CHANGED_THIS_ROUND, CORPUS
 
 CHANGED_SPECS = [
@@ -30,8 +29,5 @@ CHANGED_SPECS = [
 def test_changed_query_parity_at_driver_scale(spark, spec, sf_medium):
     if not os.path.isdir(sf_medium):
         pytest.skip(f"{sf_medium} missing")
-    spark_df = spec.fn(spark, sf_medium)
-    spark_pd = spark_to_pandas(spark_df.collect(), spark_df.columns)
-    duck_pd = _duck(sf_medium).execute(spec.oracle).df()
-    diff = diff_frames(spark_pd, duck_pd)
+    diff = oracle_diff(spec.fn(spark, sf_medium), spec.oracle, duck_views(sf_medium))
     assert diff is None, f"{spec.name}: {diff}"

@@ -22,8 +22,8 @@ import os
 
 import pytest
 
-from tests.test_parity import ORACLE_SPECS, _duck
-from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from tests.test_parity import ORACLE_SPECS
+from youbike_etl_pipeline_spark.parity import duck_views, oracle_diff
 
 pytestmark = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SF01") != "1",
@@ -34,11 +34,5 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.mark.parametrize("spec", ORACLE_SPECS, ids=[s.name for s in ORACLE_SPECS])
 def test_oracle_parity_sf01(spark, spec, sf_medium):
-    spark_df = spec.fn(spark, sf_medium)
-    spark_pd = spark_to_pandas(spark_df.collect(), spark_df.columns)
-
-    con = _duck(sf_medium)
-    duck_pd = con.execute(spec.oracle).df()
-
-    diff = diff_frames(spark_pd, duck_pd)
+    diff = oracle_diff(spec.fn(spark, sf_medium), spec.oracle, duck_views(sf_medium))
     assert diff is None, f"{spec.name}: {diff}"

@@ -18,7 +18,9 @@ Definitions left unreached on purpose are listed in ``ALLOWED`` by reason;
 an entry that something does reach, or that no longer exists, fails too.
 
 The same holds one level down: each SQL fragment the corpus oracles share
-has one owner in ``plans/corpus.py``, and no file imports a name it never
+has one owner in ``plans/corpus.py``, a twin query whose answer is its
+exact twin's grades against that twin's own oracle, no six-line run of
+``plans/corpus.py`` is written twice, and no file imports a name it never
 uses (no linter is installed to catch those).
 """
 
@@ -202,15 +204,35 @@ def test_the_scan_sees_every_way_a_definition_is_reached(tmp_path):
         ("words[i+2]", "_shingle_cte"),
         ("_hyperplanes(64, 8, seed=42)", "_lsh_planes"),
         ("json_extract(props, '$.k') AS INT) AS item", "_SQL_ITEM"),
+        ("regexp_split_to_array(trim(lower(text))", "_SQL_LOWER_WORDS"),
+        ("ASOF LEFT JOIN cps", "_asof_checkpoint_sql"),
+        (
+            "SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC",
+            "_sessions_cte",
+        ),
+        ("JOIN hidx b ON b.doc_id = c.id_b", "_minhash_verify_ctes"),
+        ("md5_number_lower(w) % 1048576", "_HASHED_SCORES_SQL"),
+        ("(0.75 * d.dl)", "_SQL_BM25_CTES"),
+        (
+            "CAST(SUM(CAST(sx AS DECIMAL(27,6))) AS DOUBLE) AS sx_tot",
+            "_SQL_ANOVA_TOTALS",
+        ),
+        ("WHEN s_de = GREATEST", "_SQL_LANG_CONFUSION"),
+        ("SQRT(CAST(n_tokens AS DOUBLE))", "_SQL_MIXTURE_BUDGET"),
+        ("lower(trim(p_name)) AS nm", "_SQL_PART_CANON"),
+        ("' *\\n *', chr(10)", "_sql_normalize_ws"),
     ],
 )
 def test_each_oracle_fragment_has_one_owner(needle, owner):
     """Each SQL restatement of a fixture format or a shared definition (the
-    md5 fixture bytes, the PCM feature block, the word tokens, the
-    word-3-gram shingle, the LSH hyperplanes, the event item id) is written
-    once in
-    ``plans/corpus.py``: its marker appears only inside the owning builder,
-    and the oracles call the builder."""
+    md5 fixture bytes, the PCM feature block, the word tokens and their
+    lowercased form, the word-3-gram shingle, the LSH hyperplanes, the
+    event item id, the as-of checkpoint join, the session numbering, the
+    MinHash verify, the hashed doc scores, BM25, the ANOVA totals, the
+    language guess, the mixture budget, the part-name canon, the
+    whitespace normalization) is written once in ``plans/corpus.py``: its
+    marker appears only inside the owning builder, and the oracles call
+    the builder."""
     corpus = PKG / "plans" / "corpus.py"
     text = corpus.read_text()
     node = next(
@@ -224,6 +246,81 @@ def test_each_oracle_fragment_has_one_owner(needle, owner):
     assert inside, f"{needle!r} is not in {owner}"
     outside = sorted(set(lines) - set(inside))
     assert not outside, f"{needle!r} outside {owner}: corpus.py lines {outside}"
+
+
+@pytest.mark.parametrize(
+    "twin,exact",
+    [
+        ("j14_bucketed_asof_join", "j7_asof_join"),
+        ("w28_bucketed_systematic_sample", "w11_stratified_systematic_sample"),
+        ("a27_bucketed_equi_depth", "a22_equi_depth_histogram"),
+        ("s4_ivf_topk", "s1_cosine_topk"),
+        ("st10_streaming_drift_monitor", "e2_embedding_drift"),
+        ("st11_streaming_hll_distinct", "t45_portable_hll_distinct"),
+        ("st12_streaming_countmin", "a23_countmin_heavy_hitters"),
+        ("mm32_charset_transfer_decode", "mm29_html_text_extract"),
+        ("mm34_transfer_decoding", "mm29_html_text_extract"),
+        ("st14_streaming_crawl_extract", "mm29_html_text_extract"),
+        ("st15_streaming_transfer_decode", "mm29_html_text_extract"),
+    ],
+)
+def test_twin_queries_share_their_exact_twins_oracle(twin, exact):
+    """A routed or streaming twin whose answer contract is its exact
+    twin's is graded by that twin's oracle object, not by a copy of its
+    text that could drift."""
+    from youbike_etl_pipeline_spark.plans.corpus import CORPUS
+
+    assert CORPUS[twin].oracle is CORPUS[exact].oracle
+
+
+#: Lines of a window: every line of ``plans/corpus.py`` except blank
+#: lines, comments and lines of brackets and punctuation alone, stripped.
+WINDOW = 6
+
+#: Repeated windows ``plans/corpus.py`` keeps on purpose, keyed by the
+#: window's lines joined with newlines, with the reason each stays.
+REPEATS_ALLOWED: dict[str, str] = {}
+
+
+def repeated_windows(text: str) -> dict[str, list[int]]:
+    """Every run of ``WINDOW`` consecutive significant lines (stripped;
+    blank, ``#`` comment and punctuation-only lines skipped) that occurs
+    more than once in ``text``, with the line numbers where its second
+    and later copies start."""
+    kept = [
+        (i, line.strip())
+        for i, line in enumerate(text.splitlines(), 1)
+        if line.strip()
+        and not line.strip().startswith("#")
+        and any(c.isalnum() or c == "_" for c in line)
+    ]
+    seen: set[str] = set()
+    repeats: dict[str, list[int]] = defaultdict(list)
+    for k in range(len(kept) - WINDOW + 1):
+        key = "\n".join(t for _, t in kept[k : k + WINDOW])
+        if key in seen:
+            repeats[key].append(kept[k][0])
+        seen.add(key)
+    return dict(repeats)
+
+
+def test_no_six_line_window_of_the_corpus_is_written_twice():
+    """A second copy of a query's frame, CTE chain or oracle tail is one
+    more place a change has to reach: twins call one builder instead."""
+    text = (PKG / "plans" / "corpus.py").read_text()
+    repeats = repeated_windows(text)
+    stray = {k: v for k, v in repeats.items() if k not in REPEATS_ALLOWED}
+    assert not stray, "\n\n".join(
+        f"corpus.py lines {v} repeat:\n{k}" for k, v in stray.items()
+    )
+    stale = set(REPEATS_ALLOWED) - set(repeats)
+    assert not stale, f"allowed repeats no longer in corpus.py: {sorted(stale)}"
+
+
+def test_the_window_scan_skips_what_carries_no_code():
+    block = "a = 1\nb = 2\nc = 3\nd = 4\ne = 5\nf = 6\n"
+    text = block + "# note\n\n)\n" + block + "x = 0\n" + block.replace("c = 3", "c = 4")
+    assert repeated_windows(text) == {block.strip(): [10]}
 
 
 #: Where an import nothing uses is dead weight: the package, the tools,

@@ -12,13 +12,12 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from youbike_etl_pipeline_spark.parity import duck_views, oracle_diff
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS
 
 SEGMENTS = ["MACHINERY", "BUILDING", "FURNITURE", "AUTOMOBILE", "HOUSEHOLD"]
@@ -317,19 +316,5 @@ def test_star_reseed_parity(spark, star_dir, name):
     spec = CORPUS[name]
     if spec.oracle is None:
         pytest.skip("rows-only query")
-    sdf = spec.fn(spark, star_dir)
-    spark_pd = spark_to_pandas(sdf.collect(), sdf.columns)
-
-    con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(star_dir, t)}.parquet')"
-        )
-    duck_pd = con.execute(spec.oracle).df()
-
-    diff = diff_frames(spark_pd, duck_pd)
+    diff = oracle_diff(spec.fn(spark, star_dir), spec.oracle, duck_views(star_dir))
     assert diff is None, f"{name}: {diff}"

@@ -9,10 +9,9 @@ coercion, mirroring the driver's hash.
 """
 import os, sys, time, json
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-import duckdb
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
-from youbike_etl_pipeline_spark.parity import diff_frames, spark_to_pandas
+from youbike_etl_pipeline_spark.parity import duck_views, oracle_diff, spark_to_pandas
 from youbike_etl_pipeline_spark.session import host_driver_memory
 
 SF = os.environ.get("SIM_SF", "/root/testdata/sf0.01")
@@ -25,11 +24,7 @@ if os.environ.get("SIM_SPLIT"):
     conf = conf.config("spark.sql.files.maxPartitionBytes", os.environ["SIM_SPLIT"])
 spark = conf.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    p = os.path.join(SF, f"{t}.parquet")
-    if os.path.exists(p):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+con = duck_views(SF)
 
 qs, osql = e.queries(), e.oracle_sql()
 names = sys.argv[1:] or list(qs)
@@ -40,13 +35,12 @@ for name in names:
     status, detail = "PASS", ""
     try:
         sdf = qs[name](spark, SF)
-        spark_pd = spark_to_pandas(sdf.collect(), sdf.columns)
         if name in osql:
-            duck_pd = con.execute(osql[name]).df()
-            diff = diff_frames(spark_pd, duck_pd)
+            diff = oracle_diff(sdf, osql[name], con)
             if diff is not None:
                 status, detail = "HASH", diff
         else:
+            spark_to_pandas(sdf.collect(), sdf.columns)
             status = "ROWSONLY"
     except Exception as ex:
         status, detail = "ERROR", f"{type(ex).__name__}: {str(ex)[:200]}"

@@ -2,9 +2,9 @@
 
 Usage: python tools/grade_age.py [--by-round]
 
-Reads every committed CORRECTNESS_r*.json at the repo root (the same
-artifacts plans/corpus.py's window steering reads) and prints, in the
-current queries() export order:
+Reads every committed CORRECTNESS_r*.json at the repo root through
+plans/corpus.py's grade_ledger (the reader its window steering uses) and
+prints, in the current queries() export order:
 
   position  query  latest-grade-round  status-at-that-grade
 
@@ -15,8 +15,6 @@ so each round's window budgeting (CHANGED_THIS_ROUND + never-graded
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 
@@ -24,36 +22,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 
-def grade_ledger() -> dict[str, tuple[int, str]]:
-    """query -> (latest grade round, driver status at that grade)."""
-    latest: dict[str, tuple[int, str]] = {}
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
-            graded = json.load(open(path))
-        except (ValueError, OSError, json.JSONDecodeError):
-            continue
-        for name, row in graded.items():
-            if rnd >= latest.get(name, (0, ""))[0]:
-                if not isinstance(row, dict):
-                    status = "?"
-                elif row.get("err"):
-                    status = "ERROR"
-                elif row.get("hash_match"):
-                    status = "PASS"
-                elif row.get("rows_match"):
-                    status = "ROWSONLY"
-                else:
-                    status = "FAIL"
-                latest[name] = (rnd, status)
-    return latest
-
-
 def main() -> int:
     from youbike_etl_pipeline_spark.plans import corpus
 
     order = corpus._export_order()
-    ledger = grade_ledger()
+    ledger = corpus.grade_ledger()
     if "--by-round" in sys.argv:
         from collections import Counter
 

@@ -177,6 +177,31 @@ def _map_rows(
     return src.mapInPandas(fn, schema=schema)
 
 
+def _map_responses(
+    df: DataFrame,
+    schema: T.StructType,
+    response_fn: "Callable[[int, dict], list[tuple]]",
+) -> DataFrame:
+    """:func:`_map_rows` over ``(doc_id, payload)`` WARC archives: a NULL
+    payload gives no row, an archive without a response record gives one
+    row of ``doc_id`` and NULL in every other ``schema`` field, and
+    otherwise ``response_fn(doc_id, record)`` maps the first response
+    record."""
+    from .warc import first_response, parse_warc
+
+    nulls = (None,) * (len(schema.fields) - 1)
+
+    def row(did: int, payload: bytes | None) -> "list[tuple]":
+        if payload is None:
+            return []
+        resp = first_response(parse_warc(payload))
+        if resp is None:
+            return [(did, *nulls)]
+        return response_fn(did, resp)
+
+    return _map_rows(df, ["doc_id", "payload"], schema, row)
+
+
 #: The attach_* fixture contract: ``(doc_id, payload)``, plus ``media_meta``
 #: for every fixture except the near-dup image and AVI frame fixtures.
 _BARE_PAYLOAD_SCHEMA = T.StructType(
@@ -3058,20 +3083,13 @@ def extract_html_features(
 
     from .html import extract_html_text
     from .warc import (
-        first_response,
         http_charset,
         http_decode_body,
         http_response_body,
         http_response_message,
-        parse_warc,
     )
 
-    def row(did: int, payload: bytes | None) -> "list[tuple]":
-        if payload is None:
-            return []
-        resp = first_response(parse_warc(payload))
-        if resp is None:
-            return [(did, None, None, None, None, None)]
+    def row(did: int, resp: dict) -> "list[tuple]":
         if honor_charset or decode_transfer:
             _, headers, body = http_response_message(resp)
             if decode_transfer:
@@ -3103,7 +3121,7 @@ def extract_html_features(
             )
         ]
 
-    return _map_rows(df, ["doc_id", "payload"], HTML_FEATURES, row)
+    return _map_responses(df, HTML_FEATURES, row)
 
 
 def extract_html_text_column(df: DataFrame) -> DataFrame:
@@ -3114,7 +3132,7 @@ def extract_html_text_column(df: DataFrame) -> DataFrame:
     extracted text, not raw markup. Python touches each payload once;
     everything after this is column expressions."""
     from .html import extract_html_text
-    from .warc import first_response, http_response_body, parse_warc
+    from .warc import http_response_body
 
     out_schema = T.StructType(
         [
@@ -3124,16 +3142,11 @@ def extract_html_text_column(df: DataFrame) -> DataFrame:
         ]
     )
 
-    def row(did: int, payload: bytes | None) -> "list[tuple]":
-        if payload is None:
-            return []
-        resp = first_response(parse_warc(payload))
-        if resp is None:
-            return [(did, None, None)]
+    def row(did: int, resp: dict) -> "list[tuple]":
         ex = extract_html_text(http_response_body(resp)[1].decode("utf-8"))
         return [(did, ex["title"], ex["text"])]
 
-    return _map_rows(df, ["doc_id", "payload"], out_schema, row)
+    return _map_responses(df, out_schema, row)
 
 
 def attach_boilerplate_warc_payloads(df: DataFrame) -> DataFrame:
@@ -3180,19 +3193,14 @@ def extract_main_text_features(df: DataFrame) -> DataFrame:
     import hashlib
 
     from .html import extract_main_text
-    from .warc import first_response, http_response_body, parse_warc
+    from .warc import http_response_body
 
-    def row(did: int, payload: bytes | None) -> "list[tuple]":
-        if payload is None:
-            return []
-        resp = first_response(parse_warc(payload))
-        if resp is None:
-            return [(did, None, None, None, None)]
+    def row(did: int, resp: dict) -> "list[tuple]":
         r = extract_main_text(http_response_body(resp)[1].decode("utf-8"))
         md5 = hashlib.md5(r["text"].encode("utf-8")).hexdigest()
         return [(did, len(r["text"]), md5, r["n_blocks"], r["n_dropped"])]
 
-    return _map_rows(df, ["doc_id", "payload"], MAIN_TEXT_FEATURES, row)
+    return _map_responses(df, MAIN_TEXT_FEATURES, row)
 
 
 #: CDX index row (mm39)
@@ -3454,20 +3462,9 @@ def http_status_features(df: DataFrame) -> DataFrame:
     bodies enter the corpus). One Arrow pass, zero shuffle."""
     from urllib.parse import urljoin
 
-    from .warc import (
-        canonicalize_url,
-        first_response,
-        http_response_message,
-        parse_warc,
-        warc_header,
-    )
+    from .warc import canonicalize_url, http_response_message, warc_header
 
-    def row(did: int, payload: bytes | None) -> "list[tuple]":
-        if payload is None:
-            return []
-        resp = first_response(parse_warc(payload))
-        if resp is None:
-            return [(did, None, None, None, None)]
+    def row(did: int, resp: dict) -> "list[tuple]":
         status, headers, _ = http_response_message(resp)
         loc = headers.get("location")
         canon = None
@@ -3477,7 +3474,7 @@ def http_status_features(df: DataFrame) -> DataFrame:
         retry = int(ra) if ra and ra.isdigit() else None
         return [(did, status, canon, retry, status == 200)]
 
-    return _map_rows(df, ["doc_id", "payload"], HTTP_STATUS_FEATURES, row)
+    return _map_responses(df, HTTP_STATUS_FEATURES, row)
 
 
 #: crawl-URL canonicalization over WARC-Target-URI headers
@@ -3587,18 +3584,13 @@ def robots_policy_features(df: DataFrame) -> DataFrame:
     as the WARC parse, and the ``allowed`` flag is the filter the
     ingest pipeline applies before a URL enters the corpus."""
     from .robots import robots_decision
-    from .warc import first_response, http_response_body, parse_warc
+    from .warc import http_response_body
 
-    def row(did: int, payload: bytes | None) -> "list[tuple]":
-        if payload is None:
-            return []
-        resp = first_response(parse_warc(payload))
-        if resp is None:
-            return [(did, None, None, None)]
+    def row(did: int, resp: dict) -> "list[tuple]":
         body = http_response_body(resp)[1].decode("utf-8")
         return [(did, *robots_decision(body, "trainbot", f"/doc/{did}"))]
 
-    return _map_rows(df, ["doc_id", "payload"], ROBOTS_FEATURES, row)
+    return _map_responses(df, ROBOTS_FEATURES, row)
 
 
 #: WebDataset-shard reduction: per-sample image + caption features

@@ -466,63 +466,91 @@ def encode_tiff(
                 strips.append(_packbits_encode(raw))
             else:
                 raise ValueError(f"unsupported encode compression {compression}")
-        strip_offsets = []
-        for s in strips:
-            strip_offsets.append(len(out))
-            out.extend(s)
-            if len(out) & 1:
-                out.append(0)
+        strip_offsets = _append_units(out, strips)
         bps_off = None
         if spp == 3:  # BitsPerSample needs 3 shorts = 6 bytes → offset
             bps_off = len(out)
             out.extend(pack("HHH", 8, 8, 8))
-        arr_off = {}
-        for name, vals in (("offsets", strip_offsets), ("counts", [len(s) for s in strips])):
-            if len(vals) > 1:
-                arr_off[name] = len(out)
-                for v in vals:
-                    out.extend(pack("I", v))
-        entries = []
-
-        def entry(tag: int, ttype: int, count: int, value: int) -> None:
-            entries.append(pack("HHI", tag, ttype, count) + pack("I", value))
-
-        def entry_short(tag: int, value: int) -> None:
-            # SHORT inline values sit in the HIGH-order... no: they sit in
-            # the first bytes of the value field in file byte order
-            entries.append(
-                pack("HHI", tag, 3, 1) + pack("H", value) + b"\x00\x00"
-            )
-
-        entry_short(256, w)
-        entry_short(257, h)
+        offsets_value, counts_value = _append_unit_arrays(
+            out, endian, strips, strip_offsets
+        )
+        ifd = _Ifd(endian)
+        ifd.short(256, w)
+        ifd.short(257, h)
         if spp == 3:
-            entry(258, 3, 3, bps_off)  # type: ignore[arg-type]
+            ifd.entry(258, 3, 3, bps_off)  # type: ignore[arg-type]
         else:
-            entry_short(258, 8)
-        entry_short(259, compression)
-        entry_short(262, 2 if spp == 3 else 1)
-        entry(
-            273, 4, len(strips),
-            arr_off.get("offsets", strip_offsets[0]),
-        )
-        entry_short(277, spp)
-        entry_short(278, rps)
-        entry(
-            279, 4, len(strips),
-            arr_off.get("counts", len(strips[0])),
-        )
+            ifd.short(258, 8)
+        ifd.short(259, compression)
+        ifd.short(262, 2 if spp == 3 else 1)
+        ifd.entry(273, 4, len(strips), offsets_value)
+        ifd.short(277, spp)
+        ifd.short(278, rps)
+        ifd.entry(279, 4, len(strips), counts_value)
         if predictor == 2:
-            entry_short(317, 2)
-        entries.sort(key=lambda b: struct.unpack(endian + "H", b[:2])[0])
-        ifd_off = len(out)
-        struct.pack_into(endian + "I", out, prev_link, ifd_off)
-        out.extend(pack("H", len(entries)))
-        for e in entries:
-            out.extend(e)
-        prev_link = len(out)
-        out.extend(pack("I", 0))
+            ifd.short(317, 2)
+        prev_link = ifd.append_to(out, prev_link)
     return bytes(out)
+
+
+def _append_units(out: bytearray, units: "list[bytes]") -> "list[int]":
+    """Append each strip or tile to ``out``, padding to an even offset
+    after each; their offsets."""
+    offsets = []
+    for u in units:
+        offsets.append(len(out))
+        out.extend(u)
+        if len(out) & 1:
+            out.append(0)
+    return offsets
+
+
+def _append_unit_arrays(
+    out: bytearray, endian: str, units: "list[bytes]", offsets: "list[int]"
+) -> "tuple[int, int]":
+    """The values of the offsets and byte-counts entries of ``units``: an
+    array of LONGs appended to ``out`` when there is more than one unit,
+    else the lone unit's offset or length inline."""
+    values = []
+    for vals in (offsets, [len(u) for u in units]):
+        if len(vals) > 1:
+            values.append(len(out))
+            for v in vals:
+                out.extend(struct.pack(endian + "I", v))
+        else:
+            values.append(vals[0])
+    return values[0], values[1]
+
+
+class _Ifd:
+    """One image file directory: 12-byte entries in the file's byte
+    order (``endian``), written sorted by tag."""
+
+    def __init__(self, endian: str) -> None:
+        self.endian = endian
+        self.entries: list[bytes] = []
+
+    def entry(self, tag: int, ttype: int, count: int, value: int) -> None:
+        self.entries.append(struct.pack(self.endian + "HHII", tag, ttype, count, value))
+
+    def short(self, tag: int, value: int) -> None:
+        # a SHORT inline value sits in the first bytes of the value field,
+        # in file byte order
+        self.entries.append(
+            struct.pack(self.endian + "HHIH", tag, 3, 1, value) + b"\x00\x00"
+        )
+
+    def append_to(self, out: bytearray, prev_link: int) -> int:
+        """Append the directory to ``out``, point the next-IFD link at
+        ``prev_link`` to it, and return the offset of its own (zero) link."""
+        self.entries.sort(key=lambda e: struct.unpack(self.endian + "H", e[:2])[0])
+        struct.pack_into(self.endian + "I", out, prev_link, len(out))
+        out.extend(struct.pack(self.endian + "H", len(self.entries)))
+        for e in self.entries:
+            out.extend(e)
+        link = len(out)
+        out.extend(struct.pack(self.endian + "I", 0))
+        return link
 
 
 def _encode_tiff_extended(
@@ -604,12 +632,7 @@ def _encode_tiff_extended(
             for pl in planes:
                 for y0 in range(0, h, rps):
                     units.append(compress(diff(pl[y0 : y0 + rps]).tobytes()))
-        unit_offsets = []
-        for u in units:
-            unit_offsets.append(len(out))
-            out.extend(u)
-            if len(out) & 1:
-                out.append(0)
+        unit_offsets = _append_units(out, units)
         bps_off = None
         if spp == 3:
             bps_off = len(out)
@@ -624,53 +647,33 @@ def _encode_tiff_extended(
             for channel in range(3):
                 for v in full[:, channel]:
                     out.extend(pack("H", int(v)))
-        arr_off = {}
-        for name, vals in (
-            ("offsets", unit_offsets),
-            ("counts", [len(u) for u in units]),
-        ):
-            if len(vals) > 1:
-                arr_off[name] = len(out)
-                for v in vals:
-                    out.extend(pack("I", v))
-        entries = []
-
-        def entry(tag: int, ttype: int, count: int, value: int) -> None:
-            entries.append(pack("HHI", tag, ttype, count) + pack("I", value))
-
-        def entry_short(tag: int, value: int) -> None:
-            entries.append(pack("HHI", tag, 3, 1) + pack("H", value) + b"\x00\x00")
-
-        entry_short(256, w)
-        entry_short(257, h)
+        offsets_value, counts_value = _append_unit_arrays(
+            out, endian, units, unit_offsets
+        )
+        ifd = _Ifd(endian)
+        ifd.short(256, w)
+        ifd.short(257, h)
         if spp == 3:
-            entry(258, 3, 3, bps_off)  # type: ignore[arg-type]
+            ifd.entry(258, 3, 3, bps_off)  # type: ignore[arg-type]
         else:
-            entry_short(258, bits)
-        entry_short(259, compression)
-        entry_short(262, 3 if colormap is not None else (2 if spp == 3 else 1))
-        entry_short(277, spp)
+            ifd.short(258, bits)
+        ifd.short(259, compression)
+        ifd.short(262, 3 if colormap is not None else (2 if spp == 3 else 1))
+        ifd.short(277, spp)
         if colormap is not None:
-            entry(320, 3, 768, cm_off)  # type: ignore[arg-type]
+            ifd.entry(320, 3, 768, cm_off)  # type: ignore[arg-type]
         if planar == 2:
-            entry_short(284, 2)
+            ifd.short(284, 2)
         if predictor == 2:
-            entry_short(317, 2)
+            ifd.short(317, 2)
         if tile is not None:
-            entry_short(322, tile[0])
-            entry_short(323, tile[1])
-            entry(324, 4, len(units), arr_off.get("offsets", unit_offsets[0]))
-            entry(325, 4, len(units), arr_off.get("counts", len(units[0])))
+            ifd.short(322, tile[0])
+            ifd.short(323, tile[1])
+            ifd.entry(324, 4, len(units), offsets_value)
+            ifd.entry(325, 4, len(units), counts_value)
         else:
-            entry_short(278, rows_per_strip or h)
-            entry(273, 4, len(units), arr_off.get("offsets", unit_offsets[0]))
-            entry(279, 4, len(units), arr_off.get("counts", len(units[0])))
-        entries.sort(key=lambda b: struct.unpack(endian + "H", b[:2])[0])
-        ifd_off = len(out)
-        struct.pack_into(endian + "I", out, prev_link, ifd_off)
-        out.extend(pack("H", len(entries)))
-        for e in entries:
-            out.extend(e)
-        prev_link = len(out)
-        out.extend(pack("I", 0))
+            ifd.short(278, rows_per_strip or h)
+            ifd.entry(273, 4, len(units), offsets_value)
+            ifd.entry(279, 4, len(units), counts_value)
+        prev_link = ifd.append_to(out, prev_link)
     return bytes(out)

@@ -19,10 +19,16 @@ CORRECTNESS_r02.json).
 
 from __future__ import annotations
 
+import os
+
+import duckdb
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 
-__all__ = ["canonical_frame", "diff_frames"]
+from .schemas import TESTDATA_TABLES
+
+__all__ = ["canonical_frame", "diff_frames", "duck_views", "oracle_diff"]
 
 
 class UnhashableCellError(TypeError):
@@ -78,3 +84,24 @@ def diff_frames(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> str | None:
                 f" duck dtype={duck_pd[col].dtype if col in duck_pd else '?'})"
             )
     return None
+
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table whose parquet
+    file exists in ``sf_dir``, named as the oracles name it."""
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def oracle_diff(
+    spark_df: DataFrame, oracle: str, con: duckdb.DuckDBPyConnection
+) -> str | None:
+    """The driver's check of one query: collect ``spark_df``, run
+    ``oracle`` on ``con`` (see :func:`duck_views`) and compare both as the
+    driver does; None if canonically equal, else the first difference."""
+    spark_pd = spark_to_pandas(spark_df.collect(), spark_df.columns)
+    return diff_frames(spark_pd, con.execute(oracle).df())

@@ -26,7 +26,7 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import aggregations as agg
@@ -66,6 +66,28 @@ def register(
 #: exported first so the correctness gate re-grades them (and
 #: tests/test_parity_changed_sf01.py checks them at sf0.01).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "w9_sessionization",
+    "st9_streaming_neardup_gate",
+    "t33_bpe_pair_merge",
+    "s7_bm25_retrieval",
+    "t34_hashed_quality_classifier",
+    "t37_jaccard_threshold_sweep",
+    "t38_sketch_accuracy_audit",
+    "ml4_calibration_bins",
+    "m22_cohens_kappa",
+    "m23_population_stability",
+    "t40_token_budget_allocation",
+    "ml5_roc_auc",
+    "t42_gopher_quality_rules",
+    "t43_truncation_audit",
+    "f20_quantile_normalization",
+    "a24_decile_lift",
+    "t46_containment_pairs",
+    "t47_pmi_cooccurrence",
+    "m28b_kendall_tau_sampled",
+    "t38b_sketch_audit_dedup_first",
+    "e3b_knn_consistency_routed",
+    "t52_extracted_lang_id",
     "j4_anti_join_customers_without_orders",
     "mm7_image_ahash_neardup",
     "mm8_video_shot_boundary",
@@ -80,11 +102,7 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "t10_dedup_clusters",
     "t25_canonical_selection",
     "t26_leakage_free_split",
-    "t37_jaccard_threshold_sweep",
-    "t38_sketch_accuracy_audit",
-    "t38b_sketch_audit_dedup_first",
     "t49_prefix_filter_jaccard",
-    "st9_streaming_neardup_gate",
     "t50_bpe_encode",
     "t51_bpe_mixture_budget",
     "t53_byte_bpe_encode",
@@ -94,7 +112,6 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "g4_bfs_reachability",
     "g5_partition_modularity",
     "t39_zipf_law_fit",
-    "e3b_knn_consistency_routed",
     "m25_poisson_bootstrap_ci",
     "m30_randomization_test",
     "st1_streaming_hourly_counts",
@@ -144,7 +161,6 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "mm39_cdx_index",
     "mm41_sitemap_discovery",
     "mm42_warc_revisit_dedup",
-    "t52_extracted_lang_id",
     "t54_paragraph_dedup",
     "t8_simhash_pairs",
     "t9_levenshtein_pairs",
@@ -152,23 +168,36 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
 )
 
 
-def _last_graded_round() -> dict[str, int]:
-    """Per-query round of the most recent driver grade, read from the
-    committed ``CORRECTNESS_r*.json`` artifacts at the repo root. Used to
-    rotate the green tail: the driver's per-round window is finite, so
-    re-verification coverage is maximized by grading the STALEST greens
-    first (a query last graded in r1 ran against testdata that has since
-    been regenerated — exactly how the r4 streaming regression hid)."""
+def grade_ledger() -> dict[str, tuple[int, str]]:
+    """Per query, the round of its most recent driver grade and the
+    driver's status then (PASS, ROWSONLY, FAIL, ERROR, or ? for a row of
+    unknown shape), read from the committed ``CORRECTNESS_r*.json``
+    artifacts at the repo root. The round rotates the green tail: the
+    driver's per-round window is finite, so re-verification coverage is
+    maximized by grading the STALEST greens first (a query last graded in
+    r1 ran against testdata that has since been regenerated — exactly how
+    the r4 streaming regression hid)."""
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    latest: dict[str, int] = {}
+    latest: dict[str, tuple[int, str]] = {}
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         try:
             rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):-len(".json")])
             graded = json.load(open(path))
         except (ValueError, OSError, json.JSONDecodeError):
             continue
-        for name in graded:
-            latest[name] = max(rnd, latest.get(name, 0))
+        for name, row in graded.items():
+            if rnd >= latest.get(name, (0, ""))[0]:
+                if not isinstance(row, dict):
+                    status = "?"
+                elif row.get("err"):
+                    status = "ERROR"
+                elif row.get("hash_match"):
+                    status = "PASS"
+                elif row.get("rows_match"):
+                    status = "ROWSONLY"
+                else:
+                    status = "FAIL"
+                latest[name] = (rnd, status)
     return latest
 
 
@@ -189,7 +218,7 @@ def _export_order() -> list[str]:
     names = list(CORPUS)
     pos = {n: i for i, n in enumerate(names)}
     changed = {n: i for i, n in enumerate(CHANGED_THIS_ROUND)}
-    last = _last_graded_round()
+    last = {n: rnd for n, (rnd, _) in grade_ledger().items()}
 
     def rank(n: str) -> tuple:
         if n in changed:
@@ -574,6 +603,18 @@ def a5_top1_event_type_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.top1_per_group(ev, "user_id", "event_type")
 
 
+def _user_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """a6/a10's user × hour matrix: one column per hour ``0``..``23`` of
+    the 6-dp mean value, 0.0 where the user has no event that hour."""
+    ev = _t(spark, sf_dir, "events").withColumn("hour", F.hour("ts"))
+    return (
+        ev.groupBy("user_id")
+        .pivot("hour", list(range(24)))
+        .agg(F.round(F.avg("value"), 6))
+        .na.fill(0.0)
+    )
+
+
 @register(
     "a6_pivot_user_hour_profile",
     "SELECT user_id, "
@@ -587,13 +628,7 @@ def a5_top1_event_type_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="Pivoted user×hour mean-value profile matrix (station×hour shape).",
 )
 def a6_pivot_user_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("hour", F.hour("ts"))
-    wide = (
-        ev.groupBy("user_id")
-        .pivot("hour", list(range(24)))
-        .agg(F.round(F.avg("value"), 6))
-        .na.fill(0.0)
-    )
+    wide = _user_hour_profile(spark, sf_dir)
     renames = {str(h): f"h{h}" for h in range(24)}
     return wide.withColumnsRenamed(renames)
 
@@ -827,13 +862,7 @@ def a12_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "array_max (first-max tie-break = lowest hour).",
 )
 def a10_argmax_peak_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("hour", F.hour("ts"))
-    wide = (
-        ev.groupBy("user_id")
-        .pivot("hour", list(range(24)))
-        .agg(F.round(F.avg("value"), 6))
-        .na.fill(0.0)
-    )
+    wide = _user_hour_profile(spark, sf_dir)
     return agg.argmax_hour(wide, "user_id", [str(h) for h in range(24)]).withColumnsRenamed(
         {"peak_index": "peak_index"}
     )
@@ -1220,6 +1249,19 @@ def f1_f2_tz_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.7 Statistics operators (sufficient-statistics layer)
 # ===========================================================================
 
+#: The one-way ANOVA totals over per-group sufficient sums ``s(grp, n,
+#: sx, sxx)`` (m4, m17): k, N, Σsx, Σsxx and Σ floor(sx²/n) …
+_SQL_ANOVA_TOTALS = """t AS (
+      SELECT COUNT(*) AS k, CAST(SUM(n) AS BIGINT) AS "N",
+             CAST(SUM(CAST(sx AS DECIMAL(27,6))) AS DOUBLE) AS sx_tot,
+             CAST(SUM(CAST(sxx AS DECIMAL(27,0))) AS DOUBLE) AS sxx_tot,
+             CAST(SUM(CAST(FLOOR(sx * sx / n) AS DECIMAL(27,0))) AS DOUBLE) AS sg
+      FROM s
+    )"""
+#: … and the F statistic over them.
+_SQL_ANOVA_F = '''((sg - sx_tot * sx_tot / "N") / (k - 1))
+             / ((sxx_tot - sg) / ("N" - k))'''
+
 _SUFF = """
       SELECT c.c_mktsegment AS grp,
              COUNT(o.o_totalprice) AS n,
@@ -1300,18 +1342,11 @@ def m2_m3_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "m4_anova_oneway",
     f"""
     WITH s AS ({_SUFF}),
-    t AS (
-      SELECT COUNT(*) AS k, CAST(SUM(n) AS BIGINT) AS "N",
-             CAST(SUM(CAST(sx AS DECIMAL(27,6))) AS DOUBLE) AS sx_tot,
-             CAST(SUM(CAST(sxx AS DECIMAL(27,0))) AS DOUBLE) AS sxx_tot,
-             CAST(SUM(CAST(FLOOR(sx * sx / n) AS DECIMAL(27,0))) AS DOUBLE) AS sg
-      FROM s
-    )
+    {_SQL_ANOVA_TOTALS}
     SELECT k, "N",
            FLOOR(sg - sx_tot * sx_tot / "N") AS ss_between,
            FLOOR(sxx_tot - sg) AS ss_within,
-           {SQL_Q6('''((sg - sx_tot * sx_tot / "N") / (k - 1))
-             / ((sxx_tot - sg) / ("N" - k))''')} AS f_stat,
+           {SQL_Q6(_SQL_ANOVA_F)} AS f_stat,
            {SQL_Q6('''(sg - sx_tot * sx_tot / "N")
              / ((sg - sx_tot * sx_tot / "N") + (sxx_tot - sg))''')} AS eta_sq,
            k - 1 AS df_between,
@@ -1541,6 +1576,8 @@ def t1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: yields [''] (1 token) while Spark's filtered split yields [] — a seed with
 #: an empty doc would otherwise flip the hash.
 _SQL_WORDS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x <> '')"
+#: SQL twin of ``text.tokens(lower(text))``: the lowercased words.
+_SQL_LOWER_WORDS = "list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')"
 
 
 def _shingle_cte(words_src: str, carry: str = "") -> str:
@@ -1556,6 +1593,15 @@ def _shingle_cte(words_src: str, carry: str = "") -> str:
 def _doc_shingle_cte(docs_src: str = "documents") -> str:
     """:func:`_shingle_cte` over the tokens of every document in ``docs_src``."""
     return _shingle_cte(f"(SELECT doc_id, {_SQL_WORDS} AS words FROM {docs_src})")
+
+
+#: The verified pairs of an ``inter(id_a, id_b, n_common)`` and
+#: ``cnt(doc_id, n)`` chain: Jaccard >= 0.5.
+_SQL_JACCARD_VERIFIED = """
+    FROM inter
+    JOIN cnt ca ON id_a = ca.doc_id
+    JOIN cnt cb ON id_b = cb.doc_id
+    WHERE n_common / (ca.n + cb.n - n_common) >= 0.5"""
 
 
 def _ngram_jaccard_ctes(capped: bool = True) -> str:
@@ -1580,17 +1626,19 @@ def _ngram_jaccard_ctes(capped: bool = True) -> str:
     )"""
 
 
+def _ngram_jaccard_pairs_sql(capped: bool) -> str:
+    """t2/t49's answer: every word-3-gram pair with Jaccard >= 0.5 and its
+    counts, over the doc-freq-capped shingles or (t49) all of them."""
+    return f"""
+    WITH {_ngram_jaccard_ctes(capped)}
+    SELECT id_a, id_b, n_common, ca.n AS n_a, cb.n AS n_b,
+           n_common / (ca.n + cb.n - n_common) AS jaccard{_SQL_JACCARD_VERIFIED}
+    """
+
+
 @register(
     "t2_ngram_jaccard_pairs",
-    f"""
-    WITH {_ngram_jaccard_ctes()}
-    SELECT id_a, id_b, n_common, ca.n AS n_a, cb.n AS n_b,
-           n_common / (ca.n + cb.n - n_common) AS jaccard
-    FROM inter
-    JOIN cnt ca ON id_a = ca.doc_id
-    JOIN cnt cb ON id_b = cb.doc_id
-    WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
-    """,
+    _ngram_jaccard_pairs_sql(True),
     survey_rows="ext:dedup-ngram-jaccard",
     description="Near-dup pairs by word-3-gram Jaccard >= 0.5 via inverted "
     "shingle index self-join (the exact verify of MinHash LSH). The graded "
@@ -1680,10 +1728,39 @@ def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TOK_EXPR = f"len({_SQL_WORDS})"
 
 
-def _SQL_MARK(word: str) -> str:
-    """Marker-word count by token equality — mirror of text.marker_count
-    (``\\b`` boundaries around combining marks are engine-dependent)."""
-    return f"len(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'), x -> x = '{word}'))"
+def _SQL_MARK(word: str, text: str) -> str:
+    """Marker-word count in the SQL expression ``text`` by token equality —
+    mirror of text.marker_count (``\\b`` boundaries around combining marks
+    are engine-dependent)."""
+    return f"len(list_filter(regexp_split_to_array(lower({text}), '[^a-z]+'), x -> x = '{word}'))"
+
+
+def _lang_scores_sql(text: str) -> str:
+    """The ``has_cjk`` flag and ``s_de``/``s_en``/``s_es``/``s_fr`` marker
+    counts text.lang_id scores the SQL expression ``text`` by (t4, t52)."""
+
+    def marks(words: "list[str]") -> str:
+        return " + ".join(_SQL_MARK(w, text) for w in words)
+
+    return f"""regexp_matches({text}, '[一-鿿]') AS has_cjk,
+             {marks(["der", "die", "und", "das", "ist"])} AS s_de,
+             {marks(["the", "and", "of", "to", "a"])} AS s_en,
+             {marks(["el", "la", "de", "que", "y"])} AS s_es,
+             {marks(["le", "la", "et", "les", "des"])} AS s_fr"""
+
+
+#: The confusion counts of text.lang_id's guess over a ``scores(lang,
+#: has_cjk, s_de, s_en, s_es, s_fr)`` CTE (t4, t52): CJK first, no marker
+#: is 'und', ties fold in ascending language order.
+_SQL_LANG_CONFUSION = """SELECT CASE WHEN has_cjk THEN 'zh'
+                WHEN GREATEST(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
+                WHEN s_de = GREATEST(s_de, s_en, s_es, s_fr) THEN 'de'
+                WHEN s_en = GREATEST(s_de, s_en, s_es, s_fr) THEN 'en'
+                WHEN s_es = GREATEST(s_de, s_en, s_es, s_fr) THEN 'es'
+                ELSE 'fr' END AS lang_guess,
+           lang AS lang_actual,
+           COUNT(*) AS n
+    FROM scores GROUP BY 1, 2"""
 _PUNCT_EXPR = "len(regexp_extract_all(text, '[^\\w\\s]'))"
 
 @register(
@@ -1723,22 +1800,10 @@ def t3_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH docs AS (SELECT lang, COALESCE(text, '') AS text FROM documents),
     scores AS (
       SELECT lang,
-             regexp_matches(text, '[一-鿿]') AS has_cjk,
-             {" + ".join(_SQL_MARK(w) for w in ["der", "die", "und", "das", "ist"])} AS s_de,
-             {" + ".join(_SQL_MARK(w) for w in ["the", "and", "of", "to", "a"])} AS s_en,
-             {" + ".join(_SQL_MARK(w) for w in ["el", "la", "de", "que", "y"])} AS s_es,
-             {" + ".join(_SQL_MARK(w) for w in ["le", "la", "et", "les", "des"])} AS s_fr
+             {_lang_scores_sql('text')}
       FROM docs
     )
-    SELECT CASE WHEN has_cjk THEN 'zh'
-                WHEN GREATEST(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                WHEN s_de = GREATEST(s_de, s_en, s_es, s_fr) THEN 'de'
-                WHEN s_en = GREATEST(s_de, s_en, s_es, s_fr) THEN 'en'
-                WHEN s_es = GREATEST(s_de, s_en, s_es, s_fr) THEN 'es'
-                ELSE 'fr' END AS lang_guess,
-           lang AS lang_actual,
-           COUNT(*) AS n
-    FROM scores GROUP BY 1, 2
+    {_SQL_LANG_CONFUSION}
     """,
     survey_rows="ext:lang-id",
     description="Heuristic marker-word language ID vs labeled language "
@@ -1789,7 +1854,7 @@ def t5_char_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
              {_TOK_EXPR} AS n_tokens,
              length(text) AS n_chars,
              len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct,
-             {" + ".join(_SQL_MARK(w) for w in ["the", "and", "of", "to", "a"])} AS n_stop
+             {" + ".join(_SQL_MARK(w, 'text') for w in ["the", "and", "of", "to", "a"])} AS n_stop
       FROM documents
     ),
     q AS (
@@ -1821,13 +1886,12 @@ def t6_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _portable_minhash_ctes(docs_src: str = "documents") -> str:
+def _portable_minhash_ctes(docs_src: str) -> str:
     """The shared head of the portable-MinHash oracles: the ``WITH shing,
     hidx, sig, banded`` CTEs — md5-derived 30-bit shingle base hashes over
     ``docs_src``, the universal-hash mins with the exact Python-side (a,b)
     constants (:func:`..operators.dedup.minhash_coeffs`) and value-concat
-    keys of 8 bands. Each oracle appends its own CTEs and final SELECT after the
-    trailing comma."""
+    keys of 8 bands, ending in a comma for :func:`_minhash_verify_ctes`."""
     from ..operators.dedup import MINHASH_P, NUM_HASHES, minhash_coeffs
 
     bands = 8
@@ -1859,18 +1923,18 @@ def _portable_minhash_ctes(docs_src: str = "documents") -> str:
     ),"""
 
 
-def _t7_minhash_sql() -> str:
-    """Generated SQL mirror of the portable MinHash+LSH pipeline (same
-    generated-constant technique as t8/s3): md5-derived 30-bit shingle base
-    hashes, 32 universal-hash mins with the exact Python-side (a,b)
-    constants, value-concat band keys, banded candidate join, exact Jaccard
-    verify on the same base-hash sets."""
-    return _portable_minhash_ctes() + """
+def _minhash_verify_ctes(docs_src: str, pair: str) -> str:
+    """The portable-MinHash chain over ``docs_src`` through its exact
+    verify (t7, st9, t38): the banded candidate pairs ``cand(id_a, id_b)``
+    whose sides ``a``/``b`` satisfy ``pair``, per-doc base-hash counts
+    ``cnt(doc_id, n)`` and the candidates' intersections
+    ``inter(id_a, id_b, n_common)``."""
+    return _portable_minhash_ctes(docs_src) + f"""
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b
         ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
+       AND {pair}
     ),
     cnt AS (SELECT doc_id, COUNT(*) AS n FROM hidx GROUP BY 1),
     inter AS (
@@ -1879,13 +1943,18 @@ def _t7_minhash_sql() -> str:
       JOIN hidx a ON a.doc_id = c.id_a
       JOIN hidx b ON b.doc_id = c.id_b AND b.sh = a.sh
       GROUP BY 1, 2
-    )
+    )"""
+
+
+def _t7_minhash_sql() -> str:
+    """Generated SQL mirror of the portable MinHash+LSH pipeline (same
+    generated-constant technique as t8/s3): md5-derived 30-bit shingle base
+    hashes, 32 universal-hash mins with the exact Python-side (a,b)
+    constants, value-concat band keys, banded candidate join, exact Jaccard
+    verify on the same base-hash sets."""
+    return _minhash_verify_ctes("documents", "a.doc_id < b.doc_id") + f"""
     SELECT id_a, id_b,
-           n_common / (ca.n + cb.n - n_common) AS jaccard
-    FROM inter
-    JOIN cnt ca ON id_a = ca.doc_id
-    JOIN cnt cb ON id_b = cb.doc_id
-    WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
+           n_common / (ca.n + cb.n - n_common) AS jaccard{_SQL_JACCARD_VERIFIED}
     """
 
 
@@ -2374,46 +2443,65 @@ def mm5_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@register(
-    "j7_asof_join",
-    f"""
+def _asof_checkpoint_sql(forward: bool) -> str:
+    """DuckDB ASOF twin of :func:`_checkpoint_asof` (j7; j10 when
+    ``forward``): each event's nearest checkpoint at or before its ts, or
+    at or after it, per group."""
+    delta, cmp = ("cp_value - value", "<=") if forward else ("value - cp_value", ">=")
+    return f"""
     WITH ev AS (SELECT user_id % 4 AS grp, ts, event_id, value FROM events),
     cps AS (
       SELECT user_id % 4 AS grp, ts AS cp_ts, value AS cp_value
       FROM events WHERE event_id % 50 = 0 AND value IS NOT NULL
     )
     SELECT grp, COUNT(cp_value) AS n_matched,
-           {SQL_DAVG_Q4('value - cp_value')} AS mean_delta
+           {SQL_DAVG_Q4(delta)} AS mean_delta
     FROM (
       SELECT e.grp, e.value, c.cp_value
-      FROM ev e ASOF LEFT JOIN cps c ON e.grp = c.grp AND e.ts >= c.cp_ts
+      FROM ev e ASOF LEFT JOIN cps c ON e.grp = c.grp AND e.ts {cmp} c.cp_ts
     ) GROUP BY grp
-    """,
+    """
+
+
+def _checkpoint_asof(
+    spark: SparkSession, sf_dir: str, forward: bool, bucket_seconds: float | None
+) -> DataFrame:
+    """j7/j10/j14: every event of a ``user_id % 4`` group matched to the
+    group's latest checkpoint (every 50th event) at or before its ts — the
+    next one at or after it when ``forward`` — through asof_join's
+    day-bucket routing when ``bucket_seconds`` is set; per group the match
+    count and the quantized mean value delta."""
+    ev = _t(spark, sf_dir, "events").withColumn("grp", F.col("user_id") % 4)
+    # a NULL-valued checkpoint is no checkpoint: ASOF picks the nearest ROW
+    # while last/first(ignorenulls) skips null VALUES — filtering aligns them
+    cps = (
+        ev.filter((F.col("event_id") % 50 == 0) & F.col("value").isNotNull())
+        .select("grp", F.col("ts").alias("cp_ts"), F.col("value").alias("cp_value"))
+    )
+    sides = (ev.select("grp", "ts", "event_id", "value"), cps)
+    keys = dict(on="grp", left_ts="ts", right_ts="cp_ts", right_values=["cp_value"])
+    if forward:
+        joined = oj.asof_join_forward(*sides, **keys)
+        delta = F.col("cp_value") - F.col("value")
+    else:
+        joined = oj.asof_join(*sides, **keys, bucket_seconds=bucket_seconds)
+        delta = F.col("value") - F.col("cp_value")
+    return joined.groupBy("grp").agg(
+        F.count("cp_value").alias("n_matched"),
+        agg.decimal_avg_q4(delta).alias("mean_delta"),
+    )
+
+
+@register(
+    "j7_asof_join",
+    _asof_checkpoint_sql(False),
     survey_rows="J2 (as-of generalization)",
     description="As-of join: each event matched to the most recent checkpoint "
     "<= ts per group, via union + partitioned last-value carry-forward "
     "(one shuffle — no range explosion).",
 )
 def j7_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("grp", F.col("user_id") % 4)
-    # null-valued checkpoints filtered for the same ASOF-vs-ignorenulls
-    # alignment as j10 (see its comment)
-    cps = (
-        ev.filter((F.col("event_id") % 50 == 0) & F.col("value").isNotNull())
-        .select("grp", F.col("ts").alias("cp_ts"), F.col("value").alias("cp_value"))
-    )
-    joined = oj.asof_join(
-        ev.select("grp", "ts", "event_id", "value"),
-        cps,
-        on="grp",
-        left_ts="ts",
-        right_ts="cp_ts",
-        right_values=["cp_value"],
-    )
-    return joined.groupBy("grp").agg(
-        F.count("cp_value").alias("n_matched"),
-        agg.decimal_avg_q4(F.col("value") - F.col("cp_value")).alias("mean_delta"),
-    )
+    return _checkpoint_asof(spark, sf_dir, False, None)
 
 
 @register(
@@ -2895,16 +2983,24 @@ def _session_marks_cte(carry: str = "") -> str:
     )"""
 
 
+def _sessions_cte(carry: str, sid: str) -> str:
+    """``marked`` plus ``sess(user_id, ts{carry}, <sid>)``: each event's
+    session number, the running count of session starts in (ts, event_id)
+    order (w9, and j11/j11b through :func:`_copresence_sql`)."""
+    return f"""{_session_marks_cte(', event_id' + carry)},
+    sess AS (
+      SELECT user_id, ts{carry},
+             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS {sid}
+      FROM marked
+    )"""
+
+
 @register(
     "w9_sessionization",
     f"""
-    WITH {_session_marks_cte(', event_id, value')},
-    sess AS (
-      SELECT user_id, value,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM marked
-    )
+    WITH {_sessions_cte(', value', 'session_id')}
     SELECT user_id, COUNT(DISTINCT session_id) AS n_sessions,
            COUNT(*) AS n_events,
            {SQL_DSUM('value')} AS sum_value
@@ -2965,13 +3061,7 @@ def st3_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s4_ivf_topk",
-    f"""
-    WITH {_EMB_DOTS}
-    SELECT vec_id, ROUND(dot / (SQRT(aa) * SQRT(qq)), 6) AS cosine
-    FROM dots, qn
-    WHERE aa > 0 AND qq > 0
-    ORDER BY dot / (SQRT(aa) * SQRT(qq)) DESC, vec_id ASC LIMIT 10
-    """,
+    CORPUS["s1_cosine_topk"].oracle,
     survey_rows="ext:similarity-ivf",
     description="IVF top-k: KMeans cells + n_probe nearest cells scanned "
     "(partition-pruned at scale). Graded at FULL probe (n_probe == "
@@ -3426,6 +3516,30 @@ def t9_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
+def _systematic_sample(
+    spark: SparkSession, sf_dir: str, bucket_width: int | None
+) -> DataFrame:
+    """w11/w28: every tenth event of each event type in event_id order,
+    counted and summed — ranked by one window per type, or by
+    windows.bucketed_row_number over ``bucket_width``-wide id ranges."""
+    ev = _t(spark, sf_dir, "events")
+    if bucket_width is None:
+        w = Window.partitionBy("event_type").orderBy(F.col("event_id").asc())
+        ranked = ev.withColumn("rn", F.row_number().over(w))
+    else:
+        ranked = ow.bucketed_row_number(
+            ev.select("event_type", "value", "event_id"),
+            ["event_type"],
+            "event_id",
+            bucket_width=bucket_width,
+        )
+    return (
+        ranked.filter(F.col("rn") % 10 == 1)
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"), agg.decimal_sum("value").alias("sum_value"))
+    )
+
+
 @register(
     "w11_stratified_systematic_sample",
     f"""
@@ -3442,14 +3556,7 @@ def t9_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "under a deterministic ordering (df.sampleBy is the statistical variant).",
 )
 def w11_stratified_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(F.col("event_id").asc())
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") % 10 == 1)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), agg.decimal_sum("value").alias("sum_value"))
-    )
+    return _systematic_sample(spark, sf_dir, None)
 
 
 @register(
@@ -3627,26 +3734,11 @@ def _st9_gate_sql() -> str:
     doc_id%3<>0, no a<b), reduced to per-lang checked/duplicate counts
     over the stream subset. Equality holds regardless of micro-batch
     splits because signatures/bands/counts are per-document properties."""
-    return _portable_minhash_ctes() + """
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       AND a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM hidx GROUP BY 1),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-      FROM cand c
-      JOIN hidx a ON a.doc_id = c.id_a
-      JOIN hidx b ON b.doc_id = c.id_b AND b.sh = a.sh
-      GROUP BY 1, 2
-    ),
+    return _minhash_verify_ctes(
+        "documents", "a.doc_id % 3 = 0 AND b.doc_id % 3 <> 0"
+    ) + f""",
     dups AS (
-      SELECT DISTINCT id_a FROM inter
-      JOIN cnt ca ON id_a = ca.doc_id
-      JOIN cnt cb ON id_b = cb.doc_id
-      WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
+      SELECT DISTINCT id_a{_SQL_JACCARD_VERIFIED}
     )
     SELECT doc.lang, COUNT(*) AS n_checked,
            CAST(SUM(CASE WHEN d.id_a IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -3740,6 +3832,18 @@ def t10_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(docs, pairs)
 
 
+def _split_80_10_10(key: str) -> Column:
+    """t12/t16/t26's deterministic split of a row by its ``key`` id: a
+    Lehmer-style multiplicative hash mod 100 (overflow-safe to 2^63) sends
+    80% to train, 10% to val and 10% to test."""
+    bucket = ((F.col(key) % 2147483648) * 48271) % 2147483647 % 100
+    return (
+        F.when(bucket < 80, F.lit("train"))
+        .when(bucket < 90, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
 @register(
     "t26_leakage_free_split",
     f"""
@@ -3774,14 +3878,8 @@ def t26_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = _ngram_pairs_shared(spark, sf_dir)
     canon = dedup_clusters(docs, pairs)
-    bucket = ((F.col("canonical_id") % 2147483648) * 48271) % 2147483647 % 100
-    split = (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        canon.withColumn("split", split)
+        canon.withColumn("split", _split_80_10_10("canonical_id"))
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -3931,14 +4029,8 @@ def w12_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t12_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    bucket = ((F.col("doc_id") % 2147483648) * 48271) % 2147483647 % 100
-    split = (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        docs.withColumn("split", split)
+        docs.withColumn("split", _split_80_10_10("doc_id"))
         .groupBy("split")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("total_chars"))
     )
@@ -4367,13 +4459,7 @@ def t16_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import shingle_index
 
     docs = _t(spark, sf_dir, "documents")
-    bucket = ((F.col("doc_id") % 2147483648) * 48271) % 2147483647 % 100
-    split = (
-        F.when(bucket < 80, F.lit("train"))
-        .when(bucket < 90, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    idx = shingle_index(docs).withColumn("split", split)
+    idx = shingle_index(docs).withColumn("split", _split_80_10_10("doc_id"))
     train_sh = idx.filter(F.col("split") == "train").select("shingle").distinct()
     ev = idx.filter(F.col("split") != "train")
     hits = ev.join(
@@ -4759,9 +4845,9 @@ def t18_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t19_bigram_lm",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS words
+      SELECT doc_id, {_SQL_LOWER_WORDS} AS words
       FROM documents
     ),
     bigrams AS (
@@ -5437,19 +5523,7 @@ def w15_windowed_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j10_asof_join_forward",
-    f"""
-    WITH ev AS (SELECT user_id % 4 AS grp, ts, event_id, value FROM events),
-    cps AS (
-      SELECT user_id % 4 AS grp, ts AS cp_ts, value AS cp_value
-      FROM events WHERE event_id % 50 = 0 AND value IS NOT NULL
-    )
-    SELECT grp, COUNT(cp_value) AS n_matched,
-           {SQL_DAVG_Q4('cp_value - value')} AS mean_delta
-    FROM (
-      SELECT e.grp, e.value, c.cp_value
-      FROM ev e ASOF LEFT JOIN cps c ON e.grp = c.grp AND e.ts <= c.cp_ts
-    ) GROUP BY grp
-    """,
+    _asof_checkpoint_sql(True),
     survey_rows="J2 (as-of generalization, forward direction)",
     description="Forward as-of join: each event matched to the NEXT "
     "checkpoint >= ts per group — union + partitioned first-value "
@@ -5457,25 +5531,7 @@ def w15_windowed_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     "oracle).",
 )
 def j10_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("grp", F.col("user_id") % 4)
-    # a NULL-valued checkpoint is no checkpoint: ASOF picks the nearest ROW
-    # while first(ignorenulls) skips null VALUES — filtering aligns them
-    cps = (
-        ev.filter((F.col("event_id") % 50 == 0) & F.col("value").isNotNull())
-        .select("grp", F.col("ts").alias("cp_ts"), F.col("value").alias("cp_value"))
-    )
-    joined = oj.asof_join_forward(
-        ev.select("grp", "ts", "event_id", "value"),
-        cps,
-        on="grp",
-        left_ts="ts",
-        right_ts="cp_ts",
-        right_values=["cp_value"],
-    )
-    return joined.groupBy("grp").agg(
-        F.count("cp_value").alias("n_matched"),
-        agg.decimal_avg_q4(F.col("cp_value") - F.col("value")).alias("mean_delta"),
-    )
+    return _checkpoint_asof(spark, sf_dir, True, None)
 
 
 
@@ -6668,26 +6724,76 @@ def cdc2_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "j11_interval_overlap_join",
-    f"""
-    WITH {_session_marks_cte(', event_id')},
-    sess AS (
-      SELECT user_id, ts,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS sid
-      FROM marked
-    ),
+def _copresence_sql(max_bucket_occupancy: int | None) -> str:
+    """SQL twin of :func:`_copresence`: the 30-minute-gap session
+    ``intervals`` of every user, then the brute-force overlap self-join —
+    or, with ``max_bucket_occupancy``, the hour-bucket explode, the
+    per-bucket cap under the (start, user, session) order and the
+    bucket-mate join that interval_overlap_pairs runs."""
+    intervals = f"""
+    WITH {_sessions_cte('', 'sid')},
     intervals AS (
       SELECT user_id, sid, MIN(ts) AS s, MAX(ts) AS e
       FROM sess GROUP BY 1, 2
-    )
+    )"""
+    if max_bucket_occupancy is None:
+        return intervals + """
     SELECT a.user_id AS user_a, b.user_id AS user_b, COUNT(*) AS n_copresent
     FROM intervals a JOIN intervals b
       ON a.user_id < b.user_id AND a.s <= b.e AND b.s <= a.e
     GROUP BY 1, 2
-    """,
+    """
+    return intervals + f""",
+    bucketed AS (
+      SELECT i.user_id, i.sid, i.s, i.e, b AS bucket
+      FROM intervals i,
+           LATERAL (SELECT unnest(generate_series(
+             date_trunc('hour', i.s), date_trunc('hour', i.e),
+             INTERVAL 1 HOUR)) AS b)
+    ),
+    capped AS (
+      SELECT * FROM (
+        SELECT user_id, sid, s, e, bucket,
+               ROW_NUMBER() OVER (PARTITION BY bucket
+                 ORDER BY s ASC, user_id ASC, sid ASC) AS occ
+        FROM bucketed
+      ) WHERE occ <= {max_bucket_occupancy}
+    ),
+    pairs AS (
+      SELECT DISTINCT a.user_id AS user_a, a.sid AS sid_a,
+                      b.user_id AS user_b, b.sid AS sid_b
+      FROM capped a JOIN capped b
+        ON a.bucket = b.bucket AND a.user_id < b.user_id
+       AND a.s <= b.e AND b.s <= a.e
+    )
+    SELECT user_a, user_b, COUNT(*) AS n_copresent
+    FROM pairs GROUP BY 1, 2
+    """
+
+
+def _copresence(
+    spark: SparkSession, sf_dir: str, max_bucket_occupancy: int | None
+) -> DataFrame:
+    """j11/j11b: pairs of users whose 30-minute-gap sessions overlap, with
+    the count of overlapping session pairs, through
+    interval_overlap_pairs (capped per hour bucket when
+    ``max_bucket_occupancy`` is set)."""
+    ev = _t(spark, sf_dir, "events")
+    sess = ow.sessionize(ev, key="user_id", ts="ts", tiebreak=["event_id"])
+    intervals = sess.groupBy("user_id", "session_id").agg(
+        F.min("ts").alias("s"), F.max("ts").alias("e")
+    )
+    out = oj.interval_overlap_pairs(intervals, max_bucket_occupancy=max_bucket_occupancy)
+    return out.select(
+        F.col("user_id_a").alias("user_a"),
+        F.col("user_id_b").alias("user_b"),
+        "n_copresent",
+    )
+
+
+@register(
+    "j11_interval_overlap_join",
+    _copresence_sql(None),
     survey_rows="J-family ext: interval overlap self-join (co-presence); J5,W9",
     description="Co-presence: pairs of users whose activity sessions (30-min "
     "gap sessionization) overlap in time, with the count of overlapping "
@@ -6707,20 +6813,9 @@ def cdc2_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "probed at 100x in SCALING.md; this graded query runs uncapped).",
 )
 def j11_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    sess = ow.sessionize(ev, key="user_id", ts="ts", tiebreak=["event_id"])
-    intervals = sess.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("s"), F.max("ts").alias("e")
-    )
     # exact (uncapped) mode — the 100×-scale routing for occupancy growth
-    # is interval_overlap_pairs(max_bucket_occupancy=N), probed in
-    # SCALING.md's 100× table
-    out = oj.interval_overlap_pairs(intervals)
-    return out.select(
-        F.col("user_id_a").alias("user_a"),
-        F.col("user_id_b").alias("user_b"),
-        "n_copresent",
-    )
+    # is j11b's cap, probed in SCALING.md's 100× table
+    return _copresence(spark, sf_dir, None)
 
 
 @register(
@@ -7133,7 +7228,7 @@ _T31_DOC_CE = (
     f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS words
+             {_SQL_LOWER_WORDS} AS words
       FROM documents
     ),
     bi AS (
@@ -7244,10 +7339,9 @@ def t31_lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t33_bpe_pair_merge",
-    """
+    f"""
     WITH w AS (
-      SELECT unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                    x -> x <> '')) AS w
+      SELECT unnest({_SQL_LOWER_WORDS}) AS w
       FROM documents
     ),
     ch AS (
@@ -7360,14 +7454,10 @@ def t32_content_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: BM25 query terms (fixed retrieval query over the synthetic corpus).
 _BM25_TERMS = ("spark", "join", "window", "stream")
-
-
-@register(
-    "s7_bm25_retrieval",
-    f"""
-    WITH toks AS (
+#: SQL twin of :func:`_bm25_scores`: ``bm(doc_id, bm25)`` (s7, s8).
+_SQL_BM25_CTES = f"""toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS words
+             {_SQL_LOWER_WORDS} AS words
       FROM documents
       WHERE text IS NOT NULL
     ),
@@ -7387,7 +7477,7 @@ _BM25_TERMS = ("spark", "join", "window", "stream")
                / 1000000.0 AS idf6
       FROM (SELECT w, COUNT(*) AS dfreq FROM tf GROUP BY 1) d, stats s
     ),
-    scores AS (
+    sc AS (
       SELECT t.doc_id,
              FLOOR(
                (i.idf6 * (t.tf * 2.2))
@@ -7395,9 +7485,18 @@ _BM25_TERMS = ("spark", "join", "window", "stream")
                * 1000000
              ) / 1000000.0 AS sterm
       FROM tf t JOIN idf i USING (w) JOIN dl d USING (doc_id), stats s
-    )
-    SELECT doc_id, CAST(SUM(CAST(sterm AS DECIMAL(27,6))) AS DOUBLE) AS bm25
-    FROM scores GROUP BY 1
+    ),
+    bm AS (
+      SELECT doc_id, CAST(SUM(CAST(sterm AS DECIMAL(27,6))) AS DOUBLE) AS bm25
+      FROM sc GROUP BY 1
+    )"""
+
+
+@register(
+    "s7_bm25_retrieval",
+    f"""
+    WITH {_SQL_BM25_CTES}
+    SELECT doc_id, bm25 FROM bm
     ORDER BY bm25 DESC, doc_id
     LIMIT 20
     """,
@@ -7476,24 +7575,32 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scores.groupBy("doc_id").agg(decimal_sum(F.col("sterm")).alias("bm25"))
 
 
-@register(
-    "t34_hashed_quality_classifier",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, source,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')) AS w
+#: SQL twin of :func:`_hashed_doc_scores`: t34's hashed-classifier
+#: ``doc_scores(doc_id, source, n_chars, score)`` (t34, ml4, ml5, m22,
+#: m23, f20, a24).
+_HASHED_SCORES_SQL = f"""toks AS (
+      SELECT doc_id, source, n_chars,
+             unnest({_SQL_LOWER_WORDS}) AS w
       FROM documents
     ),
     feats AS (
-      SELECT doc_id, source,
+      SELECT doc_id, source, n_chars,
              CAST(md5_number_lower(w) % 1048576 AS BIGINT) - 524288 AS f
       FROM toks
     ),
     doc_scores AS (
-      SELECT doc_id, source,
+      SELECT doc_id, source, n_chars,
              CAST(SUM(f) AS DOUBLE) / (COUNT(*) * 524288.0) AS score
-      FROM feats GROUP BY 1, 2
-    )
+      FROM feats GROUP BY 1, 2, 3
+    )"""
+#: t34's score in one of ten fixed bins over [-1, 1] (ml4, m23).
+_SQL_SCORE_BIN = "LEAST(GREATEST(CAST(FLOOR((score + 1.0) * 5) AS BIGINT), 0), 9)"
+
+
+@register(
+    "t34_hashed_quality_classifier",
+    f"""
+    WITH {_HASHED_SCORES_SQL}
     SELECT source,
            COUNT(*) AS n_docs,
            CAST(SUM(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
@@ -7525,6 +7632,17 @@ def t34_hashed_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("score") > 0, 1).otherwise(0)).alias("n_keep"),
         q6(decimal_avg(q6(F.col("score")))).alias("mean_score"),
+    )
+
+
+def _score_bin() -> Column:
+    """Spark twin of ``_SQL_SCORE_BIN``."""
+    return F.least(
+        F.greatest(
+            F.floor((F.col("score") + F.lit(1.0)) * F.lit(5)).cast("long"),
+            F.lit(0),
+        ),
+        F.lit(9),
     )
 
 
@@ -7566,22 +7684,51 @@ def _hashed_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "t35_ngram_novelty",
-    """
-    WITH toks AS (
+def _lower_shingle_ctes(keys: str) -> str:
+    """SQL twin of :func:`_lower_shingles`: ``sh(<keys>, shingle)``."""
+    return f"""toks AS (
       SELECT doc_id, source,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS words
+             {_SQL_LOWER_WORDS} AS words
       FROM documents
     ),
     sh AS (
-      SELECT DISTINCT doc_id, source,
+      SELECT DISTINCT {keys},
              array_to_string(list_slice(words, i, i + 2), ' ') AS shingle
       FROM toks, LATERAL (
         SELECT unnest(generate_series(1, len(words) - 2)) AS i
       )
       WHERE len(words) >= 3
-    ),
+    )"""
+
+
+def _lower_shingles(spark: SparkSession, sf_dir: str, keys: list[str]) -> DataFrame:
+    """t35/t36: the distinct lowercased word-3-grams ``shingle`` of every
+    document, per document columns ``keys``."""
+    from ..operators.skew import widen_narrow_scan
+    from ..operators.text import tokens
+
+    docs = _t(spark, sf_dir, "documents")
+    return (
+        widen_narrow_scan(docs.select(*keys, "text"))
+        .select(*keys, tokens(F.lower(F.col("text"))).alias("words"))
+        .filter(F.size("words") >= 3)
+        .select(
+            *keys,
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("words") - F.lit(2)),
+                    lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, 3)),
+                )
+            ).alias("shingle"),
+        )
+        .distinct()
+    )
+
+
+@register(
+    "t35_ngram_novelty",
+    f"""
+    WITH {_lower_shingle_ctes('doc_id, source')},
     first_seen AS (SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY 1),
     per_doc AS (
       SELECT s.doc_id, s.source,
@@ -7612,28 +7759,7 @@ def _hashed_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts throughout; the one ratio is FLOOR-quantized on both engines.",
 )
 def t35_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.skew import widen_narrow_scan
-    from ..operators.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    sh = (
-        widen_narrow_scan(docs.select("doc_id", "source", "text"))
-        .select(
-            "doc_id", "source", tokens(F.lower(F.col("text"))).alias("words")
-        )
-        .filter(F.size("words") >= 3)
-        .select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("words") - F.lit(2)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, 3)),
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = _lower_shingles(spark, sf_dir, ["doc_id", "source"])
     first_seen = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     per_doc = (
         sh.join(first_seen, "shingle")
@@ -7911,20 +8037,8 @@ def ev4_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t36_cross_source_overlap",
-    """
-    WITH toks AS (
-      SELECT doc_id, source,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS words
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT source,
-             array_to_string(list_slice(words, i, i + 2), ' ') AS shingle
-      FROM toks, LATERAL (
-        SELECT unnest(generate_series(1, len(words) - 2)) AS i
-      )
-      WHERE len(words) >= 3
-    ),
+    f"""
+    WITH {_lower_shingle_ctes('source')},
     totals AS (SELECT source, COUNT(*) AS n_sh FROM sh GROUP BY 1),
     pairs AS (
       SELECT a.source AS src_a, b.source AS src_b, COUNT(*) AS n_shared
@@ -7953,25 +8067,7 @@ def ev4_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cap. TakeOrderedAndProject for the top-k.",
 )
 def t36_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.skew import widen_narrow_scan
-    from ..operators.text import tokens
-
-    docs = _t(spark, sf_dir, "documents")
-    sh = (
-        widen_narrow_scan(docs.select("source", "text"))
-        .select("source", tokens(F.lower(F.col("text"))).alias("words"))
-        .filter(F.size("words") >= 3)
-        .select(
-            "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("words") - F.lit(2)),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("words"), i, 3)),
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = _lower_shingles(spark, sf_dir, ["source"])
     totals = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n_sh"))
     pairs = (
         sh.toDF("src_a", "shingle")
@@ -8279,11 +8375,7 @@ def ev6_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_ngram_jaccard_ctes()},
     pairs AS (
       SELECT id_a, id_b,
-             n_common / (ca.n + cb.n - n_common) AS jaccard
-      FROM inter
-      JOIN cnt ca ON id_a = ca.doc_id
-      JOIN cnt cb ON id_b = cb.doc_id
-      WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
+             n_common / (ca.n + cb.n - n_common) AS jaccard{_SQL_JACCARD_VERIFIED}
     ),
     banded AS (
       SELECT LEAST(CAST(FLOOR(jaccard * 10) AS INT), 9) AS band,
@@ -8663,16 +8755,9 @@ def mm6_audio_dft_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(FLOOR(SUM(CAST(z AS DECIMAL(19,6)) * CAST(z AS DECIMAL(19,6)))) AS DOUBLE) AS sxx
       FROM z GROUP BY 1
     ),
-    t AS (
-      SELECT COUNT(*) AS k, CAST(SUM(n) AS BIGINT) AS "N",
-             CAST(SUM(CAST(sx AS DECIMAL(27,6))) AS DOUBLE) AS sx_tot,
-             CAST(SUM(CAST(sxx AS DECIMAL(27,0))) AS DOUBLE) AS sxx_tot,
-             CAST(SUM(CAST(FLOOR(sx * sx / n) AS DECIMAL(27,0))) AS DOUBLE) AS sg
-      FROM s
-    )
+    {_SQL_ANOVA_TOTALS}
     SELECT k, "N",
-           {SQL_Q6('''((sg - sx_tot * sx_tot / "N") / (k - 1))
-             / ((sxx_tot - sg) / ("N" - k))''')} AS w_stat,
+           {SQL_Q6(_SQL_ANOVA_F)} AS w_stat,
            k - 1 AS df_between,
            "N" - k AS df_within
     FROM t
@@ -8821,6 +8906,32 @@ def m18_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drift_report(dims: DataFrame) -> DataFrame:
+    """e2/st10's drift summary over per-dimension half means ``(d, m0,
+    m1)``, from the batch or the stream: the L2 norm of the centroid
+    shift, the largest per-dimension shift and its lowest dimension."""
+    diff = F.col("m1") - F.col("m0")
+    diffs = dims.select(
+        "d",
+        q6(diff * diff).alias("d2"),
+        q6(F.abs(diff)).alias("ad"),
+    )
+    mx = diffs.agg(F.max("ad").alias("mx"))
+    return (
+        diffs.crossJoin(F.broadcast(mx))
+        .agg(
+            F.count(F.lit(1)).alias("n_dims"),
+            q6(
+                F.sqrt(F.sum(F.col("d2").cast("decimal(27,6)")).cast("double"))
+            ).alias("drift_l2"),
+            F.max("ad").alias("max_dim_shift"),
+            F.min(
+                F.when(F.col("ad") == F.col("mx"), F.col("d"))
+            ).cast("long").alias("top_dim"),
+        )
+    )
+
+
 @register(
     "e2_embedding_drift",
     """
@@ -8882,28 +8993,8 @@ def e2_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / F.sum(F.when(F.col("half") == h, 1).otherwise(0))
     )
-    dims = elems.groupBy("d").agg(
-        halfsum(0).alias("m0"), halfsum(1).alias("m1")
-    )
-    diff = F.col("m1") - F.col("m0")
-    diffs = dims.select(
-        "d",
-        q6(diff * diff).alias("d2"),
-        q6(F.abs(diff)).alias("ad"),
-    )
-    mx = diffs.agg(F.max("ad").alias("mx"))
-    return (
-        diffs.crossJoin(F.broadcast(mx))
-        .agg(
-            F.count(F.lit(1)).alias("n_dims"),
-            q6(
-                F.sqrt(F.sum(F.col("d2").cast("decimal(27,6)")).cast("double"))
-            ).alias("drift_l2"),
-            F.max("ad").alias("max_dim_shift"),
-            F.min(
-                F.when(F.col("ad") == F.col("mx"), F.col("d"))
-            ).cast("long").alias("top_dim"),
-        )
+    return _drift_report(
+        elems.groupBy("d").agg(halfsum(0).alias("m0"), halfsum(1).alias("m1"))
     )
 
 
@@ -9416,7 +9507,7 @@ def m20_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st10_streaming_drift_monitor",
-    None,  # patched to e2's oracle right below — the two must stay in lockstep
+    CORPUS["e2_embedding_drift"].oracle,
     survey_rows="§2.8 streaming ext (incremental drift monitor); ext:e2 twin",
     description="Streaming twin of e2's embedding-drift monitor — the "
     "shape a production pipeline actually runs (score each incoming "
@@ -9458,29 +9549,7 @@ def st10_streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("sxi").cast("double") / F.lit(1000000.0) / F.sum("cnt")
         ).alias("m1")
     )
-    dims = m0.join(m1, "d")
-    diff = F.col("m1") - F.col("m0")
-    diffs = dims.select(
-        "d", q6(diff * diff).alias("d2"), q6(F.abs(diff)).alias("ad")
-    )
-    mx = diffs.agg(F.max("ad").alias("mx"))
-    return (
-        diffs.crossJoin(F.broadcast(mx))
-        .agg(
-            F.count(F.lit(1)).alias("n_dims"),
-            q6(
-                F.sqrt(F.sum(F.col("d2").cast("decimal(27,6)")).cast("double"))
-            ).alias("drift_l2"),
-            F.max("ad").alias("max_dim_shift"),
-            F.min(F.when(F.col("ad") == F.col("mx"), F.col("d")))
-            .cast("long")
-            .alias("top_dim"),
-        )
-    )
-
-
-# streaming and batch drift must stay in lockstep: same oracle text.
-CORPUS["st10_streaming_drift_monitor"].oracle = CORPUS["e2_embedding_drift"].oracle
+    return _drift_report(m0.join(m1, "d"))
 
 
 def _t38_sketch_audit_sql(dedup_first: bool = False) -> str:
@@ -9504,27 +9573,13 @@ def _t38_sketch_audit_sql(dedup_first: bool = False) -> str:
     match_sum = " + ".join(
         f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(32)
     )
-    return _portable_minhash_ctes(docs_src) + f"""
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
-    ),
+    return _minhash_verify_ctes(docs_src, "a.doc_id < b.doc_id") + f""",
     est AS (
       SELECT c.id_a, c.id_b,
              ({match_sum}) * 1.0 / 32 AS est_j
       FROM cand c
       JOIN sig sa ON sa.doc_id = c.id_a
       JOIN sig sb ON sb.doc_id = c.id_b
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n FROM hidx GROUP BY 1),
-    inter AS (
-      SELECT c.id_a, c.id_b, COUNT(*) AS n_common
-      FROM cand c
-      JOIN hidx a ON a.doc_id = c.id_a
-      JOIN hidx b ON b.doc_id = c.id_b AND b.sh = a.sh
-      GROUP BY 1, 2
     ),
     scored AS (
       SELECT e.id_a, e.id_b, e.est_j,
@@ -9812,41 +9867,7 @@ def mm7_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s8_rrf_hybrid_retrieval",
     f"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS words
-      FROM documents
-      WHERE text IS NOT NULL
-    ),
-    dl AS (SELECT doc_id, len(words) AS dl FROM toks),
-    stats AS (
-      SELECT COUNT(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS tot FROM dl
-    ),
-    tf AS (
-      SELECT doc_id, w, COUNT(*) AS tf
-      FROM (SELECT doc_id, unnest(words) AS w FROM toks)
-      WHERE w IN {str(tuple(_BM25_TERMS))}
-      GROUP BY 1, 2
-    ),
-    idf AS (
-      SELECT w,
-             FLOOR(LN((s.n_docs - dfreq + 0.5) / (dfreq + 0.5) + 1.0) * 1000000)
-               / 1000000.0 AS idf6
-      FROM (SELECT w, COUNT(*) AS dfreq FROM tf GROUP BY 1) d, stats s
-    ),
-    sc AS (
-      SELECT t.doc_id,
-             FLOOR(
-               (i.idf6 * (t.tf * 2.2))
-               / (t.tf + 1.2 * (0.25 + (0.75 * d.dl) / (CAST(s.tot AS DOUBLE) / s.n_docs)))
-               * 1000000
-             ) / 1000000.0 AS sterm
-      FROM tf t JOIN idf i USING (w) JOIN dl d USING (doc_id), stats s
-    ),
-    bm AS (
-      SELECT doc_id, CAST(SUM(CAST(sterm AS DECIMAL(27,6))) AS DOUBLE) AS bm25
-      FROM sc GROUP BY 1
-    ),
+    WITH {_SQL_BM25_CTES},
     lex AS (
       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS r
       FROM bm ORDER BY bm25 DESC, doc_id LIMIT 50
@@ -10027,10 +10048,8 @@ def entry_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagship_segment_health(spark, sf_dir)
 
 
-@register(
-    "er1_blocked_record_linkage",
-    r"""
-    WITH p AS (
+#: SQL twin of :func:`_part_name_canon`.
+_SQL_PART_CANON = r"""p AS (
       SELECT p_partkey AS k, lower(trim(p_name)) AS nm FROM part
     ),
     canon AS (
@@ -10038,7 +10057,27 @@ def entry_query(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(COUNT(*) AS BIGINT) AS n_rec,
              regexp_extract(nm, '(\S+)$', 1) AS blk
       FROM p GROUP BY nm
+    )"""
+
+
+def _part_name_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """er1/er2's ``(nm, canon_key, n_rec, blk)``: each distinct
+    lowercased, trimmed part name with its lowest key, its record count
+    and its last word as the blocking key."""
+    p = _t(spark, sf_dir, "part").select(
+        F.col("p_partkey").alias("k"), F.lower(F.trim("p_name")).alias("nm")
     )
+    return (
+        p.groupBy("nm")
+        .agg(F.min("k").alias("canon_key"), F.count(F.lit(1)).alias("n_rec"))
+        .withColumn("blk", F.regexp_extract("nm", r"(\S+)$", 1))
+    )
+
+
+@register(
+    "er1_blocked_record_linkage",
+    rf"""
+    WITH {_SQL_PART_CANON}
     SELECT a.nm AS name_a, b.nm AS name_b,
            CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS edit_dist,
            a.canon_key AS canon_a, b.canon_key AS canon_b,
@@ -10064,14 +10103,7 @@ def entry_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "band); Levenshtein is JVM-side (no Python).",
 )
 def er1_blocked_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("k"), F.lower(F.trim("p_name")).alias("nm")
-    )
-    canon = (
-        p.groupBy("nm")
-        .agg(F.min("k").alias("canon_key"), F.count(F.lit(1)).alias("n_rec"))
-        .withColumn("blk", F.regexp_extract("nm", r"(\S+)$", 1))
-    )
+    canon = _part_name_canon(spark, sf_dir)
     a = canon.select(
         F.col("nm").alias("name_a"),
         F.col("canon_key").alias("canon_a"),
@@ -10292,26 +10324,9 @@ def ev7_wilson_ctr_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ml4_calibration_bins",
     f"""
-    WITH toks AS (
-      SELECT doc_id, source, n_chars,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-                                                      '\\s+'),
-                    x -> x <> '')) AS w
-      FROM documents
-    ),
-    feats AS (
-      SELECT doc_id, n_chars,
-             CAST(md5_number_lower(w) % 1048576 AS BIGINT) - 524288 AS f
-      FROM toks
-    ),
-    doc_scores AS (
-      SELECT doc_id, n_chars,
-             CAST(SUM(f) AS DOUBLE) / (COUNT(*) * 524288.0) AS score
-      FROM feats GROUP BY 1, 2
-    ),
+    WITH {_HASHED_SCORES_SQL},
     binned AS (
-      SELECT LEAST(GREATEST(CAST(FLOOR((score + 1.0) * 5) AS BIGINT), 0), 9)
-               AS bin,
+      SELECT {_SQL_SCORE_BIN} AS bin,
              score,
              CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
       FROM doc_scores
@@ -10344,13 +10359,7 @@ def ml4_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ds = _hashed_doc_scores(spark, sf_dir)
     binned = ds.select(
-        F.least(
-            F.greatest(
-                F.floor((F.col("score") + F.lit(1.0)) * F.lit(5)).cast("long"),
-                F.lit(0),
-            ),
-            F.lit(9),
-        ).alias("bin"),
+        _score_bin().alias("bin"),
         "score",
         F.when(F.col("n_chars") >= 200, 1).otherwise(0).alias("label"),
     )
@@ -10366,29 +10375,6 @@ def ml4_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bin")
     )
-
-
-#: Shared DuckDB fragment: t34's hashed-classifier doc scores (mirrors
-#: _hashed_doc_scores — see t34's description for the scheme).
-_HASHED_SCORES_SQL = """
-    toks AS (
-      SELECT doc_id, source, n_chars,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-                                                      '\\s+'),
-                    x -> x <> '')) AS w
-      FROM documents
-    ),
-    feats AS (
-      SELECT doc_id, source, n_chars,
-             CAST(md5_number_lower(w) % 1048576 AS BIGINT) - 524288 AS f
-      FROM toks
-    ),
-    doc_scores AS (
-      SELECT doc_id, source, n_chars,
-             CAST(SUM(f) AS DOUBLE) / (COUNT(*) * 524288.0) AS score
-      FROM feats GROUP BY 1, 2, 3
-    )
-"""
 
 
 @register(
@@ -10477,8 +10463,7 @@ def m22_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH {_HASHED_SCORES_SQL},
     binned AS (
-      SELECT LEAST(GREATEST(CAST(FLOOR((score + 1.0) * 5) AS BIGINT), 0), 9)
-               AS bin,
+      SELECT {_SQL_SCORE_BIN} AS bin,
              CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_base
       FROM doc_scores
     ),
@@ -10530,13 +10515,7 @@ def m22_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 def m23_population_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     ds = _hashed_doc_scores(spark, sf_dir)
     binned = ds.select(
-        F.least(
-            F.greatest(
-                F.floor((F.col("score") + F.lit(1.0)) * F.lit(5)).cast("long"),
-                F.lit(0),
-            ),
-            F.lit(9),
-        ).alias("bin"),
+        _score_bin().alias("bin"),
         F.when(F.col("source") == "src0", 1).otherwise(0).alias("is_base"),
     )
     counts = binned.groupBy("bin").agg(
@@ -10573,21 +10552,9 @@ def m23_population_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bin")
 
 
-@register(
-    "t40_token_budget_allocation",
-    """
-    WITH toks AS (
-      SELECT source,
-             len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                 x -> x <> '')) AS ntok
-      FROM documents WHERE text IS NOT NULL
-    ),
-    src AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(ntok) AS BIGINT) AS n_tokens
-      FROM toks GROUP BY 1
-    ),
-    wts AS (
+#: SQL twin of :func:`_mixture_budget` over a ``src(source, n_docs,
+#: n_tokens)`` CTE (t40, t51).
+_SQL_MIXTURE_BUDGET = """wts AS (
       SELECT source, n_docs, n_tokens,
              CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT)
                AS wq
@@ -10599,7 +10566,49 @@ def m23_population_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS mix_weight,
            FLOOR(CAST(wq AS DOUBLE) / swq * 2000000 / n_tokens * 1000000)
              / 1000000.0 AS repeat_factor
-    FROM wts CROSS JOIN tot ORDER BY source
+    FROM wts CROSS JOIN tot ORDER BY source"""
+
+
+def _mixture_budget(src: DataFrame) -> DataFrame:
+    """t40/t51's alpha = 0.5 mixture table over per-source ``(source,
+    n_docs, n_tokens)``: sqrt-smoothed weights in integer micro-units
+    (an exact BIGINT normalizer), each source's mixture share and its
+    repeat factor under a 2M-token training budget."""
+    wts = src.withColumn(
+        "wq",
+        F.floor(F.sqrt(F.col("n_tokens").cast("double")) * 1000000).cast(
+            "long"
+        ),
+    )
+    tot = wts.agg(F.sum("wq").alias("swq"))
+    share = F.col("wq").cast("double") / F.col("swq")
+    return (
+        wts.crossJoin(F.broadcast(tot))
+        .select(
+            "source", "n_docs", "n_tokens",
+            q6(share).alias("mix_weight"),
+            q6(share * F.lit(2000000) / F.col("n_tokens")).alias(
+                "repeat_factor"
+            ),
+        )
+        .orderBy("source")
+    )
+
+
+@register(
+    "t40_token_budget_allocation",
+    f"""
+    WITH toks AS (
+      SELECT source,
+             len({_SQL_LOWER_WORDS}) AS ntok
+      FROM documents WHERE text IS NOT NULL
+    ),
+    src AS (
+      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+             CAST(SUM(ntok) AS BIGINT) AS n_tokens
+      FROM toks GROUP BY 1
+    ),
+    {_SQL_MIXTURE_BUDGET}
     """,
     survey_rows="ext:training mixture allocation (alpha-smoothed source "
     "weights); t24 (mixture resample), t14 (token counting), A1",
@@ -10628,25 +10637,7 @@ def t40_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("ntok").alias("n_tokens")
     )
-    wts = src.withColumn(
-        "wq",
-        F.floor(F.sqrt(F.col("n_tokens").cast("double")) * 1000000).cast(
-            "long"
-        ),
-    )
-    tot = wts.agg(F.sum("wq").alias("swq"))
-    share = F.col("wq").cast("double") / F.col("swq")
-    return (
-        wts.crossJoin(F.broadcast(tot))
-        .select(
-            "source", "n_docs", "n_tokens",
-            q6(share).alias("mix_weight"),
-            q6(share * F.lit(2000000) / F.col("n_tokens")).alias(
-                "repeat_factor"
-            ),
-        )
-        .orderBy("source")
-    )
+    return _mixture_budget(src)
 
 
 # ===========================================================================
@@ -10660,22 +10651,8 @@ def t40_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml5_roc_auc",
-    """
-    WITH toks AS (
-      SELECT doc_id, source,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')) AS w
-      FROM documents
-    ),
-    feats AS (
-      SELECT doc_id, source,
-             CAST(md5_number_lower(w) % 1048576 AS BIGINT) - 524288 AS f
-      FROM toks
-    ),
-    doc_scores AS (
-      SELECT doc_id,
-             CAST(SUM(f) AS DOUBLE) / (COUNT(*) * 524288.0) AS score
-      FROM feats GROUP BY 1
-    ),
+    f"""
+    WITH {_HASHED_SCORES_SQL},
     lab AS (
       SELECT CAST(FLOOR(s.score * 1000000) AS BIGINT) AS sq,
              CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
@@ -10839,10 +10816,10 @@ def m24_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t41_chao1_vocab_richness",
-    """
+    f"""
     WITH toks AS (
       SELECT source,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')) AS w
+             unnest({_SQL_LOWER_WORDS}) AS w
       FROM documents WHERE text IS NOT NULL
     ),
     wc AS (
@@ -11098,6 +11075,21 @@ _W23_QDEN = [
 ]
 
 
+def _daily_micro_sums(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """w23/w24/m26's daily frame ``(event_type, day, <name>)``: each day's
+    exact value sum per event type in integer micro-units (floored)."""
+    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    return (
+        ev.select("event_type", F.col("ts").cast("date").alias("day"), "value")
+        .groupBy("event_type", "day")
+        .agg(
+            F.floor(agg.decimal_sum(F.col("value")) * 1000000)
+            .cast("long")
+            .alias(name)
+        )
+    )
+
+
 @register(
     "w23_ewma_daily",
     f"""
@@ -11134,16 +11126,7 @@ _W23_QDEN = [
     "scale.",
 )
 def w23_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = (
-        ev.select("event_type", F.col("ts").cast("date").alias("day"), "value")
-        .groupBy("event_type", "day")
-        .agg(
-            F.floor(agg.decimal_sum(F.col("value")) * 1000000)
-            .cast("long")
-            .alias("xq")
-        )
-    )
+    daily = _daily_micro_sums(spark, sf_dir, "xq")
     s_num, s_den = _w23_spark_terms()
     sm = daily.select(
         "event_type",
@@ -11263,16 +11246,12 @@ def dq8_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t42_gopher_quality_rules",
-    """
+    f"""
     WITH stats AS (
       SELECT doc_id, source,
-             len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                 x -> x <> '')) AS n_words,
-             len(array_to_string(list_filter(
-                 regexp_split_to_array(trim(lower(text)), '\\s+'),
-                 x -> x <> ''), '')) AS n_word_chars,
-             len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                 x -> x <> '' AND regexp_matches(x, '[a-z]'))) AS n_alpha_words
+             len({_SQL_LOWER_WORDS}) AS n_words,
+             len(array_to_string({_SQL_LOWER_WORDS}, '')) AS n_word_chars,
+             len(list_filter({_SQL_LOWER_WORDS}, x -> regexp_matches(x, '[a-z]'))) AS n_alpha_words
       FROM documents WHERE text IS NOT NULL
     ),
     flags AS (
@@ -11368,16 +11347,50 @@ def t42_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@register(
-    "e3_knn_label_consistency",
-    """
-    WITH samp AS (
-      SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % 5 = 0
+def _knn_consistency_sql(routed: bool) -> str:
+    """SQL twin of :func:`_knn_consistency`. The exact audit ranks every
+    pair of the sample's nonzero vectors. ``routed`` mirrors
+    knn_label_consistency(ann_bits=6, exact_dedup_first=True): the collapse
+    keeps one representative (lowest vec_id) per identical (embedding,
+    label) pair — semantically equal to the operator's
+    md5-of-serialized-vector key, both collapse exactly the equal pairs —
+    the Spark side's LCG hyperplane constants decide each vector's LSH
+    bucket (bit i = sign of a left-assoc dot with plane i — bit-identical
+    IEEE arithmetic on both engines), and candidates are same-bucket
+    pairs. Either way neighbors rank by the micro-unit-floored cosine."""
+    if routed:
+        from ..operators.similarity import _hyperplanes
+
+        pairs = f"""
+    nzs AS (
+      SELECT s.vec_id, s.embedding, s.label
+      FROM samp s JOIN norms USING (vec_id) WHERE nn > 0
     ),
-    norms AS (
-      SELECT vec_id, SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nn
-      FROM (SELECT vec_id, unnest(embedding) AS x FROM samp) GROUP BY 1
+    reps AS (
+      SELECT MIN(vec_id) AS vec_id FROM nzs GROUP BY embedding, label
     ),
+    nz AS (SELECT s.vec_id, s.embedding, s.label FROM nzs s JOIN reps USING (vec_id)),
+    buck AS (
+      SELECT vec_id, label, ({_lsh_bucket_sql(_hyperplanes(64, 6))}) AS bucket FROM nz
+    ),
+    cand AS (
+      SELECT a.vec_id AS qid, b.vec_id AS nid
+      FROM buck a JOIN buck b ON a.bucket = b.bucket AND a.vec_id != b.vec_id
+    ),
+    dots AS (
+      SELECT c.qid, c.nid, SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot
+      FROM cand c
+      JOIN (SELECT vec_id, unnest(embedding) AS x,
+                   generate_subscripts(embedding, 1) AS i FROM nz) a
+        ON a.vec_id = c.qid
+      JOIN (SELECT vec_id, unnest(embedding) AS x,
+                   generate_subscripts(embedding, 1) AS i FROM nz) b
+        ON b.vec_id = c.nid AND b.i = a.i
+      GROUP BY 1, 2
+    ),"""
+        nonzero = ""
+    else:
+        pairs = """
     nz AS (SELECT s.vec_id, s.label FROM samp s JOIN norms USING (vec_id) WHERE nn > 0),
     dots AS (
       SELECT a.vec_id AS qid, b.vec_id AS nid,
@@ -11386,14 +11399,22 @@ def t42_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN (SELECT vec_id, unnest(embedding) AS x, generate_subscripts(embedding,1) AS i FROM samp) b
         ON a.i = b.i AND a.vec_id != b.vec_id
       GROUP BY 1, 2
+    ),"""
+        nonzero = "\n      WHERE na.nn > 0 AND nb.nn > 0"
+    return f"""
+    WITH samp AS (
+      SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % 5 = 0
     ),
+    norms AS (
+      SELECT vec_id, SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nn
+      FROM (SELECT vec_id, unnest(embedding) AS x FROM samp) GROUP BY 1
+    ),{pairs}
     cosq AS (
       SELECT d.qid, d.nid,
              CAST(FLOOR(d.dot / (SQRT(na.nn) * SQRT(nb.nn)) * 1000000)
                AS BIGINT) AS cq
       FROM dots d JOIN norms na ON d.qid = na.vec_id
-                  JOIN norms nb ON d.nid = nb.vec_id
-      WHERE na.nn > 0 AND nb.nn > 0
+                  JOIN norms nb ON d.nid = nb.vec_id{nonzero}
     ),
     ranked AS (
       SELECT qid, nid,
@@ -11416,7 +11437,24 @@ def t42_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
              / 1000000.0 AS consistency
     FROM per_vec p JOIN nz l ON p.qid = l.vec_id
     GROUP BY 1 ORDER BY 1
-    """,
+    """
+
+
+def _knn_consistency(spark: SparkSession, sf_dir: str, routed: bool) -> DataFrame:
+    """e3/e3b: knn_label_consistency's top-5 cosine neighbor audit over the
+    ``vec_id % 5`` sample, exact or ``routed`` through its LSH bucketing
+    (6 bits) and duplicate collapse."""
+    from ..operators.similarity import knn_label_consistency
+
+    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
+    if routed:
+        return knn_label_consistency(emb, k=5, ann_bits=6, dim=64, exact_dedup_first=True)
+    return knn_label_consistency(emb, k=5, ann_bits=None)
+
+
+@register(
+    "e3_knn_label_consistency",
+    _knn_consistency_sql(False),
     survey_rows="ext:noisy-label detection (kNN label consistency); s1/s5 "
     "(cosine ranking), A11",
     description="Cleanlab-style kNN label-consistency audit over the "
@@ -11434,15 +11472,11 @@ def t42_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final consistency is one IEEE division, 6-dp floored.",
 )
 def e3_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import knn_label_consistency
-
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
-    # ann_bits=None: the graded audit is the EXACT all-pairs search on the
-    # vec_id%5 sample (the oracle needs the same pairs). Because the sample
-    # is PROPORTIONAL, the exact path is quadratic at scale (the 100x
-    # probe aborted it); the operator's ann_bits parameter is the
-    # callable LSH-candidate routing for that regime.
-    return knn_label_consistency(emb, k=5, ann_bits=None)
+    # the graded audit is the EXACT all-pairs search on the vec_id%5 sample
+    # (the oracle needs the same pairs). Because the sample is
+    # PROPORTIONAL, the exact path is quadratic at scale (the 100x probe
+    # aborted it); e3b grades the LSH-candidate routing for that regime.
+    return _knn_consistency(spark, sf_dir, False)
 
 @register(
     "e4_fisher_separation",
@@ -11567,11 +11601,10 @@ def e4_fisher_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t43_truncation_audit",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                 x -> x <> '')) AS ntok
+             len({_SQL_LOWER_WORDS}) AS ntok
       FROM documents WHERE text IS NOT NULL
     ),
     ls(ctx_len) AS (VALUES (32), (64), (128))
@@ -11755,6 +11788,30 @@ def t44_rolling_origin_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
+def _hll_report(users: DataFrame, regs: DataFrame) -> DataFrame:
+    """t45/st11's report: per event type the exact distinct ``user_id``
+    count of ``users`` beside the HyperLogLog estimate from register maxima
+    ``regs`` (built from the batch or merged from the stream)."""
+    from ..operators.sketches import hll_estimate
+
+    corrected = hll_estimate(regs, ["event_type"])
+    exact = users.groupBy("event_type").agg(
+        F.count_distinct(F.col("user_id")).cast("long").alias("n_exact")
+    )
+    return (
+        corrected.join(exact, "event_type")
+        .select(
+            "event_type",
+            "n_exact",
+            q6(F.col("e_hll")).alias("hll_estimate"),
+            q6(
+                (F.col("e_hll") - F.col("n_exact")) / F.col("n_exact")
+            ).alias("rel_error"),
+        )
+        .orderBy("event_type")
+    )
+
+
 @register(
     "t45_portable_hll_distinct",
     """
@@ -11831,52 +11888,22 @@ def t44_rolling_origin_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(estimator-accuracy audit, t38's HLL sibling).",
 )
 def t45_portable_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sketches import hll_estimate, hll_register_frame
+    from ..operators.sketches import hll_register_frame
 
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    regs = hll_register_frame(ev, ["event_type"], F.col("user_id"))
-    corrected = hll_estimate(regs, ["event_type"])
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct(F.col("user_id")).cast("long").alias("n_exact")
-    )
-    return (
-        corrected.join(exact, "event_type")
-        .select(
-            "event_type",
-            "n_exact",
-            q6(F.col("e_hll")).alias("hll_estimate"),
-            q6(
-                (F.col("e_hll") - F.col("n_exact")) / F.col("n_exact")
-            ).alias("rel_error"),
-        )
-        .orderBy("event_type")
-    )
+    return _hll_report(ev, hll_register_frame(ev, ["event_type"], F.col("user_id")))
 
 
 @register(
     "f20_quantile_normalization",
-    """
-    WITH toks AS (
-      SELECT doc_id, source,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '')) AS w
-      FROM documents
-    ),
-    feats AS (
-      SELECT doc_id, source,
-             CAST(md5_number_lower(w) % 1048576 AS BIGINT) - 524288 AS f
-      FROM toks
-    ),
-    ds AS (
-      SELECT doc_id, source,
-             CAST(SUM(f) AS DOUBLE) / (COUNT(*) * 524288.0) AS score
-      FROM feats GROUP BY 1, 2
-    ),
+    f"""
+    WITH {_HASHED_SCORES_SQL},
     src AS (
       SELECT doc_id, source, score,
              ROW_NUMBER() OVER (PARTITION BY source ORDER BY score, doc_id)
                AS rn_s,
              COUNT(*) OVER (PARTITION BY source) AS n_s
-      FROM ds
+      FROM doc_scores
     ),
     pos AS (
       SELECT doc_id, source,
@@ -11889,7 +11916,7 @@ def t45_portable_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT score,
              ROW_NUMBER() OVER (ORDER BY score, doc_id) AS rn_g,
              COUNT(*) OVER () AS n_g
-      FROM ds
+      FROM doc_scores
     ),
     mapped AS (
       SELECT p.doc_id, p.source, g.score AS qnorm
@@ -12029,16 +12056,7 @@ def f20_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "table.",
 )
 def w24_robust_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = (
-        ev.select("event_type", F.col("ts").cast("date").alias("day"), "value")
-        .groupBy("event_type", "day")
-        .agg(
-            F.floor(agg.decimal_sum(F.col("value")) * 1000000)
-            .cast("long")
-            .alias("tq")
-        )
-    )
+    daily = _daily_micro_sums(spark, sf_dir, "tq")
     med = daily.groupBy("event_type").agg(
         F.expr("percentile(tq, 0.5)").alias("med")
     )
@@ -12317,7 +12335,7 @@ def e5_dimension_collapse_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st11_streaming_hll_distinct",
-    None,  # patched to t45's oracle right below — streaming must equal batch
+    CORPUS["t45_portable_hll_distinct"].oracle,
     survey_rows="§2.8 streaming ext (mergeable distinct sketch); ext:t45 twin",
     description="Streaming twin of t45's portable HyperLogLog — the shape "
     "a production pipeline actually runs (continuous distinct-user "
@@ -12333,7 +12351,6 @@ def e5_dimension_collapse_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "group; the stream never accumulates raw identities.",
 )
 def st11_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.sketches import hll_estimate
     from ..streaming.ingest import hll_partials_foreach_batch, read_events_stream
 
     stream = read_events_stream(spark, sf_dir)
@@ -12344,29 +12361,8 @@ def st11_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     regs = partials.groupBy("event_type", "reg").agg(
         F.max("maxrho").alias("maxrho")
     )
-    corrected = hll_estimate(regs, ["event_type"])
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    exact = ev.groupBy("event_type").agg(
-        F.count_distinct(F.col("user_id")).cast("long").alias("n_exact")
-    )
-    return (
-        corrected.join(exact, "event_type")
-        .select(
-            "event_type",
-            "n_exact",
-            q6(F.col("e_hll")).alias("hll_estimate"),
-            q6(
-                (F.col("e_hll") - F.col("n_exact")) / F.col("n_exact")
-            ).alias("rel_error"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# streaming and batch sketches must stay in lockstep: same oracle text.
-CORPUS["st11_streaming_hll_distinct"].oracle = CORPUS[
-    "t45_portable_hll_distinct"
-].oracle
+    return _hll_report(ev, regs)
 
 
 @register(
@@ -12427,16 +12423,7 @@ CORPUS["st11_streaming_hll_distinct"].oracle = CORPUS[
     "identical), 6-dp floored at the boundary.",
 )
 def m26_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    daily = (
-        ev.select("event_type", F.col("ts").cast("date").alias("day"), "value")
-        .groupBy("event_type", "day")
-        .agg(
-            F.floor(agg.decimal_sum(F.col("value")) * 1000000)
-            .cast("long")
-            .alias("tq")
-        )
-    )
+    daily = _daily_micro_sums(spark, sf_dir, "tq")
     origin = daily.groupBy("event_type").agg(F.min("day").alias("d0"))
     idx = daily.join(F.broadcast(origin), "event_type").select(
         "event_type", F.datediff(F.col("day"), F.col("d0")).alias("x"), "tq"
@@ -12752,6 +12739,40 @@ def e6_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 CORPUS["e6_jl_projection_audit"].oracle = _e6_oracle_sql()
 
 
+def _equi_depth_histogram(
+    spark: SparkSession, sf_dir: str, bucket_width: float | None
+) -> DataFrame:
+    """a22/a27: per event type the value quartiles (ntile 4 by value, then
+    event_id) with each bucket's count, floored bounds and exact sum —
+    through one NTILE window per type, or windows.bucketed_ntile's
+    two-level rank over ``bucket_width``-wide value ranges."""
+    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    if bucket_width is None:
+        w = Window.partitionBy("event_type").orderBy("value", "event_id")
+        tiled = ev.select(
+            "event_type", "value", F.ntile(4).over(w).alias("bucket")
+        )
+    else:
+        tiled = ow.bucketed_ntile(
+            ev.select("event_type", "value", "event_id"),
+            ["event_type"],
+            "value",
+            n_tiles=4,
+            bucket_width=bucket_width,
+            tiebreak=["event_id"],
+        )
+    return (
+        tiled.groupBy("event_type", "bucket")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            q6(F.min("value")).alias("lo"),
+            q6(F.max("value")).alias("hi"),
+            agg.decimal_sum(F.col("value")).alias("bucket_sum"),
+        )
+        .orderBy("event_type", "bucket")
+    )
+
+
 @register(
     "a22_equi_depth_histogram",
     """
@@ -12786,21 +12807,7 @@ CORPUS["e6_jl_projection_audit"].oracle = _e6_oracle_sql()
     "aggregation.",
 )
 def a22_equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    tiled = ev.select(
-        "event_type", "value", F.ntile(4).over(w).alias("bucket")
-    )
-    return (
-        tiled.groupBy("event_type", "bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            q6(F.min("value")).alias("lo"),
-            q6(F.max("value")).alias("hi"),
-            agg.decimal_sum(F.col("value")).alias("bucket_sum"),
-        )
-        .orderBy("event_type", "bucket")
-    )
+    return _equi_depth_histogram(spark, sf_dir, None)
 
 
 # ===========================================================================
@@ -13104,14 +13111,22 @@ def g5_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-@register(
-    "m28_kendall_tau",
-    """
+def _kendall_tau_sql(hash_sample_mod: int | None) -> str:
+    """SQL twin of :func:`_kendall_tau`; ``hash_sample_mod`` keeps the
+    users whose md5 hash's low 31 bits are 0 mod it, as skew.hash_sample
+    does."""
+    sample = (
+        ""
+        if hash_sample_mod is None
+        else "\n        AND (md5_number_lower(CAST(user_id AS VARCHAR)) & 2147483647)"
+        f" % {hash_sample_mod} = 0"
+    )
+    return f"""
     WITH u AS (
       SELECT user_id,
              CAST(COUNT(*) AS BIGINT) AS x,
              CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS BIGINT) AS y
-      FROM events WHERE value IS NOT NULL GROUP BY 1
+      FROM events WHERE value IS NOT NULL{sample} GROUP BY 1
     ),
     p AS (
       SELECT CASE WHEN a.x = b.x THEN 0 WHEN a.x > b.x THEN 1 ELSE -1 END AS cx,
@@ -13132,7 +13147,30 @@ def g5_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
              / SQRT(CAST(n0 - tie_x AS DOUBLE) * CAST(n0 - tie_y AS DOUBLE))
              * 1000000) / 1000000.0 AS tau_b
     FROM s WHERE n0 - tie_x > 0 AND n0 - tie_y > 0
-    """,
+    """
+
+
+def _kendall_tau(
+    spark: SparkSession, sf_dir: str, hash_sample_mod: int | None
+) -> DataFrame:
+    """m28/m28b: Kendall tau-b between each user's event count and exact
+    milli-integer value sum, over every user or the ``hash_sample_mod``
+    sample."""
+    from ..stats.inference import kendall_tau_b
+
+    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    u = ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("x"),
+        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("y"),
+    )
+    return kendall_tau_b(
+        u, id_col="user_id", hash_sample_mod=hash_sample_mod
+    ).select(F.col("n_units").alias("n_users"), "conc", "disc", "tau_b")
+
+
+@register(
+    "m28_kendall_tau",
+    _kendall_tau_sql(None),
     survey_rows="ext:rank statistics (Kendall tau-b; completes the rank "
     "family with m15 Mann-Whitney, m16 Spearman, m21 Kruskal-Wallis); M13",
     description="Kendall tau-b rank correlation between per-user activity "
@@ -13147,21 +13185,12 @@ def g5_partition_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the pair join, identical statistics machinery.",
 )
 def m28_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..stats.inference import kendall_tau_b
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    u = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("x"),
-        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("y"),
-    )
     # hash_sample_mod=None: graded exact pairing over every user, pinned
     # explicitly because the operator default is "auto" (the budget
     # knob self-sizes from a cheap entity count — a user who
     # forgets it at 100× gets the flat-budget sample, not the 30.3×
     # pair quadratic the probe measured; m28b grades the sampled twin).
-    return kendall_tau_b(
-        u, id_col="user_id", hash_sample_mod=None
-    ).select(F.col("n_units").alias("n_users"), "conc", "disc", "tau_b")
+    return _kendall_tau(spark, sf_dir, None)
 
 @register(
     "g6_ra_link_prediction",
@@ -13308,6 +13337,44 @@ def ev8_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _countmin_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """a23/st12's ``(item, n_exact, j, bucket)``: each distinct event item
+    with its exact count, once per Count-Min row j in 1..3 with its md5
+    bucket of 32."""
+    from ..operators.dedup import md5_token_hash64
+
+    ev = _t(spark, sf_dir, "events")
+    item = F.try_variant_get(F.try_parse_json("props"), "$.k", "int")
+    it = ev.select(item.alias("item")).filter(F.col("item").isNotNull())
+    rows3 = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")
+    key = F.concat_ws(":", F.col("j"), F.col("item"))
+    bucket = F.pmod(md5_token_hash64(key), F.lit(32)).cast("long")
+    exact = it.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
+    return exact.select("item", "n_exact", rows3).select(
+        "item", "n_exact", "j", bucket.alias("bucket")
+    )
+
+
+def _countmin_top10(keys: DataFrame, sketch: DataFrame) -> DataFrame:
+    """The ten most frequent items of :func:`_countmin_keys` with their
+    Count-Min estimate (the minimum of their three cells in ``sketch``,
+    from the batch or merged from the stream) and overcount."""
+    est = (
+        keys.join(F.broadcast(sketch), ["j", "bucket"])
+        .groupBy("item", "n_exact")
+        .agg(F.min("cnt").alias("cm_est"))
+    )
+    rk = F.row_number().over(Window.orderBy(F.col("n_exact").desc(), F.col("item")))
+    return (
+        est.withColumn("rk", rk)
+        .filter(F.col("rk") <= 10)
+        .select(
+            "item", "n_exact", "cm_est",
+            (F.col("cm_est") - F.col("n_exact")).alias("overcount"),
+        )
+    )
+
+
 @register(
     "a23_countmin_heavy_hitters",
     f"""
@@ -13364,21 +13431,7 @@ def ev8_top_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the parity path.",
 )
 def a23_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import md5_token_hash64
-
-    ev = _t(spark, sf_dir, "events")
-    item = F.try_variant_get(F.try_parse_json("props"), "$.k", "int")
-    it = ev.select(item.alias("item")).filter(F.col("item").isNotNull())
-    rows3 = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")
-
-    def bucket() -> F.Column:
-        key = F.concat_ws(":", F.col("j"), F.col("item"))
-        return F.pmod(md5_token_hash64(key), F.lit(32)).cast("long")
-
-    exact = it.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
-    keys = exact.select("item", "n_exact", rows3).select(
-        "item", "n_exact", "j", bucket().alias("bucket")
-    )
+    keys = _countmin_keys(spark, sf_dir)
     # sketch cells from the DISTINCT-item counts, not per occurrence: the
     # cell count is Σ n_exact over items hashing into the cell, so hashing
     # each distinct item once and summing its count is arithmetic-identical
@@ -13388,22 +13441,7 @@ def a23_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch = keys.groupBy("j", "bucket").agg(
         F.sum("n_exact").cast("long").alias("cnt")
     )
-    est = (
-        keys.join(F.broadcast(sketch), ["j", "bucket"])
-        .groupBy("item", "n_exact")
-        .agg(F.min("cnt").alias("cm_est"))
-    )
-    from pyspark.sql.window import Window
-
-    rk = F.row_number().over(Window.orderBy(F.col("n_exact").desc(), F.col("item")))
-    return (
-        est.withColumn("rk", rk)
-        .filter(F.col("rk") <= 10)
-        .select(
-            "item", "n_exact", "cm_est",
-            (F.col("cm_est") - F.col("n_exact")).alias("overcount"),
-        )
-    )
+    return _countmin_top10(keys, sketch)
 
 
 #: Per (event_type, day) sum of the events' values in integer thousandths
@@ -13414,6 +13452,16 @@ _SQL_DAILY_MILLI_CTE = """d AS (
              CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS BIGINT) AS a
       FROM events WHERE value IS NOT NULL GROUP BY 1, 2
     )"""
+
+
+def _daily_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of ``_SQL_DAILY_MILLI_CTE`` (w25, w26, w27, m31)."""
+    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    return ev.groupBy(
+        "event_type", F.col("ts").cast("date").alias("dy")
+    ).agg(
+        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a")
+    )
 
 
 @register(
@@ -13452,12 +13500,7 @@ _SQL_DAILY_MILLI_CTE = """d AS (
     "over the tiny daily frame.",
 )
 def w25_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    d = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("dy")
-    ).agg(F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a"))
+    d = _daily_milli(spark, sf_dir)
     f = F.lag("a", 7).over(Window.partitionBy("event_type").orderBy("dy"))
     fc = d.select("event_type", "a", f.alias("f")).filter(F.col("f").isNotNull())
     err = F.abs(F.col("a") - F.col("f"))
@@ -14149,23 +14192,7 @@ def dq10_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "a24_decile_lift",
     f"""
-    WITH toks AS (
-      SELECT doc_id, n_chars,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-                                                      '\\s+'),
-                    x -> x <> '')) AS w
-      FROM documents
-    ),
-    feats AS (
-      SELECT doc_id, n_chars,
-             CAST(md5_number_lower(w) % 1048576 AS BIGINT) - 524288 AS f
-      FROM toks
-    ),
-    doc_scores AS (
-      SELECT doc_id, n_chars,
-             CAST(SUM(f) AS DOUBLE) / (COUNT(*) * 524288.0) AS score
-      FROM feats GROUP BY 1, 2
-    ),
+    WITH {_HASHED_SCORES_SQL},
     ranked AS (
       SELECT NTILE(10) OVER (ORDER BY score DESC, doc_id) AS decile,
              CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS label
@@ -14250,11 +14277,10 @@ def a24_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t46_containment_pairs",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS words
+             {_SQL_LOWER_WORDS} AS words
       FROM documents
     ),
     sh AS (
@@ -14362,7 +14388,7 @@ def t46_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st12_streaming_countmin",
-    None,  # oracle attached below: a23's — streaming must equal batch
+    CORPUS["a23_countmin_heavy_hitters"].oracle,
     survey_rows="ext:streaming mergeable frequency sketch (Count-Min "
     "partials merged across micro-batches == batch sketch bit-for-bit); "
     "a23, st11 (streaming HLL), §2.8",
@@ -14380,9 +14406,6 @@ def t46_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "read time, never a re-scan.",
 )
 def st12_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from ..operators.dedup import md5_token_hash64
     from ..streaming.ingest import (
         countmin_partials_foreach_batch,
         read_events_stream,
@@ -14394,47 +14417,7 @@ def st12_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [r for _, batch in sink for r in batch]
     partials = local_frame(spark, rows, "j int, bucket long, cnt long")
     sketch = partials.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
-    ev = _t(spark, sf_dir, "events")
-    item = F.try_variant_get(F.try_parse_json("props"), "$.k", "int")
-    it = ev.select(item.alias("item")).filter(F.col("item").isNotNull())
-    exact = it.groupBy("item").agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
-    keys = exact.select(
-        "item",
-        "n_exact",
-        F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j"),
-    ).select(
-        "item",
-        "n_exact",
-        "j",
-        F.pmod(
-            md5_token_hash64(F.concat_ws(":", F.col("j"), F.col("item"))),
-            F.lit(32),
-        )
-        .cast("long")
-        .alias("bucket"),
-    )
-    est = (
-        keys.join(F.broadcast(sketch), ["j", "bucket"])
-        .groupBy("item", "n_exact")
-        .agg(F.min("cnt").alias("cm_est"))
-    )
-    rk = F.row_number().over(Window.orderBy(F.col("n_exact").desc(), F.col("item")))
-    return (
-        est.withColumn("rk", rk)
-        .filter(F.col("rk") <= 10)
-        .select(
-            "item",
-            "n_exact",
-            F.col("cm_est").cast("long").alias("cm_est"),
-            (F.col("cm_est") - F.col("n_exact")).cast("long").alias("overcount"),
-        )
-    )
-
-
-# streaming and batch sketches must stay in lockstep: same oracle text.
-CORPUS["st12_streaming_countmin"].oracle = CORPUS[
-    "a23_countmin_heavy_hitters"
-].oracle
+    return _countmin_top10(_countmin_keys(spark, sf_dir), sketch)
 
 
 # ===========================================================================
@@ -14663,12 +14646,10 @@ CORPUS["e8_power_iteration_audit"].oracle = _e8_oracle_sql()
 
 @register(
     "t47_pmi_cooccurrence",
-    """
+    f"""
     WITH toks AS (
       SELECT DISTINCT doc_id,
-             unnest(list_filter(regexp_split_to_array(trim(lower(text)),
-                                                      '\\s+'),
-                    x -> x <> '')) AS w
+             unnest({_SQL_LOWER_WORDS}) AS w
       FROM documents
     ),
     vocab AS (
@@ -14824,14 +14805,7 @@ def t47_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the tiny daily frame.",
 )
 def w26_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    d = osk.materialize(
-        ev.groupBy("event_type", F.col("ts").cast("date").alias("dy")).agg(
-            F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a")
-        )
-    )
+    d = osk.materialize(_daily_milli(spark, sf_dir))
     ks = spark.range(1, 11).select(F.col("id").cast("int").alias("k"))
     x = d.toDF("event_type", "dy", "ax").crossJoin(F.broadcast(ks))
     y = d.toDF("event_type", "dy2", "ay")
@@ -15077,16 +15051,8 @@ def a25_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "er2_golden_record",
-    r"""
-    WITH RECURSIVE p AS (
-      SELECT p_partkey AS k, lower(trim(p_name)) AS nm FROM part
-    ),
-    canon AS (
-      SELECT nm, CAST(MIN(k) AS BIGINT) AS canon_key,
-             CAST(COUNT(*) AS BIGINT) AS n_rec,
-             regexp_extract(nm, '(\S+)$', 1) AS blk
-      FROM p GROUP BY nm
-    ),
+    rf"""
+    WITH RECURSIVE {_SQL_PART_CANON},
     prs AS (
       SELECT a.canon_key AS id_a, b.canon_key AS id_b
       FROM canon a JOIN canon b ON a.blk = b.blk AND a.nm < b.nm
@@ -15142,14 +15108,7 @@ def er2_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import connected_components
 
-    p = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("k"), F.lower(F.trim("p_name")).alias("nm")
-    )
-    canon = osk.materialize(
-        p.groupBy("nm")
-        .agg(F.min("k").alias("canon_key"), F.count(F.lit(1)).alias("n_rec"))
-        .withColumn("blk", F.regexp_extract("nm", r"(\S+)$", 1))
-    )
+    canon = osk.materialize(_part_name_canon(spark, sf_dir))
     a = canon.select(
         F.col("nm").alias("na"), F.col("canon_key").alias("id_a"), "blk"
     )
@@ -15220,14 +15179,7 @@ def er2_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the tiny daily frame.",
 )
 def w27_daily_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    d = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("dy")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a")
-    )
+    d = _daily_milli(spark, sf_dir)
     prev = F.lag("a").over(Window.partitionBy("event_type").orderBy("dy"))
     pct = (
         d.select("event_type", F.col("dy").cast("string").alias("dy"), "a", prev.alias("prev"))
@@ -15476,14 +15428,7 @@ def w28_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "applied once with explicit DOUBLE casts.",
 )
 def m31_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    d = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("dy")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("a")
-    )
+    d = _daily_milli(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("dy")
     prev_a = F.lag("a").over(w)
     sgn = d.select(
@@ -16081,15 +16026,7 @@ def dq12_cardinality_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t49_prefix_filter_jaccard",
-    f"""
-    WITH {_ngram_jaccard_ctes(capped=False)}
-    SELECT id_a, id_b, n_common, ca.n AS n_a, cb.n AS n_b,
-           n_common / (ca.n + cb.n - n_common) AS jaccard
-    FROM inter
-    JOIN cnt ca ON id_a = ca.doc_id
-    JOIN cnt cb ON id_b = cb.doc_id
-    WHERE n_common / (ca.n + cb.n - n_common) >= 0.5
-    """,
+    _ngram_jaccard_pairs_sql(False),
     survey_rows="ext:exact all-pairs similarity via prefix filtering "
     "(Bayardo WWW'07) — the lossless exact-join scale route beside t2 "
     "(answer-changing doc-freq cap) and t7 (recall-trading MinHash)",
@@ -16127,19 +16064,7 @@ def t49_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j14_bucketed_asof_join",
-    f"""
-    WITH ev AS (SELECT user_id % 4 AS grp, ts, event_id, value FROM events),
-    cps AS (
-      SELECT user_id % 4 AS grp, ts AS cp_ts, value AS cp_value
-      FROM events WHERE event_id % 50 = 0 AND value IS NOT NULL
-    )
-    SELECT grp, COUNT(cp_value) AS n_matched,
-           {SQL_DAVG_Q4('value - cp_value')} AS mean_delta
-    FROM (
-      SELECT e.grp, e.value, c.cp_value
-      FROM ev e ASOF LEFT JOIN cps c ON e.grp = c.grp AND e.ts >= c.cp_ts
-    ) GROUP BY grp
-    """,
+    CORPUS["j7_asof_join"].oracle,
     survey_rows="J2 (as-of generalization) — the bucket_seconds scale "
     "routing of j7, driver-graded against the same ASOF oracle",
     description="j7's as-of join through the LOW-CARDINALITY-KEY routing: "
@@ -16150,37 +16075,12 @@ def t49_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is j7's — identical answers are the routing's contract.",
 )
 def j14_bucketed_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").withColumn("grp", F.col("user_id") % 4)
-    cps = (
-        ev.filter((F.col("event_id") % 50 == 0) & F.col("value").isNotNull())
-        .select("grp", F.col("ts").alias("cp_ts"), F.col("value").alias("cp_value"))
-    )
-    joined = oj.asof_join(
-        ev.select("grp", "ts", "event_id", "value"),
-        cps,
-        on="grp",
-        left_ts="ts",
-        right_ts="cp_ts",
-        right_values=["cp_value"],
-        bucket_seconds=86400.0,
-    )
-    return joined.groupBy("grp").agg(
-        F.count("cp_value").alias("n_matched"),
-        agg.decimal_avg_q4(F.col("value") - F.col("cp_value")).alias("mean_delta"),
-    )
+    return _checkpoint_asof(spark, sf_dir, False, 86400.0)
 
 
 @register(
     "w28_bucketed_systematic_sample",
-    f"""
-    WITH ranked AS (
-      SELECT event_type, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY event_id ASC) AS rn
-      FROM events
-    )
-    SELECT event_type, COUNT(*) AS n, {SQL_DSUM('value')} AS sum_value
-    FROM ranked WHERE rn % 10 = 1 GROUP BY event_type
-    """,
+    CORPUS["w11_stratified_systematic_sample"].oracle,
     survey_rows="W7 (stratified extension) — w11 through the two-level "
     "rank routing, driver-graded against the same oracle",
     description="w11's stratified systematic sample through "
@@ -16190,39 +16090,12 @@ def j14_bucketed_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "as w11 — the hash-compare proves the two-level rank is identical.",
 )
 def w28_bucketed_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    ranked = ow.bucketed_row_number(
-        ev.select("event_type", "value", "event_id"),
-        ["event_type"],
-        "event_id",
-        bucket_width=10_000,
-    )
-    return (
-        ranked.filter(F.col("rn") % 10 == 1)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), agg.decimal_sum("value").alias("sum_value"))
-    )
+    return _systematic_sample(spark, sf_dir, 10_000)
 
 
 @register(
     "a27_bucketed_equi_depth",
-    """
-    WITH v AS (
-      SELECT event_type, event_id, value FROM events WHERE value IS NOT NULL
-    ),
-    tiled AS (
-      SELECT event_type, value,
-             NTILE(4) OVER (PARTITION BY event_type
-               ORDER BY value, event_id) AS bucket
-      FROM v
-    )
-    SELECT event_type, bucket,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           FLOOR(MIN(value) * 1000000) / 1000000.0 AS lo,
-           FLOOR(MAX(value) * 1000000) / 1000000.0 AS hi,
-           CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS bucket_sum
-    FROM tiled GROUP BY 1, 2 ORDER BY 1, 2
-    """,
+    CORPUS["a22_equi_depth_histogram"].oracle,
     survey_rows="A3/M10/W6; ext:equi-depth histogram — a22 through the "
     "bucketed_ntile routing, driver-graded against the same oracle",
     description="a22's equi-depth histogram through windows.bucketed_ntile: "
@@ -16232,25 +16105,7 @@ def w28_bucketed_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFram
     "a22 — identical bucket assignment is the derivation's contract.",
 )
 def a27_bucketed_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    tiled = ow.bucketed_ntile(
-        ev.select("event_type", "value", "event_id"),
-        ["event_type"],
-        "value",
-        n_tiles=4,
-        bucket_width=10.0,
-        tiebreak=["event_id"],
-    )
-    return (
-        tiled.groupBy("event_type", "bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            q6(F.min("value")).alias("lo"),
-            q6(F.max("value")).alias("hi"),
-            agg.decimal_sum(F.col("value")).alias("bucket_sum"),
-        )
-        .orderBy("event_type", "bucket")
-    )
+    return _equi_depth_histogram(spark, sf_dir, 10.0)
 
 
 # ===========================================================================
@@ -16265,44 +16120,7 @@ def a27_bucketed_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j11b_interval_overlap_capped",
-    f"""
-    WITH {_session_marks_cte(', event_id')},
-    sess AS (
-      SELECT user_id, ts,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS sid
-      FROM marked
-    ),
-    intervals AS (
-      SELECT user_id, sid, MIN(ts) AS s, MAX(ts) AS e
-      FROM sess GROUP BY 1, 2
-    ),
-    bucketed AS (
-      SELECT i.user_id, i.sid, i.s, i.e, b AS bucket
-      FROM intervals i,
-           LATERAL (SELECT unnest(generate_series(
-             date_trunc('hour', i.s), date_trunc('hour', i.e),
-             INTERVAL 1 HOUR)) AS b)
-    ),
-    capped AS (
-      SELECT * FROM (
-        SELECT user_id, sid, s, e, bucket,
-               ROW_NUMBER() OVER (PARTITION BY bucket
-                 ORDER BY s ASC, user_id ASC, sid ASC) AS occ
-        FROM bucketed
-      ) WHERE occ <= 64
-    ),
-    pairs AS (
-      SELECT DISTINCT a.user_id AS user_a, a.sid AS sid_a,
-                      b.user_id AS user_b, b.sid AS sid_b
-      FROM capped a JOIN capped b
-        ON a.bucket = b.bucket AND a.user_id < b.user_id
-       AND a.s <= b.e AND b.s <= a.e
-    )
-    SELECT user_a, user_b, COUNT(*) AS n_copresent
-    FROM pairs GROUP BY 1, 2
-    """,
+    _copresence_sql(64),
     survey_rows="J-family ext: interval overlap self-join — j11's "
     "max_bucket_occupancy routing, graded against a derived oracle of the "
     "cap's deterministic contract",
@@ -16318,51 +16136,12 @@ def a27_bucketed_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-compare proves the cap's contract, not just its speed.",
 )
 def j11b_interval_overlap_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    sess = ow.sessionize(ev, key="user_id", ts="ts", tiebreak=["event_id"])
-    intervals = sess.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("s"), F.max("ts").alias("e")
-    )
-    out = oj.interval_overlap_pairs(intervals, max_bucket_occupancy=64)
-    return out.select(
-        F.col("user_id_a").alias("user_a"),
-        F.col("user_id_b").alias("user_b"),
-        "n_copresent",
-    )
+    return _copresence(spark, sf_dir, 64)
 
 
 @register(
     "m28b_kendall_tau_sampled",
-    """
-    WITH u AS (
-      SELECT user_id,
-             CAST(COUNT(*) AS BIGINT) AS x,
-             CAST(SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS BIGINT) AS y
-      FROM events
-      WHERE value IS NOT NULL
-        AND (md5_number_lower(CAST(user_id AS VARCHAR)) & 2147483647) % 10 = 0
-      GROUP BY 1
-    ),
-    p AS (
-      SELECT CASE WHEN a.x = b.x THEN 0 WHEN a.x > b.x THEN 1 ELSE -1 END AS cx,
-             CASE WHEN a.y = b.y THEN 0 WHEN a.y > b.y THEN 1 ELSE -1 END AS cy
-      FROM u a JOIN u b ON a.user_id < b.user_id
-    ),
-    s AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-             CAST(SUM(CASE WHEN cx * cy > 0 THEN 1 ELSE 0 END) AS BIGINT) AS conc,
-             CAST(SUM(CASE WHEN cx * cy < 0 THEN 1 ELSE 0 END) AS BIGINT) AS disc,
-             CAST(SUM(CASE WHEN cx = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tie_x,
-             CAST(SUM(CASE WHEN cy = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tie_y
-      FROM p
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM u) AS n_users,
-           conc, disc,
-           FLOOR((conc - disc)
-             / SQRT(CAST(n0 - tie_x AS DOUBLE) * CAST(n0 - tie_y AS DOUBLE))
-             * 1000000) / 1000000.0 AS tau_b
-    FROM s WHERE n0 - tie_x > 0 AND n0 - tie_y > 0
-    """,
+    _kendall_tau_sql(10),
     survey_rows="ext:rank statistics — m28's hash_sample_mod routing, "
     "graded against the same tau-b SQL on the sampled entity set",
     description="m28's Kendall tau-b through the deterministic 1/10 "
@@ -16376,16 +16155,7 @@ def j11b_interval_overlap_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "driver hash-compare proves the routed path end to end.",
 )
 def m28b_kendall_tau_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..stats.inference import kendall_tau_b
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    u = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("x"),
-        F.sum(F.floor(F.col("value") * 1000).cast("long")).cast("long").alias("y"),
-    )
-    return kendall_tau_b(
-        u, id_col="user_id", hash_sample_mod=10
-    ).select(F.col("n_units").alias("n_users"), "conc", "disc", "tau_b")
+    return _kendall_tau(spark, sf_dir, 10)
 
 
 @register(
@@ -16441,86 +16211,9 @@ def t38b_sketch_audit_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _e3_routed_oracle_sql() -> str:
-    """Generated DuckDB mirror of knn_label_consistency(ann_bits=6,
-    exact_dedup_first=True): the same LCG hyperplane constants as the Spark
-    side decide each vector's LSH bucket (bit i = sign of a left-assoc dot
-    with plane i — bit-identical IEEE arithmetic on both engines), the
-    collapse keeps one representative (lowest vec_id) per identical
-    (embedding, label) pair — semantically equal to the operator's
-    md5-of-serialized-vector key, both collapse exactly the equal pairs —
-    and candidates are same-bucket pairs ranked by the micro-unit-floored
-    cosine."""
-    from ..operators.similarity import _hyperplanes
-
-    bucket_expr = _lsh_bucket_sql(_hyperplanes(64, 6))
-    return f"""
-    WITH samp AS (
-      SELECT vec_id, embedding, label FROM embeddings WHERE vec_id % 5 = 0
-    ),
-    norms AS (
-      SELECT vec_id, SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS nn
-      FROM (SELECT vec_id, unnest(embedding) AS x FROM samp) GROUP BY 1
-    ),
-    nzs AS (
-      SELECT s.vec_id, s.embedding, s.label
-      FROM samp s JOIN norms USING (vec_id) WHERE nn > 0
-    ),
-    reps AS (
-      SELECT MIN(vec_id) AS vec_id FROM nzs GROUP BY embedding, label
-    ),
-    nz AS (SELECT s.vec_id, s.embedding, s.label FROM nzs s JOIN reps USING (vec_id)),
-    buck AS (
-      SELECT vec_id, label, ({bucket_expr}) AS bucket FROM nz
-    ),
-    cand AS (
-      SELECT a.vec_id AS qid, b.vec_id AS nid
-      FROM buck a JOIN buck b ON a.bucket = b.bucket AND a.vec_id != b.vec_id
-    ),
-    dots AS (
-      SELECT c.qid, c.nid, SUM(CAST(a.x AS DOUBLE) * CAST(b.x AS DOUBLE)) AS dot
-      FROM cand c
-      JOIN (SELECT vec_id, unnest(embedding) AS x,
-                   generate_subscripts(embedding, 1) AS i FROM nz) a
-        ON a.vec_id = c.qid
-      JOIN (SELECT vec_id, unnest(embedding) AS x,
-                   generate_subscripts(embedding, 1) AS i FROM nz) b
-        ON b.vec_id = c.nid AND b.i = a.i
-      GROUP BY 1, 2
-    ),
-    cosq AS (
-      SELECT d.qid, d.nid,
-             CAST(FLOOR(d.dot / (SQRT(na.nn) * SQRT(nb.nn)) * 1000000)
-               AS BIGINT) AS cq
-      FROM dots d JOIN norms na ON d.qid = na.vec_id
-                  JOIN norms nb ON d.nid = nb.vec_id
-    ),
-    ranked AS (
-      SELECT qid, nid,
-             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cq DESC, nid ASC) AS rn
-      FROM cosq
-    ),
-    per_vec AS (
-      SELECT r.qid,
-             SUM(CASE WHEN ql.label = nl.label THEN 1 ELSE 0 END) AS n_same
-      FROM ranked r
-      JOIN nz ql ON r.qid = ql.vec_id
-      JOIN nz nl ON r.nid = nl.vec_id
-      WHERE r.rn <= 5 GROUP BY 1
-    )
-    SELECT l.label,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(SUM(p.n_same) AS BIGINT) AS n_same_neighbors,
-           FLOOR(SUM(p.n_same) * 1.0 / (5.0 * COUNT(*)) * 1000000)
-             / 1000000.0 AS consistency
-    FROM per_vec p JOIN nz l ON p.qid = l.vec_id
-    GROUP BY 1 ORDER BY 1
-    """
-
-
 @register(
     "e3b_knn_consistency_routed",
-    None,  # generated oracle attached below (needs the plane constants)
+    _knn_consistency_sql(True),
     survey_rows="ext:noisy-label detection — e3's ann_bits + "
     "exact_dedup_first routing, graded against a generated oracle that "
     "reproduces the LSH bucketing and the collapse",
@@ -16539,15 +16232,7 @@ def _e3_routed_oracle_sql() -> str:
     "machine-checked proof of the routed pipeline.",
 )
 def e3b_knn_consistency_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import knn_label_consistency
-
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 5 == 0)
-    return knn_label_consistency(
-        emb, k=5, ann_bits=6, dim=64, exact_dedup_first=True
-    )
-
-
-CORPUS["e3b_knn_consistency_routed"].oracle = _e3_routed_oracle_sql()
+    return _knn_consistency(spark, sf_dir, True)
 
 
 @register(
@@ -17353,6 +17038,20 @@ def st13_streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(feats, output_mode="append")
 
 
+def _sql_normalize_ws(text: str) -> str:
+    """SQL twin of operators/html.py::normalize_text_ws's final chain over
+    the expression ``text``: runs of horizontal whitespace become one
+    space, spaces around and runs of newlines collapse, and the ends are
+    trimmed."""
+    return f"""trim(
+               regexp_replace(
+                 regexp_replace(
+                   regexp_replace({text}, '[ \t\r\f\v]+', ' ', 'g'),
+                   ' *\n *', chr(10), 'g'),
+                 '\n+', chr(10), 'g'),
+               ' ' || chr(10))"""
+
+
 def _html_xt_cte() -> str:
     """The expected-extraction CTE shared by the crawl-text family
     (mm29 extraction identity, mm31 quality-over-extraction): assemble
@@ -17366,13 +17065,7 @@ def _html_xt_cte() -> str:
     )
     return f"""    WITH x AS (
       SELECT doc_id,
-             trim(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace({assembled}, '[ \t\r\f\v]+', ' ', 'g'),
-                   ' *\n *', chr(10), 'g'),
-                 '\n+', chr(10), 'g'),
-               ' ' || chr(10)) AS xt
+             {_sql_normalize_ws(assembled)} AS xt
       FROM documents WHERE doc_id % 10 = 0
     )"""
 
@@ -17395,6 +17088,29 @@ def _mm29_html_extract_sql() -> str:
            md5(xt) AS text_md5
     FROM x
     """
+
+
+def _html_extract(docs: DataFrame, charset: bool, transfer: bool) -> DataFrame:
+    """mm29's crawl extraction over every tenth document of a batch or
+    stream source. ``charset`` serves the pages in rotating charsets and
+    decodes per the Content-Type header; ``transfer`` adds the rotating
+    transfer and content codings and removes them first."""
+    from ..operators.multimodal import (
+        attach_html_warc_payloads,
+        extract_html_features,
+    )
+
+    docs = docs.filter(F.col("doc_id") % 10 == 0)
+    feats = extract_html_features(
+        attach_html_warc_payloads(
+            docs, charset_rotation=charset, transfer_rotation=transfer
+        ),
+        honor_charset=charset,
+        decode_transfer=transfer,
+    )
+    return feats.select(
+        "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
+    )
 
 
 @register(
@@ -17422,16 +17138,7 @@ def _mm29_html_extract_sql() -> str:
     "the scan itself at 100 TB.",
 )
 def mm29_html_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        attach_html_warc_payloads,
-        extract_html_features,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    feats = extract_html_features(attach_html_warc_payloads(docs))
-    return feats.select(
-        "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
-    )
+    return _html_extract(_t(spark, sf_dir, "documents"), False, False)
 
 
 def _bpe_merge_ctes(byte_level: bool) -> str:
@@ -17698,19 +17405,7 @@ def _t51_bpe_budget_sql() -> str:
       FROM per_doc p JOIN documents d2 USING (doc_id)
       GROUP BY 1
     ),
-    wts AS (
-      SELECT source, n_docs, n_tokens,
-             CAST(FLOOR(SQRT(CAST(n_tokens AS DOUBLE)) * 1000000) AS BIGINT)
-               AS wq
-      FROM src
-    ),
-    tot AS (SELECT CAST(SUM(wq) AS BIGINT) AS swq FROM wts)
-    SELECT source, n_docs, n_tokens,
-           FLOOR(CAST(wq AS DOUBLE) / swq * 1000000) / 1000000.0
-             AS mix_weight,
-           FLOOR(CAST(wq AS DOUBLE) / swq * 2000000 / n_tokens * 1000000)
-             / 1000000.0 AS repeat_factor
-    FROM wts CROSS JOIN tot ORDER BY source
+    {_SQL_MIXTURE_BUDGET}
     """
 
 
@@ -17740,31 +17435,12 @@ def t51_bpe_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
     )
-    wts = src.withColumn(
-        "wq",
-        F.floor(F.sqrt(F.col("n_tokens").cast("double")) * 1000000).cast("long"),
-    )
-    tot = wts.agg(F.sum("wq").alias("swq"))
-    share = F.col("wq").cast("double") / F.col("swq")
-    return (
-        wts.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            (F.floor(share * 1000000) / F.lit(1000000.0)).alias("mix_weight"),
-            (
-                F.floor(share * F.lit(2_000_000) / F.col("n_tokens") * 1000000)
-                / F.lit(1000000.0)
-            ).alias("repeat_factor"),
-        )
-        .orderBy("source")
-    )
+    return _mixture_budget(src)
 
 
 @register(
     "mm32_charset_transfer_decode",
-    _mm29_html_extract_sql(),
+    CORPUS["mm29_html_text_extract"].oracle,
     survey_rows="ext:training-data ingestion — header-driven charset "
     "decode of crawl payloads (Content-Type charset parameter, BOM "
     "fallback): a large fraction of the real web is not UTF-8",
@@ -17781,24 +17457,12 @@ def t51_bpe_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expected answer, different physical decode path. Zero shuffle.",
 )
 def mm32_charset_transfer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        attach_html_warc_payloads,
-        extract_html_features,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    feats = extract_html_features(
-        attach_html_warc_payloads(docs, charset_rotation=True),
-        honor_charset=True,
-    )
-    return feats.select(
-        "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
-    )
+    return _html_extract(_t(spark, sf_dir, "documents"), True, False)
 
 
 @register(
     "st14_streaming_crawl_extract",
-    _mm29_html_extract_sql(),
+    CORPUS["mm29_html_text_extract"].oracle,
     survey_rows="§2.8 streaming × ext:training-data ingestion — crawl "
     "HTML→text extraction inside Structured Streaming micro-batches "
     "(the incremental-crawl production shape)",
@@ -17812,18 +17476,10 @@ def mm32_charset_transfer_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "micro-batch boundaries cannot change a single extracted byte.",
 )
 def st14_streaming_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        attach_html_warc_payloads,
-        extract_html_features,
-    )
     from ..streaming.ingest import _table_stream, run_stream_to_memory
 
     docs = _table_stream(spark, sf_dir, "documents.parquet")
-    docs = docs.filter(F.col("doc_id") % 10 == 0)
-    feats = extract_html_features(attach_html_warc_payloads(docs)).select(
-        "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
-    )
-    return run_stream_to_memory(feats, output_mode="append")
+    return run_stream_to_memory(_html_extract(docs, False, False), output_mode="append")
 
 
 @register(
@@ -17884,36 +17540,14 @@ def _t52_extracted_lang_sql() -> str:
     scaffold contributes the same deterministic tokens on both engines
     (the footer's lone 'A' counts one English 'a' marker per doc), so
     the confusion counts grade the chained extract→classify path."""
-
-    def mark(word: str) -> str:
-        return (
-            "len(list_filter(regexp_split_to_array(lower(x.xt), '[^a-z]+'), "
-            f"t -> t = '{word}'))"
-        )
-
-    def marks(words: "list[str]") -> str:
-        return " + ".join(mark(w) for w in words)
-
     return f"""
 {_html_xt_cte()},
     scores AS (
       SELECT d.lang,
-             regexp_matches(x.xt, '[一-鿿]') AS has_cjk,
-             {marks(["der", "die", "und", "das", "ist"])} AS s_de,
-             {marks(["the", "and", "of", "to", "a"])} AS s_en,
-             {marks(["el", "la", "de", "que", "y"])} AS s_es,
-             {marks(["le", "la", "et", "les", "des"])} AS s_fr
+             {_lang_scores_sql('x.xt')}
       FROM x JOIN documents d USING (doc_id)
     )
-    SELECT CASE WHEN has_cjk THEN 'zh'
-                WHEN GREATEST(s_de, s_en, s_es, s_fr) <= 0 THEN 'und'
-                WHEN s_de = GREATEST(s_de, s_en, s_es, s_fr) THEN 'de'
-                WHEN s_en = GREATEST(s_de, s_en, s_es, s_fr) THEN 'en'
-                WHEN s_es = GREATEST(s_de, s_en, s_es, s_fr) THEN 'es'
-                ELSE 'fr' END AS lang_guess,
-           lang AS lang_actual,
-           COUNT(*) AS n
-    FROM scores GROUP BY 1, 2
+    {_SQL_LANG_CONFUSION}
     """
 
 
@@ -17953,7 +17587,7 @@ def t52_extracted_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm34_transfer_decoding",
-    _mm29_html_extract_sql(),
+    CORPUS["mm29_html_text_extract"].oracle,
     survey_rows="ext:training-data ingestion — HTTP transfer decoding "
     "of crawl payloads (Transfer-Encoding: chunked dechunking, "
     "Content-Encoding: gzip/deflate inflation): Common Crawl stores "
@@ -17973,22 +17607,7 @@ def t52_extracted_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "third time. Zero shuffle; the decode rides the WARC scan.",
 )
 def mm34_transfer_decoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import (
-        attach_html_warc_payloads,
-        extract_html_features,
-    )
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    feats = extract_html_features(
-        attach_html_warc_payloads(
-            docs, charset_rotation=True, transfer_rotation=True
-        ),
-        honor_charset=True,
-        decode_transfer=True,
-    )
-    return feats.select(
-        "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
-    )
+    return _html_extract(_t(spark, sf_dir, "documents"), True, True)
 
 
 @register(
@@ -18149,7 +17768,7 @@ def mm37_wet_conversion_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st15_streaming_transfer_decode",
-    _mm29_html_extract_sql(),
+    CORPUS["mm29_html_text_extract"].oracle,
     survey_rows="§2.8 streaming × ext:training-data ingestion — the "
     "FULL as-served decode chain (chunked/gzip/deflate transfer "
     "decoding + charset resolution + extraction) inside Structured "
@@ -18165,24 +17784,10 @@ def mm37_wet_conversion_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st15_streaming_transfer_decode(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.multimodal import (
-        attach_html_warc_payloads,
-        extract_html_features,
-    )
     from ..streaming.ingest import _table_stream, run_stream_to_memory
 
     docs = _table_stream(spark, sf_dir, "documents.parquet")
-    docs = docs.filter(F.col("doc_id") % 10 == 0)
-    feats = extract_html_features(
-        attach_html_warc_payloads(
-            docs, charset_rotation=True, transfer_rotation=True
-        ),
-        honor_charset=True,
-        decode_transfer=True,
-    ).select(
-        "doc_id", "title", "n_links", "first_link", "text_chars", "text_md5"
-    )
-    return run_stream_to_memory(feats, output_mode="append")
+    return run_stream_to_memory(_html_extract(docs, True, True), output_mode="append")
 
 
 @register(
@@ -18326,13 +17931,7 @@ def _mm35_main_text_sql() -> str:
     WITH x AS (
       SELECT doc_id,
              (doc_id // 10) % 4 AS v,
-             trim(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace({assembled}, '[ \t\r\f\v]+', ' ', 'g'),
-                   ' *\n *', chr(10), 'g'),
-                 '\n+', chr(10), 'g'),
-               ' ' || chr(10)) AS kt,
+             {_sql_normalize_ws(assembled)} AS kt,
              CASE WHEN length(trim(
                regexp_replace(COALESCE(text, ''), '[ \t\r\n\f\v]+', ' ', 'g'),
                ' ')) > 0 THEN 3 ELSE 2 END AS nk,
@@ -18391,6 +17990,34 @@ def mm35_boilerplate_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the 2-byte (Latin-1 supplement) and 3-byte (CJK) sequences the
 #: byte-level merge table targets. A CONSTANT per language keeps the
 #: augmentation expressible identically in both engines.
+def _augmented_docs(
+    spark: SparkSession, sf_dir: str, suffixes: tuple[tuple[str, str], ...]
+) -> DataFrame:
+    """t53/t55's ``(doc_id, aug_text)``: each document's text (empty when
+    NULL) with its language's suffix from ``suffixes`` appended."""
+    docs = _t(spark, sf_dir, "documents")
+    aug = F.coalesce(F.col("text"), F.lit(""))
+    case = F.lit("")
+    for lang, suffix in reversed(suffixes):
+        case = F.when(F.col("lang") == lang, F.lit(suffix)).otherwise(case)
+    return docs.select("doc_id", F.concat(aug, case).alias("aug_text"))
+
+
+def _augmented_docs_sql(suffixes: tuple[tuple[str, str], ...]) -> str:
+    """SQL twin of :func:`_augmented_docs`: ``WITH RECURSIVE d(doc_id,
+    t)``."""
+    aug = " ".join(
+        "WHEN '{}' THEN '{}'".format(lang, suffix.replace("'", "''"))
+        for lang, suffix in suffixes
+    )
+    return f"""WITH RECURSIVE
+    d AS (
+      SELECT doc_id,
+             COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
+      FROM documents
+    )"""
+
+
 _T53_AUG = (
     ("de", " über schön für"),
     ("fr", " été déjà"),
@@ -18411,16 +18038,8 @@ def _t53_byte_bpe_sql() -> str:
     BYTE_PRETOKEN_RE (CJK per-codepoint, else whitespace-split, case
     preserved); token count = separators - 1; byte count =
     ``octet_length(encode(w))``."""
-    aug = " ".join(
-        f"WHEN '{lang}' THEN '{suffix}'" for lang, suffix in _T53_AUG
-    )
     return f"""
-    WITH RECURSIVE
-    d AS (
-      SELECT doc_id,
-             COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
-      FROM documents
-    ),
+    {_augmented_docs_sql(_T53_AUG)},
     occ AS (
       SELECT doc_id,
              unnest(regexp_extract_all(t, '[一-鿿]|[^\\s一-鿿]+')) AS w
@@ -18467,14 +18086,7 @@ def _t53_byte_bpe_sql() -> str:
 def t53_byte_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import byte_bpe_token_stats
 
-    docs = _t(spark, sf_dir, "documents")
-    aug = F.coalesce(F.col("text"), F.lit(""))
-    case = F.lit("")
-    for lang, suffix in reversed(_T53_AUG):
-        case = F.when(F.col("lang") == lang, F.lit(suffix)).otherwise(case)
-    docs = docs.select(
-        "doc_id", F.concat(aug, case).alias("aug_text")
-    )
+    docs = _augmented_docs(spark, sf_dir, _T53_AUG)
     return byte_bpe_token_stats(docs, text_col="aug_text").select(
         "doc_id", "n_pretok", "n_tokens", "n_bytes", "bytes_per_token"
     )
@@ -18541,17 +18153,8 @@ def _t55_gpt2_sql() -> str:
     the JVM's (?U) class agree — the full-Unicode equivalence is
     pinned by the BMP probe + hypothesis suite in
     tests/test_gpt2_pretoken.py)."""
-    aug = " ".join(
-        "WHEN '{}' THEN '{}'".format(lang, suffix.replace("'", "''"))
-        for lang, suffix in _T55_AUG
-    )
     return f"""
-    WITH RECURSIVE
-    d AS (
-      SELECT doc_id,
-             COALESCE(text, '') || CASE lang {aug} ELSE '' END AS t
-      FROM documents
-    ),
+    {_augmented_docs_sql(_T55_AUG)},
     scan AS (
       SELECT doc_id, t, 1 AS pos, 0 AS idx, CAST('' AS VARCHAR) AS tok
       FROM d
@@ -18618,12 +18221,7 @@ def t55_gpt2_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.gpt2 import GPT2_PRETOKEN_RE
     from ..operators.text import byte_bpe_token_stats
 
-    docs = _t(spark, sf_dir, "documents")
-    aug = F.coalesce(F.col("text"), F.lit(""))
-    case = F.lit("")
-    for lang, suffix in reversed(_T55_AUG):
-        case = F.when(F.col("lang") == lang, F.lit(suffix)).otherwise(case)
-    docs = docs.select("doc_id", F.concat(aug, case).alias("aug_text"))
+    docs = _augmented_docs(spark, sf_dir, _T55_AUG)
     stats = byte_bpe_token_stats(
         docs, text_col="aug_text", pretoken_re=GPT2_PRETOKEN_RE
     )

@@ -292,6 +292,52 @@ def moment_stats(df: DataFrame, group_col: str | None, value_col: str) -> DataFr
     )
 
 
+def _bucketed_prefix_sums(
+    per_value: DataFrame, cols: list[str], inclusive: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The two-phase prefix sum of ``cols`` over ``per_value``'s rows in
+    ``v`` order, with no single-partition sort over the value domain:
+    quantile_buckets' range buckets ``__b`` over the distinct values (one
+    hash shuffle on the bucket id), running sums within each bucket, and
+    per-bucket offsets from a window over the bucket-totals frame
+    (≤ n_buckets rows, where one partition is free).
+
+    Returns ``(cum, offsets)`` to join on ``__b`` (broadcast ``offsets``).
+    ``cum`` is ``per_value`` plus ``__b`` and, per ``c`` of ``cols``,
+    ``cum_<c>``: the sum over the bucket's rows before this ``v``, or
+    through it when ``inclusive``. ``offsets`` holds per bucket
+    ``off_<c>``, the sum over every earlier bucket, and ``n_<c>``, the sum
+    over all rows (the optimizer drops the window of a sum no caller
+    reads)."""
+    from pyspark.sql import Window
+
+    per_value, bucket, _ = quantile_buckets(per_value, "v")
+    bucketed = per_value.withColumn("__b", bucket)
+    w_intra = (
+        Window.partitionBy("__b")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    intra = {c: F.sum(c).over(w_intra) for c in cols}
+    if not inclusive:
+        intra = {c: F.coalesce(s, F.lit(0)) for c, s in intra.items()}
+    cum = bucketed.select(
+        *per_value.columns, "__b", *(s.alias(f"cum_{c}") for c, s in intra.items())
+    )
+    bucket_totals = bucketed.groupBy("__b").agg(
+        *(F.sum(c).alias(f"tot_{c}") for c in cols)
+    )
+    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
+    off = {c: F.coalesce(F.sum(f"tot_{c}").over(w_off), F.lit(0)) for c in cols}
+    everything = Window.partitionBy()
+    offsets = bucket_totals.select(
+        "__b",
+        *(s.alias(f"off_{c}") for c, s in off.items()),
+        *(F.sum(f"tot_{c}").over(everything).alias(f"n_{c}") for c in cols),
+    )
+    return cum, offsets
+
+
 def ks_two_sample(
     df: DataFrame, group_col: str, value_col: str, group_a: str
 ) -> DataFrame:
@@ -299,46 +345,20 @@ def ks_two_sample(
 
     D = max over distinct values v of |ECDF_a(v) − ECDF_b(v)|.
 
-    Scale: the cumulative counts run as range-bucketed windows (quantile
-    boundaries over the distinct values, one hash shuffle on the bucket id),
-    not one global single-partition sort — distinct doubles can be ~n. The
-    classic two-phase prefix sum: intra-bucket cumulative counts, plus
-    per-bucket offsets from a window over the tiny bucket-totals frame
-    (≤ n_buckets rows — single partition there is free). (scipy's ks_2samp
-    p-value can be applied driver-side to the scalar D.)"""
-    from pyspark.sql import Window
-
+    Scale: the cumulative counts are :func:`_bucketed_prefix_sums`'
+    range-bucketed windows, not one global single-partition sort —
+    distinct doubles can be ~n. (scipy's ks_2samp p-value can be applied
+    driver-side to the scalar D.)"""
     in_a = (F.col(group_col) == group_a).cast("int")
     per_value = df.groupBy(F.col(value_col).alias("v")).agg(
         F.sum(in_a).alias("ca"), F.sum(1 - in_a).alias("cb")
     )
-    per_value, bucket, _ = quantile_buckets(per_value, "v")
-    bucketed = per_value.withColumn("__b", bucket)
-    w_intra = (
-        Window.partitionBy("__b").orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = bucketed.select(
-        "v",
-        "__b",
-        F.sum("ca").over(w_intra).alias("cum_a"),
-        F.sum("cb").over(w_intra).alias("cum_b"),
-    )
-    bucket_totals = bucketed.groupBy("__b").agg(
-        F.sum("ca").alias("ta"), F.sum("cb").alias("tb")
-    )
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = bucket_totals.select(
-        "__b",
-        F.coalesce(F.sum("ta").over(w_off), F.lit(0)).alias("off_a"),
-        F.coalesce(F.sum("tb").over(w_off), F.lit(0)).alias("off_b"),
-        F.sum("ta").over(Window.partitionBy()).alias("n_a"),
-        F.sum("tb").over(Window.partitionBy()).alias("n_b"),
-    )
+    cum, offsets = _bucketed_prefix_sums(per_value, ["ca", "cb"], True)
     ecdf = cum.join(F.broadcast(offsets), "__b").select(
-        "n_a",
-        "n_b",
-        ((F.col("off_a") + F.col("cum_a")) / F.col("n_a")).alias("fa"),
-        ((F.col("off_b") + F.col("cum_b")) / F.col("n_b")).alias("fb"),
+        F.col("n_ca").alias("n_a"),
+        F.col("n_cb").alias("n_b"),
+        ((F.col("off_ca") + F.col("cum_ca")) / F.col("n_ca")).alias("fa"),
+        ((F.col("off_cb") + F.col("cum_cb")) / F.col("n_cb")).alias("fb"),
     )
     return ecdf.groupBy("n_a", "n_b").agg(
         F.max(F.abs(F.col("fa") - F.col("fb"))).alias("ks_d")
@@ -356,39 +376,19 @@ def mann_whitney_u(
     distinct value v, ``2·U`` accumulates ``cnt_a(v)·(2·cumB(<v) + cnt_b(v))``
     (each a-observation beats every smaller b and half-ties the equal b's),
     and the tie term accumulates ``t³ − t`` for t = total count at v. The
-    prefix count over ordered distinct values runs range-bucketed exactly
-    like :func:`ks_two_sample` (quantile bucket boundaries → intra-bucket
+    prefix count over ordered distinct values is
+    :func:`_bucketed_prefix_sums` (quantile bucket boundaries → intra-bucket
     window + per-bucket offsets from the tiny totals frame), so there is no
     single-partition sort over the value domain at any scale. The float
     formula (mean n_a·n_b/2, tie-corrected variance, one sqrt) is applied
     once to identical integers on both engines.
     """
-    from pyspark.sql import Window
-
     filtered = df.filter(F.col(group_col).isin(group_a, group_b))
     in_a = (F.col(group_col) == group_a).cast("long")
     per_value = filtered.groupBy(F.col(value_col).alias("v")).agg(
         F.sum(in_a).alias("ca"), F.sum(1 - in_a).alias("cb")
     )
-    per_value, bucket, _ = quantile_buckets(per_value, "v")
-    bucketed = per_value.withColumn("__b", bucket)
-    w_intra = (
-        Window.partitionBy("__b")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = bucketed.select(
-        "v",
-        "__b",
-        "ca",
-        "cb",
-        F.coalesce(F.sum("cb").over(w_intra), F.lit(0)).alias("cb_intra_before"),
-    )
-    bucket_totals = bucketed.groupBy("__b").agg(F.sum("cb").alias("tb"))
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = bucket_totals.select(
-        "__b", F.coalesce(F.sum("tb").over(w_off), F.lit(0)).alias("off_b")
-    )
+    cum, offsets = _bucketed_prefix_sums(per_value, ["cb"], False)
     t = F.col("ca") + F.col("cb")
     dec = lambda c: F.sum(c.cast("decimal(38,0)")).cast("long")  # noqa: E731
     stats = cum.join(F.broadcast(offsets), "__b").agg(
@@ -397,7 +397,7 @@ def mann_whitney_u(
         dec(
             F.col("ca")
             * (
-                2 * (F.col("off_b") + F.col("cb_intra_before"))
+                2 * (F.col("off_cb") + F.col("cum_cb"))
                 + F.col("cb")
             )
         ).alias("u2"),
@@ -433,42 +433,23 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     SSB/SST is scale-invariant so the doubling cancels. Every sum up to the
     final float formula is DECIMAL(38,0)-exact.
 
-    Scale: the global prefix count over ordered distinct values runs
-    range-bucketed exactly like :func:`ks_two_sample` (approx-quantile
-    bucket boundaries → intra-bucket window + per-bucket offsets from the
-    tiny totals frame) — no single-partition sort over the value domain.
+    Scale: the global prefix count over ordered distinct values is
+    :func:`_bucketed_prefix_sums` (approx-quantile bucket boundaries →
+    intra-bucket window + per-bucket offsets from the tiny totals frame) —
+    no single-partition sort over the value domain.
     The reference computes this family in scipy on a pandas frame
     (``notebooks/01_youbike_analysis.ipynb`` Part D); here it is two hash
     aggregations plus group-count-sized scalar math.
     """
-    from pyspark.sql import Window
-
     per_vg = df.groupBy(
         F.col(value_col).alias("v"), F.col(group_col).alias("g")
     ).agg(F.count(F.lit(1)).alias("c"))
     per_value = per_vg.groupBy("v").agg(F.sum("c").alias("t"))
-    per_value, bucket, _ = quantile_buckets(per_value, "v")
-    bucketed = per_value.withColumn("__b", bucket)
-    w_intra = (
-        Window.partitionBy("__b")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = bucketed.select(
-        "v",
-        "__b",
-        "t",
-        F.coalesce(F.sum("t").over(w_intra), F.lit(0)).alias("t_intra_before"),
-    )
-    bucket_totals = bucketed.groupBy("__b").agg(F.sum("t").alias("tb"))
-    w_off = Window.orderBy("__b").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = bucket_totals.select(
-        "__b", F.coalesce(F.sum("tb").over(w_off), F.lit(0)).alias("off_b")
-    )
+    cum, offsets = _bucketed_prefix_sums(per_value, ["t"], False)
     ranked_values = cum.join(F.broadcast(offsets), "__b").select(
         "v",
         (
-            2 * (F.col("off_b") + F.col("t_intra_before")) + F.col("t") + 1
+            2 * (F.col("off_t") + F.col("cum_t")) + F.col("t") + 1
         ).cast("long").alias("r2"),
     )
     dec = lambda c: F.sum(c.cast("decimal(38,0)")).cast("double")  # noqa: E731
