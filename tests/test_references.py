@@ -324,7 +324,7 @@ def test_the_window_scan_skips_what_carries_no_code():
 
 
 #: Where an import nothing uses is dead weight: the package, the tools,
-#: the tests and the bench driver.
+#: the tests and bench.py.
 IMPORTERS = [PKG, ROOT / "tools", ROOT / "tests", ROOT / "bench.py"]
 
 

@@ -100,8 +100,9 @@ def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
 def oracle_diff(
     spark_df: DataFrame, oracle: str, con: duckdb.DuckDBPyConnection
 ) -> str | None:
-    """The driver's check of one query: collect ``spark_df``, run
-    ``oracle`` on ``con`` (see :func:`duck_views`) and compare both as the
-    driver does; None if canonically equal, else the first difference."""
+    """The parity check of one query: collect ``spark_df``, run
+    ``oracle`` on ``con`` (see :func:`duck_views`) and compare both with
+    :func:`diff_frames`; None if canonically equal, else the first
+    difference."""
     spark_pd = spark_to_pandas(spark_df.collect(), spark_df.columns)
     return diff_frames(spark_pd, con.execute(oracle).df())

@@ -169,11 +169,11 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
 
 
 def grade_ledger() -> dict[str, tuple[int, str]]:
-    """Per query, the round of its most recent driver grade and the
-    driver's status then (PASS, ROWSONLY, FAIL, ERROR, or ? for a row of
+    """Per query, the round of its most recent parity grade and its
+    status then (PASS, ROWSONLY, FAIL, ERROR, or ? for a row of
     unknown shape), read from the committed ``CORRECTNESS_r*.json``
-    artifacts at the repo root. The round rotates the green tail: the
-    driver's per-round window is finite, so re-verification coverage is
+    artifacts at the repo root. The round rotates the green tail: each
+    round's parity window is finite, so re-verification coverage is
     maximized by grading the STALEST greens first (a query last graded in
     r1 ran against testdata that has since been regenerated — exactly how
     the r4 streaming regression hid)."""
