@@ -191,34 +191,3 @@ def test_bad_bands_fail_before_any_spark_job(spark, call):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert not spark.streams.active
-
-
-def test_candidate_broadcast_has_one_owner():
-    """Every candidate-pair comparison (the Jaccard verify of t7/t49/the
-    streaming gate and the sketch audit) goes through one pair-side helper:
-    ``F.broadcast(cand`` appears in exactly one function across
-    ``operators/`` and ``streaming/``, so the broadcast policy is a
-    one-function change."""
-    import ast
-    import pathlib
-
-    pkg = pathlib.Path(__file__).resolve().parents[1] / "youbike_etl_pipeline_spark"
-    owners = set()
-    for sub in ("operators", "streaming"):
-        for path in sorted((pkg / sub).rglob("*.py")):
-            src = path.read_text()
-            fns = [
-                n
-                for n in ast.walk(ast.parse(src))
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-            ]
-            for lineno, line in enumerate(src.splitlines(), 1):
-                if "F.broadcast(cand" not in line:
-                    continue
-                inner = min(
-                    (f for f in fns if f.lineno <= lineno <= f.end_lineno),
-                    key=lambda f: f.end_lineno - f.lineno,
-                    default=None,
-                )
-                owners.add(f"{sub}/{path.name}:{inner.name if inner else '<module>'}")
-    assert owners == {"operators/dedup.py:_candidate_pairs"}, sorted(owners)

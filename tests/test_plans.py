@@ -14,6 +14,7 @@ import io
 import pytest
 
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS
+from youbike_etl_pipeline_spark.plans.executed import executed_plans, operator_counts
 
 
 def plan_text(df, mode: str = "formatted") -> str:
@@ -182,15 +183,14 @@ def test_chunking_has_single_aggregation_shuffle(spark, sf_small):
 
 
 def test_stream_static_join_broadcasts_dim(spark, sf_small):
-    """st7's customer dim must broadcast under the stream (checked on the
-    batch twin of the join — the streaming plan wraps the same join)."""
-    from youbike_etl_pipeline_spark.plans.corpus import _t
-    from pyspark.sql import functions as F
-
-    ev = _t(spark, sf_small, "events")
-    dim = _t(spark, sf_small, "customer").select("c_custkey", "c_mktsegment")
-    txt = plan_text(ev.join(F.broadcast(dim), ev.user_id == F.col("c_custkey")))
-    assert "BroadcastHashJoin" in txt
+    """st7's customer dim broadcasts under the stream: the planner picks a
+    broadcast hash join for the micro-batch join st7 itself runs."""
+    plans = executed_plans(
+        spark, lambda: CORPUS["st7_stream_static_join"].fn(spark, sf_small).collect()
+    )
+    ops = operator_counts(plans)
+    assert ops["BroadcastHashJoin"] >= 1, ops
+    assert not ops["SortMergeJoin"] and not ops["ShuffledHashJoin"], ops
 
 
 def test_q6_all_predicates_pushed_no_join(spark, sf_small):
@@ -719,22 +719,6 @@ def test_bpe_vocab_broadcast_no_skewed_word_shuffle(spark, sf_small, name):
     assert _re.search(
         r"HashAggregate\(keys=\[w#\d+\], functions=\[\]\)", txt
     ), name
-
-
-def executed_plans(spark, run) -> list[str]:
-    """Physical plans of every SQL execution ``run()`` starts, eager ones
-    inside query construction included (read from the SQL status store)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def executions():
-        bus.waitUntilEmpty()
-        seq = store.executionsList()  # a Scala Seq
-        return [seq.apply(i) for i in range(seq.size())]
-
-    before = {e.executionId() for e in executions()}
-    run()
-    return [e.physicalPlanDescription() for e in executions() if e.executionId() not in before]
 
 
 @pytest.mark.parametrize("name", ["m25_poisson_bootstrap_ci", "m30_randomization_test"])

@@ -60,3 +60,36 @@ def test_stream_groups_fold_into_the_rep_whose_window_holds_them():
     assert rec["driver_gap_s"] == 0.7
     alone = qp.breakdown(stats, ["st9/0"], 1.1, 900, 2000)
     assert (alone["jobs"], alone["executor_run_s"], alone["driver_gap_s"]) == (1, 0.05, 1.0)
+
+
+def test_operator_counts_read_the_final_adaptive_plan():
+    """A rep records what the planner decided: the final plan's nodes,
+    not the initial plan's, and every execution of the rep."""
+    from youbike_etl_pipeline_spark.plans.executed import operator_counts
+
+    plan = "\n".join([
+        "== Physical Plan ==",
+        "OverwriteByExpression (9)",
+        "+- AdaptiveSparkPlan (8)",
+        "   +- == Final Plan ==",
+        "      ResultQueryStage (5), Statistics(sizeInBytes=8.0 EiB)",
+        "      +- * BroadcastHashJoin Inner BuildRight (4)",
+        "         :- * Scan parquet  (1)",
+        "         +- BroadcastQueryStage (3), Statistics(sizeInBytes=1.0 KiB)",
+        "            +- BroadcastExchange (2)",
+        "               +- * Scan parquet  (1)",
+        "   +- == Initial Plan ==",
+        "      SortMergeJoin Inner (7)",
+        "      :- Exchange (6)",
+        "      :  +- Scan parquet  (1)",
+        "      +- Exchange (6)",
+        "",
+        "(1) Scan parquet ",
+        "Output [1]: [k#1]",
+    ])
+    ops = operator_counts([plan, "== Physical Plan ==\n* Project (2)\n+- ReusedExchange (1)\n"])
+    assert ops == {
+        "OverwriteByExpression": 1, "AdaptiveSparkPlan": 1, "ResultQueryStage": 1,
+        "BroadcastHashJoin": 1, "Scan": 2, "BroadcastQueryStage": 1,
+        "BroadcastExchange": 1, "Project": 1, "ReusedExchange": 1,
+    }

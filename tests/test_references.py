@@ -410,3 +410,104 @@ def test_the_import_scan_counts_every_kind_of_use(tmp_path):
     assert unused_imports(f) == [
         "field (line 6)", "json (line 3)", "osp (line 2)", "re (line 15)",
     ]
+
+
+#: The join-strategy hints the package keeps, by ``path:function``, each
+#: with the plan it buys over the planner's own choice at sf0.01 and sf0.1,
+#: counted over the initial and final adaptive plans of every execution
+#: ("builds X" names the broadcast side of a hash join). Every other join
+#: is left to Spark's size-based planner and adaptive execution.
+BROADCAST_HINTS = {
+    "operators/dedup.py:_candidate_pairs": "t7, t38, t38b, t49, st9: 2 BroadcastHashJoins "
+    "build the candidate pairs, not the feature frames (ROADMAP item 3)",
+    "operators/dedup.py:ngram_jaccard_pairs": "t2, t10, t25, t26, t37: 2 BroadcastHashJoin, "
+    "not SortMergeJoin",
+    "operators/joins.py:nearest_neighbor_join": "the per-key minima join is a "
+    "BroadcastHashJoin, not SortMergeJoin (sf0.1), and the cross product broadcasts the "
+    "right point set, not the left",
+    "plans/corpus.py:dq2_iqr_outliers": "dq2: BroadcastHashJoin builds the quartiles, not "
+    "the events (the hint costs 2 Exchanges)",
+    "plans/corpus.py:m12_median_absolute_deviation": "m12: BroadcastHashJoin builds the "
+    "medians, not the events (the hint costs 1 Exchange)",
+    "plans/corpus.py:q8_national_market_share": "q8: the customer semi join is a "
+    "BroadcastHashJoin, not SortMergeJoin",
+    "plans/corpus.py:q21_suppliers_kept_waiting": "q21: 1 Exchange fewer at sf0.1",
+    "plans/corpus.py:dq4_volume_anomalies": "dq4: BroadcastHashJoin builds the per-type "
+    "stats, not the daily counts",
+    "plans/corpus.py:_bm25_scores": "s7, s8: BroadcastHashJoin builds the idf table, not "
+    "the term frequencies",
+    "plans/corpus.py:ev4_conversion_latency": "ev4: BroadcastNestedLoopJoin broadcasts the "
+    "quantile row, not the counts",
+    "plans/corpus.py:ev5_rfm_segmentation": "ev5: BroadcastNestedLoopJoin broadcasts the "
+    "thresholds, not the RFM frame (the hint costs 1 Exchange)",
+    "plans/corpus.py:f18_winsorized_stats": "f18: BroadcastNestedLoopJoin broadcasts the "
+    "thresholds, not the values (the hint costs 1 Exchange)",
+    "plans/corpus.py:m17_levene_brown_forsythe": "m17: BroadcastHashJoin builds the "
+    "medians, not the values (the hint costs 1 Exchange)",
+    "plans/corpus.py:e4_fisher_separation": "e4: BroadcastHashJoin builds the global "
+    "centroid, not the label centroids",
+    "plans/corpus.py:m26_theil_sen_trend": "m26: the origin joins are BroadcastHashJoins, "
+    "not 3 SortMergeJoins, and 2 more build the slopes, not the day index",
+    "plans/corpus.py:g5_partition_modularity": "g5: the community left join is a "
+    "BroadcastHashJoin, not SortMergeJoin",
+    "plans/corpus.py:g6_ra_link_prediction": "g6: the degree join is a BroadcastHashJoin, "
+    "not SortMergeJoin",
+    "plans/corpus.py:t47_pmi_cooccurrence": "t47: BroadcastHashJoin builds the vocabulary, "
+    "not the tokens (the hint costs 1 Exchange)",
+    "plans/corpus.py:w24_robust_anomaly_days": "w24: 2 BroadcastHashJoins build the medians "
+    "and MADs, not the daily frames (the hints cost 2 Exchanges)",
+    "plans/corpus.py:w26_dominant_period": "w26: 2 Projects fewer around the period grid",
+    "plans/corpus.py:mm9_channel_histogram": "mm9: BroadcastHashJoin builds the channel "
+    "entropies, not the histogram",
+    "plans/corpus.py:m32_g_test": "m32: BroadcastHashJoin builds the margins, not the "
+    "observed counts (sf0.1)",
+    "stats/inference.py:ks_two_sample": "m11: the ECDF offsets join is a "
+    "BroadcastHashJoin, not SortMergeJoin",
+}
+
+
+def broadcast_hints(pkg: Path = PKG) -> set[str]:
+    """``path:function`` of every ``F.broadcast(...)`` call in the package
+    (``<module>`` outside any function)."""
+    found = set()
+
+    def visit(node: ast.AST, owner: str, rel: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name, rel)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "broadcast"
+                and getattr(child.func.value, "id", None) == "F"
+            ):
+                found.add(f"{rel}:{owner}")
+            visit(child, owner, rel)
+
+    for path in _py_files(pkg):
+        visit(ast.parse(path.read_text()), "<module>", path.relative_to(pkg).as_posix())
+    return found
+
+
+def test_every_broadcast_hint_buys_a_plan():
+    """A hint the planner would have chosen anyway is one more place a
+    join-strategy change has to reach, and a hint on a frame that grows
+    with the corpus holds that frame in every executor's memory."""
+    found = broadcast_hints()
+    assert not found - set(BROADCAST_HINTS), f"unlisted hints: {sorted(found - set(BROADCAST_HINTS))}"
+    assert not set(BROADCAST_HINTS) - found, f"stale entries: {sorted(set(BROADCAST_HINTS) - found)}"
+
+
+def test_the_hint_scan_finds_each_hint_in_its_innermost_function(tmp_path):
+    (tmp_path / "m.py").write_text(
+        "x = F.broadcast(a)\n"
+        "def f(df):\n"
+        "    def g():\n"
+        "        return df.join(F.broadcast(b), 'k')\n"
+        "    sc.broadcast(c)  # a broadcast variable, not a join hint\n"
+        "    return g\n"
+        "def h(df):\n"
+        "    return df.sparkContext.broadcast(d)\n"
+    )
+    assert broadcast_hints(tmp_path) == {"m.py:<module>", "m.py:g"}

@@ -263,7 +263,7 @@ STAR_QUERIES = [
     "q22_global_sales_opportunity",
     "e1_embedding_quantization",
     # round-4b TPC-H completion (the last six of the 22): q2's float-min
-    # equality join and q11's 0.5% threshold are the seed-sensitive parts —
+    # equality join and q11's 0.1% threshold are the seed-sensitive parts —
     # both must hold on regenerated money columns
     "q2_min_cost_supplier",
     "q9_product_type_profit",

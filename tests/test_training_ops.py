@@ -275,40 +275,16 @@ def test_paragraph_dedup_stats_semantics(spark):
     # doc 3 duplicates BOTH lines (footer owned by 1, 'beta' by 2)
     assert (rows[3]["n_paras"], rows[3]["n_dup"]) == (2, 2)
     assert rows[3]["dup_ratio"] == 1.0
-    # the shuffle fallback route is result-identical to broadcast
-    alt = {
-        r["doc_id"]: r
-        for r in paragraph_dedup_stats(df, broadcast_owners=False).collect()
-    }
-    assert {k: (v["n_paras"], v["n_dup"], v["dup_ratio"]) for k, v in rows.items()} == {
-        k: (v["n_paras"], v["n_dup"], v["dup_ratio"]) for k, v in alt.items()
-    }
 
 
-def test_paragraph_dedup_join_routing(spark):
-    """Explicit owner-join routing (round-11 advisor): the DEFAULT is
-    the scale-safe shuffle join (article-heavy corpora have near-unique
-    paragraphs — the distinct set grows ~linearly, a broadcast inverts
-    at 100 TB); ``broadcast_owners=True`` is the boilerplate-dominated
-    shape t54 opts into, where the owner table is vocabulary-like."""
-    from youbike_etl_pipeline_spark.operators.dedup import (
-        paragraph_dedup_stats,
+def test_paragraph_dedup_join_routing(spark, sf_small):
+    """The owner join's strategy is the planner's: on t54's fixture, where
+    the owner table is vocabulary-like, it broadcasts the owners."""
+    from youbike_etl_pipeline_spark.plans.corpus import CORPUS
+    from youbike_etl_pipeline_spark.plans.executed import executed_plans, operator_counts
+
+    plans = executed_plans(
+        spark, lambda: CORPUS["t54_paragraph_dedup"].fn(spark, sf_small).collect()
     )
-
-    df = spark.createDataFrame(
-        [(1, "a\nb"), (2, "b\nc")], "doc_id long, text string"
-    )
-
-    def plan_of(**kw):
-        return (
-            paragraph_dedup_stats(df, **kw)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-
-    bcast = plan_of(broadcast_owners=True)
-    assert "BroadcastHashJoin" in bcast
-    assert "SortMergeJoin" not in bcast
-    default = plan_of()
-    assert "BroadcastHashJoin" not in default
+    ops = operator_counts(plans)
+    assert ops["BroadcastHashJoin"] >= 1 and not ops["SortMergeJoin"], ops

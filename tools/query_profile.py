@@ -5,8 +5,10 @@ noop sink, same env contract) with Spark's event log on, uncompressed, in a
 temporary directory, and every rep in its own job group. After the run the
 log is read with ``perfbench/eventlog.py`` and each rep gets a breakdown:
 jobs, stages, tasks, summed executor run and CPU time, shuffle read/write
-bytes, spill, broadcast exchanges, and the driver gap (wall time no stage
-was running: planning, footer reads, driver-side Python). A streaming
+bytes, spill, broadcast exchanges, the driver gap (wall time no stage
+was running: planning, footer reads, driver-side Python), and what the
+planner decided: the join strategies and exchanges of the plans the rep
+executed (``plans.executed``), final adaptive plans only. A streaming
 rep's micro-batches run under the stream's run-id job group, so every
 other group whose stages all ran inside a rep's wall window counts as that
 rep's. Unless ``--no-plans``, each query's ``.explain("formatted")`` goes
@@ -36,7 +38,14 @@ sys.path.insert(0, ROOT)
 
 from perfbench.eventlog import GroupStats, read_events  # noqa: E402
 from youbike_etl_pipeline_spark.plans.corpus import CORPUS  # noqa: E402
+from youbike_etl_pipeline_spark.plans.executed import executed_plans, operator_counts  # noqa: E402
 from youbike_etl_pipeline_spark.session import get_spark  # noqa: E402
+
+#: The executed-plan nodes each rep records: join strategies and exchanges.
+PLAN_OPS = (
+    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin", "BroadcastNestedLoopJoin",
+    "CartesianProduct", "Exchange", "BroadcastExchange", "ReusedExchange",
+)
 
 
 def stream_groups(stats: GroupStats, rep_groups: set[str], start_ms: float, end_ms: float) -> list[str]:
@@ -114,10 +123,18 @@ def main() -> None:
         for rep in range(args.reps):
             group = f"{name}/{rep}"
             sc.setJobGroup(group, f"{name} rep{rep}")
-            start_ms, t0 = time.time() * 1000, time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            wall_s = round(time.perf_counter() - t0, 3)
-            reps.setdefault(name, []).append((group, wall_s, start_ms, time.time() * 1000))
+            span = {}
+
+            def run():
+                span["start_ms"], t0 = time.time() * 1000, time.perf_counter()
+                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                span["wall_s"] = round(time.perf_counter() - t0, 3)
+                span["end_ms"] = time.time() * 1000
+
+            ops = operator_counts(executed_plans(spark, run))
+            reps.setdefault(name, []).append(
+                (group, span["wall_s"], span["start_ms"], span["end_ms"], {k: ops[k] for k in PLAN_OPS if ops[k]})
+            )
             sc.setJobGroup(None, None)
     spark.stop()  # flushes the event log
     try:
@@ -129,8 +146,11 @@ def main() -> None:
     out: dict[str, dict] = {}
     for name, runs in reps.items():
         per_rep = [
-            breakdown(stats, [group, *stream_groups(stats, rep_groups, start, end)], wall, start, end)
-            for group, wall, start, end in runs
+            {
+                **breakdown(stats, [group, *stream_groups(stats, rep_groups, start, end)], wall, start, end),
+                "plan_ops": plan_ops,
+            }
+            for group, wall, start, end, plan_ops in runs
         ]
         out[name] = {"min": min(r["wall_s"] for r in per_rep), "reps": per_rep}
         best = min(per_rep, key=lambda r: r["wall_s"])
@@ -138,7 +158,7 @@ def main() -> None:
             f"{name}: min {best['wall_s']}s over {len(per_rep)} reps; fastest rep: "
             f"{best['jobs']} jobs, {best['stages']} stages, {best['tasks']} tasks, "
             f"executor run {best['executor_run_s']}s cpu {best['executor_cpu_s']}s, "
-            f"driver gap {best['driver_gap_s']}s",
+            f"driver gap {best['driver_gap_s']}s; plan {best['plan_ops']}",
             flush=True,
         )
     with open("/tmp/query_profile_last.json", "w") as f:

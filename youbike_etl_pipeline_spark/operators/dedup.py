@@ -43,9 +43,7 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def paragraph_dedup_stats(
-    df: DataFrame, text_col: str = "text", broadcast_owners: bool = False
-) -> DataFrame:
+def paragraph_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Paragraph-granularity dedup statistics — the CCNet unit: crawl
     pipelines dedup at PARAGRAPH level before document level, because
     boilerplate lines (navigation, footers) repeat across a whole host
@@ -59,25 +57,17 @@ def paragraph_dedup_stats(
     host), so the owner table aggregates ``min(id)`` behind a
     map-side combine (the partial min absorbs the hot keys exactly
     like t50's collapse) and the join back carries near-unique keys.
-    The join routing is EXPLICIT because it depends on what dominates
-    the corpus (round-11 advisor — the earlier broadcast default
-    overstated '|distinct paragraphs| ≪ |instances|'): article-heavy
-    corpora have mostly-UNIQUE paragraphs, so the distinct-paragraph
-    set grows roughly linearly with corpus size (≈ instances/k for
-    small k) and a broadcast inverts at 100 TB — the default is
-    therefore the shuffled sort-merge join, safe at any scale.
-    ``broadcast_owners=True`` is the boilerplate-dominated shape
-    (dedup AFTER an extract step that already stripped article
-    uniqueness, e.g. t54's fixture), where the owner table is genuinely
-    vocabulary-like and the broadcast removes the instance shuffle."""
+    The join strategy is the planner's, because it depends on what
+    dominates the corpus: article-heavy corpora have mostly-UNIQUE
+    paragraphs, so the owner table grows roughly linearly with corpus
+    size and must shuffle, while a boilerplate-dominated one (t54's
+    fixture) is vocabulary-like and small enough to broadcast."""
     paras = df.select(
         F.col("doc_id"),
         F.explode(F.split(F.col(text_col), "\n")).alias("para"),
     ).filter(F.col("para") != "")
     keyed = paras.select("doc_id", F.md5(F.col("para")).alias("h"))
     owners = keyed.groupBy("h").agg(F.min("doc_id").alias("owner"))
-    if broadcast_owners:
-        owners = F.broadcast(owners)
     return (
         keyed.join(owners, "h")
         .groupBy("doc_id")

@@ -1,10 +1,10 @@
 """Join operators (SURVEY §2.3 J1-J6, plus as-of/range generalizations).
 
 Scale posture: every dimension side in the reference workload is tiny
-(≈1.4k stations, 13 districts) → explicit ``broadcast`` so the fact side never
-shuffles. The NN spatial join broadcasts the small point set and reduces with
-a min-aggregation, so it is a map-side cross product — no shuffle of the big
-side. The as-of join is the one genuinely custom composition (Spark has no
+(≈1.4k stations, 13 districts), so the planner broadcasts it by size and
+the fact side never shuffles. The NN spatial join broadcasts the small point
+set and reduces with a min-aggregation, so it is a map-side cross product —
+no shuffle of the big side. The as-of join is the one genuinely custom composition (Spark has no
 native as-of): union + partitioned last-value carry-forward, one shuffle on
 the join key.
 """
@@ -28,13 +28,13 @@ def hour_bucket_join(
     """Time-bucket join (J2): floor fact timestamps to the hour and equi-join
     the hourly series — each sub-hourly reading joins its containing hour
     (reference ``notebooks/03_data_merge.ipynb:L79-L87``). The hourly side is
-    small (one row per hour) → broadcast. Output = fact columns + the
-    hourly side's value columns; the synthesized bucket key is internal
+    small (one row per hour), so the planner broadcasts it. Output = fact
+    columns + the hourly side's value columns; the synthesized bucket key is internal
     (a reserved ``__hour_key``, dropped after the join, so it can't shadow
     a real fact column or leak into downstream schemas)."""
     keyed = fact.withColumn("__hour_key", F.date_trunc("hour", F.col(fact_ts)))
     rhs = hourly.withColumnRenamed(hourly_ts, "__hour_key")
-    return keyed.join(F.broadcast(rhs), on="__hour_key", how=how).drop("__hour_key")
+    return keyed.join(rhs, on="__hour_key", how=how).drop("__hour_key")
 
 
 def lookup_join(df: DataFrame, mapping: dict, key: str, value_name: str) -> DataFrame:
@@ -97,7 +97,7 @@ def nearest_mrt_distance(stations: DataFrame, mrt: DataFrame) -> DataFrame:
     distance to any MRT station → ``dist_to_mrt``
     (``notebooks/01_youbike_analysis.ipynb:L55-L61``). Min-only (no arg-min
     row needed) → broadcast cross join + map-side partial min, no window."""
-    mrt_pts = F.broadcast(mrt.select(F.col("lat").alias("__mlat"), F.col("lng").alias("__mlng")))
+    mrt_pts = mrt.select(F.col("lat").alias("__mlat"), F.col("lng").alias("__mlng"))
     d = haversine_m(
         F.col("lat").cast("double"), F.col("lng").cast("double"), F.col("__mlat"), F.col("__mlng")
     )
@@ -367,7 +367,7 @@ def range_band_join(
     )
     keyed = fact.withColumn("__bucket", F.floor(F.col(value_col) / w).cast("long"))
     return (
-        keyed.join(F.broadcast(banded), on="__bucket", how="inner")
+        keyed.join(banded, on="__bucket", how="inner")
         .filter((F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi")))
         .drop("__bucket")
     )
@@ -383,7 +383,7 @@ def grid_nn_join(
     right point is replicated into its 3×3 cell neighborhood, so a left
     point's candidates are exactly the right points within one cell of it —
     an equi-join on the cell id instead of a cross product. Left points
-    whose neighborhood is empty fall back to the exact broadcast cross
+    whose neighborhood is empty fall back to the exact cross
     product (correctness guarantee for sparse regions; at real scale the
     fallback set is a vanishing fraction).
 
@@ -415,7 +415,7 @@ def grid_nn_join(
         "__rlat",
         "__rlng",
     )
-    cand = lkeyed.join(F.broadcast(replicated), on=["__cell_lat", "__cell_lng"], how="inner")
+    cand = lkeyed.join(replicated, on=["__cell_lat", "__cell_lng"], how="inner")
     d = haversine_m(
         F.col("lat").cast("double"), F.col("lng").cast("double"),
         F.col("__rlat"), F.col("__rlng"),
@@ -424,14 +424,14 @@ def grid_nn_join(
 
     # fallback: left rows with an empty 3x3 neighborhood get the exact scan
     uncovered = lkeyed.join(
-        F.broadcast(replicated.select("__cell_lat", "__cell_lng").distinct()),
+        replicated.select("__cell_lat", "__cell_lng").distinct(),
         on=["__cell_lat", "__cell_lng"],
         how="left_anti",
     ).drop("__cell_lat", "__cell_lng")
     # no isEmpty() probe: that fired an eager anti-join job at plan time
     # and recomputed it when non-empty; an empty union arm is free
     far = (
-        uncovered.crossJoin(F.broadcast(r_pts))
+        uncovered.crossJoin(r_pts)
         .withColumn(
             "__d",
             haversine_m(

@@ -53,15 +53,12 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame
 
 
 def cosine_topk_per_query(df: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
-    """Batch variant: top-k per query row. Queries broadcast (they are the
-    small side); ranking via per-query window."""
+    """Batch variant: top-k per query row, ranked by a per-query window."""
     from pyspark.sql import Window
 
     crossed = df.filter(_nonzero_norm(F.col("embedding"))).crossJoin(
-        F.broadcast(
-            queries.filter(_nonzero_norm(F.col("embedding"))).select(
-                F.col("query_id"), F.col("embedding").alias("__qvec")
-            )
+        queries.filter(_nonzero_norm(F.col("embedding"))).select(
+            F.col("query_id"), F.col("embedding").alias("__qvec")
         )
     ).withColumn("cosine", cosine_similarity(F.col("embedding"), F.col("__qvec")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
@@ -171,7 +168,7 @@ def embedding_near_dup_pairs(
     normed = df.select(F.col("vec_id"), normalize(F.col("embedding")).alias("nvec"))
     a = normed.toDF("id_a", "vec_a")
     b = normed.toDF("id_b", "vec_b")
-    pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn("cosine", dot_product(F.col("vec_a"), F.col("vec_b")))
         .filter(F.col("cosine") >= threshold)
@@ -418,7 +415,7 @@ def ivf_topk(
         .limit(n_probe)
         .select("cluster")
     )
-    candidates = tagged.join(F.broadcast(probe), "cluster")
+    candidates = tagged.join(probe, "cluster")
     scored = candidates.select(
         F.col("vec_id"), cosine_similarity(F.col("embedding"), q).alias("cosine")
     )
@@ -534,7 +531,7 @@ def knn_label_consistency(
         # the entire pairwise compute inherits the scan's partitioning (a
         # bench-scale embeddings file is ONE partition).
         q = q.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        crossed = q.crossJoin(F.broadcast(n)).filter(F.col("qid") != F.col("nid"))
+        crossed = q.crossJoin(n).filter(F.col("qid") != F.col("nid"))
     else:
         if dim is None:
             raise ValueError("ann_bits requires dim (hyperplane width)")
@@ -630,7 +627,7 @@ def jl_projection_audit(
     b = base.filter(F.col("vec_id") % 31 == 0).select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
     )
-    pairs = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
+    pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     dvec = F.zip_with(
         F.col("va").cast("array<double>"),
         F.col("vb").cast("array<double>"),

@@ -352,7 +352,7 @@ def mixture_resample(df: DataFrame, weights: dict[str, tuple[int, int]]) -> Data
     )
     bucket = (F.col("doc_id") % F.lit(2**31)) * 48271 % F.lit(2**31 - 1) % 10000
     return (
-        df.join(F.broadcast(counts), "lang")
+        df.join(counts, "lang")
         .withColumn("__num", num)
         .withColumn("__den", den)
         .filter(F.col("__num").isNotNull())
@@ -569,7 +569,7 @@ def byte_bpe_token_stats(
         .distinct()
         .mapInPandas(fn, "w string, n_tok bigint, n_byt bigint")
     )
-    out = pretoks.join(F.broadcast(vocab), "w").groupBy("doc_id").agg(
+    out = pretoks.join(vocab, "w").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_pretok"),
         F.sum("n_tok").alias("n_tokens"),
         F.sum("n_byt").alias("n_bytes"),
@@ -631,7 +631,7 @@ def bpe_token_stats(df: DataFrame, carry_cols: "tuple[str, ...]" = ()) -> DataFr
     )
     # carry_cols are functionally dependent on the doc id (e.g. source),
     # so adding them to the grouping keys changes nothing but the schema
-    out = words.join(F.broadcast(vocab), "w").groupBy("doc_id", *carry_cols).agg(
+    out = words.join(vocab, "w").groupBy("doc_id", *carry_cols).agg(
         F.count(F.lit(1)).alias("n_words"),
         F.sum("n_tok").alias("n_tokens"),
     )

@@ -187,14 +187,11 @@ def bucketed_row_number(
     # NULL-SAFE join on the partition columns: the single-window twin keeps
     # a null stratum as its own partition, so a null-unsafe equi-join here
     # would silently drop those rows (same failure class as the null
-    # order_col this function already raises on). The offset frame is
-    # strata x buckets — broadcast it.
-    offsets = F.broadcast(
-        counts.select(
-            *[F.col(c).alias(f"__p_{c}") for c in part_cols],
-            F.col("__bkt").alias("__obkt"),
-            F.coalesce(F.sum("__n").over(w_off), F.lit(0)).cast("long").alias("__off"),
-        )
+    # order_col this function already raises on).
+    offsets = counts.select(
+        *[F.col(c).alias(f"__p_{c}") for c in part_cols],
+        F.col("__bkt").alias("__obkt"),
+        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).cast("long").alias("__off"),
     )
     cond = F.col("__bkt") == F.col("__obkt")
     for c in part_cols:
@@ -229,12 +226,10 @@ def bucketed_ntile(
     )
     # null-safe on part_cols for the same reason as bucketed_row_number's
     # offset join: a null stratum is a real ntile partition, not a drop
-    ns = F.broadcast(
+    ns = (
         df.groupBy(*part_cols)
         .agg(F.count(F.lit(1)).alias("__N"))
-        .select(
-            *[F.col(c).alias(f"__q_{c}") for c in part_cols], "__N"
-        )
+        .select(*[F.col(c).alias(f"__q_{c}") for c in part_cols], "__N")
     )
     cond = F.lit(True)
     for c in part_cols:

@@ -104,11 +104,11 @@ def build_gold_table(
     ``01_youbike_analysis:L64-L72,L278,L1115-L1118`` + Rain_Cat from
     ``05_multistation_lstm:L94``):
 
-    status ⋈ broadcast(info) ⋈ hour-bucketed weather, then derived columns:
+    status ⋈ info ⋈ hour-bucketed weather, then derived columns:
     ``filling_rate`` (zero-guarded), ``hour``, ``is_weekday``, ``is_peak``,
     ``rain_cat``, ``filling_rate_lag1`` (the R²-lifting lag feature).
     """
-    merged = status.join(F.broadcast(info), on="station_no", how="left")
+    merged = status.join(info, on="station_no", how="left")
     merged = hour_bucket_join(
         merged, weather, fact_ts="record_time", hourly_ts="record_time", how="left"
     )

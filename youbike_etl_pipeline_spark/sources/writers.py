@@ -195,7 +195,7 @@ def upsert_insert_if_absent(
     batch = incoming.dropDuplicates(keys)
     if existing_keys is None:
         return batch
-    return batch.join(F.broadcast(existing_keys.select(*keys)), on=keys, how="left_anti")
+    return batch.join(existing_keys.select(*keys), on=keys, how="left_anti")
 
 
 def write_jdbc(

@@ -195,7 +195,7 @@ def tukey_hsd_pairs(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     b = s.select(
         F.col(group_col).alias("group_j"), F.col("n").alias("n_j"), (_mean(F.col("n"), F.col("sx"))).alias("mean_j")
     )
-    pairs = a.crossJoin(b).filter(F.col("group_i") < F.col("group_j")).crossJoin(F.broadcast(msw_row))
+    pairs = a.crossJoin(b).filter(F.col("group_i") < F.col("group_j")).crossJoin(msw_row)
     return pairs.select(
         "group_i",
         "group_j",
@@ -391,7 +391,7 @@ def mann_whitney_u(
     cum, offsets = _bucketed_prefix_sums(per_value, ["cb"], False)
     t = F.col("ca") + F.col("cb")
     dec = lambda c: F.sum(c.cast("decimal(38,0)")).cast("long")  # noqa: E731
-    stats = cum.join(F.broadcast(offsets), "__b").agg(
+    stats = cum.join(offsets, "__b").agg(
         dec(F.col("ca")).alias("n_a"),
         dec(F.col("cb")).alias("n_b"),
         dec(
@@ -446,7 +446,7 @@ def kruskal_wallis(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("c"))
     per_value = per_vg.groupBy("v").agg(F.sum("c").alias("t"))
     cum, offsets = _bucketed_prefix_sums(per_value, ["t"], False)
-    ranked_values = cum.join(F.broadcast(offsets), "__b").select(
+    ranked_values = cum.join(offsets, "__b").select(
         "v",
         (
             2 * (F.col("off_t") + F.col("cum_t")) + F.col("t") + 1
@@ -585,7 +585,7 @@ def kendall_tau_b(
     ).cast("double")
     tau = (F.col("conc") - F.col("disc")) / F.sqrt(denom)
     return (
-        s.crossJoin(F.broadcast(n_units))
+        s.crossJoin(n_units)
         .filter(
             ((F.col("n0") - F.col("tie_x")) > 0)
             & ((F.col("n0") - F.col("tie_y")) > 0)
