@@ -10,9 +10,8 @@ driver-side result transfer, so the number is engine time, not collect time.
 The first query's time includes JVM/codegen warmup; a warmup pass runs first
 so per-query numbers are steady-state.
 
-Round-over-round comparability: single-shot timings on this host sit in a
-±35% noise band (BENCH_HISTORY.jsonl r2/r3 showed 36.8 vs 44.5 vs 49.2 s for
-identical code), so each query runs SPARK_GRAFT_REPEATS times (default 3)
+Run-to-run comparability: single-shot timings sit in a ±35% noise band
+(three runs of identical code measured 36.8 vs 44.5 vs 49.2 s), so each query runs SPARK_GRAFT_REPEATS times (default 3)
 in-process and the headline per-query number is the MEDIAN; the min of each
 query is also reported under "queries_min" for best-case comparison. The
 "queries"/"value" keys keep their historical meaning (one number per query /

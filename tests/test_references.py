@@ -18,15 +18,17 @@ Definitions left unreached on purpose are listed in ``ALLOWED`` by reason;
 an entry that something does reach, or that no longer exists, fails too.
 
 The same holds one level down: each SQL fragment the corpus oracles share
-has one owner in ``plans/corpus.py``, a twin query whose answer is its
-exact twin's grades against that twin's own oracle, no six-line run of
-``plans/corpus.py`` is written twice, and no file imports a name it never
-uses (no linter is installed to catch those).
+has one owner in ``plans/corpus.py``, each wire format the operators read
+or write has one owner module, a twin query whose answer is its exact
+twin's grades against that twin's own oracle, no six-line run of package
+code is written twice, and no file imports a name it never uses (no linter
+is installed to catch those).
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -249,6 +251,49 @@ def test_each_oracle_fragment_has_one_owner(needle, owner):
 
 
 @pytest.mark.parametrize(
+    "marker,owner",
+    [
+        pytest.param(
+            r"(?<!de)compressobj\(", "operators/warc.py:gzip_member", id="gzip-writer"
+        ),
+        pytest.param(r"wbits=47", "operators/warc.py:_gunzip_members", id="gzip-walker"),
+        pytest.param(r"WARC-Record-ID", "operators/warc.py:warc_record", id="warc-id"),
+        pytest.param(r'b"WARC/1\.0"', "operators/warc.py:warc_record", id="warc-version"),
+        pytest.param(r'b"RIFF"', "operators/riff.py", id="riff-tag"),
+        pytest.param(
+            r'unpack_from\("<I", \w+, (pos \+ )?4\)',
+            "operators/riff.py:riff_chunks",
+            id="riff-size",
+        ),
+    ],
+)
+def test_each_wire_format_has_one_owner(marker, owner):
+    """Each container format the operators read or write is spelled out
+    once: gzip members are written by ``warc.gzip_member`` and walked by
+    ``warc._gunzip_members``, WARC records are written by
+    ``warc.warc_record``, and RIFF chunks (WAV, AVI, WebP) are written,
+    sniffed and walked only in ``operators/riff.py``. ``owner`` is a
+    package-relative ``path`` or ``path:function``; the marker (a regular
+    expression) must appear inside it and nowhere else in the package."""
+    path, _, func = owner.partition(":")
+    text = (PKG / path).read_text()
+    span = (1, len(text.splitlines()))
+    if func:
+        node = next(n for n in _top_level(ast.parse(text)) if n.name == func)
+        span = (node.lineno, node.end_lineno)
+    hits = [
+        (f.relative_to(PKG).as_posix(), i)
+        for f in _py_files(PKG)
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if re.search(marker, line)
+    ]
+    inside = [h for h in hits if h[0] == path and span[0] <= h[1] <= span[1]]
+    assert inside, f"{marker!r} is not in {owner}"
+    outside = sorted(set(hits) - set(inside))
+    assert not outside, f"{marker!r} outside {owner}: {outside}"
+
+
+@pytest.mark.parametrize(
     "twin,exact",
     [
         ("j14_bucketed_asof_join", "j7_asof_join"),
@@ -273,54 +318,67 @@ def test_twin_queries_share_their_exact_twins_oracle(twin, exact):
     assert CORPUS[twin].oracle is CORPUS[exact].oracle
 
 
-#: Lines of a window: every line of ``plans/corpus.py`` except blank
-#: lines, comments and lines of brackets and punctuation alone, stripped.
+#: Lines of a window: every line of a package module except blank lines,
+#: comments and lines of brackets and punctuation alone, stripped.
 WINDOW = 6
 
-#: Repeated windows ``plans/corpus.py`` keeps on purpose, keyed by the
-#: window's lines joined with newlines, with the reason each stays.
-REPEATS_ALLOWED: dict[str, str] = {}
+#: Repeated windows the package keeps on purpose, keyed by the window's
+#: lines joined with newlines, with the reason each stays.
+REPEATS_ALLOWED: dict[str, str] = {
+    "left: DataFrame,\nright: DataFrame,\non: str,\nleft_ts: str,\nright_ts: str,\n"
+    "right_values: list[str],": (
+        "joins.py: the parameter list of the as-of join; asof_join and "
+        "asof_join_forward are its two public directions and _asof_union "
+        "takes the same arguments, so the signature is the shared contract, "
+        "not a copied body"
+    ),
+}
 
 
-def repeated_windows(text: str) -> dict[str, list[int]]:
-    """Every run of ``WINDOW`` consecutive significant lines (stripped;
-    blank, ``#`` comment and punctuation-only lines skipped) that occurs
-    more than once in ``text``, with the line numbers where its second
-    and later copies start."""
-    kept = [
-        (i, line.strip())
-        for i, line in enumerate(text.splitlines(), 1)
-        if line.strip()
-        and not line.strip().startswith("#")
-        and any(c.isalnum() or c == "_" for c in line)
-    ]
+def repeated_windows(files: "dict[str, str]") -> dict[str, list[str]]:
+    """Every run of ``WINDOW`` consecutive significant lines of one file
+    (stripped; blank, ``#`` comment and punctuation-only lines skipped)
+    that occurs more than once across ``files`` (name → text), with the
+    ``name:line`` where its second and later copies start."""
     seen: set[str] = set()
-    repeats: dict[str, list[int]] = defaultdict(list)
-    for k in range(len(kept) - WINDOW + 1):
-        key = "\n".join(t for _, t in kept[k : k + WINDOW])
-        if key in seen:
-            repeats[key].append(kept[k][0])
-        seen.add(key)
+    repeats: dict[str, list[str]] = defaultdict(list)
+    for name, text in files.items():
+        kept = [
+            (i, line.strip())
+            for i, line in enumerate(text.splitlines(), 1)
+            if line.strip()
+            and not line.strip().startswith("#")
+            and any(c.isalnum() or c == "_" for c in line)
+        ]
+        for k in range(len(kept) - WINDOW + 1):
+            key = "\n".join(t for _, t in kept[k : k + WINDOW])
+            if key in seen:
+                repeats[key].append(f"{name}:{kept[k][0]}")
+            seen.add(key)
     return dict(repeats)
 
 
-def test_no_six_line_window_of_the_corpus_is_written_twice():
-    """A second copy of a query's frame, CTE chain or oracle tail is one
-    more place a change has to reach: twins call one builder instead."""
-    text = (PKG / "plans" / "corpus.py").read_text()
-    repeats = repeated_windows(text)
-    stray = {k: v for k, v in repeats.items() if k not in REPEATS_ALLOWED}
-    assert not stray, "\n\n".join(
-        f"corpus.py lines {v} repeat:\n{k}" for k, v in stray.items()
+def test_no_six_line_window_of_the_package_is_written_twice():
+    """A second copy of a query's frame, a CTE chain, an oracle tail, a
+    codec's walk or a signature is one more place a change has to reach:
+    twins call one builder instead, in one module or across modules."""
+    repeats = repeated_windows(
+        {f.relative_to(PKG).as_posix(): f.read_text() for f in _py_files(PKG)}
     )
+    stray = {k: v for k, v in repeats.items() if k not in REPEATS_ALLOWED}
+    assert not stray, "\n\n".join(f"{v} repeat:\n{k}" for k, v in stray.items())
     stale = set(REPEATS_ALLOWED) - set(repeats)
-    assert not stale, f"allowed repeats no longer in corpus.py: {sorted(stale)}"
+    assert not stale, f"allowed repeats no longer in the package: {sorted(stale)}"
 
 
 def test_the_window_scan_skips_what_carries_no_code():
     block = "a = 1\nb = 2\nc = 3\nd = 4\ne = 5\nf = 6\n"
     text = block + "# note\n\n)\n" + block + "x = 0\n" + block.replace("c = 3", "c = 4")
-    assert repeated_windows(text) == {block.strip(): [10]}
+    assert repeated_windows({"m.py": text}) == {block.strip(): ["m.py:10"]}
+    # a window a second module repeats counts once per copy
+    assert repeated_windows({"m.py": block, "n.py": "y = 0\n" + block}) == {
+        block.strip(): ["n.py:2"]
+    }
 
 
 #: Where an import nothing uses is dead weight: the package, the tools,

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from youbike_etl_pipeline_spark.functions.scalar import to_utc_from_tz
 from youbike_etl_pipeline_spark.sources.http import snapshot_to_df
-from youbike_etl_pipeline_spark.sources.writers import append_dedup, upsert_insert_if_absent
+from youbike_etl_pipeline_spark.sources.writers import append_dedup
 
 FULL_RECORD = {
     "sno": "500101001",
@@ -66,7 +66,7 @@ def test_append_dedup_idempotent(spark):
 def test_upsert_insert_if_absent(spark):
     incoming = spark.createDataFrame([("s1", "x"), ("s2", "y"), ("s2", "y2")], "station_no string, name string")
     existing = spark.createDataFrame([("s1",)], "station_no string")
-    new = upsert_insert_if_absent(incoming, existing, ["station_no"])
+    new = append_dedup(incoming, existing, ["station_no"])
     rows = new.collect()
     assert len(rows) == 1 and rows[0]["station_no"] == "s2"
 

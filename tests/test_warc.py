@@ -5,6 +5,8 @@ and corruption behavior."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -272,15 +274,19 @@ def test_round8_review_gzip_bomb_and_folded_headers():
     must extend the previous field instead of raising."""
     import zlib
 
+    from youbike_etl_pipeline_spark.operators import warc
     from youbike_etl_pipeline_spark.operators.warc import _gunzip_members
 
     co = zlib.compressobj(9, zlib.DEFLATED, 31)
     bomb = co.compress(b"\x00" * 50_000_000) + co.flush()
     assert len(bomb) < 100_000  # ~1000:1
-    with pytest.raises(ValueError, match="expands past"):
-        _gunzip_members(bomb, max_bytes=10_000_000)
-    # under the cap it still decompresses fully
-    assert len(_gunzip_members(bomb, max_bytes=60_000_000)) == 50_000_000
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(warc, "_MAX_ARCHIVE_BYTES", 10_000_000)
+        with pytest.raises(ValueError, match="expands past"):
+            _gunzip_members(bomb)
+        # under the cap it still decompresses fully
+        mp.setattr(warc, "_MAX_ARCHIVE_BYTES", 60_000_000)
+        assert len(_gunzip_members(bomb)[0]) == 50_000_000
 
     body = b"folded-target body"
     rec = (
@@ -998,14 +1004,13 @@ def test_round10_warc_record_spans_both_layouts():
     from youbike_etl_pipeline_spark.operators.warc import (
         encode_warc,
         parse_warc,
-        warc_record_spans,
+        walk_warc,
     )
 
     docs = [(1, b"alpha body"), (2, b"beta body two")]
     for gzipped in (True, False):
         raw = encode_warc(docs, per_record_gzip=gzipped)
-        records = parse_warc(raw)
-        spans = warc_record_spans(raw)
+        records, spans = walk_warc(raw)
         assert len(spans) == len(records) == 5  # warcinfo + 2x(req+resp)
         assert spans[0][0] == 0
         for (off, ln), rec in zip(spans, records):
@@ -1025,14 +1030,87 @@ def test_round10_warc_record_spans_corruption_typed():
 
     from youbike_etl_pipeline_spark.operators.warc import (
         encode_warc,
-        warc_record_spans,
+        walk_warc,
     )
 
     raw = encode_warc([(1, b"x")], per_record_gzip=False)
     with pytest.raises(ValueError, match="truncated"):
-        warc_record_spans(raw[: len(raw) // 2])
+        walk_warc(raw[: len(raw) // 2])
     gz = encode_warc([(1, b"x")], per_record_gzip=True)
     with pytest.raises(ValueError, match="corrupt|truncated"):
-        warc_record_spans(gz[: len(gz) // 2])
+        walk_warc(gz[: len(gz) // 2])
     with pytest.raises(ValueError, match="empty WARC archive"):
-        warc_record_spans(b"")
+        walk_warc(b"")
+
+
+def test_warc_records_and_spans_reject_the_same_inputs(monkeypatch):
+    """Records and spans come from one walk (``walk_warc``), so they fail on
+    the same archives — including gzip members that hold no WARC record and
+    a member that inflates past the archive cap, both of which the old
+    span walker accepted."""
+    from youbike_etl_pipeline_spark.operators import warc
+
+    rec = encode_warc([(1, b"x")], per_record_gzip=False)
+    monkeypatch.setattr(warc, "_MAX_ARCHIVE_BYTES", 1_000_000)
+    bad = {
+        "not a WARC record": warc.gzip_member(b"not a warc\r\n\r\n"),
+        "expands past": warc.gzip_member(b"\x00" * 2_000_000),
+        "malformed WARC header": rec.replace(b"WARC-Type: warcinfo", b"WARC-Type warcinfo"),
+        # the warcinfo block is 38 bytes; one fewer misses the separator
+        "separator missing": rec.replace(b"Content-Length: 38", b"Content-Length: 37", 1),
+    }
+    for match, payload in bad.items():
+        with pytest.raises(ValueError, match=match):
+            warc.walk_warc(payload)
+        with pytest.raises(ValueError, match=match):
+            parse_warc(payload)
+
+
+def test_cdx_row_inflates_each_archive_once(monkeypatch):
+    """mm39 takes its records and spans from one walk: one inflate of the
+    archive, plus the audited re-parse of the sliced span. An archive whose
+    gzip members do not hold one record each still gives the mismatch row."""
+    from youbike_etl_pipeline_spark.operators import warc
+    from youbike_etl_pipeline_spark.operators.multimodal import _cdx_row
+
+    raw = encode_warc([(3, b"page body")], per_record_gzip=True)
+    _, spans = warc.walk_warc(raw)  # warcinfo, request, response
+    calls = []
+    inflate = warc._gunzip_members
+
+    def counted(payload):
+        calls.append(len(payload))
+        return inflate(payload)
+
+    monkeypatch.setattr(warc, "_gunzip_members", counted)
+    [(did, surt, digest, mime, ok)] = _cdx_row(3, raw)
+    assert (did, surt, mime, ok) == (3, "com,example)/doc/3", "text/plain", True)
+    assert digest == hashlib.md5(b"page body").hexdigest()
+    assert calls == [len(raw), spans[2][1]]
+    calls.clear()
+    # plain archives inflate nothing
+    assert _cdx_row(3, encode_warc([(3, b"page body")], per_record_gzip=False))[0][4]
+    assert calls == []
+    # one member holding all three records: spans and records do not align
+    merged = warc.gzip_member(encode_warc([(3, b"page body")], per_record_gzip=False))
+    assert _cdx_row(3, merged) == [(3, None, None, None, False)]
+    assert calls == [len(merged)]
+
+
+def test_gzip_members_larger_than_one_feed_walk_whole():
+    """The member walk hands the inflater bounded pieces (so the leftover
+    copy at each member end stays small); a member spanning several pieces
+    still inflates whole, its span ends exactly at the next member, and a
+    cut inside it is a truncation."""
+    from youbike_etl_pipeline_spark.operators import warc
+
+    big = np.random.default_rng(0).integers(0, 256, 3 * warc._MEMBER_FEED, np.uint8).tobytes()
+    raw = encode_warc([(1, big), (2, b"small")], per_record_gzip=True)
+    records, spans = warc.walk_warc(raw)
+    assert http_response_body(records[2])[1] == big
+    assert max(ln for _, ln in spans) > 2 * warc._MEMBER_FEED
+    for (off, ln), rec in zip(spans, records):
+        assert parse_warc(raw[off : off + ln]) == [rec]
+    off, ln = spans[2]
+    with pytest.raises(ValueError, match="truncated WARC gzip member"):
+        warc.walk_warc(raw[: off + ln - 10])

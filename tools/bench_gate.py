@@ -1,5 +1,5 @@
-"""Bench regression gate (round-6 verdict item 6): turns the per-round
-"zero regressions" claim from a verdict observation into a build invariant.
+"""Bench regression gate: turns a "zero regressions" claim from an
+observation into a build invariant.
 
 Usage:
     python tools/bench_gate.py NEW_BENCH.json [REF_BENCH.json]
@@ -7,8 +7,7 @@ Usage:
 Compares a fresh ``bench.py`` JSON against a reference (default: the last
 line of ``BENCH_HISTORY.jsonl``) and FAILS (exit 1) when any common query
 slows more than ``RATIO`` (1.5x) AND more than ``ABS_SEC`` (0.3 s
-absolute) — the same double threshold the round-5/6 verdicts applied,
-so sub-second jitter on cheap queries never trips the gate. min-of-repeats
+absolute) — a double threshold, so sub-second jitter on cheap queries never trips the gate. min-of-repeats
 is compared against min-of-repeats when both sides carry ``queries_min``
 (single-shot medians sit in a +/-35% noise band on this host — bench.py's
 header documents the measurement); otherwise whatever per-query numbers
@@ -77,7 +76,7 @@ def main() -> None:
     )
     regs = find_regressions(new, ref)
     # count the SAME key sets find_regressions compared (min-vs-min only
-    # when both sides carry it — round-7 review finding)
+    # when both sides carry it)
     if new.get("queries_min") and ref.get("queries_min"):
         common = set(new["queries_min"]) & set(ref["queries_min"])
     else:

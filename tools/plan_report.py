@@ -100,8 +100,8 @@ def unbounded_bnl_joins(df) -> list[str]:
     A BNL against a scalar aggregate, a literal frame, or a small range
     (≤ BOUNDED_SIDE_ROWS) is a fine plan — it attaches a global statistic
     or fans out a constant replicate/fold frame, O(n·C). A BNL whose both
-    sides scale with the data is O(n·m) predicate evaluations; round 5's
-    f20 had exactly that (the join condition mixed both sides' columns so
+    sides scale with the data is O(n·m) predicate evaluations; f20 once
+    had exactly that (the join condition mixed both sides' columns so
     Catalyst could not extract equi-keys) and it never finished at the
     100× probe. This walks the physical plan so the class FAILS the plan
     audit instead of waiting for a probe. Quadratic-by-semantics pair

@@ -19,7 +19,7 @@ def floor_quantize6(c: Column) -> Column:
     ROUND scale, and half-rule behavior is an engine/version detail; FLOOR
     is deterministic everywhere. The single shared definition — corpus.q6,
     dedup, and similarity all import this so Spark/DuckDB hash parity can't
-    drift between copies (round-5 advice). SQL mirror: ``corpus.SQL_Q6``.
+    drift between copies. SQL mirror: ``corpus.SQL_Q6``.
     """
     return F.floor(c * F.lit(1000000.0)).cast("double") / F.lit(1000000.0)
 

@@ -1,6 +1,6 @@
 """BPE merge-table TRAINING (the learn-merges loop `bpe_apply` consumes).
 
-Round-11 verdict item: `t33` computes ONE trainer iteration (pair
+`t33` computes ONE trainer iteration (pair
 statistics); this module runs the full Sennrich learn loop — count
 weighted adjacent symbol pairs over the distinct-word vocabulary, take
 the best pair, re-segment every word, repeat — as k chained DataFrame

@@ -248,7 +248,7 @@ def shingle_index(df: DataFrame, widen: bool = True) -> DataFrame:
     per-row work here (regex tokenize, k-gram explode, and the md5 per
     shingle most callers chain on) is the expensive part, and a
     single-row-group parquet input would otherwise run it all on one core
-    (r11 profile: the index-build job was 1.0–1.5 s single-task in every
+    (profiled: the index-build job was 1.0–1.5 s single-task in every
     dedup-family query at sf0.1). No-op when the scan is already wide;
     callers inside foreachBatch (micro-batch inputs) pass ``widen=False``.
     """
@@ -735,7 +735,7 @@ def simhash_pairs(
 #: distributed loop remains the path for graphs that outgrow the driver.
 SMALL_GRAPH_EDGES = 200_000
 
-#: Byte bound for the union-find edge collect (round-11 verdict nit: an
+#: Byte bound for the union-find edge collect (an
 #: edge COUNT alone is width-blind — 200k edges of long string ids can
 #: be far heavier on the driver than 200k int pairs). Estimated as
 #: edges × (payload width + ~120 B of Python tuple/boxing overhead);

@@ -382,7 +382,7 @@ def _write_residual(
         i += n
         if escape_first and p == 0:
             # raw width sized from the data: fixed orders 3-4 can push
-            # residuals past 18 bits (round-7 review finding)
+            # residuals past 18 bits
             raw_bits = max(
                 (1 + (abs(v) - (1 if v < 0 else 0)).bit_length() for v in part),
                 default=1,

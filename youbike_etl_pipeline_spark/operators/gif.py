@@ -123,7 +123,7 @@ def decode_gif(payload: bytes) -> list["np.ndarray"]:
             raise ValueError("truncated GIF global color table")
         pos += 3 * n
     if w * h > (1 << 26):
-        # allocation-bomb guard (round-8 review): the canvas allocates
+        # allocation-bomb guard: the canvas allocates
         # from HEADER fields before any pixel data is validated — a
         # 30-byte file claiming 65535x65535 would otherwise grab ~13 GB
         # on an executor. 64M pixels is far past the thumbnail-fixture
@@ -213,7 +213,7 @@ def decode_gif(payload: bytes) -> list["np.ndarray"]:
             mask = (idx2d == transparent)[:, :, None]
             rgb = np.where(mask, region, rgb)
         canvas[top : top + fh, left : left + fw] = rgb
-        # amplification guard (round-9 advisor): each frame snapshots the
+        # amplification guard: each frame snapshots the
         # FULL canvas, so a canvas near the w*h bound plus many ~20-byte
         # 1x1 frame blocks would allocate ~canvas-size per frame from a
         # few KB of input; bound total decoded pixels, not just the canvas

@@ -1,4 +1,4 @@
-"""GPT-2-EXACT byte-BPE pretokenization (round-11 verdict item 2).
+"""GPT-2-EXACT byte-BPE pretokenization.
 
 The GPT-2 tokenizer splits text into pretokens with one famous regex
 (Radford et al. 2019, `gpt-2/src/encoder.py`):
@@ -39,8 +39,8 @@ Two independent implementations live here:
   run-minus-last-char whitespace rule directly).
 
 Reference parity: the reference repo has no tokenizer (SURVEY.md §2
-ext:text-analysis north star); this closes the round-10 verdict's
-"GPT-2-exact pretokenization" gap.
+ext:text-analysis north star); this is the GPT-2-exact pretokenization
+the byte-level BPE statistics (t55) run.
 
 Scale posture: pretokenization is a per-row JVM regexp inside the
 scan — zero shuffle; downstream

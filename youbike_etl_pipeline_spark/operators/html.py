@@ -130,7 +130,7 @@ def extract_html_text(html: str) -> dict:
     return {"title": title, "text": text, "links": links}
 
 
-# ------------------------------------------- boilerplate removal (r10)
+# ------------------------------------------------- boilerplate removal
 
 _A_FULL_RE = re.compile(r"<a\b[^>]*>(.*?)</a\s*>", re.S | re.I)
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from ..functions.scalar import haversine_m
 from .skew import materialize, quantile_buckets
@@ -141,6 +142,20 @@ def _asof_union(
     return l_tagged.unionByName(r_tagged)
 
 
+def _asof_carry(
+    unioned: DataFrame, w: WindowSpec, left_side: int, lcols: list[str], right_values: list[str]
+) -> DataFrame:
+    """The one-level carry: each right value's last non-null over ``w``,
+    kept on the left rows (``__side == left_side``), unpacked."""
+    carried = unioned.select(
+        "__k",
+        "__side",
+        "__lrow",
+        *[F.last(f"__rv_{c}", ignorenulls=True).over(w).alias(f"__c_{c}") for c in right_values],
+    ).filter(F.col("__side") == left_side)
+    return _asof_unpack(carried, lcols, right_values)
+
+
 def _asof_unpack(carried: DataFrame, lcols: list[str], right_values: list[str]) -> DataFrame:
     """The left row's columns out of ``__lrow``, then each carried
     ``__c_*`` value under its right column's name."""
@@ -195,16 +210,7 @@ def asof_join(
             .orderBy(F.col("__ts").asc(), F.col("__side").asc())
             .rowsBetween(Window.unboundedPreceding, 0)
         )
-        carried = unioned.select(
-            "__k",
-            "__side",
-            "__lrow",
-            *[
-                F.last(f"__rv_{c}", ignorenulls=True).over(w).alias(f"__c_{c}")
-                for c in right_values
-            ],
-        ).filter(F.col("__side") == 1)
-        return _asof_unpack(carried, left.columns, right_values)
+        return _asof_carry(unioned, w, 1, left.columns, right_values)
     # bucketed path: local carry within (key, bucket), then a small
     # (keys × buckets) frame carries each bucket's last right value across
     # bucket boundaries — global carry = coalesce(local, carry-in)
@@ -304,13 +310,7 @@ def asof_join_forward(
         .orderBy(F.col("__ts").desc_nulls_first(), F.col("__side").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    carried = unioned.select(
-        "__k",
-        "__side",
-        "__lrow",
-        *[F.last(f"__rv_{c}", ignorenulls=True).over(w).alias(f"__c_{c}") for c in right_values],
-    ).filter(F.col("__side") == 0)
-    return _asof_unpack(carried, left.columns, right_values)
+    return _asof_carry(unioned, w, 0, left.columns, right_values)
 
 
 def range_band_join(

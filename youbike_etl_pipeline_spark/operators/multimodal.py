@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .riff import riff_chunk, riff_chunks, riff_file, riff_form, riff_list
+
 #: metadata carried alongside every media payload
 MEDIA_META = T.StructType(
     [
@@ -1666,7 +1668,7 @@ def decode_image(payload: bytes, fmt: str | None = None) -> "np.ndarray":
         return decode_png(payload)
     if payload[:2] == b"\xff\xd8" or fmt in ("jpg", "jpeg"):
         return decode_jpeg(payload)  # unsupported variants raise inside
-    if fmt == "webp" or payload[:4] == b"RIFF":
+    if fmt == "webp" or riff_form(payload) is not None:
         from .vp8l import decode_webp
 
         # lossless VP8L decodes for real; lossy VP8/VP8X raises inside
@@ -2045,11 +2047,9 @@ def sample_frames(df: DataFrame) -> DataFrame:
 
 
 def _riff_wave(fmt: bytes, data: bytes) -> bytes:
-    """RIFF/WAVE file from a complete ``fmt `` chunk and the sample bytes."""
-    return (
-        b"RIFF" + struct.pack("<I", 4 + len(fmt) + 8 + len(data)) + b"WAVE"
-        + fmt + b"data" + struct.pack("<I", len(data)) + data
-    )
+    """RIFF/WAVE file from a ``fmt `` chunk body (a WAVEFORMATEX) and the
+    sample bytes."""
+    return riff_file(b"WAVE", riff_chunk(b"fmt ", fmt), riff_chunk(b"data", data))
 
 
 def encode_wav(samples: "np.ndarray", rate: int = 16000) -> bytes:
@@ -2060,9 +2060,7 @@ def encode_wav(samples: "np.ndarray", rate: int = 16000) -> bytes:
     encoder's (fixture stability)."""
     samples = np.asarray(samples)
     ch = 1 if samples.ndim == 1 else samples.shape[1]
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, ch, rate, rate * 2 * ch, 2 * ch, 16
-    )
+    fmt = struct.pack("<HHIIHH", 1, ch, rate, rate * 2 * ch, 2 * ch, 16)
     return _riff_wave(fmt, samples.astype("<i2").tobytes())
 
 
@@ -2087,7 +2085,7 @@ def encode_wav_float(
         ) + struct.pack("<H", 3) + b"\x00\x00" + _WAVE_EXT_GUID_TAIL
     else:
         fmt_body = struct.pack("<HHIIHH", 3, 1, rate, rate * block, block, bits)
-    return _riff_wave(b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body, data)
+    return _riff_wave(fmt_body, data)
 
 
 def _g711_luts() -> tuple["np.ndarray", "np.ndarray"]:
@@ -2236,14 +2234,11 @@ def decode_wav(payload: bytes) -> tuple[int, "np.ndarray"]:
     (MP3 inside WAV etc.) and non-KSDATAFORMAT GUIDs raise
     ``NotImplementedError`` (codec-gated, same contract as compressed
     images)."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    if riff_form(payload) != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
-    pos, rate, bits, channels, data, audio_fmt = 12, None, None, None, None, None
+    rate, bits, channels, data, audio_fmt = None, None, None, None, None
     block_align, fmt_body = None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = struct.unpack_from("<I", payload, pos + 4)[0]
-        body = payload[pos + 8 : pos + 8 + size]
+    for cid, body in riff_chunks(payload):
         if cid == b"fmt ":
             if len(body) < 16:  # WAVEFORMATEX core; shorter is malformed
                 raise ValueError("truncated WAV fmt chunk")
@@ -2253,7 +2248,6 @@ def decode_wav(payload: bytes) -> tuple[int, "np.ndarray"]:
             fmt_body = body
         elif cid == b"data":
             data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
     if audio_fmt == 0xFFFE:  # WAVE_FORMAT_EXTENSIBLE: unwrap the GUID
         # fmt body: 16 base + cbSize(2) + validbits(2) + channelmask(4)
         # + 16-byte SubFormat GUID = 40 bytes minimum
@@ -2369,7 +2363,7 @@ def attach_g711_payloads(df: DataFrame) -> DataFrame:
 
     def row(did: int) -> "list[tuple]":
         code = 7 if did % 10 == 0 else 6
-        fmt = b"fmt " + struct.pack("<IHHIIHH", 16, code, 1, 8000, 8000, 1, 8)
+        fmt = struct.pack("<HHIIHH", code, 1, 8000, 8000, 1, 8)
         meta = _media_meta("audio", "ulaw" if code == 7 else "alaw", duration_ms=ms)
         return [(did, _riff_wave(fmt, _md5_bytes(did, AUDIO_SAMPLES)), meta)]
 
@@ -2382,9 +2376,7 @@ def attach_adpcm_payloads(df: DataFrame) -> DataFrame:
     starting step size is exercised across the corpus) and whose nibble
     data is the md5 byte stream — 2·IMA_ADPCM_BYTES + 1 samples per row. The
     mm12 oracle replays the exact prediction recursion in SQL."""
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 0x11, 1, 8000, 8000 // 2, IMA_ADPCM_BYTES + 4, 4
-    )
+    fmt = struct.pack("<HHIIHH", 0x11, 1, 8000, 8000 // 2, IMA_ADPCM_BYTES + 4, 4)
     meta = _media_meta(
         "audio", "ima-adpcm", duration_ms=(2 * IMA_ADPCM_BYTES + 1) * 1000 // 8000
     )
@@ -2403,9 +2395,7 @@ def attach_msadpcm_payloads(df: DataFrame) -> DataFrame:
     derived from the id, with the md5 byte stream as the nibble data —
     ``2·MS_ADPCM_BYTES + 2`` samples per row. The mm19 oracle replays the
     exact prediction/adaptation recursion in SQL."""
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 0x02, 1, 8000, 8000 // 2, MS_ADPCM_BYTES + 7, 4
-    )
+    fmt = struct.pack("<HHIIHH", 0x02, 1, 8000, 8000 // 2, MS_ADPCM_BYTES + 7, 4)
     meta = _media_meta(
         "audio", "ms-adpcm", duration_ms=(2 * MS_ADPCM_BYTES + 2) * 1000 // 8000
     )
@@ -2453,15 +2443,20 @@ def attach_stereo_wav_payloads(df: DataFrame) -> DataFrame:
     return _map_rows(df, ["doc_id"], _PAYLOAD_SCHEMA, row, widen="stereo_wav")
 
 
+#: The audio feature block :func:`_pcm_stats` computes, as schema fields
+_PCM_FIELDS = [
+    T.StructField("n_samples", T.LongType(), True),
+    T.StructField("peak", T.LongType(), True),
+    T.StructField("zero_crossings", T.LongType(), True),
+    T.StructField("rms", T.DoubleType(), True),
+]
+
 #: Per-channel feature schema for multichannel audio
 AUDIO_CHANNEL_FEATURES = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("channel", T.IntegerType(), False),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("peak", T.LongType(), True),
-        T.StructField("zero_crossings", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
+        *_PCM_FIELDS,
     ]
 )
 
@@ -2524,10 +2519,7 @@ AUDIO_FEATURES = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("peak", T.LongType(), True),
-        T.StructField("zero_crossings", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
+        *_PCM_FIELDS,
     ]
 )
 
@@ -2717,12 +2709,6 @@ def encode_avi_mjpeg(
     :func:`decode_avi_audio`; audio=None output is byte-identical to the
     video-only encoder (mm15 fixture stability)."""
 
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return tag + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(tag: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", tag + body)
-
     n_streams = 2 if audio is not None else 1
     avih = struct.pack(
         "<14I", 1_000_000 // 10, 0, 0, 0x10, len(frames), 0, n_streams, 0,
@@ -2736,7 +2722,7 @@ def encode_avi_mjpeg(
         "<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
         width * height * 3, 0, 0, 0, 0,
     )
-    strls = lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf))
+    strls = riff_list(b"strl", riff_chunk(b"strh", strh), riff_chunk(b"strf", strf))
     if audio is not None:
         samples = np.asarray(audio).astype("<i2")
         a_strh = (
@@ -2747,21 +2733,25 @@ def encode_avi_mjpeg(
         a_strf = struct.pack(
             "<HHIIHH", 1, 1, audio_rate, audio_rate * 2, 2, 16
         )
-        strls += lst(b"strl", chunk(b"strh", a_strh) + chunk(b"strf", a_strf))
+        strls += riff_list(b"strl", riff_chunk(b"strh", a_strh), riff_chunk(b"strf", a_strf))
         # split samples into per-frame slices (remainder rides the last)
         per = max(1, len(samples) // max(1, len(frames)))
         movi_body = b""
         for i, f in enumerate(frames):
-            movi_body += chunk(b"00dc", f)
+            movi_body += riff_chunk(b"00dc", f)
             lo = i * per
             hi = len(samples) if i == len(frames) - 1 else (i + 1) * per
             if lo < len(samples):
-                movi_body += chunk(b"01wb", samples[lo:hi].tobytes())
-        movi = lst(b"movi", movi_body)
+                movi_body += riff_chunk(b"01wb", samples[lo:hi].tobytes())
+        movi = riff_list(b"movi", movi_body)
     else:
-        movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    hdrl = lst(b"hdrl", chunk(b"avih", avih) + strls)
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
+        movi = riff_list(b"movi", b"".join(riff_chunk(b"00dc", f) for f in frames))
+    hdrl = riff_list(b"hdrl", riff_chunk(b"avih", avih), strls)
+    return riff_file(b"AVI ", hdrl, movi)
+
+
+#: AVI list types whose chunks the demuxers read
+_AVI_LISTS = (b"movi", b"hdrl", b"strl", b"rec ")
 
 
 def decode_avi_mjpeg(payload: bytes) -> list["np.ndarray"]:
@@ -2771,36 +2761,17 @@ def decode_avi_mjpeg(payload: bytes) -> list["np.ndarray"]:
     no codec library (any JPEG coding this decoder supports works as the
     frame codec, baseline through lossless). Other AVI stream codecs
     raise ``NotImplementedError``; malformed containers ``ValueError``."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+    if riff_form(payload) != b"AVI ":
         raise ValueError("not an AVI payload")
     frames: list[np.ndarray] = []
-
-    def walk(data: bytes, pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            tag = data[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", data, pos + 4)
-            body_start = pos + 8
-            body_end = body_start + size
-            if body_end > end:
-                raise ValueError("truncated AVI chunk")
-            if tag == b"LIST":
-                ltype = data[body_start : body_start + 4]
-                if ltype in (b"movi", b"hdrl", b"strl", b"rec "):
-                    walk(data, body_start + 4, body_end)
-            elif tag[2:4] in (b"dc", b"db") and size:
-                frame = data[body_start:body_end]
-                if frame[:2] != b"\xff\xd8":
-                    raise NotImplementedError(
-                        "AVI video chunk is not JPEG-coded — only MJPEG "
-                        "streams decode without a codec library"
-                    )
-                frames.append(decode_jpeg(frame))
-            pos = body_end + (size & 1)  # RIFF word alignment
-
-    # a truncated file may DECLARE more bytes than it carries — clamp the
-    # walk to the actual buffer so the chunk checks raise ValueError
-    (declared,) = struct.unpack_from("<I", payload, 4)
-    walk(payload, 12, min(8 + declared, len(payload)))
+    for tag, frame in riff_chunks(payload, _AVI_LISTS):
+        if tag != b"LIST" and tag[2:4] in (b"dc", b"db") and frame:
+            if frame[:2] != b"\xff\xd8":
+                raise NotImplementedError(
+                    "AVI video chunk is not JPEG-coded — only MJPEG "
+                    "streams decode without a codec library"
+                )
+            frames.append(decode_jpeg(frame))
     if not frames:
         raise ValueError("AVI contains no decodable video chunks")
     return frames
@@ -2816,64 +2787,32 @@ def decode_avi_audio(payload: bytes) -> tuple[int, "np.ndarray"]:
     coding (PCM 8/16/24, float, G.711, mono ADPCM, extensible headers)
     demuxes from AVI for free. Raises ``ValueError`` when the container
     carries no audio stream."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+    if riff_form(payload) != b"AVI ":
         raise ValueError("not an AVI payload")
     stream_idx = -1
     audio_idx: int | None = None
+    in_audio_strl = False
     strf: bytes | None = None
     chunks: list[bytes] = []
-
-    def walk(data: bytes, pos: int, end: int) -> None:
-        nonlocal stream_idx, audio_idx, strf
-        in_audio_strl = False
-        while pos + 8 <= end:
-            tag = data[pos : pos + 4]
-            (size,) = struct.unpack_from("<I", data, pos + 4)
-            body_start = pos + 8
-            body_end = body_start + size
-            if body_end > end:
-                raise ValueError("truncated AVI chunk")
-            if tag == b"LIST":
-                ltype = data[body_start : body_start + 4]
-                if ltype in (b"movi", b"hdrl", b"strl", b"rec "):
-                    if ltype == b"strl":
-                        stream_idx += 1
-                    walk(data, body_start + 4, body_end)
-            elif tag == b"strh" and size >= 4:
-                if data[body_start : body_start + 4] == b"auds":
-                    in_audio_strl = True
-                    if audio_idx is None:
-                        audio_idx = stream_idx
-            elif tag == b"strf" and in_audio_strl and strf is None:
-                strf = data[body_start:body_end]
+    for tag, body in riff_chunks(payload, _AVI_LISTS):
+        if tag == b"LIST":
+            if body == b"strl":
+                stream_idx += 1
                 in_audio_strl = False
-            elif (
-                audio_idx is not None
-                and tag == b"%02dwb" % audio_idx
-                and size
-            ):
-                chunks.append(data[body_start:body_end])
-            pos = body_end + (size & 1)
-
-    (declared,) = struct.unpack_from("<I", payload, 4)
-    walk(payload, 12, min(8 + declared, len(payload)))
+        elif tag == b"strh" and body[:4] == b"auds":
+            in_audio_strl = True
+            if audio_idx is None:
+                audio_idx = stream_idx
+        elif tag == b"strf" and in_audio_strl and strf is None:
+            strf = body
+            in_audio_strl = False
+        elif audio_idx is not None and tag == b"%02dwb" % audio_idx and body:
+            chunks.append(body)
     if audio_idx is None or strf is None:
         raise ValueError("AVI contains no audio stream")
     if not chunks:
         raise ValueError("AVI audio stream has no data chunks")
-    data = b"".join(chunks)
-    wav = (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(strf) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(strf))
-        + strf
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-    return decode_wav(wav)
+    return decode_wav(_riff_wave(strf, b"".join(chunks)))
 
 
 #: (doc_id, n_frames, audio features) — container-demux reduction
@@ -2881,10 +2820,7 @@ AV_FEATURES = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
         T.StructField("n_frames", T.LongType(), True),
-        T.StructField("n_samples", T.LongType(), True),
-        T.StructField("peak", T.LongType(), True),
-        T.StructField("zero_crossings", T.LongType(), True),
-        T.StructField("rms", T.DoubleType(), True),
+        *_PCM_FIELDS,
     ]
 )
 
@@ -3215,21 +3151,10 @@ CDX_FEATURES = T.StructType(
 )
 
 
-def cdx_index_features(df: DataFrame) -> DataFrame:
-    """Build the CDX index row for each archive's response record — the
-    Common Crawl artifact that makes a 100 TB archive store
-    RANGE-ADDRESSABLE: SURT key (:func:`..operators.warc.surt_key`, so
-    one host's pages sort contiguously), payload digest, mime type, and
-    the record's ``(offset, length)`` span
-    (:func:`..operators.warc.warc_record_spans`). The span is then
-    PROVEN, not just emitted: the operator re-fetches exactly
-    ``payload[offset : offset+length]``, re-parses that slice
-    standalone (a per-record gzip member is a complete archive), and
-    checks the recovered payload digest — ``range_fetch_ok`` is the
-    audited result, and the oracle expects it TRUE. Offsets are not
-    SQL-derivable (they depend on gzip framing), which is exactly why
-    the self-audit rides inside the graded row. One Arrow pass, zero
-    shuffle."""
+def _cdx_row(did: int, raw: bytes | None) -> "list[tuple]":
+    """One :data:`CDX_FEATURES` row per archive (:func:`cdx_index_features`):
+    one :func:`..operators.warc.walk_warc` pass gives the records and
+    their spans, and only the audited range fetch parses again."""
     import hashlib
     import re
 
@@ -3237,45 +3162,62 @@ def cdx_index_features(df: DataFrame) -> DataFrame:
         first_response,
         http_response_body,
         parse_warc,
+        split_http_message,
         surt_key,
+        walk_warc,
         warc_header,
-        warc_record_spans,
     )
 
-    def row(did: int, raw: bytes | None) -> "list[tuple]":
-        if raw is None:
-            return []
-        records = parse_warc(raw)
-        spans = warc_record_spans(raw)
-        if len(spans) != len(records):
-            return [(did, None, None, None, False)]
-        r = first_response(records)
-        if r is None:
-            return [(did, None, None, None, None)]
-        digest = hashlib.md5(http_response_body(r)[1]).hexdigest()
-        # the block's Content-Type is application/http; the indexed mime
-        # is the HTTP message's own media type — matched inside the HTTP
-        # HEADER section only (a body could legally contain the literal
-        # 'content-type:'); with no header/body separator there is no
-        # header section, so the WARC Content-Type stands in rather than
-        # matching body bytes
-        he = r["block"].find(b"\r\n\r\n")
-        head = r["block"][:he] if he >= 0 else b""
-        m = re.search(rb"(?im)^content-type:\s*([^;\r\n]+)", head)
-        mime = m.group(1).decode("latin-1").strip() if m else warc_header(r, "content-type")
-        # audited range fetch: slice → standalone parse → digest
-        off, ln = spans[records.index(r)]
+    if raw is None:
+        return []
+    records, spans = walk_warc(raw)
+    if len(spans) != len(records):
+        return [(did, None, None, None, False)]
+    r = first_response(records)
+    if r is None:
+        return [(did, None, None, None, None)]
+    digest = hashlib.md5(http_response_body(r)[1]).hexdigest()
+    # the block's Content-Type is application/http; the indexed mime
+    # is the HTTP message's own media type — matched inside the HTTP
+    # HEADER section only (a body could legally contain the literal
+    # 'content-type:'); with no header/body separator there is no
+    # header section, so the WARC Content-Type stands in rather than
+    # matching body bytes
+    parts = split_http_message(r["block"])
+    head = parts[0] if parts is not None else b""
+    m = re.search(rb"(?im)^content-type:\s*([^;\r\n]+)", head)
+    mime = m.group(1).decode("latin-1").strip() if m else warc_header(r, "content-type")
+    # audited range fetch: slice → standalone parse → digest
+    off, ln = spans[records.index(r)]
+    ok = False
+    try:
+        sliced = parse_warc(raw[off : off + ln])
+        if len(sliced) == 1:
+            ok = hashlib.md5(http_response_body(sliced[0])[1]).hexdigest() == digest
+    except ValueError:
         ok = False
-        try:
-            sliced = parse_warc(raw[off : off + ln])
-            if len(sliced) == 1:
-                ok = hashlib.md5(http_response_body(sliced[0])[1]).hexdigest() == digest
-        except ValueError:
-            ok = False
-        uri = warc_header(r, "warc-target-uri")
-        return [(did, surt_key(uri), digest, mime, ok)]
+    uri = warc_header(r, "warc-target-uri")
+    return [(did, surt_key(uri), digest, mime, ok)]
 
-    return _map_rows(df, ["doc_id", "payload"], CDX_FEATURES, row)
+
+def cdx_index_features(df: DataFrame) -> DataFrame:
+    """Build the CDX index row for each archive's response record — the
+    Common Crawl artifact that makes a 100 TB archive store
+    RANGE-ADDRESSABLE: SURT key (:func:`..operators.warc.surt_key`, so
+    one host's pages sort contiguously), payload digest, mime type, and
+    the record's ``(offset, length)`` span
+    (:func:`..operators.warc.walk_warc`). The span is then
+    PROVEN, not just emitted: the operator re-fetches exactly
+    ``payload[offset : offset+length]``, re-parses that slice
+    standalone (a per-record gzip member is a complete archive), and
+    checks the recovered payload digest — ``range_fetch_ok`` is the
+    audited result, and the oracle expects it TRUE. Offsets are not
+    SQL-derivable (they depend on gzip framing), which is exactly why
+    the self-audit rides inside the graded row. An archive whose spans
+    do not align 1:1 with its records (gzip members not holding one
+    record each) gives one row of NULLs and ``range_fetch_ok`` FALSE.
+    One Arrow pass, zero shuffle."""
+    return _map_rows(df, ["doc_id", "payload"], CDX_FEATURES, _cdx_row)
 
 
 def attach_crawl_segment_payloads(df: DataFrame) -> DataFrame:
@@ -3340,13 +3282,7 @@ def crawl_admission_features(df: DataFrame) -> DataFrame:
 
     from .html import extract_html_text
     from .robots import robots_decision
-    from .warc import (
-        http_charset,
-        http_response_message,
-        parse_warc,
-        warc_header,
-        warc_type,
-    )
+    from .warc import http_charset, http_response_message, target_responses
 
     def row(did: int, payload: bytes | None) -> "list[tuple]":
         if payload is None:
@@ -3354,10 +3290,7 @@ def crawl_admission_features(df: DataFrame) -> DataFrame:
         robots_txt = None
         page = None
         page_uri = ""
-        for r in parse_warc(payload):
-            if warc_type(r) != "response":
-                continue
-            uri = warc_header(r, "warc-target-uri")
+        for uri, r in target_responses(payload):
             if urlsplit(uri).path == "/robots.txt":
                 _, hdrs, body = http_response_message(r)
                 robots_txt = body.decode(http_charset(hdrs, body))
@@ -3867,9 +3800,7 @@ def attach_sitemap_warc_payloads(df: DataFrame) -> DataFrame:
     (``Content-Encoding: gzip`` — sitemaps.org allows .xml.gz) with an
     entity-escaped query. Archive layout rotates per-record-gzip/plain
     like mm36."""
-    import zlib as _zlib
-
-    from .warc import encode_http_response, encode_warc
+    from .warc import encode_http_response, encode_warc, gzip_member
 
     def sitemap_body(did: int) -> "tuple[bytes, list]":
         v = (did // 10) % 4
@@ -3907,8 +3838,7 @@ def attach_sitemap_warc_payloads(df: DataFrame) -> DataFrame:
             f"<loc>http://example.com/doc/{did}?x=%7E&amp;y=2</loc>"
             "</url></urlset>"
         ).encode()
-        co = _zlib.compressobj(6, _zlib.DEFLATED, 31)
-        return co.compress(xml) + co.flush(), [
+        return gzip_member(xml), [
             ("Content-Type", "application/xml"),
             ("Content-Encoding", "gzip"),
         ]
@@ -3972,21 +3902,17 @@ def sitemap_features(df: DataFrame) -> DataFrame:
         canonicalize_url,
         http_decode_body,
         http_response_message,
-        parse_warc,
-        warc_header,
-        warc_type,
+        target_responses,
     )
 
     def row(did: int, payload: bytes | None) -> "list[tuple]":
         if payload is None:
             return []
         robots_text, sm_body = None, None
-        for r in parse_warc(payload):
-            if warc_type(r) != "response":
-                continue
+        for uri, r in target_responses(payload):
             _, headers, body = http_response_message(r)
             body = http_decode_body(headers, body)
-            if warc_header(r, "warc-target-uri").endswith("/robots.txt"):
+            if uri.endswith("/robots.txt"):
                 robots_text = body.decode("utf-8", "replace")
             else:
                 sm_body = body

@@ -2,7 +2,7 @@
 dedup mechanism Common Crawl and every Heritrix-style crawler use: when
 a fetched payload's digest matches a prior capture, the archive stores
 a small ``revisit`` record REFERENCING the earlier response instead of
-re-storing the body (round-11 verdict item 6).
+re-storing the body.
 
 Writer (:func:`encode_revisit_warc`): emits the
 ``identical-payload-digest`` profile — the revisit record carries
@@ -35,9 +35,17 @@ from __future__ import annotations
 
 import base64
 import hashlib
-import zlib
 
-from .warc import parse_warc, warc_header, warc_type
+from .warc import (
+    WARC_DATE,
+    encode_http_response,
+    parse_warc,
+    split_http_message,
+    warc_file,
+    warc_header,
+    warc_record,
+    warc_type,
+)
 
 __all__ = [
     "REVISIT_PROFILE",
@@ -57,26 +65,6 @@ def payload_digest(body: bytes) -> str:
     return "sha1:" + base64.b32encode(hashlib.sha1(body).digest()).decode()
 
 
-def _record(
-    rtype: str, extra: "dict[str, str]", block: bytes, rid: str, date: str
-) -> bytes:
-    head = [
-        b"WARC/1.0",
-        b"WARC-Type: " + rtype.encode(),
-        b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">",
-        b"WARC-Date: " + date.encode(),
-    ]
-    for k, v in extra.items():
-        head.append(f"{k}: {v}".encode())
-    head.append(b"Content-Length: " + str(len(block)).encode())
-    return b"\r\n".join(head) + b"\r\n\r\n" + block + b"\r\n\r\n"
-
-
-def _gz(member: bytes) -> bytes:
-    co = zlib.compressobj(6, zlib.DEFLATED, 31)
-    return co.compress(member) + co.flush()
-
-
 def _rid(doc_id: int) -> str:
     """Deterministic response-record id, the same scheme
     :func:`..operators.warc.encode_warc` assigns (``...-0002``)."""
@@ -94,36 +82,24 @@ def encode_revisit_warc(
     selects the per-member layout exactly like ``encode_warc``; ids
     derive from doc ids so output is deterministic and
     decode(encode(...)) is oracle-checkable."""
-    out = bytearray()
-    info = _record(
-        "warcinfo",
-        {"Content-Type": "application/warc-fields"},
-        b"software: youbike-etl-pipeline-spark (revisit)\r\n",
-        "00000000-0000-0000-0000-000000000000",
-        "2024-01-01T00:00:00Z",
-    )
-    out.extend(_gz(info) if per_record_gzip else info)
+    records = []
     for doc_id, body, ref in docs:
         uri = f"http://example.com/doc/{doc_id}"
         digest = payload_digest(body)
-        http_head = (
-            b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
-            b"Content-Length: " + str(len(body)).encode() + b"\r\n\r\n"
-        )
+        http = encode_http_response(200, "OK", [("Content-Type", "text/plain")], body)
         if ref is None:
-            rec = _record(
+            rec = warc_record(
                 "response",
                 {
                     "WARC-Target-URI": uri,
                     "WARC-Payload-Digest": digest,
                     "Content-Type": "application/http; msgtype=response",
                 },
-                http_head + body,
+                http,
                 _rid(doc_id),
-                "2024-01-01T00:00:00Z",
             )
         else:
-            rec = _record(
+            rec = warc_record(
                 "revisit",
                 {
                     "WARC-Target-URI": uri,
@@ -132,23 +108,27 @@ def encode_revisit_warc(
                     "WARC-Refers-To-Target-URI": (
                         f"http://example.com/doc/{ref}"
                     ),
-                    "WARC-Refers-To-Date": "2024-01-01T00:00:00Z",
+                    "WARC-Refers-To-Date": WARC_DATE,
                     "WARC-Payload-Digest": digest,
                     "Content-Type": "application/http; msgtype=response",
                 },
-                http_head,  # headers as served; payload elided
+                http[: len(http) - len(body)],  # headers as served; payload elided
                 _rid(doc_id)[:-1] + "3",
-                "2024-01-01T00:00:00Z",
             )
-        out.extend(_gz(rec) if per_record_gzip else rec)
-    return bytes(out)
+        records.append(rec)
+    return warc_file(
+        "youbike-etl-pipeline-spark (revisit)",
+        "00000000-0000-0000-0000-000000000000",
+        records,
+        per_record_gzip,
+    )
 
 
 def _http_payload(block: bytes) -> bytes:
     """Payload octets of an HTTP message block (after CRLF CRLF); the
     whole block when no header separator is present."""
-    i = block.find(b"\r\n\r\n")
-    return block[i + 4 :] if i >= 0 else block
+    parts = split_http_message(block)
+    return block if parts is None else parts[1]
 
 
 def resolve_revisits(payload: bytes) -> "list[dict]":

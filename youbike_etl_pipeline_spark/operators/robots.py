@@ -33,7 +33,7 @@ def parse_robots(text: str) -> "list[tuple[list[str], list[tuple[str, str]]]]":
     """robots.txt → list of groups ``(agent tokens, [(kind, pattern)])``.
     Kind is ``allow``/``disallow``; agent tokens are lowercased.
 
-    Spec corners pinned by tests/test_robots.py (round-10 advisor):
+    Spec corners pinned by tests/test_robots.py:
 
     - rules appearing BEFORE any ``User-agent`` line are outside every
       group and are dropped silently (RFC 9309 §2.2.1 — "rules that are
@@ -92,8 +92,8 @@ def robots_decision(
     (``*`` = specificity 0, absent → allow); when SEVERAL groups match
     at the winning specificity (e.g. two ``User-agent: trainbot``
     groups), their rule lists are COMBINED before rule selection
-    (RFC 9309 §2.2.1 — round-10 advisor: previously only the first such
-    group applied); rule choice = longest matching pattern, Allow wins
+    (RFC 9309 §2.2.1 — applying only the first such group would drop
+    rules); rule choice = longest matching pattern, Allow wins
     ties; no matching rule → allow."""
     groups = parse_robots(text)
     agent = agent.lower()

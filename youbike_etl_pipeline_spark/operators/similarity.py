@@ -80,8 +80,8 @@ def normalize(vec: Column) -> Column:
 #: a broadcast-join side) and routes to the block-partitioned path instead
 MAX_BROADCAST_ROWS = 500_000
 
-#: Byte bound for the BLAS route's driver materialization (round-11
-#: verdict nit: a row cap alone is dimension-blind — 500k rows of
+#: Byte bound for the BLAS route's driver materialization (a row cap
+#: alone is dimension-blind — 500k rows of
 #: 4096-dim float64 is ~16 GB on the driver). The matrix is float64, so
 #: the estimate is rows × dim × 8; 256 MB matches the conventional
 #: upper bound for a healthy Spark broadcast side.
@@ -125,7 +125,7 @@ def embedding_near_dup_pairs(
     ``method='auto'`` guards the driver: BLAS only when the table is
     counted to fit the broadcast contract — BOTH ≤ ``max_broadcast_rows``
     AND an estimated ``rows × dim × 8`` ≤ :data:`MAX_BROADCAST_BYTES`
-    (round-11: the row cap alone is dimension-blind; dim is probed from
+    (the row cap alone is dimension-blind; dim is probed from
     one row, free next to the count) — otherwise the blocked path. The
     unguarded full-table ``collect()`` that used to be the default is
     gone.
@@ -484,7 +484,7 @@ def knn_label_consistency(
     n² cosine evaluations — the graded e3 semantics. That path is
     quadratic in the audited set BY CONSTRUCTION: a proportional sample
     (e3's ``vec_id % 5``) grows with the corpus, so pairs grow with its
-    square — the round-5 100× probe could not finish it in 35 minutes.
+    square — a 100× probe could not finish it in 35 minutes.
 
     ``ann_bits=B`` is that finding's callable routing (the docstring
     promise made code): vectors bucket by seeded random-hyperplane LSH

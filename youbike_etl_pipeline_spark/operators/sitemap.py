@@ -1,5 +1,5 @@
 """Sitemap discovery — the frontier-completing step between robots.txt
-and fetch scheduling (round-11 verdict item 5).
+and fetch scheduling.
 
 A crawler learns most of a site's URL inventory not from links but from
 the ``Sitemap:`` directives robots.txt advertises (sitemaps.org

@@ -8,6 +8,8 @@ table streams through the scan with no Python on the data path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -510,69 +512,91 @@ def byte_bpe_apply(word: str) -> list[str]:
     )
 
 
+def _distinct_word_sums(
+    df: DataFrame,
+    words: Column,
+    count_col: str,
+    counters: "dict[str, Callable[[str], int]]",
+    carry_cols: "tuple[str, ...]" = (),
+) -> DataFrame:
+    """The distinct-word route of the BPE statistics: explode ``words``
+    (an array column) to one row per occurrence, run each ``counters``
+    function ONCE per DISTINCT word in an Arrow-batched pass, join the
+    counts back to the occurrences and aggregate per document: the
+    occurrence count as ``count_col`` and each counter's sum under its
+    name. At 100 TB the vocabulary is orders of magnitude smaller than
+    the corpus (Heaps' law), so the Python step runs |vocab| times, not
+    |corpus| — the same collapse-first routing the dedup family uses.
+
+    Scale routing: raw word OCCURRENCES must never shuffle on the word —
+    the key is Zipf-skewed ('the' alone is ~5% of every partition), so a
+    shuffle join stalls on the hot keys (measured at 28.5×/decade on the
+    naive shape). With the BROADCAST vocab (|vocab| ≪ |corpus|)
+    occurrences never shuffle AT ALL: the join is map-side against the
+    broadcast table and the only exchanges are the vocab distinct
+    (map-combined to one row per distinct word per partition) and the
+    final per-doc aggregate (map-combined to one row per doc per
+    partition); a ``(doc, word)`` pre-collapse exchange would carry a
+    near-input-size row stream for no benefit on this route.
+    ``carry_cols`` are functionally dependent on the doc id (e.g.
+    source), so adding them to the grouping keys changes nothing but the
+    schema."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    occ = df.select(
+        F.col("doc_id"), *[F.col(c) for c in carry_cols], F.explode(words).alias("w")
+    )
+
+    def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "w": pdf["w"],
+                    **{
+                        name: pd.array([f(w) for w in pdf["w"]], dtype="Int64")
+                        for name, f in counters.items()
+                    },
+                }
+            )
+
+    schema = ", ".join(["w string", *(f"{name} bigint" for name in counters)])
+    vocab = occ.select("w").distinct().mapInPandas(fn, schema)
+    return occ.join(vocab, "w").groupBy("doc_id", *carry_cols).agg(
+        F.count(F.lit(1)).alias(count_col),
+        *[F.sum(name).alias(name) for name in counters],
+    )
+
+
 def byte_bpe_token_stats(
     df: DataFrame, text_col: str = "text", pretoken_re: str = BYTE_PRETOKEN_RE
 ) -> DataFrame:
     """Per-document byte-level BPE statistics — the t50 distinct-word
-    collapse-first route generalized past ``[a-z]+``: pretokens are
-    :data:`BYTE_PRETOKEN_RE` matches (CJK per-codepoint, otherwise
-    whitespace-split, case preserved), each DISTINCT pretoken is
-    byte-tokenized ONCE in an Arrow pass, token/byte counts rejoin the
-    occurrences and aggregate.
-
-    Scale routing is inherited from :func:`bpe_token_stats` (round-9
-    sweep lesson, refined round 10 after this query's own third-decade
-    probe): pretoken frequency is Zipf-skewed in every language, so
-    occurrences never shuffle on the pretoken key. On the
-    BROADCAST route (|vocab| ≪ |corpus| by Heaps' law for segmented
-    scripts and by the bounded ideograph inventory for CJK) occurrences
-    never shuffle AT ALL — the join is map-side and the only exchanges
-    are the map-combined vocab distinct and the map-combined per-doc
-    aggregate (the probe measured the previous ``(doc, pretoken)``
-    pre-collapse exchange at 14.4×/decade from its near-input-size row
-    stream; this shape removes it).
+    route (:func:`_distinct_word_sums`) generalized past ``[a-z]+``:
+    pretokens are :data:`BYTE_PRETOKEN_RE` matches (CJK per-codepoint,
+    otherwise whitespace-split, case preserved), each DISTINCT pretoken
+    is byte-tokenized ONCE, token/byte counts rejoin the occurrences and
+    aggregate. Pretoken frequency is Zipf-skewed in every language and
+    the vocabulary stays small (Heaps' law for segmented scripts, the
+    bounded ideograph inventory for CJK), so the broadcast-vocab routing
+    holds.
 
     ``pretoken_re`` swaps the pretokenization grammar: the default is
     the whitespace+CJK approximation above; pass
     :data:`..operators.gpt2.GPT2_PRETOKEN_RE` for the GPT-2-exact
     pattern (contractions, leading-space attachment, the trailing-
-    whitespace lookahead — round 11, t55). GPT-2 pretokens still obey
-    Heaps' law (space-led word forms roughly double the vocabulary,
-    they do not unbound it), so the broadcast-vocab routing holds."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    pretoks = df.select(
-        F.col("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(pretoken_re), 0)
-        ).alias("w"),
-    )
-
-    def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            toks = [byte_bpe_apply(w) for w in pdf["w"]]
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "n_tok": pd.array([len(t) for t in toks], dtype="Int64"),
-                    "n_byt": pd.array(
-                        [len(w.encode("utf-8")) for w in pdf["w"]],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    vocab = (
-        pretoks.select("w")
-        .distinct()
-        .mapInPandas(fn, "w string, n_tok bigint, n_byt bigint")
-    )
-    out = pretoks.join(vocab, "w").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_pretok"),
-        F.sum("n_tok").alias("n_tokens"),
-        F.sum("n_byt").alias("n_bytes"),
+    whitespace lookahead, t55). GPT-2 pretokens still obey Heaps' law
+    (space-led word forms roughly double the vocabulary, they do not
+    unbound it), so the broadcast-vocab routing holds there too."""
+    out = _distinct_word_sums(
+        df,
+        F.regexp_extract_all(F.col(text_col), F.lit(pretoken_re), 0),
+        "n_pretok",
+        {
+            "n_tokens": lambda w: len(byte_bpe_apply(w)),
+            "n_bytes": lambda w: len(w.encode("utf-8")),
+        },
     )
     return out.withColumn(
         "bytes_per_token",
@@ -581,59 +605,17 @@ def byte_bpe_token_stats(
 
 
 def bpe_token_stats(df: DataFrame, carry_cols: "tuple[str, ...]" = ()) -> DataFrame:
-    """Per-document BPE token statistics via the distinct-word route:
-    words are the ``[a-z]+`` runs of the lowercased text (JVM-side
-    regexp, codegen); each DISTINCT word is tokenized ONCE in an
-    Arrow-batched pass, then token counts rejoin the occurrences and
-    aggregate per document. At 100 TB the vocabulary is orders of
-    magnitude smaller than the corpus (Heaps' law), so the Python step
-    runs |vocab| times, not |corpus| — the same collapse-first routing
-    the dedup family uses.
-
-    Scale routing (the round-9 sweep caught 28.5×/decade on the naive
-    shape; refined round 10 after t53's third-decade probe): raw word
-    OCCURRENCES must never shuffle on the word — the key is Zipf-skewed
-    ('the' alone is ~5% of every partition), so a shuffle join stalls
-    on the hot keys. With the BROADCAST vocab (|vocab| ≪
-    |corpus|, Heaps' law) occurrences never shuffle AT ALL: the join is
-    map-side against the broadcast table and the only exchanges are the
-    vocab distinct (map-combined to one row per distinct word per
-    partition) and the final per-doc aggregate (map-combined to one row
-    per doc per partition) — the round-10 probe measured the previous
-    ``(doc, word)`` pre-collapse exchange carrying a near-input-size row
-    stream for no benefit on this route."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    words = df.select(
-        F.col("doc_id"),
-        *[F.col(c) for c in carry_cols],
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0)
-        ).alias("w"),
-    )
-
-    def fn(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "n_tok": pd.array(
-                        [len(bpe_apply(w)) for w in pdf["w"]],
-                        dtype="Int64",
-                    ),
-                }
-            )
-
-    vocab = (
-        words.select("w").distinct().mapInPandas(fn, "w string, n_tok bigint")
-    )
-    # carry_cols are functionally dependent on the doc id (e.g. source),
-    # so adding them to the grouping keys changes nothing but the schema
-    out = words.join(vocab, "w").groupBy("doc_id", *carry_cols).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_tok").alias("n_tokens"),
+    """Per-document BPE token statistics via the distinct-word route
+    (:func:`_distinct_word_sums`): words are the ``[a-z]+`` runs of the
+    lowercased text (JVM-side regexp, codegen), each DISTINCT word is
+    tokenized ONCE, and token counts rejoin the occurrences and
+    aggregate per document."""
+    out = _distinct_word_sums(
+        df,
+        F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z]+"), 0),
+        "n_words",
+        {"n_tokens": lambda w: len(bpe_apply(w))},
+        carry_cols,
     )
     return out.withColumn(
         "tokens_per_word",

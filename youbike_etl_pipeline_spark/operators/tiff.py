@@ -20,7 +20,7 @@ compressions raise ``NotImplementedError`` — honest gates.
 :func:`encode_tiff` writes real strips or tiles with selectable
 compression / predictor / byte order / strip height / bit depth /
 planar config, so decode(encode(img)) is bit-exact; the default
-parameter combination's bytes are pinned pre-r8-identical. Conformance:
+parameter combination's bytes are pinned (mm18's fixture). Conformance:
 tiled / planar-2 / 16-bit streams are bit-exact against the JVM ImageIO
 decode (tests/test_tiff.py); ImageIO itself REJECTS predictor 2 at 16
 bits (a common reader gap), where this decoder follows the spec and the
@@ -304,7 +304,7 @@ def decode_tiff(payload: bytes) -> "list[np.ndarray]":
             return (acc & ((1 << bits) - 1)).astype(sdt)
 
         if w * h > (1 << 26):
-            # allocation-bomb guard (round-8 review): the page array
+            # allocation-bomb guard: the page array
             # allocates from u32 IFD fields before any strip/tile data
             # is validated; 64M pixels is past the thumbnail-fixture
             # posture (JVM read_images is the big-image route)
@@ -323,8 +323,7 @@ def decode_tiff(payload: bytes) -> "list[np.ndarray]":
             td = (h + tl - 1) // tl
             if len(offsets) != ta * td * n_planes:
                 raise ValueError("TIFF tile count mismatch")
-            # allocation-bomb guard (round-9 advisor, rescoped by the
-            # round-10 advisor): the inflate target is sized from the
+            # allocation-bomb guard: the inflate target is sized from the
             # TILE dims, which the image-dim guard above never sees — a
             # tiny file claiming an 8x8 image with u32-max tiles would
             # otherwise size a multi-GB LZW output buffer. TIFF 6.0 §15
@@ -416,7 +415,7 @@ def encode_tiff(
     """(H, W, 3) or (H, W) uint8 page(s) → TIFF. ``compression`` is 1
     (none), 5 (LZW) or 32773 (PackBits); ``predictor`` 2 applies
     horizontal differencing before compression; multiple pages chain
-    through next-IFD offsets. Round-8 extensions: ``bits=16`` writes
+    through next-IFD offsets. Extensions: ``bits=16`` writes
     16-bit samples (input bytes scaled by 257, so the decoder's
     high-byte convention inverts exactly), ``planar=2`` stores each
     sample plane's units consecutively (plane-major, per spec),
@@ -424,8 +423,8 @@ def encode_tiff(
     right/bottom edge tiles zero-padded to full size), and ``palette``
     writes photometric-3 palette color (8-bit indices into a 16-bit
     ColorMap built from the distinct colors, intensities scaled by
-    257). The default combination's output is byte-identical to the
-    pre-r8 encoder (fixture stability for mm18)."""
+    257). The default combination's output is the baseline writer's,
+    whose bytes are pinned (fixture stability for mm18)."""
     if isinstance(pages, np.ndarray):
         pages = [pages]
     if bits not in (8, 16) or planar not in (1, 2):
@@ -435,10 +434,6 @@ def encode_tiff(
     endian = ">" if big_endian else "<"
     out = bytearray(b"MM\x00*" if big_endian else b"II*\x00")
     out.extend(struct.pack(endian + "I", 0))  # first IFD offset, patched
-
-    def pack(fmt: str, *vals: int) -> bytes:
-        return struct.pack(endian + fmt, *vals)
-
     if bits == 16 or planar == 2 or tile is not None or palette:
         return _encode_tiff_extended(
             pages, compression, predictor, big_endian, rows_per_strip,
@@ -467,20 +462,10 @@ def encode_tiff(
             else:
                 raise ValueError(f"unsupported encode compression {compression}")
         strip_offsets = _append_units(out, strips)
-        bps_off = None
-        if spp == 3:  # BitsPerSample needs 3 shorts = 6 bytes → offset
-            bps_off = len(out)
-            out.extend(pack("HHH", 8, 8, 8))
+        ifd = _Ifd.for_image(endian, out, w, h, spp, 8)
         offsets_value, counts_value = _append_unit_arrays(
             out, endian, strips, strip_offsets
         )
-        ifd = _Ifd(endian)
-        ifd.short(256, w)
-        ifd.short(257, h)
-        if spp == 3:
-            ifd.entry(258, 3, 3, bps_off)  # type: ignore[arg-type]
-        else:
-            ifd.short(258, 8)
         ifd.short(259, compression)
         ifd.short(262, 2 if spp == 3 else 1)
         ifd.entry(273, 4, len(strips), offsets_value)
@@ -530,6 +515,24 @@ class _Ifd:
         self.endian = endian
         self.entries: list[bytes] = []
 
+    @classmethod
+    def for_image(
+        cls, endian: str, out: bytearray, w: int, h: int, spp: int, bits: int
+    ) -> "_Ifd":
+        """A directory holding ImageWidth, ImageLength and BitsPerSample.
+        An RGB image's three BitsPerSample shorts do not fit the entry's
+        value field, so they are appended to ``out`` and the entry points
+        at them."""
+        ifd = cls(endian)
+        ifd.short(256, w)
+        ifd.short(257, h)
+        if spp == 3:
+            ifd.entry(258, 3, 3, len(out))
+            out.extend(struct.pack(endian + "HHH", bits, bits, bits))
+        else:
+            ifd.short(258, bits)
+        return ifd
+
     def entry(self, tag: int, ttype: int, count: int, value: int) -> None:
         self.entries.append(struct.pack(self.endian + "HHII", tag, ttype, count, value))
 
@@ -565,15 +568,12 @@ def _encode_tiff_extended(
     palette: bool,
     out: bytearray,
 ) -> bytes:
-    """Generalized TIFF writer for the round-8 features (16-bit samples,
+    """Generalized TIFF writer for the extensions (16-bit samples,
     planar configuration 2, tiled layout, photometric-3 palette). Kept
-    separate from the baseline writer so the pre-r8 parameter
+    separate from the baseline writer so the baseline parameter
     combinations stay byte-identical (mm18's graded fixture)."""
     endian = ">" if big_endian else "<"
     sdt = np.dtype(endian + "u2") if bits == 16 else np.dtype(np.uint8)
-
-    def pack(fmt: str, *vals: int) -> bytes:
-        return struct.pack(endian + fmt, *vals)
 
     def compress(raw: bytes) -> bytes:
         if compression == 1:
@@ -633,10 +633,7 @@ def _encode_tiff_extended(
                 for y0 in range(0, h, rps):
                     units.append(compress(diff(pl[y0 : y0 + rps]).tobytes()))
         unit_offsets = _append_units(out, units)
-        bps_off = None
-        if spp == 3:
-            bps_off = len(out)
-            out.extend(pack("HHH", bits, bits, bits))
+        ifd = _Ifd.for_image(endian, out, w, h, spp, bits)
         cm_off = None
         if colormap is not None:
             # ColorMap: 3*2^bits 16-bit intensities, all reds then all
@@ -646,17 +643,10 @@ def _encode_tiff_extended(
             full[: len(colormap)] = colormap.astype(np.uint32) * 257
             for channel in range(3):
                 for v in full[:, channel]:
-                    out.extend(pack("H", int(v)))
+                    out.extend(struct.pack(endian + "H", int(v)))
         offsets_value, counts_value = _append_unit_arrays(
             out, endian, units, unit_offsets
         )
-        ifd = _Ifd(endian)
-        ifd.short(256, w)
-        ifd.short(257, h)
-        if spp == 3:
-            ifd.entry(258, 3, 3, bps_off)  # type: ignore[arg-type]
-        else:
-            ifd.short(258, bits)
         ifd.short(259, compression)
         ifd.short(262, 3 if colormap is not None else (2 if spp == 3 else 1))
         ifd.short(277, spp)

@@ -31,9 +31,9 @@ fixtures and audit paths (same posture as ``decode_jpeg`` /
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
+
+from .riff import riff_chunk, riff_chunks, riff_file, riff_form
 
 #: code-length-code symbol order (shared with DEFLATE's concept, WebP order)
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
@@ -520,11 +520,11 @@ def decode_webp(payload: bytes) -> "np.ndarray":
     (H, W, 3) uint8 RGB array (alpha dropped after compositing checks —
     the engine's image contract is RGB); lossy VP8 and extended VP8X
     stay honestly gated."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
+    if riff_form(payload) != b"WEBP":
         raise ValueError("not a WebP payload")
-    fourcc = payload[12:16]
-    (size,) = struct.unpack_from("<I", payload, 16)
-    chunk = payload[20 : 20 + size]
+    fourcc, chunk = next(riff_chunks(payload), (None, b""))
+    if fourcc is None:
+        raise ValueError("WebP payload holds no chunk")
     if fourcc == b"VP8L":
         rgba = decode_vp8l(chunk)
         return rgba[:, :, :3].copy()
@@ -849,17 +849,7 @@ def encode_webp_lossless(
     _encode_image_stream(
         bw, argb, xsize, h, cache_bits, use_lz77, is_main=True, meta_bits=meta_bits
     )
-    vp8l = b"\x2f" + bw.flush()
-    riff_size = 4 + 8 + len(vp8l) + (len(vp8l) & 1)
-    return (
-        b"RIFF"
-        + struct.pack("<I", riff_size)
-        + b"WEBP"
-        + b"VP8L"
-        + struct.pack("<I", len(vp8l))
-        + vp8l
-        + (b"\x00" if len(vp8l) & 1 else b"")
-    )
+    return riff_file(b"WEBP", riff_chunk(b"VP8L", b"\x2f" + bw.flush()))
 
 
 def _sub_pixels(a: int, b: int) -> int:

@@ -6,13 +6,16 @@ WARC is the Common Crawl container: a concatenation of records, each a
 separator, ``Content-Length`` octets of block, and a CRLF CRLF record
 separator. Crawl archives gzip each record as its OWN gzip member so
 readers can split archives without decompressing them end-to-end — this
-module handles both that per-record-member layout and plain concatenation,
-walking gzip members with stdlib zlib (wbits=47) via ``unused_data``.
+module handles both that per-record-member layout and plain concatenation.
 
-Response records carry an HTTP/1.1 message in the block;
+Each wire format here has one owner: :func:`walk_warc` reads archives
+(records and their byte spans, one bomb-capped inflate),
+:func:`warc_record` and :func:`warc_file` write them,
+:func:`gzip_member` writes every gzip member, :func:`encode_http_response`
+builds every HTTP message head and :func:`split_http_message` splits
+every one. Response records carry an HTTP/1.1 message in the block;
 :func:`http_response_body` splits the status line / headers from the body
-so a text pipeline gets the payload octets. The writer
-(:func:`encode_warc`) emits warcinfo/request/response records with
+so a text pipeline gets the payload octets. The writers emit records with
 deterministic ids, so decode(encode(...)) is exact and oracle-checkable
 against the source text.
 
@@ -26,6 +29,7 @@ embarrassingly across executors.
 from __future__ import annotations
 
 import zlib
+from collections.abc import Iterable
 
 
 #: Expansion ceiling for one archive's decompressed bytes. Same
@@ -37,50 +41,76 @@ import zlib
 _MAX_ARCHIVE_BYTES = 4 << 30
 
 
+#: Compressed bytes handed to the inflater per call while walking gzip
+#: members. The input left over past a member's end is copied, so handing
+#: over the whole rest of the archive would copy it once per member
+#: (quadratic in the archive size).
+_MEMBER_FEED = 1 << 16
+
+
 def _inflate_capped(out: bytearray, d, data: bytes, max_bytes: int, label: str) -> None:
     """Append ``data`` decompressed through ``d`` to ``out``, refusing to
     let ``out`` grow past ``max_bytes`` (decompression-bomb guard — the
-    overflow is detected incrementally, never materialized). ``label``
-    names the input in the ``ValueError``; ``zlib.error`` propagates."""
-    out.extend(d.decompress(data, max(1, max_bytes - len(out))))
-    while d.unconsumed_tail:
-        if len(out) >= max_bytes:
+    overflow is detected incrementally, never materialized). ``data`` may
+    be one piece of the stream: feed the next while ``d.eof`` is false.
+    ``label`` names the input in the ``ValueError``; ``zlib.error``
+    propagates."""
+    while True:
+        out.extend(d.decompress(data, max(1, max_bytes - len(out))))
+        data = d.unconsumed_tail
+        if len(out) > max_bytes or (len(out) == max_bytes and not d.eof):
             raise ValueError(f"{label} expands past {max_bytes} bytes")
-        out.extend(d.decompress(d.unconsumed_tail, max(1, max_bytes - len(out))))
-    out.extend(d.flush())
-    if len(out) > max_bytes:
-        raise ValueError(f"{label} expands past {max_bytes} bytes")
+        if not data:
+            return
 
 
-def _gunzip_members(payload: bytes, max_bytes: int = _MAX_ARCHIVE_BYTES) -> bytes:
+def _gunzip_members(payload: bytes) -> "tuple[bytes, list[tuple[int, int]]]":
     """Decompress a concatenation of gzip members (the Common Crawl
-    per-record layout) into one plain buffer, refusing archives that
-    expand past ``max_bytes`` (:func:`_inflate_capped`)."""
+    per-record layout) into one plain buffer → (buffer, each member's
+    ``(offset, length)`` in ``payload``), refusing archives that expand
+    past :data:`_MAX_ARCHIVE_BYTES` (:func:`_inflate_capped`)."""
     out = bytearray()
-    rest = payload
-    while rest:
+    members: list[tuple[int, int]] = []
+    view = memoryview(payload)
+    pos = 0
+    while pos < len(payload):
+        start = pos
         d = zlib.decompressobj(wbits=47)  # gzip or zlib header
-        try:
-            _inflate_capped(out, d, rest, max_bytes, "WARC archive")
-        except zlib.error as ex:
-            raise ValueError(f"WARC gzip member corrupt: {ex}")
-        if not d.eof:
-            raise ValueError("truncated WARC gzip member")
-        if d.unused_data == rest:
-            raise ValueError("WARC gzip walk made no progress")
-        rest = d.unused_data
-    return bytes(out)
+        while not d.eof:
+            if pos == len(payload):
+                raise ValueError("truncated WARC gzip member")
+            piece = view[pos : pos + _MEMBER_FEED]
+            try:
+                _inflate_capped(out, d, piece, _MAX_ARCHIVE_BYTES, "WARC archive")
+            except zlib.error as ex:
+                raise ValueError(f"WARC gzip member corrupt: {ex}")
+            pos += len(piece) - len(d.unused_data)
+        members.append((start, pos - start))
+    return bytes(out), members
 
 
-def parse_warc(payload: bytes) -> list[dict]:
-    """WARC archive → list of records, each
-    ``{"version", "headers" (dict, original-case keys), "block" (bytes)}``.
-    Accepts plain or gzip (single- or per-record-member) archives.
-    Raises ``ValueError`` on malformed version lines, headers,
-    content lengths, or truncated blocks."""
+def walk_warc(payload: bytes) -> "tuple[list[dict], list[tuple[int, int]]]":
+    """The one WARC reader: archive → ``(records, spans)`` in one pass.
+
+    Records are ``{"version", "headers" (dict, original-case keys),
+    "block" (bytes)}``, from plain or gzip (single- or
+    per-record-member) archives. Spans are ``(offset, length)`` INTO the
+    original archive bytes — the CDX index payload that makes a 100 TB
+    archive store range-addressable (fetch one record with a ranged
+    read, no full scan): gzip-member boundaries for gzip archives (the
+    Common Crawl layout, one record per member, so the spans align 1:1
+    with the records and each sliced span re-parses standalone to
+    exactly its record), record boundaries for plain archives.
+
+    Raises ``ValueError`` on corrupt or truncated gzip members, an
+    archive inflating past :data:`_MAX_ARCHIVE_BYTES`, malformed version
+    lines, headers, content lengths, truncated blocks or a missing
+    record separator — the same inputs fail for records and spans."""
+    members = None
     if payload[:2] == b"\x1f\x8b":
-        payload = _gunzip_members(payload)
+        payload, members = _gunzip_members(payload)
     records: list[dict] = []
+    spans: list[tuple[int, int]] = []
     pos = 0
     n = len(payload)
     while pos < n:
@@ -89,6 +119,7 @@ def parse_warc(payload: bytes) -> list[dict]:
             pos += 2
         if pos >= n:
             break
+        start = pos
         eol = payload.find(b"\r\n", pos)
         if eol < 0:
             raise ValueError("truncated WARC version line")
@@ -134,9 +165,15 @@ def parse_warc(payload: bytes) -> list[dict]:
                 raise ValueError("WARC record separator missing")
         pos += 4
         records.append({"version": version, "headers": headers, "block": block})
+        spans.append((start, min(pos, n) - start))
     if not records:
         raise ValueError("empty WARC archive")
-    return records
+    return records, spans if members is None else members
+
+
+def parse_warc(payload: bytes) -> list[dict]:
+    """WARC archive → list of records (:func:`walk_warc`)."""
+    return walk_warc(payload)[0]
 
 
 def warc_header(record: dict, name: str, default: "str | None" = "") -> "str | None":
@@ -155,17 +192,34 @@ def first_response(records: "list[dict]") -> "dict | None":
     return next((r for r in records if warc_type(r) == "response"), None)
 
 
+def target_responses(payload: bytes) -> "list[tuple[str, dict]]":
+    """``(WARC-Target-URI, record)`` of each response record of an
+    archive, in archive order."""
+    return [
+        (warc_header(r, "warc-target-uri"), r)
+        for r in parse_warc(payload)
+        if warc_type(r) == "response"
+    ]
+
+
+def split_http_message(block: bytes) -> "tuple[bytes, bytes] | None":
+    """An HTTP message → ``(head, body)`` split at its first CRLF CRLF;
+    None when it has no header/body separator."""
+    sep = block.find(b"\r\n\r\n")
+    return None if sep < 0 else (block[:sep], block[sep + 4 :])
+
+
 def http_response_body(record: dict) -> tuple[int, bytes]:
     """Split a response record's HTTP/1.1 message → (status, body bytes).
     Raises ``ValueError`` when the block is not an HTTP response."""
     block = record["block"]
-    sep = block.find(b"\r\n\r\n")
-    if sep < 0 or not block.startswith(b"HTTP/"):
+    parts = split_http_message(block)
+    if parts is None or not block.startswith(b"HTTP/"):
         raise ValueError("WARC response block is not an HTTP message")
-    status_line = block[: block.find(b"\r\n")].split(b" ")
+    status_line = parts[0].split(b"\r\n", 1)[0].split(b" ")
     if len(status_line) < 2 or not status_line[1].isdigit():
         raise ValueError("malformed HTTP status line in WARC response")
-    return int(status_line[1]), block[sep + 4 :]
+    return int(status_line[1]), parts[1]
 
 
 def http_response_message(record: dict) -> tuple[int, dict, bytes]:
@@ -173,11 +227,10 @@ def http_response_message(record: dict) -> tuple[int, dict, bytes]:
     body bytes). Header names are lowercased; folded continuation lines
     extend the previous field (RFC 7230 obs-fold)."""
     status, body = http_response_body(record)
-    block = record["block"]
-    head = block[: block.find(b"\r\n\r\n")].split(b"\r\n")[1:]
+    head = split_http_message(record["block"])[0]
     headers: dict[str, str] = {}
     last: str | None = None
-    for line in head:
+    for line in head.split(b"\r\n")[1:]:
         if line[:1] in (b" ", b"\t") and last is not None:
             headers[last] += " " + line.decode("latin-1").strip()
             continue
@@ -348,18 +401,14 @@ def encode_http_payload(
         out.extend(b"0\r\nX-Fixture-Trailer: 1\r\n\r\n")
         return bytes(out)
 
-    def gz(data: bytes) -> bytes:
-        co = zlib.compressobj(6, zlib.DEFLATED, 31)
-        return co.compress(data) + co.flush()
-
     if mode == "chunked":
         return chunked(body), [("Transfer-Encoding", "chunked")]
     if mode == "gzip":
-        return gz(body), [("Content-Encoding", "gzip")]
+        return gzip_member(body), [("Content-Encoding", "gzip")]
     if mode == "deflate":
         return zlib.compress(body, 6), [("Content-Encoding", "deflate")]
     if mode == "gzip+chunked":
-        return chunked(gz(body)), [
+        return chunked(gzip_member(body)), [
             ("Content-Encoding", "gzip"),
             ("Transfer-Encoding", "chunked"),
         ]
@@ -504,66 +553,6 @@ def surt_key(url: str) -> str:
     return host + ")" + p.path + (("?" + p.query) if p.query else "")
 
 
-def warc_record_spans(payload: bytes) -> "list[tuple[int, int]]":
-    """Per-record ``(offset, length)`` spans INTO the original archive
-    bytes — the CDX index payload that makes a 100 TB archive store
-    range-addressable (fetch one record with a ranged read, no full
-    scan). For per-record-gzip archives (the Common Crawl layout) the
-    spans are gzip-member boundaries; for plain archives they are
-    record boundaries. Aligned 1:1 with :func:`parse_warc`'s record
-    list; each sliced span re-parses standalone to exactly that record
-    (pinned by tests). Raises ``ValueError`` on corruption, same
-    contract as the parser."""
-    spans: list[tuple[int, int]] = []
-    if payload[:2] == b"\x1f\x8b":
-        rest = payload
-        pos = 0
-        while rest:
-            d = zlib.decompressobj(wbits=47)
-            try:
-                d.decompress(rest, 1)
-                while not d.eof:
-                    if not d.unconsumed_tail:
-                        raise ValueError("truncated WARC gzip member")
-                    d.decompress(d.unconsumed_tail, 1 << 20)
-            except zlib.error as ex:
-                raise ValueError(f"WARC gzip member corrupt: {ex}")
-            consumed = len(rest) - len(d.unused_data)
-            if consumed == 0:
-                raise ValueError("WARC gzip walk made no progress")
-            spans.append((pos, consumed))
-            pos += consumed
-            rest = d.unused_data
-        return spans
-    pos = 0
-    n = len(payload)
-    while pos < n:
-        while pos < n and payload[pos : pos + 2] == b"\r\n":
-            pos += 2
-        if pos >= n:
-            break
-        start = pos
-        # version line + headers: find the blank line, read Content-Length
-        head_end = payload.find(b"\r\n\r\n", pos)
-        if head_end < 0:
-            raise ValueError("truncated WARC header block")
-        length = None
-        for line in payload[pos:head_end].split(b"\r\n")[1:]:
-            k, _, v = line.partition(b":")
-            if k.strip().lower() == b"content-length" and v.strip().isdigit():
-                length = int(v.strip())
-                break
-        if length is None:
-            raise ValueError("WARC record missing a numeric Content-Length")
-        if head_end + 4 + length > n:
-            raise ValueError("truncated WARC record block")
-        pos = head_end + 4 + length + 4  # headers + CRLFCRLF + block + sep
-        spans.append((start, min(pos, n) - start))
-    if not spans:
-        raise ValueError("empty WARC archive")
-    return spans
-
-
 def messy_fixture_url(doc_id: int) -> str:
     """Deterministic non-canonical URL per document (rotated
     ``(doc_id // 10) % 5``): uppercase scheme/host + default port +
@@ -584,6 +573,49 @@ def messy_fixture_url(doc_id: int) -> str:
     return f"HTTPS://example.com/a/../doc/./{doc_id}"
 
 
+#: The WARC-Date of every record the writers emit (deterministic output).
+WARC_DATE = "2024-01-01T00:00:00Z"
+
+
+def gzip_member(data: bytes) -> bytes:
+    """``data`` as one gzip member (deflate level 6, zero mtime): each
+    record of a per-record-gzip archive and each gzip-coded HTTP body."""
+    co = zlib.compressobj(6, zlib.DEFLATED, 31)
+    return co.compress(data) + co.flush()
+
+
+def warc_record(rtype: str, extra: "dict[str, str]", block: bytes, rid: str) -> bytes:
+    """One WARC/1.0 record: the version line, ``WARC-Type``,
+    ``WARC-Record-ID`` (``<urn:uuid:rid>``), ``WARC-Date``, the ``extra``
+    fields in order, ``Content-Length``, CRLF CRLF, the block and the
+    record separator."""
+    head = [
+        b"WARC/1.0",
+        b"WARC-Type: " + rtype.encode(),
+        b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">",
+        b"WARC-Date: " + WARC_DATE.encode(),
+        *(f"{k}: {v}".encode() for k, v in extra.items()),
+        b"Content-Length: " + str(len(block)).encode(),
+    ]
+    return b"\r\n".join(head) + b"\r\n\r\n" + block + b"\r\n\r\n"
+
+
+def warc_file(
+    software: str, info_id: str, records: "Iterable[bytes]", per_record_gzip: bool
+) -> bytes:
+    """A WARC archive: a ``warcinfo`` record (id ``info_id``) naming
+    ``software``, then ``records`` (:func:`warc_record`).
+    ``per_record_gzip`` makes each record its own gzip member, the
+    layout crawl tooling expects; otherwise records are concatenated."""
+    info = warc_record(
+        "warcinfo",
+        {"Content-Type": "application/warc-fields"},
+        f"software: {software}\r\n".encode(),
+        info_id,
+    )
+    return b"".join(gzip_member(r) if per_record_gzip else r for r in (info, *records))
+
+
 def encode_wet(docs: "list[tuple[int, str]]", per_record_gzip: bool = True) -> bytes:
     """(doc_id, extracted text) pairs → a WET file: the Common Crawl
     EXTRACTED-TEXT companion format — a WARC/1.0 archive of
@@ -593,46 +625,25 @@ def encode_wet(docs: "list[tuple[int, str]]", per_record_gzip: bool = True) -> b
     and the source ``WARC-Target-URI``. This is the SINK a crawl
     extraction pipeline writes; :func:`parse_warc` reads it back, so
     write→read is oracle-checkable byte-exactly."""
-
-    def record(extra: dict, block: bytes, rid: str) -> bytes:
-        head = [
-            b"WARC/1.0",
-            b"WARC-Type: conversion",
-            b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">",
-            b"WARC-Date: 2024-01-01T00:00:00Z",
-        ]
-        for k, v in extra.items():
-            head.append(f"{k}: {v}".encode())
-        head.append(b"Content-Length: " + str(len(block)).encode())
-        return b"\r\n".join(head) + b"\r\n\r\n" + block + b"\r\n\r\n"
-
-    def gz(member: bytes) -> bytes:
-        co = zlib.compressobj(6, zlib.DEFLATED, 31)
-        return co.compress(member) + co.flush()
-
-    info = (
-        b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
-        b"WARC-Record-ID: <urn:uuid:00000000-0000-0000-0000-00000000000e>\r\n"
-        b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-        b"Content-Type: application/warc-fields\r\n"
-        b"Content-Length: 44\r\n\r\n"
-        b"software: youbike-etl-pipeline-spark (wet)\r\n\r\n\r\n"
-    )
-    out = bytearray(gz(info) if per_record_gzip else info)
-    for doc_id, text in docs:
-        rec = record(
+    records = (
+        warc_record(
+            "conversion",
             {
                 "WARC-Target-URI": f"http://example.com/doc/{doc_id}",
-                "WARC-Refers-To": (
-                    f"<urn:uuid:{doc_id:08x}-0000-0000-0000-000000000002>"
-                ),
+                "WARC-Refers-To": f"<urn:uuid:{doc_id:08x}-0000-0000-0000-000000000002>",
                 "Content-Type": "text/plain; charset=utf-8",
             },
             ("" if text is None else text).encode("utf-8"),
             f"{doc_id:08x}-0000-0000-0000-00000000000c",
         )
-        out.extend(gz(rec) if per_record_gzip else rec)
-    return bytes(out)
+        for doc_id, text in docs
+    )
+    return warc_file(
+        "youbike-etl-pipeline-spark (wet)",
+        "00000000-0000-0000-0000-00000000000e",
+        records,
+        per_record_gzip,
+    )
 
 
 def encode_http_response(
@@ -641,15 +652,15 @@ def encode_http_response(
     headers: "list[tuple[str, str]]",
     body: bytes,
 ) -> bytes:
-    """Assemble a complete HTTP/1.1 response message (status line,
-    header fields, Content-Length, CRLF CRLF, body) — the WARC response
-    block for non-200 fixture shapes (redirects, errors) that
-    :func:`encode_warc`'s default 200 path doesn't cover."""
-    lines = [f"HTTP/1.1 {status} {reason}".encode("latin-1")]
-    for k, v in headers:
-        lines.append(f"{k}: {v}".encode("latin-1"))
-    lines.append(b"Content-Length: " + str(len(body)).encode())
-    return b"\r\n".join(lines) + b"\r\n\r\n" + body
+    """Assemble a complete HTTP/1.1 response message: status line, the
+    header fields in order, ``Content-Length`` (the body's length as
+    sent; absent under ``Transfer-Encoding``, RFC 7230 §3.3.2), CRLF
+    CRLF, body — every response block the writers emit, including the
+    non-200 fixture shapes (redirects, errors)."""
+    lines = [f"HTTP/1.1 {status} {reason}", *(f"{k}: {v}" for k, v in headers)]
+    if not any(k.lower() == "transfer-encoding" for k, _ in headers):
+        lines.append(f"Content-Length: {len(body)}")
+    return "\r\n".join(lines).encode("latin-1") + b"\r\n\r\n" + body
 
 
 def status_fixture_message(doc_id: int, location_301: str) -> "bytes | None":
@@ -706,82 +717,40 @@ def encode_warc(
     (aligned with ``docs``; entries may be None for the default 200
     path — :func:`encode_http_response` builds redirect/error shapes);
     the default path's bytes are pinned unchanged (tests/test_warc.py)."""
-
-    def record(rtype: str, extra: dict, block: bytes, rid: str) -> bytes:
-        head = [
-            b"WARC/1.0",
-            b"WARC-Type: " + rtype.encode(),
-            b"WARC-Record-ID: <urn:uuid:" + rid.encode() + b">",
-            b"WARC-Date: 2024-01-01T00:00:00Z",
-        ]
-        for k, v in extra.items():
-            head.append(f"{k}: {v}".encode())
-        head.append(b"Content-Length: " + str(len(block)).encode())
-        return b"\r\n".join(head) + b"\r\n\r\n" + block + b"\r\n\r\n"
-
-    def gz(member: bytes) -> bytes:
-        co = zlib.compressobj(6, zlib.DEFLATED, 31)
-        return co.compress(member) + co.flush()
-
-    out = bytearray()
-    info = record(
-        "warcinfo",
-        {"Content-Type": "application/warc-fields"},
-        b"software: youbike-etl-pipeline-spark\r\n",
-        "00000000-0000-0000-0000-000000000000",
-    )
-    out.extend(gz(info) if per_record_gzip else info)
+    records = []
     for i, (doc_id, body) in enumerate(docs):
         uri = uris[i] if uris is not None else f"http://example.com/doc/{doc_id}"
-        req = record(
-            "request",
-            {
-                "WARC-Target-URI": uri,
-                "Content-Type": "application/http; msgtype=request",
-            },
-            f"GET /doc/{doc_id} HTTP/1.1\r\nHost: example.com\r\n\r\n".encode(),
-            f"{doc_id:08x}-0000-0000-0000-000000000001",
-        )
-        ct = (
-            content_types[i]
-            if content_types is not None
-            else "text/plain; charset=utf-8"
-        )
-        override = http_messages[i] if http_messages is not None else None
-        if override is not None:
-            http = override
-        else:
-            mode = (
-                transfer_modes[i] if transfer_modes is not None else "identity"
+        records.append(
+            warc_record(
+                "request",
+                {
+                    "WARC-Target-URI": uri,
+                    "Content-Type": "application/http; msgtype=request",
+                },
+                f"GET /doc/{doc_id} HTTP/1.1\r\nHost: example.com\r\n\r\n".encode(),
+                f"{doc_id:08x}-0000-0000-0000-000000000001",
             )
-            wire, extra = encode_http_payload(body, mode)
-            head_lines = [
-                b"HTTP/1.1 200 OK",
-                b"Content-Type: " + ct.encode("latin-1"),
-            ]
-            for hk, hv in extra:
-                head_lines.append(f"{hk}: {hv}".encode("latin-1"))
-            if not any(hk.lower() == "transfer-encoding" for hk, _ in extra):
-                # RFC 7230 §3.3.2: a message with Transfer-Encoding
-                # carries no Content-Length; everything else states the
-                # WIRE length
-                head_lines.append(
-                    b"Content-Length: " + str(len(wire)).encode()
-                )
-            http = b"\r\n".join(head_lines) + b"\r\n\r\n" + wire
-        resp = record(
-            "response",
-            {
-                "WARC-Target-URI": uri,
-                "Content-Type": "application/http; msgtype=response",
-            },
-            http,
-            f"{doc_id:08x}-0000-0000-0000-000000000002",
         )
-        if per_record_gzip:
-            out.extend(gz(req))
-            out.extend(gz(resp))
-        else:
-            out.extend(req)
-            out.extend(resp)
-    return bytes(out)
+        http = http_messages[i] if http_messages is not None else None
+        if http is None:
+            ct = content_types[i] if content_types is not None else "text/plain; charset=utf-8"
+            mode = transfer_modes[i] if transfer_modes is not None else "identity"
+            wire, extra = encode_http_payload(body, mode)
+            http = encode_http_response(200, "OK", [("Content-Type", ct), *extra], wire)
+        records.append(
+            warc_record(
+                "response",
+                {
+                    "WARC-Target-URI": uri,
+                    "Content-Type": "application/http; msgtype=response",
+                },
+                http,
+                f"{doc_id:08x}-0000-0000-0000-000000000002",
+            )
+        )
+    return warc_file(
+        "youbike-etl-pipeline-spark",
+        "00000000-0000-0000-0000-000000000000",
+        records,
+        per_record_gzip,
+    )

@@ -1,20 +1,18 @@
 """Driver-strict result canonicalization for the local parity gates.
 
-The round-2 verdict established the driver's compare pipeline: both result
-sets are materialized as **pandas DataFrames** (Spark rows via
+The compare pipeline it mirrors: both result sets are materialized as
+**pandas DataFrames** (Spark rows via
 ``pd.DataFrame(collected_rows)``, the oracle via DuckDB ``.df()``), columns
 sorted by name, rows sorted, then cells stringified per pandas dtype and
 hashed. That pipeline is *type-sensitive*: DuckDB ``SUM(INTEGER)`` returns
 HUGEINT, which pandas materializes as float64 (``"14579.0"``), while Spark
 returns BIGINT → int64 (``"14579"``) — identical values, different hashes.
 
-Rounds 1-2 shipped 15 such mismatches because the old local comparator did
-``float(a) == float(b)`` across types — normalizing exactly the difference
-the driver hashes. This module is the replacement: it reproduces the
-pandas-stringified compare, so int64 vs float64 is a FAILURE here even when
-the values are numerically equal, and list-typed cells raise (the driver's
-canonicalizer cannot sort/hash them — see a14's traceback in
-CORRECTNESS_r02.json).
+A comparator that does ``float(a) == float(b)`` across types normalizes
+exactly the difference the compare hashes, so it passes such mismatches.
+This module reproduces the pandas-stringified compare instead: int64 vs
+float64 is a FAILURE here even when the values are numerically equal, and
+list-typed cells raise (the canonicalizer cannot sort/hash them).
 """
 
 from __future__ import annotations

@@ -35,7 +35,7 @@ from ..operators.windows import lag_features
 from ..schemas import WEATHER_RAW_HOURLY
 from ..sources.http import snapshot_to_df
 from ..sources.readers import local_frame
-from ..sources.writers import append_dedup, upsert_insert_if_absent, write_csv
+from ..sources.writers import append_dedup, write_csv
 
 
 def ingest_snapshot(
@@ -69,7 +69,7 @@ def ingest_snapshot(
         F.col("available_return_bikes").alias("spaces_available"),
         to_utc_from_tz(F.to_timestamp("srcUpdateTime")).alias("record_time"),
     )
-    new_info = upsert_insert_if_absent(info, existing_info, ["station_no"])
+    new_info = append_dedup(info, existing_info, ["station_no"])
     new_status = append_dedup(status, existing_status, ["station_no", "record_time"])
     return new_info, new_status
 

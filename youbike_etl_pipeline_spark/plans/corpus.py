@@ -66,6 +66,9 @@ def register(
 #: exported first so the correctness gate re-grades them (and
 #: tests/test_parity_changed_sf01.py checks them at sf0.01).
 CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "j7_asof_join",
+    "j10_asof_join_forward",
+    "j14_bucketed_asof_join",
     "q11_important_part_value",
     "q20_supplier_part_chain",
     "w9_sessionization",
@@ -176,9 +179,9 @@ def grade_ledger() -> dict[str, tuple[int, str]]:
     unknown shape), read from the committed ``CORRECTNESS_r*.json``
     artifacts at the repo root. The round rotates the green tail: each
     round's parity window is finite, so re-verification coverage is
-    maximized by grading the STALEST greens first (a query last graded in
-    r1 ran against testdata that has since been regenerated — exactly how
-    the r4 streaming regression hid)."""
+    maximized by grading the STALEST greens first (a query graded long
+    ago ran against testdata that has since been regenerated, where a
+    regression can hide)."""
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     latest: dict[str, tuple[int, str]] = {}
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
@@ -3602,7 +3605,7 @@ def a13_percent_rank_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_rows="array-agg (SURVEY §2.6 note: array ops exposed)",
     description="Sorted distinct array aggregation per group (collect_set + "
     "array_sort), emitted as a joined string: the driver's pandas "
-    "canonicalizer cannot sort/hash raw list cells (r2 traceback).",
+    "canonicalizer cannot sort/hash raw list cells.",
 )
 def a14_sorted_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -7639,7 +7642,7 @@ def _hashed_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import tokens
 
     docs = _t(spark, sf_dir, "documents")
-    # widen before the tokenize + per-token md5 (hex-decode) map — the r12
+    # widen before the tokenize + per-token md5 (hex-decode) map — a
     # profile measured this stage ~1 s on one real task for t34/f20/ml4
     # (all three share this frame); per-footer-row ≈ 0.2 ms → 512-row tasks
     docs = widen_narrow_scan(
@@ -9128,7 +9131,7 @@ def g1_item_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the edge list ONCE: edges feeds deg, nodes, nn and every
     # loop iteration, and without lineage truncation each of the 3 chained
     # pr steps re-plans and re-executes the whole events->ui->pairs subtree
-    # (measured: 96 parquet scans / 244 Exchanges in the r11-start plan,
+    # (measured without it: 96 parquet scans / 244 Exchanges in the plan,
     # 3638 plan lines -> planning time alone dominated the query). The
     # checkpoint is one extra job; every consumer after it reads the
     # edge-sized cached partitions. Same fix a billion-edge run needs.

@@ -4,7 +4,8 @@ The reference validates schema at ETL time with a required-column check that
 raises ``KeyError`` on missing fields (reference ``etl_job.py:89-97``,
 ``dags/youbike_dag.py:84-91``) and otherwise lets pandas infer. The Spark
 engine declares every schema up front (``StructType``) and keeps the same
-fail-fast required-column contract (see :func:`validate_required_columns`).
+fail-fast required-column contract (``sources.http.snapshot_to_df`` checks
+:data:`RAW_REQUIRED_COLUMNS` on the raw records).
 
 Station ids stay **strings** deliberately — the reference casts join keys with
 ``astype(str)`` everywhere to avoid type drift (``notebooks/03_data_merge.ipynb:L71-L72``).
@@ -12,7 +13,6 @@ Station ids stay **strings** deliberately — the reference casts join keys with
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
@@ -117,19 +117,3 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
-
-
-def validate_required_columns(df: DataFrame, required: list[str]) -> DataFrame:
-    """Fail fast if any required column is missing.
-
-    Mirrors the reference's transform-time contract (``etl_job.py:89-97``):
-    raises ``KeyError`` listing the missing columns; raises ``ValueError`` on
-    an empty-schema frame (the "empty extract" case,
-    reference ``tests/test_etl.py:18-21``).
-    """
-    if not df.columns:
-        raise ValueError("empty input: no columns")
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        raise KeyError(f"missing required columns: {missing}")
-    return df

@@ -20,7 +20,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import RAW_REQUIRED_COLUMNS, RAW_STATION_SNAPSHOT, validate_required_columns
+from ..schemas import RAW_REQUIRED_COLUMNS, RAW_STATION_SNAPSHOT
 from .readers import read_json_records
 
 try:  # pragma: no cover - optional dependency
@@ -72,5 +72,4 @@ def snapshot_to_df(spark: SparkSession, records: list[dict[str, Any]]) -> DataFr
     missing = [c for c in RAW_REQUIRED_COLUMNS if c not in present]
     if missing:
         raise KeyError(f"missing required columns: {missing}")
-    df = read_json_records(spark, records, RAW_STATION_SNAPSHOT)
-    return validate_required_columns(df, RAW_REQUIRED_COLUMNS)
+    return read_json_records(spark, records, RAW_STATION_SNAPSHOT)

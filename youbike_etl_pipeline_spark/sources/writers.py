@@ -163,39 +163,24 @@ def write_csv(df: DataFrame, path: str, single_file: bool = False, encoding: str
 
 
 def append_dedup(new_rows: DataFrame, existing: DataFrame | None, keys: list[str]) -> DataFrame:
-    """Duplicate-tolerant load (S8): returns only rows whose key is new.
+    """Insert-if-absent, the one load rule of both warehouse tables: rows
+    of ``new_rows``, one per ``keys``, whose ``keys`` are not present in
+    ``existing`` (all of them when there is no existing table yet).
 
-    Equivalent to the reference's unique-key-rejects-dups semantics
-    (``sql/init_schema.sql:17``; ``etl_job.py:128-132``): dedup within the
-    batch, then anti-join against already-loaded keys. Re-running the same
-    batch is a no-op — same idempotence without a transactional store.
-    The loaded side is not deduplicated: duplicate keys there cannot change
-    an anti-join, and a dedup would aggregate the whole growing table on
-    every load.
+    Duplicate-tolerant fact load (S8): the reference's unique-key-rejects-
+    dups semantics (``sql/init_schema.sql:17``; ``etl_job.py:128-132``) —
+    dedup within the batch, then anti-join against already-loaded keys, so
+    re-running the same batch is a no-op without a transactional store.
+    Dimension upsert (S9): ``df_info[~station_no.isin(existing)]``
+    (``etl_job.py:121-126``). The batch pipeline and the streaming
+    ``foreachBatch`` upsert both run this one function. The loaded side is
+    not deduplicated: duplicate keys there cannot change an anti-join, and
+    a dedup would aggregate the whole growing table on every load.
     """
     batch = new_rows.dropDuplicates(keys)
     if existing is None:
         return batch
     return batch.join(existing.select(*keys), on=keys, how="left_anti")
-
-
-def upsert_insert_if_absent(
-    incoming: DataFrame, existing_keys: DataFrame | None, keys: list[str]
-) -> DataFrame:
-    """Insert-if-absent dimension upsert (S9): rows of ``incoming``, one per
-    ``keys``, whose ``keys`` are not present in ``existing_keys`` (all of
-    them when there is no existing table yet).
-
-    Reference: ``df_info[~station_no.isin(existing)]`` (``etl_job.py:121-126``).
-    The existing-keys side is typically tiny (dimension PKs) → broadcast, so
-    the anti-join is shuffle-free on the big side; like
-    :func:`append_dedup`, it is not deduplicated. The batch pipeline and
-    the streaming ``foreachBatch`` upsert both run this one function.
-    """
-    batch = incoming.dropDuplicates(keys)
-    if existing_keys is None:
-        return batch
-    return batch.join(existing_keys.select(*keys), on=keys, how="left_anti")
 
 
 def write_jdbc(

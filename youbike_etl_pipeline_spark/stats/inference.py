@@ -547,7 +547,7 @@ def kendall_tau_b(
     pair step stays inside ``pair_budget`` pairs at ANY input scale:
     ``M = ceil(n / sqrt(2·pair_budget))`` (``skew.auto_sample_mod`` with
     pair_fraction ½), realized pair work flat in ``[budget/4, budget]``.
-    At the default 5e7-pair budget the r5 probe's 150k-entity frame (1.1e10
+    At the default 5e7-pair budget a 150k-entity frame (1.1e10
     exact pairs, 241 s) sizes to M=15 ≈ 1 s, while anything ≤10k entities
     gets M=1 — the EXACT path, filter skipped, plan byte-identical to
     ``None``. Pass ``None`` to force exact at any size (the graded m28

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..sources.writers import upsert_insert_if_absent
+from ..sources.writers import append_dedup
 
 
 def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -237,12 +237,12 @@ def upsert_foreach_batch(
     sink: list,
 ) -> None:
     """foreachBatch anti-join upsert (S9 streaming twin): per micro-batch,
-    the batch pipeline's :func:`upsert_insert_if_absent` against the
+    the batch pipeline's :func:`append_dedup` against the
     existing keys, with the remainder appended to ``sink`` (a list stand-in
     for the JDBC/Delta writer)."""
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        sink.append((epoch_id, upsert_insert_if_absent(batch, existing_keys, key_cols).collect()))
+        sink.append((epoch_id, append_dedup(batch, existing_keys, key_cols).collect()))
 
     _drain(stream.writeStream.foreachBatch(handle).outputMode("append"))
 
